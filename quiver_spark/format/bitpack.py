@@ -14,8 +14,14 @@ using the 4-lane SIMD layout of the `bitpacking` crate's BitPacker4x
   broadcast to all lanes); num_bits still comes from the raw block max
   (mirroring the reference, which calls num_bits(chunk) for both flavors).
 
-Vectorization: blocks are grouped by num_bits so the 32-step pack/unpack
-loop runs once per distinct bit width, not once per block.
+Vectorization: one pass over all blocks, whatever their mix of widths.
+Value i of a lane sits at bit i*num_bits of that lane's stream, so its low
+part lands in one u32 word and any spill-over in the lane's next word; pack
+scatters both parts with one ``np.bincount`` (the parts of a word never
+overlap, so their sum is their OR) and unpack gathers each value from its
+word pair. Only the block headers are read in a Python loop, and only when
+the blocks differ in width: each header's position depends on the width
+before it.
 """
 
 from __future__ import annotations
@@ -34,101 +40,79 @@ def _bits_needed(x: np.ndarray) -> np.ndarray:
     return np.where(x == 0, 0, np.ceil(np.log2(x + 1.0))).astype(np.uint8)
 
 
-def _pack_group(words: np.ndarray, b: int) -> np.ndarray:
-    """Pack (n, 32, 4) u64 words at bit width b → (n, b*4) u32."""
-    n = words.shape[0]
-    out = np.empty((n, b, 4), dtype=np.uint32)
-    acc = np.zeros((n, 4), dtype=np.uint64)
-    filled = 0
-    k = 0
-    for i in range(WORDS):
-        acc |= words[:, i, :] << np.uint64(filled)
-        filled += b
-        if filled >= 32:
-            out[:, k, :] = (acc & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-            acc >>= np.uint64(32)
-            filled -= 32
-            k += 1
-    assert k == b and filled == 0
-    return out.reshape(n, b * 4)
+def _value_slots() -> tuple[np.ndarray, np.ndarray]:
+    """Per width b = 0..32, where each of a block's (32, 4) values sits in
+    its block's payload: (the (low, spill-over) pair of u32 word indices,
+    shape (33, 32, 4, 2); the bit shift of the value in its low word,
+    shape (33, 32, 4)). Value i of a lane starts at lane bit i*b; lane l's
+    word k is payload word k*4 + l, so the spill-over word is 4 further on."""
+    pos = np.arange(33)[:, None] * np.arange(WORDS)  # (33, 32) lane bit offsets
+    low = (pos >> 5)[:, :, None] * 4 + np.arange(4)
+    words = np.stack([low, low + 4], axis=-1)
+    shifts = np.broadcast_to((pos & 31)[:, :, None], low.shape).astype(np.uint64)
+    return words, shifts
 
 
-def _unpack_group(packed: np.ndarray, b: int) -> np.ndarray:
-    """Unpack (n, b*4) u32 at width b → (n, 32, 4) u32 values.
-
-    Fully vectorized: each lane's packed words form an LSB-first bitstream
-    of 32 b-bit values, so unpackbits over the lane bytes + a shift-reduce
-    reassembles every value with no per-word Python loop."""
-    n = packed.shape[0]
-    # (n, b, 4) u32 → lane-major bytes (n, 4, b*4)
-    lane_bytes = (
-        packed.reshape(n, b, 4)
-        .transpose(0, 2, 1)
-        .copy()
-        .view(np.uint8)
-        .reshape(n, 4, b * 4)
-    )
-    bits = np.unpackbits(lane_bytes, axis=-1, bitorder="little")
-    # (n, 4, 32 values, b bits) LSB first → zero-pad each value to 32 bits
-    # and let packbits reassemble the u32s (C-speed, no wide reduce)
-    padded = np.zeros((n, 4, WORDS, 32), dtype=np.uint8)
-    padded[..., :b] = bits.reshape(n, 4, WORDS, b)
-    vals = np.packbits(padded, axis=-1, bitorder="little").view(np.uint32)
-    return vals.reshape(n, 4, WORDS).transpose(0, 2, 1)  # (n, 32, 4)
+_SLOT_WORDS, _SLOT_SHIFTS = _value_slots()
+_MASKS = (np.uint64(1) << np.arange(33, dtype=np.uint64)) - np.uint64(1)
 
 
-def _emit(blocks_u64: np.ndarray, bits: np.ndarray) -> bytes:
-    """Group-by-width pack + per-block (num_bits, payload) emission."""
-    nblocks = blocks_u64.shape[0]
-    payload_rows: list[bytes | None] = [None] * nblocks
-    for b in np.unique(bits):
-        idx = np.nonzero(bits == b)[0]
-        if b == 0:
-            for i in idx:
-                payload_rows[i] = b""
-        else:
-            packed = _pack_group(blocks_u64[idx], int(b))
-            for j, i in enumerate(idx):
-                payload_rows[i] = packed[j].tobytes()
-    out = bytearray()
-    for blk in range(nblocks):
-        out.append(int(bits[blk]))
-        out += payload_rows[blk]
-    return bytes(out)
+def _block_starts(bits: np.ndarray) -> np.ndarray:
+    """First payload u32 word of each block (+ the total as a last entry)."""
+    starts = np.zeros(len(bits) + 1, dtype=np.int64)
+    np.cumsum(bits.astype(np.int64) * 4, out=starts[1:])
+    return starts
+
+
+def _emit(blocks: np.ndarray, bits: np.ndarray) -> bytes:
+    """Pack (nblocks, 32, 4) u32 values, each block at its own width, and
+    frame them as per-block (num_bits u8, payload)."""
+    starts = _block_starts(bits)
+    n_words = int(starts[-1])
+    # shifted into u64, a value's low half is its part of the low word and
+    # its high half the spill-over: the (lo, hi) u32 view lines up with
+    # the (low, spill-over) word pairs
+    parts = (blocks.astype(np.uint64) << _SLOT_SHIFTS[bits]).view(np.uint32)
+    idx = _SLOT_WORDS[bits] + starts[:-1, None, None, None]
+    sums = np.bincount(idx.ravel(), weights=parts.ravel(), minlength=n_words + 4)
+    payload = sums[:n_words].astype("<u4").view(np.uint8)
+    heads = np.arange(len(bits)) + starts[:-1] * 4
+    out = np.empty(len(bits) + len(payload), dtype=np.uint8)
+    is_payload = np.ones(len(out), dtype=bool)
+    is_payload[heads] = False
+    out[heads] = bits
+    out[is_payload] = payload
+    return out.tobytes()
 
 
 def _parse(buf: memoryview, nblocks: int) -> np.ndarray:
-    """Inverse of _emit framing: → (nblocks, 32, 4) u32 word array."""
+    """Inverse of _emit: → (nblocks, 32, 4) u32 values."""
     raw = np.frombuffer(buf, dtype=np.uint8)
     # fast path: every block at the first block's width → headers sit at
     # arithmetic positions (verified vectorized); else the sequential scan
     b0 = int(raw[0]) if nblocks else 0
     stride = 1 + 16 * b0
-    starts = np.arange(nblocks, dtype=np.int64) * stride
-    if len(raw) == nblocks * stride and bool((raw[starts] == b0).all()):
+    heads = np.arange(nblocks, dtype=np.int64) * stride
+    if len(raw) == nblocks * stride and bool((raw[heads] == b0).all()):
         bits = np.full(nblocks, b0, dtype=np.uint8)
-        offsets = starts + 1
     else:
-        bits = np.empty(nblocks, dtype=np.uint8)
-        offsets = np.empty(nblocks, dtype=np.int64)
+        heads = np.empty(nblocks, dtype=np.int64)
+        head_bytes = memoryview(raw)  # indexes to Python ints
         pos = 0
         for blk in range(nblocks):
-            b = raw[pos]
-            bits[blk] = b
-            offsets[blk] = pos + 1
-            pos += 1 + int(b) * 16
-    out = np.empty((nblocks, WORDS, 4), dtype=np.uint32)
-    for b in np.unique(bits):
-        idx = np.nonzero(bits == b)[0]
-        if b == 0:
-            out[idx] = 0
-            continue
-        # one fancy-index gather for the whole width group (no per-block
-        # frombuffer/stack)
-        byte_idx = offsets[idx][:, None] + np.arange(int(b) * 16, dtype=np.int64)
-        packed = raw[byte_idx].view(np.uint32).reshape(len(idx), int(b) * 4)
-        out[idx] = _unpack_group(packed, int(b))
-    return out
+            heads[blk] = pos
+            pos += 1 + head_bytes[pos] * 16
+        bits = raw[heads]
+    starts = _block_starts(bits)
+    n_words = int(starts[-1])
+    is_payload = np.ones(nblocks + n_words * 4, dtype=bool)
+    is_payload[heads] = False
+    # 8 zero words of padding: a zero-width block, or a value without
+    # spill-over at the end, still reads a word pair at its slot
+    words = np.zeros(n_words + 8, dtype=np.uint32)
+    words[:n_words] = raw[: len(is_payload)][is_payload].view("<u4")
+    pairs = words[_SLOT_WORDS[bits] + starts[:-1, None, None, None]].view(np.uint64)[..., 0]
+    return ((pairs >> _SLOT_SHIFTS[bits]) & _MASKS[bits][:, None, None]).astype(np.uint32)
 
 
 def pack(values: np.ndarray) -> bytes:
@@ -137,7 +121,7 @@ def pack(values: np.ndarray) -> bytes:
     assert len(v) % BLOCK == 0 and len(v) > 0
     blocks = v.reshape(-1, WORDS, 4)
     bits = _bits_needed(blocks.reshape(blocks.shape[0], -1).max(axis=1))
-    return _emit(blocks.astype(np.uint64), bits)
+    return _emit(blocks, bits)
 
 
 def unpack(buf: memoryview, length: int) -> np.ndarray:
@@ -146,6 +130,9 @@ def unpack(buf: memoryview, length: int) -> np.ndarray:
 
 
 def pack_sorted(values: np.ndarray, initial: int = 0) -> bytes:
+    """DeltaBitpacking compress of non-decreasing u32 values ≥ ``initial``
+    (len % 128 == 0); sortedness keeps every delta within its block's
+    width, which is taken from the raw values."""
     v = np.ascontiguousarray(values, dtype=np.uint32)
     assert len(v) % BLOCK == 0 and len(v) > 0
     blocks = v.reshape(-1, WORDS, 4)
@@ -159,7 +146,7 @@ def pack_sorted(values: np.ndarray, initial: int = 0) -> bytes:
     prev[:, 0, :] = inits[:, None]
     deltas = blocks - prev  # u32 wrap-around == SIMD sub semantics
     bits = _bits_needed(blocks.reshape(nblocks, -1).max(axis=1))
-    return _emit(deltas.astype(np.uint64), bits)
+    return _emit(deltas, bits)
 
 
 def unpack_sorted(buf: memoryview, length: int, initial: int = 0) -> np.ndarray:

@@ -34,6 +34,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from quiver_spark.format import bitpack, patas, roaring
 from quiver_spark.format.constants import (
@@ -50,6 +51,7 @@ from quiver_spark.format.constants import (
     CODEC_SNAPPY,
     CODEC_ZSTD,
 )
+from quiver_spark.format.validity import unpack_bitmap
 
 _PA_CODEC = {CODEC_LZ4: "lz4_raw", CODEC_ZSTD: "zstd", CODEC_SNAPPY: "snappy"}
 
@@ -102,10 +104,32 @@ def _basic_compress(codec: int, raw: bytes) -> bytes:
     return pa.compress(raw, codec=_PA_CODEC[codec], asbytes=True)
 
 
-def _basic_decompress(codec: int, buf: memoryview, usize: int) -> bytes:
+def _basic_decompress(codec: int, buf: memoryview, usize: int) -> memoryview | pa.Buffer:
+    """Payload → raw bytes, without copying: a stored payload is returned
+    as the view it is, a compressed one as pyarrow's output buffer."""
     if codec == CODEC_NONE:
-        return bytes(buf)
-    return pa.decompress(bytes(buf), decompressed_size=usize, codec=_PA_CODEC[codec], asbytes=True)
+        return buf
+    return pa.decompress(buf, decompressed_size=usize, codec=_PA_CODEC[codec])
+
+
+def arrow_view(values: np.ndarray, valid: np.ndarray | None = None) -> pa.Array:
+    """Arrow array over a 1-D numpy array (zero-copy unless bool, which is
+    bit-packed), with an optional validity mask. Built from buffers since
+    ``pa.array`` on numpy input, like ``Array.to_numpy``, imports pandas:
+    ~0.4 s in every fresh worker that writes or reads a page."""
+    if values.dtype == np.bool_:
+        arrow_type, data = pa.bool_(), np.packbits(values, bitorder="little")
+    else:
+        data = np.ascontiguousarray(values)
+        arrow_type = pa.from_numpy_dtype(data.dtype)
+    vbuf = None if valid is None else pa.py_buffer(np.packbits(valid, bitorder="little"))
+    null_count = 0 if valid is None else len(valid) - int(np.count_nonzero(valid))
+    return pa.Array.from_buffers(arrow_type, len(values), [vbuf, pa.py_buffer(data)], null_count)
+
+
+def numpy_view(arr: pa.Array, dtype: np.dtype) -> np.ndarray:
+    """Zero-copy numpy view of a null-free primitive Arrow array."""
+    return np.frombuffer(arr.buffers()[1], dtype=dtype, count=arr.offset + len(arr))[arr.offset :]
 
 
 def _ffill(values: np.ndarray, valid: np.ndarray | None) -> np.ndarray:
@@ -232,10 +256,11 @@ def encode_numeric(
         return _frame(CODEC_RLE, rec.tobytes(), total_bytes)
 
     if best_codec == CODEC_DICT:
-        import pandas as pd
-
-        codes, uniques = pd.factorize(bits, use_na_sentinel=False)
-        dict_vals = np.asarray(uniques).view(values.dtype)
+        # insertion-ordered codes: the reference's interner numbers values
+        # by first appearance
+        denc = pc.dictionary_encode(arrow_view(bits))
+        codes = numpy_view(denc.indices, np.int32)
+        dict_vals = numpy_view(denc.dictionary, bits.dtype).view(values.dtype)
         sub = CodecOptions(
             opts.default_codec,
             opts.compress_ratio,
@@ -249,8 +274,6 @@ def encode_numeric(
         if null_count / n >= 0.9 or len(nn) == 0:
             top_arr = np.zeros(1, values.dtype)
         else:
-            nn_bits = nn.view(_bits_view_dtype(values.dtype)) if is_double else nn
-            uniq, counts = np.unique(nn_bits, return_counts=True)
             top_arr = uniq[[int(np.argmax(counts))]].view(values.dtype)
         bits_dt = _bits_view_dtype(values.dtype)
         neq = values.view(bits_dt) != top_arr.view(bits_dt)[0]
@@ -465,7 +488,7 @@ def encode_fixed(
     raise AssertionError(best_codec)
 
 
-def decode_fixed(cur: Cursor, length: int, width: int) -> bytes:
+def decode_fixed(cur: Cursor, length: int, width: int) -> bytes | memoryview | pa.Buffer:
     """Fixed-width cascade decode → raw little-endian buffer of
     length*width bytes."""
     codec, csize, usize = cur.frame_header()
@@ -574,20 +597,26 @@ def decode_boolean(cur: Cursor, length: int) -> np.ndarray:
 
 def encode_binary(arr: pa.Array, opts: CodecOptions, offset_width: int) -> bytes:
     """arr: a pa binary/string array slice (one page)."""
-    import pyarrow.compute as pc
-
     n = len(arr)
     if arr.null_count:
         filled = pc.fill_null(pc.fill_null_forward(arr), b"" if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type) else "")
     else:
         filled = arr
-    values_size = int(pc.sum(pc.binary_length(filled)).as_py() or 0)
+    if isinstance(filled, pa.ChunkedArray):
+        filled = filled.combine_chunks()
+    np_off, np_val = _binary_buffers(filled)
+    values_size = int(np_off[-1] - np_off[0])
 
     best = None
     if opts.compress_ratio is not None and n > 0:
-        vc = pc.value_counts(filled)
-        unique_count = len(vc)
-        counts = np.array([c.as_py() for c in vc.field("counts")]) if unique_count else np.empty(0)
+        # one insertion-ordered hash pass serves the chooser and the Dict
+        # and Freq encoders (pc.value_counts lists values in the same order)
+        denc = pc.dictionary_encode(filled)
+        codes = numpy_view(denc.indices, np.int32)
+        dict_off, dict_val = _binary_buffers(denc.dictionary)
+        dict_off -= dict_off[0]
+        counts = np.bincount(codes, minlength=len(dict_off) - 1)
+        unique_count = len(counts)
         total_bytes = values_size + (n + 1) * offset_width
         if CODEC_ONE_VALUE not in opts.forbidden and unique_count <= 1:
             best = (CODEC_ONE_VALUE, float(n))
@@ -598,9 +627,7 @@ def encode_binary(arr: pa.Array, opts: CodecOptions, offset_width: int) -> bytes
         ):
             best = (CODEC_FREQ, float(n - 1))
         elif CODEC_DICT not in opts.forbidden and unique_count * 3 < n:
-            uniq_size = int(
-                pc.sum(pc.binary_length(vc.field("values"))).as_py() or 0
-            )
+            uniq_size = len(dict_val)
             bits_needed = max(int(unique_count).bit_length(), 1)
             after = uniq_size + n * (bits_needed // 8) + n * 2 // 128
             ratio = total_bytes / max(after, 1)
@@ -610,8 +637,6 @@ def encode_binary(arr: pa.Array, opts: CodecOptions, offset_width: int) -> bytes
             best = None
 
     if best is None:
-        combined = filled.combine_chunks() if isinstance(filled, pa.ChunkedArray) else filled
-        np_off, np_val = _binary_buffers(combined)
         off_dtype = np.dtype("<i4") if offset_width == 4 else np.dtype("<i8")
         rebased = (np_off - np_off[0]).astype(off_dtype)
         out = bytearray()
@@ -625,53 +650,36 @@ def encode_binary(arr: pa.Array, opts: CodecOptions, offset_width: int) -> bytes
 
     codec = best[0]
     if codec == CODEC_ONE_VALUE:
-        val = b""
-        for v in filled:
-            if v.is_valid:
-                val = v.as_py()
-                if isinstance(val, str):
-                    val = val.encode()
-                break
+        val = np_val[: np_off[1] - np_off[0]].tobytes()
         payload = struct.pack("<I", len(val)) + val
         return _frame(CODEC_ONE_VALUE, payload, values_size)
 
     if codec == CODEC_FREQ:
-        vc = pc.value_counts(filled)
-        counts = np.array([c.as_py() for c in vc.field("counts")])
-        top = vc.field("values")[int(np.argmax(counts))].as_py()
-        top_b = top.encode() if isinstance(top, str) else (top or b"")
-        eq = pc.equal(filled, pa.scalar(top, type=filled.type))
-        exc_mask = np.invert(np.asarray(eq.fill_null(False)))
+        top = int(np.argmax(counts))
+        exc_mask = codes != top
         if arr.null_count:
-            exc_mask &= np.asarray(pc.is_valid(arr))
+            exc_mask &= unpack_bitmap(arr.buffers()[0], arr.offset, n)
         positions = np.nonzero(exc_mask)[0].astype(np.uint32)
         bm = roaring.serialize(positions)
-        payload = bytearray()
-        payload += struct.pack("<Q", len(top_b)) + top_b
-        payload += struct.pack("<I", len(bm)) + bm
-        for i in positions:
-            v = filled[int(i)].as_py()
-            vb = v.encode() if isinstance(v, str) else (v or b"")
-            payload += struct.pack("<Q", len(vb)) + vb
-        return _frame(CODEC_FREQ, bytes(payload), values_size)
+        top_b = dict_val[dict_off[top] : dict_off[top + 1]].tobytes()
+        exc_off, exc_val = _binary_buffers(filled.take(arrow_view(positions)))
+        payload = (
+            struct.pack("<Q", len(top_b)) + top_b
+            + struct.pack("<I", len(bm)) + bm
+            + _len_prefixed(np.diff(exc_off), exc_val)
+        )
+        return _frame(CODEC_FREQ, payload, values_size)
 
     if codec == CODEC_DICT:
-        denc = pc.dictionary_encode(filled)
-        if isinstance(denc, pa.ChunkedArray):
-            denc = denc.combine_chunks()
-        indices = np.asarray(denc.indices).astype(np.uint32)
-        dictionary = denc.dictionary
         sub = CodecOptions(
             opts.default_codec, opts.compress_ratio, opts.forbidden | {CODEC_DICT}
         )
-        payload = bytearray(encode_numeric(indices, None, sub, False))
-        payload += struct.pack("<I", len(dictionary))
-        for v in dictionary:
-            vb = v.as_py()
-            if isinstance(vb, str):
-                vb = vb.encode()
-            payload += struct.pack("<Q", len(vb)) + vb
-        return _frame(CODEC_DICT, bytes(payload), values_size)
+        payload = (
+            encode_numeric(codes.astype(np.uint32), None, sub, False)
+            + struct.pack("<I", len(dict_off) - 1)
+            + _len_prefixed(np.diff(dict_off), dict_val)
+        )
+        return _frame(CODEC_DICT, payload, values_size)
 
     raise AssertionError(codec)
 
@@ -688,22 +696,73 @@ def _binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return offsets.astype(np.int64), values
 
 
+def _take_entries(
+    entry_off: np.ndarray, entries: np.ndarray, indices: np.ndarray, offset_width: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Row i = entry ``indices[i]`` of the binary entries (offsets,
+    bytes), gathered by one Arrow take → (offsets from 0, values uint8)."""
+    off_dtype = np.dtype("<i4") if offset_width == 4 else np.dtype("<i8")
+    dictionary = pa.Array.from_buffers(
+        pa.binary() if offset_width == 4 else pa.large_binary(),
+        len(entry_off) - 1,
+        [None, pa.py_buffer(entry_off.astype(off_dtype)), pa.py_buffer(entries)],
+    )
+    bufs = dictionary.take(arrow_view(indices)).buffers()
+    offsets = np.frombuffer(bufs[1], dtype=off_dtype, count=len(indices) + 1)
+    values = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
+    return offsets, values
+
+
+def _len_prefixed(lens: np.ndarray, flat: np.ndarray) -> bytes:
+    """Values with lengths ``lens`` and concatenated bytes ``flat`` →
+    back-to-back ``u64 len | bytes`` records."""
+    rec = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens + 8, out=rec[1:])
+    len_pos = (rec[:-1, None] + np.arange(8)).ravel()
+    out = np.empty(int(rec[-1]), dtype=np.uint8)
+    out[len_pos] = lens.astype("<u8").view(np.uint8)
+    is_value = np.ones(len(out), dtype=bool)
+    is_value[len_pos] = False
+    out[is_value] = flat
+    return out.tobytes()
+
+
+def _read_len_prefixed(cur: Cursor, count: int) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of _len_prefixed for ``count`` records at the cursor →
+    (offsets, len+1 from 0; concatenated bytes). Each record's position
+    depends on the length before it, so only the lengths are read in a
+    loop; the bytes are gathered in one pass."""
+    read_len = struct.Struct("<Q").unpack_from
+    start = pos = cur.pos
+    lens = [0] * count
+    for j in range(count):
+        (lens[j],) = read_len(cur.buf, pos)
+        pos += 8 + lens[j]
+    offsets = np.zeros(count + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    region = np.frombuffer(cur.take(pos - start), dtype=np.uint8)
+    is_value = np.ones(pos - start, dtype=bool)
+    rec = offsets[:-1] + 8 * np.arange(count)  # record starts
+    is_value[(rec[:, None] + np.arange(8)).ravel()] = False
+    return offsets, region[is_value]
+
+
 def decode_binary(
     cur: Cursor, length: int, offset_width: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """→ (offsets int64 of len+1 starting at 0, values uint8)."""
+    """→ (integer offsets of len+1 starting at 0, values uint8)."""
     codec, csize, usize = cur.frame_header()
     off_dtype = np.dtype("<i4") if offset_width == 4 else np.dtype("<i8")
 
     if codec in BASIC_CODECS:
         payload = cur.take(csize)
         raw_off = _basic_decompress(codec, payload, (length + 1) * offset_width)
-        offsets = np.frombuffer(raw_off, dtype=off_dtype, count=length + 1).astype(np.int64)
+        offsets = np.frombuffer(raw_off, dtype=off_dtype, count=length + 1)
         codec2, csize2, usize2 = cur.frame_header()
         payload2 = cur.take(csize2)
         raw_val = _basic_decompress(codec2, payload2, usize2)
         values = np.frombuffer(raw_val, dtype=np.uint8)
-        return offsets - offsets[0], values
+        return (offsets - offsets[0] if offsets[0] else offsets), values
 
     payload = cur.take(csize)
     if codec == CODEC_ONE_VALUE:
@@ -720,45 +779,18 @@ def decode_binary(
         top = np.frombuffer(sub.take(top_len), dtype=np.uint8)
         bm_size = sub.u32()
         positions = roaring.deserialize(sub.take(bm_size))
-        exc: list[np.ndarray] = []
-        for _ in range(len(positions)):
-            ln = sub.u64()
-            exc.append(np.frombuffer(sub.take(ln), dtype=np.uint8))
-        lens = np.full(length, top_len, dtype=np.int64)
-        for i, p in enumerate(positions):
-            lens[p] = len(exc[i])
-        offsets = np.zeros(length + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        values = np.empty(offsets[-1], dtype=np.uint8)
-        pos_set = set(int(p) for p in positions)
-        exc_iter = iter(exc)
-        for i in range(length):
-            chunk = next(exc_iter) if i in pos_set else top
-            values[offsets[i] : offsets[i + 1]] = chunk
-        return offsets, values
+        exc_off, exc_val = _read_len_prefixed(sub, len(positions))
+        # entry 0 is the top value, entry j + 1 the j-th exception
+        entry_off = np.concatenate([[0], top_len + exc_off])
+        idx = np.zeros(length, dtype=np.uint32)
+        idx[positions] = np.arange(1, len(positions) + 1)
+        return _take_entries(entry_off, np.concatenate([top, exc_val]), idx, offset_width)
 
     if codec == CODEC_DICT:
         sub = Cursor(payload)
         indices = decode_numeric(sub, length, np.dtype("<u4"))
         n_sets = sub.u32()
-        entries: list[np.ndarray] = []
-        for _ in range(n_sets):
-            ln = sub.u64()
-            entries.append(np.frombuffer(sub.take(ln), dtype=np.uint8))
-        entry_lens = np.array([len(e) for e in entries], dtype=np.int64)
-        flat = np.concatenate(entries) if entries else np.empty(0, np.uint8)
-        entry_offsets = np.zeros(n_sets + 1, dtype=np.int64)
-        np.cumsum(entry_lens, out=entry_offsets[1:])
-        lens = entry_lens[indices]
-        offsets = np.zeros(length + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        # gather: build index ranges per row (vectorized via repeat+arange trick)
-        starts = entry_offsets[indices]
-        if offsets[-1] > 0:
-            reps = np.repeat(starts - offsets[:-1], lens)
-            values = flat[np.arange(offsets[-1], dtype=np.int64) + reps]
-        else:
-            values = np.empty(0, np.uint8)
-        return offsets, values
+        entry_off, entries = _read_len_prefixed(sub, n_sets)
+        return _take_entries(entry_off, entries, indices, offset_width)
 
     raise NotImplementedError(f"binary codec {codec}")

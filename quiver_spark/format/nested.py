@@ -35,6 +35,9 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 
+from quiver_spark.format.codecs import arrow_view
+from quiver_spark.format.validity import unpack_bitmap
+
 
 def bits_for(max_level: int) -> int:
     return max(1, int(max_level).bit_length())
@@ -60,7 +63,11 @@ def encode_levels(levels: np.ndarray, width: int) -> bytes:
     header = _uleb128((groups << 1) | 1)
     padded = np.zeros(groups * 8, dtype=np.uint8)
     padded[:n] = levels
-    bits = np.unpackbits(padded[:, None], axis=1, bitorder="little")[:, :width]
+    if width == 1:  # every list's rep levels: the levels are the bits
+        return header + np.packbits(padded, bitorder="little").tobytes()
+    bits = np.empty((len(padded), width), dtype=np.uint8)
+    for j in range(width):  # one pass per bit plane
+        bits[:, j] = (padded >> j) & 1
     return header + np.packbits(bits.reshape(-1), bitorder="little").tobytes()
 
 
@@ -89,11 +96,13 @@ def decode_levels(buf: memoryview, n: int, width: int) -> np.ndarray:
                 np.frombuffer(buf[pos : pos + nbytes], dtype=np.uint8),
                 bitorder="little",
             )
-            vals = (
-                bits[: groups * 8 * width]
-                .reshape(-1, width)
-                .dot(1 << np.arange(width, dtype=np.uint8))
-            )
+            if width == 1:
+                vals = bits
+            else:  # reassemble the levels one bit plane at a time
+                planes = bits[: groups * 8 * width].reshape(-1, width)
+                vals = planes[:, 0].copy()
+                for j in range(1, width):
+                    vals |= planes[:, j] << j
             take = min(groups * 8, n - count)
             out[count : count + take] = vals[:take]
             count += take
@@ -180,8 +189,7 @@ def _validity_mask(a: pa.Array) -> np.ndarray | None:
     bufs = a.buffers()
     if bufs[0] is None:
         return None
-    bits = np.unpackbits(np.frombuffer(bufs[0], dtype=np.uint8), bitorder="little")
-    return bits[a.offset : a.offset + len(a)].astype(bool)
+    return unpack_bitmap(bufs[0], a.offset, len(a))
 
 
 def _offsets(a: pa.Array) -> np.ndarray:
@@ -334,7 +342,7 @@ def _shred_node(
     # primitive leaf
     defined = frame.idx >= 0
     take = frame.idx[defined]
-    values = a.take(pa.array(take, type=pa.int64())) if len(take) else a.slice(0, 0)
+    values = a.take(arrow_view(take)) if len(take) else a.slice(0, 0)
     if values.null_count:  # leaf nulls are encoded purely in def levels
         values = values.drop_null()
     out.append(
@@ -383,7 +391,7 @@ def _validity_buf(validity: np.ndarray | None):
     if validity is None or validity.all():
         return None, 0
     return (
-        pa.py_buffer(np.packbits(validity, bitorder="little").tobytes()),
+        pa.py_buffer(np.packbits(validity, bitorder="little")),
         int((~validity).sum()),
     )
 
@@ -490,8 +498,7 @@ def _assemble_node(
                 take_idx = np.full(n_lists * k, -1, dtype=np.int64)
                 dest = np.flatnonzero(np.repeat(valid, k))
                 take_idx[dest] = np.arange(len(child))
-                idx = pa.array(take_idx, type=pa.int64(), mask=take_idx < 0)
-                child = child.take(idx)
+                child = child.take(arrow_view(take_idx, valid=take_idx >= 0))
             arr = pa.FixedSizeListArray.from_buffers(
                 t, n_lists, [vbuf], children=[child], null_count=null_count
             )
@@ -513,7 +520,7 @@ def _assemble_node(
     value_rank = np.cumsum(def_ >= lf.max_def) - 1
     take = value_rank[sel_slots[validity]]
     vals = (
-        lf.values.take(pa.array(take, type=pa.int64()))
+        lf.values.take(arrow_view(take))
         if len(take)
         else lf.values.slice(0, 0)
     )
@@ -523,12 +530,12 @@ def _assemble_node(
     out_idx = np.zeros(n_entries, dtype=np.int64)
     out_idx[validity] = np.arange(len(take))
     gathered = (
-        vals.take(pa.array(out_idx, type=pa.int64()))
+        vals.take(arrow_view(out_idx))
         if len(vals)
         else pa.nulls(n_entries, t)
     )
     if len(vals):
         gathered = pa.compute.if_else(
-            pa.array(validity), gathered, pa.nulls(n_entries, t)
+            arrow_view(validity), gathered, pa.nulls(n_entries, t)
         )
     return gathered, leaf_pos + 1

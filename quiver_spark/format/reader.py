@@ -193,7 +193,7 @@ def _decode_values(cur: Cursor, num_values: int, t: pa.DataType, validity_buf, n
     """Typed payload at cursor → flat pyarrow Array."""
     if pa.types.is_boolean(t):
         values = decode_boolean(cur, num_values)
-        vbuf = pa.py_buffer(np.packbits(values, bitorder="little").tobytes())
+        vbuf = pa.py_buffer(np.packbits(values, bitorder="little"))
         return pa.Array.from_buffers(t, num_values, [validity_buf, vbuf], null_count)
     if (
         pa.types.is_string(t)
@@ -204,8 +204,8 @@ def _decode_values(cur: Cursor, num_values: int, t: pa.DataType, validity_buf, n
         width = 8 if (pa.types.is_large_string(t) or pa.types.is_large_binary(t)) else 4
         offsets, values = decode_binary(cur, num_values, width)
         off_dtype = np.dtype("<i8") if width == 8 else np.dtype("<i4")
-        obuf = pa.py_buffer(offsets.astype(off_dtype).tobytes())
-        vbuf = pa.py_buffer(values.tobytes())
+        obuf = pa.py_buffer(offsets.astype(off_dtype, copy=False))
+        vbuf = pa.py_buffer(values)
         return pa.Array.from_buffers(
             t, num_values, [validity_buf, obuf, vbuf], null_count
         )
@@ -218,7 +218,7 @@ def _decode_values(cur: Cursor, num_values: int, t: pa.DataType, validity_buf, n
         )
     dtype, _is_double = _physical_dtype(t)
     values = decode_numeric(cur, num_values, dtype)
-    vbuf = pa.py_buffer(np.ascontiguousarray(values).tobytes())
+    vbuf = pa.py_buffer(np.ascontiguousarray(values))
     return pa.Array.from_buffers(t, num_values, [validity_buf, vbuf], null_count)
 
 
@@ -244,9 +244,7 @@ def decode_page(
     null_count = 0
     if valid is not None:
         null_count = int(num_values - valid.sum())
-        validity_buf = pa.py_buffer(
-            np.packbits(valid, bitorder="little").tobytes()
-        )
+        validity_buf = pa.py_buffer(np.packbits(valid, bitorder="little"))
     return _decode_values(cur, num_values, field.type, validity_buf, null_count)
 
 

@@ -25,6 +25,15 @@ def _uleb128(n: int) -> bytes:
             return bytes(out)
 
 
+def unpack_bitmap(buf, offset: int, length: int) -> np.ndarray:
+    """Bits [offset, offset + length) of an Arrow bitmap as bools, unpacking
+    only the bytes that hold them (a page is a slice of a whole column)."""
+    first = offset // 8
+    raw = np.frombuffer(buf, dtype=np.uint8)[first : (offset + length + 7) // 8]
+    bits = np.unpackbits(raw, bitorder="little")
+    return bits[offset - first * 8 : offset - first * 8 + length].astype(bool)
+
+
 def encode_validity(valid: np.ndarray | None, length: int) -> bytes:
     """valid: bool array (True = present) or None (all present)."""
     if valid is None:

@@ -36,7 +36,7 @@ from quiver_spark.format import nested as nested_mod
 from quiver_spark.format import stats as stats_mod
 from quiver_spark.format.codecs import CodecOptions, encode_binary, encode_boolean, encode_numeric
 from quiver_spark.format.constants import EOS, MAGIC, NAME_TO_CODEC
-from quiver_spark.format.validity import encode_validity
+from quiver_spark.format.validity import encode_validity, unpack_bitmap
 
 DEFAULT_PAGE_SIZE = 8192  # rows per page (reference examples use 8192)
 
@@ -48,15 +48,17 @@ class WriteOptions:
     max_page_size: int = DEFAULT_PAGE_SIZE
     # patas is in the default candidate list, matching the reference's
     # double chooser (src/compression/double/mod.rs:271-277). The encoder
-    # is numpy-vectorized (format/patas.py, ~35 MB/s, byte-identical to
-    # the sequential formulation); the chooser only pays a 640-value
-    # sample per page unless patas actually wins the ratio contest, so
-    # default write throughput is unchanged on data patas loses (random
-    # doubles ratio ~1.1 < the 2.0 threshold). Forbid explicitly
+    # is numpy-vectorized (format/patas.py, byte-identical to the
+    # sequential formulation); the chooser only pays a 640-value sample
+    # per page unless patas actually wins the ratio contest, so default
+    # write throughput is unchanged on data patas loses (random doubles
+    # ratio ~1.1 < the 2.0 threshold). Forbid explicitly
     # (forbidden=("patas",)) for write-heavy pipelines on XOR-friendly
     # data where block-codec throughput matters more than ratio; decode
-    # resolves the XOR chain with vectorized pointer doubling (~25 MB/s)
-    # but still trails the block codecs.
+    # resolves the XOR chain with vectorized pointer doubling but still
+    # trails the block codecs. For measured figures, run the benchmark's
+    # codec workload traced (perfbench/README.md) and read its
+    # format.encode_mb_per_s.* / format.decode_mb_per_s.* metrics.
     forbidden: tuple[str, ...] = ()
     page_stats: bool = True  # per-page min/max sidecar (engine extension)
     #: columns to additionally index with per-page BLOOM filters (point-
@@ -95,32 +97,17 @@ def _physical_dtype(t: pa.DataType) -> tuple[np.dtype, bool] | None:
     raise NotImplementedError(f"quiver round-1 writer does not support {t}")
 
 
+def _valid_np(arr: pa.Array) -> np.ndarray | None:
+    return unpack_bitmap(arr.buffers()[0], arr.offset, len(arr)) if arr.null_count else None
+
+
 def _prim_np(arr: pa.Array, dtype: np.dtype) -> tuple[np.ndarray, np.ndarray | None]:
     """(values, valid) numpy views of a primitive arrow array."""
-    bufs = arr.buffers()
-    values = np.frombuffer(bufs[1], dtype=dtype, count=arr.offset + len(arr))[
-        arr.offset : arr.offset + len(arr)
-    ]
-    valid = None
-    if arr.null_count:
-        bits = np.unpackbits(
-            np.frombuffer(bufs[0], dtype=np.uint8), bitorder="little"
-        )
-        valid = bits[arr.offset : arr.offset + len(arr)].astype(bool)
-    return values, valid
+    return codecs.numpy_view(arr, dtype), _valid_np(arr)
 
 
 def _bool_np(arr: pa.Array) -> tuple[np.ndarray, np.ndarray | None]:
-    bufs = arr.buffers()
-    bits = np.unpackbits(np.frombuffer(bufs[1], dtype=np.uint8), bitorder="little")
-    values = bits[arr.offset : arr.offset + len(arr)].astype(bool)
-    valid = None
-    if arr.null_count:
-        vbits = np.unpackbits(
-            np.frombuffer(bufs[0], dtype=np.uint8), bitorder="little"
-        )
-        valid = vbits[arr.offset : arr.offset + len(arr)].astype(bool)
-    return values, valid
+    return unpack_bitmap(arr.buffers()[1], arr.offset, len(arr)), _valid_np(arr)
 
 
 def _encode_values(arr: pa.Array, copts: CodecOptions) -> bytes:
@@ -146,13 +133,7 @@ def _encode_values(arr: pa.Array, copts: CodecOptions) -> bytes:
         rows = np.frombuffer(
             bufs[1], dtype=np.uint8, count=(arr.offset + len(arr)) * width
         )[arr.offset * width :].reshape(len(arr), width)
-        valid = None
-        if arr.null_count:
-            bits = np.unpackbits(
-                np.frombuffer(bufs[0], dtype=np.uint8), bitorder="little"
-            )
-            valid = bits[arr.offset : arr.offset + len(arr)].astype(bool)
-        return codecs.encode_fixed(rows, valid, copts)
+        return codecs.encode_fixed(rows, _valid_np(arr), copts)
     dtype, is_double = _physical_dtype(t)
     values, valid = _prim_np(arr, dtype)
     return encode_numeric(values, valid, copts, is_double)
@@ -167,10 +148,7 @@ def encode_leaf_page(arr: pa.Array, nullable: bool, copts: CodecOptions) -> byte
         return b""
     out = bytearray()
     if nullable:
-        import pyarrow.compute as pc
-
-        valid = np.asarray(pc.is_valid(arr)) if arr.null_count else None
-        v = encode_validity(valid, len(arr))
+        v = encode_validity(_valid_np(arr), len(arr))
         out += struct.pack("<I", len(v)) + v
     out += _encode_values(arr, copts)
     return bytes(out)

@@ -455,3 +455,50 @@ def test_patas_decode_rejects_zero_ref_diff():
     buf = np.float64(42.0).tobytes() + b"\x3f\x00"  # header: diff=0 sig=0 tz=63
     with pytest.raises(ValueError, match="ref_diff=0"):
         patas.decode(memoryview(buf), 2, np.dtype("f8"))
+
+
+#: argv: checkout, an Arrow IPC file, the path to write; prints the page
+#: codecs of the file, then whether pandas was imported by the write and
+#: by the read-back
+_NO_PANDAS_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+import pyarrow as pa
+from quiver_spark.format import reader, writer
+from quiver_spark.format.stat import stat_file
+table = pa.ipc.open_file(sys.argv[2]).read_all()
+writer.write_table(table, sys.argv[3])
+wrote = "pandas" in sys.modules
+assert reader.read_table(sys.argv[3]).equals(table)
+codecs = sorted({p.codec for pages in stat_file(sys.argv[3]).values() for p in pages})
+print(",".join(codecs), wrote, "pandas" in sys.modules)
+"""
+
+
+def test_format_layer_never_imports_pandas(tmp_path):
+    """A fresh interpreter that writes Dict pages (numeric, double and
+    string) and a list column, and reads them back, must not import pandas:
+    the import costs ~0.4 s in every new Python-sink or reader worker."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    n = 10_000
+    table = pa.table({
+        "i": pa.array(np.arange(n) % 7 * 1000),
+        "f": pa.array(np.arange(n) % 5 * 0.5, mask=np.arange(n) % 9 == 0),
+        "s": pa.array(np.array(["a", "b", "c"])[np.arange(n) % 3]),
+        "l": pa.array([[1, 2], None, [3]] * (n // 3) + [[4]]),
+    })
+    src = tmp_path / "in.arrow"
+    with pa.OSFile(str(src), "wb") as f, pa.ipc.new_file(f, table.schema) as w:
+        w.write_table(table)
+    repo = Path(__file__).resolve().parent.parent
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_PANDAS_SCRIPT, str(repo), str(src), str(tmp_path / "t.quiver")],
+        capture_output=True, text=True, cwd=tmp_path,
+    )
+    assert proc.returncode == 0, proc.stderr
+    codecs, wrote, read = proc.stdout.split()
+    assert "dict" in codecs.split(","), codecs
+    assert (wrote, read) == ("False", "False")

@@ -219,3 +219,63 @@ def test_default_codec_round_trips_exactly(case):
     got = pa.array([dec], type=pa_type)[0].as_py()
     expect = pa.array([value], type=pa_type)[0].as_py()
     assert got == expect, (pa_type, value, enc, got, expect)
+
+
+# --- BitPacker4x kernels (format/bitpack.py) --------------------------------
+
+
+def _oracle_pack(values: np.ndarray) -> bytes:
+    """BitPacker4x as the sequential 32-step loop per block (lane words
+    filled LSB-first, 4 lanes at once): the formulation the single-pass
+    packer replaced, kept here as its oracle."""
+    out = bytearray()
+    for block in values.reshape(-1, 32, 4).astype(np.uint64):
+        b = int(block.max()).bit_length()
+        out.append(b)
+        acc = np.zeros(4, dtype=np.uint64)
+        filled = 0
+        for word in block:
+            acc |= word << np.uint64(filled)
+            filled += b
+            if filled >= 32:
+                out += (acc & np.uint64(0xFFFFFFFF)).astype("<u4").tobytes()
+                acc >>= np.uint64(32)
+                filled -= 32
+    return bytes(out)
+
+
+@st.composite
+def _bitpack_values(draw):
+    """u32 values in 128-value blocks of chosen widths 0-32: either every
+    block at one width (the unpacker's arithmetic-header fast path) or a
+    mix (its sequential header scan)."""
+    n_blocks = draw(st.integers(min_value=1, max_value=12))
+    if draw(st.booleans()):
+        widths = [draw(st.integers(min_value=0, max_value=32))] * n_blocks
+    else:
+        widths = draw(st.lists(st.integers(min_value=0, max_value=32),
+                               min_size=n_blocks, max_size=n_blocks))
+    rng = np.random.default_rng(draw(st.integers(min_value=0, max_value=2**32 - 1)))
+    blocks = []
+    for w in widths:
+        block = rng.integers(0, 1 << w, 128, dtype=np.uint64)
+        if w:
+            block[rng.integers(128)] = (1 << w) - 1  # the block is exactly w bits wide
+        blocks.append(block)
+    return np.concatenate(blocks).astype(np.uint32)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_bitpack_values())
+def test_bitpacker4x_matches_loop_and_round_trips(values):
+    from quiver_spark.format import bitpack
+
+    packed = bitpack.pack(values)
+    assert packed == _oracle_pack(values)
+    np.testing.assert_array_equal(bitpack.unpack(memoryview(packed), len(values)), values)
+    ascending = np.sort(values)
+    for initial in (0, int(ascending[0])):
+        packed = bitpack.pack_sorted(ascending, initial)
+        np.testing.assert_array_equal(
+            bitpack.unpack_sorted(memoryview(packed), len(ascending), initial), ascending
+        )
