@@ -728,12 +728,20 @@ public final class QuiverJvmRead {
       }
       arrow = unionSchema(man, root, files);
     }
+    // without a declared or merged schema every file must carry exactly
+    // the table's columns
+    boolean exact = arrow == null;
     if (arrow == null) arrow = manifestSchema(man);
-    if (arrow == null) {
+    if (arrow != null) {
+      if (exact) guardFileSchemas(man, root, files, toSparkSchema(arrow));
+    } else {
       if (files.isEmpty()) {
         throw new IllegalArgumentException("quiverjvm: no .quiver files under " + root);
       }
       arrow = readFooter(files.get(0)).arrowSchema;
+      // no interned schema vouches for any file: the others are checked
+      // against the first one's footer
+      guardFileSchemas(null, root, files.subList(1, files.size()), toSparkSchema(arrow));
     }
     StructType st = toSparkSchema(arrow);
     PartInfo parts = discoverPartitions(root, files);
@@ -745,6 +753,88 @@ public final class QuiverJvmRead {
       if (!dup) st = st.add(parts.cols[i], partSparkType(parts.kinds[i]), true);
     }
     return st;
+  }
+
+  /** Plan-time half of the file-against-table schema check of a table
+   * without a declared (ALTER) schema, whose reader expects every file to
+   * carry exactly the table's columns. Each file the manifest does not
+   * vouch for (no entry, or a stale size: an out-of-band writer's) has its
+   * footer compared with the table schema; {@code man} is null when no
+   * interned schema vouches for any file and the table schema is the
+   * first file's. A mismatching file makes the table a guard refusal, so
+   * the router reads it with the Python DataSource instead of failing a
+   * scan task. Without a manifest schema the first file's schema is only
+   * a guess, so only a file that the Python DataSource reads without loss
+   * (columns missing or reordered, none added or retyped) is refused; any
+   * other is left to fail the read in openChunk, since the Python
+   * DataSource would drop its extra column (and a compaction or rewrite
+   * that column's values) or fail too. Costs one footer read per
+   * unvouched file, none for a manifest-served table. */
+  static void guardFileSchemas(com.fasterxml.jackson.databind.JsonNode man,
+      String root, List<File> files, StructType table) throws IOException {
+    com.fasterxml.jackson.databind.JsonNode entries = man == null ? null : man.get("files");
+    java.nio.file.Path rootP = new File(root).toPath();
+    for (File f : files) {
+      String rel = rootP.relativize(f.toPath()).toString().replace(File.separatorChar, '/');
+      com.fasterxml.jackson.databind.JsonNode e = entries == null ? null : entries.get(rel);
+      if (e != null && e.path("size").asLong(-1) == f.length()) continue;
+      PLAN_FOOTER_READS.incrementAndGet();
+      List<Field> got = readFooter(f).arrowSchema.getFields();
+      String why = fileSchemaMismatch(got, table);
+      if (why != null && (man != null || columnsWithin(got, table))) {
+        throw new UnsupportedOperationException(
+            "quiverjvm: " + why + " in unvouched file " + rel
+                + " (heterogeneous table): read with the Python 'quiver' DataSource");
+      }
+    }
+  }
+
+  /** How a file's columns differ from the table's data columns (the same
+   * names and Spark types, in order), or null when they match: the one
+   * file-against-table schema comparison, made at plan time by
+   * guardFileSchemas and at task time by openChunk. Nullability is not
+   * compared: the reader decodes each file's pages by the file's own
+   * nullability. */
+  static String fileSchemaMismatch(List<Field> file, StructType table) {
+    StructField[] want = table.fields();
+    if (file.size() != want.length) {
+      return "file schema width " + file.size() + " != table width " + want.length;
+    }
+    for (int i = 0; i < want.length; i++) {
+      String name = file.get(i).getName();
+      if (!name.equals(want[i].name())) {
+        return "file column " + i + " is '" + name + "' but table expects '"
+            + want[i].name() + "'";
+      }
+      DataType t = sparkTypeOrNull(file.get(i));
+      if (t == null || !t.equals(want[i].dataType())) {
+        return "column '" + name + "' is "
+            + (t == null ? file.get(i).getType() : t)
+            + " but the table declares " + want[i].dataType();
+      }
+    }
+    return null;
+  }
+
+  /** sparkType, or null for a leaf shape the reader does not serve. */
+  static DataType sparkTypeOrNull(Field f) {
+    try {
+      return sparkType(f);
+    } catch (UnsupportedOperationException e) {
+      return null;
+    }
+  }
+
+  /** Is each of a file's columns a table column of the same name and
+   * Spark type? */
+  static boolean columnsWithin(List<Field> file, StructType table) {
+    java.util.Map<String, DataType> types = new java.util.HashMap<>();
+    for (StructField f : table.fields()) types.put(f.name(), f.dataType());
+    for (Field f : file) {
+      DataType t = sparkTypeOrNull(f);
+      if (t == null || !t.equals(types.get(f.getName()))) return false;
+    }
+    return true;
   }
 
   /** Manifest's interned schema table decoded (index-aligned; null slots
@@ -1206,10 +1296,11 @@ public final class QuiverJvmRead {
     /** declared → physical column rename map, or null for identity */
     final java.util.HashMap<String, String> cmap;
     /** non-null when the table has NO declared (ALTER) schema: the exact
-     * data-column names every file must carry, in order — a mismatching
-     * file (foreign drop-in, merge-schemas dir) rejects loudly instead of
-     * being silently name-resolved against the wrong table schema */
-    final String[] expectCols;
+     * data columns (names and Spark types, in order) every file must
+     * carry — a mismatching file (foreign drop-in, merge-schemas dir)
+     * rejects loudly instead of being silently name-resolved against the
+     * wrong table schema */
+    final StructType expectSchema;
     /** declared column initial-defaults (raw manifest JSON scalars, typed
      * at read time); null/empty when none were ever declared */
     final java.util.HashMap<String, Object> defaults;
@@ -1221,15 +1312,15 @@ public final class QuiverJvmRead {
 
     Chunk(String file, String rel, int pageStart, int pageEnd,
         java.util.HashMap<String, Object> partVals,
-        java.util.HashMap<String, String> cmap, String[] expectCols,
+        java.util.HashMap<String, String> cmap, StructType expectSchema,
         java.util.HashMap<String, Object> defaults) {
-      this(file, rel, pageStart, pageEnd, partVals, cmap, expectCols,
+      this(file, rel, pageStart, pageEnd, partVals, cmap, expectSchema,
           defaults, true);
     }
 
     Chunk(String file, String rel, int pageStart, int pageEnd,
         java.util.HashMap<String, Object> partVals,
-        java.util.HashMap<String, String> cmap, String[] expectCols,
+        java.util.HashMap<String, String> cmap, StructType expectSchema,
         java.util.HashMap<String, Object> defaults, boolean verifyCrc) {
       this.file = file;
       this.rel = rel;
@@ -1237,7 +1328,7 @@ public final class QuiverJvmRead {
       this.pageEnd = pageEnd;
       this.partVals = partVals;
       this.cmap = cmap;
-      this.expectCols = expectCols;
+      this.expectSchema = expectSchema;
       this.defaults = defaults;
       this.verifyCrc = verifyCrc;
     }
@@ -2278,13 +2369,12 @@ public final class QuiverJvmRead {
         // per-file name resolution: files carry subsets of the union
         // schema, absent columns null-fill, and openChunk's per-column
         // type check still rejects any same-name type conflict.
-        String[] expectCols = null;
+        StructType expectSchema = null;
         if (!opts.mergeSchemas && (man == null || !man.has("table_schema"))) {
-          List<String> all = new ArrayList<>();
+          expectSchema = new StructType();
           for (StructField f : fullSchema.fields()) {
-            if (!partIdx.containsKey(f.name())) all.add(f.name());
+            if (!partIdx.containsKey(f.name())) expectSchema = expectSchema.add(f);
           }
-          expectCols = all.toArray(new String[0]);
         }
 
         // decoded manifest schema name lists (schema idx → field names),
@@ -2520,7 +2610,7 @@ public final class QuiverJvmRead {
           for (int p = 0; p < pb.length; p++) {
             if (keep != null && !keep[p]) {
               if (runStart >= 0) {
-                open.add(new Chunk(fp, rl, runStart, p, pv, cm, expectCols, tblDefaults,
+                open.add(new Chunk(fp, rl, runStart, p, pv, cm, expectSchema, tblDefaults,
                     opts.verifyChecksums));
                 runStart = -1;
               }
@@ -2535,7 +2625,7 @@ public final class QuiverJvmRead {
                 if (plannedRows >= planLimit) {
                   // enough leading pages planned to cover the limit —
                   // stop here; Spark's own limit trims above the scan
-                  open.add(new Chunk(fp, rl, runStart, p + 1, pv, cm, expectCols, tblDefaults,
+                  open.add(new Chunk(fp, rl, runStart, p + 1, pv, cm, expectSchema, tblDefaults,
                     opts.verifyChecksums));
                   parts.add(new QuiverInputPartition(open.toArray(new Chunk[0])));
                   return parts.toArray(new InputPartition[0]);
@@ -2543,7 +2633,7 @@ public final class QuiverJvmRead {
               }
             }
             if (acc >= floor) {
-              open.add(new Chunk(fp, rl, runStart, p + 1, pv, cm, expectCols, tblDefaults,
+              open.add(new Chunk(fp, rl, runStart, p + 1, pv, cm, expectSchema, tblDefaults,
                     opts.verifyChecksums));
               parts.add(new QuiverInputPartition(open.toArray(new Chunk[0])));
               open = new ArrayList<>();
@@ -2552,10 +2642,10 @@ public final class QuiverJvmRead {
             }
           }
           if (runStart >= 0) {
-            open.add(new Chunk(fp, rl, runStart, pb.length, pv, cm, expectCols, tblDefaults,
+            open.add(new Chunk(fp, rl, runStart, pb.length, pv, cm, expectSchema, tblDefaults,
                     opts.verifyChecksums));
           } else if (pb.length == 0) {
-            open.add(new Chunk(fp, rl, 0, 0, pv, cm, expectCols, tblDefaults,
+            open.add(new Chunk(fp, rl, 0, 0, pv, cm, expectSchema, tblDefaults,
                     opts.verifyChecksums));
           }
         }
@@ -2819,21 +2909,11 @@ public final class QuiverJvmRead {
       // plan-time constants. A physical type mismatch is an error — never
       // a silent misread.
       List<Field> fields = footer.arrowSchema.getFields();
-      if (c.expectCols != null) {
-        if (fields.size() != c.expectCols.length) {
-          throw new IOException(
-              "quiverjvm: file schema width " + fields.size() + " != table width "
-                  + c.expectCols.length + " in " + c.file
-                  + " (heterogeneous table: use the Python 'quiver' DataSource)");
-        }
-        for (int i = 0; i < fields.size(); i++) {
-          if (!fields.get(i).getName().equals(c.expectCols[i])) {
-            throw new IOException(
-                "quiverjvm: file column " + i + " is '" + fields.get(i).getName()
-                    + "' but table expects '" + c.expectCols[i] + "' in " + c.file
-                    + " (heterogeneous table: use the Python 'quiver' DataSource)");
-          }
-        }
+      String why = c.expectSchema == null ? null : fileSchemaMismatch(fields, c.expectSchema);
+      if (why != null) {
+        throw new IOException(
+            "quiverjvm: " + why + " in " + c.file
+                + " (heterogeneous table)");
       }
       leafRanges = QuiverNested.leafRanges(footer.arrowSchema);
       rowLeaf = -1;

@@ -321,13 +321,12 @@ final class QuiverJvmStream
           }
         }
       }
-      String[] expectCols = null;
+      StructType expectSchema = null;
       if (man == null || !man.has("table_schema")) {
-        List<String> all = new ArrayList<>();
+        expectSchema = new StructType();
         for (StructField f : fullSchema.fields()) {
-          if (!partCols.contains(f.name())) all.add(f.name());
+          if (!partCols.contains(f.name())) expectSchema = expectSchema.add(f);
         }
-        expectCols = all.toArray(new String[0]);
       }
 
       java.nio.file.Path rootP = new File(root).toPath();
@@ -368,7 +367,7 @@ final class QuiverJvmStream
         }
         chunks.add(new QuiverJvmRead.Chunk(
             f.getPath(), dataRel == null ? rel : dataRel, 0, -1,
-            partVals, cmap, expectCols, tblDefaults, verifyChecksums));
+            partVals, cmap, expectSchema, tblDefaults, verifyChecksums));
         sizes.add(f.length());
         totalBytes += f.length();
       }

@@ -108,14 +108,13 @@ def compact(
     by the cluster. Partitioned sources repartition on the partition
     columns so each output task writes into few subdirectories.
     """
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import scan
     from quiver_spark.sources.quiver_datasource import _discover_partitions
 
     if dst_dir is None:
         dst_dir = src_dir
     if os.path.realpath(dst_dir) != os.path.realpath(src_dir):
         _check_disjoint(src_dir, dst_dir)
-    register_format(spark)
     n_files, rows = _dir_stats(src_dir)
     if partition_by is None:
         part_cols = [c for c, _k in _discover_partitions(src_dir)[0]]
@@ -123,7 +122,7 @@ def compact(
         part_cols = list(partition_by)
     n_out = max(1, math.ceil(rows / max(target_rows_per_file, 1)))
 
-    df = spark.read.format("quiver").load(src_dir)
+    df = scan(spark, src_dir)
     missing = [c for c in part_cols if c not in df.columns]
     if missing:
         raise ValueError(
@@ -251,19 +250,20 @@ def cluster_by(
     separates. On a hash-partitioned table every file's min/max spans the
     whole domain and a point/range predicate touches every file; after
     clustering the same predicate touches O(selectivity) files. That
-    drives BOTH scan pruning (``page_prune``) and the row-level DML ops
-    (:func:`delete_where` & co rewrite only candidate files — measured
-    in BASELINE.md round 9: the same DELETE rewrites 256 files before
-    clustering, ~2 after). The rewrite itself is one Spark job — a
-    range shuffle sized to the output layout, `repartitionByRange` +
-    `sortWithinPartitions`, Spark's own global-sort posture.
+    drives BOTH scan pruning (zone maps checked against pushed filters)
+    and the row-level DML ops (:func:`delete_where` & co rewrite only
+    candidate files — measured in BASELINE.md round 9: the same DELETE
+    rewrites 256 files before clustering, ~2 after). The rewrite itself
+    is one Spark job — a range shuffle sized to the output layout,
+    `repartitionByRange` + `sortWithinPartitions`, Spark's own
+    global-sort posture.
 
     Reference precedent: the reference's own test corpus writes sorted
     columns to exercise DeltaBitpacking (`tests/it/io.rs` sorted cases) —
     clustering is what makes sorted encodings and stats pruning reachable
     for real tables; the format itself has no table layer (src/lib.rs).
     """
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import scan
     from quiver_spark.sources.quiver_datasource import _discover_partitions
 
     if not columns:
@@ -272,12 +272,11 @@ def cluster_by(
         dst_dir = src_dir
     if os.path.realpath(dst_dir) != os.path.realpath(src_dir):
         _check_disjoint(src_dir, dst_dir)
-    register_format(spark)
     n_files, rows = _dir_stats(src_dir)
     part_cols = [c for c, _k in _discover_partitions(src_dir)[0]]
     n_out = max(1, math.ceil(rows / max(target_rows_per_file, 1)))
 
-    df = spark.read.format("quiver").load(src_dir)
+    df = scan(spark, src_dir)
     missing = [c for c in columns if c not in df.columns]
     if missing:
         raise ValueError(f"cluster columns not in schema: {missing}")
@@ -826,6 +825,18 @@ def rename_column(table: str, old: str, new: str) -> dict:
     return _commit_evolution(table, mutate)
 
 
+def _read(spark, table: str, format: str, **options):  # noqa: A002
+    """A read of ``table`` in ``format``: quiver tables go through
+    ``sources.scan`` (the quiverjvm reader whenever its guards accept the
+    table), other formats (``arrowipc``) through their own DataSource."""
+    from quiver_spark.sources import register, scan
+
+    if format == "quiver":
+        return scan(spark, table, **options)
+    register(spark)
+    return spark.read.format(format).options(**options).load(table)
+
+
 def snapshot_diff(
     spark,
     table: str,
@@ -856,18 +867,9 @@ def snapshot_diff(
     files) and never diffs rows."""
     from pyspark.sql import functions as F
 
-    from quiver_spark.sources import register as register_format
-
-    register_format(spark)
-    old = (
-        spark.read.format(format)
-        .option("version", str(from_version))
-        .load(table)
-    )
-    new_reader = spark.read.format(format)
-    if to_version is not None:
-        new_reader = new_reader.option("version", str(to_version))
-    new = new_reader.load(table)
+    old = _read(spark, table, format, version=str(from_version))
+    pin = {} if to_version is None else {"version": str(to_version)}
+    new = _read(spark, table, format, **pin)
     common = [c for c in new.columns if c in set(old.columns)]
     if not common:
         raise ValueError(
@@ -937,7 +939,6 @@ def analyze_table(
     metadata (src/lib.rs); this is the Delta ANALYZE analogue."""
     from pyspark.sql import functions as F
 
-    from quiver_spark.sources import register as register_format
     from quiver_spark.sources.manifest import (
         load_manifest,
         metadata_commit,
@@ -946,8 +947,7 @@ def analyze_table(
     from quiver_spark.sources.pointer_store import get_pointer_store
     from quiver_spark.sources.quiver_datasource import _data_root
 
-    register_format(spark)
-    df = spark.read.format(format).load(table)
+    df = _read(spark, table, format)
     cols = list(columns) if columns is not None else list(df.columns)
     missing = [c for c in cols if c not in df.columns]
     if missing:
@@ -1028,10 +1028,7 @@ def add_constraint(
     import duckdb
     import pyarrow as pa
 
-    from quiver_spark.sources import register as register_format
-
-    register_format(spark)
-    df = spark.read.format(format).load(table)
+    df = _read(spark, table, format)
     # Catalyst bind + SQL CHECK semantics: violations are rows where the
     # predicate IS FALSE (NULL passes)
     try:
@@ -1405,10 +1402,8 @@ def table_changes(
     their previous state); carried (hard-linked) files never reappear.
     Files the manifest cannot vouch for are conservatively included
     (at-least-once, never silent loss)."""
-    return (
-        spark.read.format(format)
-        .options(changes_since=str(int(since_commit)), **options)
-        .load(table)
+    return _read(
+        spark, table, format, changes_since=str(int(since_commit)), **options
     )
 
 
@@ -1570,54 +1565,28 @@ def _snapshot(table: str) -> tuple[str, str, list[str]]:
     return gen, root, [os.path.relpath(f, root) for f in _list_files(root)]
 
 
-def _predicate_columns(names: list[str], *exprs: str) -> list[str]:
-    """Table columns referenced (as whole words, case-insensitive) by the
-    given SQL expressions — the projection for the touched-file detection
-    scan. Overmatching costs extra decode; undermatching fails LOUDLY at
-    analysis (callers retry full-width), never silently."""
-    cols = []
-    for n in names:
-        pat = re.compile(rf"(?<![\w`]){re.escape(n)}(?![\w`])", re.IGNORECASE)
-        if any(pat.search(e) for e in exprs):
-            cols.append(n)
-    return cols
-
-
 def _touched_files(spark, table: str, predicate: str) -> list[str]:
-    """Relative names of every file that MAY hold a row matching
-    ``predicate`` — one pruned scan: zone-map page pruning + Hive
-    partition pruning drop non-candidate files at plan time, the scan
-    decodes only the predicate's columns, and the collected result is at
-    most one row per file (never row data). At 100 TB with a selective
-    predicate this reads candidate pages only."""
+    """Relative names of every file holding a row that matches
+    ``predicate`` — one scan with the file column: pages and Hive
+    partitions are pruned on the pushed predicate, Catalyst prunes the
+    JVM reader's decode to the predicate's columns, and the collected
+    result is at most one row per file (never row data). A table only
+    the Python DS can read gives the same answer, decoding every column
+    of the unpruned pages."""
     from pyspark.sql import functions as F
-    from pyspark.errors import AnalysisException
 
-    def scan(cols: list[str] | None):
-        r = (
-            spark.read.format("quiver")
-            .option("file_column", _FILE_COL)
-            .option("page_prune", "true")
-            .option("partition_prune", "true")
-        )
-        if cols is not None:
-            r = r.option("columns", ",".join(cols + [_FILE_COL]))
-        df = r.load(table)
-        return (
-            df.filter(F.expr(predicate))
-            .select(_FILE_COL)
-            .distinct()
-            .collect()
-        )
+    from quiver_spark.sources import scan
 
-    probe = spark.read.format("quiver").load(table)
-    cols = _predicate_columns(probe.columns, predicate)
-    try:
-        rows = scan(cols)
-    except AnalysisException:
-        # predicate references something the word-heuristic missed
-        # (aliased/quoted oddly): retry with every column projected
-        rows = scan(None)
+    rows = (
+        scan(
+            spark, table, file_column=_FILE_COL,
+            page_prune="true", partition_prune="true",
+        )
+        .filter(F.expr(predicate))
+        .select(_FILE_COL)
+        .distinct()
+        .collect()
+    )
     return sorted(r[0] for r in rows)
 
 
@@ -1698,9 +1667,8 @@ def delete_where(spark, table: str, predicate: str, **options: str) -> dict:
     """
     from pyspark.sql import functions as F
 
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import scan
 
-    register_format(spark)
     gen, root, all_files = _snapshot(table)
     touched = _touched_files(spark, table, predicate)
     if not touched:
@@ -1713,11 +1681,7 @@ def delete_where(spark, table: str, predicate: str, **options: str) -> dict:
         }
     tset = set(touched)
     untouched = [f for f in all_files if f not in tset]
-    src = (
-        spark.read.format("quiver")
-        .option("files", json.dumps(touched))
-        .load(table)
-    )
+    src = scan(spark, table, files=json.dumps(touched))
     fast = _partition_only_predicate(spark, root, predicate)
     if fast:
         # Partition-drop fast path: the predicate binds against the
@@ -1754,9 +1718,8 @@ def update_where(
     declared type, so a rewrite can never drift the table schema."""
     from pyspark.sql import functions as F
 
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import scan
 
-    register_format(spark)
     gen, root, all_files = _snapshot(table)
     touched = _touched_files(spark, table, predicate)
     if not touched:
@@ -1769,11 +1732,7 @@ def update_where(
         }
     tset = set(touched)
     untouched = [f for f in all_files if f not in tset]
-    src = (
-        spark.read.format("quiver")
-        .option("files", json.dumps(touched))
-        .load(table)
-    )
+    src = scan(spark, table, files=json.dumps(touched))
     unknown = sorted(set(assignments) - set(src.columns))
     if unknown:
         raise ValueError(f"UPDATE assigns to unknown columns: {unknown}")
@@ -1830,11 +1789,10 @@ def merge_upsert(
     a no-op (anti-join semantics), matching SQL MERGE."""
     from pyspark.sql import functions as F
 
-    from quiver_spark.sources import register as register_format
+    from quiver_spark.sources import scan
 
-    register_format(spark)
     gen, root, all_files = _snapshot(table)
-    tgt = spark.read.format("quiver").load(table)
+    tgt = scan(spark, table)
     missing = [c for c in on if c not in tgt.columns]
     if missing:
         raise ValueError(f"merge keys not in target schema: {missing}")
@@ -1887,11 +1845,8 @@ def merge_upsert(
     # anti-join: a deleted key's rows are dropped from the rewrite and
     # simply not re-inserted
     keys = source.select(*on).distinct()
-    det = (
-        spark.read.format("quiver")
-        .option("file_column", _FILE_COL)
-        .option("columns", ",".join(list(on) + [_FILE_COL]))
-        .load(table)
+    det = scan(
+        spark, table, file_column=_FILE_COL, columns=",".join([*on, _FILE_COL])
     )
     touched = sorted(
         r[0]
@@ -1909,11 +1864,8 @@ def merge_upsert(
         ]
     )
     if touched:
-        kept = (
-            spark.read.format("quiver")
-            .option("files", json.dumps(touched))
-            .load(table)
-            .join(keys, on=on, how="left_anti")
+        kept = scan(spark, table, files=json.dumps(touched)).join(
+            keys, on=on, how="left_anti"
         )
         out = kept.unionByName(aligned)
     else:

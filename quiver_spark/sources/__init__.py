@@ -30,8 +30,14 @@ JVM_SEMANTIC_OPTS = frozenset(
 #: entry point ``limit=N`` means exactly-min(N, rows) on both engines
 #: (the Python fallback gets an outer ``.limit`` too); the raw
 #: ``.option("limit")`` on the Python DS keeps its documented
-#: page-granular short-circuit semantics.
-JVM_TRANSLATED_OPTS = frozenset({"columns", "limit", "file_column"})
+#: page-granular short-circuit semantics. ``page_prune=`` and
+#: ``partition_prune=`` translate to nothing: the JVM reader always prunes
+#: pages and Hive partitions on the pushed filters, and the Python
+#: fallback gets them as they are (its plan-cache caveat is the caller's,
+#: as with the raw options).
+JVM_TRANSLATED_OPTS = frozenset(
+    {"columns", "limit", "file_column", "page_prune", "partition_prune"}
+)
 
 
 def scan(spark, path: str, **options):
@@ -48,12 +54,14 @@ def scan(spark, path: str, **options):
       the Python DS's ~1.4-2x planner-floor proxies) — and (round 14)
       the translated options ``columns=`` / ``limit=`` /
       ``file_column=``, which become Catalyst ``select`` / ``limit`` /
-      a select of the ``_quiver_file`` metadata column.
+      a select of the ``_quiver_file`` metadata column, and the pruning
+      switches ``page_prune=`` / ``partition_prune=``, which it ignores
+      (it always prunes on the pushed filters).
     - **python "quiver" DS** fallback: everything semantic the JVM reader
       refuses — exotic leaf shapes (half floats, decimal256), unfillable
       defaults — plus any reader option outside
       JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS (explicit split knobs,
-      page_prune, …), which only the Python DS implements, and tables
+      …), which only the Python DS implements, and tables
       whose DATA carries a ``_quiver_file`` column when file identity is
       requested.
 

@@ -269,6 +269,35 @@ def test_rewrite_race_fails_loudly(spark, tmp_path, monkeypatch):
     )
 
 
+@pytest.mark.parametrize("op", ["update", "merge"])
+def test_update_and_merge_race_fail_loudly(spark, tmp_path, monkeypatch, op):
+    """UPDATE and MERGE keep the DELETE race contract: a rival overwrite
+    landing right before the rewrite commits fails the rewrite with
+    ConcurrentWriteError, and the rival's snapshot stays intact and
+    unmixed."""
+    tbl = str(tmp_path / "t")
+    _write(spark, _base_df(spark, 100), tbl)
+
+    real = maintenance._rewrite_commit
+
+    def rival_first(sp, table, *args, **kwargs):
+        _write(sp, _base_df(sp, 20), table)
+        return real(sp, table, *args, **kwargs)
+
+    monkeypatch.setattr(maintenance, "_rewrite_commit", rival_first)
+    with pytest.raises(Exception, match="ConcurrentWriteError|concurrent"):
+        if op == "update":
+            maintenance.update_where(spark, tbl, {"tag": "'x'"}, "id < 10")
+        else:
+            source = spark.createDataFrame(
+                [(5, 0, "m"), (500, 0, "n")], "id long, grp long, tag string"
+            )
+            maintenance.merge_upsert(spark, tbl, source, on=["id"])
+    assert _rows(spark, tbl) == sorted(
+        (i, i % 7, f"row-{i}") for i in range(20)
+    )
+
+
 def test_file_column_and_files_subset(spark, tmp_path):
     tbl = str(tmp_path / "t")
     _write_ranged(spark, tbl, 300, 100)
@@ -421,3 +450,113 @@ def test_merge_with_delete_predicate_applies_cdc_feed(spark, tmp_path):
     assert len(rows) == 10  # 10 base - 1 deleted + 1 inserted
     for i in (0, 1, 2, 4, 6, 7, 8, 9):
         assert rows[i] == (i % 7, f"row-{i}")
+
+
+def _spy_reader_formats(monkeypatch) -> list[str]:
+    """Record every format name handed to DataFrameReader.format."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    seen: list[str] = []
+    real = DataFrameReader.format
+
+    def spy(self, source):
+        seen.append(source)
+        return real(self, source)
+
+    monkeypatch.setattr(DataFrameReader, "format", spy)
+    return seen
+
+
+def test_maintenance_reads_route_through_jvm_reader(
+    spark, tmp_path, monkeypatch
+):
+    """On a table the JVM reader accepts, compaction, clustering and every
+    row-level op read through quiverjvm — never through the Python
+    "quiver" DataSource (the Python sink still writes)."""
+    from quiver_spark.jvm import attach_jar
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar cannot attach")
+    schema = "id long, grp long, tag string"
+    tbl = str(tmp_path / "t")
+    # nullable columns throughout, like the merge source's: the JVM guard
+    # refuses a table whose files disagree on a column's nullability
+    for k in range(3):
+        rows = [(i, i % 7, f"row-{i}") for i in range(100 * k, 100 * k + 100)]
+        spark.createDataFrame(rows, schema).coalesce(1).write.format(
+            "quiver"
+        ).mode("append" if k else "overwrite").save(tbl)
+    source = spark.createDataFrame([(50, 1, "m"), (400, 2, "n")], schema)
+    seen = _spy_reader_formats(monkeypatch)
+    maintenance.delete_where(spark, tbl, "id < 10")
+    maintenance.update_where(spark, tbl, {"tag": "'u'"}, "id >= 290")
+    maintenance.merge_upsert(spark, tbl, source, on=["id"])
+    maintenance.compact(spark, tbl)
+    maintenance.cluster_by(spark, tbl, ["id"])
+    monkeypatch.undo()
+    assert "quiverjvm" in seen and "quiver" not in seen, seen
+    want = {i: (i % 7, f"row-{i}") for i in range(10, 300)}
+    want.update({i: (i % 7, "u") for i in range(290, 300)})
+    want.update({50: (1, "m"), 400: (2, "n")})
+    assert _rows(spark, tbl) == sorted((k, *v) for k, v in want.items())
+
+
+def test_shadowed_file_column_falls_back_to_python_reader(
+    spark, tmp_path, monkeypatch
+):
+    """A data column named ``_quiver_file`` shadows the JVM reader's file
+    metadata column, so touched-file detection reads through the Python
+    DataSource. DELETE, UPDATE, MERGE and in-place compaction still give
+    exactly the rows a pyarrow model of the same operations gives."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = 300
+    tbl = str(tmp_path / "t")
+    _write(
+        spark,
+        spark.range(n)
+        .selectExpr("id", "concat('f', id % 3) AS _quiver_file", "id * 2 AS v")
+        .repartition(3),
+        tbl,
+    )
+    model = pa.table(
+        {
+            "id": pa.array(range(n), pa.int64()),
+            "_quiver_file": [f"f{i % 3}" for i in range(n)],
+            "v": pa.array([i * 2 for i in range(n)], pa.int64()),
+        }
+    )
+    seen = _spy_reader_formats(monkeypatch)
+
+    maintenance.delete_where(spark, tbl, "id < 30")
+    model = model.filter(pc.greater_equal(model["id"], 30))
+
+    maintenance.update_where(spark, tbl, {"v": "v + 1000"}, "_quiver_file = 'f1'")
+    model = model.set_column(
+        2,
+        "v",
+        pc.if_else(
+            pc.equal(model["_quiver_file"], "f1"),
+            pc.add(model["v"], 1000),
+            model["v"],
+        ),
+    )
+
+    rows = [(50, "g", -1), (500, "h", 7)]
+    source = spark.createDataFrame(rows, "id long, _quiver_file string, v long")
+    maintenance.merge_upsert(spark, tbl, source, on=["id"])
+    model = pa.concat_tables(
+        [
+            model.filter(pc.invert(pc.is_in(model["id"], pa.array([50, 500])))),
+            pa.Table.from_pylist(
+                [dict(zip(model.column_names, r)) for r in rows], model.schema
+            ),
+        ]
+    )
+
+    maintenance.compact(spark, tbl)
+    monkeypatch.undo()
+    assert "quiver" in seen, seen
+    want = sorted(tuple(r.values()) for r in model.to_pylist())
+    assert _rows(spark, tbl) == want

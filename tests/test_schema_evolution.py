@@ -79,6 +79,65 @@ def test_file_missing_table_column_null_fills(spark, tmp_path):
     assert rows == [(1, "a"), (2, "b"), (3, None)]
 
 
+def test_maintenance_reads_dir_whose_later_file_lacks_a_column(
+    spark, tmp_path
+):
+    """A manifest-less directory whose later file lacks a column of the
+    first's is a JVM guard refusal, so compaction and row-level DML read
+    it through the Python DataSource, which null-fills the column. No
+    fault warning fires and no row or value is lost. (The DML touches the
+    later file only: a rewritten file sorts after b.quiver, and the
+    Python DataSource takes the first file's schema as the table's.)"""
+    import warnings
+
+    from quiver_spark import maintenance
+    from quiver_spark.sources import scan
+
+    register(spark)
+    a = pa.table(
+        {"k": pa.array([1, 2, 3], pa.int64()), "s": pa.array(["a", "b", "c"])}
+    )
+    b = pa.table({"k": pa.array([4, 5], pa.int64())})
+    d = _dir(tmp_path, "lacks", [("a.quiver", a), ("b.quiver", b)])
+    want = [(1, "a"), (2, "b"), (3, "c"), (4, None), (5, None)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert sorted(map(tuple, scan(spark, d).collect())) == want
+        maintenance.delete_where(spark, d, "k = 4")
+        maintenance.update_where(spark, d, {"s": "'u'"}, "k = 5")
+        maintenance.compact(spark, d)
+        got = sorted(map(tuple, scan(spark, d).collect()))
+    assert got == [(1, "a"), (2, "b"), (3, "c"), (5, "u")]
+
+
+def test_maintenance_on_dir_whose_later_file_adds_a_column_fails(
+    spark, evolved_dir
+):
+    """A later file carrying a column the first lacks fails compaction and
+    row-level DML loudly, as it fails sources.scan: the Python DataSource
+    would read the first file's schema, and the rewrite would drop the
+    extra column's values. The directory is left as it was."""
+    from quiver_spark import maintenance
+
+    register(spark)
+
+    def snapshot():
+        out = {}
+        for base, _dirs, names in os.walk(evolved_dir):
+            for n in names:
+                path = os.path.join(base, n)
+                with open(path, "rb") as fh:
+                    out[os.path.relpath(path, evolved_dir)] = fh.read()
+        return out
+
+    before = snapshot()
+    with pytest.raises(Exception, match="heterogeneous"):
+        maintenance.compact(spark, evolved_dir)
+    with pytest.raises(Exception, match="heterogeneous"):
+        maintenance.delete_where(spark, evolved_dir, "k = 4")
+    assert snapshot() == before
+
+
 def test_type_conflict_fails_loudly(spark, tmp_path):
     register(spark)
     a = pa.table({"k": pa.array([1], pa.int64())})
