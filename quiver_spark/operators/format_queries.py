@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from quiver_spark.functions import dec, dsum, revenue, sql_dsum, SQL_REVENUE
 from quiver_spark.registry import register
 from quiver_spark.sources import register as register_format
+from quiver_spark.sources import scan
 from quiver_spark.tables import maybe_broadcast
 
 
@@ -103,24 +104,18 @@ def quiver_dir(
 
 
 # Loaded-relation cache: one logical relation per (app, quiver dir,
-# options), the catalog pattern — a production deployment registers each
-# table once in a metastore and every query references the same relation.
-# Re-calling spark.read.format("quiver").load() per query pays a ~0.25 s
-# Python-worker round trip (datasource instantiation + schema()) that a
+# engine, options), the catalog pattern — a production deployment
+# registers each table once in a metastore and every query references the
+# same relation. Re-loading per query pays a ~0.25 s Python-worker round
+# trip on the Python DS (datasource instantiation + schema()) that a
 # registered table never pays; on a 600k-row full scan that tax alone is
 # >1× the parquet control. ONLY stateless relations are cached: with
 # pruning off, planned partitions depend exclusively on static options and
 # Spark re-applies every filter row-level above the scan, so sharing one
 # relation across arbitrarily-filtered queries is safe. page_prune /
-# partition_prune relations carry per-query pushed-filter state and must
-# stay fresh per call.
+# partition_prune relations carry per-query pushed-filter state on the
+# Python DS and must stay fresh per call.
 _DF_CACHE: dict[tuple, DataFrame] = {}
-
-
-#: quiver_relation options that are pure Python-DS performance hints —
-#: the JVM engine needs neither (Catalyst prunes columns, planning is
-#: JVM-side), so a call using ONLY these may route to the fast engine.
-_PERF_HINT_OPTS = frozenset({"planning_parallelism", "columns", "limit"})
 
 
 def quiver_relation(
@@ -128,23 +123,22 @@ def quiver_relation(
 ) -> DataFrame:
     """Cached pruning-off quiver relation for a directory + static options.
 
-    ``engine="auto"`` (round 12, VERDICT r11 item 5) routes through the
-    unified entry's REAL-guard probe: calls whose options are pure
-    Python-DS performance hints ride the quiverjvm columnar reader when
-    the table is eligible (``columns`` becomes a plain ``.select`` —
-    Catalyst pushes the pruning down), everything else — and
-    ``engine="python"``, which the bench's engine-labelled proxies use —
-    keeps the Python DataSource.
+    ``engine="auto"`` is ``sources.scan``: the quiverjvm columnar reader
+    when its guards accept the table, else the Python DataSource.
+    ``engine="python"``, which the bench's engine-labelled proxies use,
+    always reads through the Python DataSource: it passes the session's
+    ``defaultParallelism`` as ``planning_parallelism``, an option only the
+    Python DS implements, so ``sources.scan`` takes its fallback.
 
-    Split planning's dynamic floor divides by ``planning_parallelism``;
-    the planner runs in a separate Python process that only sees the
-    planner HOST's cpu count, so pass the session's true
-    ``defaultParallelism`` (on a cluster: total executor cores) — the
-    value that actually bounds concurrent tasks."""
-    options.setdefault(
-        "planning_parallelism", str(spark.sparkContext.defaultParallelism)
-    )
-    assert "page_prune" not in options and "partition_prune" not in options
+    ``page_prune`` / ``partition_prune`` are refused: a cached pruning
+    relation on the Python DS would replay a stale plan (the SHARP EDGE in
+    ``sources/quiver_datasource.py``)."""
+    if "page_prune" in options or "partition_prune" in options:
+        raise ValueError(
+            "quiver_relation caches its relation, so it cannot take "
+            "page_prune/partition_prune; use sources.scan for a fresh "
+            "pruning relation"
+        )
     key = (
         spark.sparkContext.applicationId,
         d,
@@ -153,40 +147,14 @@ def quiver_relation(
     )
     df = _DF_CACHE.get(key)
     if df is None:
-        from quiver_spark.sources import JVM_SEMANTIC_OPTS
-
-        if engine == "auto" and set(options) <= (
-            _PERF_HINT_OPTS | JVM_SEMANTIC_OPTS
-        ):
-            from quiver_spark.sources import try_jvm_scan
-
-            # semantic options (version / changes_since / files /
-            # merge_schemas) ride the JVM engine since round 13 — they are
-            # driver-side-resolvable, so time travel & CDC scans no longer
-            # pay the Python DS's many-small-files floor; perf hints
-            # translate (columns → .select, Catalyst pushes the pruning)
-            sem = {
-                k: v for k, v in options.items() if k in JVM_SEMANTIC_OPTS
+        if engine == "python":
+            options = {
+                "planning_parallelism": str(
+                    spark.sparkContext.defaultParallelism
+                ),
+                **options,
             }
-            df = try_jvm_scan(spark, d, **sem)
-            if df is not None:
-                # columns → .select (Catalyst prunes), limit → .limit
-                # (DSv2 pushLimit) — round 14, VERDICT r13 Next #2
-                from quiver_spark.sources import _apply_translated
-
-                df = _apply_translated(df, options)
-        if df is None:
-            r = spark.read.format("quiver")
-            for k, v in options.items():
-                r = r.option(k, v)
-            df = r.load(d)
-            if "limit" in options:
-                # mirror sources.scan (ADVICE r14): the DS option
-                # short-circuits planning/decode at page granularity; the
-                # outer .limit makes THIS entry's contract exact-N on both
-                # engines (raw .option("limit") on the Python DS keeps the
-                # documented page-granular semantics)
-                df = df.limit(int(options["limit"]))
+        df = scan(spark, d, **options)
         _DF_CACHE[key] = df
     return df
 
@@ -206,47 +174,30 @@ def quiver_table(
     ``sort_by`` clusters rows on a column before writing so the per-page
     min/max sidecar (format/stats.py) gives disjoint page ranges — the
     scale-out pattern for zone-map pruning: sort on the hot predicate column
-    at ingest, and selective scans touch only matching pages.
+    at ingest, and selective scans touch only matching pages. Such a table
+    is read through a fresh ``sources.scan(..., page_prune="true")`` per
+    call (the JVM reader prunes on every pushed filter anyway; the Python
+    DS fallback must not reuse a pruned plan), so ``engine`` applies only to
+    the cached unsorted relation.
 
-    ``columns`` is the projection: pass the statically-known column list and
-    executors open + decode ONLY those leaves (the reference's per-column
-    independence — ColumnMeta.offset, /root/reference/src/lib.rs:40-43;
+    ``columns`` is the projection: pass the statically-known column list so
+    the scan opens + decodes ONLY those leaves (the reference's per-column
+    independence — ColumnMeta.offset, src/lib.rs:40-43 of the reference;
     callers open only selected fields, examples/strawboat_read.rs:60-78).
-    It must be EXPLICIT because Spark 4.1.2's PythonScanBuilder implements
-    only SupportsPushDownFilters — verified by javap of
-    spark-sql_2.13-4.1.2.jar — so Catalyst's column pruning can never reach
-    a Python datasource; without this option a 1-of-16-column query decodes
-    the full row width (measured 4.0x vs parquet at sf0.1; with the option
-    the narrow scan is at parity). Include every column the query filters
-    on, not just the ones it returns."""
+    The JVM reader gets it as a Catalyst ``select``; the Python DS needs it
+    EXPLICIT because Spark 4.1.2's PythonScanBuilder implements only
+    SupportsPushDownFilters — verified by javap of spark-sql_2.13-4.1.2.jar
+    — so Catalyst's column pruning can never reach a Python datasource;
+    without this option a 1-of-16-column query decodes the full row width
+    (measured 4.0x vs parquet at sf0.1; with the option the narrow scan is
+    at parity). Include every column the query filters on, not just the
+    ones it returns."""
     d = quiver_dir(spark, sf_dir, name, codec, sort_by)
     opts: dict[str, str] = {}
     if columns is not None:
         opts["columns"] = ",".join(columns)
     if sort_by is not None:
-        # pruning path. The JVM engine prunes pages from the
-        # manifest-inlined zone maps on every pushed filter (per-query
-        # ScanBuilder state — no plan-cache hazard), so eligible tables
-        # ride it directly (round 12).
-        if engine == "auto":
-            from quiver_spark.sources import try_jvm_scan
-
-            df = try_jvm_scan(spark, d)
-            if df is not None:
-                return df.select(*columns) if columns is not None else df
-        # Python-DS page_prune readers carry per-query pushed-filter
-        # state, so they must be a fresh relation per call — Spark's plan
-        # cache could otherwise replay this load's pruned partitions for a
-        # differently-filtered query (the datasource's documented sharp
-        # edge). Zone maps only pay off on sorted/clustered columns anyway.
-        opts.setdefault(
-            "planning_parallelism",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        r = spark.read.format("quiver").option("page_prune", "true")
-        for k, v in opts.items():
-            r = r.option(k, v)
-        return r.load(d)
+        return scan(spark, d, page_prune="true", **opts)
     return quiver_relation(spark, d, engine=engine, **opts)
 
 
@@ -460,12 +411,12 @@ FROM (SELECT o_orderkey FROM orders LIMIT 1000) t
     tags=("format", "scan", "limit"),
 )
 def quiver_limit_head(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIMIT-shaped scan through the source-level short-circuit: the
-    `limit` option caps partition planning AND page decode (the reference
-    nth/skip_page analogue, src/read/reader.rs:91-146), then Spark's own
-    .limit trims to exactly N. Deterministic because the quiver conversion
-    preserves parquet row order and both engines take the file-order
-    prefix."""
+    """LIMIT-shaped scan: the relation's `limit` option is an exact
+    Catalyst .limit, which the JVM reader takes as a pushed LIMIT that
+    stops planning and decode early (the reference nth/skip_page analogue,
+    src/read/reader.rs:91-146). Deterministic because the quiver
+    conversion preserves parquet row order and both engines take the
+    file-order prefix."""
     d = quiver_dir(spark, sf_dir, "orders")
     # limit/columns are static options → the relation is stateless and
     # cacheable like any catalog table
@@ -517,13 +468,9 @@ def quiver_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     read — the engine's directory-pruning scale story (a partition-key
     filter costs O(matching files) at 100 TB, not O(dataset))."""
     d = partitioned_documents_dir(spark, sf_dir)
-    docs = (
-        spark.read.format("quiver")
-        .option("partition_prune", "true")
-        .option("columns", "lang,text")
-        .load(d)
-        .filter(F.col("lang") >= "e")
-    )
+    docs = scan(
+        spark, d, partition_prune="true", columns="lang,text"
+    ).filter(F.col("lang") >= "e")
 
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("docs"),

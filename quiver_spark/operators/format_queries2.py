@@ -19,6 +19,7 @@ from quiver_spark.functions import dsum
 from quiver_spark.operators.format_queries import CACHE_ROOT, quiver_relation
 from quiver_spark.registry import register
 from quiver_spark.sources import register as register_format
+from quiver_spark.sources import scan
 
 
 def _marker_dir(spark: SparkSession, sf_dir: str, name: str, build) -> str:
@@ -423,11 +424,7 @@ def quiver_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     d = _marker_dir(spark, sf_dir, "orders-clustered", build)
-    o = (
-        spark.read.format("quiver")
-        .option("page_prune", "true")
-        .load(d)
-    )
+    o = scan(spark, d, page_prune="true")
     return (
         o.filter((F.col("o_orderkey") >= 500) & (F.col("o_orderkey") <= 1500))
         .groupBy("o_orderstatus")
@@ -475,11 +472,7 @@ def quiver_bloom_lookup_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     d = _marker_dir(spark, sf_dir, "orders-bloomed", build)
-    o = (
-        spark.read.format("quiver")
-        .option("page_prune", "true")
-        .load(d)
-    )
+    o = scan(spark, d, page_prune="true")
     return o.filter(
         F.col("o_orderkey").isin(3, 41, 500, 999, 1203)
     ).select("o_orderkey", "o_orderstatus", "o_orderpriority")
@@ -525,11 +518,7 @@ def quiver_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     d = _marker_dir(spark, sf_dir, "lineitem-zordered", build)
-    li = (
-        spark.read.format("quiver")
-        .option("page_prune", "true")
-        .load(d)
-    )
+    li = scan(spark, d, page_prune="true")
     return (
         li.filter(
             (F.col("l_partkey") >= 50) & (F.col("l_partkey") <= 150)

@@ -146,8 +146,8 @@ def quiver_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader. Since round 14 (VERDICT r13 Next #2) ``columns=`` rides the
     JVM too (translated to a Catalyst select, so pruning reaches the DSv2
     scan), and so does ``file_column=`` (the `_quiver_file` metadata
-    column); only options the Python DS alone implements — here the
-    explicit split knob ``partition_rows`` — still land there. The query
+    column); only options the Python DS alone implements — here
+    ``planning_parallelism`` — still land there. The query
     verifies the routing really happened (a silent mis-route would pass
     the oracle while testing nothing) and aggregates across both
     engines' outputs."""
@@ -165,7 +165,7 @@ def quiver_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     opt = scan(
         spark,
         quiver_dir(spark, sf_dir, "orders"),
-        partition_rows="10000000",
+        planning_parallelism="8",
     )
     plan_o = orders._jdf.queryExecution().analyzed().toString()
     plan_e = emb._jdf.queryExecution().analyzed().toString()

@@ -10,31 +10,29 @@ from quiver_spark.sources.quiver_datasource import (  # noqa: F401
 
 #: semantic reader options the JVM engine serves natively (round 13 —
 #: VERDICT r12 Next #1/#3): all driver-side-resolvable, so they no longer
-#: pin a scan to the Python DS's many-small-files floor. Everything else
-#: (file_column, limit, partition_rows, page_prune, …) stays Python-DS.
+#: pin a scan to the Python DS's many-small-files floor. Any other option
+#: outside JVM_TRANSLATED_OPTS (``planning_parallelism``,
+#: ``verify_checksums``) stays Python-DS.
 JVM_SEMANTIC_OPTS = frozenset(
     {"version", "changes_since", "files", "merge_schemas"}
 )
 
-#: Python-DS reader options the JVM path serves as plain Catalyst
-#: operators instead (round 14 — VERDICT r13 Next #2): ``columns=``
-#: becomes a post-scan ``.select`` (Catalyst pushes the pruning into the
-#: DSv2 scan natively), ``limit=`` becomes ``.limit()`` (the JVM
-#: reader implements SupportsPushDownLimit, QuiverJvmRead.java), and
-#: ``file_column=`` becomes a select of the JVM reader's
-#: ``_quiver_file`` METADATA column (SupportsMetadataColumns — the same
-#: root-relative path the Python DS emits). Both engines plan splits in
-#: manifest file order and a single-reducer GlobalLimit drains map
-#: outputs in partition order, so the prefix a LIMIT takes is the same
-#: file-order prefix — routing stays result-stable. NOTE: through THIS
-#: entry point ``limit=N`` means exactly-min(N, rows) on both engines
-#: (the Python fallback gets an outer ``.limit`` too); the raw
-#: ``.option("limit")`` on the Python DS keeps its documented
-#: page-granular short-circuit semantics. ``page_prune=`` and
-#: ``partition_prune=`` translate to nothing: the JVM reader always prunes
-#: pages and Hive partitions on the pushed filters, and the Python
-#: fallback gets them as they are (its plan-cache caveat is the caller's,
-#: as with the raw options).
+#: reader options the JVM path serves as plain Catalyst operators instead
+#: (round 14 — VERDICT r13 Next #2): ``columns=`` becomes a post-scan
+#: ``.select`` (Catalyst pushes the pruning into the DSv2 scan natively),
+#: ``limit=`` becomes ``.limit()`` (the JVM reader implements
+#: SupportsPushDownLimit, QuiverJvmRead.java), and ``file_column=``
+#: becomes a select of the JVM reader's ``_quiver_file`` METADATA column
+#: (SupportsMetadataColumns — the same root-relative path the Python DS
+#: emits). Both engines plan splits in manifest file order and a
+#: single-reducer GlobalLimit drains map outputs in partition order, so
+#: the prefix a LIMIT takes is the same file-order prefix — routing stays
+#: result-stable. ``limit=N`` means exactly-min(N, rows) on both engines:
+#: the Python DS has no limit option, so its fallback gets the same outer
+#: ``.limit``. ``page_prune=`` and ``partition_prune=`` translate to
+#: nothing: the JVM reader always prunes pages and Hive partitions on the
+#: pushed filters, and the Python fallback gets them as they are (its
+#: plan-cache caveat is the caller's, as with the raw options).
 JVM_TRANSLATED_OPTS = frozenset(
     {"columns", "limit", "file_column", "page_prune", "partition_prune"}
 )
@@ -60,10 +58,16 @@ def scan(spark, path: str, **options):
     - **python "quiver" DS** fallback: everything semantic the JVM reader
       refuses — exotic leaf shapes (half floats, decimal256), unfillable
       defaults — plus any reader option outside
-      JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS (explicit split knobs,
-      …), which only the Python DS implements, and tables
-      whose DATA carries a ``_quiver_file`` column when file identity is
-      requested.
+      JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS (``planning_parallelism``,
+      ``verify_checksums``), which only the Python DS implements, and
+      tables whose DATA carries a ``_quiver_file`` column when file
+      identity is requested. Its split planner runs in a separate Python
+      process that only sees the planner host's cpu count, so the
+      fallback passes the session's ``defaultParallelism`` (on a cluster:
+      total executor cores) as ``planning_parallelism`` unless the caller
+      sets it. ``quiver_relation(engine="python")`` relies on this: it
+      forces the fallback by passing ``planning_parallelism``, so that
+      option must stay outside the JVM option sets.
 
     Eligibility is probed against the REAL JVM guards (one driver-side
     manifest read via QuiverJvmRead.inferTableSchema) — not a Python-side
@@ -79,14 +83,14 @@ def scan(spark, path: str, **options):
             out = _apply_translated(df, options)
             if out is not None:
                 return out
-    reader = spark.read.format("quiver")
+    reader = spark.read.format("quiver").option(
+        "planning_parallelism", str(spark.sparkContext.defaultParallelism)
+    )
     for k, v in options.items():
-        reader = reader.option(k, v)
+        if k != "limit":
+            reader = reader.option(k, v)
     df = reader.load(path)
     if "limit" in options:
-        # the DS option short-circuits planning/decode at page
-        # granularity; the outer .limit makes the unified entry's
-        # contract exact-N on BOTH engines
         df = df.limit(int(options["limit"]))
     return df
 

@@ -14,8 +14,8 @@ Design, mirroring the quiver source at the right altitude:
   (``RecordBatchFileReader.num_record_batches``); splits cover
   ``[batch_start, batch_end)`` sized by the same dynamic byte floor as the
   quiver planner — clamp(total_bytes / planning_parallelism, 1 MiB,
-  partition_bytes) — using file-size/batch-count as the per-batch byte
-  estimate (the footer stores no per-batch sizes).
+  128 MiB) — using file-size/batch-count as the per-batch byte estimate
+  (the footer stores no per-batch sizes).
 * READS are zero-copy: files open through ``pyarrow.memory_map``, so a
   batch is buffer views over the mapping, and a ``columns`` projection
   selects buffers without touching the rest (IPC stores raw Arrow buffers;
@@ -149,11 +149,6 @@ class ArrowIpcScanReader(DataSourceReader):
         self.columns = (
             [c.strip() for c in cols.split(",")] if cols else None
         )
-        self.partition_bytes = int(
-            options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
-        )
-        mpb = options.get("min_partition_bytes")
-        self.min_partition_bytes = int(mpb) if mpb is not None else None
         self.planning_parallelism = max(
             1,
             int(
@@ -187,12 +182,10 @@ class ArrowIpcScanReader(DataSourceReader):
         return self._defaults
 
     def _floor(self, files: list[str]) -> int:
-        if self.min_partition_bytes is not None:
-            return self.min_partition_bytes
         total = sum(os.path.getsize(f) for f in files)
         return min(
             max(total // self.planning_parallelism, 1 << 20),
-            self.partition_bytes,
+            DEFAULT_PARTITION_BYTES,
         )
 
     def partitions(self):
@@ -565,11 +558,6 @@ class ArrowIpcStreamReader(DataSourceStreamReader):
         self.options = options
         self.schema_struct = schema
         self.path = self._inner.path
-        self.partition_bytes = int(
-            options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
-        )
-        mpb = options.get("min_partition_bytes")
-        self.min_partition_bytes = int(mpb) if mpb is not None else None
         self.planning_parallelism = max(
             1,
             int(

@@ -5,23 +5,25 @@
 
 Split planning mirrors the reference's page-granular reads (NativeReader
 nth/skip_page, src/read/reader.rs:91-146): the driver reads each file's
-footer once, then fans out InputPartitions covering page ranges sized by
-`partition_rows` (default 32k rows) AND `partition_bytes` (default
-128 MiB of compressed page bytes across the PROJECTED leaves — the cap
-that keeps wide-row multimodal blob tables from packing tens of GB into
-one task). When `partition_rows` is not set explicitly, a partition must
-also carry a bytes floor of projected bytes before the row cap closes
-it; the floor defaults to clamp(total_projected_bytes /
-`planning_parallelism`, 1 MiB, `partition_bytes`) and can be pinned with
-`min_partition_bytes`. Row-count-only sizing would otherwise carve
-narrow projections into ~130 KB tasks and many-file tables into
-thousands of ~3 MB tasks whose per-task Python-worker overhead dominates
-(measured round 8: a 16-file × 600k-row full scan planned 208 tasks and
-ran 9× the parquet control; the dynamic floor plans 32 tasks and runs
-2.5×). Executors open only their byte range per projected column — at
-100 TB this is the same contract as Spark's parquet scan: splits ~=
-files × page-ranges bounded by the 128 MiB cap, no driver-side row
-handling.
+footer once, then fans out InputPartitions covering page ranges. A split
+closes once it holds DEFAULT_PARTITION_ROWS (32k) rows AND a floor of
+projected compressed page bytes, or at DEFAULT_PARTITION_BYTES (128 MiB
+across the PROJECTED leaves — the cap that keeps wide-row multimodal blob
+tables from packing tens of GB into one task). The floor is
+clamp(total_projected_bytes / `planning_parallelism`, 1 MiB, 128 MiB).
+Row-count-only sizing would otherwise carve narrow projections into
+~130 KB tasks and many-file tables into thousands of ~3 MB tasks whose
+per-task Python-worker overhead dominates (measured round 8: a 16-file ×
+600k-row full scan planned 208 tasks and ran 9× the parquet control; the
+dynamic floor plans 32 tasks and runs 2.5×). `planning_parallelism` is
+the one sizing option: the planner runs in a separate Python process
+that only sees its own host's cpu count (its default), so
+``sources.scan`` passes the session's ``defaultParallelism``. Executors
+open only their byte range per projected column — at 100 TB this is the
+same contract as Spark's parquet scan: splits ~= files × page-ranges
+bounded by the 128 MiB cap, no driver-side row handling. There is no
+LIMIT option: Spark's Python DS API has no pushLimit, and the JVM reader
+(``quiverjvm``) serves pushed LIMITs for every table its guards accept.
 
 Column pruning: Spark's Python DataSource API CANNOT push required columns
 — 4.1.2's PythonScanBuilder implements only SupportsPushDownFilters
@@ -101,17 +103,14 @@ FORMAT_NAME = "quiver"
 # Measured on an idle local[32] host at sf0.1 (600k-row lineitem, min of 5
 # interleaved with a fresh-load parquet control at 0.310 s, r5 protocol).
 # With the relation reused across queries (the catalog pattern the engine's
-# quiver_table() implements — a fresh .load() per query pays a ~0.25 s
-# Python-worker round trip for datasource instantiation + schema()):
-#   rows=32k  merge=false 0.94x   merge=true 0.96x
-#   rows=48k  merge=false 0.94x   merge=true 1.03x
-#   rows=64k  merge=false 1.03x   merge=true 1.00x
-# i.e. the scan is at PARITY with the JVM parquet reader once the per-load
-# tax is out of the loop; single-threaded page decode of the whole table is
-# 0.37 s, spread over ~19 partitions. Default = 32k rows + per-page
-# batches, the best measured cell; per-page yield also keeps decode lazy
-# (LIMIT budget, no concat copy, lower peak memory). At cluster scale
-# splits stay ~= files x page-ranges.
+# quiver_relation() implements — a fresh .load() per query pays a ~0.25 s
+# Python-worker round trip for datasource instantiation + schema()), the
+# split row target measured rows=32k 0.94x, 48k 0.94x, 64k 1.03x of the
+# parquet control, and concatenating a split's pages into one batch was
+# no faster (0.96x / 1.03x / 1.00x): the scan is at PARITY with the JVM
+# parquet reader once the per-load tax is out of the loop. Default = 32k
+# rows + one batch per page (no concat copy, lower peak memory). At
+# cluster scale splits stay ~= files x page-ranges.
 DEFAULT_PARTITION_ROWS = 1 << 15
 #: byte cap per planned partition (compressed page bytes across ALL leaf
 #: columns): row-count sizing alone mis-sizes wide rows — a multimodal
@@ -825,33 +824,13 @@ class QuiverScanReader(DataSourceReader):
         #: copy-on-write rewrites surface rewritten files wholesale.
         cs = options.get("changes_since")
         self.changes_since = int(cs) if cs is not None else None
-        self.partition_rows = int(
-            options.get("partition_rows", DEFAULT_PARTITION_ROWS)
-        )
-        # An EXPLICIT partition_rows is obeyed exactly (the documented
-        # knob contract); the DEFAULT additionally requires a partition to
-        # carry a bytes FLOOR of PROJECTED page bytes before the row cap
-        # closes it. Rationale: row-count sizing over-splits — 32k rows of
-        # one 8-byte column is ~130 KB/task and the per-task Python-worker
-        # overhead dominates; at 16 files × 600k rows a row-capped full
-        # scan planned 208 ~3 MB tasks and measured 9× the parquet
-        # control purely on per-task overhead. When min_partition_bytes is
-        # not given, the floor is computed per scan as
-        # clamp(total_projected_bytes / planning_parallelism, 1 MiB,
-        # partition_bytes): small tables still fan out across cores
-        # (latency — per-task overhead is free while tasks <= cores), big
-        # tables get big splits (throughput — up to the 128 MiB cap,
-        # Spark's own maxPartitionBytes scale), and the one-leaf
-        # projection coalesces automatically. The round-8 idle-host sweep
-        # measured the 16-file full scan at 2.26 s row-capped vs 0.98 s
-        # with this rule, with the single-file sf0.1 cells unchanged.
-        # planning_parallelism defaults to
-        # the planner host's cpu count — on a multi-executor cluster set
-        # it to the fleet's total cores (or rely on the 128 MiB cap,
-        # which bounds split count for any 100 TB-scale table).
-        self.rows_explicit = "partition_rows" in options
-        mpb = options.get("min_partition_bytes")
-        self.min_partition_bytes = int(mpb) if mpb is not None else None
+        # Split sizing (module docstring): the planner reads
+        # DEFAULT_PARTITION_ROWS / DEFAULT_PARTITION_BYTES at plan time and
+        # divides total projected bytes by planning_parallelism for the
+        # dynamic floor. Its default is the planner host's cpu count — on a
+        # multi-executor cluster pass the fleet's total cores (sources.scan
+        # passes defaultParallelism), or rely on the 128 MiB cap, which
+        # bounds split count for any 100 TB-scale table.
         self.planning_parallelism = max(
             1,
             int(
@@ -859,9 +838,6 @@ class QuiverScanReader(DataSourceReader):
                     "planning_parallelism", str(os.cpu_count() or 8)
                 )
             ),
-        )
-        self.partition_bytes = int(
-            options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
         )
         # Zone-map page pruning is OPT-IN (page_prune=true): Spark's
         # PythonDataSourceV2 plan cache can replay a filtered build's pruned
@@ -878,13 +854,6 @@ class QuiverScanReader(DataSourceReader):
         )
         # (column, op, value) predicates over Hive partition columns
         self._part_filters: list[tuple[str, str, object]] = []
-        # Row-budget LIMIT short-circuit (the engine analogue of the
-        # reference's nth/skip_page, src/read/reader.rs:91-146): Spark's
-        # Python DS API has no pushLimit, so `.option("limit", N)` caps BOTH
-        # the planned partitions and each partition's decoded pages at page
-        # granularity. For un-ordered `SELECT ... LIMIT N` recipes this
-        # turns a full-table scan into <=ceil(N/page_rows) decoded pages.
-        self.limit = int(options["limit"]) if "limit" in options else None
         # crc32-verify every raw page against the sidecar record (when one
         # exists) before decode — catches silent corruption from storage /
         # transfer. Default ON: the crc costs ~ms per partition; disable
@@ -1033,7 +1002,6 @@ class QuiverScanReader(DataSourceReader):
         return keep
 
     def partitions(self):
-        from quiver_spark.format import nested as nested_mod
         from quiver_spark.format.reader import column_leaf_ranges
 
         part_cols, per_file = _discover_partitions(self.path)
@@ -1048,8 +1016,7 @@ class QuiverScanReader(DataSourceReader):
         # Fast path: the commit-time manifest serves every footer and
         # sidecar from ONE directory-level read (O(1) plan-time I/O, the
         # 100 TB posture). Fallback for manifest-less/stale files: the
-        # per-process footer cache, warmed by a parallel prefetch when no
-        # limit allows early file cutoff.
+        # per-process footer cache, warmed by a parallel prefetch.
         from .manifest import load_manifest
 
         man = load_manifest(self.path)
@@ -1095,20 +1062,11 @@ class QuiverScanReader(DataSourceReader):
                     ),
                 )
             ]
-        if self.limit is None:
-            _prefetch_footers(files, man)
+        _prefetch_footers(files, man)
         file_plans: list[dict] = []
         total_bytes = 0
-        planned_rows = 0
         for file in files:
-            if self.limit is not None and planned_rows >= self.limit:
-                # enough files collected to cover the limit (kept exact
-                # below — nested first columns disable this early stop)
-                break
             _schema, metas = _footer_of(man, file)
-            nested_first = len(_schema) > 0 and nested_mod.is_nested_type(
-                _schema.field(0).type
-            )
             if not metas or not metas[0].pages:
                 continue
             pages = metas[0].pages
@@ -1163,30 +1121,17 @@ class QuiverScanReader(DataSourceReader):
                     "pages": pages,
                     "page_bytes": page_bytes,
                     "keep": keep,
-                    "nested_first": nested_first,
                 }
             )
             total_bytes += sum(
                 b for i, b in enumerate(page_bytes) if keep[i]
             )
-            if nested_first:
-                # nested leaves store SLOT counts in num_values (reference
-                # common.rs:103-107), an over-count of rows — a limit
-                # cannot stop file collection early on slot counts
-                planned_rows = -(1 << 62) if self.limit is not None else 0
-            else:
-                planned_rows += sum(
-                    p.num_values for i, p in enumerate(pages) if keep[i]
-                )
 
-        # --- dynamic split floor (see __init__ rationale) ---
-        if self.min_partition_bytes is not None:
-            floor = self.min_partition_bytes
-        else:
-            floor = min(
-                max(total_bytes // self.planning_parallelism, 1 << 20),
-                self.partition_bytes,
-            )
+        # --- dynamic split floor (see module docstring) ---
+        floor = min(
+            max(total_bytes // self.planning_parallelism, 1 << 20),
+            DEFAULT_PARTITION_BYTES,
+        )
 
         # --- pass 2: roll page ranges into partitions under the floor,
         # packing ACROSS files (parquet's FileScan posture: splits pack to
@@ -1197,7 +1142,6 @@ class QuiverScanReader(DataSourceReader):
         # (parquet control 0.42 s). A partition is a list of
         # (file, page range) chunks; rows/bytes accumulate across chunks.
         parts: list[QuiverPartition] = []
-        budget = self.limit  # remaining rows to plan (None → unlimited)
         chunks: list[tuple] = []  # closed chunks of the open partition
         cur: list = [None, None, None]  # file, start page, pspec
         rows = 0
@@ -1217,16 +1161,9 @@ class QuiverScanReader(DataSourceReader):
                 )
             chunks, rows, bts = [], 0, 0
 
-        stop = False
         for fp in file_plans:
-            if stop or (budget is not None and budget <= 0):
-                break
             file, pages = fp["file"], fp["pages"]
             page_bytes, keep = fp["page_bytes"], fp["keep"]
-            if budget is not None and fp["nested_first"]:
-                # slot-count overcount (see pass 1): fall back to the lazy
-                # decode budget only
-                budget = None
             cur[0], cur[2] = file, pspec(file)
             for i, p in enumerate(pages):
                 if not keep[i]:
@@ -1238,23 +1175,12 @@ class QuiverScanReader(DataSourceReader):
                     cur[1] = i
                 rows += p.num_values
                 bts += page_bytes[i]
-                if budget is not None:
-                    budget -= p.num_values
-                    if budget <= 0:
-                        # page granularity: stop planning once the pages so
-                        # far cover the limit (skip_page analogue)
-                        close_chunk(i + 1)
-                        flush()
-                        stop = True
-                        break
-                row_full = rows >= self.partition_rows and (
-                    self.rows_explicit or bts >= floor
-                )
-                if row_full or bts >= self.partition_bytes:
+                if (
+                    rows >= DEFAULT_PARTITION_ROWS and bts >= floor
+                ) or bts >= DEFAULT_PARTITION_BYTES:
                     close_chunk(i + 1)
                     flush()
-            if not stop:
-                close_chunk(len(pages))
+            close_chunk(len(pages))
         flush()
         if not parts:
             # empty / fully-pruned dataset: single no-op partition so Spark
@@ -1266,21 +1192,13 @@ class QuiverScanReader(DataSourceReader):
 
     def read(self, partition: QuiverPartition) -> Iterator:
         """Decode every chunk packed into this task (see
-        QuiverPartition.extra), threading the remaining LIMIT budget across
-        chunks so a packed partition stops decoding at page granularity
-        exactly like a single-file one."""
-        remaining = self.limit
+        QuiverPartition.extra)."""
         chunk_list = (
             (partition.file, partition.page_start, partition.page_end,
              partition.part),
         ) + tuple(partition.extra)
         for file, ps, pe, spec in chunk_list:
-            if remaining is not None and remaining <= 0:
-                return
-            for batch in self._read_chunk(file, ps, pe, spec, remaining):
-                if remaining is not None:
-                    remaining -= batch.num_rows
-                yield batch
+            yield from self._read_chunk(file, ps, pe, spec)
 
     def _file_cmap(self, file: str) -> dict:
         """Declared→physical rename map for one file (empty = identity).
@@ -1304,7 +1222,7 @@ class QuiverScanReader(DataSourceReader):
 
     def _read_chunk(
         self, chunk_file: str, page_start: int, page_end: int,
-        chunk_part: tuple, limit: int | None,
+        chunk_part: tuple,
     ) -> Iterator:
         import pyarrow as pa
 
@@ -1488,38 +1406,6 @@ class QuiverScanReader(DataSourceReader):
 
         with open(chunk_file, "rb") as f:
             leaf_ranges = column_leaf_ranges(schema)
-            if limit is not None:
-                # lazy page-at-a-time decode under a row budget: stop
-                # decoding as soon as the pages yielded cover the limit
-                # (reference nth/skip_page, src/read/reader.rs:91-146;
-                # `limit` is the REMAINING budget threaded by read()
-                # across this task's packed chunks)
-                budget = limit
-                for p in range(page_start, page_end):
-                    if budget <= 0:
-                        return
-                    arrays = []
-                    for n in file_names + probe:
-                        ci = schema.names.index(n)
-                        lo, cnt = leaf_ranges[ci]
-                        arrays.append(
-                            read_column_pages(
-                                f,
-                                metas[lo : lo + cnt],
-                                schema.field(ci),
-                                p,
-                                p + 1,
-                                crcs=col_crcs(ci),
-                                file_desc=chunk_file,
-                            )[0]
-                        )
-                    for i, t in casts:
-                        arrays[i] = arrays[i].cast(t)
-                    n_rows = len(arrays[0]) if arrays else 0
-                    budget -= n_rows if arrays else budget
-                    _trace("read_page", self, page=p)
-                    yield finalize(arrays[: len(file_names)], n_rows)
-                return
             per_col: list[list] = []
             for n in file_names + probe:
                 ci = schema.names.index(n)
@@ -1538,18 +1424,6 @@ class QuiverScanReader(DataSourceReader):
         # one RecordBatch per page: columnar batches flow straight into
         # Spark's vectorized Arrow path (timestamps normalized to us)
         n_pages = page_end - page_start
-        merge = self.options.get("merge_batches", "false").lower() == "true"
-        if merge and n_pages > 1:
-            # one batch per partition: fewer Python→JVM handoffs at the cost
-            # of one concat copy (default OFF — the idle-host matrix above
-            # measures per-page batches fastest at the default 64k split;
-            # enable per-read with merge_batches=true)
-            arrays = [pa.concat_arrays(pages) for pages in per_col]
-            for i, t in casts:
-                arrays[i] = arrays[i].cast(t)
-            n_rows = len(arrays[0]) if arrays else 0
-            yield finalize(arrays[: len(file_names)], n_rows)
-            return
         for p in range(n_pages):
             arrays = [per_col[c][p] for c in range(len(file_names) + len(probe))]
             for i, t in casts:
@@ -1586,15 +1460,6 @@ class QuiverStreamReader(DataSourceStreamReader):
         #: instead of emitting wrong-schema batches mid-stream
         self.schema_struct = schema
         self.path = _opt_path(options)
-        self.partition_rows = int(
-            options.get("partition_rows", DEFAULT_PARTITION_ROWS)
-        )
-        # same knob as the batch planner: a streamed split rolls when it
-        # has EITHER partition_rows rows or partition_bytes compressed
-        # bytes behind it (option-driven, mirroring QuiverScanReader)
-        self.partition_bytes = int(
-            options.get("partition_bytes", DEFAULT_PARTITION_BYTES)
-        )
         # rate limiting for backfills: at most N new files per micro-batch
         # (the analogue of the file source's maxFilesPerTrigger) — without
         # it, pointing a fresh stream at a deep directory makes batch 0
@@ -1725,8 +1590,9 @@ class QuiverStreamReader(DataSourceStreamReader):
             if not metas or not metas[0].pages:
                 continue
             pages = metas[0].pages
-            # same byte cap as the batch planner: a streamed blob table's
-            # micro-batch must not pack tens of GB behind a row-only split
+            # a streamed split rolls at EITHER the batch planner's row
+            # target or its byte cap: a streamed blob table's micro-batch
+            # must not pack tens of GB behind a row-only split
             page_bytes = [
                 sum(int(m.pages[i].length) for m in metas if i < len(m.pages))
                 for i in range(len(pages))
@@ -1735,7 +1601,10 @@ class QuiverStreamReader(DataSourceStreamReader):
             for i, p in enumerate(pages):
                 rows += p.num_values
                 bts += page_bytes[i]
-                if rows >= self.partition_rows or bts >= self.partition_bytes:
+                if (
+                    rows >= DEFAULT_PARTITION_ROWS
+                    or bts >= DEFAULT_PARTITION_BYTES
+                ):
                     parts.append(QuiverPartition(file, start_p, i + 1, pspec(file)))
                     start_p, rows, bts = i + 1, 0, 0
             if start_p < len(pages):
@@ -1749,7 +1618,7 @@ class QuiverStreamReader(DataSourceStreamReader):
     def read(self, partition: QuiverPartition) -> Iterator:
         # identical decode path as the batch reader (no pushed filters in
         # streams); empty anchor partitions yield nothing. Forward the
-        # user's stream options (verify_checksums, merge_batches, ...) minus
+        # user's stream options (verify_checksums, columns, ...) minus
         # stream-only keys, so documented read opt-outs apply to streaming
         # reads too instead of being silently dropped.
         if partition.page_end <= partition.page_start:
@@ -1760,7 +1629,6 @@ class QuiverStreamReader(DataSourceStreamReader):
             if str(k) not in ("max_files_per_trigger", "start_commit")
         }
         opts["path"] = self.path
-        opts["partition_rows"] = str(self.partition_rows)
         batch_reader = QuiverScanReader(opts, self.schema_struct)
         return batch_reader.read(partition)
 

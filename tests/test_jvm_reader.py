@@ -699,7 +699,7 @@ def test_unified_scan_routes_by_eligibility(spark, tmp_path):
     assert engine(df_opt) == "jvm"
     assert df_opt.columns == ["id"]
     assert df_opt.count() == 50
-    df_py = scan(spark, flat, columns="id", partition_rows="1000000")
+    df_py = scan(spark, flat, columns="id", planning_parallelism="8")
     assert engine(df_py) == "python"
     assert df_py.count() == 50
 
@@ -1205,7 +1205,7 @@ def test_jvm_serves_semantic_reader_options(spark, tmp_path):
 
     # an option OUTSIDE the semantic+translated sets still routes to
     # the Python DS
-    other = scan(spark, inc, partition_rows="1000000")
+    other = scan(spark, inc, planning_parallelism="8")
     assert _engine_of(other) == "python"
 
 
@@ -1244,7 +1244,7 @@ def test_jvm_serves_translated_reader_options(spark, tmp_path):
         assert len(ver.collect()) == 10
     # exact-N on both engines, same file-order prefix
     assert len(lim.collect()) == 100
-    py = scan(spark, d, limit="100", partition_rows="1000000")
+    py = scan(spark, d, limit="100", planning_parallelism="8")
     assert _engine_of(py) == "python"
     assert sorted(map(tuple, lim.collect())) == sorted(
         map(tuple, py.limit(100).collect())
@@ -1290,7 +1290,7 @@ def test_jvm_serves_translated_reader_options(spark, tmp_path):
         scan(spark, d, file_column="id")
 
     # an option only the Python DS implements still falls back
-    knob = scan(spark, d, columns="id", partition_rows="1000000")
+    knob = scan(spark, d, columns="id", planning_parallelism="8")
     assert _engine_of(knob) == "python"
 
     # ADVICE r14 engine-parity edges: the literal '_quiver_file' in
@@ -1317,7 +1317,7 @@ def test_jvm_serves_translated_reader_options(spark, tmp_path):
     pyempty = (
         spark.read.format("quiver")
         .option("columns", "")
-        .option("partition_rows", "1000000")
+        .option("planning_parallelism", "8")
         .load(d)
     )
     assert pyempty.columns == ["id", "v", "tag"]

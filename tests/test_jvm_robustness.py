@@ -188,7 +188,7 @@ def test_jvm_written_bit_flip_detected_by_both_engines(spark, tmp_path):
     register(spark)
     with pytest.raises(Exception, match="(?i)checksum|crc|corrupt"):
         spark.read.format("quiver").option(
-            "partition_rows", "1000000"
+            "planning_parallelism", "8"
         ).load(src).collect()
 
 

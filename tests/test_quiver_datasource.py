@@ -96,23 +96,33 @@ def test_columns_option_decodes_only_projection(
     assert sum(b.num_rows for b in batches) > 0
 
 
-def test_partitioned_scan(spark, tmp_path):
-    """partition_rows smaller than the table → multiple InputPartitions
-    (splits are page-granular, so write 1000-row pages)."""
+def test_partitioned_scan(tmp_path, monkeypatch):
+    """A split cap smaller than the table → multiple page-range
+    InputPartitions (splits are page-granular, so write 1000-row pages)
+    that together decode every row exactly once, in file order. The cap
+    is the module constant the planner reads, shrunk in-process."""
+    import pyarrow as pa
+
+    from quiver_spark.sources import quiver_datasource as qds
+
     d = tmp_path / "li_paged"
     os.makedirs(d, exist_ok=True)
     t = pq.read_table(f"{SF_DIR}/lineitem.parquet")
     write_table(t, str(d / "part-0.quiver"), WriteOptions(max_page_size=1000))
-    register(spark)
-    q = (
-        spark.read.format("quiver")
-        .option("partition_rows", "1000")
-        .load(str(d))
+    monkeypatch.setattr(qds, "DEFAULT_PARTITION_BYTES", 1 << 14)
+    r = qds.QuiverScanReader({"path": str(d)}, None)
+    parts = r.partitions()
+    assert len(parts) > 1
+    # contiguous, non-overlapping page ranges over the whole file
+    assert parts[0].page_start == 0
+    assert all(
+        a.page_end == b.page_start for a, b in zip(parts, parts[1:])
     )
-    assert q.rdd.getNumPartitions() > 1
-    p = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    assert q.count() == p.count()
-    assert sorted(q.select("l_orderkey").limit(0).columns) == ["l_orderkey"]
+    got = pa.Table.from_batches([b for pt in parts for b in r.read(pt)])
+    assert got.num_rows == t.num_rows
+    assert got.column("l_orderkey").to_pylist() == (
+        t.column("l_orderkey").to_pylist()
+    )
 
 
 def test_spark_write_roundtrip(spark, tmp_path):
@@ -129,7 +139,7 @@ def test_spark_write_roundtrip(spark, tmp_path):
     assert a == b
 
 
-def test_page_pruning_sorted_column(spark, tmp_path):
+def test_page_pruning_sorted_column(spark, tmp_path, monkeypatch):
     """A selective predicate on a sort-clustered column prunes pages before
     partitions are scheduled, and results still match exactly."""
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
@@ -142,8 +152,12 @@ def test_page_pruning_sorted_column(spark, tmp_path):
     write_table(t, str(d / "part-0.quiver"), WriteOptions(max_page_size=500))
     register(spark)
 
-    # driver-side: the pruning mask shrinks the partition list
-    opts = {"path": str(d), "partition_rows": "500", "page_prune": "true"}
+    # driver-side: the pruning mask shrinks the partition list (a small
+    # split cap, so the unpruned table plans many partitions)
+    from quiver_spark.sources import quiver_datasource as qds
+
+    monkeypatch.setattr(qds, "DEFAULT_PARTITION_BYTES", 1 << 14)
+    opts = {"path": str(d), "page_prune": "true"}
     r_all = QuiverScanReader(dict(opts), None)
     n_all = len(r_all.partitions())
     r_f = QuiverScanReader(dict(opts), None)
@@ -210,46 +224,6 @@ def test_pruning_never_drops_nan_rows(spark, tmp_path):
     assert q.filter("x >= 5.0").count() == 1
     assert q.filter("x = double('NaN')").count() == 1
     assert q.filter("x < 5.0").count() == 3
-
-
-def test_limit_short_circuit(spark, tmp_path):
-    """`.option("limit", N)` stops partition planning AND page decode at
-    page granularity (the reference's nth/skip_page analogue): a LIMIT 100
-    on a multi-partition table plans one short partition and decodes one
-    page, instead of scanning every page."""
-    from quiver_spark.sources.quiver_datasource import QuiverScanReader
-
-    d = tmp_path / "li_limit"
-    os.makedirs(d, exist_ok=True)
-    t = pq.read_table(f"{SF_DIR}/lineitem.parquet")
-    write_table(t, str(d / "part-0.quiver"), WriteOptions(max_page_size=500))
-    register(spark)
-
-    # plan: pages covering >=100 rows only (here: a single 500-row page)
-    r = QuiverScanReader({"path": str(d), "partition_rows": "500", "limit": "100"}, None)
-    parts = r.partitions()
-    assert sum(p.page_end - p.page_start for p in parts) == 1
-    r_all = QuiverScanReader({"path": str(d), "partition_rows": "500"}, None)
-    assert sum(p.page_end - p.page_start for p in r_all.partitions()) > 10
-
-    # read budget: a 10-page partition under limit=100 decodes ONE page
-    # (in-process, so the lazy generator's early return is observable)
-    from quiver_spark.sources.quiver_datasource import QuiverPartition
-
-    r_budget = QuiverScanReader({"path": str(d), "limit": "100"}, None)
-    batches = list(
-        r_budget.read(QuiverPartition(str(d / "part-0.quiver"), 0, 10))
-    )
-    assert len(batches) == 1 and batches[0].num_rows == 500
-
-    # end-to-end: correct rows out
-    q = (spark.read.format("quiver").option("limit", "100").load(str(d))
-         .limit(100))
-    rows = q.collect()
-    assert len(rows) == 100
-    expect = t.slice(0, 100).to_pylist()
-    got = [r.asDict() for r in rows]
-    assert [g["l_orderkey"] for g in got] == [e["l_orderkey"] for e in expect]
 
 
 def test_plan_cache_replay_is_safe_by_default(spark, tmp_path):
@@ -728,14 +702,16 @@ def test_ddl_catalog_table_sentinel(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS qorders_sentinel")
 
 
-def test_partition_bytes_caps_wide_rows(spark, tmp_path):
+def test_partition_bytes_caps_wide_rows(tmp_path, monkeypatch):
     """Byte-based split sizing: a blob table whose rows are KB-scale must
-    split on the byte cap long before the row cap — the multimodal-table
-    posture (row-count-only splits would pack GBs into one task). Narrow
-    tables stay governed by partition_rows (the byte cap never triggers
-    at default sizes), and results are identical either way."""
+    split on the byte cap long before the row target — the multimodal-table
+    posture (row-count-only splits would pack GBs into one task). Shrinking
+    the module's 128 MiB cap in-process to 1 MiB carves the ~8 MB table
+    into >= 6 splits, and results are identical either way."""
     import numpy as np
     import pyarrow as pa
+
+    from quiver_spark.sources import quiver_datasource as qds
 
     rng = np.random.default_rng(5)
     n = 2000
@@ -747,28 +723,23 @@ def test_partition_bytes_caps_wide_rows(spark, tmp_path):
     d = tmp_path / "blobs"
     os.makedirs(d, exist_ok=True)
     write_table(t, str(d / "part-0.quiver"), WriteOptions(max_page_size=100))
-    register(spark)
-    base = (
-        spark.read.format("quiver")
-        .option("partition_rows", "1000000")  # row cap never triggers
-    )
-    df_uncapped = base.load(str(d))
-    df_capped = (
-        spark.read.format("quiver")
-        .option("partition_rows", "1000000")
-        .option("partition_bytes", str(1 << 20))  # 1 MiB cap
-        .load(str(d))
-    )
-    n_un = df_uncapped.rdd.getNumPartitions()
-    n_cap = df_capped.rdd.getNumPartitions()
+
+    def scan_all():
+        r = qds.QuiverScanReader(
+            {"path": str(d), "planning_parallelism": "1"}, None
+        )
+        parts = r.partitions()
+        return len(parts), [b for pt in parts for b in r.read(pt)]
+
+    n_un, uncapped = scan_all()
+    monkeypatch.setattr(qds, "DEFAULT_PARTITION_BYTES", 1 << 20)
+    n_cap, capped = scan_all()
     assert n_un == 1, n_un
     assert n_cap >= 6, n_cap  # ~8 MB / 1 MiB
-    assert df_capped.count() == n
-    assert (
-        df_capped.agg(F.sum(F.length("blob"))).collect()[0][0]
-        == df_uncapped.agg(F.sum(F.length("blob"))).collect()[0][0]
-        == n * 4096
+    assert pa.Table.from_batches(capped).equals(
+        pa.Table.from_batches(uncapped)
     )
+    assert sum(b.num_rows for b in capped) == n
 
 
 def test_append_mode(spark, tmp_path):
@@ -819,11 +790,11 @@ def test_narrow_projection_partitions_coalesce_by_projected_bytes(
 ):
     """Default split planning sizes partitions by PROJECTED page bytes
     with a dynamic floor (clamp(total/parallelism, 1 MiB,
-    partition_bytes)): a 1-of-N-column projection must plan (far) fewer
+    128 MiB)): a 1-of-N-column projection must plan (far) fewer
     partitions than the full-width scan of the same file, because 32k
     rows of one narrow column is ~130 KB and per-task worker overhead
-    would dominate. An explicit partition_rows keeps the documented exact
-    contract (test_partitioned_scan pins that side)."""
+    would dominate. planning_parallelism is explicit, so the plan checks
+    the rule and not the host's core count."""
     import pyarrow as pa
 
     d = tmp_path / "wide"
@@ -836,25 +807,20 @@ def test_narrow_projection_partitions_coalesce_by_projected_bytes(
     )
     write_table(t, str(d / "part-0.quiver"), WriteOptions())
     register(spark)
-    full = spark.read.format("quiver").load(str(d))
+    full = (
+        spark.read.format("quiver")
+        .option("planning_parallelism", "32")
+        .load(str(d))
+    )
     narrow = (
-        spark.read.format("quiver").option("columns", "c0").load(str(d))
+        spark.read.format("quiver")
+        .option("planning_parallelism", "32")
+        .option("columns", "c0")
+        .load(str(d))
     )
     nf = full.rdd.getNumPartitions()
     nn = narrow.rdd.getNumPartitions()
     assert nn < nf, (nn, nf)
-    # explicit partition_rows is obeyed exactly regardless of bytes
-    import math
-
-    exact = (
-        spark.read.format("quiver")
-        .option("columns", "c0")
-        .option("partition_rows", "32768")
-        .load(str(d))
-    )
-    assert exact.rdd.getNumPartitions() == math.ceil(n / 32768), (
-        exact.rdd.getNumPartitions()
-    )
     assert narrow.count() == full.count() == n
 
 
@@ -985,9 +951,8 @@ def test_many_files_scan_plans_bytes_bounded_partitions(spark, tmp_path):
     """Round-8 scale fix: a many-files directory must NOT be carved into
     one ~32k-row task per 3 MB of data (at 16 files x 600k rows that was
     208 tasks and 9x the parquet control, pure per-task overhead). The
-    dynamic floor (clamp(total/parallelism, 1 MiB, partition_bytes))
-    bounds the plan to far fewer, bigger splits while an explicit
-    partition_rows still fans out exactly."""
+    dynamic floor (clamp(total/parallelism, 1 MiB, 128 MiB))
+    bounds the plan to far fewer, bigger splits."""
     import numpy as np
     import pyarrow as pa
 
@@ -1012,21 +977,7 @@ def test_many_files_scan_plans_bytes_bounded_partitions(spark, tmp_path):
     # is bounded by data volume, not file count
     assert dyn.rdd.getNumPartitions() <= 2 * n_files
     assert dyn.count() == n_files * rows
-    exact = (
-        spark.read.format("quiver")
-        .option("partition_rows", "32768")
-        .load(str(d))
-    )
-    # explicit partition_rows fans out at exactly that granularity,
-    # packing file tails together: ceil(total/32768) <= parts <= the old
-    # per-file carve (file tails can close a partition early)
-    import math as _math
-
-    n_exact = exact.rdd.getNumPartitions()
-    assert _math.ceil(n_files * rows / 32768) <= n_exact <= n_files * 4
     # values survive the coalesced plan byte-for-byte
-    import math
-
     s = dyn.agg(F.sum("b")).collect()[0][0]
     assert s == n_files * (rows * (rows - 1) // 2)
 
@@ -1057,16 +1008,6 @@ def test_planning_parallelism_option_drives_split_floor(spark, tmp_path):
     n_one = len(one.partitions())
     n_many = len(many.partitions())
     assert n_one < n_many, (n_one, n_many)
-    # explicit min_partition_bytes overrides the dynamic floor entirely
-    pinned = QuiverScanReader(
-        {
-            "path": str(d),
-            "planning_parallelism": "1",
-            "min_partition_bytes": str(1 << 20),
-        },
-        None,
-    )
-    assert len(pinned.partitions()) == n_many
 
 
 def test_small_files_pack_into_multi_file_partitions(spark, tmp_path):
@@ -1108,15 +1049,6 @@ def test_small_files_pack_into_multi_file_partitions(spark, tmp_path):
     assert df.rdd.getNumPartitions() == len(parts)
     assert df.count() == n_files * rows
     assert df.agg(F.sum("v")).collect()[0][0] == n_files * sum(range(rows))
-    # LIMIT budget threads across packed chunks at page granularity
-    head = (
-        spark.read.format("quiver")
-        .option("planning_parallelism", "8")
-        .option("limit", "350")
-        .load(str(d))
-    )
-    got = head.count()
-    assert 350 <= got <= 400  # page granularity (200-row pages)
 
 
 def test_packed_partitions_keep_hive_specs_per_chunk(spark, tmp_path):
@@ -1208,13 +1140,22 @@ def test_bloom_point_lookup_prunes_unsorted_pages(spark, tmp_path):
     )
     register(spark)
 
-    opts = {"path": str(d), "partition_rows": "1000", "page_prune": "true"}
+    opts = {"path": str(d), "page_prune": "true"}
 
     def planned_pages(filters):
         r = QuiverScanReader(dict(opts), None)
         if filters:
             r.pushFilters(filters)
-        return sum(p.page_end - p.page_start for p in r.partitions())
+        # the file plans as one packed partition: the pages that survive
+        # pruning are separate chunks, all but the first in ``extra``
+        return sum(
+            end - start
+            for p in r.partitions()
+            for _, start, end, _ in [
+                (p.file, p.page_start, p.page_end, p.part),
+                *p.extra,
+            ]
+        )
 
     all_pages = planned_pages(None)
     assert all_pages == 20
