@@ -1,4 +1,4 @@
-"""JVM-side quiver DataSource ("quiverjvm") — the flat-schema fast path.
+"""JVM-side quiver DataSource ("quiverjvm") — the native fast lane.
 
 Write side: the Python sink's pure-write cost is structural — rows cross
 the JVM→Python Arrow boundary before a single page is encoded
@@ -16,14 +16,17 @@ planner-process spawn — sf0.1 battery: full scan 0.19x, narrow 0.27x,
 manyfiles 0.39x of the parquet control (the Python DS floor was
 1.4-2.2x on the same fixtures).
 
-Division of labor: the JVM path serves FLAT schemas — including (since
-round 11) Hive-partitioned layouts and ALTER-DDL rename/add/drop tables
-— with manifest planning, zone-map + bloom pruning, and one-pass ingest
-(the job commit writes sidecars + the table manifest itself). DML,
-clustering, constraints, column initial-defaults, nested/unsigned/large
-types, time travel and CDC options stay on the Python engine; the JVM
-reader rejects those loudly rather than misreading. ``sources.scan`` is
-the unified entry that routes per table.
+Division of labor: the JVM reader serves flat and nested schemas over
+plain, generation and Hive layouts, ALTER-DDL tables, column defaults,
+time travel (``version``), CDC (``changes_since``), ``files`` subsets and
+``merge_schemas``, with manifest planning and zone-map + bloom pruning;
+its guards refuse what it cannot read (half floats, decimal256, …) and
+``sources.scan`` then falls back to the Python reader. The JVM writer
+takes appends and loads into new directories (one pass: the job commit
+writes sidecars + the table manifest itself); ``sources.write`` sends
+overwrites of existing tables (the atomic generation swap), CHECK-
+constrained tables and the table-protocol options (carry_files,
+keep_generations, …) to the Python sink.
 
 The jar builds OFFLINE with plain javac against the bundled Spark jars
 (build.sh — no network, no dependency resolution) and is checked in so

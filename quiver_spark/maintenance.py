@@ -76,7 +76,7 @@ def compact(
     src_dir: str,
     dst_dir: str | None = None,
     target_rows_per_file: int = 1 << 20,
-    codec: str | None = None,
+    codec: str = "lz4",
     partition_by: list[str] | None = None,
 ) -> dict:
     """Rewrite ``src_dir`` into ``dst_dir`` — or IN PLACE when ``dst_dir``
@@ -108,7 +108,7 @@ def compact(
     by the cluster. Partitioned sources repartition on the partition
     columns so each output task writes into few subdirectories.
     """
-    from quiver_spark.sources import scan
+    from quiver_spark.sources import scan, write
     from quiver_spark.sources.quiver_datasource import _discover_partitions
 
     if dst_dir is None:
@@ -135,14 +135,10 @@ def compact(
         df = df.repartition(n_out, *part_cols)
     else:
         df = df.repartition(n_out)
-    writer = df.write.format("quiver").mode("overwrite")
-    if part_cols:
-        writer = writer.option("partition_by", ",".join(part_cols))
-    if codec:
-        writer = writer.option("codec", codec)
-    writer.option(
-        "max_rows_per_file", str(max(target_rows_per_file, 1))
-    ).save(dst_dir)
+    write(
+        df, dst_dir, partition_by=part_cols, codec=codec,
+        max_rows_per_file=max(target_rows_per_file, 1),
+    )
 
     out_files, out_rows = _dir_stats(dst_dir)
     return {
@@ -237,7 +233,7 @@ def cluster_by(
     columns: list[str],
     dst_dir: str | None = None,
     target_rows_per_file: int = 1 << 20,
-    codec: str | None = None,
+    codec: str = "lz4",
     zorder: bool = False,
 ) -> dict:
     """Sort-cluster a table on ``columns`` — rewrite (in place by
@@ -263,7 +259,7 @@ def cluster_by(
     clustering is what makes sorted encodings and stats pruning reachable
     for real tables; the format itself has no table layer (src/lib.rs).
     """
-    from quiver_spark.sources import scan
+    from quiver_spark.sources import scan, write
     from quiver_spark.sources.quiver_datasource import _discover_partitions
 
     if not columns:
@@ -297,14 +293,10 @@ def cluster_by(
         df = df.repartitionByRange(n_out, *columns).sortWithinPartitions(
             *columns
         )
-    writer = df.write.format("quiver").mode("overwrite")
-    if part_cols:
-        writer = writer.option("partition_by", ",".join(part_cols))
-    if codec:
-        writer = writer.option("codec", codec)
-    writer.option(
-        "max_rows_per_file", str(max(target_rows_per_file, 1))
-    ).save(dst_dir)
+    write(
+        df, dst_dir, partition_by=part_cols, codec=codec,
+        max_rows_per_file=max(target_rows_per_file, 1),
+    )
     out_files, out_rows = _dir_stats(dst_dir)
     return {
         "src": src_dir,
@@ -1418,43 +1410,36 @@ def convert_parquet(
     """Distributed parquet → quiver conversion — the migration path for a
     user switching an existing lake to the quiver format.
 
-    Scale posture: the output layout is sized from parquet FOOTER metadata
-    only (`pyarrow.dataset.count_rows`, no data read on the driver), then
-    the rewrite is one Spark job: parquet scan → repartition(n_out) →
-    quiver sink with its staged-commit protocol. Hive layout is produced
-    by the sink's own ``partition_by`` fan-out. At 100 TB this is the
-    same shape as compaction: one shuffle sized exactly to the output."""
+    Scale posture: the row count comes from parquet FOOTER metadata only
+    (`pyarrow.dataset.count_rows`, no data read on the driver), and the
+    rewrite is one Spark job: parquet scan → one shuffle → :func:`ingest`.
+    An unpartitioned conversion repartitions to the output file count
+    sized from that row count; a Hive conversion leaves the shuffle to
+    ``ingest``, which co-locates each key in one task. At 100 TB this is
+    the same shape as compaction."""
     import pyarrow.dataset as ds
 
-    from quiver_spark.sources import register as register_format
-
     _check_disjoint(src, dst_dir)
-    register_format(spark)
     rows = ds.dataset(src, format="parquet").count_rows()
-    n_out = max(1, math.ceil(rows / max(target_rows_per_file, 1)))
     df = spark.read.parquet(src)
     cols = [c.strip() for c in partition_by.split(",")] if partition_by else []
-    df = df.repartition(n_out, *cols) if cols else df.repartition(n_out)
-    writer = (
-        df.write.format("quiver")
-        .mode("overwrite")
-        .option("codec", codec)
-        .option("max_rows_per_file", str(max(target_rows_per_file, 1)))
+    if not cols:
+        n_out = max(1, math.ceil(rows / max(target_rows_per_file, 1)))
+        df = df.repartition(n_out)
+    info = ingest(
+        spark, df, dst_dir, codec=codec,
+        max_rows_per_file=target_rows_per_file, partition_by=cols,
     )
-    if cols:
-        writer = writer.option("partition_by", ",".join(cols))
-    writer.save(dst_dir)
-    out_files, out_rows = _dir_stats(dst_dir)
-    if out_rows != rows:
+    if info["rows"] != rows:
         raise RuntimeError(
             f"conversion row mismatch: parquet has {rows}, quiver output "
-            f"has {out_rows} — output left in place for inspection"
+            f"has {info['rows']} — output left in place for inspection"
         )
     return {
         "src": src,
         "dst": dst_dir,
         "rows": rows,
-        "files_after": out_files,
+        "files_after": info["files"],
         "partition_by": cols,
     }
 
@@ -1468,84 +1453,40 @@ def ingest(
     partition_by: str | list[str] | None = None,
 ) -> dict:
     """One-call bulk ingest of a DataFrame into a quiver table, durable AND
-    queryable with O(1) scan planning when it returns.
+    queryable with O(1) scan planning when it returns: an overwrite
+    through :func:`quiver_spark.sources.write`, which picks the engine.
 
-    Engine selection (fastest available first):
-    - **quiverjvm** (the Java DataSourceV2 writer, quiver_spark/jvm): rows
-      never cross the JVM→Python boundary — measured 0.69x parquet wall at
-      sf0.1 vs ~2.8x for the Python sink (BASELINE.md round-10 ingest
-      table). Requires a flat schema; the jar attaches at RUNTIME via a
-      verified ``ADD JAR`` (jvm.attach_jar), so plain driver-owned
-      sessions qualify too.
-    - **python sink** fallback: full adaptive codec cascade + staged-commit
-      generation protocol; used for nested schemas or when the jar cannot
-      attach.
-
-    Either way the directory ends with a commit-time manifest — the JVM
-    job commit writes it directly from the task writers' commit messages
-    (plus per-file stats sidecars: zone maps, optional blooms, CRCs), so
-    ingest is ONE pass with no retrofit metadata job — and the first scan
-    plans from ONE metadata read instead of O(files) footers.
+    Into a new or empty directory that is the quiverjvm writer whenever
+    its guards accept the schema (rows never cross the JVM→Python
+    boundary — measured 0.69x parquet wall at sf0.1 vs ~2.8x for the
+    Python sink, BASELINE.md round-10 ingest table); its job commit writes
+    the manifest from the task writers' commit messages (plus per-file
+    stats sidecars: zone maps, optional blooms, CRCs), so ingest is ONE
+    pass and the first scan plans from ONE metadata read. Re-ingesting
+    into an existing table is the Python sink's atomic generation swap.
     ``partition_by`` fans rows into Hive ``col=value`` subdirectories on
-    EITHER engine (the JVM writer's round-11 fan-out or the Python sink's
-    ``partition_by`` option — identical layout; the input is repartitioned
-    by the keys first so per-key writer buffers stay bounded).
-    Append/DML/cluster management from the Python layer works on the
-    result like any table. ``mode`` is always overwrite — ingest is a
-    load, not an append (use the sink's append mode for increments)."""
-    from quiver_spark.jvm import attach_jar, supports_schema
-    from quiver_spark.sources import register as register_format
-    from quiver_spark.sources.manifest import rebuild_manifest
+    either engine (the input is repartitioned by the keys first so
+    per-key writer buffers stay bounded). ``mode`` is always overwrite —
+    ingest is a load, not an append (use ``sources.write(...,
+    mode="append")`` for increments). ``engine`` in the result is
+    ``"jvm"`` or ``"python"``."""
+    from quiver_spark.sources import write
 
-    register_format(spark)
     parts = (
         [c.strip() for c in partition_by.split(",")]
         if isinstance(partition_by, str)
         else list(partition_by or [])
     )
     if parts:
-        # co-locate each Hive key in one task so the per-key buffers of
-        # the fan-out writer (JVM or Python) stay bounded
         df = df.repartition(*parts)
-    # attach_jar: verified runtime ADD JAR — even plain driver-owned
-    # sessions (no static spark.jars) get the JVM fast path
-    use_jvm = supports_schema(df.schema) and attach_jar(spark)
-    if use_jvm:
-        writer = (
-            df.write.format("quiverjvm")
-            .mode("overwrite")
-            .option("codec", codec)
-            .option("max_rows_per_file", str(max(max_rows_per_file, 1)))
-        )
-        if parts:
-            # Hive fan-out in the JVM (round 11): partition keys ride the
-            # path, files carry only data columns — the layout both
-            # readers discover and partition-prune
-            writer = writer.partitionBy(*parts)
-        writer.save(dst_dir)
-        # the JVM job commit writes the manifest itself (entry facts ride
-        # the WriterCommitMessages — one pass, zero footer re-reads);
-        # rebuild only as a safety net for jars predating that
-        from quiver_spark.sources.manifest import load_manifest
-
-        man = load_manifest(dst_dir)
-        if man is None or not man.entries:
-            rebuild_manifest(dst_dir)
-        files, rows = _dir_stats(dst_dir)  # manifest-served
-    else:
-        writer = (
-            df.write.format("quiver")
-            .mode("overwrite")
-            .option("codec", codec if codec != "none" else "lz4")
-            .option("max_rows_per_file", str(max(max_rows_per_file, 1)))
-        )
-        if parts:
-            writer = writer.option("partition_by", ",".join(parts))
-        writer.save(dst_dir)
-        files, rows = _dir_stats(dst_dir)
+    engine = write(
+        df, dst_dir, partition_by=parts, codec=codec,
+        max_rows_per_file=max(max_rows_per_file, 1),
+    )
+    files, rows = _dir_stats(dst_dir)
     return {
         "dst": dst_dir,
-        "engine": "jvm" if use_jvm else "python",
+        "engine": "jvm" if engine == "quiverjvm" else "python",
         "files": files,
         "rows": rows,
     }
@@ -1603,21 +1544,15 @@ def _rewrite_commit(
     the quiver sink's carry_files copy-on-write commit. Concurrency is
     optimistic: publish verifies the snapshot the plan was built against
     is still live and raises ConcurrentWriteError otherwise."""
+    from quiver_spark.sources import write
     from quiver_spark.sources.quiver_datasource import _discover_partitions
 
     _g, root, _files = _snapshot(table)
     part_cols = [c for c, _k in _discover_partitions(root)[0]]
-    w = (
-        out_df.write.format("quiver")
-        .mode("overwrite")
-        .option("carry_files", json.dumps(untouched))
-        .option("carry_src", gen)
+    write(
+        out_df, table, partition_by=part_cols,
+        carry_files=json.dumps(untouched), carry_src=gen, **options,
     )
-    if part_cols:
-        w = w.option("partition_by", ",".join(part_cols))
-    for k, v in options.items():
-        w = w.option(k, str(v))
-    w.save(table)
 
 
 def _partition_only_predicate(spark, root: str, predicate: str) -> bool:

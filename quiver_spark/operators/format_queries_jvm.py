@@ -956,6 +956,7 @@ def quiverjvm_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-listing deltas ({"files": [...]}, the Python source's exact
     protocol), rate limiting via max_files_per_trigger +
     SupportsTriggerAvailableNow."""
+    import shutil
     import tempfile
     import uuid
 
@@ -965,26 +966,27 @@ def quiverjvm_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not attach_jar(spark):
         raise RuntimeError("quiverjvm jar failed to attach via ADD JAR")
     d = quiver_dir(spark, sf_dir, "documents")
+    # The stream runs in a sibling session (same SparkContext and attached
+    # jar, its own SQL conf and temp views), so the caller's session keeps
+    # its conf and gains no memory-sink view. Round 17 (guide §1.1
+    # instrumentation → §2.2): the wall here was the STATE STORE, not the
+    # scan — a streaming aggregate allocates one HDFS-backed state store
+    # (open + delta write + snapshot maintenance) per shuffle partition,
+    # and under the session default (64) a 5-group aggregate paid 64
+    # store lifecycles per micro-batch: measured addBatch 13-37 s (and
+    # wildly noisy — store maintenance is asynchronous) at 64 partitions
+    # vs 0.7-1.1 s at 1-8. State partitions for a BOUNDED-cardinality
+    # aggregate are O(|groups|) at any corpus size (map-side partial
+    # aggregation still parallelizes with input splits; only ≤|langs|
+    # merged rows reach the store), so a small constant is the
+    # scale-correct setting, not a local tune.
+    stream_spark = spark.newSession()
+    stream_spark.conf.set("spark.sql.shuffle.partitions", "8")
     name = "qjs_" + uuid.uuid4().hex[:8]
     ckpt = tempfile.mkdtemp(prefix="quiver_qjs_ckpt_")
-    # Round 17 (guide §1.1 instrumentation → §2.2): the wall here was the
-    # STATE STORE, not the scan — a streaming aggregate allocates one
-    # HDFS-backed state store (open + delta write + snapshot maintenance)
-    # per shuffle partition, and under the session default (64) a 5-group
-    # aggregate paid 64 store lifecycles per micro-batch: measured
-    # addBatch 13-37 s (and wildly noisy — store maintenance is
-    # asynchronous) at 64 partitions vs 0.7-1.1 s at 1-8. State
-    # partitions for a BOUNDED-cardinality aggregate are O(|groups|) at
-    # any corpus size (map-side partial aggregation still parallelizes
-    # with input splits; only ≤|langs| merged rows reach the store), so a
-    # small constant is the scale-correct setting, not a local tune.
-    # Streaming pins the number at first start from the session conf —
-    # set it for the start() window only, restore after.
-    _prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = (
-            spark.readStream.format("quiverjvm")
+            stream_spark.readStream.format("quiverjvm")
             .load(d)
             .groupBy("lang")
             .agg(
@@ -999,18 +1001,19 @@ def quiverjvm_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        # restore only after the drain: the micro-batch thread snapshots
-        # the session conf asynchronously after start()
-        done = q.awaitTermination(300)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError(
+                "quiverjvm_stream_scan: stream did not drain within 300 s "
+                "— refusing to read a partial aggregate"
+            )
+        # the frame keeps the analyzed memory-sink relation, so it stays
+        # readable after its view is dropped
+        result = stream_spark.table(name)
+        stream_spark.catalog.dropTempView(name)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", _prev_parts)
-    if not done:
-        q.stop()
-        raise RuntimeError(
-            "quiverjvm_stream_scan: stream did not drain within 300 s — "
-            "refusing to read a partial aggregate"
-        )
-    return spark.sql(f"SELECT * FROM {name}")
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return result
 
 
 @register(

@@ -88,10 +88,10 @@ def get_spark(app_name: str = "quiver-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
     )
-    # JVM bulk-ingest writer ("quiverjvm"): spark.jars is a STATIC conf, so
-    # the jar must ride the builder — attach when built (checked in; see
-    # quiver_spark/jvm). Sessions we did not build (the driver's) lack it;
-    # maintenance.ingest falls back to the Python sink there.
+    # JVM engine ("quiverjvm"): spark.jars is a STATIC conf, so the jar
+    # rides the builder when built (checked in; see quiver_spark/jvm).
+    # Sessions we did not build (the driver's) lack it; jvm.attach_jar adds
+    # it at run time there (ADD JAR), so they get the same JVM routing.
     from quiver_spark.jvm import jar_path
 
     jar = jar_path()

@@ -44,6 +44,13 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 #: production executor's memory yet far above any bounded dimension table.
 BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
+#: input bytes per task at least, when ``spread`` widens a scan, so the
+#: Python-worker roundtrip (~tens of ms) amortizes over real work —
+#: measured at 32 cores on the 594 KB documents scan: width 32 = 0.69 s,
+#: width 8 = 0.54 s, width 1 = 1.15 s. Capped at the session parallelism,
+#: so larger inputs scale back up to full width.
+SPREAD_MIN_TASK_BYTES = 64 * 1024
+
 
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's plan-time size estimate for ``df`` (bytes), or None.
@@ -63,12 +70,12 @@ def maybe_broadcast(df: DataFrame, size_bytes: int | None = None) -> DataFrame:
     """Size-gated broadcast hint for relations that scale with the data.
 
     Emits ``F.broadcast(df)`` only when Catalyst's plan-time estimate is
-    under the ceiling (``BROADCAST_MAX_BYTES``, env override
-    ``QUIVER_BROADCAST_MAX_BYTES``); otherwise returns ``df`` unhinted so
-    AQE chooses shuffle-vs-broadcast from runtime statistics. Use this for
-    customer/supplier/part-class tables and anything derived per-key from
-    them; keep plain ``F.broadcast`` for constant-cardinality relations
-    (nation/region, singleton aggregates, bounded grids/probe sets).
+    under the ceiling (``BROADCAST_MAX_BYTES``); otherwise returns ``df``
+    unhinted so AQE chooses shuffle-vs-broadcast from runtime statistics.
+    Use this for customer/supplier/part-class tables and anything derived
+    per-key from them; keep plain ``F.broadcast`` for constant-cardinality
+    relations (nation/region, singleton aggregates, bounded grids/probe
+    sets).
 
     Unknown size (stats unavailable) → no hint: at 100 TB the failure mode
     of a wrong hint is an executor OOM, of a missing hint an extra shuffle.
@@ -78,9 +85,8 @@ def maybe_broadcast(df: DataFrame, size_bytes: int | None = None) -> DataFrame:
     statistics (Spark reads Long.MaxValue) but the manifest/footer metadata
     the planner already holds knows the table's on-disk footprint.
     """
-    cap = int(os.environ.get("QUIVER_BROADCAST_MAX_BYTES", BROADCAST_MAX_BYTES))
     size = size_bytes if size_bytes is not None else plan_size_bytes(df)
-    if size is not None and size <= cap:
+    if size is not None and size <= BROADCAST_MAX_BYTES:
         return F.broadcast(df)
     return df
 
@@ -198,15 +204,7 @@ def spread(
     natural_splits = -(-nbytes // max(max_split, 1))
     if natural_splits >= cores:
         return df
-    # width: at least SPREAD_MIN_TASK_BYTES of input per task so the
-    # Python-worker roundtrip (~tens of ms) amortizes over real work —
-    # measured at 32 cores on the 594 KB documents scan: width 32 =
-    # 0.69 s, width 8 = 0.54 s, width 1 = 1.15 s. Capped at the session
-    # parallelism, so larger inputs scale back up to full width.
-    min_task = int(
-        os.environ.get("QUIVER_SPREAD_MIN_TASK_BYTES", 64 * 1024)
-    )
-    width = max(1, min(cores, nbytes // max(min_task, 1)))
+    width = max(1, min(cores, nbytes // SPREAD_MIN_TASK_BYTES))
     if width <= natural_splits or width == 1:
         return df
     return df.repartition(width)

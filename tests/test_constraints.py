@@ -120,6 +120,56 @@ def test_constraint_enforced_on_streaming_sink(spark, tmp_path):
     assert spark.read.format("quiver").load(dst).count() == 1
 
 
+def test_constraint_enforced_on_routed_writes(spark, tmp_path):
+    """sources.write and sources.stream_writer send every write into a
+    CHECK-constrained table to the Python sink, the writer that evaluates
+    the constraints: a violating append (batch or micro-batch) raises and
+    leaves the rows unchanged, a valid one lands."""
+    import pyarrow as pa
+
+    from quiver_spark import sources
+    from quiver_spark.format.writer import write_table
+
+    def df(rows):
+        return spark.createDataFrame(rows, "k long, s string, v double")
+
+    def rows():
+        return sorted(map(tuple, sources.scan(spark, tbl).collect()))
+
+    register(spark)
+    tbl = str(tmp_path / "t_routed")
+    sources.write(df([(1, "a", 10.0)]), tbl)
+    M.add_constraint(spark, tbl, "v_positive", "v > 0")
+    with pytest.raises(Exception, match="v_positive"):
+        sources.write(df([(4, "d", -5.0)]), tbl, mode="append")
+    assert rows() == [(1, "a", 10.0)]
+    assert sources.write(df([(2, "b", 20.0)]), tbl, mode="append") == "quiver"
+    assert rows() == [(1, "a", 10.0), (2, "b", 20.0)]
+
+    src = tmp_path / "src"
+    src.mkdir()
+    write_table(
+        pa.table({"k": pa.array([3], pa.int64()),
+                  "s": pa.array(["c"]),
+                  "v": pa.array([-3.0], pa.float64())}),
+        str(src / "a.quiver"),
+    )
+    w = sources.stream_writer(
+        spark.readStream.format("quiver").load(str(src)), tbl
+    )
+    assert w._quiver_engine == "quiver"
+    q = (
+        w.option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="v_positive"):
+        q.awaitTermination(120)
+        if q.exception() is not None:
+            raise q.exception()
+    assert rows() == [(1, "a", 10.0), (2, "b", 20.0)]
+
+
 def test_constraint_cli_drop_and_schema_listing(spark, tmp_path, capsys):
     import json as _json
 

@@ -752,3 +752,38 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     # 7. modes outside the contract refuse loudly
     with pytest.raises(ValueError, match="mode"):
         write(src, str(tmp_path / "x"), mode="ignore")
+
+
+def test_overwrite_of_existing_flat_table_swaps_a_generation(spark, tmp_path):
+    """sources.write sends an overwrite of a directory that already holds
+    a table to the Python sink's staged generation swap, even when the
+    table is flat (no ``_current`` yet). The JVM writer deletes the
+    table's files before any task runs, so an overwrite that reads its
+    own destination lost every file, and one whose task failed left an
+    unreadable table."""
+    _require_jar(spark)
+    from quiver_spark.sources import scan, write
+
+    src = spark.range(1000).selectExpr("id AS k", "concat('v', id) AS s")
+
+    def rows(d):
+        return sorted(map(tuple, scan(spark, d).collect()))
+
+    # in place: the new snapshot holds exactly the filtered rows
+    t1 = str(tmp_path / "filtered")
+    assert write(src, t1) == "quiverjvm"
+    assert not os.path.exists(os.path.join(t1, "_current"))
+    kept = scan(spark, t1).filter("k >= 500")
+    assert write(kept, t1, mode="overwrite") == "quiver"
+    assert rows(t1) == [(k, f"v{k}") for k in range(500, 1000)]
+
+    # a failing overwrite leaves the old rows readable
+    t2 = str(tmp_path / "failed")
+    assert write(src, t2) == "quiverjvm"
+    before = rows(t2)
+    boom = scan(spark, t2).selectExpr(
+        "if(k >= 0, raise_error('overwrite task failed'), k) AS k", "s"
+    )
+    with pytest.raises(Exception, match="overwrite task failed"):
+        write(boom, t2, mode="overwrite")
+    assert rows(t2) == before

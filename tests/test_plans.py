@@ -360,7 +360,9 @@ def test_broadcast_hint_is_size_gated(spark, monkeypatch):
     # 100 TB posture (simulated): ceiling below customer's footprint and
     # Spark's own auto-broadcast off so only an explicit hint COULD
     # broadcast — the gate must emit none
-    monkeypatch.setenv("QUIVER_BROADCAST_MAX_BYTES", "1")
+    from quiver_spark import tables
+
+    monkeypatch.setattr(tables, "BROADCAST_MAX_BYTES", 1)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

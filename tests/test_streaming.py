@@ -1173,3 +1173,32 @@ def test_jvm_stream_metadata_column_upstream_gap(spark, tmp_path):
         "Spark now delivers metadata columns to streaming scans — "
         "drop this pin and advertise streaming file identity"
     )
+
+
+def test_quiverjvm_stream_scan_leaves_no_trace(spark):
+    """The streaming gate query runs its stream in a sibling session and
+    cleans up after the drain: the caller's SQL conf and temp views are
+    unchanged and no checkpoint directory is left behind."""
+    import glob
+    import tempfile
+
+    from quiver_spark.jvm import attach_jar
+    from quiver_spark.operators.format_queries_jvm import quiverjvm_stream_scan
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar unavailable")
+
+    def checkpoints():
+        return set(glob.glob(
+            os.path.join(tempfile.gettempdir(), "quiver_qjs_ckpt_*")
+        ))
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    before = (checkpoints(), views())
+    rows = quiverjvm_stream_scan(spark, SF_DIR).collect()
+    assert len(rows) == 5  # one aggregate row per language
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert (checkpoints(), views()) == before
