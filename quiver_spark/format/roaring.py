@@ -50,10 +50,6 @@ def serialize(positions: np.ndarray) -> bytes:
     return b"".join(out)
 
 
-def serialized_size(positions: np.ndarray) -> int:
-    return len(serialize(positions))
-
-
 def deserialize(buf: bytes | memoryview) -> np.ndarray:
     """Parse portable roaring bytes → sorted uint32 positions."""
     buf = memoryview(buf)

@@ -205,6 +205,7 @@ public class QuiverJvmDataSource implements TableProvider, DataSourceRegister {
 
     @Override
     public Write build() {
+      refuseCheckConstraints(options);
       final boolean doTruncate = truncate;
       return new Write() {
         @Override
@@ -222,6 +223,29 @@ public class QuiverJvmDataSource implements TableProvider, DataSourceRegister {
           return new QuiverJvmStreamingWrite(schema, options);
         }
       };
+    }
+
+    /** CHECK constraints (maintenance.add_constraint) live in the live
+     * manifest and only the Python 'quiver' sink evaluates them, so a
+     * batch or streaming write into such a table is refused here, before
+     * any task runs: a violating row can never land through this format.
+     * An unreadable manifest counts as none, as in the Python sink. */
+    private static void refuseCheckConstraints(Map<String, String> options) {
+      String path = QuiverJvmRead.localPath(options.get("path"));
+      if (path == null || !new java.io.File(path).isDirectory()) return;
+      com.fasterxml.jackson.databind.JsonNode man;
+      try {
+        man = QuiverJvmRead.readManifestRaw(QuiverJvmRead.resolveRoot(path));
+      } catch (java.io.IOException unreadable) {
+        return;
+      }
+      if (man != null && man.path("check_constraints").size() > 0) {
+        throw new UnsupportedOperationException(
+            "quiverjvm: " + path + " has CHECK constraints "
+                + man.get("check_constraints") + ", which this writer does "
+                + "not evaluate — write with the Python 'quiver' sink "
+                + "(sources.write routes there)");
+      }
     }
   }
 

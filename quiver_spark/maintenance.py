@@ -20,6 +20,10 @@ import re
 #: metadata-column name the row-level ops use for touched-file detection;
 #: underscored to stay clear of user schemas (reader raises on collision)
 _FILE_COL = "_qv_source_file"
+#: data-file globs of both table formats (quiver and arrowipc tables share
+#: the layout): the driver-local snapshot operations (clone, ALTER) serve
+#: either
+TABLE_GLOBS = ("*.quiver", "*.arrow")
 
 
 def _dir_stats(src_dir: str) -> tuple[int, int]:
@@ -325,11 +329,7 @@ def clone_snapshot(
     deployment would server-side-copy instead."""
     import shutil
 
-    from quiver_spark.sources.quiver_datasource import (
-        _CURRENT,
-        _data_root,
-        _list_files_pattern,
-    )
+    from quiver_spark.sources import snapshot
 
     if os.path.exists(dst_table) and any(
         not e.startswith(("_", ".")) for e in os.listdir(dst_table)
@@ -340,11 +340,10 @@ def clone_snapshot(
             f"clone destination {dst_table!r} already exists and is not "
             "empty — clones only create NEW tables"
         )
-    src_root = _data_root(src_table, version)
-    # format-agnostic: quiver and arrowipc tables share the layout
-    files = _list_files_pattern(src_root, "*.quiver") + _list_files_pattern(
-        src_root, "*.arrow"
-    )
+    src_root = snapshot.data_root(src_table, version)
+    files = [
+        f for g in TABLE_GLOBS for f in snapshot.list_files(src_root, g)
+    ]
     if not files:
         raise ValueError(f"nothing to clone: no data files under {src_root}")
     gen = "gen-000001"
@@ -356,19 +355,9 @@ def clone_snapshot(
     shutil.rmtree(staging, ignore_errors=True)
     dst_root = staging
     os.makedirs(dst_root, exist_ok=True)
-    linked = 0
-    for f in files:
-        rel = os.path.relpath(f, src_root)
-        dst = os.path.join(dst_root, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        for s, d in ((f, dst), (f + ".stats.json", dst + ".stats.json")):
-            if not os.path.exists(s):
-                continue
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-        linked += 1
+    linked = snapshot.link_files(
+        src_root, dst_root, [os.path.relpath(f, src_root) for f in files]
+    )
     from quiver_spark.sources.manifest import manifest_path, rebuild_manifest
 
     src_man = manifest_path(src_root)
@@ -382,10 +371,10 @@ def clone_snapshot(
     # generation — readers fail LOUDLY ("corrupt generation pointer"),
     # never silently read a partial flat layout — and the retry still
     # works (both residues are hidden entries the pre-check ignores).
-    tmp = os.path.join(dst_table, _CURRENT + ".tmp")
+    tmp = os.path.join(dst_table, snapshot.CURRENT + ".tmp")
     with open(tmp, "w") as fh:
         fh.write(gen)
-    os.replace(tmp, os.path.join(dst_table, _CURRENT))
+    os.replace(tmp, os.path.join(dst_table, snapshot.CURRENT))
     os.rename(dst_root, os.path.join(dst_table, gen))
     return {
         "src": src_table,
@@ -393,7 +382,7 @@ def clone_snapshot(
         if src_root != src_table
         else "<flat>",
         "dst": dst_table,
-        "files_linked": linked,
+        "files_linked": len(linked),
     }
 
 
@@ -484,46 +473,31 @@ def _file_schemas(man, files: list[str], root: str) -> dict[str, object]:
 
 
 def _commit_evolution(table: str, mutate) -> dict:
-    """Shared ALTER commit: under the table writer lock, resolve the live
-    snapshot, hard-link every data file (+sidecar) into a freshly claimed
-    generation, let ``mutate(man, root, rel_schemas, raw)`` rewrite the
+    """Shared ALTER commit: a metadata-only ``snapshot.commit`` — every
+    live data file (+sidecar) is hard-linked into a freshly claimed
+    generation, ``mutate(man, root, rel_schemas, raw)`` rewrites the
     copied manifest (declared schema / per-entry cmaps; it returns the
-    report dict), stamp a metadata-only commit, and CAS the pointer.
-    Crash-safe: an unclaimed/unswapped generation directory is invisible
-    to readers and reclaimed by retention; the old generation stays
-    retained for time travel / rollback."""
-    import shutil
-
+    report dict), a metadata-only commit is stamped, and the pointer is
+    CAS-swapped. No retention runs: the old generation stays retained for
+    time travel / rollback. A failed ALTER removes its claim."""
+    from quiver_spark.sources import snapshot
     from quiver_spark.sources.manifest import (
         load_manifest,
-        manifest_path,
         metadata_commit,
         rebuild_manifest,
-        remove_manifest,
-    )
-    from quiver_spark.sources.pointer_store import get_pointer_store
-    from quiver_spark.sources.quiver_datasource import (
-        _GEN_RE,
-        _data_root,
-        _list_files_pattern,
     )
 
-    store = get_pointer_store()
-    with store.lock(table):
-        cur_ptr = store.read_pointer(table)
-        root = _data_root(table)
+    report: dict = {}
+    stamped: dict = {}
 
-        def live_files():
-            return _list_files_pattern(root, "*.quiver") + _list_files_pattern(
-                root, "*.arrow"
-            )
-
-        files = live_files()
-        if not files:
+    def evolve(root: str, rels: list[str]) -> None:
+        if not rels:
             raise ValueError(f"nothing to alter: no data files under {root}")
+        files = [os.path.join(root, r) for r in rels]
         man = load_manifest(root)
         # the ALTER's source of truth is the manifest — make sure it
         # covers (and stat-matches) every live file before mutating it
+        # (the links share the live files' inodes, so their stats match)
         if man is None or any(man.lookup(f) is None for f in files):
             rebuild_manifest(root)
             man = load_manifest(root)
@@ -531,69 +505,20 @@ def _commit_evolution(table: str, mutate) -> dict:
                 raise ValueError(f"cannot build a manifest under {root}")
         rel_schemas = _file_schemas(man, files, root)
 
-        # claim the next generation (exclusive-create, same protocol as
-        # the sink) and hard-link the snapshot into it
-        nums = [
-            int(g.split("-", 1)[1])
-            for g in os.listdir(table)
-            if _GEN_RE.fullmatch(g)
-        ]
-        nxt = max(nums, default=0) + 1
-        while not store.claim_generation(table, f"gen-{nxt:06d}"):
-            nxt += 1
-        gen_name = f"gen-{nxt:06d}"
-        new_root = os.path.join(table, gen_name)
-        for f in files:
-            rel = os.path.relpath(f, root)
-            dst = os.path.join(new_root, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            for s, d in ((f, dst), (f + ".stats.json", dst + ".stats.json")):
-                if not os.path.exists(s):
-                    continue
-                try:
-                    os.link(s, d)
-                except OSError:
-                    shutil.copy2(s, d)
-        shutil.copy2(manifest_path(root), manifest_path(new_root))
-
-        report: dict = {}
-
         def _mutate_raw(raw):
             report.update(mutate(man, root, rel_schemas, raw))
             # label the zero-file commit in the manifest so the commit
             # history (quiver-tools commits) can show WHICH DDL ran
             raw["_commit_op"] = report.get("op")
 
-        seq = metadata_commit(new_root, _mutate_raw)
-        from quiver_spark.sources.quiver_datasource import _mark_committed
+        stamped["commit"] = metadata_commit(root, _mutate_raw)
+        stamped["files_linked"] = len(rels)
 
-        try:
-            store.swap_pointer(table, gen_name, cur_ptr)
-        except Exception:
-            # a lost swap (concurrent writer won the CAS) must not leave
-            # the claimed generation behind: it would be the NEWEST
-            # number on disk, so retention would keep the orphan forever
-            # while displacing genuinely retained snapshots — the same
-            # cleanup the sink's publish performs on a lost race
-            shutil.rmtree(new_root, ignore_errors=True)
-            raise
-        _mark_committed(new_root)
-        if cur_ptr is None:
-            # flat layout superseded by the first generation: remove the
-            # flat copies (data lives on through the links) and the dead
-            # root manifest — same sweep the sink's first overwrite does
-            for f in files:
-                for p in (f, f + ".stats.json"):
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-            remove_manifest(root)
-        report.update(
-            {"table": table, "generation": gen_name, "commit": seq,
-             "files_linked": len(files)}
-        )
-        return report
+    root = snapshot.commit(table, TABLE_GLOBS, overwrite=True, mutate=evolve)
+    report.update(
+        {"table": table, "generation": os.path.basename(root), **stamped}
+    )
+    return report
 
 
 def _declared_schema(man, rel_schemas: dict):
@@ -1104,27 +1029,13 @@ def expire_generations(path: str, keep: int = 1) -> dict:
     only, no Spark session); returns what was removed."""
     import shutil
 
-    from quiver_spark.sources.quiver_datasource import (
-        _CURRENT,
-        _GEN_RE,
-        _data_root,
-    )
+    from quiver_spark.sources import snapshot
 
     keep = max(1, int(keep))
-    cur_path = os.path.join(path, _CURRENT)
-    if not os.path.exists(cur_path):
+    if not os.path.exists(os.path.join(path, snapshot.CURRENT)):
         return {"dir": path, "removed": [], "kept": [], "note": "no generations"}
-    live = os.path.basename(_data_root(path))
-    gens = sorted(
-        (
-            d
-            for d in os.listdir(path)
-            if _GEN_RE.fullmatch(d) and os.path.isdir(os.path.join(path, d))
-        ),
-        # numeric, not lexicographic: 7-digit names (past gen 999999)
-        # would otherwise sort before 6-digit ones and break retention
-        key=lambda d: int(d.split("-")[1]),
-    )
+    live = os.path.basename(snapshot.data_root(path))
+    gens = snapshot.generations(path)
     # Retention counts only generations AT OR BELOW the live one — a
     # directory NEWER than the live pointer is either a concurrent
     # writer's in-flight claim (not ours to touch) or a crashed/raced
@@ -1132,9 +1043,9 @@ def expire_generations(path: str, keep: int = 1) -> dict:
     # directory here would both keep garbage forever (it is always the
     # newest number) and displace a genuinely retained snapshot from the
     # keep window.
-    live_num = int(live.split("-")[1])
-    snapshots = [g for g in gens if int(g.split("-")[1]) <= live_num]
-    newer = [g for g in gens if int(g.split("-")[1]) > live_num]
+    live_num = snapshot.gen_number(live)
+    snapshots = [g for g in gens if snapshot.gen_number(g) <= live_num]
+    newer = [g for g in gens if snapshot.gen_number(g) > live_num]
     # newest `keep` survive; the live generation survives unconditionally
     kept = set(snapshots[-keep:]) | {live}
     removed = []
@@ -1168,13 +1079,12 @@ def vacuum(
     import shutil
     import time as _time
 
-    from quiver_spark.sources.quiver_datasource import (
-        _data_root,
-        sweep_stale_staging,
-    )
+    from quiver_spark.sources import snapshot
 
     expired = expire_generations(path, keep=keep)
-    swept_staging = sweep_stale_staging(path, max_age_sec=staging_age_sec)
+    swept_staging = snapshot.sweep_stale_staging(
+        path, max_age_sec=staging_age_sec
+    )
     # orphaned generation claims: a directory NEWER than the live pointer
     # whose commit never swapped (crashed writer, lost lock-less race).
     # expire_generations deliberately skips them (a LIVE concurrent
@@ -1185,9 +1095,7 @@ def vacuum(
     for g in expired.get("skipped_inflight", []):
         gp = os.path.join(path, g)
         try:
-            from quiver_spark.sources.quiver_datasource import _COMMITTED
-
-            if os.path.exists(os.path.join(gp, _COMMITTED)):
+            if os.path.exists(os.path.join(gp, snapshot.COMMITTED)):
                 # committed marker: a RETAINED snapshot sitting newer
                 # than the live pointer (rollback) — never a corpse
                 continue
@@ -1211,7 +1119,7 @@ def vacuum(
     except OSError:
         pass
     orphan_sidecars = []
-    root = _data_root(path)
+    root = snapshot.data_root(path)
     for dirpath, dirs, files in os.walk(root):
         # never descend into hidden/staging subtrees (the same
         # any-segment-starting-with-_-or-. convention the file listing
@@ -1252,21 +1160,22 @@ def rollback_generation(path: str, version: int) -> dict:
     overwrite or :func:`expire_generations` reclaims them, so a rollback
     is itself reversible until then. Driver-local: pointer write only, no
     Spark session, no data movement."""
+    from quiver_spark.sources import snapshot
     from quiver_spark.sources.pointer_store import get_pointer_store
-    from quiver_spark.sources.quiver_datasource import _CURRENT, _data_root
 
     store = get_pointer_store()
     with store.lock(path):
         cur = store.read_pointer(path)
         if cur is None:
             raise ValueError(
-                f"{path} has no generation pointer ({_CURRENT}) — only "
+                f"{path} has no generation pointer "
+                f"({snapshot.CURRENT}) — only "
                 "tables written by overwrite-mode sinks can roll back"
             )
         try:
             # the reader's own version resolver validates retention and
             # names what IS retained in its error — one source of truth
-            name = os.path.basename(_data_root(path, version=version))
+            name = os.path.basename(snapshot.data_root(path, version=version))
         except ValueError as exc:
             raise ValueError(
                 f"rollback target not retained: {exc} (retention requires "
@@ -1282,14 +1191,8 @@ def rollback_generation(path: str, version: int) -> dict:
         # touches UNMARKED newer-than-live dirs) can never mistake a
         # retained snapshot for a crashed writer's corpse — this also
         # retrofits tables whose generations predate the marker
-        from quiver_spark.sources.quiver_datasource import (
-            _GEN_RE as _gre,
-            _mark_committed,
-        )
-
-        for g in os.listdir(path):
-            if _gre.fullmatch(g) and os.path.isdir(os.path.join(path, g)):
-                _mark_committed(os.path.join(path, g))
+        for g in snapshot.generations(path):
+            snapshot.mark_committed(os.path.join(path, g))
         # CDC sequence-reuse guard: the restored snapshot's manifest
         # carries an OLDER commit_seq; leaving it would let the next
         # commit re-issue numbers the rolled-back head already used, so

@@ -19,6 +19,7 @@ pages (src/write/writer.rs:91-167 envelope) re-read exactly.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +45,30 @@ def _jvm_scan(spark: SparkSession, table_dir: str, **options: str) -> DataFrame:
     for k, v in options.items():
         reader = reader.option(k, str(v))
     return reader.load(table_dir)
+
+
+#: session time zone of the event-time stream fixtures (see
+#: quiverjvm_stream_pipeline_scan)
+_UTC = {"spark.sql.session.timeZone": "UTC"}
+
+
+@contextlib.contextmanager
+def _stream_session(spark: SparkSession, prefix: str, confs: dict | None = None):
+    """A sibling session (same SparkContext and attached jar, its own SQL
+    conf and temp views) with ``confs`` set, plus a fresh checkpoint
+    directory that is removed afterwards: a stream fixture changes
+    neither the caller's session nor ``/tmp``."""
+    import shutil
+    import tempfile
+
+    stream_spark = spark.newSession()
+    for k, v in (confs or {}).items():
+        stream_spark.conf.set(k, v)
+    ckpt = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield stream_spark, ckpt
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -956,8 +981,6 @@ def quiverjvm_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-listing deltas ({"files": [...]}, the Python source's exact
     protocol), rate limiting via max_files_per_trigger +
     SupportsTriggerAvailableNow."""
-    import shutil
-    import tempfile
     import uuid
 
     from quiver_spark.jvm import attach_jar
@@ -980,11 +1003,10 @@ def quiverjvm_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation still parallelizes with input splits; only ≤|langs|
     # merged rows reach the store), so a small constant is the
     # scale-correct setting, not a local tune.
-    stream_spark = spark.newSession()
-    stream_spark.conf.set("spark.sql.shuffle.partitions", "8")
     name = "qjs_" + uuid.uuid4().hex[:8]
-    ckpt = tempfile.mkdtemp(prefix="quiver_qjs_ckpt_")
-    try:
+    with _stream_session(
+        spark, "quiver_qjs_ckpt_", {"spark.sql.shuffle.partitions": "8"}
+    ) as (stream_spark, ckpt):
         q = (
             stream_spark.readStream.format("quiverjvm")
             .load(d)
@@ -1011,8 +1033,6 @@ def quiverjvm_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # readable after its view is dropped
         result = stream_spark.table(name)
         stream_spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return result
 
 
@@ -1038,8 +1058,6 @@ def quiverjvm_stream_sink_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM batch scan must equal the parquet oracle — the write-path parity
     contract under the driver's hash. Rows never cross the JVM→Python
     boundary in either direction."""
-    import tempfile
-
     from quiver_spark.jvm import attach_jar
     from quiver_spark.operators.format_queries import quiver_dir
     from quiver_spark.operators.format_queries2 import _marker_dir
@@ -1049,22 +1067,22 @@ def quiverjvm_stream_sink_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(d: str) -> None:
         src = quiver_dir(spark, sf_dir, "orders")
-        ckpt = tempfile.mkdtemp(prefix="quiver_qjsink_ckpt_")
-        q = (
-            spark.readStream.format("quiverjvm")
-            .load(src)
-            .writeStream.format("quiverjvm")
-            .option("path", d)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "quiverjvm_stream_sink_scan: stream did not drain within "
-                "300 s — refusing to cache a partial fixture"
+        with _stream_session(spark, "quiver_qjsink_ckpt_") as (ss, ckpt):
+            q = (
+                ss.readStream.format("quiverjvm")
+                .load(src)
+                .writeStream.format("quiverjvm")
+                .option("path", d)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
+            if not q.awaitTermination(300):
+                q.stop()
+                raise RuntimeError(
+                    "quiverjvm_stream_sink_scan: stream did not drain "
+                    "within 300 s — refusing to cache a partial fixture"
+                )
 
     d = _marker_dir(spark, sf_dir, "orders-jvm-stream-sink", build)
     return (
@@ -1130,8 +1148,6 @@ def quiverjvm_stream_pipeline_scan(spark: SparkSession, sf_dir: str) -> DataFram
     and stay decimal in the landed table; the read-back summary sums
     decimals exactly and casts to double ONCE. Window starts are whole
     hours (epoch-aligned in both engines)."""
-    import tempfile
-
     from quiver_spark.jvm import attach_jar
     from quiver_spark.operators.format_queries import quiver_dir
     from quiver_spark.operators.format_queries2 import _marker_dir
@@ -1142,48 +1158,47 @@ def quiverjvm_stream_pipeline_scan(spark: SparkSession, sf_dir: str) -> DataFram
 
     def build(d: str) -> None:
         src = quiver_dir(spark, sf_dir, "events")
-        ckpt = tempfile.mkdtemp(prefix="quiver_qjpipe_ckpt_")
         # Spark refuses an event-time watermark on TIMESTAMP_NTZ (the
-        # quiver mapping for tz-less µs). Pin the session to UTC so the
-        # NTZ→TIMESTAMP cast is instant-identity, window on the cast,
-        # and cast the window start BACK to NTZ for the landed table —
+        # quiver mapping for tz-less µs). The stream session is pinned
+        # to UTC so the NTZ→TIMESTAMP cast is instant-identity; the
+        # window start is cast BACK to NTZ for the landed table —
         # wall-clock round trip, tz-free like every other events gate.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        windowed = (
-            spark.readStream.format("quiverjvm")
-            .load(src)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "17 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(F.col("value").cast("decimal(18,6)")).alias("val_sum"),
+        with _stream_session(spark, "quiver_qjpipe_ckpt_", _UTC) as (ss, ckpt):
+            windowed = (
+                ss.readStream.format("quiverjvm")
+                .load(src)
+                .withColumn("ts", F.col("ts").cast("timestamp"))
+                .withWatermark("ts", "17 minutes")
+                .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
+                .agg(
+                    F.count(F.lit(1)).alias("cnt"),
+                    F.sum(F.col("value").cast("decimal(18,6)")).alias("val_sum"),
+                )
+                .select(
+                    F.col("win.start").cast("timestamp_ntz").alias("ws"),
+                    "event_type",
+                    "cnt",
+                    "val_sum",
+                )
             )
-            .select(
-                F.col("win.start").cast("timestamp_ntz").alias("ws"),
-                "event_type",
-                "cnt",
-                "val_sum",
+            writer = stream_writer(windowed, d, partition_by="event_type")
+            if writer._quiver_engine != "quiverjvm":
+                raise RuntimeError(
+                    "quiverjvm_stream_pipeline_scan: router must pick the JVM "
+                    f"sink, got {writer._quiver_engine}"
+                )
+            q = (
+                writer.outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        )
-        writer = stream_writer(windowed, d, partition_by="event_type")
-        if writer._quiver_engine != "quiverjvm":
-            raise RuntimeError(
-                "quiverjvm_stream_pipeline_scan: router must pick the JVM "
-                f"sink, got {writer._quiver_engine}"
-            )
-        q = (
-            writer.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "quiverjvm_stream_pipeline_scan: stream did not drain "
-                "within 300 s — refusing to cache a partial fixture"
-            )
+            if not q.awaitTermination(300):
+                q.stop()
+                raise RuntimeError(
+                    "quiverjvm_stream_pipeline_scan: stream did not drain "
+                    "within 300 s — refusing to cache a partial fixture"
+                )
 
     d = _marker_dir(spark, sf_dir, "events-jvm-stream-pipeline", build)
     return (
@@ -1260,8 +1275,6 @@ def quiverjvm_stream_sessions_scan(spark: SparkSession, sf_dir: str) -> DataFram
     source/sink pair. Decimal per-session sums keep float order out of
     the hash; session_start is emitted at full µs precision (strftime
     %f), proving the session boundaries match to the microsecond."""
-    import tempfile
-
     from quiver_spark.jvm import attach_jar
     from quiver_spark.operators.format_queries import quiver_dir
     from quiver_spark.operators.format_queries2 import _marker_dir
@@ -1272,46 +1285,45 @@ def quiverjvm_stream_sessions_scan(spark: SparkSession, sf_dir: str) -> DataFram
 
     def build(d: str) -> None:
         src = quiver_dir(spark, sf_dir, "events")
-        ckpt = tempfile.mkdtemp(prefix="quiver_qjsess_ckpt_")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        sessions = (
-            spark.readStream.format("quiverjvm")
-            .load(src)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "17 minutes")
-            .groupBy(
-                F.session_window("ts", "30 minutes").alias("win"),
-                "user_id",
+        with _stream_session(spark, "quiver_qjsess_ckpt_", _UTC) as (ss, ckpt):
+            sessions = (
+                ss.readStream.format("quiverjvm")
+                .load(src)
+                .withColumn("ts", F.col("ts").cast("timestamp"))
+                .withWatermark("ts", "17 minutes")
+                .groupBy(
+                    F.session_window("ts", "30 minutes").alias("win"),
+                    "user_id",
+                )
+                .agg(
+                    F.count(F.lit(1)).alias("n_events"),
+                    F.sum(F.col("value").cast("decimal(18,6)")).alias("val_sum"),
+                )
+                .select(
+                    F.col("win.start").cast("timestamp_ntz").alias("ss"),
+                    "user_id",
+                    "n_events",
+                    "val_sum",
+                )
             )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,6)")).alias("val_sum"),
+            writer = stream_writer(sessions, d)
+            if writer._quiver_engine != "quiverjvm":
+                raise RuntimeError(
+                    "quiverjvm_stream_sessions_scan: router must pick the JVM "
+                    f"sink, got {writer._quiver_engine}"
+                )
+            q = (
+                writer.outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-            .select(
-                F.col("win.start").cast("timestamp_ntz").alias("ss"),
-                "user_id",
-                "n_events",
-                "val_sum",
-            )
-        )
-        writer = stream_writer(sessions, d)
-        if writer._quiver_engine != "quiverjvm":
-            raise RuntimeError(
-                "quiverjvm_stream_sessions_scan: router must pick the JVM "
-                f"sink, got {writer._quiver_engine}"
-            )
-        q = (
-            writer.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "quiverjvm_stream_sessions_scan: stream did not drain "
-                "within 300 s — refusing to cache a partial fixture"
-            )
+            if not q.awaitTermination(300):
+                q.stop()
+                raise RuntimeError(
+                    "quiverjvm_stream_sessions_scan: stream did not drain "
+                    "within 300 s — refusing to cache a partial fixture"
+                )
 
     d = _marker_dir(spark, sf_dir, "events-jvm-stream-sessions", build)
     return (

@@ -114,16 +114,6 @@ LANG_MARKERS: tuple[tuple[str, tuple[str, ...]], ...] = (
 )
 
 
-def _occurrence_count(text: Column, marker: str) -> Column:
-    """# of occurrences of ``' marker '`` in ``' '||text||' '`` via length
-    arithmetic (identical in any engine; no regex)."""
-    padded = F.concat(F.lit(" "), text, F.lit(" "))
-    needle = f" {marker} "
-    return (
-        F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit("")))
-    ) / len(needle)
-
-
 def _sql_occurrence_count(marker: str) -> str:
     needle = f" {marker} "
     return (

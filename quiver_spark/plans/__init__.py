@@ -15,10 +15,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"

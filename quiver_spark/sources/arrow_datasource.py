@@ -523,6 +523,7 @@ def register_arrow(spark) -> None:
     """Register the arrowipc format with a session (idempotent)."""
     from quiver_spark.sources.quiver_datasource import (
         _REGISTERED_SESSIONS,
+        _register_source,
         ship_package,
     )
 
@@ -530,7 +531,7 @@ def register_arrow(spark) -> None:
     key = ("arrowipc", id(spark))
     if key in _REGISTERED_SESSIONS:
         return
-    spark.dataSource.register(ArrowIpcDataSource)
+    _register_source(spark, ArrowIpcDataSource)
     _REGISTERED_SESSIONS.add(key)
 
 

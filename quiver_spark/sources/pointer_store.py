@@ -1,8 +1,9 @@
-"""Generation-pointer storage seam for the quiver sink's atomic snapshots.
+"""Generation-pointer storage seam for the table layer's atomic snapshots.
 
-The sink's OVERWRITE commit is a two-step protocol: publish staged files
-into a fresh ``gen-NNNNNN/`` directory, then swap the table's ``_current``
-pointer to name it (see ``QuiverWriter._publish``). Both steps touch only
+An OVERWRITE commit is a two-step protocol: publish staged files into a
+fresh ``gen-NNNNNN/`` directory, then swap the table's ``_current``
+pointer to name it (see ``snapshot.commit``, which every sink and ALTER
+publishes through). Both steps touch only
 three storage primitives, which this module isolates behind
 :class:`PointerStore` so a deployment can swap the POSIX implementation
 for an object-store one (S3/GCS manifest object with conditional PUT /

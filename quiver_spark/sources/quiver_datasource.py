@@ -80,7 +80,6 @@ Python round trip); sorted tables get a fresh page_prune relation per call.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import urllib.parse
@@ -98,6 +97,16 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from . import snapshot
+from .snapshot import (  # noqa: F401  (protocol names re-exported here)
+    COMMITTED as _COMMITTED,
+    GEN_RE as _GEN_RE,
+    STAGING_DIR as _STAGING_DIR,
+    data_root as _data_root,
+    list_files as _list_files_pattern,
+    sweep_stale_staging,
+)
 
 FORMAT_NAME = "quiver"
 # Measured on an idle local[32] host at sf0.1 (600k-row lineitem, min of 5
@@ -122,11 +131,6 @@ DEFAULT_PARTITION_BYTES = 128 << 20
 DEFAULT_MAX_ROWS_PER_FILE = 1 << 22
 
 
-#: staging root for the write commit protocol (hidden from readers, the
-#: same convention as Spark's file sinks)
-_STAGING_DIR = "_temporary"
-
-
 def _opt_path(options) -> str:
     """Resolve the datasource's path option to a local filesystem path.
 
@@ -147,133 +151,8 @@ def _opt_path(options) -> str:
     return p
 
 
-#: generation-directory name pattern for atomic overwrite snapshots
-#: (6+ digits: names are zero-padded to 6 but keep resolving past the
-#: millionth overwrite, when :06d naturally widens to 7 digits)
-_GEN_RE = __import__("re").compile(r"gen-\d{6,}")
-#: pointer file naming the live generation (atomic os.replace swap)
-_CURRENT = "_current"
-#: marker stamped inside a generation directory by every SUCCESSFUL
-#: pointer swap: distinguishes a committed snapshot (retained for time
-#: travel — e.g. the generation a rollback moved away from, which sits
-#: NEWER than the live pointer) from an orphaned claim a crashed writer
-#: left behind. vacuum's orphan sweep only ever touches unmarked dirs.
-_COMMITTED = "_committed"
-
-
-def _mark_committed(gen_dir: str) -> None:
-    """Best-effort commit marker (see _COMMITTED) — advisory metadata,
-    never load-bearing for reads, so failures are swallowed."""
-    try:
-        with open(os.path.join(gen_dir, _COMMITTED), "w") as f:
-            f.write("")
-    except OSError:
-        pass
-
-
-def _data_root(path: str, version: str | int | None = None) -> str:
-    """Resolve a table path to its live data root.
-
-    Sink OVERWRITES publish into numbered generation subdirectories
-    (`gen-000001/…`) and atomically swap a `_current` pointer file — so an
-    overwrite is all-or-nothing for every reader that starts after the
-    commit, and a failed job never touches the previous generation.
-    Directories without a pointer (library write_table output, appends to
-    flat layouts, pre-generation tables) resolve to themselves.
-    ``version`` pins a retained older generation (time travel — requires
-    the write to have kept it via ``keep_generations``)."""
-    if not os.path.isdir(path):
-        return path
-    if version is not None:
-        name = (
-            f"gen-{int(version):06d}"
-            if str(version).isdigit()
-            else str(version)
-        )
-        d = os.path.join(path, name)
-        if not _GEN_RE.fullmatch(name) or not os.path.isdir(d):
-            avail = sorted(
-                (
-                    g
-                    for g in os.listdir(path)
-                    if _GEN_RE.fullmatch(g)
-                    and os.path.isdir(os.path.join(path, g))
-                ),
-                # numeric: 7-digit names sort after 6-digit ones
-                key=lambda g: int(g.split("-")[1]),
-            )
-            raise ValueError(
-                f"version {version!r} not found under {path}; retained "
-                f"generations: {avail or 'none'} (older generations are "
-                "kept only when written with keep_generations > 1)"
-            )
-        return d
-    cur = os.path.join(path, _CURRENT)
-    if not os.path.exists(cur):
-        return path
-    with open(cur) as f:
-        name = f.read().strip()
-    d = os.path.join(path, name)
-    if not _GEN_RE.fullmatch(name) or not os.path.isdir(d):
-        raise ValueError(
-            f"corrupt generation pointer {cur}: names {name!r}, which is "
-            "not a retained generation directory"
-        )
-    return d
-
-
-def _list_files_pattern(path: str, pattern: str) -> list[str]:
-    """Committed data files under a resolved root matching ``pattern``,
-    skipping hidden/staging components (any path segment, filename
-    included — the Hadoop/Spark convention): files under _temporary are
-    uncommitted task attempts and must never be scanned."""
-    if not os.path.isdir(path):
-        return [path]
-    out = []
-    for f in glob.glob(os.path.join(path, "**", pattern), recursive=True):
-        rel = os.path.relpath(f, path)
-        if any(seg.startswith(("_", ".")) for seg in rel.split(os.sep)):
-            continue
-        out.append(f)
-    return sorted(out)
-
-
 def _list_files(path: str) -> list[str]:
     return _list_files_pattern(_data_root(path), "*.quiver")
-
-
-def sweep_stale_staging(
-    path: str, max_age_sec: int = 24 * 3600
-) -> list[str]:
-    """Remove abandoned write-attempt staging entries under
-    ``path/_temporary`` older than ``max_age_sec``, then drop the root
-    if empty. Returns the entries VERIFIED gone (an rmtree that failed
-    — e.g. foreign-owned files — is not reported as swept). Shared by
-    the sink's commit-time GC and maintenance.vacuum so the sweep
-    semantics can never diverge. PRECONDITION for callers passing a
-    short age: it must exceed the longest in-flight write, or a live
-    job's staged files can be destroyed mid-commit."""
-    import shutil
-    import time as _time
-
-    swept: list[str] = []
-    stage_root = os.path.join(path, _STAGING_DIR)
-    if os.path.isdir(stage_root):
-        cutoff = _time.time() - max_age_sec
-        for entry in os.listdir(stage_root):
-            full = os.path.join(stage_root, entry)
-            try:
-                if os.path.getmtime(full) < cutoff:
-                    shutil.rmtree(full, ignore_errors=True)
-                    if not os.path.exists(full):
-                        swept.append(entry)
-            except OSError:
-                continue
-    try:
-        os.rmdir(stage_root)  # only if no other attempts remain
-    except OSError:
-        pass
-    return swept
 
 
 def _files_changed_since(files: list[str], man, since: int) -> list[str]:
@@ -638,7 +517,7 @@ class QuiverDataSource(DataSource):
             raise ValueError("quiver datasource requires a path")
         os.makedirs(path, exist_ok=True)
         # overwrite is an ATOMIC GENERATION SWAP at commit time (see
-        # QuiverWriter._publish): staged output publishes into a fresh
+        # snapshot.commit): staged output publishes into a fresh
         # gen-NNNNNN/ directory and a `_current` pointer file is atomically
         # replaced — a failed/killed overwrite job leaves the old table
         # fully intact, and readers never observe partial or doubled data
@@ -1650,10 +1529,10 @@ class QuiverCommit(WriterCommitMessage):
 
 
 class QuiverWriter(DataSourceArrowWriter):
-    #: file patterns the flat-layout GC sweep owns (subclasses writing a
-    #: different format override — the publish/generation protocol itself
-    #: is format-agnostic)
-    DATA_GLOBS = ("*.quiver", "*.quiver.stats.json")
+    #: data-file glob the flat-root sweep owns, sidecars included
+    #: (subclasses writing a different format override — the snapshot
+    #: commit itself is format-agnostic)
+    DATA_GLOBS = ("*.quiver",)
     #: manifest entry format for files this sink publishes (manifest.py)
     MANIFEST_FMT = "quiver"
 
@@ -1918,299 +1797,62 @@ class QuiverWriter(DataSourceArrowWriter):
         return QuiverCommit(task_dir=task_dir, files=tuple(staged))
 
     def _generations(self) -> list[str]:
-        """Generation directory names under the table, sorted by number
-        (NOT lexicographically: past the millionth overwrite names widen
-        to 7 digits and ``gen-1000000`` would sort before ``gen-999999``
-        as a string, corrupting max+1 claiming and GC retention order)."""
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            (
-                d
-                for d in os.listdir(self.path)
-                if _GEN_RE.fullmatch(d)
-                and os.path.isdir(os.path.join(self.path, d))
-            ),
-            key=lambda d: int(d.split("-")[1]),
-        )
+        return snapshot.generations(self.path)
 
-    def _gc_superseded(self, current: str, previous: str | None) -> None:
-        """After a pointer swap: retain ``keep_generations`` generations —
-        the new current, then the IMMEDIATELY-SUPERSEDED one (``previous``,
-        what the pointer named before this swap), then numerically-newest
-        others — delete the rest, and sweep pre-generation flat files
-        (superseded — resolvers can no longer see them once a pointer
-        exists, so leaving them is a disk leak).
-
-        ``previous`` ranks ABOVE numerically-newer others because after a
-        rollback the live generation is an old number: newest-first
-        retention would GC the generation mid-scan readers froze at plan
-        time, breaking the documented keep_generations >= 2 isolation
-        contract (pinned in tests/test_concurrent_writers.py)."""
-        import shutil
-
-        keep = max(1, int(self.options.get("keep_generations", "1")))
-        ranked: list[str] = [current]
-        if previous is not None and previous != current:
-            ranked.append(previous)
-        for g in reversed(self._generations()):  # newest first
-            if g not in ranked:
-                ranked.append(g)
-        for g in ranked[keep:]:
-            shutil.rmtree(os.path.join(self.path, g), ignore_errors=True)
-        for pat in self.DATA_GLOBS:
-            for f in glob.glob(
-                os.path.join(self.path, "**", pat), recursive=True
-            ):
-                segs = os.path.relpath(f, self.path).split(os.sep)
-                if any(s.startswith(("_", ".")) for s in segs):
-                    continue  # staging / hidden
-                if _GEN_RE.fullmatch(segs[0]):
-                    continue  # lives inside a generation
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-        # the flat-root manifest described the files just swept; each
-        # generation carries its own manifest, so the root copy is dead
-        from .manifest import remove_manifest
-
-        remove_manifest(self.path)
-
-    def _publish(self, messages) -> None:
-        """Move every committed task's staged files into the live data
-        root (same-filesystem rename; sidecars travel with their files).
-
-        OVERWRITE is an atomic generation swap: staged files move into a
-        fresh ``gen-NNNNNN/`` directory — invisible to every resolver —
-        and only then is the ``_current`` pointer atomically replaced
-        (os.replace). Readers that start after the swap see the new
-        snapshot in full; readers that resolved earlier keep a consistent
-        old snapshot FOR AS LONG AS IT IS RETAINED: with the default
-        ``keep_generations=1`` the superseded generation is deleted at
-        commit, so snapshot isolation for a reader still mid-scan across a
-        concurrent overwrite requires ``keep_generations >= 2`` (retained
-        ones are also readable via ``.option("version", N)``). A crash
-        before the swap leaves the old table untouched (the orphan
-        generation is GC'd by the next overwrite); after the swap, at
-        worst a superseded generation lingers. There is NO window of
-        partial or doubled data — the failure modes of both
-        delete-then-move and move-then-delete. APPENDS publish into the
-        currently-live root (generation or flat).
-
-        Multi-writer contract (primitives in ``pointer_store.py``): the
-        whole publish runs under the store's per-table writer lock, the
-        generation directory is claimed with exclusive-create (two racing
-        overwrites can never share a ``gen-NNNNNN``), the pointer swap is
-        compare-and-swap against the generation observed at publish start,
-        and an append re-resolves its destination under the lock and
-        verifies it is still live before returning. With the default
-        local store (advisory flock) concurrent writers serialize: two
-        overwrites commit as two distinct generations, last swap wins. On
-        a lock-less store every race is still DETECTED — the losing
-        writer gets a ``ConcurrentWriteError``, never a silently mixed or
-        lost snapshot."""
-        import shutil
-
+    def _pointer_store(self):
+        """The store this write commits through. `.option("pointer_store",
+        "unlocked")` forces the lock-less object-store posture and
+        `"cas:<root>"` the conditional-PUT one over a FileBlobStore (the
+        stand-in for S3/GCS): options, not set_pointer_store, because
+        Spark runs the commit in a spawned Python runner process that a
+        driver-side set_pointer_store can never reach — the option
+        travels with the serialized writer. Production object-store
+        adapters still install process-wide via set_pointer_store in the
+        runner's environment."""
         from .pointer_store import (
-            ConcurrentWriteError,
+            ConditionalPutPointerStore,
+            FileBlobStore,
             UnlockedPointerStore,
             get_pointer_store,
         )
 
-        # `.option("pointer_store", "unlocked")` forces the lock-less
-        # object-store posture for THIS write. Needed as an option (not
-        # set_pointer_store) because Spark runs the commit in a spawned
-        # Python runner process that a driver-side set_pointer_store can
-        # never reach — the option travels with the serialized writer.
-        # Production object-store adapters still install process-wide via
-        # set_pointer_store in the runner's environment.
         ps_opt = self.options.get("pointer_store", "")
         if ps_opt.lower() == "unlocked":
-            store = UnlockedPointerStore()
-        elif ps_opt.startswith("cas:"):
-            # conditional-PUT object-store posture: pointer CAS against a
-            # shared blob root (the FileBlobStore double stands in for
-            # S3/GCS — same reason as "unlocked": the commit runs in a
-            # spawned runner that driver-side set_pointer_store can't
-            # reach, so the store travels as an option)
-            from .pointer_store import (
-                ConditionalPutPointerStore,
-                FileBlobStore,
-            )
-
-            store = ConditionalPutPointerStore(
+            return UnlockedPointerStore()
+        if ps_opt.startswith("cas:"):
+            return ConditionalPutPointerStore(
                 FileBlobStore(ps_opt[len("cas:"):])
             )
-        else:
-            store = get_pointer_store()
-        with store.lock(self.path):
-            if self.overwrite:
-                expected = store.read_pointer(self.path)
-                gens = self._generations()
-                nxt = int(gens[-1].split("-")[1]) + 1 if gens else 1
-                # exclusive-create claim; a concurrent writer holding the
-                # number bumps us to the next one (collision-proof names
-                # even on stores whose lock() is a no-op). The dir is
-                # created even with zero staged files: overwrite-with-empty
-                # must yield an EMPTY table, not leave the old one live.
-                while not store.claim_generation(
-                    self.path, f"gen-{nxt:06d}"
-                ):
-                    nxt += 1
-                gen_name = f"gen-{nxt:06d}"
-                dst_root = os.path.join(self.path, gen_name)
-            else:
-                # resolved UNDER the lock: a pre-lock resolution could name
-                # a generation a concurrent overwrite is about to GC
-                dst_root = _data_root(self.path)
-            published: list[str] = []
-            for msg in messages:
-                if msg is None or not msg.task_dir:
-                    continue
-                for rel in msg.files:
-                    dst = os.path.join(dst_root, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    # data file first, then its sidecar: a crash in between
-                    # leaves a data file whose reads are briefly unverified
-                    # (the checksum cache keys on the sidecar's stat, so the
-                    # late sidecar IS picked up) — the reverse order would
-                    # leave permanent orphan sidecars no GC path sweeps
-                    os.replace(os.path.join(msg.task_dir, rel), dst)
-                    side = os.path.join(msg.task_dir, rel + ".stats.json")
-                    if os.path.exists(side):
-                        os.replace(side, dst + ".stats.json")
-                    published.append(rel)
-                shutil.rmtree(msg.task_dir, ignore_errors=True)
-            # File-level copy-on-write: hard-link the carried (untouched)
-            # files of the source snapshot into the new generation. Links
-            # survive the source generation's GC (same inode), so default
-            # retention still reclaims the superseded snapshot's REWRITTEN
-            # files while carried data is never duplicated on disk. An
-            # object-store adapter would server-side-copy here instead.
-            carried: list[str] = []
-            carry_root = None
-            if self.overwrite and self.carry_src is not None:
-                if (expected or "") != self.carry_src:
-                    shutil.rmtree(dst_root, ignore_errors=True)
-                    raise ConcurrentWriteError(
-                        f"row-level rewrite of {self.path} was planned "
-                        f"against snapshot {self.carry_src or '<flat>'!r} "
-                        f"but {expected!r} is now live — a concurrent "
-                        "overwrite won; re-run the rewrite"
-                    )
-                carry_root = (
-                    os.path.join(self.path, self.carry_src)
-                    if self.carry_src
-                    else self.path
-                )
-                for rel in self.carry_files:
-                    src = os.path.join(carry_root, rel)
-                    dst = os.path.join(dst_root, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    if not os.path.exists(src):
-                        # a carried DATA file vanished (e.g. a rival's GC
-                        # inside a lock-less store's narrow window):
-                        # committing would silently drop every row of an
-                        # UNTOUCHED file — abort loudly instead
-                        shutil.rmtree(dst_root, ignore_errors=True)
-                        raise ConcurrentWriteError(
-                            f"row-level rewrite of {self.path}: carried "
-                            f"file {rel!r} is missing from snapshot "
-                            f"{self.carry_src or '<flat>'!r} — the "
-                            "snapshot changed under the rewrite; re-run"
-                        )
-                    for s, d in ((src, dst), (src + ".stats.json",
-                                              dst + ".stats.json")):
-                        if not os.path.exists(s):
-                            continue  # sidecar genuinely optional
-                        try:
-                            os.link(s, d)
-                        except OSError:
-                            shutil.copy2(s, d)
-                    carried.append(rel)
-            # Commit-time manifest: one file describing every published
-            # file's footer + sidecar, so planning reads O(1) files instead
-            # of O(files) (manifest.py rationale). Written BEFORE the
-            # pointer swap — the manifest is part of the atomic snapshot.
-            # Carried files' entries are COPIED from the source snapshot's
-            # manifest (no footer re-reads at commit — O(1) there too).
-            if published or carried or self.overwrite:
-                from .manifest import update_manifest
+        return get_pointer_store()
 
-                # prev_root keeps the CDC commit counter monotone across
-                # generation swaps (an overwrite's fresh manifest continues
-                # the superseded snapshot's sequence); the unconditional
-                # overwrite call stamps even an all-carried or empty
-                # snapshot as one commit.
-                update_manifest(
-                    dst_root,
-                    published,
-                    self.MANIFEST_FMT,
-                    carry=(carry_root, carried) if carried else None,
-                    prev_root=(
-                        (
-                            os.path.join(self.path, expected)
-                            if expected
-                            else self.path
-                        )
-                        if self.overwrite
-                        else None
-                    ),
-                )
-            if self.overwrite:
-                try:
-                    store.swap_pointer(self.path, gen_name, expected)
-                except ConcurrentWriteError:
-                    # lost the CAS on a lock-less store: remove the claimed
-                    # (never-visible, never-committed) generation so it can
-                    # neither be time-traveled into nor count toward
-                    # retention — the failed job's rows are gone, which is
-                    # what a failed overwrite means; retry re-stages them
-                    import shutil
-
-                    shutil.rmtree(dst_root, ignore_errors=True)
-                    raise
-                _mark_committed(dst_root)
-                self._gc_superseded(gen_name, previous=expected)
-            elif os.path.basename(dst_root) != os.path.basename(self.path):
-                # append into a generation: verify it is STILL the live one
-                # before acknowledging (under the local lock this cannot
-                # fire; on a lock-less store it turns append-vs-overwrite
-                # races from silent loss into a loud, retryable failure)
-                live = store.read_pointer(self.path)
-                if live != os.path.basename(dst_root):
-                    raise ConcurrentWriteError(
-                        f"append published into generation "
-                        f"{os.path.basename(dst_root)!r} of {self.path}, "
-                        f"but a concurrent overwrite made {live!r} current "
-                        "— the appended rows are NOT in the live snapshot; "
-                        "re-run the append"
-                    )
-            else:
-                # append into the FLAT table root: verify the table is
-                # still pointer-less before acknowledging. On a lock-less
-                # store, the table's FIRST overwrite can race this append —
-                # its flat-file GC sweep deletes (or orphans behind the new
-                # pointer) the just-appended files, so returning success
-                # would be silent loss (the other half of the
-                # generation-append guard above).
-                live = store.read_pointer(self.path)
-                if live is not None:
-                    raise ConcurrentWriteError(
-                        f"append published into the flat root of "
-                        f"{self.path}, but a concurrent overwrite made "
-                        f"{live!r} current — the appended rows are NOT in "
-                        "the live snapshot; re-run the append"
-                    )
-        self._gc_staging()
-
-    def _gc_staging(self, max_age_sec: int = 24 * 3600) -> None:
-        """Best-effort cleanup of abandoned task attempts: a task that died
-        before reporting a commit message leaves its staging dir behind
-        (invisible to readers, but disk isn't free) — sweep any staging
-        entry older than a day, then drop the root if empty."""
-        sweep_stale_staging(self.path, max_age_sec=max_age_sec)
+    def _publish(self, messages) -> None:
+        """Publish every committed task's staged files through the shared
+        snapshot commit (``snapshot.commit``): an OVERWRITE is an atomic
+        generation swap (plus the hard-linked ``carry_files`` of a
+        row-level rewrite), an APPEND lands in the live root. Readers
+        that resolved before a swap keep a consistent old snapshot for as
+        long as it is retained: with the default ``keep_generations=1``
+        the superseded generation is deleted at commit, so snapshot
+        isolation for a reader still mid-scan across a concurrent
+        overwrite requires ``keep_generations >= 2`` (retained ones are
+        also readable via ``.option("version", N)``). Then sweep task
+        attempts that died before reporting and are older than a day."""
+        snapshot.commit(
+            self.path,
+            self.DATA_GLOBS,
+            overwrite=self.overwrite,
+            staged=[
+                (m.task_dir, m.files)
+                for m in messages
+                if m is not None and m.task_dir
+            ],
+            fmt=self.MANIFEST_FMT,
+            carry_src=self.carry_src,
+            carry=self.carry_files,
+            keep=int(self.options.get("keep_generations", "1")),
+            store=self._pointer_store(),
+        )
+        sweep_stale_staging(self.path)
 
     def _list_data_files(self) -> list[str]:
         return _list_files(self.path)
@@ -2327,6 +1969,19 @@ def ship_package(spark) -> None:
     _SHIPPED_SESSIONS.add(key)
 
 
+def _register_source(spark, source) -> None:
+    """``spark.dataSource.register``, tolerating a name a sibling session
+    (``spark.newSession()``, which shares the SparkContext) registered
+    already: the registration serves every session of the context."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        spark.dataSource.register(source)
+    except AnalysisException as exc:
+        if "DATA_SOURCE_ALREADY_EXISTS" not in str(exc):
+            raise
+
+
 def register(spark) -> None:
     """Register the quiver format with a session (+ ship the package).
 
@@ -2344,7 +1999,7 @@ def register(spark) -> None:
     key = id(spark)
     if key in _REGISTERED_SESSIONS:
         return
-    spark.dataSource.register(QuiverDataSource)
+    _register_source(spark, QuiverDataSource)
     try:
         # our reader implements pushFilters, which Spark refuses to plan
         # unless this conf is on — required for ANY session reading quiver

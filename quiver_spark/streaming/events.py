@@ -129,19 +129,6 @@ def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Sliding windows (1h length, 30m slide)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),
-            "cnt",
-        )
-    )
-
-
 def sessionized_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows per user (gap-based), the streaming twin of the
     batch events_sessionize recipe."""

@@ -228,13 +228,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for spark.sql-style recipes)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

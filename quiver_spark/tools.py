@@ -107,44 +107,25 @@ def cmd_generations(path: str) -> dict:
     """Generation inventory of a table directory: every retained
     `gen-NNNNNN/` snapshot with file/row counts, which one is live, and
     whether a pre-generation flat layout is present."""
-    from quiver_spark.sources.quiver_datasource import (
-        _CURRENT,
-        _GEN_RE,
-        _data_root,
-        _list_files,
-    )
+    from quiver_spark.sources import snapshot
+    from quiver_spark.sources.quiver_datasource import _data_root, _list_files
 
     cur = None
-    cur_path = os.path.join(path, _CURRENT)
+    cur_path = os.path.join(path, snapshot.CURRENT)
     if os.path.exists(cur_path):
         with open(cur_path) as f:
             cur = f.read().strip()
     gens = []
-    names = (
-        sorted(
-            os.listdir(path),
-            # numeric where the name is a generation, else lexicographic
-            key=lambda d: (
-                int(d.split("-")[1]) if _GEN_RE.fullmatch(d) else -1,
-                d,
-            ),
+    for d in snapshot.generations(path):
+        files = _list_files(os.path.join(path, d))
+        gens.append(
+            {
+                "generation": d,
+                "live": d == cur,
+                "files": len(files),
+                "rows": sum(cmd_inspect(f).get("rows", 0) for f in files),
+            }
         )
-        if os.path.isdir(path)
-        else []
-    )
-    for d in names:
-        if _GEN_RE.fullmatch(d) and os.path.isdir(os.path.join(path, d)):
-            files = _list_files(os.path.join(path, d))
-            gens.append(
-                {
-                    "generation": d,
-                    "live": d == cur,
-                    "files": len(files),
-                    "rows": sum(
-                        cmd_inspect(f).get("rows", 0) for f in files
-                    ),
-                }
-            )
     return {
         "dir": path,
         "current": cur,

@@ -170,6 +170,50 @@ def test_constraint_enforced_on_routed_writes(spark, tmp_path):
     assert rows() == [(1, "a", 10.0), (2, "b", 20.0)]
 
 
+def test_quiverjvm_writers_refuse_constrained_tables(spark, tmp_path):
+    """The quiverjvm writers do not evaluate CHECK constraints, so their
+    batch and streaming write builders refuse a table whose live
+    manifest has any, before a task runs: a direct violating append
+    cannot land, and the table keeps its rows."""
+    import pyarrow as pa
+
+    from quiver_spark import sources
+    from quiver_spark.format.writer import write_table
+    from quiver_spark.jvm import attach_jar
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar unavailable")
+    register(spark)
+    tbl = str(tmp_path / "t_jvm")
+    _write(spark, tbl, [(1, "a", 10.0)])
+    M.add_constraint(spark, tbl, "v_positive", "v > 0")
+    with pytest.raises(Exception, match="CHECK constraints"):
+        _write(spark, tbl, [(4, "d", -5.0)], mode="append", fmt="quiverjvm")
+
+    src = tmp_path / "src"
+    src.mkdir()
+    write_table(
+        pa.table({"k": pa.array([3], pa.int64()),
+                  "s": pa.array(["c"]),
+                  "v": pa.array([-3.0], pa.float64())}),
+        str(src / "a.quiver"),
+    )
+    q = (
+        spark.readStream.format("quiver").load(str(src))
+        .writeStream.format("quiverjvm")
+        .option("path", tbl)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="CHECK constraints"):
+        q.awaitTermination(120)
+        if q.exception() is not None:
+            raise q.exception()
+    rows = sorted(map(tuple, sources.scan(spark, tbl).collect()))
+    assert rows == [(1, "a", 10.0)]
+
+
 def test_constraint_cli_drop_and_schema_listing(spark, tmp_path, capsys):
     import json as _json
 

@@ -92,3 +92,37 @@ def test_quiver_relation_refuses_pruning_options(spark, option):
 
     with pytest.raises(ValueError, match="page_prune/partition_prune"):
         quiver_relation(spark, "/nonexistent", **{option: "true"})
+
+
+def test_verify_checksums_scan_routes_to_jvm(spark, monkeypatch, tmp_path):
+    """``verify_checksums`` is served by the JVM reader: a scan with it
+    reads through quiverjvm, not the Python DataSource, and a corrupted
+    page fails the default (checked) read loudly; ``"false"`` routes
+    there too."""
+    import glob
+    import os
+
+    from quiver_spark import sources
+    from quiver_spark.jvm import attach_jar
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar cannot attach")
+    d = str(tmp_path / "t")
+    sources.write(spark.range(5000).selectExpr("id", "id * 2 AS v")
+                  .coalesce(1), d)
+    seen = _spy_reader_formats(monkeypatch)
+    healthy = sources.scan(spark, d, verify_checksums="true")
+    assert seen == ["quiverjvm"]
+    assert healthy.count() == 5000
+    f = glob.glob(os.path.join(d, "**", "*.quiver"), recursive=True)[0]
+    with open(f, "rb") as fh:
+        body = bytearray(fh.read())
+    body[len(body) // 4] ^= 0xFF
+    with open(f, "wb") as fh:
+        fh.write(bytes(body))
+    del seen[:]
+    for opts in ({}, {"verify_checksums": "true"}):
+        with pytest.raises(Exception):
+            sources.scan(spark, d, **opts).collect()
+    sources.scan(spark, d, verify_checksums="false")
+    assert set(seen) == {"quiverjvm"}

@@ -1,0 +1,178 @@
+"""Crash matrix for the shared snapshot commit (``sources/snapshot.py``).
+
+Every Python-engine table commit publishes through ``snapshot.commit``:
+claim a generation, publish staged files, hard-link carried files, write
+the manifest, CAS-swap the pointer. A process that dies between two of
+those steps must leave the table reading as the old snapshot or the new
+one, never a mix, and ``vacuum(staging_age_sec=0)`` must then leave no
+orphan generation or staging directory behind.
+
+The crash is a ``BaseException`` raised at the injection point, so no
+``except Exception`` cleanup runs — the same residue a killed process
+leaves. The commit runs in-process (the sink's commit normally runs in a
+Spark-spawned Python runner a monkeypatch cannot reach): the overwrite
+drives ``QuiverWriter._publish`` with fabricated staged output, and the
+``delete_where`` rewrite runs the real planning with ``sources.write``
+replaced by the Python sink's own write + commit in this process. Each
+case then re-runs the operation to show the table is healthy.
+"""
+
+from __future__ import annotations
+
+import os
+import time
+import uuid
+
+import pyarrow as pa
+import pytest
+
+from quiver_spark import maintenance as M
+from quiver_spark import sources
+from quiver_spark.format.writer import WriteOptions, write_table
+from quiver_spark.sources import snapshot
+from quiver_spark.sources.pointer_store import (
+    LocalPointerStore,
+    get_pointer_store,
+    set_pointer_store,
+)
+from quiver_spark.sources.quiver_datasource import QuiverCommit, QuiverWriter
+
+POINTS = ("staged", "published", "manifest", "swapped")
+
+
+class Crash(BaseException):
+    """The committing process dies here."""
+
+
+@pytest.fixture(autouse=True)
+def _restore_store():
+    prev = get_pointer_store()
+    yield
+    set_pointer_store(prev)
+
+
+def _stage(table: str, ids: list[int]) -> QuiverCommit:
+    task_dir = os.path.join(table, snapshot.STAGING_DIR, uuid.uuid4().hex)
+    os.makedirs(task_dir)
+    rel = f"part-{uuid.uuid4().hex}.quiver"
+    write_table(
+        pa.table({"id": pa.array(ids, type=pa.int64())}),
+        os.path.join(task_dir, rel),
+        WriteOptions(),
+    )
+    return QuiverCommit(task_dir=task_dir, files=(rel,))
+
+
+def _overwrite(table: str, *groups: list[int]) -> None:
+    QuiverWriter({"path": table}, overwrite=True)._publish(
+        [_stage(table, ids) for ids in groups]
+    )
+
+
+def _in_process_sink(monkeypatch) -> None:
+    """``sources.write`` as the Python sink run in this process: the
+    task-side write of the whole frame, then the driver-side commit."""
+
+    def write(df, path, mode="overwrite", partition_by=None, **options):
+        opts = {"path": path, **{k: str(v) for k, v in options.items()}}
+        if partition_by:
+            opts["partition_by"] = ",".join(partition_by)
+        w = QuiverWriter(opts, df.schema, overwrite=mode == "overwrite")
+        w.commit([w.write(iter(df.toArrow().to_batches()))])
+        return "quiver"
+
+    monkeypatch.setattr(sources, "write", write)
+
+
+def _inject(monkeypatch, point: str) -> None:
+    if point == "staged":
+
+        class NoClaim(LocalPointerStore):
+            def claim_generation(self, table_path, gen_name):
+                raise Crash
+
+        set_pointer_store(NoClaim())
+    elif point == "swapped":
+
+        class DiesAfterSwap(LocalPointerStore):
+            def swap_pointer(self, table_path, new_gen, expected):
+                super().swap_pointer(table_path, new_gen, expected)
+                raise Crash
+
+        set_pointer_store(DiesAfterSwap())
+    else:
+        real = snapshot._write_manifest
+
+        def write_manifest(*args, **kwargs):
+            if point == "manifest":
+                real(*args, **kwargs)
+            raise Crash
+
+        monkeypatch.setattr(snapshot, "_write_manifest", write_manifest)
+
+
+def _state(spark, table: str) -> tuple:
+    df = sources.scan(spark, table)
+    return tuple(df.columns), sorted(map(tuple, df.collect()))
+
+
+OLD_IDS = [(i,) for i in range(10)]
+#: operation, and the snapshot it commits when it succeeds
+OPS = {
+    "overwrite": (
+        lambda spark, t: _overwrite(t, [100, 101]),
+        (("id",), [(100,), (101,)]),
+    ),
+    "delete_where": (
+        lambda spark, t: M.delete_where(spark, t, "id < 3"),
+        (("id",), OLD_IDS[3:]),
+    ),
+    "alter": (
+        lambda spark, t: M.rename_column(t, "id", "key"),
+        (("key",), OLD_IDS),
+    ),
+}
+
+
+@pytest.mark.parametrize("point", POINTS)
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_crash_leaves_old_or_new_snapshot(
+    spark, tmp_path, monkeypatch, op, point
+):
+    run, new = OPS[op]
+    table = str(tmp_path / "t")
+    # two files, so the DELETE rewrites one and carries the other
+    _overwrite(table, list(range(5)), list(range(5, 10)))
+    old = _state(spark, table)
+    assert old == (("id",), OLD_IDS)
+    _in_process_sink(monkeypatch)
+
+    _inject(monkeypatch, point)
+    with pytest.raises(Crash):
+        run(spark, table)
+    monkeypatch.undo()
+    _in_process_sink(monkeypatch)
+    set_pointer_store(LocalPointerStore())
+
+    assert _state(spark, table) == (new if point == "swapped" else old)
+    time.sleep(0.05)  # the sweep takes entries strictly older than now
+    M.vacuum(table, staging_age_sec=0)
+    live = os.path.basename(snapshot.data_root(table))
+    assert snapshot.generations(table) == [live]
+    assert not os.path.exists(os.path.join(table, snapshot.STAGING_DIR))
+    assert _state(spark, table) == (new if point == "swapped" else old)
+
+    if point != "swapped":
+        run(spark, table)
+        assert _state(spark, table) == new
+
+
+def test_refused_alter_removes_its_claim(tmp_path):
+    """An ALTER its own validation refuses (here: a column that already
+    exists) fails inside the commit, after the claim: the claimed
+    generation goes with it instead of lingering as the newest number."""
+    table = str(tmp_path / "t")
+    _overwrite(table, [0, 1])
+    with pytest.raises(ValueError, match="already exists"):
+        M.add_column(table, "id", "bigint")
+    assert snapshot.generations(table) == ["gen-000001"]

@@ -1202,3 +1202,51 @@ def test_quiverjvm_stream_scan_leaves_no_trace(spark):
     assert len(rows) == 5  # one aggregate row per language
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     assert (checkpoints(), views()) == before
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "quiverjvm_stream_sink_scan",
+        "quiverjvm_stream_pipeline_scan",
+        "quiverjvm_stream_sessions_scan",
+    ],
+)
+def test_stream_fixture_builds_leave_no_trace(
+    spark, duck, tmp_path, monkeypatch, name
+):
+    """Building a stream gate's fixture from scratch (a fresh cache root)
+    runs its stream in a sibling session and removes its checkpoint: the
+    caller's SQL conf and the temp directory are unchanged, and the
+    query still equals its oracle exactly."""
+    import tempfile
+
+    from test_oracle_parity import assert_frames_match
+
+    from quiver_spark.jvm import attach_jar
+    from quiver_spark.operators import format_queries, format_queries2
+    from quiver_spark.registry import load_all_operators
+    from quiver_spark.sources import register
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar unavailable")
+    register(spark)
+    spec = load_all_operators()[name]
+    tmp = tempfile.gettempdir()
+
+    def build(cache: str):
+        monkeypatch.setattr(format_queries, "CACHE_ROOT", cache)
+        monkeypatch.setattr(format_queries2, "CACHE_ROOT", cache)
+        got = spec.spark(spark, SF_DIR).toPandas()
+        assert os.path.isdir(cache)
+        return got
+
+    confs = spark.conf.getAll
+    # a first build creates the JVM's one-time temp files (native codec
+    # libraries, the artifact root), which a second build no longer does
+    build(str(tmp_path / "warm"))
+    files = set(os.listdir(tmp))
+    got = build(str(tmp_path / "cache"))
+    assert spark.conf.getAll == confs
+    assert set(os.listdir(tmp)) == files, sorted(set(os.listdir(tmp)) ^ files)
+    assert_frames_match(got, duck.execute(spec.oracle).fetchdf(), name)
