@@ -22,11 +22,13 @@ time travel (``version``), CDC (``changes_since``), ``files`` subsets and
 ``merge_schemas``, with manifest planning and zone-map + bloom pruning;
 its guards refuse what it cannot read (half floats, decimal256, …) and
 ``sources.scan`` then falls back to the Python reader. The JVM writer
-takes appends and loads into new directories (one pass: the job commit
-writes sidecars + the table manifest itself); ``sources.write`` sends
-overwrites of existing tables (the atomic generation swap), CHECK-
-constrained tables and the table-protocol options (carry_files,
-keep_generations, …) to the Python sink.
+takes appends and loads into new directories directly (one pass: the
+job commit writes sidecars + the table manifest itself), and writes the
+files of overwrites of existing tables, compaction and DML rewrites
+into a staging directory that ``sources.write`` publishes through
+``snapshot.commit`` (the atomic generation swap); CHECK-constrained
+tables and Python-only options (require_not_null, page_stats, …) go to
+the Python sink.
 
 The jar builds OFFLINE with plain javac against the bundled Spark jars
 (build.sh — no network, no dependency resolution) and is checked in so

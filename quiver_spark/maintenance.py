@@ -297,10 +297,11 @@ def cluster_by(
         df = df.repartitionByRange(n_out, *columns).sortWithinPartitions(
             *columns
         )
-    write(
-        df, dst_dir, partition_by=part_cols, codec=codec,
-        max_rows_per_file=max(target_rows_per_file, 1),
-    )
+    # the range partitioner sizes the files: one per range, no
+    # max_rows_per_file cap — the JVM writer rolls files at exactly the
+    # cap, which would cut a range a little over target into a sliver
+    # whose narrow trailing-column span no clustering intended
+    write(df, dst_dir, partition_by=part_cols, codec=codec)
     out_files, out_rows = _dir_stats(dst_dir)
     return {
         "src": src_dir,
@@ -1069,10 +1070,13 @@ def vacuum(
     kept), (2) sweep abandoned write staging older than
     ``staging_age_sec`` — both task-attempt dirs under ``_temporary``
     and a crashed clone's ``_clone_tmp`` (tasks/clones that died leave
-    them invisible-but-not-free), and (3) remove orphan stats sidecars
+    them invisible-but-not-free), (3) remove orphan stats sidecars
     whose data file is gone (a crash between a data-file delete and its
-    sidecar's). Driver-local, no Spark session; nothing reader-visible
-    is touched. PRECONDITION on the staging sweep: ``staging_age_sec``
+    sidecar's), and (4) on a table with a ``_current`` pointer, remove
+    data files and sidecars left in the flat root outside every
+    generation (a first overwrite that died between its pointer swap
+    and its flat-root sweep). Driver-local, no Spark session; nothing
+    reader-visible is touched. PRECONDITION on the staging sweep: ``staging_age_sec``
     must exceed the longest in-flight write or clone against this table
     — sweeping younger entries can destroy a live job's staged files
     mid-commit. The report lists only entries verified gone."""
@@ -1137,12 +1141,18 @@ def vacuum(
                     )
                 except OSError:
                     continue
+    flat_removed = (
+        snapshot.sweep_flat(path, TABLE_GLOBS)
+        if os.path.exists(os.path.join(path, snapshot.CURRENT))
+        else []
+    )
     return {
         "dir": path,
         "expired_generations": expired.get("removed", []),
         "orphan_generations_swept": swept_orphan_gens,
         "staging_swept": swept_staging,
         "orphan_sidecars_removed": orphan_sidecars,
+        "flat_files_removed": flat_removed,
     }
 
 
@@ -1396,8 +1406,11 @@ def ingest(
 
 
 def _snapshot(table: str) -> tuple[str, str, list[str]]:
-    """(live generation name or "" for flat, data root, relative file
-    names) of the table's current snapshot."""
+    """(carry source, data root, relative file names) of the table's
+    current snapshot. The carry source (``snapshot.carry_source``) names
+    the live generation ("" for flat) and digests its file set: the
+    rewrite's commit fails loudly when either changed since planning."""
+    from quiver_spark.sources import snapshot
     from quiver_spark.sources.quiver_datasource import _data_root, _list_files
 
     root = _data_root(table)
@@ -1406,7 +1419,8 @@ def _snapshot(table: str) -> tuple[str, str, list[str]]:
         if os.path.realpath(root) != os.path.realpath(table)
         else ""
     )
-    return gen, root, [os.path.relpath(f, root) for f in _list_files(root)]
+    files = [os.path.relpath(f, root) for f in _list_files(root)]
+    return snapshot.carry_source(gen, files), root, files
 
 
 def _touched_files(spark, table: str, predicate: str) -> list[str]:
@@ -1438,23 +1452,26 @@ def _rewrite_commit(
     spark,
     table: str,
     out_df,
-    gen: str,
+    planned: str,
     untouched: list[str],
     options: dict[str, str],
 ) -> None:
     """Publish a row-level rewrite: ``out_df`` (the rewritten rows) becomes
     the new generation alongside hard-links of the untouched files —
-    the quiver sink's carry_files copy-on-write commit. Concurrency is
-    optimistic: publish verifies the snapshot the plan was built against
-    is still live and raises ConcurrentWriteError otherwise."""
+    the carry_files copy-on-write commit. Concurrency is optimistic: the
+    commit verifies the snapshot the plan was built against (``planned``,
+    from :func:`_snapshot`) is still live with the same files and raises
+    ConcurrentWriteError otherwise."""
     from quiver_spark.sources import write
-    from quiver_spark.sources.quiver_datasource import _discover_partitions
+    from quiver_spark.sources.quiver_datasource import (
+        _data_root,
+        _discover_partitions,
+    )
 
-    _g, root, _files = _snapshot(table)
-    part_cols = [c for c, _k in _discover_partitions(root)[0]]
+    part_cols = [c for c, _k in _discover_partitions(_data_root(table))[0]]
     write(
         out_df, table, partition_by=part_cols,
-        carry_files=json.dumps(untouched), carry_src=gen, **options,
+        carry_files=json.dumps(untouched), carry_src=planned, **options,
     )
 
 
@@ -1507,7 +1524,7 @@ def delete_where(spark, table: str, predicate: str, **options: str) -> dict:
 
     from quiver_spark.sources import scan
 
-    gen, root, all_files = _snapshot(table)
+    planned, root, all_files = _snapshot(table)
     touched = _touched_files(spark, table, predicate)
     if not touched:
         return {
@@ -1531,7 +1548,7 @@ def delete_where(spark, table: str, predicate: str, **options: str) -> dict:
         keep = spark.createDataFrame([], src.schema)
     else:
         keep = src.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-    _rewrite_commit(spark, table, keep, gen, untouched, options)
+    _rewrite_commit(spark, table, keep, planned, untouched, options)
     return {
         "table": table,
         "predicate": predicate,
@@ -1558,7 +1575,7 @@ def update_where(
 
     from quiver_spark.sources import scan
 
-    gen, root, all_files = _snapshot(table)
+    planned, root, all_files = _snapshot(table)
     touched = _touched_files(spark, table, predicate)
     if not touched:
         return {
@@ -1587,7 +1604,9 @@ def update_where(
             )
         else:
             cols.append(F.col(f.name))
-    _rewrite_commit(spark, table, src.select(*cols), gen, untouched, options)
+    _rewrite_commit(
+        spark, table, src.select(*cols), planned, untouched, options
+    )
     return {
         "table": table,
         "predicate": predicate,
@@ -1629,7 +1648,7 @@ def merge_upsert(
 
     from quiver_spark.sources import scan
 
-    gen, root, all_files = _snapshot(table)
+    planned, root, all_files = _snapshot(table)
     tgt = scan(spark, table)
     missing = [c for c in on if c not in tgt.columns]
     if missing:
@@ -1708,7 +1727,7 @@ def merge_upsert(
         out = kept.unionByName(aligned)
     else:
         out = aligned  # pure insert
-    _rewrite_commit(spark, table, out, gen, untouched, options)
+    _rewrite_commit(spark, table, out, planned, untouched, options)
     return {
         "table": table,
         "on": list(on),

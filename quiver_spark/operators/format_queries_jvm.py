@@ -293,10 +293,11 @@ WHERE o_orderstatus = 'F'
 def quiver_write_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE write API, two engines (round 15, VERDICT r14 Next #2):
     sources.write routes an eligible batch write to the quiverjvm bulk
-    writer (0.9× parquet wall vs the Python sink's 1.4×) and falls back
-    to the Python sink for table-protocol options (here
-    ``keep_generations``) and for overwrites of generation-layout tables
-    (the JVM writer's own guard, answered driver-side). The routing is
+    writer (0.9× parquet wall vs the Python sink's 1.4×), falls back to
+    the Python sink for options only it implements (here
+    ``require_not_null``), and stages the JVM write of an overwrite of a
+    generation-layout table, publishing it as an atomic generation swap
+    in the driver (here with ``keep_generations``). The routing is
     asserted IN-QUERY via the engine name the router returns — a silent
     mis-route would pass the oracle while testing nothing — and both
     tables are read back through the unified scan, so the row the driver
@@ -308,24 +309,25 @@ def quiver_write_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quiver_spark.sources import scan, write
 
     tag = os.path.basename(sf_dir.rstrip("/"))
-    d_jvm = os.path.join(CACHE_ROOT, tag, "orders-unified-write")
-    d_py = os.path.join(CACHE_ROOT, tag, "orders-unified-write-py")
-    marker = os.path.join(CACHE_ROOT, tag, "orders-unified-write._done")
+    d_jvm = os.path.join(CACHE_ROOT, tag, "orders-unified-write-v2")
+    d_py = os.path.join(CACHE_ROOT, tag, "orders-unified-write-py-v2")
+    marker = os.path.join(CACHE_ROOT, tag, "orders-unified-write-v2._done")
     if not os.path.exists(marker):
         src = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
             F.col("o_orderstatus") == "F"
         )
+        want = ["quiverjvm", "quiver", "quiverjvm"]
         routes = [
             write(src, d_jvm, mode="overwrite", codec="zstd"),
+            write(src, d_py, mode="overwrite",
+                  require_not_null="o_orderkey"),
+            # the table above is generation-layout now: the overwrite is
+            # a staged JVM write swapped in by the driver-side commit
             write(src, d_py, mode="overwrite", keep_generations="2"),
-            # the table above is generation-layout now: an option-free
-            # overwrite must STILL route to the Python sink (atomic swap)
-            write(src, d_py, mode="overwrite"),
         ]
-        if routes != ["quiverjvm", "quiver", "quiver"]:
+        if routes != want:
             raise RuntimeError(
-                f"unified write mis-routed: {routes} != "
-                "['quiverjvm', 'quiver', 'quiver']"
+                f"unified write mis-routed: {routes} != {want}"
             )
         with open(marker, "w") as f:
             f.write("ok")

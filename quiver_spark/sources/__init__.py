@@ -236,13 +236,20 @@ def try_jvm_scan(spark, path: str, **options):
 #: sink options the JVM writers serve natively
 #: (QuiverJvmBatchWrite.createBatchWriterFactory and the streaming write
 #: read exactly these; ``partition_by`` is the streaming Hive fan-out, the
-#: batch router passes it as ``.partitionBy``); anything else —
-#: keep_generations, pointer_store, require_not_null, carry_files/carry_src,
-#: page_stats, … — keeps the Python sink, which implements the full
-#: table-maintenance protocol.
+#: batch router passes it as ``.partitionBy``). A batch write may also
+#: name SNAPSHOT_OPTS, which the driver-side commit of its staged JVM
+#: write consumes; anything else — require_not_null, page_stats,
+#: default_codec, … — keeps the Python sink.
 JVM_WRITE_OPTS = frozenset(
     {"codec", "max_page_size", "max_rows_per_file", "bloom_columns",
      "compress_ratio", "forbidden", "manifest", "partition_by"}
+)
+
+#: batch write options served by ``snapshot.commit`` rather than by a
+#: writer: retention, row-level carry, and the pointer store. A write
+#: naming any of them publishes through the snapshot commit.
+SNAPSHOT_OPTS = frozenset(
+    {"keep_generations", "carry_files", "carry_src", "pointer_store"}
 )
 
 
@@ -255,30 +262,25 @@ def _local_dir(path: str) -> str:
     return path
 
 
-def _jvm_takes(df, path: str, options, overwrite: bool) -> bool:
+def _jvm_takes(df, path: str, options) -> bool:
     """Can the quiverjvm writer take this write? Every option is in
-    JVM_WRITE_OPTS, the schema is JVM-encodable, the jar attaches, and
-    the destination asks for nothing only the Python sink does:
+    JVM_WRITE_OPTS (``write`` drops SNAPSHOT_OPTS first: its driver-side
+    commit serves them), the schema is JVM-encodable, the jar attaches,
+    and the destination's live manifest has no CHECK constraints: only
+    the Python sink evaluates them, and the JVM write builder refuses
+    such a table (one manifest load, cached per manifest stat).
 
-    - an overwrite of a directory that already holds anything: the JVM
-      writer deletes the table's files before any task runs, so a write
-      that reads its own destination, or a task that fails, would leave
-      the table empty; the Python sink stages the new rows and swaps a
-      new generation in at commit;
-    - a table whose live manifest has CHECK constraints: only the Python
-      sink evaluates them, and the JVM write builder refuses such a
-      table (one manifest load, cached per manifest stat).
+    The destination's state picks only HOW the JVM writes (``write``):
+    an overwrite of a non-empty directory is staged and swapped in as a
+    new generation, never a truncate in place.
     """
     from quiver_spark.jvm import attach_jar, supports_schema
     from quiver_spark.sources.manifest import load_manifest
     from quiver_spark.sources.quiver_datasource import _data_root
 
-    local = _local_dir(path)
     if not set(options) <= JVM_WRITE_OPTS or not supports_schema(df.schema):
         return False
-    if overwrite and os.path.isdir(local) and os.listdir(local):
-        return False
-    man = load_manifest(_data_root(local))
+    man = load_manifest(_data_root(_local_dir(path)))
     if man is not None and man.check_constraints:
         return False
     return attach_jar(df.sparkSession)
@@ -291,18 +293,29 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     the engine name it used (``"quiverjvm"`` | ``"quiver"``) so callers
     and tests can pin the routing.
 
-    - **quiverjvm** (the Java DataSourceV2 bulk writer, sf0.1 ≈0.9× the
-      parquet writer vs the Python sink's ≈1.4×): appends and writes into
-      a new or empty directory, when ``_jvm_takes`` accepts the schema,
-      the options and the destination. It defaults ``codec`` to zstd.
-    - **python "quiver" sink**: everything else — exotic leaf types (half
-      floats, decimal256, null columns), table-protocol options only it
-      implements (keep_generations, pointer_store, require_not_null,
-      carry_files, …), every overwrite of an existing directory (staged
-      commit + atomic generation swap: a failed or self-reading
-      overwrite leaves the old snapshot live), and every write into a
-      table with CHECK constraints. It defaults ``codec`` to lz4, so a
-      caller whose destination may change engine passes the codec.
+    When ``_jvm_takes`` accepts the schema, the options and the
+    destination, the quiverjvm writer (the Java DataSourceV2 bulk
+    writer, sf0.1 ≈0.9× the parquet writer vs the Python sink's ≈1.4×)
+    writes the rows, in one of two ways:
+
+    - **direct**: a plain append, or a write into a new or empty
+      directory. The JVM job publishes its files and merges the
+      manifest itself. It defaults ``codec`` to zstd.
+    - **staged** (``_staged_write``): every write that needs the
+      snapshot protocol — an overwrite of a non-empty directory, or any
+      of SNAPSHOT_OPTS (keep_generations, carry_files/carry_src,
+      pointer_store). The JVM job appends into a hidden
+      ``_temporary/jvm-<uuid>/`` directory, and this process publishes
+      the files through ``snapshot.commit``: an overwrite is an atomic
+      generation swap, so a failed or self-reading overwrite leaves the
+      old snapshot live. It defaults ``codec`` to lz4, the codec these
+      writes had on the Python sink.
+
+    The **python "quiver" sink** takes the rest: exotic leaf types (half
+    floats, decimal256, null columns), options only it implements
+    (require_not_null, page_stats, …), and every write into a table
+    with CHECK constraints. It stages and commits through the same
+    ``snapshot.commit`` and defaults ``codec`` to lz4.
 
     The probe runs BEFORE the job: there is deliberately no silent
     fallback after a started JVM write (a half-finished write must
@@ -319,26 +332,83 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
             f"unified quiver write supports mode='append'|'overwrite', "
             f"got {mode!r}"
         )
-    engine = (
-        "quiverjvm"
-        if _jvm_takes(df, path, options, overwrite=mode == "overwrite")
-        else "quiver"
+    overwrite = mode == "overwrite"
+    cols = (
+        [c.strip() for c in partition_by.split(",")]
+        if isinstance(partition_by, str)
+        else list(partition_by or ())
     )
-    writer = df.write.format(engine).mode(mode)
-    if partition_by:
-        cols = (
-            [c.strip() for c in partition_by.split(",")]
-            if isinstance(partition_by, str)
-            else list(partition_by)
-        )
-        if engine == "quiverjvm":
-            writer = writer.partitionBy(*cols)
-        else:
+    snap = {k: v for k, v in options.items() if k in SNAPSHOT_OPTS}
+    jvm_opts = {k: v for k, v in options.items() if k not in SNAPSHOT_OPTS}
+    if not _jvm_takes(df, path, jvm_opts):
+        writer = df.write.format("quiver").mode(mode)
+        if cols:
             writer = writer.option("partition_by", ",".join(cols))
-    for k, v in options.items():
+        for k, v in options.items():
+            writer = writer.option(k, str(v))
+        writer.save(path)
+        return "quiver"
+    local = _local_dir(path)
+    staged = snap or (overwrite and os.path.isdir(local) and os.listdir(local))
+    writer = df.write.format("quiverjvm")
+    writer = (
+        writer.mode("append").option("codec", "lz4") if staged
+        else writer.mode(mode)
+    )
+    if cols:
+        writer = writer.partitionBy(*cols)
+    for k, v in jvm_opts.items():
         writer = writer.option(k, str(v))
-    writer.save(path)
-    return engine
+    if staged:
+        _staged_write(writer, df.schema, local, snap, overwrite)
+    else:
+        writer.save(path)
+    return "quiverjvm"
+
+
+def _staged_write(writer, schema, table: str, snap, overwrite) -> None:
+    """Save the configured quiverjvm append ``writer`` into a fresh hidden
+    ``table/_temporary/jvm-<uuid>/`` (no manifest there), then publish
+    the staged files through ``snapshot.commit`` in this process with
+    the arguments the Python sink's commit passes, add the empty-result
+    placeholder, and sweep day-old staging. A failure before the
+    commit, or a refused commit, removes the staging directory; a
+    killed process leaves it to ``maintenance.vacuum``."""
+    import json
+    import shutil
+    import uuid
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from . import snapshot
+    from .pointer_store import store_from_option
+    from .quiver_datasource import write_placeholder
+
+    stage = os.path.join(
+        table, snapshot.STAGING_DIR, f"jvm-{uuid.uuid4().hex}"
+    )
+    try:
+        writer.option("manifest", "false").save(stage)
+        rels = [
+            os.path.relpath(f, stage)
+            for f in snapshot.list_files(stage, "*.quiver")
+        ]
+        snapshot.commit(
+            table,
+            ("*.quiver",),
+            overwrite=overwrite,
+            staged=[(stage, rels)],
+            fmt="quiver",
+            carry_src=snap.get("carry_src"),
+            carry=json.loads(snap.get("carry_files") or "[]"),
+            keep=int(snap.get("keep_generations", "1")),
+            store=store_from_option(snap.get("pointer_store")),
+        )
+    except Exception:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    write_placeholder(table, to_arrow_schema(schema))
+    snapshot.sweep_stale_staging(table)
 
 
 def stream_writer(df, path: str, **options):
@@ -360,10 +430,7 @@ def stream_writer(df, path: str, **options):
     engine: the marker log is the idempotence contract, not the writer
     identity."""
     register(df.sparkSession)
-    engine = (
-        "quiverjvm" if _jvm_takes(df, path, options, overwrite=False)
-        else "quiver"
-    )
+    engine = "quiverjvm" if _jvm_takes(df, path, options) else "quiver"
     writer = df.writeStream.format(engine).option("path", path)
     for k, v in options.items():
         writer = writer.option(k, str(v))

@@ -339,8 +339,7 @@ class ArrowIpcScanReader(DataSourceReader):
 class ArrowIpcWriter(QuiverWriter):
     """The quiver sink's staged-commit / generation / multi-writer
     machinery with Arrow IPC bytes on disk. Only ``write()`` (the
-    task-side bytes step) and the empty-table/file-listing hooks differ;
-    overwrite atomicity, retention, time travel, rollback, and the
+    task-side bytes step) and the manifest format differ; overwrite atomicity, retention, time travel, rollback, and the
     concurrency guards are inherited verbatim."""
 
     DATA_GLOBS = ("*.arrow",)
@@ -355,23 +354,6 @@ class ArrowIpcWriter(QuiverWriter):
                 "partition_by is not supported by the arrowipc sink; "
                 "write quiver (or parquet) for Hive-partitioned layouts"
             )
-
-    def _list_data_files(self) -> list[str]:
-        return _list_arrow_files(self.path)
-
-    def _write_empty(self, dst_root: str, arrow_schema) -> str:
-        import pyarrow as pa
-        import pyarrow.ipc as ipc
-
-        rel = f"part-{uuid.uuid4().hex}.arrow"
-        with ipc.new_file(os.path.join(dst_root, rel), arrow_schema) as w:
-            w.write_batch(
-                pa.RecordBatch.from_arrays(
-                    [pa.array([], type=f.type) for f in arrow_schema],
-                    schema=arrow_schema,
-                )
-            )
-        return rel
 
     def write(self, iterator):
         """One task → one .arrow file of the task's batches (rolling to a

@@ -457,6 +457,23 @@ def get_pointer_store() -> PointerStore:
     return _ACTIVE
 
 
+def store_from_option(value: str | None) -> PointerStore:
+    """The store a write's ``pointer_store`` option names: ``"unlocked"``
+    forces the lock-less object-store posture, ``"cas:<root>"`` the
+    conditional-PUT one over a FileBlobStore (the stand-in for S3/GCS),
+    anything else the active store. An option rather than
+    set_pointer_store because the Python sink commits in a Spark-spawned
+    runner a driver-side set_pointer_store never reaches — the option
+    travels with the serialized writer. Production object-store adapters
+    still install process-wide via set_pointer_store."""
+    value = value or ""
+    if value.lower() == "unlocked":
+        return UnlockedPointerStore()
+    if value.startswith("cas:"):
+        return ConditionalPutPointerStore(FileBlobStore(value[len("cas:"):]))
+    return get_pointer_store()
+
+
 def set_pointer_store(store: PointerStore) -> PointerStore:
     """Install ``store`` as the active pointer store; returns the previous
     one so callers (tests) can restore it."""

@@ -107,6 +107,7 @@ from .snapshot import (  # noqa: F401  (protocol names re-exported here)
     list_files as _list_files_pattern,
     sweep_stale_staging,
 )
+from .pointer_store import store_from_option
 
 FORMAT_NAME = "quiver"
 # Measured on an idle local[32] host at sf0.1 (600k-row lineitem, min of 5
@@ -1518,6 +1519,39 @@ class QuiverStreamReader(DataSourceStreamReader):
         return None
 
 
+def write_placeholder(table: str, arrow_schema, fmt: str = "quiver") -> None:
+    """After a commit that left the live snapshot with no data file,
+    publish one empty, schema-bearing file (or later reads of the
+    directory fail). It is part of the SAME logical commit, so its
+    manifest entry folds into the current sequence number instead of
+    bumping it. ``fmt`` is the manifest format, ``"quiver"`` or
+    ``"arrow"``; the sinks and the staged JVM write share this copy."""
+    import pyarrow as pa
+
+    from .manifest import update_manifest
+
+    root = _data_root(table)
+    ext = "arrow" if fmt == "arrow" else "quiver"
+    if _list_files_pattern(root, f"*.{ext}"):
+        return
+    empty = pa.RecordBatch.from_arrays(
+        [pa.array([], type=f.type) for f in arrow_schema],
+        schema=arrow_schema,
+    )
+    rel = f"part-{uuid.uuid4().hex}.{ext}"
+    full = os.path.join(root, rel)
+    if fmt == "arrow":
+        import pyarrow.ipc as ipc
+
+        with ipc.new_file(full, arrow_schema) as w:
+            w.write_batch(empty)
+    else:
+        from quiver_spark.format.writer import WriteOptions, write_table
+
+        write_table(pa.Table.from_batches([empty]), full, WriteOptions())
+    update_manifest(root, [rel], fmt, new_commit=False)
+
+
 @dataclass
 class QuiverCommit(WriterCommitMessage):
     """Per-task commit message: where the task staged its files and the
@@ -1578,10 +1612,12 @@ class QuiverWriter(DataSourceArrowWriter):
         # hard-links these UNTOUCHED files (paths relative to the snapshot
         # they came from) into the new generation, so a rewrite's cost is
         # proportional to the files a predicate touches, never table size.
-        # carry_src names the generation the list was resolved against
-        # ("" = flat root); publish verifies it is STILL live before
-        # carrying — a concurrent overwrite turns the rewrite into a loud
-        # ConcurrentWriteError instead of a mixed snapshot.
+        # carry_src names the snapshot the list was resolved against
+        # (snapshot.carry_source: generation, "" = flat root, plus a
+        # digest of its file set); publish verifies it is STILL live and
+        # unchanged before carrying — a concurrent overwrite or append
+        # turns the rewrite into a loud ConcurrentWriteError instead of a
+        # mixed snapshot or lost rows.
         cf = options.get("carry_files")
         self.carry_files: list[str] = json.loads(cf) if cf else []
         #: None = plain overwrite; set (even to "") = this overwrite is a
@@ -1589,12 +1625,6 @@ class QuiverWriter(DataSourceArrowWriter):
         #: verifies it is STILL live even when the carry list is empty
         #: (an all-files-touched rewrite must not clobber a rival commit)
         self.carry_src = options.get("carry_src")
-        if self.carry_files and not overwrite:
-            raise ValueError(
-                "carry_files requires mode('overwrite'): carrying is part "
-                "of the copy-on-write generation swap, append has no "
-                "snapshot to carry into"
-            )
         # NOT NULL write constraints (Delta CHECK-constraint analogue,
         # format-level so EVERY write path — batch, append, streaming
         # micro-batch, row-level rewrites — enforces them): a violating
@@ -1799,32 +1829,6 @@ class QuiverWriter(DataSourceArrowWriter):
     def _generations(self) -> list[str]:
         return snapshot.generations(self.path)
 
-    def _pointer_store(self):
-        """The store this write commits through. `.option("pointer_store",
-        "unlocked")` forces the lock-less object-store posture and
-        `"cas:<root>"` the conditional-PUT one over a FileBlobStore (the
-        stand-in for S3/GCS): options, not set_pointer_store, because
-        Spark runs the commit in a spawned Python runner process that a
-        driver-side set_pointer_store can never reach — the option
-        travels with the serialized writer. Production object-store
-        adapters still install process-wide via set_pointer_store in the
-        runner's environment."""
-        from .pointer_store import (
-            ConditionalPutPointerStore,
-            FileBlobStore,
-            UnlockedPointerStore,
-            get_pointer_store,
-        )
-
-        ps_opt = self.options.get("pointer_store", "")
-        if ps_opt.lower() == "unlocked":
-            return UnlockedPointerStore()
-        if ps_opt.startswith("cas:"):
-            return ConditionalPutPointerStore(
-                FileBlobStore(ps_opt[len("cas:"):])
-            )
-        return get_pointer_store()
-
     def _publish(self, messages) -> None:
         """Publish every committed task's staged files through the shared
         snapshot commit (``snapshot.commit``): an OVERWRITE is an atomic
@@ -1850,44 +1854,22 @@ class QuiverWriter(DataSourceArrowWriter):
             carry_src=self.carry_src,
             carry=self.carry_files,
             keep=int(self.options.get("keep_generations", "1")),
-            store=self._pointer_store(),
+            store=store_from_option(self.options.get("pointer_store")),
         )
         sweep_stale_staging(self.path)
 
-    def _list_data_files(self) -> list[str]:
-        return _list_files(self.path)
-
-    def _write_empty(self, dst_root: str, arrow_schema) -> str:
-        import pyarrow as pa
-
-        from quiver_spark.format.writer import WriteOptions, write_table
-
-        empty = pa.Table.from_arrays(
-            [pa.array([], type=f.type) for f in arrow_schema],
-            schema=arrow_schema,
-        )
-        rel = f"part-{uuid.uuid4().hex}.quiver"
-        write_table(empty, os.path.join(dst_root, rel), WriteOptions())
-        return rel
-
     def commit(self, messages) -> None:
         """Driver-side commit: publish staged task output, then ensure a
-        fully-empty result set still leaves a schema-bearing file (or
-        subsequent reads of the directory fail)."""
+        fully-empty result set still leaves a schema-bearing file."""
         self._publish(messages)
-        if self._list_data_files():
-            return
-        if self.spark_schema is None:
-            return
-        from pyspark.sql.pandas.types import to_arrow_schema
+        if self.spark_schema is not None:
+            from pyspark.sql.pandas.types import to_arrow_schema
 
-        from .manifest import update_manifest
-
-        root = _data_root(self.path)
-        rel = self._write_empty(root, to_arrow_schema(self.spark_schema))
-        # part of the SAME logical commit _publish just recorded — fold
-        # the placeholder into the current sequence number, don't bump
-        update_manifest(root, [rel], self.MANIFEST_FMT, new_commit=False)
+            write_placeholder(
+                self.path,
+                to_arrow_schema(self.spark_schema),
+                self.MANIFEST_FMT,
+            )
 
     def abort(self, messages) -> None:
         """Drop staged output of any task that did report a message; task

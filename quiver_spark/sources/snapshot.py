@@ -1,5 +1,5 @@
 """The table layer's snapshot protocol: generations, the pointer, and the
-one commit every Python-engine writer publishes through.
+one commit every table write that needs a snapshot publishes through.
 
 The reference format is a single file with no table layer (PAPER.md §0);
 this module is the repo's own addition and the one place that knows the
@@ -8,10 +8,12 @@ on-disk protocol. A table directory holds numbered snapshots
 pointer: a flat table that resolves to itself). Writers stage task
 output under the hidden ``_temporary/`` root; :func:`commit` publishes
 it — data files first, then one atomic metadata publish, the split of
-Delta's log commit. Callers: the quiver and arrowipc batch and stream
-sinks (``QuiverWriter._publish``) and metadata-only ALTERs
-(``maintenance._commit_evolution``); clone, rollback, retention, vacuum
-and ``quiver-tools generations`` use the listing and linking helpers.
+Delta's log commit. Callers: the staged JVM write of ``sources.write``
+(its files staged under ``_temporary/jvm-<uuid>/``), the quiver and
+arrowipc batch and stream sinks (``QuiverWriter._publish``) and
+metadata-only ALTERs (``maintenance._commit_evolution``); clone,
+rollback, retention, vacuum and ``quiver-tools generations`` use the
+listing and linking helpers.
 Nothing here names a file format: callers pass their data-file globs.
 The storage primitives (lock, claim, CAS swap) sit behind
 ``pointer_store.PointerStore``.
@@ -21,6 +23,7 @@ from __future__ import annotations
 
 import fnmatch
 import glob
+import hashlib
 import os
 import re
 import shutil
@@ -163,6 +166,20 @@ def link_files(src_root: str, dst_root: str, rels: Iterable[str]) -> list[str]:
     return linked
 
 
+def _files_digest(rels: Iterable[str]) -> str:
+    return hashlib.sha256("\n".join(sorted(rels)).encode()).hexdigest()[:16]
+
+
+def carry_source(gen: str, rels: Iterable[str]) -> str:
+    """The ``carry_src`` of a row-level rewrite planned against the live
+    generation ``gen`` (``""`` = flat root) whose data files were
+    ``rels``: the name, ``@``, and a digest of that file set. The commit
+    compares both under the lock, so rows committed into the SAME
+    generation after planning fail the rewrite instead of vanishing
+    from the new snapshot. A bare name checks the generation only."""
+    return f"{gen}@{_files_digest(rels)}"
+
+
 def sweep_stale_staging(
     path: str, max_age_sec: int = 24 * 3600
 ) -> list[str]:
@@ -281,14 +298,15 @@ def _retain(table: str, current: str, previous: str | None, keep: int) -> None:
         shutil.rmtree(os.path.join(table, g), ignore_errors=True)
 
 
-def _sweep_flat(table: str, globs: Sequence[str]) -> None:
+def sweep_flat(table: str, globs: Sequence[str]) -> list[str]:
     """Remove data files (and sidecars) matching ``globs`` that sit
     outside every generation and staging dir: once a pointer exists no
     resolver sees them, so leaving them is a disk leak. The flat-root
     manifest described them and goes too (each generation carries its
-    own)."""
+    own). Returns the removed files, relative to ``table``."""
     from .manifest import remove_manifest
 
+    removed: list[str] = []
     pats = [p for g in globs for p in (g, g + SIDECAR)]
     for dirpath, dirs, files in os.walk(table):
         gens_here = dirpath == table
@@ -304,9 +322,13 @@ def _sweep_flat(table: str, globs: Sequence[str]) -> None:
             ):
                 try:
                     os.remove(os.path.join(dirpath, f))
+                    removed.append(
+                        os.path.relpath(os.path.join(dirpath, f), table)
+                    )
                 except OSError:
                     pass
     remove_manifest(table)
+    return removed
 
 
 def commit(
@@ -331,7 +353,8 @@ def commit(
       race with an overwrite fails loudly (ConcurrentWriteError).
     - OVERWRITE: claim the next generation, move the staged files in,
       hard-link the ``carry`` rels from ``carry_src`` (row-level
-      copy-on-write; it must STILL be live, ``""`` = flat root), write
+      copy-on-write; it must STILL be live with the file set the rewrite
+      was planned against, see :func:`carry_source`), write
       the manifest, CAS-swap the pointer, stamp the marker, keep
       ``keep`` generations and sweep superseded flat-root files.
     - METADATA-ONLY (``mutate`` given, an ALTER): an overwrite that
@@ -343,6 +366,12 @@ def commit(
     an unmarked claim and staging entries that ``maintenance.vacuum``
     sweeps; after it, at worst a superseded generation lingers. A
     failure raised before the swap, or a lost CAS, removes the claim."""
+    if carry and not overwrite:
+        raise ValueError(
+            "carry_files requires mode('overwrite'): carrying is part "
+            "of the copy-on-write generation swap, append has no "
+            "snapshot to carry into"
+        )
     store = store if store is not None else get_pointer_store()
     with store.lock(table):
         expected = store.read_pointer(table)
@@ -356,19 +385,36 @@ def commit(
                 for g in globs
                 for f in list_files(live_root, g)
             ]
+        if carry_src is not None:
+            # before the claim: a flat root's listing would include the
+            # claimed generation's files
+            src_gen, _, digest = carry_src.partition("@")
+            if (expected or "") != src_gen:
+                raise ConcurrentWriteError(
+                    f"row-level rewrite of {table} was planned "
+                    f"against snapshot {src_gen or '<flat>'!r} "
+                    f"but {expected!r} is now live — a concurrent "
+                    "overwrite won; re-run the rewrite"
+                )
+            live_rels = (
+                os.path.relpath(f, live_root)
+                for g in globs
+                for f in list_files(live_root, g)
+            )
+            if digest and _files_digest(live_rels) != digest:
+                raise ConcurrentWriteError(
+                    f"row-level rewrite of {table}: files were added "
+                    f"to or are missing from snapshot "
+                    f"{src_gen or '<flat>'!r} since the rewrite was "
+                    "planned — a concurrent commit changed it; re-run "
+                    "the rewrite"
+                )
         gen = _claim(table, store)
         dst_root = os.path.join(table, gen)
         try:
             published = _publish_staged(staged, dst_root)
             carried: list[str] = []
             if carry_src is not None:
-                if (expected or "") != carry_src:
-                    raise ConcurrentWriteError(
-                        f"row-level rewrite of {table} was planned "
-                        f"against snapshot {carry_src or '<flat>'!r} "
-                        f"but {expected!r} is now live — a concurrent "
-                        "overwrite won; re-run the rewrite"
-                    )
                 try:
                     carried = link_files(live_root, dst_root, carry)
                 except FileNotFoundError as exc:
@@ -399,7 +445,7 @@ def commit(
         mark_committed(dst_root)
         if mutate is None:
             _retain(table, gen, expected, keep)
-        _sweep_flat(table, globs)
+        sweep_flat(table, globs)
         return dst_root
 
 

@@ -683,11 +683,12 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     eligible and to the Python sink otherwise, with identical on-disk
     protocol either way. Pins every routing direction:
     JVM-eligible, Python-only option, JVM-unsupported schema,
-    generation-layout overwrite (the JVM guard answered driver-side),
-    generation-layout APPEND (stays JVM, resolves the live root), and
-    partition_by fan-out parity on both engines."""
+    generation-layout overwrite (a staged JVM write swapped in by the
+    driver-side snapshot commit), generation-layout APPEND (stays JVM,
+    resolves the live root), and partition_by fan-out parity on both
+    engines."""
     _require_jar(spark)
-    from quiver_spark.sources import write
+    from quiver_spark.sources import snapshot, write
 
     src = spark.range(40).selectExpr("id", "concat('v', id) AS s")
     want = sorted(map(tuple, src.collect()))
@@ -706,17 +707,22 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     assert write(src, d1, mode="overwrite", codec="zstd") == "quiverjvm"
     assert back(d1) == want
 
-    # 2. a Python-only table-protocol option → Python sink
+    # 2. a Python-only option → Python sink
     d2 = str(tmp_path / "py")
     assert (
-        write(src, d2, mode="overwrite", keep_generations="2") == "quiver"
+        write(src, d2, mode="overwrite", require_not_null="id") == "quiver"
     )
     assert back(d2) == want
 
-    # 3. overwrite of the generation-layout table → Python sink (the JVM
-    # writer refuses: no atomic generation swap), even with no options
-    assert write(src, d2, mode="overwrite") == "quiver"
+    # 3. overwrite of the generation-layout table → staged JVM write and
+    # an atomic generation swap, with or without snapshot options
+    assert write(src, d2, mode="overwrite") == "quiverjvm"
     assert back(d2) == want
+    assert (
+        write(src, d2, mode="overwrite", keep_generations="2") == "quiverjvm"
+    )
+    assert back(d2) == want
+    assert len(snapshot.generations(d2)) == 2
 
     # 4. APPEND into the generation table stays JVM (live-root resolution)
     more = spark.range(100, 110).selectExpr("id", "concat('v', id) AS s")
@@ -736,7 +742,7 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     assert write(part, d4, mode="overwrite", partition_by="k") == "quiverjvm"
     assert (
         write(part, d5, mode="overwrite", partition_by="k",
-              keep_generations="2")
+              require_not_null="id")
         == "quiver"
     )
     import glob as _glob
@@ -755,12 +761,12 @@ def test_unified_write_router_both_directions(spark, tmp_path):
 
 
 def test_overwrite_of_existing_flat_table_swaps_a_generation(spark, tmp_path):
-    """sources.write sends an overwrite of a directory that already holds
-    a table to the Python sink's staged generation swap, even when the
-    table is flat (no ``_current`` yet). The JVM writer deletes the
-    table's files before any task runs, so an overwrite that reads its
-    own destination lost every file, and one whose task failed left an
-    unreadable table."""
+    """sources.write stages an overwrite of a directory that already
+    holds a table and swaps it in as a new generation, even when the
+    table is flat (no ``_current`` yet). A direct JVM overwrite deletes
+    the table's files before any task runs, so an overwrite that reads
+    its own destination lost every file, and one whose task failed left
+    an unreadable table."""
     _require_jar(spark)
     from quiver_spark.sources import scan, write
 
@@ -774,7 +780,7 @@ def test_overwrite_of_existing_flat_table_swaps_a_generation(spark, tmp_path):
     assert write(src, t1) == "quiverjvm"
     assert not os.path.exists(os.path.join(t1, "_current"))
     kept = scan(spark, t1).filter("k >= 500")
-    assert write(kept, t1, mode="overwrite") == "quiver"
+    assert write(kept, t1, mode="overwrite") == "quiverjvm"
     assert rows(t1) == [(k, f"v{k}") for k in range(500, 1000)]
 
     # a failing overwrite leaves the old rows readable

@@ -1,0 +1,151 @@
+"""Edge cases of the staged JVM write: ``sources.write`` sends an
+overwrite of an existing table and every row-level rewrite to the
+quiverjvm writer aimed at ``_temporary/jvm-<uuid>/``, then publishes the
+files through ``snapshot.commit`` in the driver. Each case checks the
+rows (against a model computed without the table), the layout, and that
+no staging directory is left behind."""
+
+from __future__ import annotations
+
+import glob
+import os
+
+import pytest
+
+from quiver_spark import maintenance as M
+from quiver_spark import sources
+from quiver_spark.sources import snapshot
+
+
+@pytest.fixture(autouse=True)
+def _jar(spark):
+    from quiver_spark.jvm import attach_jar
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar cannot attach")
+
+
+@pytest.fixture()
+def engines(monkeypatch):
+    """Every engine ``sources.write`` picks during the test."""
+    got: list[str] = []
+    real = sources.write
+
+    def write(*args, **kwargs):
+        got.append(real(*args, **kwargs))
+        return got[-1]
+
+    monkeypatch.setattr(sources, "write", write)
+    return got
+
+
+def _rows(spark, table: str) -> list[tuple]:
+    return sorted(map(tuple, sources.scan(spark, table).collect()))
+
+
+def _no_staging(table: str) -> bool:
+    return not glob.glob(os.path.join(table, snapshot.STAGING_DIR, "jvm-*"))
+
+
+def _table(spark, table: str, n: int = 200, parts: int = 4) -> list[tuple]:
+    df = spark.range(0, n, 1, parts).selectExpr(
+        "id", "id % 5 AS k", "concat('v', id) AS s"
+    )
+    assert sources.write(df, table, keep_generations=1) == "quiverjvm"
+    return [(i, i % 5, f"v{i}") for i in range(n)]
+
+
+def test_delete_of_every_row_leaves_an_empty_schema_bearing_table(
+    spark, tmp_path, engines
+):
+    table = str(tmp_path / "t")
+    _table(spark, table)
+    engines.clear()
+    M.delete_where(spark, table, "id >= 0 OR id < 0")
+    assert engines == ["quiverjvm"]
+    df = sources.scan(spark, table)
+    assert df.columns == ["id", "k", "s"]
+    assert df.collect() == []
+    assert spark.read.format("quiver").load(table).collect() == []
+    assert _no_staging(table)
+
+
+def test_partitioned_compact_keeps_its_hive_layout(spark, tmp_path, engines):
+    table = str(tmp_path / "t")
+    df = spark.range(0, 300, 1, 6).selectExpr("id", "id % 3 AS k")
+    assert sources.write(df, table, partition_by=["k"]) == "quiverjvm"
+    sources.write(df, table, mode="append", partition_by=["k"])
+    want = sorted([(i, i % 3) for i in range(300)] * 2)
+    out = M.compact(spark, table)
+    assert engines[-1] == "quiverjvm"
+    assert out["partition_by"] == ["k"] and out["rows_after"] == 600
+    root = snapshot.data_root(table)
+    assert root != table  # swapped in as a generation
+    assert sorted(
+        d for d in os.listdir(root) if not d.startswith("_")
+    ) == ["k=0", "k=1", "k=2"]
+    for k in range(3):
+        files = glob.glob(os.path.join(root, f"k={k}", "*.quiver"))
+        assert len(files) == 1, files
+    assert sorted(
+        (r.id, r.k) for r in sources.scan(spark, table).collect()
+    ) == want
+    assert _no_staging(table)
+
+
+def test_update_merge_and_cluster_rows(spark, tmp_path, engines):
+    table = str(tmp_path / "t")
+    model = {r[0]: r for r in _table(spark, table)}
+    engines.clear()
+
+    M.update_where(spark, table, {"s": "concat('u', id)"}, "id < 40")
+    for i in range(40):
+        model[i] = (i, i % 5, f"u{i}")
+    assert _rows(spark, table) == sorted(model.values())
+
+    src = spark.range(150, 260).selectExpr(
+        "id", "CAST(7 AS BIGINT) AS k", "concat('m', id) AS s"
+    )
+    M.merge_upsert(spark, table, src, on=["id"])
+    for i in range(150, 260):
+        model[i] = (i, 7, f"m{i}")
+    assert _rows(spark, table) == sorted(model.values())
+
+    out = M.cluster_by(spark, table, ["k", "id"], target_rows_per_file=100)
+    assert out["rows_after"] == len(model)
+    assert _rows(spark, table) == sorted(model.values())
+    assert engines == ["quiverjvm"] * 3
+    assert snapshot.generations(table) == [
+        os.path.basename(snapshot.data_root(table))
+    ]
+    assert _no_staging(table)
+
+
+def test_pointer_store_option_reaches_the_driver_commit(spark, tmp_path):
+    """``pointer_store`` is consumed by the commit in this process: the
+    lock-less store takes no writer lock, and ``cas:<root>`` keeps the
+    pointer in its blob store (mirrored into ``_current``)."""
+    from quiver_spark.sources.pointer_store import store_from_option
+
+    df = spark.range(0, 50, 1, 2)
+    want = [(i,) for i in range(50)]
+
+    unlocked = str(tmp_path / "unlocked")
+    for mode in ("overwrite", "append", "overwrite"):
+        assert (
+            sources.write(df, unlocked, mode=mode, pointer_store="unlocked")
+            == "quiverjvm"
+        )
+    assert _rows(spark, unlocked) == want
+    assert not os.path.exists(os.path.join(unlocked, "_writer.lock"))
+    assert snapshot.generations(unlocked) == ["gen-000002"]
+
+    cas = str(tmp_path / "cas")
+    opt = f"cas:{tmp_path / 'blobs'}"
+    sources.write(df, cas, pointer_store=opt)
+    sources.write(df, cas, mode="overwrite", pointer_store=opt)
+    assert store_from_option(opt).read_pointer(cas) == "gen-000002"
+    assert os.path.exists(os.path.join(cas, "_current.version"))
+    assert not os.path.exists(os.path.join(cas, "_writer.lock"))
+    assert _rows(spark, cas) == want
+    assert _no_staging(unlocked) and _no_staging(cas)

@@ -1,9 +1,10 @@
 """Maintenance write routing: every quiver write in ``maintenance.py`` goes
 through ``sources.write``, the one place that picks a batch write engine,
 and ``maintenance.py`` never hands a format to ``DataFrameWriter`` itself.
-The codec each call passes is pinned too: the JVM writer defaults to
-zstd and the Python sink to lz4, so a call that can land on either
-engine must name the codec it writes."""
+The codec each call passes is pinned too: a direct JVM write defaults to
+zstd, while a staged JVM write and the Python sink default to lz4, so a
+call that can land on more than one of them must name the codec it
+writes."""
 
 from __future__ import annotations
 
@@ -72,22 +73,24 @@ def test_maintenance_writes_go_through_sources_write(spark, tmp_path, monkeypatc
               "overwrite", "quiverjvm", "lz4")
     one_write(lambda: M.compact(spark, t, moved), moved, "overwrite",
               "quiverjvm", "lz4")
-    # rewrites of an existing table take the Python sink's generation swap
-    one_write(lambda: M.compact(spark, t), t, "overwrite", "quiver", "lz4")
+    # rewrites of an existing table take the staged JVM write, published
+    # as a generation swap by the driver-side snapshot commit
+    one_write(lambda: M.compact(spark, t), t, "overwrite", "quiverjvm",
+              "lz4")
     one_write(lambda: M.cluster_by(spark, t, ["o_orderkey"]), t,
-              "overwrite", "quiver", "lz4")
+              "overwrite", "quiverjvm", "lz4")
     one_write(lambda: M.delete_where(spark, t, "o_orderkey < 100"), t,
-              "overwrite", "quiver", None, carry=True)
+              "overwrite", "quiverjvm", None, carry=True)
     one_write(
         lambda: M.update_where(spark, t, {"o_totalprice": "0.0"},
                                "o_orderkey < 200"),
-        t, "overwrite", "quiver", None, carry=True,
+        t, "overwrite", "quiverjvm", None, carry=True,
     )
     one_write(
         lambda: M.merge_upsert(
             spark, t, src.filter("o_orderkey < 300"), on=["o_orderkey"]
         ),
-        t, "overwrite", "quiver", None, carry=True,
+        t, "overwrite", "quiverjvm", None, carry=True,
     )
     assert format_callers, "the spy saw no DataFrameWriter.format call"
     here = {os.path.basename(f) for f in format_callers}
