@@ -22,13 +22,15 @@ time travel (``version``), CDC (``changes_since``), ``files`` subsets and
 ``merge_schemas``, with manifest planning and zone-map + bloom pruning;
 its guards refuse what it cannot read (half floats, decimal256, …) and
 ``sources.scan`` then falls back to the Python reader. The JVM writer
-takes appends and loads into new directories directly (one pass: the
-job commit writes sidecars + the table manifest itself), and writes the
-files of overwrites of existing tables, compaction and DML rewrites
-into a staging directory that ``sources.write`` publishes through
-``snapshot.commit`` (the atomic generation swap); CHECK-constrained
-tables and Python-only options (require_not_null, page_stats, …) go to
-the Python sink.
+takes every batch write ``sources.write`` routes to it: the job writes
+files and sidecars into a staging directory (``_temporary/jvm-<uuid>/``),
+and ``sources.write`` publishes them through ``snapshot.commit`` under
+the table lock — an append into the live root, or an atomic generation
+swap. CHECK-constrained tables and Python-only options (require_not_null,
+page_stats, …) go to the Python sink. A write that names
+``format("quiverjvm")`` itself bypasses the commit: each task publishes
+its own files, the job commit merges the manifest without the lock,
+and an overwrite truncates the table before its tasks run.
 
 The jar builds OFFLINE with plain javac against the bundled Spark jars
 (build.sh — no network, no dependency resolution) and is checked in so
@@ -40,6 +42,7 @@ from __future__ import annotations
 import os
 import shutil
 import subprocess
+import weakref
 
 _JVM_DIR = os.path.dirname(os.path.abspath(__file__))
 JAR_PATH = os.path.join(_JVM_DIR, "quiver-jvm-writer.jar")
@@ -157,6 +160,11 @@ def _resolves(spark) -> bool:
         return False
 
 
+#: sessions in which quiverjvm resolved (weak: a stopped session's
+#: object can go, and a new session never inherits its entry)
+_ATTACHED = weakref.WeakSet()
+
+
 def attach_jar(spark) -> bool:
     """Make the quiverjvm DataSource resolvable in THIS session; True on
     verified success.
@@ -166,14 +174,20 @@ def attach_jar(spark) -> bool:
     consults — so even driver-owned plain sessions (the correctness gate)
     can use the JVM fast path. Idempotent; resolution is verified, never
     assumed, and failure degrades to False so callers fall back to the
-    Python engine."""
-    if _resolves(spark):
+    Python engine. A verified success is remembered per session (the
+    lookup is a py4j round trip on every scan and write); a failure is
+    not, so a later call probes again."""
+    if spark in _ATTACHED:
         return True
-    p = ensure_jar(build=False)
-    if p is None:
-        return False
-    try:
-        spark.sql("ADD JAR '{}'".format(p.replace("'", "\\'")))
-    except Exception:
-        return False
-    return _resolves(spark)
+    if not _resolves(spark):
+        p = ensure_jar(build=False)
+        if p is None:
+            return False
+        try:
+            spark.sql("ADD JAR '{}'".format(p.replace("'", "\\'")))
+        except Exception:
+            return False
+        if not _resolves(spark):
+            return False
+    _ATTACHED.add(spark)
+    return True

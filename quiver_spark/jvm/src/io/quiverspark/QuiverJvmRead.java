@@ -137,6 +137,10 @@ public final class QuiverJvmRead {
     return d.getPath();
   }
 
+  /** Committed data files under a resolved root (snapshot.list_files
+   * parity): hidden/underscore names are skipped at any depth, and so
+   * are generation directories directly under the root — under a flat
+   * root they are uncommitted claims, never part of the table. */
   static void listFiles(File dir, List<File> out) {
     if (dir.isFile()) {
       // single-file path (Python-DS _list_files_pattern parity): scan
@@ -144,6 +148,10 @@ public final class QuiverJvmRead {
       out.add(dir);
       return;
     }
+    listFiles(dir, out, true);
+  }
+
+  private static void listFiles(File dir, List<File> out, boolean root) {
     File[] entries = dir.listFiles();
     if (entries == null) return;
     java.util.Arrays.sort(entries);
@@ -151,7 +159,7 @@ public final class QuiverJvmRead {
       String n = e.getName();
       if (n.startsWith("_") || n.startsWith(".")) continue;
       if (e.isDirectory()) {
-        listFiles(e, out);
+        if (!(root && n.matches("gen-\\d{6,}"))) listFiles(e, out, false);
       } else if (n.endsWith(".quiver")) {
         out.add(e);
       }

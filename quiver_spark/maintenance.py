@@ -75,6 +75,18 @@ def _check_disjoint(src_dir: str, dst_dir: str) -> None:
         )
 
 
+def _in_place_source(src_dir: str, dst_dir: str) -> dict:
+    """The snapshot options of a rewrite from ``src_dir`` into
+    ``dst_dir``. In place: ``carry_src`` names the snapshot the rewrite
+    reads (``_snapshot``), so its commit raises ConcurrentWriteError
+    when a commit added or removed files since, instead of dropping
+    them. Elsewhere: none, after refusing an overlapping destination."""
+    if os.path.realpath(dst_dir) == os.path.realpath(src_dir):
+        return {"carry_src": _snapshot(src_dir)[0]}
+    _check_disjoint(src_dir, dst_dir)
+    return {}
+
+
 def compact(
     spark,
     src_dir: str,
@@ -101,7 +113,9 @@ def compact(
     rewrite publishes into a fresh ``gen-NNNNNN/`` directory, and the
     ``_current`` pointer flips at commit — a failed compaction leaves the
     table untouched, and no reader ever sees a partial mix of old and new
-    files. (Before the generation layout this exact call was forbidden:
+    files. A commit that lands between the read and the swap fails the
+    compaction with ConcurrentWriteError instead of losing its rows.
+    (Before the generation layout this exact call was forbidden:
     overwrite would have cleared the job's own input.) A DIFFERENT
     destination that overlaps the source (nested either way) is still
     refused.
@@ -117,8 +131,7 @@ def compact(
 
     if dst_dir is None:
         dst_dir = src_dir
-    if os.path.realpath(dst_dir) != os.path.realpath(src_dir):
-        _check_disjoint(src_dir, dst_dir)
+    planned = _in_place_source(src_dir, dst_dir)
     n_files, rows = _dir_stats(src_dir)
     if partition_by is None:
         part_cols = [c for c, _k in _discover_partitions(src_dir)[0]]
@@ -141,7 +154,7 @@ def compact(
         df = df.repartition(n_out)
     write(
         df, dst_dir, partition_by=part_cols, codec=codec,
-        max_rows_per_file=max(target_rows_per_file, 1),
+        max_rows_per_file=max(target_rows_per_file, 1), **planned,
     )
 
     out_files, out_rows = _dir_stats(dst_dir)
@@ -270,8 +283,7 @@ def cluster_by(
         raise ValueError("cluster_by needs at least one column")
     if dst_dir is None:
         dst_dir = src_dir
-    if os.path.realpath(dst_dir) != os.path.realpath(src_dir):
-        _check_disjoint(src_dir, dst_dir)
+    planned = _in_place_source(src_dir, dst_dir)
     n_files, rows = _dir_stats(src_dir)
     part_cols = [c for c, _k in _discover_partitions(src_dir)[0]]
     n_out = max(1, math.ceil(rows / max(target_rows_per_file, 1)))
@@ -301,7 +313,7 @@ def cluster_by(
     # max_rows_per_file cap — the JVM writer rolls files at exactly the
     # cap, which would cut a range a little over target into a sliver
     # whose narrow trailing-column span no clustering intended
-    write(df, dst_dir, partition_by=part_cols, codec=codec)
+    write(df, dst_dir, partition_by=part_cols, codec=codec, **planned)
     out_files, out_rows = _dir_stats(dst_dir)
     return {
         "src": src_dir,
@@ -1033,10 +1045,15 @@ def expire_generations(path: str, keep: int = 1) -> dict:
     from quiver_spark.sources import snapshot
 
     keep = max(1, int(keep))
-    if not os.path.exists(os.path.join(path, snapshot.CURRENT)):
-        return {"dir": path, "removed": [], "kept": [], "note": "no generations"}
-    live = os.path.basename(snapshot.data_root(path))
     gens = snapshot.generations(path)
+    if not os.path.exists(os.path.join(path, snapshot.CURRENT)):
+        # a flat table: every generation is newer than its live root (a
+        # first overwrite's claim, in flight or crashed before its swap)
+        out = {"dir": path, "removed": [], "kept": [], "note": "no generations"}
+        if gens:
+            out["skipped_inflight"] = gens
+        return out
+    live = os.path.basename(snapshot.data_root(path))
     # Retention counts only generations AT OR BELOW the live one — a
     # directory NEWER than the live pointer is either a concurrent
     # writer's in-flight claim (not ours to touch) or a crashed/raced
@@ -1090,7 +1107,8 @@ def vacuum(
         path, max_age_sec=staging_age_sec
     )
     # orphaned generation claims: a directory NEWER than the live pointer
-    # whose commit never swapped (crashed writer, lost lock-less race).
+    # (on a flat table: any) whose commit never swapped (crashed writer,
+    # lost lock-less race).
     # expire_generations deliberately skips them (a LIVE concurrent
     # writer may own one); here the staging-age rule makes the call —
     # anything newer-than-live and older than staging_age_sec is a
@@ -1369,20 +1387,20 @@ def ingest(
     queryable with O(1) scan planning when it returns: an overwrite
     through :func:`quiver_spark.sources.write`, which picks the engine.
 
-    Into a new or empty directory that is the quiverjvm writer whenever
-    its guards accept the schema (rows never cross the JVM→Python
-    boundary — measured 0.69x parquet wall at sf0.1 vs ~2.8x for the
-    Python sink, BASELINE.md round-10 ingest table); its job commit writes
-    the manifest from the task writers' commit messages (plus per-file
-    stats sidecars: zone maps, optional blooms, CRCs), so ingest is ONE
-    pass and the first scan plans from ONE metadata read. Re-ingesting
-    into an existing table is the Python sink's atomic generation swap.
-    ``partition_by`` fans rows into Hive ``col=value`` subdirectories on
-    either engine (the input is repartitioned by the keys first so
-    per-key writer buffers stay bounded). ``mode`` is always overwrite —
-    ingest is a load, not an append (use ``sources.write(...,
-    mode="append")`` for increments). ``engine`` in the result is
-    ``"jvm"`` or ``"python"``."""
+    That is the quiverjvm writer whenever its guards accept the schema
+    (rows never cross the JVM→Python boundary — measured 0.69x parquet
+    wall at sf0.1 vs ~2.8x for the Python sink, BASELINE.md round-10
+    ingest table). Its tasks write per-file stats sidecars (zone maps,
+    optional blooms, CRCs) and the driver's commit builds the manifest
+    from them, so the first scan plans from ONE metadata read. Into a
+    new or empty directory the load makes a flat table; re-ingesting
+    into an existing table is an atomic generation swap, on either
+    engine. ``partition_by`` fans rows into Hive ``col=value``
+    subdirectories on either engine (the input is repartitioned by the
+    keys first so per-key writer buffers stay bounded). ``mode`` is
+    always overwrite — ingest is a load, not an append (use
+    ``sources.write(..., mode="append")`` for increments). ``engine`` in
+    the result is ``"jvm"`` or ``"python"``."""
     from quiver_spark.sources import write
 
     parts = (

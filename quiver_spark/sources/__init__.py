@@ -237,17 +237,17 @@ def try_jvm_scan(spark, path: str, **options):
 #: (QuiverJvmBatchWrite.createBatchWriterFactory and the streaming write
 #: read exactly these; ``partition_by`` is the streaming Hive fan-out, the
 #: batch router passes it as ``.partitionBy``). A batch write may also
-#: name SNAPSHOT_OPTS, which the driver-side commit of its staged JVM
-#: write consumes; anything else — require_not_null, page_stats,
-#: default_codec, … — keeps the Python sink.
+#: name SNAPSHOT_OPTS, which the driver-side commit consumes; anything
+#: else — require_not_null, page_stats, default_codec, … — keeps the
+#: Python sink.
 JVM_WRITE_OPTS = frozenset(
     {"codec", "max_page_size", "max_rows_per_file", "bloom_columns",
-     "compress_ratio", "forbidden", "manifest", "partition_by"}
+     "compress_ratio", "forbidden", "partition_by"}
 )
 
 #: batch write options served by ``snapshot.commit`` rather than by a
 #: writer: retention, row-level carry, and the pointer store. A write
-#: naming any of them publishes through the snapshot commit.
+#: naming any of them publishes as a generation swap.
 SNAPSHOT_OPTS = frozenset(
     {"keep_generations", "carry_files", "carry_src", "pointer_store"}
 )
@@ -268,12 +268,7 @@ def _jvm_takes(df, path: str, options) -> bool:
     commit serves them), the schema is JVM-encodable, the jar attaches,
     and the destination's live manifest has no CHECK constraints: only
     the Python sink evaluates them, and the JVM write builder refuses
-    such a table (one manifest load, cached per manifest stat).
-
-    The destination's state picks only HOW the JVM writes (``write``):
-    an overwrite of a non-empty directory is staged and swapped in as a
-    new generation, never a truncate in place.
-    """
+    such a table (one manifest load, cached per manifest stat)."""
     from quiver_spark.jvm import attach_jar, supports_schema
     from quiver_spark.sources.manifest import load_manifest
     from quiver_spark.sources.quiver_datasource import _data_root
@@ -293,29 +288,26 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     the engine name it used (``"quiverjvm"`` | ``"quiver"``) so callers
     and tests can pin the routing.
 
-    When ``_jvm_takes`` accepts the schema, the options and the
-    destination, the quiverjvm writer (the Java DataSourceV2 bulk
-    writer, sf0.1 ≈0.9× the parquet writer vs the Python sink's ≈1.4×)
-    writes the rows, in one of two ways:
-
-    - **direct**: a plain append, or a write into a new or empty
-      directory. The JVM job publishes its files and merges the
-      manifest itself. It defaults ``codec`` to zstd.
-    - **staged** (``_staged_write``): every write that needs the
-      snapshot protocol — an overwrite of a non-empty directory, or any
-      of SNAPSHOT_OPTS (keep_generations, carry_files/carry_src,
-      pointer_store). The JVM job appends into a hidden
-      ``_temporary/jvm-<uuid>/`` directory, and this process publishes
-      the files through ``snapshot.commit``: an overwrite is an atomic
-      generation swap, so a failed or self-reading overwrite leaves the
-      old snapshot live. It defaults ``codec`` to lz4, the codec these
-      writes had on the Python sink.
+    When ``_jvm_takes`` accepts the schema and the options, the quiverjvm
+    writer (the Java DataSourceV2 bulk writer, sf0.1 ≈0.9× the parquet
+    writer vs the Python sink's ≈1.4×) writes the rows into a hidden
+    ``_temporary/jvm-<uuid>/`` directory, and this process publishes
+    them through ``snapshot.commit`` under the table lock, with the
+    arguments the Python sink's commit passes. The commit is a
+    generation swap when the mode is overwrite and the directory
+    already holds anything or the write names any of SNAPSHOT_OPTS
+    (keep_generations, carry_files/carry_src, pointer_store): a failed
+    or self-reading overwrite leaves the old snapshot live. Otherwise it
+    is an append into the live root, so a first write into a new or
+    empty directory makes a flat table. A failed job or a refused commit
+    removes its staging directory and publishes nothing; a killed
+    process leaves it to ``maintenance.vacuum``.
 
     The **python "quiver" sink** takes the rest: exotic leaf types (half
     floats, decimal256, null columns), options only it implements
     (require_not_null, page_stats, …), and every write into a table
     with CHECK constraints. It stages and commits through the same
-    ``snapshot.commit`` and defaults ``codec`` to lz4.
+    ``snapshot.commit``. Both engines default ``codec`` to lz4.
 
     The probe runs BEFORE the job: there is deliberately no silent
     fallback after a started JVM write (a half-finished write must
@@ -326,13 +318,22 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     __partition_cols), the documented ``partition_by`` option on the
     Python sink — same directory layout either way.
     """
+    import json
+    import shutil
+    import uuid
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from . import snapshot
+    from .pointer_store import store_from_option
+    from .quiver_datasource import write_placeholder
+
     register(df.sparkSession)
     if mode not in ("append", "overwrite"):
         raise ValueError(
             f"unified quiver write supports mode='append'|'overwrite', "
             f"got {mode!r}"
         )
-    overwrite = mode == "overwrite"
     cols = (
         [c.strip() for c in partition_by.split(",")]
         if isinstance(partition_by, str)
@@ -348,42 +349,15 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
             writer = writer.option(k, str(v))
         writer.save(path)
         return "quiver"
-    local = _local_dir(path)
-    staged = snap or (overwrite and os.path.isdir(local) and os.listdir(local))
-    writer = df.write.format("quiverjvm")
-    writer = (
-        writer.mode("append").option("codec", "lz4") if staged
-        else writer.mode(mode)
+    table = _local_dir(path)
+    overwrite = mode == "overwrite" and bool(
+        snap or (os.path.isdir(table) and os.listdir(table))
     )
+    writer = df.write.format("quiverjvm").mode("append").option("codec", "lz4")
     if cols:
         writer = writer.partitionBy(*cols)
     for k, v in jvm_opts.items():
         writer = writer.option(k, str(v))
-    if staged:
-        _staged_write(writer, df.schema, local, snap, overwrite)
-    else:
-        writer.save(path)
-    return "quiverjvm"
-
-
-def _staged_write(writer, schema, table: str, snap, overwrite) -> None:
-    """Save the configured quiverjvm append ``writer`` into a fresh hidden
-    ``table/_temporary/jvm-<uuid>/`` (no manifest there), then publish
-    the staged files through ``snapshot.commit`` in this process with
-    the arguments the Python sink's commit passes, add the empty-result
-    placeholder, and sweep day-old staging. A failure before the
-    commit, or a refused commit, removes the staging directory; a
-    killed process leaves it to ``maintenance.vacuum``."""
-    import json
-    import shutil
-    import uuid
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from . import snapshot
-    from .pointer_store import store_from_option
-    from .quiver_datasource import write_placeholder
-
     stage = os.path.join(
         table, snapshot.STAGING_DIR, f"jvm-{uuid.uuid4().hex}"
     )
@@ -407,8 +381,12 @@ def _staged_write(writer, schema, table: str, snap, overwrite) -> None:
     except Exception:
         shutil.rmtree(stage, ignore_errors=True)
         raise
-    write_placeholder(table, to_arrow_schema(schema))
-    snapshot.sweep_stale_staging(table)
+    finally:
+        # day-old attempts, and the staging root once it is empty
+        snapshot.sweep_stale_staging(table)
+    if not rels:  # published files leave the snapshot non-empty
+        write_placeholder(table, to_arrow_schema(df.schema))
+    return "quiverjvm"
 
 
 def stream_writer(df, path: str, **options):

@@ -325,15 +325,23 @@ def _load_raw(root: str) -> dict | None:
 def _write_raw(root: str, raw: dict) -> None:
     """Atomic publish: write-temp + os.replace, the same discipline as the
     generation pointer — a crash mid-write can never leave a torn manifest
-    (readers see the previous one or none)."""
+    (readers see the previous one or none). The load cache takes the
+    written ``raw``, which callers never change afterwards."""
     import uuid
 
     p = manifest_path(root)
     tmp = f"{p}.tmp.{uuid.uuid4().hex}"
+    # one dumps + one compress: streaming json.dump through a gzip text
+    # wrapper costs ~3x as much
+    body = gzip.compress(json.dumps(raw, separators=(",", ":")).encode())
     try:
-        with gzip.open(tmp, "wt", encoding="utf-8") as f:
-            json.dump(raw, f, separators=(",", ":"))
+        with open(tmp, "wb") as f:
+            f.write(body)
+        st = os.stat(tmp)  # never a rival's: the rename keeps the stat
         os.replace(tmp, p)
+        if len(_MANIFEST_CACHE) > 8:
+            _MANIFEST_CACHE.clear()
+        _MANIFEST_CACHE[(p, st.st_mtime_ns, st.st_size)] = Manifest(root, raw)
     finally:
         try:
             os.unlink(tmp)

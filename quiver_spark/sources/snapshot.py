@@ -8,7 +8,7 @@ on-disk protocol. A table directory holds numbered snapshots
 pointer: a flat table that resolves to itself). Writers stage task
 output under the hidden ``_temporary/`` root; :func:`commit` publishes
 it — data files first, then one atomic metadata publish, the split of
-Delta's log commit. Callers: the staged JVM write of ``sources.write``
+Delta's log commit. Callers: every JVM write of ``sources.write``
 (its files staged under ``_temporary/jvm-<uuid>/``), the quiver and
 arrowipc batch and stream sinks (``QuiverWriter._publish``) and
 metadata-only ALTERs (``maintenance._commit_evolution``); clone,
@@ -128,13 +128,18 @@ def list_files(path: str, pattern: str) -> list[str]:
     """Committed data files under a resolved root matching ``pattern``,
     skipping hidden/staging components (any path segment, filename
     included — the Hadoop/Spark convention): files under _temporary are
-    uncommitted task attempts and must never be scanned."""
+    uncommitted task attempts and must never be scanned. Generation
+    directories directly under the root are skipped too: under a flat
+    root they are claims no pointer names yet (``QuiverJvmRead.listFiles``
+    parity)."""
     if not os.path.isdir(path):
         return [path]
     out = []
     for f in glob.glob(os.path.join(path, "**", pattern), recursive=True):
-        rel = os.path.relpath(f, path)
-        if any(seg.startswith(("_", ".")) for seg in rel.split(os.sep)):
+        segs = os.path.relpath(f, path).split(os.sep)
+        if any(seg.startswith(("_", ".")) for seg in segs) or (
+            len(segs) > 1 and GEN_RE.fullmatch(segs[0])
+        ):
             continue
         out.append(f)
     return sorted(out)
@@ -301,12 +306,14 @@ def _retain(table: str, current: str, previous: str | None, keep: int) -> None:
 def sweep_flat(table: str, globs: Sequence[str]) -> list[str]:
     """Remove data files (and sidecars) matching ``globs`` that sit
     outside every generation and staging dir: once a pointer exists no
-    resolver sees them, so leaving them is a disk leak. The flat-root
+    resolver sees them, so leaving them is a disk leak. The directories
+    this leaves empty (Hive ``k=v/``) go bottom-up, and the flat-root
     manifest described them and goes too (each generation carries its
     own). Returns the removed files, relative to ``table``."""
     from .manifest import remove_manifest
 
     removed: list[str] = []
+    walked: list[str] = []
     pats = [p for g in globs for p in (g, g + SIDECAR)]
     for dirpath, dirs, files in os.walk(table):
         gens_here = dirpath == table
@@ -316,6 +323,7 @@ def sweep_flat(table: str, globs: Sequence[str]) -> list[str]:
             if not d.startswith(("_", "."))
             and not (gens_here and GEN_RE.fullmatch(d))
         ]
+        walked.extend(os.path.join(dirpath, d) for d in dirs)
         for f in files:
             if not f.startswith(("_", ".")) and any(
                 fnmatch.fnmatchcase(f, p) for p in pats
@@ -327,6 +335,11 @@ def sweep_flat(table: str, globs: Sequence[str]) -> list[str]:
                     )
                 except OSError:
                     pass
+    for d in reversed(walked):  # children before their parents
+        try:
+            os.rmdir(d)
+        except OSError:
+            pass
     remove_manifest(table)
     return removed
 
@@ -386,8 +399,7 @@ def commit(
                 for f in list_files(live_root, g)
             ]
         if carry_src is not None:
-            # before the claim: a flat root's listing would include the
-            # claimed generation's files
+            # before the claim, so a refused rewrite leaves no claim
             src_gen, _, digest = carry_src.partition("@")
             if (expected or "") != src_gen:
                 raise ConcurrentWriteError(

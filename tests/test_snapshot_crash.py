@@ -379,3 +379,49 @@ def test_vacuum_removes_flat_root_leftovers(tmp_path):
     ]
     assert sorted(os.listdir(table)) == ["_current", "_writer.lock", "gen-000001"]
     assert _ids(table) == [1, 2]
+
+
+@pytest.mark.parametrize("point", POINTS)
+def test_flat_crash_reads_old_or_new_on_both_engines(
+    spark, tmp_path, monkeypatch, point
+):
+    """The first overwrite of a FLAT table claims ``gen-000001`` under the
+    flat root. Until its pointer swap that directory is no part of the
+    table: both readers skip it, and vacuum removes it as an orphan."""
+    from quiver_spark.jvm import attach_jar
+    from quiver_spark.sources import register
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar cannot attach")
+    register(spark)
+    table = str(tmp_path / "t")
+    os.makedirs(table)
+    write_table(
+        pa.table({"id": pa.array([7], type=pa.int64())}),
+        os.path.join(table, "flat.quiver"),
+        WriteOptions(),
+    )
+
+    def both() -> list[tuple]:
+        got = [
+            sorted(map(tuple, spark.read.format(f).load(table).collect()))
+            for f in ("quiver", "quiverjvm")
+        ]
+        assert got[0] == got[1], got
+        return got[0]
+
+    _inject(monkeypatch, point)
+    with pytest.raises(Crash):
+        _overwrite(table, [1, 2])
+    monkeypatch.undo()
+    set_pointer_store(LocalPointerStore())
+
+    want = [(1,), (2,)] if point == "swapped" else [(7,)]
+    assert both() == want
+    time.sleep(0.05)  # the sweeps take entries strictly older than now
+    M.vacuum(table, staging_age_sec=0)
+    assert snapshot.generations(table) == (
+        ["gen-000001"] if point == "swapped" else []
+    )
+    assert not os.path.exists(os.path.join(table, snapshot.STAGING_DIR))
+    assert both() == want

@@ -1,9 +1,9 @@
-"""Edge cases of the staged JVM write: ``sources.write`` sends an
-overwrite of an existing table and every row-level rewrite to the
-quiverjvm writer aimed at ``_temporary/jvm-<uuid>/``, then publishes the
-files through ``snapshot.commit`` in the driver. Each case checks the
-rows (against a model computed without the table), the layout, and that
-no staging directory is left behind."""
+"""Edge cases of the staged JVM write: ``sources.write`` aims every
+quiverjvm write it routes (appends, loads, overwrites and row-level
+rewrites) at ``_temporary/jvm-<uuid>/``, then publishes the files
+through ``snapshot.commit`` in the driver. Each case checks the rows
+(against a model computed without the table), the layout, and that no
+staging directory is left behind."""
 
 from __future__ import annotations
 
@@ -149,3 +149,78 @@ def test_pointer_store_option_reaches_the_driver_commit(spark, tmp_path):
     assert not os.path.exists(os.path.join(cas, "_writer.lock"))
     assert _rows(spark, cas) == want
     assert _no_staging(unlocked) and _no_staging(cas)
+
+
+def test_failed_append_task_leaves_old_rows_and_no_staging(spark, tmp_path):
+    """A routed append publishes nothing until every task succeeded: its
+    tasks stage their files, and only the driver's commit publishes
+    them. Here the last of four tasks fails after the other three have
+    written their files."""
+    table = str(tmp_path / "t")
+    assert sources.write(spark.range(0, 10, 1, 1), table) == "quiverjvm"
+    boom = spark.range(100, 140, 1, 4).selectExpr(
+        "if(id = 139 AND reflect('java.lang.Thread', 'sleep', 3000L) "
+        "IS NOT NULL, raise_error('last append task failed'), id) AS id"
+    )
+    with pytest.raises(Exception, match="last append task failed"):
+        sources.write(boom, table, mode="append")
+    assert _rows(spark, table) == [(i,) for i in range(10)]
+    assert _no_staging(table)
+
+
+@pytest.mark.parametrize(
+    "rewrite",
+    [
+        lambda spark, t: M.compact(spark, t),
+        lambda spark, t: M.cluster_by(spark, t, ["k"]),
+    ],
+    ids=["compact", "cluster_by"],
+)
+def test_in_place_rewrite_refuses_a_commit_landing_before_its_swap(
+    spark, tmp_path, monkeypatch, rewrite
+):
+    """An append that commits while an in-place compaction or clustering
+    runs must not vanish from the rewritten snapshot: the rewrite's
+    commit refuses, and the table keeps every row."""
+    from quiver_spark.sources.pointer_store import ConcurrentWriteError
+
+    table = str(tmp_path / "t")
+    want = _table(spark, table, n=400)
+    more = spark.range(400, 450, 1, 1).selectExpr(
+        "id", "id % 5 AS k", "concat('v', id) AS s"
+    )
+    real = snapshot.commit
+    appended: list[str] = []
+
+    def commit(table_, globs, **kwargs):
+        if kwargs["overwrite"] and not appended:
+            appended.append(sources.write(more, table, mode="append"))
+        return real(table_, globs, **kwargs)
+
+    monkeypatch.setattr(snapshot, "commit", commit)
+    gens = snapshot.generations(table)
+    with pytest.raises(ConcurrentWriteError):
+        rewrite(spark, table)
+    assert appended == ["quiverjvm"]
+    assert _rows(spark, table) == sorted(
+        want + [(i, i % 5, f"v{i}") for i in range(400, 450)]
+    )
+    assert snapshot.generations(table) == gens
+    assert _no_staging(table)
+
+
+def test_first_swap_of_a_flat_hive_table_leaves_no_key_dirs(spark, tmp_path):
+    """The first in-place compaction of a flat Hive-partitioned table
+    moves its rows into a generation; the emptied ``k=v/`` directories
+    at the root go with the old files."""
+    table = str(tmp_path / "t")
+    df = spark.range(0, 70, 1, 2).selectExpr("id", "id % 7 AS k")
+    assert sources.write(df, table, partition_by=["k"]) == "quiverjvm"
+    assert len(glob.glob(os.path.join(table, "k=*"))) == 7
+    M.compact(spark, table)
+    assert glob.glob(os.path.join(table, "k=*")) == []
+    root = snapshot.data_root(table)
+    assert len(glob.glob(os.path.join(root, "k=*"))) == 7
+    assert sorted(
+        (r.id, r.k) for r in sources.scan(spark, table).collect()
+    ) == [(i, i % 7) for i in range(70)]

@@ -1,10 +1,9 @@
 """Maintenance write routing: every quiver write in ``maintenance.py`` goes
 through ``sources.write``, the one place that picks a batch write engine,
 and ``maintenance.py`` never hands a format to ``DataFrameWriter`` itself.
-The codec each call passes is pinned too: a direct JVM write defaults to
-zstd, while a staged JVM write and the Python sink default to lz4, so a
-call that can land on more than one of them must name the codec it
-writes."""
+The codec each call passes is pinned too. Every engine the router picks
+defaults to lz4, so a call names a codec only when it means another one
+(``ingest``: zstd)."""
 
 from __future__ import annotations
 
@@ -66,7 +65,7 @@ def test_maintenance_writes_go_through_sources_write(spark, tmp_path, monkeypatc
 
     # loads into a new directory take the JVM writer, with the codec the
     # caller names (ingest: zstd; convert_parquet and a compaction into a
-    # fresh directory: lz4, as they wrote on the Python sink)
+    # fresh directory: lz4)
     one_write(lambda: M.ingest(spark, src, t), t, "overwrite",
               "quiverjvm", "zstd")
     one_write(lambda: M.convert_parquet(spark, orders, conv), conv,
@@ -95,3 +94,61 @@ def test_maintenance_writes_go_through_sources_write(spark, tmp_path, monkeypatc
     assert format_callers, "the spy saw no DataFrameWriter.format call"
     here = {os.path.basename(f) for f in format_callers}
     assert "maintenance.py" not in here, here
+
+
+def test_routed_writes_default_to_lz4(spark, tmp_path):
+    """A write that names no codec stores lz4 blocks on either engine:
+    a load into a new directory, an append and an overwrite through the
+    JVM writer, and a write the Python sink takes."""
+    from quiver_spark import sources
+    from quiver_spark.format.stat import stat_file
+    from quiver_spark.jvm import attach_jar
+    from quiver_spark.sources import snapshot
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar cannot attach")
+    df = spark.range(0, 20000, 1, 1).selectExpr(
+        "sha2(CAST(id AS STRING), 256) AS h"
+    )
+
+    def codecs(table):
+        root = snapshot.data_root(table)
+        return {
+            p.codec
+            for f in snapshot.list_files(root, "*.quiver")
+            for pages in stat_file(f).values()
+            for p in pages
+        }
+
+    jvm, py = str(tmp_path / "jvm"), str(tmp_path / "py")
+    assert sources.write(df, jvm) == "quiverjvm"
+    assert sources.write(df, jvm, mode="append") == "quiverjvm"
+    assert codecs(jvm) == {"lz4"}
+    assert sources.write(df, jvm, mode="overwrite") == "quiverjvm"
+    assert codecs(jvm) == {"lz4"}
+    assert sources.write(df, py, require_not_null="h") == "quiver"
+    assert codecs(py) == {"lz4"}
+
+
+def test_attach_jar_remembers_only_a_verified_success(monkeypatch):
+    """``attach_jar`` probes the session's data source lookup until one
+    succeeds, then answers from memory for that session."""
+    from quiver_spark import jvm
+
+    probes: list[object] = []
+    resolves = [False]
+    monkeypatch.setattr(
+        jvm, "_resolves", lambda s: probes.append(s) or resolves[0]
+    )
+    monkeypatch.setattr(jvm, "ensure_jar", lambda build=True: None)
+
+    class Session:
+        pass
+
+    s = Session()
+    assert not jvm.attach_jar(s) and not jvm.attach_jar(s)
+    assert len(probes) == 2
+    resolves[0] = True
+    assert jvm.attach_jar(s) and jvm.attach_jar(s)
+    assert len(probes) == 3
+    assert jvm.attach_jar(Session()) and len(probes) == 4
