@@ -294,8 +294,8 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     ``_temporary/jvm-<uuid>/`` directory, and this process publishes
     them through ``snapshot.commit`` under the table lock, with the
     arguments the Python sink's commit passes. The commit is a
-    generation swap when the mode is overwrite and the directory
-    already holds anything or the write names any of SNAPSHOT_OPTS
+    generation swap when the mode is overwrite and, under the lock, the
+    directory holds anything or the write names any of SNAPSHOT_OPTS
     (keep_generations, carry_files/carry_src, pointer_store): a failed
     or self-reading overwrite leaves the old snapshot live. Otherwise it
     is an append into the live root, so a first write into a new or
@@ -350,9 +350,6 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
         writer.save(path)
         return "quiver"
     table = _local_dir(path)
-    overwrite = mode == "overwrite" and bool(
-        snap or (os.path.isdir(table) and os.listdir(table))
-    )
     writer = df.write.format("quiverjvm").mode("append").option("codec", "lz4")
     if cols:
         writer = writer.partitionBy(*cols)
@@ -370,7 +367,8 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
         snapshot.commit(
             table,
             ("*.quiver",),
-            overwrite=overwrite,
+            overwrite=mode == "overwrite",
+            flat_if_empty=not snap,
             staged=[(stage, rels)],
             fmt="quiver",
             carry_src=snap.get("carry_src"),

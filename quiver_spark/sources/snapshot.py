@@ -356,6 +356,7 @@ def commit(
     keep: int = 1,
     mutate: Callable[[str, list[str]], object] | None = None,
     store: PointerStore | None = None,
+    flat_if_empty: bool = False,
 ) -> str:
     """Publish one commit of ``table`` under its writer lock; returns the
     data root it published into.
@@ -375,6 +376,12 @@ def commit(
       live manifest to ``mutate(new_root, rels)``; no retention, so the
       old snapshot stays for time travel and rollback.
 
+    ``flat_if_empty`` turns an overwrite into an append when, under the
+    lock, the table has no pointer and holds nothing but the staging
+    root and the lock file: a first load makes a flat table, and of two
+    racing loads into a new directory the later one still replaces the
+    earlier.
+
     A crash before the swap leaves the old snapshot live plus, at worst,
     an unmarked claim and staging entries that ``maintenance.vacuum``
     sweeps; after it, at worst a superseded generation lingers. A
@@ -389,6 +396,10 @@ def commit(
     with store.lock(table):
         expected = store.read_pointer(table)
         live_root = os.path.join(table, expected) if expected else table
+        if overwrite and flat_if_empty and expected is None:
+            overwrite = bool(
+                set(os.listdir(table)) - {STAGING_DIR, store.LOCKFILE}
+            )
         if not overwrite:
             return _append(table, store, staged, fmt)
         if mutate is not None:

@@ -224,3 +224,28 @@ def test_first_swap_of_a_flat_hive_table_leaves_no_key_dirs(spark, tmp_path):
     assert sorted(
         (r.id, r.k) for r in sources.scan(spark, table).collect()
     ) == [(i, i % 7) for i in range(70)]
+
+
+def test_racing_loads_into_a_new_directory_keep_the_later_commit(
+    spark, tmp_path, monkeypatch
+):
+    """Two overwrites into the same new directory, both started while it
+    was empty: the one that commits second replaces the first. Whether a
+    load publishes flat or swaps in a generation is settled under the
+    table lock, not when the write starts."""
+    table = str(tmp_path / "t")
+    real = snapshot.commit
+    raced: list[str] = []
+
+    def commit(table_, globs, **kwargs):
+        if not raced:
+            raced.append("")
+            raced[0] = sources.write(spark.range(100, 110, 1, 1), table)
+        return real(table_, globs, **kwargs)
+
+    monkeypatch.setattr(snapshot, "commit", commit)
+    assert sources.write(spark.range(0, 10, 1, 2), table) == "quiverjvm"
+    assert raced == ["quiverjvm"]
+    assert _rows(spark, table) == [(i,) for i in range(10)]
+    assert snapshot.generations(table) == ["gen-000001"]
+    assert _no_staging(table)
