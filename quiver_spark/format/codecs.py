@@ -168,13 +168,38 @@ def _bits_view_dtype(dt: np.dtype) -> np.dtype:
 # ---------------------------------------------------------------------------
 
 
+def _summary(nn: np.ndarray, filled: np.ndarray) -> tuple[np.ndarray, ...]:
+    """What the numeric chooser needs to know of a page: its distinct
+    non-null values with their counts, and the runs of the filled values."""
+    uniq, counts = (
+        np.unique(nn, return_counts=True)
+        if len(nn)
+        else (np.empty(0, nn.dtype), np.empty(0, np.int64))
+    )
+    return (uniq, counts, *_run_lengths(filled))
+
+
+def _codes_summary(
+    codes: np.ndarray, counts: np.ndarray, run_counts: np.ndarray
+) -> tuple[np.ndarray, ...]:
+    """``_summary`` of a Dict page's codes from what the value pass found:
+    every entry is used, so the distinct codes are 0..len(counts)-1 with
+    the entries' counts; equal values share a code, so the codes run where
+    the values run."""
+    run_starts = np.cumsum(run_counts) - run_counts
+    return (np.arange(len(counts), dtype=codes.dtype), counts, codes[run_starts], run_counts)
+
+
 def encode_numeric(
     values: np.ndarray,
     valid: np.ndarray | None,
     opts: CodecOptions,
     is_double: bool,
+    summary: tuple[np.ndarray, ...] | None = None,
 ) -> bytes:
-    """Full adaptive cascade for one page of a numeric leaf; returns a frame."""
+    """Full adaptive cascade for one page of a numeric leaf; returns a frame.
+    ``summary`` is the page's ``_summary`` when the caller already knows it
+    (the codes of a Dict page); otherwise it is computed here."""
     n = len(values)
     isize = values.dtype.itemsize
     total_bytes = n * isize
@@ -187,14 +212,11 @@ def encode_numeric(
     best_codec, best_ratio, best_info = None, 0.0, None
     if opts.compress_ratio is not None and n > 0:
         nn_bits = nn.view(_bits_view_dtype(values.dtype)) if is_double else nn
-        uniq, counts = (
-            np.unique(nn_bits, return_counts=True)
-            if len(nn)
-            else (np.empty(0, nn_bits.dtype), np.empty(0, np.int64))
-        )
+        if summary is None:
+            summary = _summary(nn_bits, filled)
+        uniq, counts, run_vals, run_counts = summary
         unique_count = len(uniq)
         top_count = counts.max() if len(counts) else 0
-        run_vals, run_counts = _run_lengths(filled)
 
         cands: list[tuple[int, float, object]] = []
         if CODEC_ONE_VALUE not in opts.forbidden and unique_count <= 1:
@@ -214,7 +236,12 @@ def encode_numeric(
             rle_size = len(run_counts) * (4 + isize)
             cands.append((CODEC_RLE, total_bytes / max(rle_size, 1), (run_vals, run_counts)))
         if is_double and CODEC_PATAS not in opts.forbidden and len(nn) > 1:
-            cands.append((CODEC_PATAS, patas.sample_ratio(bits), None))
+            # sampled only when it could change the outcome: patas must beat
+            # the best ratio so far strictly, and a winner under the
+            # threshold falls back to the basic codec either way
+            bound = patas.max_sample_ratio(n, isize)
+            if bound > max((r for _, r, _ in cands), default=0.0) and bound >= opts.compress_ratio:
+                cands.append((CODEC_PATAS, patas.sample_ratio(bits), None))
         if not is_double and isize == 4 and n % 128 == 0 and n > 0:
             v32 = filled.view(np.uint32) if values.dtype != np.int32 else filled.astype(np.uint32, copy=False)
             raw_min = int(filled.view(np.int32).min()) if values.dtype == np.int32 else int(filled.min())
@@ -259,14 +286,17 @@ def encode_numeric(
         # insertion-ordered codes: the reference's interner numbers values
         # by first appearance
         denc = pc.dictionary_encode(arrow_view(bits))
-        codes = numpy_view(denc.indices, np.int32)
+        codes = numpy_view(denc.indices, np.int32).astype(np.uint32)
         dict_vals = numpy_view(denc.dictionary, bits.dtype).view(values.dtype)
         sub = CodecOptions(
             opts.default_codec,
             opts.compress_ratio,
             opts.forbidden | {CODEC_DICT},
         )
-        payload = encode_numeric(codes.astype(np.uint32), None, sub, False)
+        code_counts = np.bincount(codes, minlength=len(dict_vals))
+        payload = encode_numeric(
+            codes, None, sub, False, _codes_summary(codes, code_counts, run_counts)
+        )
         payload += struct.pack("<I", len(dict_vals)) + dict_vals.tobytes()
         return _frame(CODEC_DICT, payload, total_bytes)
 
@@ -457,7 +487,10 @@ def encode_fixed(
         sub = CodecOptions(
             opts.default_codec, opts.compress_ratio, opts.forbidden | {CODEC_DICT}
         )
-        payload = encode_numeric(inv.astype(np.uint32), None, sub, False)
+        codes = inv.astype(np.uint32)
+        payload = encode_numeric(
+            codes, None, sub, False, _codes_summary(codes, counts, run_counts)
+        )
         entries = uniq.view(np.uint8).reshape(len(uniq), width)
         payload += struct.pack("<I", len(uniq)) + entries.tobytes()
         return _frame(CODEC_DICT, payload, total_bytes)
@@ -674,8 +707,11 @@ def encode_binary(arr: pa.Array, opts: CodecOptions, offset_width: int) -> bytes
         sub = CodecOptions(
             opts.default_codec, opts.compress_ratio, opts.forbidden | {CODEC_DICT}
         )
+        codes = codes.astype(np.uint32)
         payload = (
-            encode_numeric(codes.astype(np.uint32), None, sub, False)
+            encode_numeric(
+                codes, None, sub, False, _codes_summary(codes, counts, _run_lengths(codes)[1])
+            )
             + struct.pack("<I", len(dict_off) - 1)
             + _len_prefixed(np.diff(dict_off), dict_val)
         )

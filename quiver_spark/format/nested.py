@@ -23,6 +23,15 @@ map / fixed-size-list) adds one rep depth and one def level that counts
 per existing element (an empty list stops at the list's own def). Slots
 belong to top-level rows at ``rep == 0`` boundaries.
 
+Work per page stays linear in the page's slots: the shredder expands each
+repeated level with one ``np.repeat`` of per-parent start offsets over an
+``arange`` and scatters the placeholders, reading only the page's range of
+the child array (Arrow hands out the whole column's); a present leaf range
+without gaps is sliced, not gathered. The assembler finds each node's
+entries with one mask over its first leaf's levels and the list offsets
+with one cumsum, and hands the decoded leaf values over as they are when the
+leaf has no nulls.
+
 Levels are serialized with the same hybrid-RLE bitpacked-run encoding used
 for flat validity (validity.py), generalized to ``ceil(log2(max_level+1))``
 bit width.
@@ -218,16 +227,58 @@ def _apply_optional(a: pa.Array, nullable: bool, frame: _Frame, cur_def: int) ->
     cur_def (the def value of slots where this node's value is present)."""
     if not nullable:
         return cur_def
-    cur_def += 1
+    present = frame.idx >= 0
     mask = _validity_mask(a)
-    defined = frame.idx >= 0
     if mask is not None:
-        present = defined & mask[np.maximum(frame.idx, 0)]
-    else:
-        present = defined
-    frame.def_[present] = cur_def
-    frame.idx[defined & ~present] = -1
-    return cur_def
+        present &= mask[np.maximum(frame.idx, 0)]
+        frame.idx = np.where(present, frame.idx, -1)
+    # every slot with an index sits at def cur_def: the present ones step up
+    frame.def_ += present
+    return cur_def + 1
+
+
+def _expand(
+    frame: _Frame, starts: np.ndarray, lengths: np.ndarray, cur_rep: int, elem_def: int
+) -> _Frame:
+    """The child frame of a repeated node: parent slot p becomes
+    ``max(lengths[p], 1)`` child slots, element j of it indexing child
+    ``starts[p] + j``. A parent with no elements (absent, null or empty)
+    keeps one placeholder slot carrying its own def and index -1; the first
+    slot of every parent keeps the parent's rep, the others get
+    ``cur_rep + 1``."""
+    expand = np.maximum(lengths, 1)
+    first = np.zeros(len(expand) + 1, dtype=np.int64)
+    np.cumsum(expand, out=first[1:])
+    total = int(first[-1])
+    heads = first[:-1]
+    child_idx = np.arange(total, dtype=np.int64)
+    child_idx += np.repeat(starts - heads, expand)
+    child_rep = np.full(total, cur_rep + 1, dtype=np.uint8)
+    child_rep[heads] = frame.rep
+    child_def = np.full(total, elem_def, dtype=np.uint8)
+    empty = lengths == 0
+    if empty.any():
+        placeholders = heads[empty]
+        child_idx[placeholders] = -1
+        child_def[placeholders] = frame.def_[empty]
+    return _Frame(child_idx, child_rep, child_def)
+
+
+def _shred_children(
+    children: list[tuple[pa.Array, bool]],
+    frame: _Frame,
+    cur_rep: int,
+    cur_def: int,
+    out: list[Leaf],
+) -> None:
+    """Shred sibling nodes that share ``frame``'s slots. Each child
+    mutates idx/def of its own copy; the last one takes the frame itself
+    (its owner is done with it), and rep is never mutated, so all share it."""
+    for i, (child, nullable) in enumerate(children):
+        own = frame if i == len(children) - 1 else _Frame(
+            frame.idx.copy(), frame.rep, frame.def_.copy()
+        )
+        _shred_node(child, nullable, own, cur_rep, cur_def, out)
 
 
 def _shred_node(
@@ -242,107 +293,53 @@ def _shred_node(
     cur_def = _apply_optional(a, nullable, frame, cur_def)
 
     if pa.types.is_struct(t):
-        for i in range(t.num_fields):
-            f = t.field(i)
-            child = a.field(i)
-            sub = _Frame(frame.idx.copy(), frame.rep.copy(), frame.def_.copy())
-            _shred_node(child, f.nullable, sub, cur_rep, cur_def, out)
+        children = [(a.field(i), t.field(i).nullable) for i in range(t.num_fields)]
+        _shred_children(children, frame, cur_rep, cur_def, out)
         return
 
     if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_map(t):
         offs = _offsets(a)
+        # ``a.values`` is the whole column's child; bound it to this page's
+        # range so the child's validity unpack and takes stay page-sized
+        values = a.values.slice(offs[0], offs[-1] - offs[0])
         defined = frame.idx >= 0
-        # clamp BEFORE indexing: numpy evaluates offs[idx] even for slots
-        # np.where will discard, and an all-absent frame over a ZERO-length
-        # child array (every parent null/empty in this page) would index
-        # offs[1] of a 1-entry offsets buffer
-        safe = (
-            np.minimum(np.maximum(frame.idx, 0), len(a) - 1)
-            if len(a)
-            else np.zeros_like(frame.idx)
-        )
-        starts = np.where(defined, offs[safe], 0)
-        ends = np.where(defined, offs[safe + 1] if len(a) else 0, 0)
-        lengths = ends - starts
-        # each present slot expands to max(len, 1) child slots
-        expand = np.where(defined, np.maximum(lengths, 1), 1).astype(np.int64)
-        total = int(expand.sum())
-        child_idx = np.full(total, -1, dtype=np.int64)
-        child_rep = np.empty(total, dtype=np.uint8)
-        child_def = np.empty(total, dtype=np.uint8)
-        # first slot of each parent keeps the parent's rep; the rest get
-        # cur_rep + 1
-        first_pos = np.zeros(len(expand) + 1, dtype=np.int64)
-        np.cumsum(expand, out=first_pos[1:])
-        child_rep[:] = cur_rep + 1
-        child_rep[first_pos[:-1]] = frame.rep
-        # inherited def for absent/empty slots
-        child_def[:] = np.repeat(frame.def_, expand)
-        # element slots: index ranges and def bump
-        has_elems = defined & (lengths > 0)
-        elem_def = cur_def + 1
-        if has_elems.any():
-            # vectorized "concatenate ranges": for parent p with elements,
-            # child_idx[first_pos[p] + j] = starts[p] + j
-            reps = np.where(has_elems, lengths, 0).astype(np.int64)
-            parent_ids = np.repeat(np.arange(len(expand)), reps)
-            within = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
-                first_pos_of := np.concatenate(([0], np.cumsum(reps)[:-1])), reps
-            )
-            dest = first_pos[:-1][parent_ids] + within
-            child_idx[dest] = starts[parent_ids] + within
-            child_def[dest] = elem_def
-        child_frame_proto = _Frame(child_idx, child_rep, child_def)
+        if len(a):
+            safe = np.maximum(frame.idx, 0)
+            starts = offs[safe] - offs[0]
+            lengths = np.where(defined, offs[safe + 1] - offs[safe], 0)
+        else:  # every slot of the page is absent: no offsets to read
+            starts = lengths = np.zeros(len(frame.idx), dtype=np.int64)
+        child = _expand(frame, starts, lengths, cur_rep, cur_def + 1)
         if pa.types.is_map(t):
-            entries = a.values  # struct<key, value> flat array
-            key_f = pa.field("key", t.key_type, nullable=False)
-            item_f = pa.field("value", t.item_type, nullable=t.item_field.nullable)
-            kf = _Frame(child_idx.copy(), child_rep.copy(), child_def.copy())
-            _shred_node(entries.field(0), key_f.nullable, kf, cur_rep + 1, elem_def, out)
-            vf = _Frame(child_idx.copy(), child_rep.copy(), child_def.copy())
-            _shred_node(entries.field(1), item_f.nullable, vf, cur_rep + 1, elem_def, out)
+            children = [(values.field(0), False), (values.field(1), t.item_field.nullable)]
         else:
-            elem_field = t.value_field
-            _shred_node(
-                a.values, elem_field.nullable, child_frame_proto,
-                cur_rep + 1, elem_def, out,
-            )
+            children = [(values, t.value_field.nullable)]
+        _shred_children(children, child, cur_rep + 1, cur_def + 1, out)
         return
 
     if pa.types.is_fixed_size_list(t):
         k = t.list_size
         defined = frame.idx >= 0
-        n = len(frame.idx)
-        total = int(np.where(defined, k, 1).sum())
-        expand = np.where(defined, k, 1).astype(np.int64)
-        first_pos = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(expand, out=first_pos[1:])
-        child_idx = np.full(total, -1, dtype=np.int64)
-        child_rep = np.full(total, cur_rep + 1, dtype=np.uint8)
-        child_rep[first_pos[:-1]] = frame.rep
-        child_def = np.repeat(frame.def_, expand)
-        elem_def = cur_def + 1
-        if defined.any():
-            reps = np.where(defined, k, 0).astype(np.int64)
-            parent_ids = np.repeat(np.arange(n), reps)
-            within = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
-                np.concatenate(([0], np.cumsum(reps)[:-1])), reps
-            )
-            dest = first_pos[:-1][parent_ids] + within
-            base = (np.maximum(frame.idx, 0) * k + a.offset * 0)[parent_ids]
-            child_idx[dest] = base + within
-            child_def[dest] = elem_def
-        fl_values = a.values.slice(a.offset * k) if a.offset else a.values
-        _shred_node(
-            fl_values, t.value_field.nullable,
-            _Frame(child_idx, child_rep, child_def), cur_rep + 1, elem_def, out,
+        child = _expand(
+            frame,
+            np.maximum(frame.idx, 0) * k,
+            np.where(defined, k, 0).astype(np.int64),
+            cur_rep,
+            cur_def + 1,
         )
+        values = a.values.slice(a.offset * k, len(a) * k)
+        _shred_node(values, t.value_field.nullable, child, cur_rep + 1, cur_def + 1, out)
         return
 
     # primitive leaf
-    defined = frame.idx >= 0
-    take = frame.idx[defined]
-    values = a.take(arrow_view(take)) if len(take) else a.slice(0, 0)
+    present = frame.idx >= 0
+    count = int(np.count_nonzero(present))
+    first = int(frame.idx[np.argmax(present)]) if count else 0
+    if count and int(frame.idx.max()) - first + 1 == count:
+        # indices only ever rise, so a gap-free run is a slice
+        values = a.slice(first, count)
+    else:
+        values = a.take(arrow_view(frame.idx[present])) if count else a.slice(0, 0)
     if values.null_count:  # leaf nulls are encoded purely in def levels
         values = values.drop_null()
     out.append(
@@ -364,27 +361,32 @@ def _shred_node(
 # Entries vs slots: at a node with repetition depth r, the node's logical
 # positions ("entries") are, in ANY of its leaves' slot arrays, the slots
 # with rep <= r — exactly one per logical position, including positions
-# where an ancestor was null/empty (placeholders). Sibling leaves under a
-# struct have different slot counts but identical ENTRY sequences, so
-# recursion passes a boolean selection over entries and each node re-maps
-# it into its own first-leaf slot space.
+# where an ancestor was null/empty (placeholders). The node builds one value
+# per SELECTED entry: a real element of the nearest enclosing repeated node
+# (every entry at the top). Def levels only count down a path of present
+# ancestors, so the selected entries are the slots with rep <= r and
+# def >= sel_def, that repeated node's element def (0 at the top) — a
+# filter each node evaluates in its own first leaf. Sibling leaves under a
+# struct have different slot counts but the same selected entries in the
+# same order.
 
 
 def assemble(field: pa.Field, leaves: list[Leaf]) -> pa.Array:
     """Rebuild the nested array from shredded leaves."""
-    lf = leaves[0]
-    n_entries = int((lf.rep <= 0).sum())
-    arr, consumed = _assemble_node(
-        field.type,
-        field.nullable,
-        leaves,
-        0,
-        np.ones(n_entries, dtype=bool),
-        0,
-        0,
-    )
+    arr, consumed = _assemble_node(field.type, field.nullable, leaves, 0, 0, 0, 0, None)
     assert consumed == len(leaves)
     return arr
+
+
+def _selected_slots(lf: Leaf, cur_rep: int, sel_def: int) -> np.ndarray:
+    """Slots of ``lf`` holding the selected entries of a node at depth
+    ``cur_rep`` (see above); the rep filter is skipped at the leaf's own
+    depth, where every slot is an entry."""
+    mask = lf.rep <= cur_rep if cur_rep < lf.max_rep else None
+    if sel_def:
+        present = lf.def_ >= sel_def
+        mask = present if mask is None else mask & present
+    return np.arange(len(lf.rep)) if mask is None else np.flatnonzero(mask)
 
 
 def _validity_buf(validity: np.ndarray | None):
@@ -401,73 +403,53 @@ def _assemble_node(
     nullable: bool,
     leaves: list[Leaf],
     leaf_pos: int,
-    entry_sel: np.ndarray,
     cur_rep: int,
     cur_def: int,
+    sel_def: int,
+    slots: np.ndarray | None,
 ) -> tuple[pa.Array, int]:
-    """Build this node's array — one value per SELECTED entry. Returns
-    (array, next_leaf_pos)."""
+    """Build this node's array — one value per selected entry. ``slots``
+    are those entries in ``leaves[leaf_pos]`` when the caller already has
+    them (None: find them). Returns (array, next_leaf_pos)."""
     lf = leaves[leaf_pos]
-    rep, def_ = lf.rep, lf.def_
+    if slots is None:
+        slots = _selected_slots(lf, cur_rep, sel_def)
+    defs = lf.def_ if len(slots) == len(lf.def_) else lf.def_[slots]
     if nullable:
         cur_def += 1
-
-    # this node's entry slots in its first leaf's slot space
-    entry_slots = np.flatnonzero(rep <= cur_rep)
-    sel_slots = entry_slots[entry_sel]
-    entry_defs = def_[sel_slots]
+    validity = defs >= cur_def if nullable else None
 
     if pa.types.is_struct(t):
-        validity = entry_defs >= cur_def if nullable else None
         children = []
         pos = leaf_pos
         for i in range(t.num_fields):
             f = t.field(i)
+            # the first field starts in this leaf: same slots
             child, pos = _assemble_node(
-                f.type, f.nullable, leaves, pos, entry_sel, cur_rep, cur_def
+                f.type, f.nullable, leaves, pos, cur_rep, cur_def, sel_def,
+                slots if i == 0 else None,
             )
+            if len(child) != len(slots):
+                raise ValueError(f"corrupt nested page: struct field {f.name!r} has "
+                                 f"{len(child)} entries, its struct {len(slots)}")
             children.append(child)
         vbuf, _nulls = _validity_buf(validity)
-        arr = pa.StructArray.from_buffers(
-            t, len(sel_slots), [vbuf], children=children
-        )
-        return arr, pos
+        return pa.StructArray.from_buffers(t, len(slots), [vbuf], children=children), pos
 
-    if (
-        pa.types.is_list(t)
-        or pa.types.is_large_list(t)
-        or pa.types.is_map(t)
-        or pa.types.is_fixed_size_list(t)
-    ):
+    if pa.types.is_fixed_size_list(t) or pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_map(t):
         elem_def = cur_def + 1
-        validity = entry_defs >= cur_def if nullable else None
-
-        # child entries: slots with rep <= cur_rep+1 (one per element PLUS
-        # one placeholder per empty/null/absent list)
-        child_entry_slots = np.flatnonzero(rep <= cur_rep + 1)
-        # map each child entry to its parent entry: parent entries are the
-        # child entries whose slot also has rep <= cur_rep
-        parent_of_child = np.cumsum(rep[child_entry_slots] <= cur_rep) - 1
-        child_is_elem = def_[child_entry_slots] >= elem_def
-        # select child entries that are real elements of selected parents
-        child_entry_sel = child_is_elem & entry_sel[parent_of_child]
-
-        # element count per selected parent
-        counts = np.zeros(len(entry_slots), dtype=np.int64)
-        np.add.at(counts, parent_of_child[child_is_elem], 1)
-        counts = counts[entry_sel]
+        child_slots, offsets = _elements(lf, cur_rep, elem_def, slots)
+        vbuf, null_count = _validity_buf(validity)
+        n_lists = len(slots)
 
         if pa.types.is_map(t):
             karr, pos = _assemble_node(
-                t.key_type, False, leaves, leaf_pos,
-                child_entry_sel, cur_rep + 1, elem_def,
+                t.key_type, False, leaves, leaf_pos, cur_rep + 1, elem_def, elem_def, child_slots
             )
             varr, pos = _assemble_node(
                 t.item_type, t.item_field.nullable, leaves, pos,
-                child_entry_sel, cur_rep + 1, elem_def,
+                cur_rep + 1, elem_def, elem_def, None,
             )
-            offsets = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=offsets[1:])
             entries = pa.StructArray.from_arrays(
                 [karr, varr],
                 fields=[
@@ -475,26 +457,23 @@ def _assemble_node(
                     t.item_field,
                 ],
             )
-            obuf = pa.py_buffer(offsets.astype("<i4").tobytes())
-            vbuf, null_count = _validity_buf(validity)
+            obuf = pa.py_buffer(offsets.astype("<i4"))
             arr = pa.MapArray.from_buffers(
-                t, len(counts), [vbuf, obuf], children=[entries],
-                null_count=null_count,
+                t, n_lists, [vbuf, obuf], children=[entries], null_count=null_count
             )
             return arr, pos
 
         child, pos = _assemble_node(
             t.value_type, t.value_field.nullable, leaves, leaf_pos,
-            child_entry_sel, cur_rep + 1, elem_def,
+            cur_rep + 1, elem_def, elem_def, child_slots,
         )
-        vbuf, null_count = _validity_buf(validity)
         if pa.types.is_fixed_size_list(t):
             k = t.list_size
-            n_lists = len(counts)
             if len(child) != n_lists * k:
-                # null lists have no shredded elements, but arrow requires
-                # k child values per entry — scatter with null fill
-                valid = validity if validity is not None else np.ones(n_lists, bool)
+                # lists that are null, or sit under a null struct, have no
+                # shredded elements, but arrow requires k child values per
+                # entry — scatter with null fill
+                valid = defs >= cur_def
                 take_idx = np.full(n_lists * k, -1, dtype=np.int64)
                 dest = np.flatnonzero(np.repeat(valid, k))
                 take_idx[dest] = np.arange(len(child))
@@ -504,38 +483,38 @@ def _assemble_node(
             )
             return arr, pos
         width = "<i8" if pa.types.is_large_list(t) else "<i4"
-        offsets = np.zeros(len(counts) + 1, dtype=np.int64)
-        np.cumsum(counts, out=offsets[1:])
-        obuf = pa.py_buffer(offsets.astype(width).tobytes())
+        obuf = pa.py_buffer(offsets.astype(width))
         cls = pa.LargeListArray if pa.types.is_large_list(t) else pa.ListArray
         arr = cls.from_buffers(
-            t, len(counts), [vbuf, obuf], children=[child],
-            null_count=null_count,
+            t, n_lists, [vbuf, obuf], children=[child], null_count=null_count
         )
         return arr, pos
 
-    # primitive leaf: every slot is an entry (cur_rep == max_rep here)
-    validity = entry_defs >= lf.max_def
-    # rank of each present slot among ALL present values in the page
-    value_rank = np.cumsum(def_ >= lf.max_def) - 1
-    take = value_rank[sel_slots[validity]]
-    vals = (
-        lf.values.take(arrow_view(take))
-        if len(take)
-        else lf.values.slice(0, 0)
-    )
-    if validity.all():
-        return vals, leaf_pos + 1
-    n_entries = len(sel_slots)
-    out_idx = np.zeros(n_entries, dtype=np.int64)
-    out_idx[validity] = np.arange(len(take))
-    gathered = (
-        vals.take(arrow_view(out_idx))
-        if len(vals)
-        else pa.nulls(n_entries, t)
-    )
-    if len(vals):
-        gathered = pa.compute.if_else(
-            arrow_view(validity), gathered, pa.nulls(n_entries, t)
-        )
-    return gathered, leaf_pos + 1
+    # primitive leaf: every present value (def == max_def) is in a selected
+    # slot, in order, so the decoded values are the non-null entries as-is
+    present = defs >= lf.max_def
+    if present.all():
+        return lf.values, leaf_pos + 1
+    if not len(lf.values):
+        return pa.nulls(len(slots), t), leaf_pos + 1
+    take = np.zeros(len(slots), dtype=np.int64)
+    take[present] = np.arange(len(lf.values))
+    return lf.values.take(arrow_view(take, valid=present)), leaf_pos + 1
+
+
+def _elements(
+    lf: Leaf, cur_rep: int, elem_def: int, slots: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(slots of the elements, Arrow offsets) of the lists at ``slots``: the
+    elements are the entries one level down that reach the element def. A
+    list's first element shares its slot and the rest precede the next
+    list's, so a list starts at the count of elements before its slot."""
+    is_elem = lf.def_ >= elem_def
+    if cur_rep + 1 < lf.max_rep:
+        is_elem &= lf.rep <= cur_rep + 1
+    before = np.zeros(len(is_elem) + 1, dtype=np.int64)
+    np.cumsum(is_elem, out=before[1:])
+    offsets = np.empty(len(slots) + 1, dtype=np.int64)
+    offsets[:-1] = before[slots]
+    offsets[-1] = before[-1]
+    return np.flatnonzero(is_elem), offsets

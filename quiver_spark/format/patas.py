@@ -19,8 +19,11 @@ pass to walk the variable-length headers (payload lengths chain the entry
 offsets — strictly sequential), then resolves the XOR reference chain with
 vectorized pointer doubling: vals[i] is the XOR of stored contributions
 along its chain to value 0, so log2(n) gather+xor rounds replace the
-value-at-a-time loop (~35 MB/s encode / ~25 MB/s decode vs ~6-9 MB/s for
-the fully-sequential formulation).
+value-at-a-time loop. The chooser prices a sample with ``encoded_size``
+(the same fields, no payload) and skips it when ``max_sample_ratio`` shows
+patas cannot win. For measured throughput, run the benchmark's codec
+workload traced and read its ``format.encode_mb_per_s.f64`` and
+``format.decode_mb_per_s.f64`` metrics.
 """
 
 from __future__ import annotations
@@ -28,23 +31,22 @@ from __future__ import annotations
 import numpy as np
 
 
-def encode(bits: np.ndarray) -> bytes:
-    """bits: uint32/uint64 view of the float page values.
+#: the smallest value of each significant-byte count: a value needs
+#: ``searchsorted(_BYTE_FLOORS, v, "right")`` bytes (0 for 0), exactly
+_BYTE_FLOORS = np.array([1 << (8 * k) for k in range(8)], dtype=np.uint64)
 
-    Fully numpy-vectorized (no per-value Python loop): the reference index
-    of value i is its most recent IDENTICAL bit pattern (else 0), demoted
-    to i-1 when more than 127 back — computed with a stable argsort over
-    the unique-inverse ids; trailing-zero counts come from an exact
+
+def _xor_fields(bits: np.ndarray) -> tuple[np.ndarray, ...]:
+    """Per value: (ref_diff, xor, trailing zeros, xor >> trailing zeros,
+    significant bytes of that); value 0 is stored raw, so its entries go
+    unused.
+
+    The reference index of value i is its most recent IDENTICAL bit pattern
+    (else 0), demoted to i-1 when more than 127 back — computed with a
+    stable argsort over the values; trailing-zero counts come from an exact
     power-of-two log2 of the isolated lowest set bit; significant-byte
-    counts from per-byte-plane nonzero masks; and the variable-length
-    payload is assembled with cumsum offsets + 8 masked scatters.
-    Byte-identical to the sequential formulation (kept in git history),
-    ~100x its throughput — fast enough for the default chooser list."""
-    nbytes = bits.dtype.itemsize
-    nbits = nbytes * 8
+    counts from a search over the byte floors."""
     n = len(bits)
-    if n == 0:
-        return b""
     u = bits.astype(np.uint64, copy=False)
     idx = np.arange(n, dtype=np.int64)
 
@@ -62,44 +64,60 @@ def encode(bits: np.ndarray) -> bytes:
     xor = u ^ u[ref]
 
     # exact trailing zeros: lowest set bit is a power of two, so float64
-    # log2 is exact for it at any width up to 2^63
+    # log2 is exact for it at any width up to 2^63 (xor 0 → lowbit 0 → 0)
     lowbit = xor & (~xor + np.uint64(1))
-    tz = np.zeros(n, dtype=np.uint64)
-    nz = xor != 0
-    tz[nz] = np.log2(lowbit[nz].astype(np.float64)).astype(np.uint64)
-    shifted = np.zeros(n, dtype=np.uint64)
-    shifted[nz] = xor[nz] >> tz[nz]
-    # exact significant-byte count from byte planes (a float log2 of the
-    # full value can round up across a byte boundary; this cannot)
-    planes = (
-        shifted[:, None] >> (np.uint64(8) * np.arange(8, dtype=np.uint64))
-    ).astype(np.uint8)
-    sig_bytes = np.where(
-        nz, 8 - np.argmax(planes[:, ::-1] != 0, axis=1), 0
-    ).astype(np.int64)
-    tz_stored = np.where(nz, tz, np.uint64(nbits - 1))
+    tz = np.log2(np.maximum(lowbit, np.uint64(1)).astype(np.float64)).astype(np.uint64)
+    shifted = xor >> tz
+    sig_bytes = np.searchsorted(_BYTE_FLOORS, shifted, side="right")
+    return diff, xor, tz, shifted, sig_bytes
+
+
+def encode(bits: np.ndarray) -> bytes:
+    """bits: uint32/uint64 view of the float page values.
+
+    Fully numpy-vectorized (no per-value Python loop): the fields come from
+    ``_xor_fields`` and the variable-length payload is assembled from a
+    fixed 10-byte row per value with one boolean mask. Byte-identical to
+    the sequential formulation (kept in git history); for measured
+    throughput, run the benchmark's codec workload traced and read its
+    ``format.encode_mb_per_s.f64`` metric."""
+    nbytes = bits.dtype.itemsize
+    nbits = nbytes * 8
+    n = len(bits)
+    if n == 0:
+        return b""
+    diff, xor, tz, shifted, sig_bytes = _xor_fields(bits)
+    tz_stored = np.where(xor != 0, tz, np.uint64(nbits - 1))
 
     packed = (
         ((diff & np.uint64(0x7F)) << np.uint64(9))
         | ((sig_bytes.astype(np.uint64) & np.uint64(7)) << np.uint64(6))
         | (tz_stored & np.uint64(0x3F))
-    ).astype(np.uint16)
+    ).astype("<u2")
 
     # payload layout: [raw value 0][2B packed + sig bytes]per value>0 —
     # built as a fixed 10-byte-per-value matrix whose unused cells are
     # compacted away with one boolean mask over the raveled bytes
     wide = np.empty((n, 10), dtype=np.uint8)
-    wide[:, 0] = (packed & 0xFF).astype(np.uint8)
-    wide[:, 1] = (packed >> 8).astype(np.uint8)
-    wide[:, 2:] = planes
+    wide[:, :2] = packed.view(np.uint8).reshape(n, 2)
+    wide[:, 2:] = shifted.astype("<u8", copy=False).view(np.uint8).reshape(n, 8)
     keep = np.empty((n, 10), dtype=bool)
     keep[:, :2] = True
     keep[:, 2:] = np.arange(8, dtype=np.int64) < sig_bytes[:, None]
     keep[0, :] = False
     return (
-        int(u[0]).to_bytes(nbytes, "little")
+        int(bits[0]).to_bytes(nbytes, "little")
         + wide.ravel()[keep.ravel()].tobytes()
     )
+
+
+def encoded_size(bits: np.ndarray) -> int:
+    """``len(encode(bits))`` without building the payload: the raw first
+    value, then a 2-byte header plus the significant bytes per value."""
+    if len(bits) == 0:
+        return 0
+    sig_bytes = _xor_fields(bits)[4]
+    return bits.dtype.itemsize + 2 * (len(bits) - 1) + int(sig_bytes[1:].sum())
 
 
 def decode(buf: memoryview, length: int, dtype: np.dtype) -> np.ndarray:
@@ -111,7 +129,7 @@ def decode(buf: memoryview, length: int, dtype: np.dtype) -> np.ndarray:
     minimal Python pass that only walks the variable-length headers to find
     entry offsets, the chain resolves with vectorized pointer doubling
     (log2(n) rounds of gather+xor), and payload bytes are assembled with
-    8 masked byte-plane gathers. ~10x the fully-sequential formulation."""
+    8 masked byte-plane gathers."""
     udt = np.dtype(f"<u{dtype.itemsize}")
     nbytes = udt.itemsize
     w64 = nbytes == 8
@@ -186,18 +204,32 @@ def decode(buf: memoryview, length: int, dtype: np.dtype) -> np.ndarray:
     return vals.astype(udt).view(dtype)
 
 
+def _sample(bits: np.ndarray, sample_count: int, sample_size: int) -> np.ndarray:
+    n = len(bits)
+    if n <= sample_count * sample_size:
+        return bits
+    step = n // sample_count
+    return np.concatenate([bits[i * step : i * step + sample_size] for i in range(sample_count)])
+
+
 def sample_ratio(bits: np.ndarray, sample_count: int = 10, sample_size: int = 64) -> float:
     """Estimated compression ratio from compressing evenly-spaced sample
-    runs (the reference's compress_sample_ratio, compression/mod.rs:29-33)."""
-    n = len(bits)
+    runs (the reference's compress_sample_ratio, compression/mod.rs:29-33),
+    priced by ``encoded_size``."""
+    if len(bits) == 0:
+        return 0.0
+    sample = _sample(bits, sample_count, sample_size)
+    raw = len(sample) * bits.dtype.itemsize
+    return raw / max(encoded_size(sample), 1)
+
+
+def max_sample_ratio(n: int, itemsize: int, sample_count: int = 10, sample_size: int = 64) -> float:
+    """The largest value ``sample_ratio`` can return for ``n`` values: a
+    sample of m values encodes to at least its raw first value plus a
+    2-byte header per other value, so no ratio exceeds
+    ``m·w / (w + 2(m − 1))``. Computed by the same expression, so it bounds
+    the float ``sample_ratio`` returns too."""
     if n == 0:
         return 0.0
-    if n <= sample_count * sample_size:
-        sample = bits
-    else:
-        step = n // sample_count
-        parts = [bits[i * step : i * step + sample_size] for i in range(sample_count)]
-        sample = np.concatenate(parts)
-    raw = len(sample) * bits.dtype.itemsize
-    comp = len(encode(sample))
-    return raw / max(comp, 1)
+    m = min(n, sample_count * sample_size)
+    return m * itemsize / max(itemsize + 2 * (m - 1), 1)

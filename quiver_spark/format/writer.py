@@ -47,12 +47,15 @@ class WriteOptions:
     compress_ratio: float | None = 2.0  # None → adaptive off (basic codec only)
     max_page_size: int = DEFAULT_PAGE_SIZE
     # patas is in the default candidate list, matching the reference's
-    # double chooser (src/compression/double/mod.rs:271-277). The encoder
-    # is numpy-vectorized (format/patas.py, byte-identical to the
-    # sequential formulation); the chooser only pays a 640-value sample
-    # per page unless patas actually wins the ratio contest, so default
-    # write throughput is unchanged on data patas loses (random doubles
-    # ratio ~1.1 < the 2.0 threshold). Forbid explicitly
+    # double chooser (src/compression/double/mod.rs:271-277). A double
+    # page prices a sample of at most 640 values by its encoded size (the
+    # XOR fields only, no payload: format/patas.py encoded_size), and only
+    # when patas could change the outcome: its best possible sample ratio,
+    # m·w / (w + 2(m − 1)) for m values of w bytes (~3.98 for f64, just
+    # under 2 for f32), must beat the best earlier candidate and reach
+    # compress_ratio. So f32 pages never sample at the default 2.0, nor f64
+    # pages whose Dict or RLE ratio already reaches ~4; the payload is built
+    # only for pages patas wins. Forbid explicitly
     # (forbidden=("patas",)) for write-heavy pipelines on XOR-friendly
     # data where block-codec throughput matters more than ratio; decode
     # resolves the XOR chain with vectorized pointer doubling but still

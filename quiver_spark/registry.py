@@ -20,9 +20,10 @@ oracles follow strict determinism rules:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import TYPE_CHECKING, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+if TYPE_CHECKING:  # annotations only: the format layer imports this package without Spark
+    from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass(frozen=True)

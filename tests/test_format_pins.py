@@ -85,6 +85,56 @@ def _shapes() -> dict[str, pa.Array]:
         # RLE-eligible: runs of 7, ~290 runs a page (enough that Dict's
         # 9-bit codes cost more than the runs)
         "rle_i64": pa.array(np.repeat(rng.integers(0, 1 << 40, N // 7 + 1), 7)[:N]),
+        **_nested_shapes(),
+    }
+
+
+def _nested_shapes() -> dict[str, pa.Array]:
+    """Nested columns with nulls at every level: each shape exercises
+    another branch of the Dremel shredder and assembler (nested.py). Own
+    generator, so the flat shapes above keep their values."""
+    rng = np.random.default_rng(43)
+
+    def maybe(value, p):
+        return None if rng.random() < p else value
+
+    def ints(k, lo=-1000, hi=1000):
+        return [maybe(int(v), 0.2) for v in rng.integers(lo, hi, k)]
+
+    def words(k):
+        return [f"w{v}" for v in rng.integers(0, 50, k)]
+
+    def lists(draw, p_null=0.1):
+        return [maybe(draw(int(rng.integers(0, 4))), p_null) for _ in range(N)]
+
+    def structs(k):
+        return [maybe({"x": x, "y": y}, 0.1) for x, y in zip(ints(k), words(k))]
+
+    sliced = 37
+    sliced_rows = [maybe(ints(int(rng.integers(0, 5))), 0.1) for _ in range(N + 2 * sliced)]
+    return {
+        "nested_struct": pa.array(
+            structs(N), type=pa.struct([("x", pa.int64()), ("y", pa.string())])
+        ),
+        "nested_map": pa.array(
+            lists(lambda k: list(zip(words(k), ints(k)))),
+            type=pa.map_(pa.string(), pa.int32()),
+        ),
+        "nested_list_list": pa.array(
+            lists(lambda k: [maybe(ints(int(rng.integers(0, 4))), 0.1) for _ in range(k)]),
+            type=pa.list_(pa.list_(pa.int32())),
+        ),
+        "nested_list_struct": pa.array(
+            lists(structs),
+            type=pa.list_(pa.struct([("x", pa.int64()), ("y", pa.string())])),
+        ),
+        "nested_fixed_size_list": pa.array(
+            [maybe([maybe(float(v), 0.2) for v in rng.normal(0, 1, 3)], 0.1) for _ in range(N)],
+            type=pa.list_(pa.float64(), 3),
+        ),
+        "nested_large_list": pa.array(lists(ints), type=pa.large_list(pa.int64())),
+        # non-zero offset on the first page too, child range not at 0
+        "nested_sliced_list": pa.array(sliced_rows, type=pa.list_(pa.int32())).slice(sliced, N),
     }
 
 
@@ -301,6 +351,90 @@ PINS: dict[str, tuple[str, str]] = {
     "rle_i64-zstd-basic": (
         "fbacab8abe8e6762cb0e7729e72754473e805a4c3f292e3ffa13c2f754744bf6",
         "62a54a5ae290d8c48e64b4589986a31bc603a3ee2e8af43946f9edfb8a47b292"),
+    "nested_struct-lz4-adaptive": (
+        "6e760511647771e2d3bdbfe2c9b8058df4e8990a342fa0ba1ef690f14916524a",
+        "2daf7b204f2714946d220465e149779fa99d61872c6ba841eb3f448371751ca6"),
+    "nested_struct-lz4-basic": (
+        "44ffc821ce62861059120977e67a9b6d8172d34c44d4f6b612c764dfbd91e8e7",
+        "8393dfee043f106c5ba2967beda3ffd213263f4e776bc887078f6995be0f5883"),
+    "nested_struct-zstd-adaptive": (
+        "2aede91396b1e5bb2cc3ac5591357f0bf68700cf3c7baa1e6c54b3d12ae64dc0",
+        "876cf71becc58e7d84003ae5c6966c3574e8e9e09948a22b75b0f70cd802f093"),
+    "nested_struct-zstd-basic": (
+        "4b02ac178a3f55a16c23660d06c2762bfb41291e77d4b89ec15aee1775fed41e",
+        "7700b10f500d5efb84b3f18a6ae0fd7f46c75bbdec5ccf2a116367c0c6d38468"),
+    "nested_map-lz4-adaptive": (
+        "d86bf0d547432066033010cbee9aa7267c5170d16d4e40ae173da67e02b3cb06",
+        "b0f707d76d1836e09e84223c85f4ad8c96c8c2c022390ba52553183128564bb4"),
+    "nested_map-lz4-basic": (
+        "2df1325d605b43eb75eb1d15a179345488da41b35ec0104aeb02b9d1e5f1f549",
+        "6028c134d8ef676e5db86940fadb4a61ce5e3c372107d579e404ab0f03fd03d1"),
+    "nested_map-zstd-adaptive": (
+        "fb337f88b4e9464317d38d6fe8ef753b62f3b5fd9292d7899832afca0123194d",
+        "8b4ece02f5a78a139729d575f8a49d50b136fb8220a6666fca9e0640aa746e0e"),
+    "nested_map-zstd-basic": (
+        "3f8728aed692332489f3f041cfa1eb46dfd9f9c177bb6cdd19a8c77819de1359",
+        "978f06151ea2c3f57d57958767114b1c3a8209e2c3e2c881bbe9810e798d02e2"),
+    "nested_list_list-lz4-adaptive": (
+        "375e4a7632fd69a4866a2ce3082b0c751b4eb7d8f17aee4efead2b949c23e296",
+        "59995e2e4fab4b09fbfaabc93cedf981df602aa9e9818fffba92fec371878042"),
+    "nested_list_list-lz4-basic": (
+        "375e4a7632fd69a4866a2ce3082b0c751b4eb7d8f17aee4efead2b949c23e296",
+        "59995e2e4fab4b09fbfaabc93cedf981df602aa9e9818fffba92fec371878042"),
+    "nested_list_list-zstd-adaptive": (
+        "1166b311f84c8191127387aa21769a1db5c31172c898d18c2a8dc14837936805",
+        "1574f6e6142868a1bfd064edf5fe03e3f6fc8a18a1b2902b73a031b2679842bb"),
+    "nested_list_list-zstd-basic": (
+        "1166b311f84c8191127387aa21769a1db5c31172c898d18c2a8dc14837936805",
+        "1574f6e6142868a1bfd064edf5fe03e3f6fc8a18a1b2902b73a031b2679842bb"),
+    "nested_list_struct-lz4-adaptive": (
+        "98e55ae4955c55ff32ee4c51a0375d5652c6a948745ea27ead474b13dd6e7f50",
+        "10cfcc8a04696dff86f593f601821df68af307ef15309a2b8577492d41851d5b"),
+    "nested_list_struct-lz4-basic": (
+        "a4ca49dc05b132e2a78e4ccf3f9e8f584874234332eb0f9b1366c3d3b479bd1e",
+        "073b74de8ad9b5b43cb5fa89e725560ed0dd74da232aff049fe66052a072851c"),
+    "nested_list_struct-zstd-adaptive": (
+        "d4c6273deb9a3bde4fc3c55428b2c52be58bc455c6985f99d971d1ee07de693e",
+        "44ea2369a4bc098ab72cbc5d2d15935e1d7e274bda2e2e5953a3ec33ae2ff414"),
+    "nested_list_struct-zstd-basic": (
+        "fe6d3e202ca6c565ac0a16769e29e6bd2fd3d6abf139ebb35acd935822e82e5f",
+        "703515f9cfe3a7657c99eb59fc960a38ff7021abb3872613b2c0ac1e4a926c73"),
+    "nested_fixed_size_list-lz4-adaptive": (
+        "d7d0d137237a80ac8ea106d867afb57ace0936f86c515c9594a241ea833d988a",
+        "acf9149e4a9ea167760d165ea3f48016624b743ee5b0cdb52f927baa8d376658"),
+    "nested_fixed_size_list-lz4-basic": (
+        "d7d0d137237a80ac8ea106d867afb57ace0936f86c515c9594a241ea833d988a",
+        "acf9149e4a9ea167760d165ea3f48016624b743ee5b0cdb52f927baa8d376658"),
+    "nested_fixed_size_list-zstd-adaptive": (
+        "c5e98be7a8d24b653c39b8e48de317c7d4465649dcb58c77b4528d9a9df42b8d",
+        "4051eeb32f42432f94cc6fd625892b750d1298d0c037f65ee57148f34088b68b"),
+    "nested_fixed_size_list-zstd-basic": (
+        "c5e98be7a8d24b653c39b8e48de317c7d4465649dcb58c77b4528d9a9df42b8d",
+        "4051eeb32f42432f94cc6fd625892b750d1298d0c037f65ee57148f34088b68b"),
+    "nested_large_list-lz4-adaptive": (
+        "d19cb059c996d2e7fa080b9270f69185653a2f52a22d9ee51d74b36bffd65395",
+        "695cfe4aaa0d1cbc088ece5c1f12645ca349c61d2d51d219177fb85eaa25d3d7"),
+    "nested_large_list-lz4-basic": (
+        "d19cb059c996d2e7fa080b9270f69185653a2f52a22d9ee51d74b36bffd65395",
+        "695cfe4aaa0d1cbc088ece5c1f12645ca349c61d2d51d219177fb85eaa25d3d7"),
+    "nested_large_list-zstd-adaptive": (
+        "396497a64146e63a8ab945584bf95b6bb2b93fff7a39a51e817b861e2bf66aab",
+        "f7b1c04a50b77a868088c8fd24db54f55417906c9b2774dbe5181f8bebcc069f"),
+    "nested_large_list-zstd-basic": (
+        "396497a64146e63a8ab945584bf95b6bb2b93fff7a39a51e817b861e2bf66aab",
+        "f7b1c04a50b77a868088c8fd24db54f55417906c9b2774dbe5181f8bebcc069f"),
+    "nested_sliced_list-lz4-adaptive": (
+        "b3f92699e3361b59322ae99efeddabb40dd05d48b528ab1a1f84736f0edd3508",
+        "791fe0664296b33f524843cb3778b16e47d6c60e91980414cc3204744e3c1066"),
+    "nested_sliced_list-lz4-basic": (
+        "b3f92699e3361b59322ae99efeddabb40dd05d48b528ab1a1f84736f0edd3508",
+        "791fe0664296b33f524843cb3778b16e47d6c60e91980414cc3204744e3c1066"),
+    "nested_sliced_list-zstd-adaptive": (
+        "e8c62d499dafeb32ca680491a79a90e8677dd8a7caf5b27101381074c25a7f7f",
+        "6c55af3d0980e1fec3e1e031f73c4d7be09f3cbe10443bf0c07a04abbb833217"),
+    "nested_sliced_list-zstd-basic": (
+        "e8c62d499dafeb32ca680491a79a90e8677dd8a7caf5b27101381074c25a7f7f",
+        "6c55af3d0980e1fec3e1e031f73c4d7be09f3cbe10443bf0c07a04abbb833217"),
 }
 
 

@@ -335,6 +335,46 @@ def test_roundtrip_nested_page_range(tmp_path):
     _assert_tables_equal(expect, part)
 
 
+def test_roundtrip_required_fixed_size_list_under_null_struct(tmp_path):
+    """A non-nullable fixed_size_list field of a null struct has no
+    shredded elements, yet Arrow wants k child values for it: the reader
+    fills them with nulls instead of failing the page."""
+    t = pa.struct([("x", pa.int64()), pa.field("v", pa.list_(pa.float64(), 2), nullable=False)])
+    rows = [None if i % 3 == 0 else {"x": i, "v": [i * 0.5, None]} for i in range(50)]
+    table = pa.table({"s": pa.array(rows, type=t)})
+    path = str(tmp_path / "t.quiver")
+    write_table(table, path, WriteOptions(max_page_size=16))
+    _assert_tables_equal(table, read_table(path))
+
+
+@pytest.mark.parametrize("kind", ["list", "fixed_size_list"])
+def test_shred_unpacks_only_the_pages_child_validity(monkeypatch, kind):
+    """A page of a list column reads its items' validity for its own items
+    only: the child array Arrow hands out spans the whole column, and
+    unpacking all of its bitmap on every page costs rows × pages."""
+    from quiver_spark.format import nested
+
+    n, k, page_rows = 20_000, 3, 1000
+    items = pa.array(np.arange(n * k, dtype=np.int32), mask=np.arange(n * k) % 5 == 0)
+    if kind == "list":
+        arr = pa.ListArray.from_arrays(pa.array(np.arange(0, n * k + 1, k, dtype=np.int32)), items)
+    else:
+        arr = pa.FixedSizeListArray.from_arrays(items, k)
+    page = arr.slice(8192, page_rows)
+    field = pa.field("c", arr.type)
+    unpacked = []
+    unpack = nested.unpack_bitmap
+
+    def recording_unpack(buf, offset, length):
+        unpacked.append(length)
+        return unpack(buf, offset, length)
+
+    monkeypatch.setattr(nested, "unpack_bitmap", recording_unpack)
+    leaves = nested.shred(page, field)
+    assert unpacked == [page_rows * k]
+    assert nested.assemble(field, leaves).equals(page)
+
+
 def test_roundtrip_embeddings_table(tmp_path):
     """Real nested testdata (embedding: list<float>) round-trips."""
     t = pq.read_table("/root/testdata/sf0.001/embeddings.parquet")
@@ -459,7 +499,7 @@ def test_patas_decode_rejects_zero_ref_diff():
 
 #: argv: checkout, an Arrow IPC file, the path to write; prints the page
 #: codecs of the file, then whether pandas was imported by the write and
-#: by the read-back
+#: by the read-back, then whether pyspark was imported at all
 _NO_PANDAS_SCRIPT = """
 import sys
 sys.path.insert(0, sys.argv[1])
@@ -471,14 +511,15 @@ writer.write_table(table, sys.argv[3])
 wrote = "pandas" in sys.modules
 assert reader.read_table(sys.argv[3]).equals(table)
 codecs = sorted({p.codec for pages in stat_file(sys.argv[3]).values() for p in pages})
-print(",".join(codecs), wrote, "pandas" in sys.modules)
+print(",".join(codecs), wrote, "pandas" in sys.modules, "pyspark" in sys.modules)
 """
 
 
 def test_format_layer_never_imports_pandas(tmp_path):
     """A fresh interpreter that writes Dict pages (numeric, double and
-    string) and a list column, and reads them back, must not import pandas:
-    the import costs ~0.4 s in every new Python-sink or reader worker."""
+    string) and a list column, and reads them back, must not import pandas
+    (~0.4 s in every new Python-sink or reader worker), nor pyspark
+    (~0.15-0.3 s in every process that only reads or writes files)."""
     import subprocess
     import sys
     from pathlib import Path
@@ -499,6 +540,6 @@ def test_format_layer_never_imports_pandas(tmp_path):
         capture_output=True, text=True, cwd=tmp_path,
     )
     assert proc.returncode == 0, proc.stderr
-    codecs, wrote, read = proc.stdout.split()
+    codecs, wrote, read, spark = proc.stdout.split()
     assert "dict" in codecs.split(","), codecs
-    assert (wrote, read) == ("False", "False")
+    assert (wrote, read, spark) == ("False", "False", "False")

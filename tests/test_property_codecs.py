@@ -144,6 +144,10 @@ def _tables(draw):
     page=st.sampled_from([7, 128, 1000]),
 )
 def test_roundtrip_property(tmp_path_factory, t, codec, ratio, page):
+    _assert_round_trips(tmp_path_factory, t, codec, ratio, page)
+
+
+def _assert_round_trips(tmp_path_factory, t, codec, ratio, page):
     path = str(tmp_path_factory.mktemp("prop") / "t.quiver")
     write_table(
         t,
@@ -161,6 +165,90 @@ def test_roundtrip_property(tmp_path_factory, t, codec, ratio, page):
         assert [repr(x) for x in a.to_pylist()] == [
             repr(x) for x in b.to_pylist()
         ], name
+
+
+@st.composite
+def _nested_tables(draw):
+    """Nested shapes with nulls at every level — map, list<list>,
+    fixed_size_list, list items — cut from a longer table at a drawn offset,
+    so pages start inside the child arrays as they do in a sliced batch."""
+    lead = draw(st.integers(min_value=0, max_value=9))
+    n = draw(st.integers(min_value=1, max_value=MAX_ROWS // 2))
+    rows = lead + n + draw(st.integers(min_value=0, max_value=9))
+    item = st.none() | st.integers(min_value=-100, max_value=100)
+
+    def column(elem):
+        return draw(st.lists(elem | st.none(), min_size=rows, max_size=rows))
+
+    word = st.sampled_from(["", "a", "bb", "éÿ"])
+    cols = {
+        "map": pa.array(
+            column(st.lists(st.tuples(word, item), max_size=3)),
+            type=pa.map_(pa.string(), pa.int32()),
+        ),
+        "list_list": pa.array(
+            column(st.lists(st.lists(item, max_size=3) | st.none(), max_size=3)),
+            type=pa.list_(pa.list_(pa.int64())),
+        ),
+        "fixed": pa.array(
+            column(st.lists(item, min_size=2, max_size=2)),
+            type=pa.list_(pa.int64(), 2),
+        ),
+        "items": pa.array(
+            column(st.lists(item, max_size=4)), type=pa.list_(pa.int32())
+        ),
+        "words": pa.array(
+            column(st.lists(word | st.none(), max_size=3)),
+            type=pa.large_list(pa.string()),
+        ),
+    }
+    return pa.table(cols).slice(lead, n)
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    t=_nested_tables(),
+    codec=st.sampled_from(["lz4", "zstd", "none"]),
+    ratio=st.sampled_from([None, 1.01, 2.0]),
+    page=st.sampled_from([7, 128, 1000]),
+)
+def test_nested_roundtrip_property(tmp_path_factory, t, codec, ratio, page):
+    _assert_round_trips(tmp_path_factory, t, codec, ratio, page)
+
+
+# --- patas pricing (format/patas.py) -----------------------------------------
+
+
+@st.composite
+def _float_pages(draw):
+    """f32 or f64 pages of 1-900 values (the sampled and the whole-page
+    case), repeats and specials included."""
+    width = draw(st.sampled_from([32, 64]))
+    values = draw(st.lists(
+        st.floats(width=width) | st.sampled_from([0.0, -0.0, 1.5, 100.125]),
+        min_size=1,
+        max_size=900,
+    ))
+    return np.array(values, dtype=np.float32 if width == 32 else np.float64)
+
+
+@settings(max_examples=200, deadline=None)
+@given(arr=_float_pages())
+def test_patas_pricing_matches_the_encoder(arr):
+    """The chooser prices patas with encoded_size instead of encoding the
+    sample, and skips it when max_sample_ratio cannot beat the field: both
+    must agree with the encoder they stand in for."""
+    from quiver_spark.format import patas
+
+    bits = arr.view(np.uint32 if arr.dtype == np.float32 else np.uint64)
+    encoded = patas.encode(bits)
+    assert patas.encoded_size(bits) == len(encoded)
+    ratio = patas.sample_ratio(bits)
+    assert ratio <= patas.max_sample_ratio(len(bits), bits.dtype.itemsize)
+    sample = patas._sample(bits, 10, 64)
+    assert ratio == len(sample) * bits.dtype.itemsize / len(patas.encode(sample))
+    decoded = patas.decode(memoryview(encoded), len(bits), arr.dtype)
+    np.testing.assert_array_equal(decoded.view(bits.dtype), bits)
 
 
 # --- column-default codec (manifest.encode_default / decode_default) -------
