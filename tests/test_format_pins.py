@@ -86,6 +86,77 @@ def _shapes() -> dict[str, pa.Array]:
         # 9-bit codes cost more than the runs)
         "rle_i64": pa.array(np.repeat(rng.integers(0, 1 << 40, N // 7 + 1), 7)[:N]),
         **_nested_shapes(),
+        **_boundary_shapes(),
+    }
+
+
+def _boundary_shapes() -> dict[str, pa.Array]:
+    """Pages at the edges of the adaptive chooser: distinct counts either
+    side of the Dict limit (3·distinct < rows), a first half full of
+    duplicates ahead of a high-cardinality second half, strings with
+    leading nulls (with and without ``""`` among the values), an all-null
+    page, f64 Dict pages holding both zeros or NaN, and a final page of 5
+    rows. Own generator, so the shapes above keep their values."""
+    rng = np.random.default_rng(44)
+    n = 4 * PAGE + 5
+    third = -(-PAGE // 3)  # ceil: the fewest distinct values that rule out Dict
+
+    def paged(draw_page):
+        return np.concatenate([draw_page(min(PAGE, n - s)) for s in range(0, n, PAGE)])
+
+    def k_distinct(k):
+        # each of k values first appears in the page's first half
+        def page(m):
+            kk = min(k, m)
+            head = rng.permutation(kk) * 7919
+            return np.concatenate([head, rng.choice(head, m - kk)])
+        return paged(page)
+
+    def half_dups(m):
+        h = m // 2
+        return np.concatenate([rng.integers(0, 50, h), 1000 + rng.permutation(m - h)])
+
+    def leading_nulls(p):
+        mask = rng.random(n) < p
+        mask[(np.arange(n) % PAGE) < 3] = True
+        return mask
+
+    def as_str(a):
+        return np.char.add("s", a.astype(str)).astype(object)
+
+    def one_null_page():
+        mask = rng.random(n) < 0.1
+        mask[PAGE : 2 * PAGE] = True
+        return mask
+
+    words = np.array([f"w{i}" for i in range(8)], dtype=object)
+    with_empty = np.array(["", "a", "b", "c"], dtype=object)
+    top = rng.random(n) < 0.95
+    zeros = np.array([0.0, -0.0, 1.5, 2.5])
+    return {
+        "b_i64_third_below": pa.array(k_distinct(third - 1)),
+        "b_i64_third_at": pa.array(k_distinct(third)),
+        "b_utf8_third_below": pa.array(as_str(k_distinct(third - 1))),
+        "b_utf8_third_at": pa.array(as_str(k_distinct(third))),
+        "b_f64_third_at": pa.array(k_distinct(third) / 8.0),
+        "b_i64_half_dups": pa.array(paged(half_dups)),
+        "b_utf8_half_dups": pa.array(as_str(paged(half_dups))),
+        "b_i64_many_nulls": pa.array(rng.permutation(n), mask=rng.random(n) < 0.6),
+        "b_utf8_leading_nulls": pa.array(words[rng.integers(0, 8, n)], mask=leading_nulls(0.1)),
+        "b_utf8_leading_nulls_empty": pa.array(
+            with_empty[rng.integers(0, 4, n)], mask=leading_nulls(0.1)
+        ),
+        "b_utf8_leading_nulls_plain": pa.array(as_str(rng.permutation(n)), mask=leading_nulls(0.1)),
+        "b_utf8_leading_nulls_freq": pa.array(
+            np.where(top, "top", as_str(np.arange(n))).astype(object), mask=leading_nulls(0.02)
+        ),
+        "b_i64_all_null_page": pa.array(rng.integers(0, 8, n), mask=one_null_page()),
+        "b_f64_all_null_page": pa.array(rng.integers(0, 8, n) * 0.5, mask=one_null_page()),
+        "b_utf8_all_null_page": pa.array(words[rng.integers(0, 8, n)], mask=one_null_page()),
+        "b_f64_signed_zero": pa.array(zeros[rng.integers(0, 4, n)], mask=rng.random(n) < 0.1),
+        "b_f64_nan": pa.array(
+            np.array([np.nan, 1.0, 2.0, -3.0])[rng.integers(0, 4, n)], mask=rng.random(n) < 0.1
+        ),
     }
 
 
@@ -435,6 +506,210 @@ PINS: dict[str, tuple[str, str]] = {
     "nested_sliced_list-zstd-basic": (
         "e8c62d499dafeb32ca680491a79a90e8677dd8a7caf5b27101381074c25a7f7f",
         "6c55af3d0980e1fec3e1e031f73c4d7be09f3cbe10443bf0c07a04abbb833217"),
+    "b_i64_third_below-lz4-adaptive": (
+        "31727cb362b19bfbe9903c695df966035058c8bccbb502942a8b25eed152c0eb",
+        "1e48455b4b6d0d646cf34c5559cfd2889309b2222049ba876c53fceea8db1959"),
+    "b_i64_third_below-lz4-basic": (
+        "84a4629b103d91d68570b641f336d12c8e80735f64c77a4d6a6987a01b8ca944",
+        "38ee6c457c96e2078d4b66efa343183f71a6663886746da1447cbc534b245128"),
+    "b_i64_third_below-zstd-adaptive": (
+        "3b121ddb98a5355b23325efd7dc9b630299577d202779b51f1ede71416691988",
+        "4c8f439ea0f31ad217a544d410cab44636e967c2ca67f9ff4669f73ad4340bf2"),
+    "b_i64_third_below-zstd-basic": (
+        "1a004c5da4b01b7347dd702474844f2efa7c625cc6eee7c09e64b6e2b6f3bb87",
+        "23b0e5cbecb9898aeeb4fc22db1fab88665ef5a37d9a0f5c00eeed98ed46ea64"),
+    "b_i64_third_at-lz4-adaptive": (
+        "3f178580cf9318db457a2a6bf32aef4ddf9e0552422fd7e79a93916e4562fd97",
+        "b262529092e39ac5eda697ab1624d8cb244776e8d4fa37b128da2ef886729134"),
+    "b_i64_third_at-lz4-basic": (
+        "3f178580cf9318db457a2a6bf32aef4ddf9e0552422fd7e79a93916e4562fd97",
+        "b262529092e39ac5eda697ab1624d8cb244776e8d4fa37b128da2ef886729134"),
+    "b_i64_third_at-zstd-adaptive": (
+        "4fdd5ad46ee147a889d9ac5391c931610aadfac122e9eb442cc58f040b2de21c",
+        "0fd6a01e65cedf36af1629dd01cfe45121f5ca69a8080ab69a30af8a14b38d78"),
+    "b_i64_third_at-zstd-basic": (
+        "4fdd5ad46ee147a889d9ac5391c931610aadfac122e9eb442cc58f040b2de21c",
+        "0fd6a01e65cedf36af1629dd01cfe45121f5ca69a8080ab69a30af8a14b38d78"),
+    "b_utf8_third_below-lz4-adaptive": (
+        "60b38d45b55bf4666b8374a7afb06f8c728bf1297217e23ae91128bc0fc01a1e",
+        "f33824804c7817994ec2fdb0be559b7a328d2c7f48d24ee9bb5549f41a679c48"),
+    "b_utf8_third_below-lz4-basic": (
+        "38de366f2d607c7ab033f6dc4f894c897975cdbd84fe9293b0759c278ce5bb24",
+        "320d434b5fb3007cacc96e94bd68b195ea262cbd7a86063083801ef22c4ee6e9"),
+    "b_utf8_third_below-zstd-adaptive": (
+        "9fec5e1faca8aef335a0ca25227973424ff1daa5cca2f68dbec3c1c49eb3d647",
+        "cf001d693411f0989abaf5a97a527db965420307522da944956914870201cf90"),
+    "b_utf8_third_below-zstd-basic": (
+        "75982d9baec2954b69086d036bb979d028b15f8c62bbbf4a2b08120914152039",
+        "4c7e9d9527669f2c4f60e55b51600d26dc1df7ab106a89ca502005a9227c419c"),
+    "b_utf8_third_at-lz4-adaptive": (
+        "326fbe3a8df4475c63c8b42e05ec4bd617b9c9c863df9c760d72fd74a5e3e37f",
+        "c8b648c717fa53f39365fe0f06a3617af5dff61a3c3449b9c4ec4fb5d8e39d08"),
+    "b_utf8_third_at-lz4-basic": (
+        "326fbe3a8df4475c63c8b42e05ec4bd617b9c9c863df9c760d72fd74a5e3e37f",
+        "c8b648c717fa53f39365fe0f06a3617af5dff61a3c3449b9c4ec4fb5d8e39d08"),
+    "b_utf8_third_at-zstd-adaptive": (
+        "dee3e1332c2f5a1db7ed80e126ede61f2a0f03ed984affccea2a51f6b8335943",
+        "a93b9b438b4bb9b0552622edf92f58bf6cb06ab69acfc10530b3bc1f14cd3000"),
+    "b_utf8_third_at-zstd-basic": (
+        "dee3e1332c2f5a1db7ed80e126ede61f2a0f03ed984affccea2a51f6b8335943",
+        "a93b9b438b4bb9b0552622edf92f58bf6cb06ab69acfc10530b3bc1f14cd3000"),
+    "b_f64_third_at-lz4-adaptive": (
+        "159584f47a68e9d91d4fde566688e58ccb519637a5512337d20f425936574d66",
+        "471e09930a0c01f234412f9963601029d98d78a519b8cf61c5abaf13e33208a0"),
+    "b_f64_third_at-lz4-basic": (
+        "159584f47a68e9d91d4fde566688e58ccb519637a5512337d20f425936574d66",
+        "471e09930a0c01f234412f9963601029d98d78a519b8cf61c5abaf13e33208a0"),
+    "b_f64_third_at-zstd-adaptive": (
+        "08545f155d64c6d48830780e368d72cd9631dd623812c75f1b6d742785b42e39",
+        "c2ca4697912c52be46bba531c27a1df424be9f9608434a730b560acbd6b6dc5a"),
+    "b_f64_third_at-zstd-basic": (
+        "08545f155d64c6d48830780e368d72cd9631dd623812c75f1b6d742785b42e39",
+        "c2ca4697912c52be46bba531c27a1df424be9f9608434a730b560acbd6b6dc5a"),
+    "b_i64_half_dups-lz4-adaptive": (
+        "878f3b24dca2584c30335ebe4958b28c77d85b33dea0b48ca9a29ecbdff64c75",
+        "d256eb0ab49b57f6c3ed6c8c03c945b1b679d8f12a9b7044d3aaaecdf65358f1"),
+    "b_i64_half_dups-lz4-basic": (
+        "878f3b24dca2584c30335ebe4958b28c77d85b33dea0b48ca9a29ecbdff64c75",
+        "d256eb0ab49b57f6c3ed6c8c03c945b1b679d8f12a9b7044d3aaaecdf65358f1"),
+    "b_i64_half_dups-zstd-adaptive": (
+        "07cbf8e289433d45df6189ae727ff7256cd638c8d26d5c6f44c527011cbd8e67",
+        "1d635bd177d832c0c78d81bfd479b6cb60ce5b30d3d012af553d8c01ca6c66ee"),
+    "b_i64_half_dups-zstd-basic": (
+        "07cbf8e289433d45df6189ae727ff7256cd638c8d26d5c6f44c527011cbd8e67",
+        "1d635bd177d832c0c78d81bfd479b6cb60ce5b30d3d012af553d8c01ca6c66ee"),
+    "b_utf8_half_dups-lz4-adaptive": (
+        "2359bdcab2cf2e09d93f7eb1ff36b696e32d93b7b687babfe61c1aba06b0186f",
+        "a09c0d9a379487fe6231a8bdb26a35ed8927f6cfdd4da65a2611d761eb913c50"),
+    "b_utf8_half_dups-lz4-basic": (
+        "2359bdcab2cf2e09d93f7eb1ff36b696e32d93b7b687babfe61c1aba06b0186f",
+        "a09c0d9a379487fe6231a8bdb26a35ed8927f6cfdd4da65a2611d761eb913c50"),
+    "b_utf8_half_dups-zstd-adaptive": (
+        "8228ff068be60331397f148da30f2e8a246ef9060f6e5171108d6988640db8c3",
+        "ac915b1480bb5eaefd459e7c89514dfe7f5bed6ffe65cc44555c161a68cdf24b"),
+    "b_utf8_half_dups-zstd-basic": (
+        "8228ff068be60331397f148da30f2e8a246ef9060f6e5171108d6988640db8c3",
+        "ac915b1480bb5eaefd459e7c89514dfe7f5bed6ffe65cc44555c161a68cdf24b"),
+    "b_i64_many_nulls-lz4-adaptive": (
+        "2fd3cba6f29d6b6fa65764f2ef6b11edf9a98a9094a3515392aa83fd2a6eb063",
+        "31c631a5103385810a1c72ce2f26d462819e8e77c579acfad0f7c5713ab3ff80"),
+    "b_i64_many_nulls-lz4-basic": (
+        "2fd3cba6f29d6b6fa65764f2ef6b11edf9a98a9094a3515392aa83fd2a6eb063",
+        "31c631a5103385810a1c72ce2f26d462819e8e77c579acfad0f7c5713ab3ff80"),
+    "b_i64_many_nulls-zstd-adaptive": (
+        "ebd5d7903c0c13dff00d2643cfea2c67916b78d829e3cc3720b6c0a66fd2f9ba",
+        "ab77ace4e561f5130a54d405d0aa278edae956f72e3ea0c1fa586e8305426f83"),
+    "b_i64_many_nulls-zstd-basic": (
+        "ebd5d7903c0c13dff00d2643cfea2c67916b78d829e3cc3720b6c0a66fd2f9ba",
+        "ab77ace4e561f5130a54d405d0aa278edae956f72e3ea0c1fa586e8305426f83"),
+    "b_utf8_leading_nulls-lz4-adaptive": (
+        "0f490d782a0aa9a003641b3856c69bd9d084196eb70a8753ebe2a7c4fc170463",
+        "48f88b6f2b5dfb45cab6e6cdef120a939ef07626d1b7caa6439342a9328e18c8"),
+    "b_utf8_leading_nulls-lz4-basic": (
+        "5953b4f3f0cc2f881f169835f9cbc7e4b067c00fd30ca03118814deb7526ae43",
+        "3bbc41de0f23f2a9310a92ad9f08ff46c095229bdb9d2e66f3ce2b5f161fe149"),
+    "b_utf8_leading_nulls-zstd-adaptive": (
+        "e66767b9366d8184d1b4a83c8ceb2a60daecafafb1a6b8bb0929027091b2ddc2",
+        "a7884a5493a2434100863c9081e03a6c63f67191420cbea134d8c1a88abef898"),
+    "b_utf8_leading_nulls-zstd-basic": (
+        "33b7462f7697317f7c71d47a38cb62dfc003d6f178e82ed4057ef7670e11fa5f",
+        "bb04160824ddbc87d66c8cf04998d36f82fb0ba9e8174dc3e1d5ff811448f02b"),
+    "b_utf8_leading_nulls_empty-lz4-adaptive": (
+        "ed63cc253c7ea5075494be3111f8dae6591e283045d9333ba9a2026ca381fc2c",
+        "6c6ea2d998b29fb4117ae535f3a73d18085505d26ce9f5f8663b38015b70ac4a"),
+    "b_utf8_leading_nulls_empty-lz4-basic": (
+        "f5a6f1d6c35679d73957d5dc85cdf6ccd6ccfb20390c7cfb0a9800f62c1dd362",
+        "6e64027eef52f0830062ec28dff178b8348838bf96fb4cf698697a285110d366"),
+    "b_utf8_leading_nulls_empty-zstd-adaptive": (
+        "cbd9dfa027e3815c89ad3c59d79bccaeff13d5c190e1f27f9372f7ab2c4f3ab0",
+        "248e37667530338a47a60882c3e846ac6e8e67db2a23a71f702d69258b9e77bc"),
+    "b_utf8_leading_nulls_empty-zstd-basic": (
+        "1113bf5734f5ed96721c9877138c41d4ee13b902ee2e30c3020f1110c754741e",
+        "1a3b224d338630674bf899f0fc23f583eae90f77a8afdf6d19f0f91f59f68bdd"),
+    "b_utf8_leading_nulls_plain-lz4-adaptive": (
+        "ec89a52bdc9d1f4d02e618813e5e62ad88dd9f03f9339d0cc49b51dce31344a8",
+        "d17d4b5b5eece1ffba04d6a1141341e4158edd5045e009e6a90d0f2c39b6e0bf"),
+    "b_utf8_leading_nulls_plain-lz4-basic": (
+        "ec89a52bdc9d1f4d02e618813e5e62ad88dd9f03f9339d0cc49b51dce31344a8",
+        "d17d4b5b5eece1ffba04d6a1141341e4158edd5045e009e6a90d0f2c39b6e0bf"),
+    "b_utf8_leading_nulls_plain-zstd-adaptive": (
+        "07520bf7df59be946c3f40dfe9b1b1faf5e2a7cc86c7c5fa25cfedada23d747e",
+        "a35ba52949f2dd686e95242f9898e127a299c45e324334e0f695e169f8e3760f"),
+    "b_utf8_leading_nulls_plain-zstd-basic": (
+        "07520bf7df59be946c3f40dfe9b1b1faf5e2a7cc86c7c5fa25cfedada23d747e",
+        "a35ba52949f2dd686e95242f9898e127a299c45e324334e0f695e169f8e3760f"),
+    "b_utf8_leading_nulls_freq-lz4-adaptive": (
+        "b78e31ef82910c796f90222fcc7058f65e07fd7e2aa0b091d2002301b411fb71",
+        "eeaa3b11e42e3dee7e76560e6f194cfab0a53002f3181cb839d54d103f4adedd"),
+    "b_utf8_leading_nulls_freq-lz4-basic": (
+        "a0da2695d2215395442002566bf4311df30f3b757330153768f0785827b178d9",
+        "e3b8df86ca50d496e8c53675acb2b20fcc506271008f72ace37a836c73a075b6"),
+    "b_utf8_leading_nulls_freq-zstd-adaptive": (
+        "5414e9a4431dc5c8dd651bd67730974a255b8a6fc8b531e610c05469f01a1e20",
+        "8071fbc306d76ca6f62a5821da44a48740791507adcdaaec7ce762f325ecdc50"),
+    "b_utf8_leading_nulls_freq-zstd-basic": (
+        "57f9f4fa0b3933f0ef8061ef343f2c4d695d6a0f2ef9489b5ccff94c42bc46ee",
+        "9aa207dce513fd836920a305729b5151b6c2c1676cf7c9f6daa0910445b861f0"),
+    "b_i64_all_null_page-lz4-adaptive": (
+        "df4c290fcce1ed0213a36344ca9e0d99d1ab6540a9494f48d81351c7afc81170",
+        "90c79f9cfea2c8f173b0f77d1ccba79dc61595b2f3c4ebaee4e67328024daf86"),
+    "b_i64_all_null_page-lz4-basic": (
+        "657dbf08bb47a729336b74ec2c692f3366cdb991ba7d21d57a479b16d740592c",
+        "10c7cb5d0e61872cea778a947cdbc5644c5c200b247966d12c5e0f61e5fbfac2"),
+    "b_i64_all_null_page-zstd-adaptive": (
+        "bcdda63629f89efc75b07b8eb6aac5fdf010d2483fc67d3ac8575bcff3ea2e75",
+        "8deb4d09c6a0326ebdc37efb1187960fd96c80327b16bd7e084dc67aa4ab37b1"),
+    "b_i64_all_null_page-zstd-basic": (
+        "649031ae7fb9a47bac238b59f1ccff71a62980ab98982f74265899d0435d22a7",
+        "a91f50d0752ae8a29e79d79b493e4c515b3cc5f7d634aa271ef89c28a3b964bc"),
+    "b_f64_all_null_page-lz4-adaptive": (
+        "5b9be527157d527083db7270a3be200164ea2cf845bfe63ebfa8fe653965b5f5",
+        "413dce2c048b12e0a6ad218c75339481c34c5e59fe952eb95da2393aef3d98ec"),
+    "b_f64_all_null_page-lz4-basic": (
+        "2fbc236a27f74f748d0d56f3cd98e0ec24b40c07294a49c0c953e5913d4ec77c",
+        "c3ea10d3d5c48bb48c56028d1e30e02379becdfd7fba3fdb98986132c45b916d"),
+    "b_f64_all_null_page-zstd-adaptive": (
+        "4057364c68333ad464346c83b6c29b45bd78bd4619d2472ef4ee8cc76ea8209f",
+        "a68d0c60ee0755031ff25a4137e78dd163eaaabf8e1e8eeea618e48566fbdd0c"),
+    "b_f64_all_null_page-zstd-basic": (
+        "34d57e873327f6dc7e139ab81aa27f344f31fb1ee43e22fd75af39f4edfba97c",
+        "7846a620773120027f79779482b3dd48cf6d3b0f9a9c65c8cce98a4eb66d467e"),
+    "b_utf8_all_null_page-lz4-adaptive": (
+        "b4a59bc6ec630b8d6864bffe8c987c3a9cdccca9a63aca6a5dad0f040c59905c",
+        "069ec2d04d846e448248c2d611439dd4d0ae3f9d4de518a0b93954251e0d52f2"),
+    "b_utf8_all_null_page-lz4-basic": (
+        "d39b212346aef9b32e27c9d33d720c4dcd5e6a2404ea060b945971a1e6b031be",
+        "0564072d810610abc6c58d3c99356c2a6727244a3e9fb0b44e1b6a2900707526"),
+    "b_utf8_all_null_page-zstd-adaptive": (
+        "77d9e33b6b86fe234612f1a9f7cda1c09a93e07417ba332ca67cfdaa18c8fb7a",
+        "20212612b27face7266918f1037f20ffef66640447f716285401a638b1c1775e"),
+    "b_utf8_all_null_page-zstd-basic": (
+        "a0f16185504fdc8393f7360fd9ec194a292d1d0943725bf3b09c92f4b479f784",
+        "375b9cb1f53d1d54e9168c1795c09e86ac91b2c1dd775d0cc61ced1ba35e7220"),
+    "b_f64_signed_zero-lz4-adaptive": (
+        "685533c9318b79f4e59b5f3ac1f9ee80dcf9de557ac2b7d121d7fe1e49848770",
+        "21883d0e7f6e2e2ed27a32b268d175e3d7af2070af869bd30d1585718795355b"),
+    "b_f64_signed_zero-lz4-basic": (
+        "cf936b6a21e54fe98f57511b03c94f691f9edd93013e22eebe87f8fc98252f11",
+        "ef80e6933612a4b72066ac19705cf69595a993e67d6e0c4a7caddb2bf4921fbb"),
+    "b_f64_signed_zero-zstd-adaptive": (
+        "685533c9318b79f4e59b5f3ac1f9ee80dcf9de557ac2b7d121d7fe1e49848770",
+        "21883d0e7f6e2e2ed27a32b268d175e3d7af2070af869bd30d1585718795355b"),
+    "b_f64_signed_zero-zstd-basic": (
+        "eb5815269f9054f4493cc421a39c5e02aa9fd02e18401a3ab678a2650ce9901b",
+        "33b7d4a9dbc34bfa1410d62a56a3f043de3478bee32e2c3548ae755e99b33ca7"),
+    "b_f64_nan-lz4-adaptive": (
+        "6b8d469e9cfd04517c5a795bce8f4fb1d214e9d1b45311616bd1e666c4be15c1",
+        "f5ca3e996f9cf2989b4094557f9a0b8a34b365e0686016c4696e4d772120bf0e"),
+    "b_f64_nan-lz4-basic": (
+        "0e551fc8686851f64f4334a65002613835a4cc53e1f4a884ba49efba15f17fd1",
+        "ee155dcb1e8eebdde15b42e5dd19137aa678d7d089badd916bd53a35564c90b5"),
+    "b_f64_nan-zstd-adaptive": (
+        "6b8d469e9cfd04517c5a795bce8f4fb1d214e9d1b45311616bd1e666c4be15c1",
+        "f5ca3e996f9cf2989b4094557f9a0b8a34b365e0686016c4696e4d772120bf0e"),
+    "b_f64_nan-zstd-basic": (
+        "d3b8d0ba016a566b1ac4f97459d77b9dc713ec85fc6b6dc8c56b808275dea1d6",
+        "d0ccb88ae3167f31cf6896048f3acfe22d50c78839d04afea0a2b349fed66af3"),
 }
 
 
@@ -449,7 +724,11 @@ def test_written_bytes_match_pin(tmp_path, shapes, shape, codec, ratio):
     table = _write(shapes[shape], codec, ratio, path)
     got = (_sha256(path), _sha256(Path(str(path) + ".stats.json")))
     assert got == PINS[_case_id(shape, codec, ratio)]
-    assert read_table(str(path)).equals(table)
+    read = read_table(str(path)).column(0).combine_chunks()
+    want = table.column(0).combine_chunks()
+    if pa.types.is_float64(want.type):  # NaN != NaN: compare the stored bits
+        read, want = read.view(pa.int64()), want.view(pa.int64())
+    assert read.equals(want)
 
 
 if __name__ == "__main__":
