@@ -24,7 +24,10 @@ Layouts mirror the reference byte-for-byte:
 The adaptive chooser follows the reference's eligibility rules
 (choose_compressor, integer/mod.rs:231-308) but estimates candidate sizes
 exactly with numpy instead of sampling — a writer is free to pick any codec;
-every reader must decode all of them.
+every reader must decode all of them. It hashes a numeric or binary page at
+most once: a distinct count over the page's first half first proves most
+high-cardinality pages plain-bound (``_summary``), and one insertion-ordered
+hash serves the rest, chooser and Dict encoder alike.
 """
 
 from __future__ import annotations
@@ -148,15 +151,20 @@ def _ffill(values: np.ndarray, valid: np.ndarray | None) -> np.ndarray:
     return values[idx]
 
 
-def _run_lengths(filled: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(run_values, run_counts) of a 1-D array (bitwise equality)."""
-    if len(filled) == 0:
-        return filled, np.empty(0, dtype=np.int64)
-    cmp = filled.view(_bits_view_dtype(filled.dtype)) if filled.dtype.kind == "f" else filled
+def _runs(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(run_starts, run_counts) of a 1-D array (bitwise equality)."""
+    if len(x) == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    cmp = x.view(_bits_view_dtype(x.dtype)) if x.dtype.kind == "f" else x
     change = np.nonzero(cmp[1:] != cmp[:-1])[0] + 1
     starts = np.concatenate([[0], change])
-    ends = np.concatenate([change, [len(filled)]])
-    return filled[starts], (ends - starts).astype(np.int64)
+    return starts, np.diff(np.concatenate([starts, [len(x)]]))
+
+
+def _run_lengths(filled: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(run_values, run_counts) of a 1-D array (bitwise equality)."""
+    starts, counts = _runs(filled)
+    return filled[starts], counts
 
 
 def _bits_view_dtype(dt: np.dtype) -> np.dtype:
@@ -168,26 +176,68 @@ def _bits_view_dtype(dt: np.dtype) -> np.dtype:
 # ---------------------------------------------------------------------------
 
 
-def _summary(nn: np.ndarray, filled: np.ndarray) -> tuple[np.ndarray, ...]:
-    """What the numeric chooser needs to know of a page: its distinct
-    non-null values with their counts, and the runs of the filled values."""
-    uniq, counts = (
-        np.unique(nn, return_counts=True)
-        if len(nn)
-        else (np.empty(0, nn.dtype), np.empty(0, np.int64))
-    )
-    return (uniq, counts, *_run_lengths(filled))
+@dataclass(frozen=True)
+class _Summary:
+    """What the numeric chooser knows of a page. ``distinct`` is None on a
+    page proven plain-bound (see ``_summary``), which then carries only its
+    runs; otherwise ``values`` are the page's distinct values (bits for
+    doubles) with their non-null ``counts``, and ``codes``, when the page
+    was hashed, number its rows by those values' first appearance."""
+
+    distinct: int | None
+    values: np.ndarray | None
+    counts: np.ndarray | None
+    run_vals: np.ndarray
+    run_counts: np.ndarray
+    codes: np.ndarray | None = None
+
+
+def _proves_plain(head_distinct: int, n: int) -> bool:
+    """The plain-page proof of ``_summary``: ``head_distinct`` distinct
+    non-null values in the first half of an ``n``-row page."""
+    return head_distinct >= 2 and 3 * head_distinct >= n
+
+
+def _summary(
+    nn_bits: np.ndarray, filled: np.ndarray, bits: np.ndarray, valid: np.ndarray | None
+) -> _Summary:
+    """The chooser's facts about one page, from at most one hash of it.
+
+    First the plain-page proof: if the first half of the page's non-null
+    values holds ``d >= 2`` distinct values with ``3d >= n``, no OneValue
+    (one distinct value), Dict (``3·distinct < n``) or Freq candidate can
+    exist. The top value fills at most ``n - d + 1 < 0.9n`` rows, and at
+    least ``d >= n/3`` rows are non-null, so neither Freq trigger holds.
+    Such a page only needs its runs.
+
+    Otherwise one insertion-ordered hash of the filled page (``bits``)
+    serves everything: its dictionary holds the distinct non-null values
+    (the filled values are the non-null ones; an all-null page fills
+    with 0 and has none), ``bincount`` over the non-null codes gives their
+    counts, equal values share a code so the codes run where the values
+    run, and a Dict page writes these codes and this dictionary."""
+    n = len(filled)
+    if _proves_plain(len(np.unique(nn_bits[: (n + 1) // 2])), n):
+        return _Summary(None, None, None, *_run_lengths(filled))
+    denc = pc.dictionary_encode(arrow_view(bits))
+    codes = numpy_view(denc.indices, np.int32)
+    uniq = numpy_view(denc.dictionary, bits.dtype)
+    counts = np.bincount(codes if valid is None else codes[valid], minlength=len(uniq))
+    starts, run_counts = _runs(codes)
+    distinct = len(uniq) if len(nn_bits) else 0
+    return _Summary(distinct, uniq, counts, filled[starts], run_counts, codes)
 
 
 def _codes_summary(
     codes: np.ndarray, counts: np.ndarray, run_counts: np.ndarray
-) -> tuple[np.ndarray, ...]:
+) -> _Summary:
     """``_summary`` of a Dict page's codes from what the value pass found:
     every entry is used, so the distinct codes are 0..len(counts)-1 with
     the entries' counts; equal values share a code, so the codes run where
     the values run."""
     run_starts = np.cumsum(run_counts) - run_counts
-    return (np.arange(len(counts), dtype=codes.dtype), counts, codes[run_starts], run_counts)
+    values = np.arange(len(counts), dtype=codes.dtype)
+    return _Summary(len(counts), values, counts, codes[run_starts], run_counts)
 
 
 def encode_numeric(
@@ -195,11 +245,16 @@ def encode_numeric(
     valid: np.ndarray | None,
     opts: CodecOptions,
     is_double: bool,
-    summary: tuple[np.ndarray, ...] | None = None,
+    summary: _Summary | None = None,
+    dictionary_out: list | None = None,
 ) -> bytes:
     """Full adaptive cascade for one page of a numeric leaf; returns a frame.
     ``summary`` is the page's ``_summary`` when the caller already knows it
-    (the codes of a Dict page); otherwise it is computed here."""
+    (the codes of a Dict page); otherwise it is computed here. When the
+    chooser hashed a page with non-null values, the page's distinct
+    non-null values, in the order they first appear, are appended to
+    ``dictionary_out`` as an Arrow array (``stats.page_stats`` reduces
+    over them instead of the page)."""
     n = len(values)
     isize = values.dtype.itemsize
     total_bytes = n * isize
@@ -213,25 +268,28 @@ def encode_numeric(
     if opts.compress_ratio is not None and n > 0:
         nn_bits = nn.view(_bits_view_dtype(values.dtype)) if is_double else nn
         if summary is None:
-            summary = _summary(nn_bits, filled)
-        uniq, counts, run_vals, run_counts = summary
-        unique_count = len(uniq)
-        top_count = counts.max() if len(counts) else 0
+            summary = _summary(nn_bits, filled, bits, valid)
+            if dictionary_out is not None and summary.codes is not None and len(nn):
+                dictionary_out.append(arrow_view(summary.values.view(values.dtype)))
+        unique_count = summary.distinct
+        run_vals, run_counts = summary.run_vals, summary.run_counts
 
         cands: list[tuple[int, float, object]] = []
-        if CODEC_ONE_VALUE not in opts.forbidden and unique_count <= 1:
-            cands.append((CODEC_ONE_VALUE, float(n), None))
-        if CODEC_FREQ not in opts.forbidden and unique_count > 1:
-            if null_count / n >= 0.9:
-                cands.append((CODEC_FREQ, float(n - 1), None))
-            elif top_count / n >= 0.9 and (
-                is_double or (len(nn) and int(nn.max()) >= (1 << 8))
-            ):
-                cands.append((CODEC_FREQ, float(n - 1), None))
-        if CODEC_DICT not in opts.forbidden and unique_count * 3 < n:
-            bits_needed = max(int(unique_count).bit_length(), 1)
-            after = unique_count * isize + n * (bits_needed // 8) + n * 2 // 128
-            cands.append((CODEC_DICT, total_bytes / max(after, 1), None))
+        if unique_count is not None:
+            top_count = summary.counts.max() if len(summary.counts) else 0
+            if CODEC_ONE_VALUE not in opts.forbidden and unique_count <= 1:
+                cands.append((CODEC_ONE_VALUE, float(n), None))
+            if CODEC_FREQ not in opts.forbidden and unique_count > 1:
+                if null_count / n >= 0.9:
+                    cands.append((CODEC_FREQ, float(n - 1), None))
+                elif top_count / n >= 0.9 and (
+                    is_double or (len(nn) and int(nn.max()) >= (1 << 8))
+                ):
+                    cands.append((CODEC_FREQ, float(n - 1), None))
+            if CODEC_DICT not in opts.forbidden and unique_count * 3 < n:
+                bits_needed = max(int(unique_count).bit_length(), 1)
+                after = unique_count * isize + n * (bits_needed // 8) + n * 2 // 128
+                cands.append((CODEC_DICT, total_bytes / max(after, 1), None))
         if CODEC_RLE not in opts.forbidden:
             rle_size = len(run_counts) * (4 + isize)
             cands.append((CODEC_RLE, total_bytes / max(rle_size, 1), (run_vals, run_counts)))
@@ -243,7 +301,6 @@ def encode_numeric(
             if bound > max((r for _, r, _ in cands), default=0.0) and bound >= opts.compress_ratio:
                 cands.append((CODEC_PATAS, patas.sample_ratio(bits), None))
         if not is_double and isize == 4 and n % 128 == 0 and n > 0:
-            v32 = filled.view(np.uint32) if values.dtype != np.int32 else filled.astype(np.uint32, copy=False)
             raw_min = int(filled.view(np.int32).min()) if values.dtype == np.int32 else int(filled.min())
             if raw_min >= 0:
                 blk_max = filled.astype(np.uint32).reshape(-1, 128).max(axis=1)
@@ -285,9 +342,8 @@ def encode_numeric(
     if best_codec == CODEC_DICT:
         # insertion-ordered codes: the reference's interner numbers values
         # by first appearance
-        denc = pc.dictionary_encode(arrow_view(bits))
-        codes = numpy_view(denc.indices, np.int32).astype(np.uint32)
-        dict_vals = numpy_view(denc.dictionary, bits.dtype).view(values.dtype)
+        codes = summary.codes.astype(np.uint32)
+        dict_vals = summary.values.view(values.dtype)
         sub = CodecOptions(
             opts.default_codec,
             opts.compress_ratio,
@@ -304,7 +360,7 @@ def encode_numeric(
         if null_count / n >= 0.9 or len(nn) == 0:
             top_arr = np.zeros(1, values.dtype)
         else:
-            top_arr = uniq[[int(np.argmax(counts))]].view(values.dtype)
+            top_arr = summary.values[[int(np.argmax(summary.counts))]].view(values.dtype)
         bits_dt = _bits_view_dtype(values.dtype)
         neq = values.view(bits_dt) != top_arr.view(bits_dt)[0]
         exc_mask = (nn_mask & neq) if nn_mask is not None else neq
@@ -628,48 +684,94 @@ def decode_boolean(cur: Cursor, length: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def encode_binary(arr: pa.Array, opts: CodecOptions, offset_width: int) -> bytes:
-    """arr: a pa binary/string array slice (one page)."""
-    n = len(arr)
-    if arr.null_count:
-        filled = pc.fill_null(pc.fill_null_forward(arr), b"" if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type) else "")
-    else:
-        filled = arr
-    if isinstance(filled, pa.ChunkedArray):
-        filled = filled.combine_chunks()
-    np_off, np_val = _binary_buffers(filled)
-    values_size = int(np_off[-1] - np_off[0])
+def _filled_codes(
+    arr: pa.Array, valid: np.ndarray | None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, pa.Array]:
+    """One insertion-ordered hash of a binary page, read as the hash of the
+    page with its nulls filled: each null takes the previous value and
+    leading nulls take ``""``. Returns (codes, entry offsets from 0, entry
+    bytes, the page's distinct non-null values as hashed).
 
+    The raw page hashes only its non-null values; they first appear in the
+    same order in the filled page, since a filled null repeats a value seen
+    before it. Leading nulls put ``""`` first, at slot 0, and move a ``""``
+    among the values there; the other codes follow by forward-filling in
+    numpy, which is cheaper than filling the strings and hashing those."""
+    denc = pc.dictionary_encode(arr)
+    distinct = denc.dictionary
+    entry_off, entries = _binary_buffers(distinct)
+    entry_off -= entry_off[0]
+    codes = numpy_view(denc.indices, np.int32)
+    if valid is None:
+        return codes, entry_off, entries, distinct
+    idx = np.where(valid, np.arange(len(valid)), -1)
+    np.maximum.accumulate(idx, out=idx)
+    lead = idx < 0
+    codes = codes[idx]
+    if lead.any():
+        lens = np.diff(entry_off)
+        # slot k of the remap (one past the values) takes the leading nulls
+        remap = np.arange(1, len(lens) + 2, dtype=np.int32)
+        remap[-1] = 0
+        empty = np.flatnonzero(lens == 0)
+        if len(empty):
+            remap[empty[0]] = 0
+            remap[empty[0] + 1 : -1] -= 1
+            lens = np.delete(lens, empty[0])
+        codes[lead] = len(remap) - 1
+        codes = remap[codes]
+        entry_off = np.concatenate([[0, 0], np.cumsum(lens)])
+    return codes, entry_off, entries, distinct
+
+
+def encode_binary(
+    arr: pa.Array, opts: CodecOptions, offset_width: int, dictionary_out: list | None = None
+) -> bytes:
+    """arr: a pa binary/string array slice (one page). Its nulls are stored
+    filled: each takes the previous value, leading nulls take ``""``.
+
+    The chooser first tries the plain-page proof of ``_summary`` on the
+    distinct non-null values of the page's first half. A page it does not
+    prove plain is hashed once (``_filled_codes``), which serves the
+    chooser and the OneValue, Freq and Dict encoders; its distinct non-null
+    values are appended to ``dictionary_out`` for the page stats."""
+    n = len(arr)
     best = None
     if opts.compress_ratio is not None and n > 0:
-        # one insertion-ordered hash pass serves the chooser and the Dict
-        # and Freq encoders (pc.value_counts lists values in the same order)
-        denc = pc.dictionary_encode(filled)
-        codes = numpy_view(denc.indices, np.int32)
-        dict_off, dict_val = _binary_buffers(denc.dictionary)
-        dict_off -= dict_off[0]
-        counts = np.bincount(codes, minlength=len(dict_off) - 1)
-        unique_count = len(counts)
-        total_bytes = values_size + (n + 1) * offset_width
-        if CODEC_ONE_VALUE not in opts.forbidden and unique_count <= 1:
-            best = (CODEC_ONE_VALUE, float(n))
-        elif (
-            CODEC_FREQ not in opts.forbidden
-            and unique_count > 1
-            and counts.max() / n >= 0.9
-        ):
-            best = (CODEC_FREQ, float(n - 1))
-        elif CODEC_DICT not in opts.forbidden and unique_count * 3 < n:
-            uniq_size = len(dict_val)
-            bits_needed = max(int(unique_count).bit_length(), 1)
-            after = uniq_size + n * (bits_needed // 8) + n * 2 // 128
-            ratio = total_bytes / max(after, 1)
-            if ratio >= opts.compress_ratio:
-                best = (CODEC_DICT, ratio)
-        if best is not None and best[1] < opts.compress_ratio:
-            best = None
+        head = pc.unique(arr.slice(0, (n + 1) // 2))
+        if not _proves_plain(len(head) - head.null_count, n):
+            valid = unpack_bitmap(arr.buffers()[0], arr.offset, n) if arr.null_count else None
+            codes, dict_off, dict_val, distinct = _filled_codes(arr, valid)
+            if dictionary_out is not None and len(distinct):
+                dictionary_out.append(distinct)
+            counts = np.bincount(codes, minlength=len(dict_off) - 1)
+            unique_count = len(counts)
+            values_size = int(counts @ np.diff(dict_off))
+            total_bytes = values_size + (n + 1) * offset_width
+            if CODEC_ONE_VALUE not in opts.forbidden and unique_count <= 1:
+                best = (CODEC_ONE_VALUE, float(n))
+            elif (
+                CODEC_FREQ not in opts.forbidden
+                and unique_count > 1
+                and counts.max() / n >= 0.9
+            ):
+                best = (CODEC_FREQ, float(n - 1))
+            elif CODEC_DICT not in opts.forbidden and unique_count * 3 < n:
+                uniq_size = len(dict_val)
+                bits_needed = max(int(unique_count).bit_length(), 1)
+                after = uniq_size + n * (bits_needed // 8) + n * 2 // 128
+                ratio = total_bytes / max(after, 1)
+                if ratio >= opts.compress_ratio:
+                    best = (CODEC_DICT, ratio)
+            if best is not None and best[1] < opts.compress_ratio:
+                best = None
 
     if best is None:
+        filled = arr
+        if arr.null_count:
+            empty = b"" if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type) else ""
+            filled = pc.fill_null(pc.fill_null_forward(arr), empty)
+        np_off, np_val = _binary_buffers(filled)
         off_dtype = np.dtype("<i4") if offset_width == 4 else np.dtype("<i8")
         rebased = (np_off - np_off[0]).astype(off_dtype)
         out = bytearray()
@@ -683,19 +785,19 @@ def encode_binary(arr: pa.Array, opts: CodecOptions, offset_width: int) -> bytes
 
     codec = best[0]
     if codec == CODEC_ONE_VALUE:
-        val = np_val[: np_off[1] - np_off[0]].tobytes()
+        val = dict_val[: dict_off[1]].tobytes()
         payload = struct.pack("<I", len(val)) + val
         return _frame(CODEC_ONE_VALUE, payload, values_size)
 
     if codec == CODEC_FREQ:
         top = int(np.argmax(counts))
         exc_mask = codes != top
-        if arr.null_count:
-            exc_mask &= unpack_bitmap(arr.buffers()[0], arr.offset, n)
+        if valid is not None:
+            exc_mask &= valid
         positions = np.nonzero(exc_mask)[0].astype(np.uint32)
         bm = roaring.serialize(positions)
         top_b = dict_val[dict_off[top] : dict_off[top + 1]].tobytes()
-        exc_off, exc_val = _binary_buffers(filled.take(arrow_view(positions)))
+        exc_off, exc_val = _binary_buffers(arr.take(arrow_view(positions)))
         payload = (
             struct.pack("<Q", len(top_b)) + top_b
             + struct.pack("<I", len(bm)) + bm
@@ -710,7 +812,7 @@ def encode_binary(arr: pa.Array, opts: CodecOptions, offset_width: int) -> bytes
         codes = codes.astype(np.uint32)
         payload = (
             encode_numeric(
-                codes, None, sub, False, _codes_summary(codes, counts, _run_lengths(codes)[1])
+                codes, None, sub, False, _codes_summary(codes, counts, _runs(codes)[1])
             )
             + struct.pack("<I", len(dict_off) - 1)
             + _len_prefixed(np.diff(dict_off), dict_val)

@@ -28,6 +28,7 @@ import json
 import math
 import os
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -67,44 +68,77 @@ def supports_stats(t: pa.DataType) -> bool:
     )
 
 
-def _page_sum(arr: pa.Array, t: pa.DataType) -> int | None:
+_INT64_LIMIT = 1 << 63
+
+
+def _page_sum(arr: pa.Array, t: pa.DataType, lo: int, hi: int) -> int | None:
     """Exact non-null sum for PURE integer pages (not temporal views —
-    SUM over dates is not SQL), None when out of int64 range or
-    unsupported. Feeds the pushed-SUM aggregate: a None here simply
-    refuses the pushdown, never changes an answer."""
+    SUM over dates is not SQL), or None when the running sum in row order
+    leaves int64 at any step, as in the JVM writer's ``Math.addExact``
+    (QuiverStatsBuilder), or the type is unsupported. Feeds the pushed-SUM
+    aggregate: a None here simply refuses the pushdown, never changes an
+    answer. ``lo``/``hi`` are the page's min and max: while
+    ``rows · max(|lo|, |hi|)`` stays under 2^63 no running sum can leave
+    int64, so ``pc.sum`` (which wraps) is exact."""
     if not pa.types.is_integer(t):
         return None
-    s = pc.sum(arr).as_py()
-    if s is None or not (-(2**63) < s < 2**63):
+    rows = len(arr) - arr.null_count
+    if max(-lo, hi) * rows < _INT64_LIMIT:
+        return pc.sum(arr).as_py()
+    if hi >= _INT64_LIMIT:
+        return None  # a uint64 value no int64 sum can hold
+    vals = pc.cast(pc.drop_null(arr), pa.int64())
+    v = np.frombuffer(vals.buffers()[1], dtype=np.int64, count=vals.offset + len(vals))[vals.offset :]
+    running = np.cumsum(v)  # wraps past int64, at the first overflow at the latest
+    before = running - v
+    # a signed add overflows when both operands share a sign the result lacks
+    if bool((((before ^ running) & (v ^ running)) < 0).any()):
         return None
-    return int(s)
+    s = int(running[-1])
+    return None if s == -_INT64_LIMIT else s
 
 
-def page_stats(arr: pa.Array) -> tuple[object, object, int, int | None]:
+def _min_max(arr: pa.Array) -> tuple[object, object]:
+    mm = pc.min_max(arr)
+    return mm["min"].as_py(), mm["max"].as_py()
+
+
+def page_stats(
+    arr: pa.Array, distinct: pa.Array | None = None
+) -> tuple[object, object, int, int | None]:
     """(min, max, null_count, int_sum) for one page in the JSON-stable
-    domain; (None, None, nulls, None) when unsupported/unavailable."""
+    domain; (None, None, nulls, None) when unsupported/unavailable.
+
+    ``distinct``, when given, holds the page's non-null values once each
+    in the order they first appear (the dictionary the writer's chooser
+    built for the page); min/max and the NaN check then reduce over it
+    instead of every row. Equal values are identical except 0.0 and -0.0,
+    and which of those ``pc.min_max`` keeps depends on where the page's
+    nulls fall, so a float min or max of zero is taken over the page.
+    ``int_sum`` is None once a running sum leaves int64 (``_page_sum``)."""
     t = arr.type
     nulls = arr.null_count
     if nulls == len(arr) or len(arr) == 0 or not supports_stats(t):
         return None, None, nulls, None
-    page_sum = _page_sum(arr, t)
     phys = _physical_int_type(t)
     if phys is not None:
         arr = arr.view(phys)
+    values = arr if distinct is None else distinct
     if pa.types.is_floating(t):
         # pc.min_max SKIPS NaN, so a finite max would let page_may_match
         # prune gt/gte/eq pages even though Spark orders NaN above every
         # value. Pages containing any NaN get null stats (never pruned).
-        if bool(pc.any(pc.is_nan(arr)).as_py()):
+        if bool(pc.any(pc.is_nan(values)).as_py()):
             return None, None, nulls, None
-    mm = pc.min_max(arr)
-    lo, hi = mm["min"].as_py(), mm["max"].as_py()
+    lo, hi = _min_max(values)
+    if pa.types.is_floating(t) and values is distinct and 0.0 in (lo, hi):
+        lo, hi = _min_max(arr)  # a zero may tie with its other sign
     if isinstance(lo, float) and (math.isnan(lo) or math.isnan(hi)):
         return None, None, nulls, None
     if isinstance(lo, str):
         lo = lo[:_STR_CAP]
         hi = None if len(hi) > _STR_CAP else hi
-    return lo, hi, nulls, page_sum
+    return lo, hi, nulls, _page_sum(arr, t, lo, hi)
 
 
 def build_file_stats(

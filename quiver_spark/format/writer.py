@@ -113,8 +113,12 @@ def _bool_np(arr: pa.Array) -> tuple[np.ndarray, np.ndarray | None]:
     return unpack_bitmap(arr.buffers()[1], arr.offset, len(arr)), _valid_np(arr)
 
 
-def _encode_values(arr: pa.Array, copts: CodecOptions) -> bytes:
-    """Typed cascade over a flat array's values (no validity prefix)."""
+def _encode_values(
+    arr: pa.Array, copts: CodecOptions, dictionary_out: list | None = None
+) -> bytes:
+    """Typed cascade over a flat array's values (no validity prefix). A
+    numeric or string page the chooser hashed appends its distinct non-null
+    values to ``dictionary_out``."""
     t = arr.type
     if pa.types.is_boolean(t):
         values, valid = _bool_np(arr)
@@ -126,7 +130,7 @@ def _encode_values(arr: pa.Array, copts: CodecOptions) -> bytes:
         or pa.types.is_large_binary(t)
     ):
         width = 8 if (pa.types.is_large_string(t) or pa.types.is_large_binary(t)) else 4
-        return encode_binary(arr, copts, width)
+        return encode_binary(arr, copts, width, dictionary_out)
     if pa.types.is_decimal(t):
         # Int128/Int256 leaves run the same integer cascade as the narrow
         # types (src/compression/integer/traits.rs:30-39), handled as
@@ -139,10 +143,12 @@ def _encode_values(arr: pa.Array, copts: CodecOptions) -> bytes:
         return codecs.encode_fixed(rows, _valid_np(arr), copts)
     dtype, is_double = _physical_dtype(t)
     values, valid = _prim_np(arr, dtype)
-    return encode_numeric(values, valid, copts, is_double)
+    return encode_numeric(values, valid, copts, is_double, dictionary_out=dictionary_out)
 
 
-def encode_leaf_page(arr: pa.Array, nullable: bool, copts: CodecOptions) -> bytes:
+def encode_leaf_page(
+    arr: pa.Array, nullable: bool, copts: CodecOptions, dictionary_out: list | None = None
+) -> bytes:
     """One flat page: optional validity prefix + typed payload."""
     if pa.types.is_null(arr.type):
         # Null pages are empty — no validity, no payload; only the page
@@ -153,7 +159,7 @@ def encode_leaf_page(arr: pa.Array, nullable: bool, copts: CodecOptions) -> byte
     if nullable:
         v = encode_validity(_valid_np(arr), len(arr))
         out += struct.pack("<I", len(v)) + v
-    out += _encode_values(arr, copts)
+    out += _encode_values(arr, copts, dictionary_out)
     return bytes(out)
 
 
@@ -235,6 +241,9 @@ def write_table(table: pa.Table, path: str, options: WriteOptions | None = None)
                     break
                 length = min(page_size, n - start) if n else 0
                 page_arr = arr.slice(start, length)
+                # the distinct values of a page the chooser hashed spare the
+                # stats pass a reduction over every row
+                hashed: list[pa.Array] = []
                 if is_nested:
                     for li, pair in enumerate(
                         encode_nested_pages(page_arr, field_, copts)
@@ -242,11 +251,13 @@ def write_table(table: pa.Table, path: str, options: WriteOptions | None = None)
                         leaf_pages[li].append(pair)
                 else:
                     leaf_pages[0].append(
-                        (encode_leaf_page(page_arr, field_.nullable, copts), length)
+                        (encode_leaf_page(page_arr, field_.nullable, copts, hashed), length)
                     )
                 rows_per_page.append(length)
                 if want_stats:
-                    stats_rows.append(stats_mod.page_stats(page_arr))
+                    stats_rows.append(
+                        stats_mod.page_stats(page_arr, hashed[0] if hashed else None)
+                    )
                 if want_bloom:
                     bloom_pages.append(stats_mod.page_bloom(page_arr))
                 if n == 0:

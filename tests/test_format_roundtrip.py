@@ -256,6 +256,27 @@ def test_page_range_and_pruning(tmp_path):
     _assert_tables_equal(expect, part)
 
 
+def test_page_sum_is_null_once_a_running_sum_leaves_int64(tmp_path):
+    """A page's stored SUM is null when its running sum, in row order,
+    leaves int64 at any step (the JVM writer's Math.addExact), instead of
+    the wrapped value pc.sum returns; sums that stay in range are exact."""
+    from quiver_spark.format.stats import load_sidecar, page_stats
+
+    big = 2**62
+    assert page_stats(pa.array([big, big, 1]))[3] is None  # wraps to -2^63 + 1
+    assert page_stats(pa.array([2**64 - 1, 1], pa.uint64()))[3] is None  # wraps to 0
+    assert page_stats(pa.array([big, big, -big]))[3] is None  # in range only at the end
+    assert page_stats(pa.array([-big, -big]))[3] is None  # -2^63 itself
+    assert page_stats(pa.array([big, -big, big, None, 5]))[3] == big + 5
+    assert page_stats(pa.array([2**63 - 1, 0], pa.uint64()))[3] == 2**63 - 1
+    assert page_stats(pa.array([-(2**63), 1, 2]))[3] == -(2**63) + 3
+
+    path = str(tmp_path / "t.quiver")
+    write_table(pa.table({"c": pa.array([big, big, 1, 2, 3, 4])}), path,
+                WriteOptions(max_page_size=3))
+    assert load_sidecar(path)["columns"]["c"]["sum"] == [None, 9]
+
+
 def test_empty_strings_column_all_null(tmp_path):
     t = pa.table({"s": pa.array([None, None, None], type=pa.string())})
     path = str(tmp_path / "t.quiver")

@@ -223,6 +223,29 @@ def test_countcol_refuses_truncated_nulls(spark, tmp_path):
     assert q.collect()[0][0] == 1500
 
 
+def test_pushed_sum_of_python_written_overflow_matches_spark(spark, tmp_path):
+    """A page written by the Python writer whose running sum leaves int64
+    stores a null SUM, so the pushed SUM is refused and Spark's own
+    aggregate answers as it does over the same rows without the pushdown:
+    ARITHMETIC_OVERFLOW under ANSI, the wrapped sum without. A page whose
+    sum stays in range still answers from the sidecar."""
+    _require_jar(spark)
+
+    def outcome(df):
+        try:
+            return df.selectExpr("sum(c)").collect()[0][0]
+        except Exception as exc:  # noqa: BLE001 — compared with Spark's own outcome
+            return "ARITHMETIC_OVERFLOW" if "ARITHMETIC_OVERFLOW" in str(exc) else repr(exc)
+
+    for name, rows, pushed in (("over", [2**62, 2**62, 1], False), ("in", [2**62, -5, 7], True)):
+        d = str(tmp_path / name)
+        os.makedirs(d)
+        write_table(pa.table({"c": pa.array(rows, pa.int64())}), os.path.join(d, "part-0.quiver"))
+        df = spark.read.format("quiverjvm").load(d)
+        assert ("sum(c)" in _scan_section(df.selectExpr("sum(c)"))) == pushed
+        assert outcome(df) == outcome(spark.createDataFrame([(v,) for v in rows], "c long"))
+
+
 # ---- ADVICE r15 #2: merge-schemas partition collisions -----------------
 
 

@@ -251,6 +251,131 @@ def test_patas_pricing_matches_the_encoder(arr):
     np.testing.assert_array_equal(decoded.view(bits.dtype), bits)
 
 
+# --- the chooser's plain-page proof and one-hash summary (format/codecs.py) --
+
+
+_PAGE_DTYPES = {"i64": np.int64, "i32": np.int32, "u64": np.uint64, "f64": np.float64,
+                "f32": np.float32, "str": object}
+
+
+@st.composite
+def _chooser_pages(draw):
+    """(arrow page, kind) of 7-8,192 rows: numeric or string, nulls from
+    none to all, and cardinality from one value to every row distinct
+    (⌈n/3⌉ is the fewest that rule out Dict), laid out with every value
+    seen early, at random, sorted, or with a duplicate-heavy first half."""
+    kind = draw(st.sampled_from(["str", "f64", "i64", "i32", "u64", "f32"]))
+    n = draw(st.integers(min_value=7, max_value=8192))
+    distinct = draw(st.sampled_from([n, -(-n // 3), n // 3, 8, 1, 2, 3, n // 4, n // 2]))
+    null_frac = draw(st.sampled_from([0.0, 0.05, 0.5, 0.95, 1.0]))
+    layout = draw(st.sampled_from(["early", "random", "sorted", "dup_head"]))
+    rng = np.random.default_rng(draw(st.integers(min_value=0, max_value=2**32 - 1)))
+    codes = rng.integers(0, max(distinct, 1), n)
+    if layout == "early":  # every value by the middle of the page
+        codes[: min(distinct, n)] = rng.permutation(min(distinct, n))
+    elif layout == "sorted":
+        codes.sort()
+    elif layout == "dup_head":
+        codes[: n // 2] = rng.integers(0, 2, n // 2)
+    if kind == "str":
+        pool = np.array(["", "a", "b" * 70, "é"] + [f"v{i}" for i in range(n)], dtype=object)
+    elif kind.startswith("f"):
+        pool = np.concatenate([[0.0, -0.0, np.nan, np.inf, 1.5], rng.normal(0, 1e3, n)])
+        if draw(st.booleans()):
+            pool = pool[[0, 1, *range(5, len(pool))]]  # no NaN or inf
+    else:
+        lo, hi = (0, 2**64 - 1) if kind == "u64" else (-(2**62), 2**62)
+        pool = np.concatenate([[0, 1, 2**31 - 1], rng.integers(lo, hi, n, dtype=np.int64 if lo else np.uint64)])
+    pool = pool[rng.permutation(len(pool))] if draw(st.booleans()) else pool
+    values = pool[codes].astype(_PAGE_DTYPES[kind])
+    mask = rng.random(n) < null_frac
+    if draw(st.booleans()):
+        mask[: draw(st.integers(min_value=1, max_value=16))] = True  # leading nulls
+    arrow_type = pa.string() if kind == "str" else pa.from_numpy_dtype(_PAGE_DTYPES[kind])
+    return pa.array(values, type=arrow_type, mask=mask), kind
+
+
+def _full_summary(arr, kind):
+    """(distinct, top_count, null_count) of a page by np.unique over its
+    non-null values (bits for doubles); strings count their filled rows,
+    as the binary chooser does: nulls repeat the previous value, leading
+    nulls are ""."""
+    values = arr.to_pylist()
+    if kind == "str":
+        last, filled = "", []
+        for v in values:
+            last = last if v is None else v
+            filled.append(last)
+        _, counts = np.unique(np.array(filled, dtype=object), return_counts=True)
+        return len(counts), int(counts.max()), 0
+    nn = np.array([v for v in values if v is not None], dtype=_PAGE_DTYPES[kind])
+    bits = nn.view(f"u{nn.dtype.itemsize}") if nn.dtype.kind == "f" else nn
+    _, counts = np.unique(bits, return_counts=True)
+    return len(counts), int(counts.max()) if len(counts) else 0, arr.null_count
+
+
+def _encode_page(arr, kind, opts):
+    """Encode one page through the chooser → (summary or None, the page's
+    distinct values the chooser hashed, or None)."""
+    from unittest import mock
+
+    from quiver_spark.format import codecs
+
+    hashed, summaries = [], []
+    if kind == "str":
+        spy = mock.patch.object(codecs, "_filled_codes", wraps=codecs._filled_codes)
+        with spy as filled_codes:
+            codecs.encode_binary(arr, opts, 4, hashed)
+        return filled_codes.call_count, hashed[0] if hashed else None
+    real = codecs._summary
+
+    def spy_summary(*args):
+        summaries.append(real(*args))
+        return summaries[-1]
+
+    values = codecs.numpy_view(arr, _PAGE_DTYPES[kind])
+    valid = None if not arr.null_count else np.array(arr.is_valid().to_pylist())
+    with mock.patch.object(codecs, "_summary", spy_summary):
+        codecs.encode_numeric(values, valid, opts, kind.startswith("f"), dictionary_out=hashed)
+    return summaries[0], hashed[0] if hashed else None
+
+
+def _stat_key(x):
+    """Stats compare with the sign of a zero (JSON writes -0.0)."""
+    import math
+
+    return (x, math.copysign(1, x)) if isinstance(x, float) else x
+
+
+@settings(max_examples=300, deadline=None)
+@given(case=_chooser_pages())
+def test_plain_proof_and_dictionary_stats(case):
+    """The chooser skips the full summary only on pages a full np.unique
+    summary admits no OneValue, Freq or Dict candidate for; the one hash it
+    makes otherwise finds the same distinct values and counts; and the
+    page stats reduced over that hash's dictionary equal the stats
+    reduced over the page."""
+    from quiver_spark.format.codecs import CodecOptions
+    from quiver_spark.format.stats import page_stats
+
+    arr, kind = case
+    n = len(arr)
+    distinct, top, nulls = _full_summary(arr, kind)
+    summary, dictionary = _encode_page(arr, kind, CodecOptions())
+    proven = summary == 0 if kind == "str" else summary.distinct is None
+    if proven:
+        assert distinct > 1  # OneValue
+        assert nulls / n < 0.9 and top / n < 0.9  # Freq
+        assert distinct * 3 >= n  # Dict
+    elif kind != "str":
+        assert summary.distinct == distinct
+        assert summary.counts.max() == top
+    if dictionary is not None:
+        want = page_stats(arr)
+        got = page_stats(arr, dictionary)
+        assert [_stat_key(v) for v in got] == [_stat_key(v) for v in want]
+
+
 # --- column-default codec (manifest.encode_default / decode_default) -------
 
 
