@@ -135,6 +135,14 @@ def numpy_view(arr: pa.Array, dtype: np.dtype) -> np.ndarray:
     return np.frombuffer(arr.buffers()[1], dtype=dtype, count=arr.offset + len(arr))[arr.offset :]
 
 
+def _fill_index(valid: np.ndarray) -> np.ndarray:
+    """Row i of a forward fill reads row ``idx[i]``: the last non-null row
+    at or before i, or -1 for a leading null."""
+    idx = np.where(valid, np.arange(len(valid)), -1)
+    np.maximum.accumulate(idx, out=idx)
+    return idx
+
+
 def _ffill(values: np.ndarray, valid: np.ndarray | None) -> np.ndarray:
     """Nulls take the previous value; leading nulls take the FIRST valid
     value so an RLE encode merges them into the first run exactly like the
@@ -145,8 +153,7 @@ def _ffill(values: np.ndarray, valid: np.ndarray | None) -> np.ndarray:
         return values
     if not valid.any():
         return np.zeros_like(values)
-    idx = np.where(valid, np.arange(len(values)), -1)
-    np.maximum.accumulate(idx, out=idx)
+    idx = _fill_index(valid)
     idx[idx < 0] = int(np.argmax(valid))
     return values[idx]
 
@@ -466,8 +473,7 @@ def _fixed_ffill(rows: np.ndarray, valid: np.ndarray | None) -> np.ndarray:
         return rows
     if not valid.any():
         return np.zeros_like(rows)
-    idx = np.where(valid, np.arange(len(rows)), -1)
-    np.maximum.accumulate(idx, out=idx)
+    idx = _fill_index(valid)
     idx[idx < 0] = int(np.argmax(valid))
     return rows[idx]
 
@@ -704,8 +710,7 @@ def _filled_codes(
     codes = numpy_view(denc.indices, np.int32)
     if valid is None:
         return codes, entry_off, entries, distinct
-    idx = np.where(valid, np.arange(len(valid)), -1)
-    np.maximum.accumulate(idx, out=idx)
+    idx = _fill_index(valid)
     lead = idx < 0
     codes = codes[idx]
     if lead.any():
@@ -767,15 +772,17 @@ def encode_binary(
                 best = None
 
     if best is None:
-        filled = arr
+        np_off, np_val = _binary_buffers(arr)
+        np_off -= np_off[0]
         if arr.null_count:
-            empty = b"" if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type) else ""
-            filled = pc.fill_null(pc.fill_null_forward(arr), empty)
-        np_off, np_val = _binary_buffers(filled)
+            # one gather fills the nulls; entry n, past the page's rows, is ""
+            idx = _fill_index(unpack_bitmap(arr.buffers()[0], arr.offset, n))
+            idx[idx < 0] = n
+            entry_off = np.append(np_off, np_off[-1])
+            np_off, np_val = _take_entries(entry_off, np_val, idx.astype(np.uint32), offset_width)
         off_dtype = np.dtype("<i4") if offset_width == 4 else np.dtype("<i8")
-        rebased = (np_off - np_off[0]).astype(off_dtype)
         out = bytearray()
-        raw_off = rebased.tobytes()
+        raw_off = np_off.astype(off_dtype, copy=False).tobytes()
         p1 = _basic_compress(opts.default_codec, raw_off)
         out += _frame(opts.default_codec, p1, len(raw_off))
         raw_val = np_val.tobytes()

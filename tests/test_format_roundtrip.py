@@ -538,9 +538,10 @@ print(",".join(codecs), wrote, "pandas" in sys.modules, "pyspark" in sys.modules
 
 def test_format_layer_never_imports_pandas(tmp_path):
     """A fresh interpreter that writes Dict pages (numeric, double and
-    string) and a list column, and reads them back, must not import pandas
-    (~0.4 s in every new Python-sink or reader worker), nor pyspark
-    (~0.15-0.3 s in every process that only reads or writes files)."""
+    string), plain string pages with nulls, and a list column, and reads
+    them back, must not import pandas (~0.4 s in every new Python-sink or
+    reader worker), nor pyspark (~0.15-0.3 s in every process that only
+    reads or writes files)."""
     import subprocess
     import sys
     from pathlib import Path
@@ -549,7 +550,8 @@ def test_format_layer_never_imports_pandas(tmp_path):
     table = pa.table({
         "i": pa.array(np.arange(n) % 7 * 1000),
         "f": pa.array(np.arange(n) % 5 * 0.5, mask=np.arange(n) % 9 == 0),
-        "s": pa.array(np.array(["a", "b", "c"])[np.arange(n) % 3]),
+        "s": pa.array(np.array(["a", "b", "c"])[np.arange(n) % 3], mask=np.arange(n) % 4 == 0),
+        "p": pa.array(np.arange(n).astype(str), mask=np.arange(n) % 4 == 0),
         "l": pa.array([[1, 2], None, [3]] * (n // 3) + [[4]]),
     })
     src = tmp_path / "in.arrow"
