@@ -315,8 +315,9 @@ def _full_summary(arr, kind):
 
 
 def _encode_page(arr, kind, opts):
-    """Encode one page through the chooser → (summary or None, the page's
-    distinct values the chooser hashed, or None)."""
+    """Encode one page through the chooser → (its ``_summary``, or for a
+    string page how often it was hashed; the distinct values the chooser
+    hashed, or None)."""
     from unittest import mock
 
     from quiver_spark.format import codecs
@@ -352,7 +353,7 @@ def _stat_key(x):
 def test_plain_proof_and_dictionary_stats(case):
     """The chooser skips the full summary only on pages a full np.unique
     summary admits no OneValue, Freq or Dict candidate for; the one hash it
-    makes otherwise finds the same distinct values and counts; and the
+    makes otherwise finds the same distinct count and top count; and the
     page stats reduced over that hash's dictionary equal the stats
     reduced over the page."""
     from quiver_spark.format.codecs import CodecOptions
