@@ -24,10 +24,11 @@ Layouts mirror the reference byte-for-byte:
 The adaptive chooser follows the reference's eligibility rules
 (choose_compressor, integer/mod.rs:231-308) but estimates candidate sizes
 exactly with numpy instead of sampling — a writer is free to pick any codec;
-every reader must decode all of them. It hashes a numeric or binary page at
-most once: a distinct count over the page's first half first proves most
-high-cardinality pages plain-bound (``_summary``), and one insertion-ordered
-hash serves the rest, chooser and Dict encoder alike.
+every reader must decode all of them. Per numeric or binary page it makes a
+distinct count over the page's first half, which proves most
+high-cardinality pages plain-bound (``_summary``), and then at most one full
+insertion-ordered hash, which serves the rest, chooser and Dict encoder
+alike.
 """
 
 from __future__ import annotations
@@ -208,7 +209,8 @@ def _proves_plain(head_distinct: int, n: int) -> bool:
 def _summary(
     nn_bits: np.ndarray, filled: np.ndarray, bits: np.ndarray, valid: np.ndarray | None
 ) -> _Summary:
-    """The chooser's facts about one page, from at most one hash of it.
+    """The chooser's facts about one page, from a distinct count over its
+    first half and at most one full hash.
 
     First the plain-page proof: if the first half of the page's non-null
     values holds ``d >= 2`` distinct values with ``3d >= n``, no OneValue
@@ -737,9 +739,10 @@ def encode_binary(
 
     The chooser first tries the plain-page proof of ``_summary`` on the
     distinct non-null values of the page's first half. A page it does not
-    prove plain is hashed once (``_filled_codes``), which serves the
-    chooser and the OneValue, Freq and Dict encoders; its distinct non-null
-    values are appended to ``dictionary_out`` for the page stats."""
+    prove plain is then hashed in full once (``_filled_codes``), which
+    serves the chooser and the OneValue, Freq and Dict encoders; its
+    distinct non-null values are appended to ``dictionary_out`` for the
+    page stats."""
     n = len(arr)
     best = None
     if opts.compress_ratio is not None and n > 0:

@@ -28,7 +28,6 @@ import json
 import math
 import os
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -87,14 +86,10 @@ def _page_sum(arr: pa.Array, t: pa.DataType, lo: int, hi: int) -> int | None:
         return pc.sum(arr).as_py()
     if hi >= _INT64_LIMIT:
         return None  # a uint64 value no int64 sum can hold
-    vals = pc.cast(pc.drop_null(arr), pa.int64())
-    v = np.frombuffer(vals.buffers()[1], dtype=np.int64, count=vals.offset + len(vals))[vals.offset :]
-    running = np.cumsum(v)  # wraps past int64, at the first overflow at the latest
-    before = running - v
-    # a signed add overflows when both operands share a sign the result lacks
-    if bool((((before ^ running) & (v ^ running)) < 0).any()):
+    try:  # raises at the first running sum that leaves int64
+        s = pc.cumulative_sum_checked(pc.cast(pc.drop_null(arr), pa.int64()))[-1].as_py()
+    except pa.ArrowInvalid:
         return None
-    s = int(running[-1])
     return None if s == -_INT64_LIMIT else s
 
 
