@@ -40,7 +40,7 @@ def main() -> None:
         .getOrCreate()
     )
     from quiver_spark import maintenance as M
-    from quiver_spark.sources import register
+    from quiver_spark.sources import register, write
     from quiver_spark.tools import cmd_commits, cmd_schema
 
     register(spark)
@@ -59,11 +59,15 @@ def main() -> None:
     # 2. CHECK constraint: existing rows validated, future writes gated
     M.add_constraint(spark, tbl, "q_range", "quality BETWEEN 0 AND 10")
     try:
-        spark.createDataFrame(
-            [(99, "BADLAND", 0, -5.0)],
-            "n_nationkey long, nation_name string, n_regionkey long, "
-            "quality double",
-        ).write.format("quiver").mode("append").save(tbl)
+        write(
+            spark.createDataFrame(
+                [(99, "BADLAND", 0, -5.0)],
+                "n_nationkey long, nation_name string, n_regionkey long, "
+                "quality double",
+            ),
+            tbl,
+            mode="append",
+        )
     except Exception:
         print("violating append rejected (nothing published) ✓")
     assert spark.read.format("quiver").load(tbl).filter(

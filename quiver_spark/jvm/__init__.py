@@ -26,11 +26,13 @@ takes every batch write ``sources.write`` routes to it: the job writes
 files and sidecars into a staging directory (``_temporary/jvm-<uuid>/``),
 and ``sources.write`` publishes them through ``snapshot.commit`` under
 the table lock — an append into the live root, or an atomic generation
-swap. CHECK-constrained tables and Python-only options (require_not_null,
-page_stats, …) go to the Python sink. A write that names
-``format("quiverjvm")`` itself bypasses the commit: each task publishes
-its own files, the job commit merges the manifest without the lock,
-and an overwrite truncates the table before its tasks run.
+swap, CHECK-constrained tables included (``sources.write`` checks them
+in the plan; named directly, the write builders refuse such a table).
+Python-only options (require_not_null, page_stats, …) go to the Python
+sink. A write that names ``format("quiverjvm")`` itself bypasses the
+commit: each task publishes its own files, the job commit merges the
+manifest without the lock, and an overwrite truncates the table before
+its tasks run.
 
 The jar builds OFFLINE with plain javac against the bundled Spark jars
 (build.sh — no network, no dependency resolution) and is checked in so

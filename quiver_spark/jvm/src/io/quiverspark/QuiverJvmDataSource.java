@@ -226,7 +226,7 @@ public class QuiverJvmDataSource implements TableProvider, DataSourceRegister {
     }
 
     /** CHECK constraints (maintenance.add_constraint) live in the live
-     * manifest and only the Python 'quiver' sink evaluates them, so a
+     * manifest and only quiver_spark.sources.write checks them, so a
      * batch or streaming write into such a table is refused here, before
      * any task runs: a violating row can never land through this format.
      * An unreadable manifest counts as none, as in the Python sink. */
@@ -243,8 +243,8 @@ public class QuiverJvmDataSource implements TableProvider, DataSourceRegister {
         throw new UnsupportedOperationException(
             "quiverjvm: " + path + " has CHECK constraints "
                 + man.get("check_constraints") + ", which this writer does "
-                + "not evaluate — write with the Python 'quiver' sink "
-                + "(sources.write routes there)");
+                + "not evaluate — write through quiver_spark.sources.write, "
+                + "which checks them");
       }
     }
   }

@@ -937,28 +937,33 @@ def add_constraint(
     table: str,
     name: str,
     expression: str,
-    format: str = "quiver",
     validate: bool = True,
 ) -> dict:
     """ALTER TABLE ADD CONSTRAINT ``name`` CHECK ``expression`` — the
-    Delta CHECK-constraint analogue. The predicate is bind-checked under
-    BOTH engines that will see it (Spark/Catalyst here; DuckDB, which
-    evaluates it per batch in every writer) and, with ``validate=True``,
-    EXISTING rows are scanned: a single row where the predicate is FALSE
-    refuses the constraint (standard SQL CHECK — NULL passes). Stored in
-    the manifest via a metadata-only commit; every subsequent write on
-    any path (batch, append, streaming, DML rewrite) enforces it and
-    aborts before publish on violation. (The validation scan runs before
-    the commit takes the table lock — rows appended in that window were
-    written under the pre-constraint contract, same as Delta's ADD
-    CONSTRAINT.) Columns a constraint references cannot be dropped or
-    renamed while it exists. Constraints survive overwrites
-    (the overwrite itself is validated first) and DML carry commits;
-    drop via :func:`drop_constraint`."""
-    import duckdb
-    import pyarrow as pa
+    Delta CHECK-constraint analogue, on quiver tables (no router writes
+    arrowipc ones). Spark binds the predicate and, with
+    ``validate=True``, scans EXISTING rows: a single row where it is
+    FALSE refuses the constraint (standard SQL CHECK — NULL passes).
+    Stored in the manifest via a metadata-only commit. Every later
+    :func:`quiver_spark.sources.write` (batch, append, routed stream,
+    DML rewrite, compaction) checks it in its Spark plan and aborts
+    before publish on violation; the direct sinks refuse the table. (The
+    validation scan runs before the commit takes the table lock — rows
+    appended in that window were written under the pre-constraint
+    contract, same as Delta's ADD CONSTRAINT.) Columns a constraint
+    references cannot be dropped or renamed while it exists. Constraints
+    survive overwrites (the overwrite itself is checked first) and DML
+    carry commits; drop via :func:`drop_constraint`."""
+    from quiver_spark.sources import scan, snapshot
 
-    df = _read(spark, table, format)
+    root = snapshot.data_root(table)
+    if os.path.isdir(root) and snapshot.list_files(root, "*.arrow"):
+        raise ValueError(
+            f"{table} holds arrowipc data files: CHECK constraints are "
+            "checked by quiver_spark.sources.write, which writes quiver "
+            "tables only"
+        )
+    df = scan(spark, table)
     # Catalyst bind + SQL CHECK semantics: violations are rows where the
     # predicate IS FALSE (NULL passes)
     try:
@@ -969,28 +974,6 @@ def add_constraint(
             f"constraint expression {expression!r} does not bind against "
             f"the table schema {df.columns}: {e}"
         ) from None
-    # DuckDB bind check on an empty table with the same schema — the
-    # writer evaluates the predicate there, so it must parse in both
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    empty = pa.table(
-        {
-            f.name: pa.array([], type=to_arrow_type(f.dataType))
-            for f in df.schema.fields
-        }
-    )
-    con = duckdb.connect()
-    con.register("_t", empty)
-    try:
-        con.execute(f"SELECT count(*) FROM _t WHERE ({expression}) IS FALSE")
-    except duckdb.Error as e:
-        raise ValueError(
-            f"constraint expression {expression!r} is not portable to the "
-            f"write-side evaluator (DuckDB): {e} — use ANSI SQL the "
-            "constraint docs list"
-        ) from None
-    finally:
-        con.unregister("_t")
     violations = viol_df.count() if validate else None
     if violations:
         raise ValueError(

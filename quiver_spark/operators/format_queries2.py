@@ -761,17 +761,20 @@ GROUP BY n_regionkey
 def quiver_check_constraint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHECK constraints through the driver gate: nation is sink-written,
     ``add_constraint n_nonneg CHECK (n_nationkey >= 0)`` validates the
-    existing rows and commits to the manifest, a VIOLATING append is
-    proven to abort with nothing published (asserted in the fixture —
-    the scan would double rows if the abort leaked), and a valid append
-    then lands. The oracle rebuilds the final table algebraically: a
-    leaked aborted write, a lost constraint commit, or a rejected valid
-    write all hash-fail. Write-side evaluation is DuckDB over each Arrow
-    batch (bind-checked against BOTH engines at add time); the reference
-    format has no constraint layer (/root/reference/src/lib.rs)."""
+    existing rows and commits to the manifest, a VIOLATING append through
+    ``sources.write`` is proven to abort with nothing published (asserted
+    in the fixture — the scan would double rows if the abort leaked), and
+    a valid append through ``sources.write`` then lands. The oracle
+    rebuilds the final table algebraically: a leaked aborted write, a
+    lost constraint commit, or a rejected valid write all hash-fail.
+    ``sources.write`` checks the constraint in the Spark plan of the
+    write (a projection that raises on the first FALSE row), whichever
+    engine writes the files; the reference format has no constraint
+    layer (its ``src/lib.rs``)."""
 
     def build(d):
         from quiver_spark import maintenance as M
+        from quiver_spark.sources import write
 
         n = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
             "n_nationkey", "n_regionkey"
@@ -785,7 +788,7 @@ def quiver_check_constraint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "-(n_nationkey + 1) AS n_nationkey", "n_regionkey"
         )
         try:
-            bad.coalesce(1).write.format("quiver").mode("append").save(d)
+            write(bad.coalesce(1), d, mode="append")
             raise AssertionError(
                 "violating append was accepted — constraint not enforced"
             )
@@ -796,9 +799,9 @@ def quiver_check_constraint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         good = n.filter("n_regionkey >= 2").selectExpr(
             "n_nationkey + 100 AS n_nationkey", "n_regionkey"
         )
-        good.coalesce(1).write.format("quiver").mode("append").save(d)
+        write(good.coalesce(1), d, mode="append")
 
-    d = _marker_dir(spark, sf_dir, "nation-check-constraint", build)
+    d = _marker_dir(spark, sf_dir, "nation-check-constraint-v2", build)
     t = quiver_relation(spark, d)
     return t.groupBy("n_regionkey").agg(
         F.count(F.lit(1)).alias("cnt"),

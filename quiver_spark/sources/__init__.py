@@ -1,5 +1,6 @@
 import os
 
+from quiver_spark.sources import snapshot
 from quiver_spark.sources.arrow_datasource import (  # noqa: F401
     ArrowIpcDataSource,
     register_arrow,
@@ -239,7 +240,7 @@ def try_jvm_scan(spark, path: str, **options):
 #: batch router passes it as ``.partitionBy``). A batch write may also
 #: name SNAPSHOT_OPTS, which the driver-side commit consumes; anything
 #: else — require_not_null, page_stats, default_codec, … — keeps the
-#: Python sink.
+#: Python sink, and a stream naming one runs through ``write`` per batch.
 JVM_WRITE_OPTS = frozenset(
     {"codec", "max_page_size", "max_rows_per_file", "bloom_columns",
      "compress_ratio", "forbidden", "partition_by"}
@@ -262,21 +263,44 @@ def _local_dir(path: str) -> str:
     return path
 
 
-def _jvm_takes(df, path: str, options) -> bool:
+def _constraints(path: str) -> dict[str, str]:
+    """The CHECK constraints ``{name: predicate}`` of the destination's
+    live manifest (one manifest load, cached per manifest stat)."""
+    from quiver_spark.sources.manifest import load_manifest
+
+    man = load_manifest(snapshot.data_root(_local_dir(path)))
+    return dict(man.check_constraints) if man is not None else {}
+
+
+def _checked(df, constraints: dict[str, str]):
+    """``df`` with its first column wrapped in one check of every CHECK
+    constraint: the first row whose predicate IS FALSE raises
+    ``CHECK constraint '<name>' violated: (<expr>)``; NULL passes, as
+    SQL CHECK requires. It is a projection, not a filter, so the
+    optimizer cannot move it below the frame's own filters or into one
+    side of a join and raise on a row that is never written. The
+    ``coalesce`` keeps the column's type and nullability, so the
+    written schema is the frame's."""
+    from pyspark.sql import functions as F
+
+    first = df.columns[0]
+    check = None
+    for name, expr in constraints.items():
+        bad = F.expr(f"({expr}) IS FALSE")
+        err = F.raise_error(f"CHECK constraint '{name}' violated: ({expr})")
+        check = F.when(bad, err) if check is None else check.when(bad, err)
+    col = F.col("`" + first.replace("`", "``") + "`")
+    return df.withColumn(first, F.coalesce(check, col))
+
+
+def _jvm_takes(df, options) -> bool:
     """Can the quiverjvm writer take this write? Every option is in
     JVM_WRITE_OPTS (``write`` drops SNAPSHOT_OPTS first: its driver-side
-    commit serves them), the schema is JVM-encodable, the jar attaches,
-    and the destination's live manifest has no CHECK constraints: only
-    the Python sink evaluates them, and the JVM write builder refuses
-    such a table (one manifest load, cached per manifest stat)."""
+    commit serves them), the schema is JVM-encodable, and the jar
+    attaches."""
     from quiver_spark.jvm import attach_jar, supports_schema
-    from quiver_spark.sources.manifest import load_manifest
-    from quiver_spark.sources.quiver_datasource import _data_root
 
     if not set(options) <= JVM_WRITE_OPTS or not supports_schema(df.schema):
-        return False
-    man = load_manifest(_data_root(_local_dir(path)))
-    if man is not None and man.check_constraints:
         return False
     return attach_jar(df.sparkSession)
 
@@ -288,26 +312,28 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     the engine name it used (``"quiverjvm"`` | ``"quiver"``) so callers
     and tests can pin the routing.
 
-    When ``_jvm_takes`` accepts the schema and the options, the quiverjvm
-    writer (the Java DataSourceV2 bulk writer, sf0.1 ≈0.9× the parquet
-    writer vs the Python sink's ≈1.4×) writes the rows into a hidden
-    ``_temporary/jvm-<uuid>/`` directory, and this process publishes
-    them through ``snapshot.commit`` under the table lock, with the
-    arguments the Python sink's commit passes. The commit is a
-    generation swap when the mode is overwrite and, under the lock, the
-    directory holds anything or the write names any of SNAPSHOT_OPTS
-    (keep_generations, carry_files/carry_src, pointer_store): a failed
-    or self-reading overwrite leaves the old snapshot live. Otherwise it
-    is an append into the live root, so a first write into a new or
-    empty directory makes a flat table. A failed job or a refused commit
-    removes its staging directory and publishes nothing; a killed
-    process leaves it to ``maintenance.vacuum``.
+    The destination's CHECK constraints, if any, are checked in the
+    plan (``_checked``). The quiverjvm writer (the Java DataSourceV2
+    bulk writer, sf0.1 ≈0.9× the parquet writer vs the Python sink's
+    ≈1.4×) takes the write when ``_jvm_takes`` accepts it; the **python
+    "quiver" sink** takes the rest: exotic leaf types (half floats,
+    decimal256, null columns) and options only it implements
+    (require_not_null, page_stats, default_codec, …). ``codec``
+    defaults to lz4 on both.
 
-    The **python "quiver" sink** takes the rest: exotic leaf types (half
-    floats, decimal256, null columns), options only it implements
-    (require_not_null, page_stats, …), and every write into a table
-    with CHECK constraints. It stages and commits through the same
-    ``snapshot.commit``. Both engines default ``codec`` to lz4.
+    Either engine appends the rows into a hidden
+    ``_temporary/<engine>-<uuid>/`` directory, and this process
+    publishes the files through ``snapshot.commit`` under the table
+    lock. The commit is a generation swap when the mode is overwrite
+    and, under the lock, the directory holds anything or the write names
+    any of SNAPSHOT_OPTS (keep_generations, carry_files/carry_src,
+    pointer_store): a failed or self-reading overwrite leaves the old
+    snapshot live. Otherwise it is an append into the live root, so a
+    first write into a new or empty directory makes a flat table. A
+    commit that leaves the table without a data file adds one empty,
+    schema-bearing file. A failed job or a refused commit removes its
+    staging directory and publishes nothing; a killed process leaves it
+    to ``maintenance.vacuum``.
 
     The probe runs BEFORE the job: there is deliberately no silent
     fallback after a started JVM write (a half-finished write must
@@ -324,7 +350,7 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from . import snapshot
+    from .manifest import load_manifest
     from .pointer_store import store_from_option
     from .quiver_datasource import write_placeholder
 
@@ -340,30 +366,37 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
         else list(partition_by or ())
     )
     snap = {k: v for k, v in options.items() if k in SNAPSHOT_OPTS}
-    jvm_opts = {k: v for k, v in options.items() if k not in SNAPSHOT_OPTS}
-    if not _jvm_takes(df, path, jvm_opts):
-        writer = df.write.format("quiver").mode(mode)
+    opts = {k: v for k, v in options.items() if k not in SNAPSHOT_OPTS}
+    constraints = _constraints(path)
+    if constraints:
+        df = _checked(df, constraints)
+    if _jvm_takes(df, opts):
+        engine = "quiverjvm"
+        writer = df.write.format(engine).options(codec="lz4", manifest="false")
+        if cols:
+            writer = writer.partitionBy(*cols)
+    else:
+        engine = "quiver"
+        writer = df.write.format(engine)
         if cols:
             writer = writer.option("partition_by", ",".join(cols))
-        for k, v in options.items():
-            writer = writer.option(k, str(v))
-        writer.save(path)
-        return "quiver"
-    table = _local_dir(path)
-    writer = df.write.format("quiverjvm").mode("append").option("codec", "lz4")
-    if cols:
-        writer = writer.partitionBy(*cols)
-    for k, v in jvm_opts.items():
+    for k, v in opts.items():
         writer = writer.option(k, str(v))
+    table = _local_dir(path)
     stage = os.path.join(
-        table, snapshot.STAGING_DIR, f"jvm-{uuid.uuid4().hex}"
+        table, snapshot.STAGING_DIR, f"{engine}-{uuid.uuid4().hex}"
     )
     try:
-        writer.option("manifest", "false").save(stage)
+        writer.mode("append").save(stage)
         rels = [
             os.path.relpath(f, stage)
             for f in snapshot.list_files(stage, "*.quiver")
         ]
+        if engine == "quiver":
+            # the sink leaves an empty placeholder in an empty stage;
+            # the table's own placeholder rule below decides instead
+            entries = load_manifest(stage).entries
+            rels = [r for r in rels if entries[r].rows]
         snapshot.commit(
             table,
             ("*.quiver",),
@@ -384,31 +417,45 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
         snapshot.sweep_stale_staging(table)
     if not rels:  # published files leave the snapshot non-empty
         write_placeholder(table, to_arrow_schema(df.schema))
-    return "quiverjvm"
+    return engine
+
+
+def _append_batch(path: str, options):
+    """The ``foreachBatch`` function of a routed stream: each micro-batch
+    is one ``write(..., mode="append")``, run once per batch id (the
+    ``_quiver_commits/<batchId>`` marker, ``snapshot.publish_once``)."""
+
+    def run(batch, batch_id):
+        snapshot.publish_once(
+            _local_dir(path),
+            batch_id,
+            lambda: write(batch, path, mode="append", **options),
+        )
+
+    return run
 
 
 def stream_writer(df, path: str, **options):
     """Unified quiver streaming SINK — the write-side twin of ``scan``:
     returns a configured ``DataStreamWriter`` (caller adds trigger +
-    checkpointLocation and ``.start()``s) routed by the same
-    ``_jvm_takes`` rules as ``write`` (a stream only appends):
+    checkpointLocation and ``.start()``s). A stream only appends.
 
-    - **quiverjvm** (round 13): rows never cross the JVM→Python boundary;
-      micro-batches stage under ``_temporary/`` and publish on epoch
-      commit.
-    - **python "quiver" sink** fallback: exotic leaf types, any sink
-      option outside JVM_WRITE_OPTS, or a destination with CHECK
-      constraints (checked when the writer is built).
+    - **quiverjvm** (round 13) when ``_jvm_takes`` accepts the stream
+      and the destination has no CHECK constraints: rows never cross
+      the JVM→Python boundary; micro-batches stage under
+      ``_temporary/`` and publish on epoch commit.
+    - **foreachBatch** otherwise: each micro-batch is one
+      ``write(batch, path, mode="append", **options)``.
 
-    Both engines share the on-disk protocol (same data files, same
-    ``_quiver_commits/<batchId>`` marker log, same CDC-stamped manifest
-    commits). A checkpointed stream can even resume through the OTHER
-    engine: the marker log is the idempotence contract, not the writer
-    identity."""
+    Both keep the same ``_quiver_commits/<batchId>`` marker log, so a
+    checkpointed stream can resume through the other path."""
     register(df.sparkSession)
-    engine = "quiverjvm" if _jvm_takes(df, path, options) else "quiver"
-    writer = df.writeStream.format(engine).option("path", path)
-    for k, v in options.items():
-        writer = writer.option(k, str(v))
-    writer._quiver_engine = engine  # observability: tests pin the routing
-    return writer
+    if not _constraints(path) and _jvm_takes(df, options):
+        writer = df.writeStream.format("quiverjvm").option("path", path)
+        for k, v in options.items():
+            writer = writer.option(k, str(v))
+        writer._quiver_engine = "quiverjvm"
+    else:
+        writer = df.writeStream.foreachBatch(_append_batch(path, options))
+        writer._quiver_engine = "foreachBatch"
+    return writer  # _quiver_engine: observability, tests pin the routing

@@ -384,7 +384,6 @@ class ArrowIpcWriter(QuiverWriter):
 
         for batch in iterator:
             self._check_not_null(batch)
-            self._check_constraints(batch)
             if writer is None or rows >= self.max_rows:
                 roll(batch.schema)
             writer.write_batch(batch)

@@ -137,8 +137,8 @@ class Manifest:
         self.column_defaults: dict[str, object] = dict(
             raw.get("column_defaults", {})
         )
-        #: CHECK constraints ({name: SQL predicate}) enforced by every
-        #: writer on every batch; set by maintenance.add_constraint
+        #: CHECK constraints ({name: SQL predicate}) checked in the plan
+        #: of every sources.write; set by maintenance.add_constraint
         self.check_constraints: dict[str, str] = dict(
             raw.get("check_constraints", {})
         )

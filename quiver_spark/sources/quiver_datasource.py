@@ -1563,6 +1563,11 @@ class QuiverCommit(WriterCommitMessage):
 
 
 class QuiverWriter(DataSourceArrowWriter):
+    """The Python ``"quiver"`` batch sink: tasks stage files under
+    ``_temporary/`` and the driver publishes them through
+    ``snapshot.commit``. ``sources.write`` sends it what the quiverjvm
+    writer cannot take; a table with CHECK constraints is refused."""
+
     #: data-file glob the flat-root sweep owns, sidecars included
     #: (subclasses writing a different format override — the snapshot
     #: commit itself is format-agnostic)
@@ -1634,25 +1639,19 @@ class QuiverWriter(DataSourceArrowWriter):
         self.require_not_null = tuple(
             c.strip() for c in rnn.split(",") if c.strip()
         )
-        # CHECK constraints (Delta analogue): table-level SQL predicates
-        # stored in the manifest by maintenance.add_constraint. Loaded
-        # HERE — writer construction is driver-side, before pickling to
-        # tasks — from the destination's LIVE manifest, so every write
-        # path (batch, append, streaming micro-batch, DML rewrites)
-        # enforces them; evaluated per batch via DuckDB over the Arrow
-        # data (zero-copy). SQL CHECK semantics: NULL passes, FALSE
-        # aborts the task before staging completes — the staged-commit
-        # protocol guarantees nothing partial publishes.
-        self.check_constraints: dict[str, str] = {}
-        if self.path and os.path.isdir(self.path):
-            from .manifest import load_manifest
+        # CHECK constraints are checked in the Spark plan that
+        # quiver_spark.sources.write builds; this sink does not evaluate
+        # them, so it refuses a table whose live manifest has any, as the
+        # quiverjvm write builders do
+        from . import _constraints
 
-            try:
-                man = load_manifest(_data_root(self.path))
-            except (OSError, ValueError):
-                man = None
-            if man is not None:
-                self.check_constraints = dict(man.check_constraints)
+        constraints = _constraints(self.path) if self.path else {}
+        if constraints:
+            raise ValueError(
+                f"{self.path} has CHECK constraints {constraints}, which "
+                "this sink does not evaluate — write through "
+                "quiver_spark.sources.write, which checks them"
+            )
 
     def _split_partitions(self, table):
         """Yield ``(subdir, sub_table)`` per distinct partition-key combo;
@@ -1732,47 +1731,6 @@ class QuiverWriter(DataSourceArrowWriter):
                     "aborts and nothing is published"
                 )
 
-    def _check_constraints(self, batch) -> None:
-        """Enforce the table's CHECK constraints on one Arrow batch —
-        called next to _check_not_null on every write path. Violation =
-        the predicate evaluates to FALSE (NULL passes, standard SQL
-        CHECK). The DuckDB connection is created lazily task-side (the
-        writer pickles BEFORE any write() runs, so the unpicklable
-        connection never travels); registration is zero-copy over the
-        batch's Arrow buffers."""
-        if not self.check_constraints:
-            return
-        import duckdb
-        import pyarrow as pa
-
-        con = getattr(self, "_duck_con", None)
-        if con is None:
-            con = self._duck_con = duckdb.connect()
-        tbl = pa.Table.from_batches([batch])
-        con.register("_quiver_check_batch", tbl)
-        try:
-            for name, expr in self.check_constraints.items():
-                try:
-                    n = con.execute(
-                        f"SELECT count(*) FROM _quiver_check_batch "
-                        f"WHERE ({expr}) IS FALSE"
-                    ).fetchone()[0]
-                except duckdb.Error as e:
-                    raise ValueError(
-                        f"CHECK constraint {name!r} ({expr}) failed to "
-                        f"evaluate against the written schema "
-                        f"{batch.schema.names}: {e} — drop the "
-                        "constraint or fix the write"
-                    ) from None
-                if n:
-                    raise ValueError(
-                        f"CHECK constraint {name!r} violated: ({expr}) "
-                        f"is FALSE for {n} row(s) in this write — the "
-                        "job aborts and nothing is published"
-                    )
-        finally:
-            con.unregister("_quiver_check_batch")
-
     def write(self, iterator) -> QuiverCommit:
         """One task → one or more .quiver files (a file is one row group,
         src/write/writer.rs:107-112; oversized tasks roll to new files;
@@ -1818,7 +1776,6 @@ class QuiverWriter(DataSourceArrowWriter):
 
         for batch in iterator:
             self._check_not_null(batch)
-            self._check_constraints(batch)
             buffer.append(batch)
             rows += batch.num_rows
             if rows >= self.max_rows:
@@ -1887,30 +1844,16 @@ class QuiverStreamWriter(QuiverWriter, DataSourceStreamArrowWriter):
     `_temporary/` root and publishes them on batch commit (the quiver
     analogue of Spark's file-stream sink manifest): a batch's files become
     reader-visible atomically-per-task at commit, an aborted batch's
-    staged output is dropped, and a per-batch commit log
-    (`_quiver_commits/<batchId>`) makes REPLAYED batches idempotent —
-    after a driver failure Spark re-runs the last unacknowledged batch,
-    and without the log its rows would publish twice. The remaining
-    at-least-once window is a crash BETWEEN publish and the marker write,
-    the same commit-point semantics as a manifest-based file sink whose
-    readers don't consult the manifest."""
-
-    COMMIT_LOG = "_quiver_commits"
+    staged output is dropped, and the per-batch marker log
+    (``snapshot.publish_once``) makes REPLAYED batches idempotent."""
 
     def commit(self, messages, batchId) -> None:  # noqa: N803
-        log_dir = os.path.join(self.path, self.COMMIT_LOG)
-        os.makedirs(log_dir, exist_ok=True)
-        marker = os.path.join(log_dir, str(batchId))
-        if os.path.exists(marker):
+        if not snapshot.publish_once(
+            self.path, batchId, lambda: self._publish(messages)
+        ):
             # replayed batch: its files are already visible — drop the
             # re-staged output instead of double-publishing
             QuiverWriter.abort(self, messages)
-            return
-        self._publish(messages)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("ok")
-        os.replace(tmp, marker)
 
     def abort(self, messages, batchId) -> None:  # noqa: N803
         QuiverWriter.abort(self, messages)

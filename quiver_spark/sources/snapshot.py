@@ -8,8 +8,8 @@ on-disk protocol. A table directory holds numbered snapshots
 pointer: a flat table that resolves to itself). Writers stage task
 output under the hidden ``_temporary/`` root; :func:`commit` publishes
 it — data files first, then one atomic metadata publish, the split of
-Delta's log commit. Callers: every JVM write of ``sources.write``
-(its files staged under ``_temporary/jvm-<uuid>/``), the quiver and
+Delta's log commit. Callers: every write of ``sources.write`` (its
+files staged under ``_temporary/<engine>-<uuid>/``), the quiver and
 arrowipc batch and stream sinks (``QuiverWriter._publish``) and
 metadata-only ALTERs (``maintenance._commit_evolution``); clone,
 rollback, retention, vacuum and ``quiver-tools generations`` use the
@@ -47,6 +47,9 @@ CURRENT = "_current"
 #: left behind. vacuum's orphan sweep only ever touches unmarked dirs.
 COMMITTED = "_committed"
 SIDECAR = ".stats.json"
+#: per-table log of published stream batches, one ``<batchId>`` marker
+#: each (the quiverjvm streaming sink writes the same log)
+COMMIT_LOG = "_quiver_commits"
 
 
 def gen_name(number: int) -> str:
@@ -216,6 +219,22 @@ def sweep_stale_staging(
     except OSError:
         pass
     return swept
+
+
+def publish_once(table: str, batch_id, publish: Callable[[], object]) -> bool:
+    """Run ``publish()`` for stream batch ``batch_id`` unless its marker
+    exists, then write the marker; returns whether it ran. A batch Spark
+    replays after a driver failure then publishes once; a crash between
+    publish and marker still repeats it (at-least-once)."""
+    marker = os.path.join(table, COMMIT_LOG, str(batch_id))
+    if os.path.exists(marker):
+        return False
+    publish()
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    with open(marker + ".tmp", "w") as f:
+        f.write("ok")
+    os.replace(marker + ".tmp", marker)
+    return True
 
 
 def _claim(table: str, store: PointerStore) -> str:

@@ -682,8 +682,9 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     Next #2) — routes to the JVM writer when schema+options+mode are
     eligible and to the Python sink otherwise, with identical on-disk
     protocol either way. Pins every routing direction:
-    JVM-eligible, Python-only option, JVM-unsupported schema,
-    generation-layout overwrite (a staged JVM write swapped in by the
+    JVM-eligible, Python-only option (whose first load, staged like
+    the JVM's, makes a flat table), JVM-unsupported schema, overwrite
+    of an existing table (a staged JVM write swapped in by the
     driver-side snapshot commit), generation-layout APPEND (stays JVM,
     resolves the live root), and partition_by fan-out parity on both
     engines."""
@@ -707,15 +708,23 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     assert write(src, d1, mode="overwrite", codec="zstd") == "quiverjvm"
     assert back(d1) == want
 
-    # 2. a Python-only option → Python sink
+    # 2. a Python-only option → Python sink; a first load is flat
     d2 = str(tmp_path / "py")
     assert (
         write(src, d2, mode="overwrite", require_not_null="id") == "quiver"
     )
     assert back(d2) == want
+    assert snapshot.generations(d2) == []
+    # the sink's stage, its manifest and lock file included, is gone
+    # after a published write and after a failed one
+    nulls = spark.range(3).selectExpr("id", "CAST(NULL AS STRING) AS s")
+    with pytest.raises(Exception, match="NOT NULL"):
+        write(nulls, d2, mode="append", require_not_null="s")
+    assert back(d2) == want
+    assert not os.path.exists(os.path.join(d2, snapshot.STAGING_DIR))
 
-    # 3. overwrite of the generation-layout table → staged JVM write and
-    # an atomic generation swap, with or without snapshot options
+    # 3. overwrite of the existing table → staged JVM write and an
+    # atomic generation swap, with or without snapshot options
     assert write(src, d2, mode="overwrite") == "quiverjvm"
     assert back(d2) == want
     assert (

@@ -829,11 +829,17 @@ def test_clone_carries_declared_schema_and_constraints(spark, tmp_path):
     df = spark.read.format("quiver").load(dst)
     assert df.columns == ["k", "name", "v", "grade"]
     assert sorted(map(tuple, df.collect())) == [(1, "a", 1.0, "g")]
-    with pytest.raises(Exception, match="v_pos"):
-        spark.createDataFrame(
-            [(2, "b", -1.0, "x")],
-            "k long, name string, v double, grade string",
-        ).write.format("quiver").mode("append").save(dst)
+    from quiver_spark.sources import write
+
+    with pytest.raises(Exception, match="CHECK constraint 'v_pos'"):
+        write(
+            spark.createDataFrame(
+                [(2, "b", -1.0, "x")],
+                "k long, name string, v double, grade string",
+            ),
+            dst,
+            mode="append",
+        )
     assert spark.read.format("quiver").load(dst).count() == 1
 
 

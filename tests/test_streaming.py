@@ -794,9 +794,10 @@ def test_jvm_streaming_sink_restart_appends_only_delta(spark, tmp_path):
 def test_stream_writer_router(spark, tmp_path):
     """sources.stream_writer — the write-side twin of sources.scan: a
     JVM-encodable schema with allowlisted sink options rides the quiverjvm
-    streaming sink; non-allowlisted options (pointer_store) or exotic leaf
-    types keep the Python sink. Routing never changes what readers see —
-    the routed JVM stream round-trips through BOTH batch readers."""
+    streaming sink; non-allowlisted options (pointer_store), exotic leaf
+    types or CHECK constraints run each micro-batch through the batch
+    router (foreachBatch). Routing never changes what readers see — the
+    routed JVM stream round-trips through BOTH batch readers."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
 
@@ -823,9 +824,9 @@ def test_stream_writer_router(spark, tmp_path):
     assert sorted(map(tuple, spark.read.format("quiver").load(dst).collect())) == want
     assert sorted(map(tuple, spark.read.format("quiverjvm").load(dst).collect())) == want
     assert os.path.isdir(os.path.join(dst, "_quiver_commits"))
-    # a sink option outside the JVM allowlist pins the Python sink
+    # a sink option outside the JVM allowlist goes through sources.write
     w2 = stream_writer(stream_df, str(tmp_path / "dst2"), pointer_store="unlocked")
-    assert w2._quiver_engine == "quiver"
+    assert w2._quiver_engine == "foreachBatch"
 
 
 def test_jvm_stream_sink_concurrent_python_append(spark, tmp_path):
