@@ -378,11 +378,15 @@ def main() -> None:
         proxies["nested_quiverjvm_embeddings"] = (
             lambda: jvm_emb_df.write.format("noop").mode("overwrite").save()
         )
-        proxies["write_quiverjvm_lineitem"] = (
-            lambda: li_df.write.format("quiverjvm")
-            .mode("overwrite")
-            .save(f"{wdir}/qj")
-        )
+        def _write_quiverjvm() -> None:
+            # the format refuses to overwrite a non-empty directory, so
+            # each rep removes the previous one inside the timed call
+            import shutil as _shutil
+
+            _shutil.rmtree(f"{wdir}/qj", ignore_errors=True)
+            li_df.write.format("quiverjvm").mode("overwrite").save(f"{wdir}/qj")
+
+        proxies["write_quiverjvm_lineitem"] = _write_quiverjvm
         # Unified write router (round 15, VERDICT r14 Next #2): the same
         # full-table sink through sources.write — must route this
         # JVM-eligible write to the quiverjvm writer, so its wall should
@@ -396,10 +400,13 @@ def main() -> None:
         proxies["write_unified_lineitem"] = _write_unified
         # Streaming-sink A/B (round 13): the same quiverjvm stream of
         # lineitem drained (availableNow) through Spark's parquet file
-        # sink vs the quiverjvm streaming sink — identical source and
-        # micro-batch machinery on both sides, so the ratio isolates the
-        # SINK (stage+publish+marker+manifest vs _spark_metadata).
+        # sink vs sources.stream_writer (one staged sources.write append
+        # per micro-batch) — identical source and micro-batch machinery
+        # on both sides, so the ratio isolates the SINK
+        # (stage+commit+marker vs _spark_metadata).
         # Fresh dst+checkpoint per rep: stream sinks append.
+        from quiver_spark.sources import stream_writer as _stream_writer
+
         _stream_src_df = spark.readStream.format("quiverjvm").load(
             quiver_dir(spark, sf_dir, "lineitem")
         )
@@ -410,10 +417,14 @@ def main() -> None:
                 import tempfile as _tempfile
 
                 base = _tempfile.mkdtemp(prefix=f"bench_ssink_{fmt}_")
+                if fmt == "parquet":
+                    w = _stream_src_df.writeStream.format(fmt).option(
+                        "path", f"{base}/out"
+                    )
+                else:
+                    w = _stream_writer(_stream_src_df, f"{base}/out")
                 q = (
-                    _stream_src_df.writeStream.format(fmt)
-                    .option("path", f"{base}/out")
-                    .option("checkpointLocation", f"{base}/ck")
+                    w.option("checkpointLocation", f"{base}/ck")
                     .trigger(availableNow=True)
                     .start()
                 )

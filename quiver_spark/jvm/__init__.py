@@ -29,10 +29,12 @@ the table lock — an append into the live root, or an atomic generation
 swap, CHECK-constrained tables included (``sources.write`` checks them
 in the plan; named directly, the write builders refuse such a table).
 Python-only options (require_not_null, page_stats, …) go to the Python
-sink. A write that names ``format("quiverjvm")`` itself bypasses the
-commit: each task publishes its own files, the job commit merges the
-manifest without the lock, and an overwrite truncates the table before
-its tasks run.
+sink. Streams reach it the same way: ``sources.stream_writer`` runs each
+micro-batch through ``sources.write``; the format has no streaming write.
+A write that names ``format("quiverjvm")`` itself commits on its own
+only as a plain append (each task publishes its own files, the job
+commit merges the manifest without the lock); it refuses an overwrite of
+a directory that holds anything, before any task runs.
 
 The jar builds OFFLINE with plain javac against the bundled Spark jars
 (build.sh — no network, no dependency resolution) and is checked in so

@@ -1051,18 +1051,18 @@ GROUP BY o_orderpriority
     tags=("format", "jvm", "streaming", "sink", "agg"),
 )
 def quiverjvm_stream_sink_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured-Streaming WRITE through the JVM streaming sink (round 13
-    — completes the fast-path streaming pair next to quiverjvm_stream_scan's
-    source): the orders table streams quiverjvm→quiverjvm (availableNow),
-    each micro-batch staging under _temporary/ and publishing on epoch
-    commit with the Python sink's exact protocol (_quiver_commits markers,
-    one CDC-stamped manifest commit per batch), and the STREAMED table's
-    JVM batch scan must equal the parquet oracle — the write-path parity
-    contract under the driver's hash. Rows never cross the JVM→Python
-    boundary in either direction."""
+    """Structured-Streaming WRITE through ``sources.stream_writer`` (the
+    streaming pair of quiverjvm_stream_scan's source): the orders table
+    streams out of the quiverjvm source (availableNow), each micro-batch
+    is one ``sources.write`` append — a staged quiverjvm write published
+    by ``snapshot.commit`` under the table lock, with a
+    ``_quiver_commits`` marker per batch — and the STREAMED table's JVM
+    batch scan must equal the parquet oracle (the write-path parity
+    contract)."""
     from quiver_spark.jvm import attach_jar
     from quiver_spark.operators.format_queries import quiver_dir
     from quiver_spark.operators.format_queries2 import _marker_dir
+    from quiver_spark.sources import stream_writer
 
     if not attach_jar(spark):
         raise RuntimeError("quiverjvm jar failed to attach via ADD JAR")
@@ -1071,10 +1071,7 @@ def quiverjvm_stream_sink_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = quiver_dir(spark, sf_dir, "orders")
         with _stream_session(spark, "quiver_qjsink_ckpt_") as (ss, ckpt):
             q = (
-                ss.readStream.format("quiverjvm")
-                .load(src)
-                .writeStream.format("quiverjvm")
-                .option("path", d)
+                stream_writer(ss.readStream.format("quiverjvm").load(src), d)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
@@ -1086,7 +1083,7 @@ def quiverjvm_stream_sink_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "within 300 s — refusing to cache a partial fixture"
                 )
 
-    d = _marker_dir(spark, sf_dir, "orders-jvm-stream-sink", build)
+    d = _marker_dir(spark, sf_dir, "orders-jvm-stream-sink-v2", build)
     return (
         spark.read.format("quiverjvm")
         .load(d)
@@ -1130,21 +1127,21 @@ GROUP BY event_type
     tags=("format", "jvm", "streaming", "watermark", "window", "sink"),
 )
 def quiverjvm_stream_pipeline_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL streaming pipeline on the all-JVM path (round 14, VERDICT r13
-    Next #7): events stream in through the JVM MicroBatchStream source, a
-    17-minute watermark + hourly tumbling window aggregates them
-    (append mode — a window only emits once the watermark passes its
-    end), and the finalized windows stream OUT through the JVM streaming
-    sink with Hive fan-out (`partition_by=event_type` via the
-    sources.stream_writer router), drained availableNow. The landed table
+    """FULL streaming pipeline (round 14, VERDICT r13 Next #7): events
+    stream in through the JVM MicroBatchStream source, a 17-minute
+    watermark + hourly tumbling window aggregates them (append mode — a
+    window only emits once the watermark passes its end), and the
+    finalized windows stream OUT through ``sources.stream_writer`` (one
+    staged quiverjvm append per micro-batch) with Hive fan-out
+    (`partition_by=event_type`), drained availableNow. The landed table
     is then scanned back through the JVM batch reader and summarized per
     event_type against a batch oracle that replays the SAME watermark
     semantics (Spark truncates event-time stats to MILLISECONDS, so the
     oracle's cutoff is epoch_ms(max ts) − delay; a window is emitted iff
     window_end ≤ watermark). One gate exercises: JVM stream source →
     stateful watermarked agg (no-data micro-batch flushes the final
-    watermark) → JVM stream sink → partition fan-out → manifest commit →
-    JVM batch scan.
+    watermark) → per-batch ``sources.write`` → partition fan-out →
+    snapshot commit → JVM batch scan.
 
     Determinism: per-window sums are DECIMAL(18,6) (order-independent)
     and stay decimal in the landed table; the read-back summary sums
@@ -1183,14 +1180,9 @@ def quiverjvm_stream_pipeline_scan(spark: SparkSession, sf_dir: str) -> DataFram
                     "val_sum",
                 )
             )
-            writer = stream_writer(windowed, d, partition_by="event_type")
-            if writer._quiver_engine != "quiverjvm":
-                raise RuntimeError(
-                    "quiverjvm_stream_pipeline_scan: router must pick the JVM "
-                    f"sink, got {writer._quiver_engine}"
-                )
             q = (
-                writer.outputMode("append")
+                stream_writer(windowed, d, partition_by="event_type")
+                .outputMode("append")
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
@@ -1202,7 +1194,7 @@ def quiverjvm_stream_pipeline_scan(spark: SparkSession, sf_dir: str) -> DataFram
                     "within 300 s — refusing to cache a partial fixture"
                 )
 
-    d = _marker_dir(spark, sf_dir, "events-jvm-stream-pipeline", build)
+    d = _marker_dir(spark, sf_dir, "events-jvm-stream-pipeline-v2", build)
     return (
         spark.read.format("quiverjvm")
         .load(d)
@@ -1260,12 +1252,11 @@ WHERE epoch_us(session_end) <= (epoch_ms(mx) - 17 * 60 * 1000) * 1000
     tags=("format", "jvm", "streaming", "session", "watermark", "sink"),
 )
 def quiverjvm_stream_sessions_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming SESSIONIZATION on the all-JVM path (round 14): events
-    stream through the JVM source into a watermarked
-    ``session_window(ts, 30 min)`` per-user aggregate (append mode — a
-    session emits once the watermark passes its end = last event + gap,
-    so no later event can merge into it), land through the JVM streaming
-    sink, and read back through the JVM batch reader as the full
+    """Streaming SESSIONIZATION (round 14): events stream through the JVM
+    source into a watermarked ``session_window(ts, 30 min)`` per-user
+    aggregate (append mode — a session emits once the watermark passes
+    its end = last event + gap, so no later event can merge into it),
+    land through ``sources.stream_writer``, and read back through the JVM batch reader as the full
     per-session table. The DuckDB oracle replays the semantics exactly:
     gaps-and-islands sessionization with a ``>= gap`` break (Spark merges
     only strictly-overlapping session windows, so an event exactly at
@@ -1308,14 +1299,9 @@ def quiverjvm_stream_sessions_scan(spark: SparkSession, sf_dir: str) -> DataFram
                     "val_sum",
                 )
             )
-            writer = stream_writer(sessions, d)
-            if writer._quiver_engine != "quiverjvm":
-                raise RuntimeError(
-                    "quiverjvm_stream_sessions_scan: router must pick the JVM "
-                    f"sink, got {writer._quiver_engine}"
-                )
             q = (
-                writer.outputMode("append")
+                stream_writer(sessions, d)
+                .outputMode("append")
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
@@ -1327,7 +1313,7 @@ def quiverjvm_stream_sessions_scan(spark: SparkSession, sf_dir: str) -> DataFram
                     "within 300 s — refusing to cache a partial fixture"
                 )
 
-    d = _marker_dir(spark, sf_dir, "events-jvm-stream-sessions", build)
+    d = _marker_dir(spark, sf_dir, "events-jvm-stream-sessions-v2", build)
     return (
         spark.read.format("quiverjvm")
         .load(d)

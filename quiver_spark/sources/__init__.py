@@ -234,16 +234,15 @@ def try_jvm_scan(spark, path: str, **options):
         return None
 
 
-#: sink options the JVM writers serve natively
-#: (QuiverJvmBatchWrite.createBatchWriterFactory and the streaming write
-#: read exactly these; ``partition_by`` is the streaming Hive fan-out, the
-#: batch router passes it as ``.partitionBy``). A batch write may also
-#: name SNAPSHOT_OPTS, which the driver-side commit consumes; anything
-#: else — require_not_null, page_stats, default_codec, … — keeps the
-#: Python sink, and a stream naming one runs through ``write`` per batch.
+#: sink options the JVM writer serves natively
+#: (QuiverJvmBatchWrite.createBatchWriterFactory reads exactly these; the
+#: Hive fan-out is ``write``'s own ``partition_by`` parameter). A write
+#: may also name SNAPSHOT_OPTS, which the driver-side commit consumes;
+#: anything else — require_not_null, page_stats, default_codec, … —
+#: keeps the Python sink.
 JVM_WRITE_OPTS = frozenset(
     {"codec", "max_page_size", "max_rows_per_file", "bloom_columns",
-     "compress_ratio", "forbidden", "partition_by"}
+     "compress_ratio", "forbidden"}
 )
 
 #: batch write options served by ``snapshot.commit`` rather than by a
@@ -293,18 +292,6 @@ def _checked(df, constraints: dict[str, str]):
     return df.withColumn(first, F.coalesce(check, col))
 
 
-def _jvm_takes(df, options) -> bool:
-    """Can the quiverjvm writer take this write? Every option is in
-    JVM_WRITE_OPTS (``write`` drops SNAPSHOT_OPTS first: its driver-side
-    commit serves them), the schema is JVM-encodable, and the jar
-    attaches."""
-    from quiver_spark.jvm import attach_jar, supports_schema
-
-    if not set(options) <= JVM_WRITE_OPTS or not supports_schema(df.schema):
-        return False
-    return attach_jar(df.sparkSession)
-
-
 def write(df, path: str, mode: str = "overwrite", partition_by=None,
           **options) -> str:
     """Unified quiver BATCH sink, the write-side twin of ``scan`` and the
@@ -315,7 +302,9 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     The destination's CHECK constraints, if any, are checked in the
     plan (``_checked``). The quiverjvm writer (the Java DataSourceV2
     bulk writer, sf0.1 ≈0.9× the parquet writer vs the Python sink's
-    ≈1.4×) takes the write when ``_jvm_takes`` accepts it; the **python
+    ≈1.4×) takes the write when every option is in JVM_WRITE_OPTS (the
+    SNAPSHOT_OPTS are dropped first: the driver-side commit serves them),
+    the schema is JVM-encodable and the jar attaches; the **python
     "quiver" sink** takes the rest: exotic leaf types (half floats,
     decimal256, null columns) and options only it implements
     (require_not_null, page_stats, default_codec, …). ``codec``
@@ -330,10 +319,10 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     pointer_store): a failed or self-reading overwrite leaves the old
     snapshot live. Otherwise it is an append into the live root, so a
     first write into a new or empty directory makes a flat table. A
-    commit that leaves the table without a data file adds one empty,
-    schema-bearing file. A failed job or a refused commit removes its
-    staging directory and publishes nothing; a killed process leaves it
-    to ``maintenance.vacuum``.
+    commit that leaves the table without a data file adds one empty
+    file holding the data columns (Hive keys ride the path). A failed
+    job or a refused commit removes its staging directory and publishes
+    nothing; a killed process leaves it to ``maintenance.vacuum``.
 
     The probe runs BEFORE the job: there is deliberately no silent
     fallback after a started JVM write (a half-finished write must
@@ -349,6 +338,8 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     import uuid
 
     from pyspark.sql.pandas.types import to_arrow_schema
+
+    from quiver_spark.jvm import attach_jar, supports_schema
 
     from .manifest import load_manifest
     from .pointer_store import store_from_option
@@ -370,7 +361,11 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     constraints = _constraints(path)
     if constraints:
         df = _checked(df, constraints)
-    if _jvm_takes(df, opts):
+    if (
+        set(opts) <= JVM_WRITE_OPTS
+        and supports_schema(df.schema)
+        and attach_jar(df.sparkSession)
+    ):
         engine = "quiverjvm"
         writer = df.write.format(engine).options(codec="lz4", manifest="false")
         if cols:
@@ -416,7 +411,7 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
         # day-old attempts, and the staging root once it is empty
         snapshot.sweep_stale_staging(table)
     if not rels:  # published files leave the snapshot non-empty
-        write_placeholder(table, to_arrow_schema(df.schema))
+        write_placeholder(table, to_arrow_schema(df.drop(*cols).schema))
     return engine
 
 
@@ -440,22 +435,12 @@ def stream_writer(df, path: str, **options):
     returns a configured ``DataStreamWriter`` (caller adds trigger +
     checkpointLocation and ``.start()``s). A stream only appends.
 
-    - **quiverjvm** (round 13) when ``_jvm_takes`` accepts the stream
-      and the destination has no CHECK constraints: rows never cross
-      the JVM→Python boundary; micro-batches stage under
-      ``_temporary/`` and publish on epoch commit.
-    - **foreachBatch** otherwise: each micro-batch is one
-      ``write(batch, path, mode="append", **options)``.
-
-    Both keep the same ``_quiver_commits/<batchId>`` marker log, so a
-    checkpointed stream can resume through the other path."""
+    Each micro-batch is one ``write(batch, path, mode="append",
+    **options)`` (``foreachBatch``), so a stream gets what a batch append
+    gets: the engine ``write`` picks, lz4 by default, the CHECK
+    constraints, and one ``snapshot.commit`` under the table lock.
+    ``partition_by`` is ``write``'s Hive fan-out. The
+    ``_quiver_commits/<batchId>`` marker log publishes a batch Spark
+    replays after a restart once."""
     register(df.sparkSession)
-    if not _constraints(path) and _jvm_takes(df, options):
-        writer = df.writeStream.format("quiverjvm").option("path", path)
-        for k, v in options.items():
-            writer = writer.option(k, str(v))
-        writer._quiver_engine = "quiverjvm"
-    else:
-        writer = df.writeStream.foreachBatch(_append_batch(path, options))
-        writer._quiver_engine = "foreachBatch"
-    return writer  # _quiver_engine: observability, tests pin the routing
+    return df.writeStream.foreachBatch(_append_batch(path, options))

@@ -48,7 +48,8 @@ CURRENT = "_current"
 COMMITTED = "_committed"
 SIDECAR = ".stats.json"
 #: per-table log of published stream batches, one ``<batchId>`` marker
-#: each (the quiverjvm streaming sink writes the same log)
+#: each (``publish_once``; the Python sink's stream writer and
+#: ``sources.stream_writer`` share it)
 COMMIT_LOG = "_quiver_commits"
 
 

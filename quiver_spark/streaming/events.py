@@ -194,14 +194,12 @@ def user_totals_stateful(events: DataFrame, watermark: str = "2 hours") -> DataF
 
 
 def write_quiver_stream(df: DataFrame, out_dir: str, checkpoint: str):
-    """Stream into a quiver directory (append-only files per micro-batch)
-    via the quiver DataSource streaming sink."""
-    from quiver_spark.sources import register
+    """Stream into a quiver directory (one append per micro-batch)
+    through ``sources.stream_writer``."""
+    from quiver_spark.sources import stream_writer
 
-    register(df.sparkSession)
     return (
-        df.writeStream.format("quiver")
-        .option("path", out_dir)
+        stream_writer(df, out_dir)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

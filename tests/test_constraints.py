@@ -4,9 +4,9 @@ Spark plan of every write through ``sources.write``: one projection that
 raises on the first row whose predicate IS FALSE (SQL CHECK semantics:
 NULL passes), so Spark both validates existing rows and checks new ones.
 Whichever engine then writes, nothing publishes on a violation. The
-direct sinks (``format("quiver")``, ``"arrowipc"``, ``"quiverjvm"``,
-batch and stream) refuse a constrained table. Routed streams run each
-micro-batch through ``sources.write``. The reference format has no
+direct sinks (``format("quiver")`` and ``"arrowipc"``, batch and stream,
+and the batch-only ``"quiverjvm"``) refuse a constrained table. Routed
+streams run each micro-batch through ``sources.write``. The reference format has no
 constraint layer; this is the Delta CHECK-constraint analogue on the
 generation protocol."""
 
@@ -200,7 +200,6 @@ def test_constraint_enforced_on_routed_writes(spark, tmp_path):
             ),
             tbl,
         )
-        assert w._quiver_engine == "foreachBatch"
         return (
             w.option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
             .trigger(availableNow=True)
@@ -233,10 +232,11 @@ def test_routed_stream_batch_publishes_once(spark, tmp_path):
 
 
 def test_quiverjvm_writers_refuse_constrained_tables(spark, tmp_path):
-    """The quiverjvm writers do not evaluate CHECK constraints, so their
-    batch and streaming write builders refuse a table whose live
-    manifest has any, before a task runs: a direct violating append
-    cannot land, and the table keeps its rows."""
+    """The quiverjvm writer does not evaluate CHECK constraints, so its
+    batch write builder refuses a table whose live manifest has any,
+    before a task runs, and the format has no streaming write at all: a
+    direct violating append or stream cannot land, and the table keeps
+    its rows."""
     from quiver_spark.jvm import attach_jar
 
     if not attach_jar(spark):
@@ -250,17 +250,17 @@ def test_quiverjvm_writers_refuse_constrained_tables(spark, tmp_path):
             "quiverjvm"
         ).mode("append").save(tbl)
 
-    q = (
-        spark.readStream.format("quiver").load(
-            _source(tmp_path, "src", 3, -3.0)
+    with pytest.raises(Exception, match="does not support streamed writing"):
+        (
+            spark.readStream.format("quiver").load(
+                _source(tmp_path, "src", 3, -3.0)
+            )
+            .writeStream.format("quiverjvm")
+            .option("path", tbl)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-        .writeStream.format("quiverjvm")
-        .option("path", tbl)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _fail_stream(q, "CHECK constraints")
     assert _rows(spark, tbl) == [(1, "a", 10.0)]
 
 

@@ -1651,9 +1651,10 @@ def test_jvm_catalog_table_survives_restart(tmp_path):
 
 
 def test_jvm_catalog_insert_overwrite(spark, tmp_path):
-    """INSERT OVERWRITE on a quiverjvm catalog table: the TRUNCATE
-    capability replaces the table contents atomically (stale data files,
-    sidecars, and the manifest all go); INSERT INTO appends."""
+    """INSERT OVERWRITE on a quiverjvm catalog table is refused before
+    any task runs (the format cannot replace a table atomically; the
+    message names quiver_spark.sources.write) and the table keeps its
+    rows; INSERT INTO appends."""
     _require_jar(spark)
     d = str(tmp_path / "tbl")
     spark.range(10).selectExpr("id", "id * 2 AS v").write.format(
@@ -1662,14 +1663,14 @@ def test_jvm_catalog_insert_overwrite(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS ow_qt")
     spark.sql(f"CREATE TABLE ow_qt USING quiverjvm LOCATION '{d}'")
     assert spark.sql("SELECT COUNT(*) FROM ow_qt").collect()[0][0] == 10
-    spark.sql("INSERT OVERWRITE ow_qt SELECT id, id * 7 AS v FROM range(5)")
+    with pytest.raises(Exception, match="quiver_spark.sources.write"):
+        spark.sql("INSERT OVERWRITE ow_qt SELECT id, id * 7 AS v FROM range(5)")
     rows = sorted(map(tuple, spark.sql("SELECT * FROM ow_qt").collect()))
-    assert rows == [(i, i * 7) for i in range(5)], rows
+    assert rows == [(i, i * 2) for i in range(10)], rows
     spark.sql("INSERT INTO ow_qt VALUES (99, 1)")
-    assert spark.sql("SELECT COUNT(*) FROM ow_qt").collect()[0][0] == 6
-    # the overwritten generation's rows must be gone from disk too
+    assert spark.sql("SELECT COUNT(*) FROM ow_qt").collect()[0][0] == 11
     back = spark.read.format("quiverjvm").load(d)
-    assert back.count() == 6
+    assert back.count() == 11
     spark.sql("DROP TABLE ow_qt")
 
 

@@ -103,15 +103,38 @@ def test_jvm_multi_file_roll_and_pages(spark, tmp_path):
     assert back.agg(F.sum("id")).collect()[0][0] == 50000 * 49999 // 2
 
 
-def test_jvm_overwrite_truncates(spark, tmp_path):
+def _tree_bytes(d):
+    """Every file under ``d``, relative path → contents."""
+    out = {}
+    for root, _, files in os.walk(d):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, d)] = fh.read()
+    return out
+
+
+def test_jvm_overwrite_of_non_empty_dir_is_refused(spark, tmp_path):
+    """The quiverjvm format cannot replace a table atomically, so a
+    direct overwrite of a directory that holds anything is refused at
+    plan time, naming the router, and every file of the table stays
+    byte-identical. An overwrite into a new or an empty directory
+    still writes."""
     _require_jar(spark)
     from quiver_spark.sources import register
 
     register(spark)
     out = str(tmp_path / "ovw")
     spark.range(100).write.format("quiverjvm").mode("overwrite").save(out)
-    spark.range(7).write.format("quiverjvm").mode("overwrite").save(out)
-    assert spark.read.format("quiver").load(out).count() == 7
+    before = _tree_bytes(out)
+    with pytest.raises(Exception, match="quiver_spark.sources.write"):
+        spark.range(7).write.format("quiverjvm").mode("overwrite").save(out)
+    assert _tree_bytes(out) == before
+    assert spark.read.format("quiver").load(out).count() == 100
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    spark.range(7).write.format("quiverjvm").mode("overwrite").save(str(empty))
+    assert spark.read.format("quiver").load(str(empty)).count() == 7
 
 
 def test_ingest_uses_jvm_and_rebuilds_manifest(spark, tmp_path):
@@ -282,13 +305,17 @@ def test_jvm_partitioned_write_hive_fanout(spark, tmp_path):
     assert j.filter(F.col("region") == "asia").count() == 1
     assert J.planFooterReads() == 0
 
-    # overwrite truncates stale partition directories
-    spark.createDataFrame(
-        [(9, "only", 1.0)], "id bigint, region string, v double"
-    ).write.format("quiverjvm").partitionBy("region").mode("overwrite").save(d)
-    after = {os.path.basename(x) for x in glob.glob(d + "/*") if os.path.isdir(x)}
-    assert after == {"region=only"}
-    assert spark.read.format("quiverjvm").load(d).count() == 1
+    # a direct overwrite of the Hive table is refused before any file
+    # changes (sources.write overwrites it as a generation swap)
+    before = _tree_bytes(d)
+    with pytest.raises(Exception, match="quiver_spark.sources.write"):
+        spark.createDataFrame(
+            [(9, "only", 1.0)], "id bigint, region string, v double"
+        ).write.format("quiverjvm").partitionBy("region").mode(
+            "overwrite"
+        ).save(d)
+    assert _tree_bytes(d) == before
+    assert spark.read.format("quiverjvm").load(d).count() == 5
 
 
 def test_ingest_partition_by_routes_jvm(spark, tmp_path):
@@ -586,40 +613,13 @@ def test_jvm_append_stamps_cdc_commit(spark, tmp_path):
     assert got == [(i, i * 2) for i in range(10, 20)]
 
 
-def test_jvm_truncate_seeds_commit_counter(spark, tmp_path):
-    """Overwrite deletes the manifest, but the commit counter must stay
-    monotone across the reset (manifest.py's sequence-reuse rule):
-    restarting at 1 would stamp new files below a standing CDC cursor —
-    the silent-loss direction. The JVM truncate seeds the fresh manifest
-    from the deleted one's counter."""
-    _require_jar(spark)
-    from quiver_spark.sources.manifest import load_manifest
-
-    d = str(tmp_path / "tbl")
-    spark.range(5).selectExpr("id").coalesce(1).write.format(
-        "quiverjvm"
-    ).mode("overwrite").save(d)
-    for lo in (5, 10, 15):
-        spark.range(lo, lo + 5).selectExpr("id").coalesce(1).write.format(
-            "quiverjvm"
-        ).mode("append").save(d)
-    before = load_manifest(d).commit_seq
-    assert before == 4
-    spark.range(100, 105).selectExpr("id").coalesce(1).write.format(
-        "quiverjvm"
-    ).mode("overwrite").save(d)
-    after = load_manifest(d)
-    assert after.commit_seq == before + 1
-    assert {e.commit for e in after.entries.values()} == {before + 1}
-
-
 def test_jvm_append_resolves_live_generation(spark, tmp_path):
     """Appending via quiverjvm into a GENERATION-layout table must land in
     the live gen-NNNNNN/ root — files written at the table root sit where
     every reader's resolution skips, so the pre-fix behavior reported
     success while BOTH engines read none of the appended rows (silent
-    loss). Overwrite of a generation table refuses loudly: an in-place
-    truncate cannot perform the atomic generation swap."""
+    loss). A direct overwrite of the table is refused, naming the
+    router, whose overwrite is the atomic generation swap."""
     _require_jar(spark)
     from quiver_spark.sources import register
 
@@ -639,18 +639,18 @@ def test_jvm_append_resolves_live_generation(spark, tmp_path):
     assert not [
         f for f in os.listdir(d) if f.endswith(".quiver")
     ], "append leaked files into the table root"
-    with pytest.raises(Exception, match="generation"):
+    with pytest.raises(Exception, match="quiver_spark.sources.write"):
         spark.range(5).selectExpr("id").write.format("quiverjvm").mode(
             "overwrite"
         ).save(d)
 
 
 def test_jvm_stream_sink_into_generation_table(spark, tmp_path):
-    """Streaming epochs resolve the LIVE generation at commit time, so a
-    quiverjvm stream can feed a generation-layout table and the rows are
-    visible to both engines."""
+    """A routed stream's micro-batches commit into the LIVE generation
+    (resolved under the table lock), so a stream can feed a
+    generation-layout table and the rows are visible to both engines."""
     _require_jar(spark)
-    from quiver_spark.sources import register
+    from quiver_spark.sources import register, stream_writer
 
     register(spark)
     d = str(tmp_path / "gen")
@@ -662,10 +662,7 @@ def test_jvm_stream_sink_into_generation_table(spark, tmp_path):
         "overwrite"
     ).save(src)
     q = (
-        spark.readStream.format("quiverjvm")
-        .load(src)
-        .writeStream.format("quiverjvm")
-        .option("path", d)
+        stream_writer(spark.readStream.format("quiverjvm").load(src), d)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()

@@ -249,3 +249,26 @@ def test_racing_loads_into_a_new_directory_keep_the_later_commit(
     assert _rows(spark, table) == [(i,) for i in range(10)]
     assert snapshot.generations(table) == ["gen-000001"]
     assert _no_staging(table)
+
+
+def test_empty_first_write_of_a_hive_table_takes_later_appends(
+    spark, tmp_path
+):
+    """A partitioned write with an empty result leaves a placeholder
+    holding the data columns only, as every file of a Hive table does,
+    so a later partitioned append (a routed stream's first batches are
+    often empty) reads back through the JVM reader, whose schema check
+    refuses a table whose files disagree on their columns."""
+    table = str(tmp_path / "t")
+    df = spark.range(0, 20, 1, 2).selectExpr("id", "id % 3 AS k")
+    assert sources.write(df.filter("id < 0"), table, partition_by="k") == (
+        "quiverjvm"
+    )
+    assert sources.write(df, table, mode="append", partition_by="k") == (
+        "quiverjvm"
+    )
+    want = sorted((i, i % 3) for i in range(20))
+    for read in (spark.read.format("quiverjvm").load(table),
+                 sources.scan(spark, table)):
+        assert sorted(map(tuple, read.select("id", "k").collect())) == want
+    assert _no_staging(table)

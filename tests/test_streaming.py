@@ -624,17 +624,19 @@ def test_jvm_stream_nested_and_hive(spark, tmp_path):
 
 
 def test_jvm_streaming_sink_roundtrip_and_commit_protocol(spark, tmp_path):
-    """The JVM streaming SINK (quiverjvm writeStream): micro-batches stage
-    under _temporary/, publish on epoch commit, and leave the Python
-    sink's exact on-disk protocol — per-batch markers in _quiver_commits/,
-    ONE CDC-stamped manifest commit per non-empty epoch, staging pruned.
-    The streamed table reads identically through BOTH engines."""
+    """A routed stream (sources.stream_writer) of a quiverjvm source:
+    each micro-batch stages under _temporary/ and commits through
+    sources.write, leaving the Python sink's on-disk protocol — per-batch
+    markers in _quiver_commits/, ONE CDC-stamped manifest commit per
+    non-empty batch, staging pruned. The streamed table reads identically
+    through BOTH engines."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
 
         _pytest.skip("quiverjvm jar unavailable")
     import os
 
+    from quiver_spark.sources import stream_writer
     from quiver_spark.sources.manifest import load_manifest
 
     src = str(tmp_path / "src")
@@ -643,10 +645,7 @@ def test_jvm_streaming_sink_roundtrip_and_commit_protocol(spark, tmp_path):
         3
     ).write.format("quiverjvm").mode("overwrite").save(src)
     q = (
-        spark.readStream.format("quiverjvm")
-        .load(src)
-        .writeStream.format("quiverjvm")
-        .option("path", dst)
+        stream_writer(spark.readStream.format("quiverjvm").load(src), dst)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -666,67 +665,19 @@ def test_jvm_streaming_sink_roundtrip_and_commit_protocol(spark, tmp_path):
     )
 
 
-def test_jvm_streaming_sink_orphan_gc_needs_one_live_witness(spark, tmp_path):
-    """Sibling staging-tree GC (age-gated reclaim of crashed queries'
-    _temporary/jvmstream-* roots): a tree is LIVE when ANY mtime in it is
-    newer than the 24h cutoff — including a file deep in a partition
-    subdir while the root looks idle (ADVICE r13) — and the walk
-    short-circuits on the first live witness instead of statting every
-    file (ADVICE r14). A tree whose every mtime is stale is deleted."""
-    if not _jvm_stream_ready(spark):
-        import pytest as _pytest
-
-        _pytest.skip("quiverjvm jar unavailable")
-    import os
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    spark.range(10).selectExpr("id").write.format("quiverjvm").mode(
-        "overwrite"
-    ).save(src)
-    old = 1_000_000_000  # 2001 — far past any cutoff
-    stale = os.path.join(dst, "_temporary", "jvmstream-stale0", "part=1")
-    live = os.path.join(dst, "_temporary", "jvmstream-live00", "part=1")
-    for root in (stale, live):
-        os.makedirs(root)
-        with open(os.path.join(root, "x.quiver"), "w") as f:
-            f.write("staged")
-    for p in (
-        stale,
-        os.path.dirname(stale),
-        os.path.join(stale, "x.quiver"),
-        live,
-        os.path.dirname(live),
-    ):
-        os.utime(p, (old, old))
-    # the live tree's only fresh mtime is the FILE inside the subdir
-    # (x.quiver under live keeps its just-created mtime)
-    q = (
-        spark.readStream.format("quiverjvm")
-        .load(src)
-        .writeStream.format("quiverjvm")
-        .option("path", dst)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    tmpdir = os.path.join(dst, "_temporary")
-    assert not os.path.exists(os.path.join(tmpdir, "jvmstream-stale0"))
-    assert os.path.exists(os.path.join(live, "x.quiver"))
-
-
 def test_jvm_streaming_sink_replay_marker_drops_batch(spark, tmp_path):
-    """Idempotent replay: a batch whose _quiver_commits marker already
-    exists must DROP its re-staged output instead of double-publishing
-    (the Python sink's recovery contract, shared log layout). Pre-seeding
-    marker 0 simulates the replayed epoch."""
+    """Idempotent replay: a routed stream's batch whose _quiver_commits
+    marker already exists must not publish again (the Python sink's
+    recovery contract, shared log layout). Pre-seeding marker 0
+    simulates the replayed batch."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
 
         _pytest.skip("quiverjvm jar unavailable")
     import glob
     import os
+
+    from quiver_spark.sources import stream_writer
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
@@ -737,28 +688,27 @@ def test_jvm_streaming_sink_replay_marker_drops_batch(spark, tmp_path):
     with open(os.path.join(dst, "_quiver_commits", "0"), "w") as f:
         f.write("ok")
     q = (
-        spark.readStream.format("quiverjvm")
-        .load(src)
-        .writeStream.format("quiverjvm")
-        .option("path", dst)
+        stream_writer(spark.readStream.format("quiverjvm").load(src), dst)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    assert glob.glob(os.path.join(dst, "*.quiver")) == []
+    assert glob.glob(os.path.join(dst, "**", "*.quiver"), recursive=True) == []
 
 
 def test_jvm_streaming_sink_restart_appends_only_delta(spark, tmp_path):
-    """Checkpointed restart of a quiverjvm->quiverjvm stream delivers only
-    the NEW source commit (batch 1), never re-publishing batch 0 — and
-    each batch lands as its own CDC commit in the sink's manifest."""
+    """Checkpointed restart of a routed stream from a quiverjvm source
+    delivers only the NEW source commit (batch 1), never re-publishing
+    batch 0 — and each batch lands as its own CDC commit in the sink's
+    manifest."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
 
         _pytest.skip("quiverjvm jar unavailable")
     import os
 
+    from quiver_spark.sources import stream_writer
     from quiver_spark.sources.manifest import load_manifest
 
     src = str(tmp_path / "src")
@@ -767,10 +717,7 @@ def test_jvm_streaming_sink_restart_appends_only_delta(spark, tmp_path):
 
     def run_once():
         q = (
-            spark.readStream.format("quiverjvm")
-            .load(src)
-            .writeStream.format("quiverjvm")
-            .option("path", dst)
+            stream_writer(spark.readStream.format("quiverjvm").load(src), dst)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -792,12 +739,152 @@ def test_jvm_streaming_sink_restart_appends_only_delta(spark, tmp_path):
 
 
 def test_stream_writer_router(spark, tmp_path):
-    """sources.stream_writer — the write-side twin of sources.scan: a
-    JVM-encodable schema with allowlisted sink options rides the quiverjvm
-    streaming sink; non-allowlisted options (pointer_store), exotic leaf
-    types or CHECK constraints run each micro-batch through the batch
-    router (foreachBatch). Routing never changes what readers see — the
-    routed JVM stream round-trips through BOTH batch readers."""
+    """sources.stream_writer has one path: every micro-batch is one
+    sources.write append, so the batch router picks each batch's engine
+    — quiverjvm for a JVM-encodable schema with JVM options, the Python
+    sink for a stream naming a Python-only option (require_not_null).
+    Routing never changes what readers see: both streams round-trip
+    through BOTH batch readers."""
+    if not _jvm_stream_ready(spark):
+        import pytest as _pytest
+
+        _pytest.skip("quiverjvm jar unavailable")
+    import os
+
+    from quiver_spark import sources
+    from quiver_spark.sources import stream_writer
+
+    engines: list[str] = []
+    real_write = sources.write
+
+    def spy(*args, **kwargs):
+        engines.append(real_write(*args, **kwargs))
+        return engines[-1]
+
+    src = str(tmp_path / "src")
+    spark.range(25).selectExpr("id", "concat('r', id) AS s").write.format(
+        "quiverjvm"
+    ).mode("overwrite").save(src)
+    stream_df = spark.readStream.format("quiverjvm").load(src)
+    want = sorted(map(tuple, spark.read.format("quiverjvm").load(src).collect()))
+    for name, opts, engine in (
+        ("dst", {}, "quiverjvm"),
+        ("dst2", {"require_not_null": "id"}, "quiver"),
+    ):
+        dst = str(tmp_path / name)
+        engines.clear()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(sources, "write", spy)
+            q = (
+                stream_writer(stream_df, dst, **opts)
+                .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+        assert engines == [engine], (name, engines)
+        for fmt in ("quiver", "quiverjvm"):
+            got = sorted(map(tuple, spark.read.format(fmt).load(dst).collect()))
+            assert got == want, (name, fmt)
+        assert os.listdir(os.path.join(dst, "_quiver_commits")) == ["0"]
+
+
+def test_stream_writer_batches_store_lz4_and_commit_once(
+    spark, tmp_path, monkeypatch
+):
+    """A JVM-eligible routed stream naming no codec stores only lz4
+    blocks, as a batch write through sources.write does, and each
+    micro-batch is one sources.write call that returns "quiverjvm" and
+    one snapshot.commit under the table lock."""
+    if not _jvm_stream_ready(spark):
+        import pytest as _pytest
+
+        _pytest.skip("quiverjvm jar unavailable")
+    from quiver_spark import sources
+    from quiver_spark.format.stat import stat_file
+    from quiver_spark.sources import snapshot, stream_writer
+
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    rows = spark.range(0, 20000, 1, 1).selectExpr(
+        "id", "sha2(CAST(id AS STRING), 256) AS h"
+    )
+    rows.filter("id < 10000").write.format("quiverjvm").mode(
+        "overwrite"
+    ).save(src)
+    rows.filter("id >= 10000").write.format("quiverjvm").mode(
+        "append"
+    ).save(src)
+    writes: list[str] = []
+    commits: list[str] = []
+    real_write, real_commit = sources.write, snapshot.commit
+
+    def write(*args, **kwargs):
+        writes.append(real_write(*args, **kwargs))
+        return writes[-1]
+
+    def commit(table, *args, **kwargs):
+        commits.append(table)
+        return real_commit(table, *args, **kwargs)
+
+    monkeypatch.setattr(sources, "write", write)
+    monkeypatch.setattr(snapshot, "commit", commit)
+    q = (
+        stream_writer(
+            spark.readStream.format("quiverjvm")
+            .option("max_files_per_trigger", "1")
+            .load(src),
+            dst,
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    batches = os.listdir(os.path.join(dst, snapshot.COMMIT_LOG))
+    assert sorted(batches) == ["0", "1"]
+    assert writes == ["quiverjvm", "quiverjvm"]
+    assert commits == [dst, dst]
+    codecs = {
+        p.codec
+        for f in snapshot.list_files(snapshot.data_root(dst), "*.quiver")
+        for pages in stat_file(f).values()
+        for p in pages
+    }
+    assert codecs == {"lz4"}
+    assert sources.scan(spark, dst).count() == 20000
+
+
+def test_quiverjvm_format_has_no_stream_write(spark, tmp_path):
+    """``writeStream.format("quiverjvm")`` fails at start() — the format
+    has no streaming write; streams go through sources.stream_writer —
+    and leaves the destination empty."""
+    if not _jvm_stream_ready(spark):
+        import pytest as _pytest
+
+        _pytest.skip("quiverjvm jar unavailable")
+    src = str(tmp_path / "src")
+    dst = tmp_path / "dst"
+    dst.mkdir()
+    spark.range(10).write.format("quiverjvm").mode("overwrite").save(src)
+    with pytest.raises(Exception, match="does not support streamed writing"):
+        (
+            spark.readStream.format("quiverjvm")
+            .load(src)
+            .writeStream.format("quiverjvm")
+            .option("path", str(dst))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+    assert os.listdir(dst) == []
+
+
+def test_jvm_stream_sink_concurrent_python_append(spark, tmp_path):
+    """A Python-sink batch APPEND racing a routed stream's micro-batch
+    commits on the same table: both commit under the table lock, so
+    every row of BOTH writers is readable afterwards through BOTH
+    engines."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
 
@@ -805,42 +892,6 @@ def test_stream_writer_router(spark, tmp_path):
     import os
 
     from quiver_spark.sources import stream_writer
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    spark.range(25).selectExpr("id", "concat('r', id) AS s").write.format(
-        "quiverjvm"
-    ).mode("overwrite").save(src)
-    stream_df = spark.readStream.format("quiverjvm").load(src)
-    w = stream_writer(stream_df, dst)
-    assert w._quiver_engine == "quiverjvm"
-    q = (
-        w.option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    want = sorted(map(tuple, spark.read.format("quiverjvm").load(src).collect()))
-    assert sorted(map(tuple, spark.read.format("quiver").load(dst).collect())) == want
-    assert sorted(map(tuple, spark.read.format("quiverjvm").load(dst).collect())) == want
-    assert os.path.isdir(os.path.join(dst, "_quiver_commits"))
-    # a sink option outside the JVM allowlist goes through sources.write
-    w2 = stream_writer(stream_df, str(tmp_path / "dst2"), pointer_store="unlocked")
-    assert w2._quiver_engine == "foreachBatch"
-
-
-def test_jvm_stream_sink_concurrent_python_append(spark, tmp_path):
-    """A Python-sink batch APPEND racing the JVM streaming sink's epoch
-    commits on the same table: the manifest merge is lock-free on the JVM
-    side (documented race — a losing merge costs manifest ENTRIES, never
-    FILES: absent entries plan via their own footers), so the contract to
-    pin is that every row of BOTH writers is readable afterwards through
-    BOTH engines."""
-    if not _jvm_stream_ready(spark):
-        import pytest as _pytest
-
-        _pytest.skip("quiverjvm jar unavailable")
-    import os
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
@@ -852,11 +903,12 @@ def test_jvm_stream_sink_concurrent_python_append(spark, tmp_path):
             "quiverjvm"
         ).mode("append").save(src)
     q = (
-        spark.readStream.format("quiverjvm")
-        .option("max_files_per_trigger", "1")
-        .load(src)
-        .writeStream.format("quiverjvm")
-        .option("path", dst)
+        stream_writer(
+            spark.readStream.format("quiverjvm")
+            .option("max_files_per_trigger", "1")
+            .load(src),
+            dst,
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -888,17 +940,17 @@ def test_jvm_stream_sink_concurrent_python_append(spark, tmp_path):
 
 
 def test_jvm_streaming_sink_partition_by_option(spark, tmp_path):
-    """Hive fan-out in the JVM STREAMING sink via the `partition_by`
-    option — Spark's V2 streaming path silently DROPS
-    DataStreamWriter.partitionBy (the transforms never reach the table),
-    so the option is the supported spelling. Epochs land col=value
-    layouts; both engines read the streamed table; partition filters
-    prune."""
+    """Hive fan-out of a routed stream: stream_writer's `partition_by`
+    reaches sources.write's own parameter per micro-batch. Batches land
+    col=value layouts; both engines read the streamed table; partition
+    filters prune."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
 
         _pytest.skip("quiverjvm jar unavailable")
     import os
+
+    from quiver_spark.sources import stream_writer
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
@@ -906,11 +958,11 @@ def test_jvm_streaming_sink_partition_by_option(spark, tmp_path):
         "quiverjvm"
     ).mode("overwrite").save(src)
     q = (
-        spark.readStream.format("quiverjvm")
-        .load(src)
-        .writeStream.format("quiverjvm")
-        .option("path", dst)
-        .option("partition_by", "bucket")
+        stream_writer(
+            spark.readStream.format("quiverjvm").load(src),
+            dst,
+            partition_by="bucket",
+        )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -1055,17 +1107,21 @@ def test_jvm_stream_stream_join_matches_batch(spark, tmp_path):
 
 def test_jvm_stream_pipeline_watermark_restart(spark, tmp_path):
     """Round 14 (VERDICT r13 Next #7): checkpointed RESTART of the full
-    all-JVM pipeline — JVM stream source → watermarked hourly window agg
-    (append mode) → JVM streaming sink. The first drain closes only the
+    pipeline — JVM stream source → watermarked hourly window agg
+    (append mode) → routed stream sink. The first drain closes only the
     windows behind the watermark; a second source commit straddles a
     window boundary, and the restarted query must (a) restore the open
     window's state from the checkpoint (its count spans BOTH commits),
     (b) never re-emit an already-published window (append-only sink ⇒ a
-    re-emission would duplicate keys), (c) leave the tail window open."""
+    re-emission would duplicate keys), (c) leave the tail window open.
+    The sink is sources.stream_writer: one sources.write append per
+    micro-batch."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
 
         _pytest.skip("quiverjvm jar unavailable")
+    from quiver_spark.sources import stream_writer
+
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     ckpt = str(tmp_path / "ckpt")
@@ -1095,8 +1151,7 @@ def test_jvm_stream_pipeline_watermark_restart(spark, tmp_path):
             .select(F.col("win.start").alias("ws"), "cnt")
         )
         q = (
-            windowed.writeStream.format("quiverjvm")
-            .option("path", dst)
+            stream_writer(windowed, dst)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
             .trigger(availableNow=True)
