@@ -41,6 +41,7 @@ def main() -> None:
         .getOrCreate()
     )
     from quiver_spark import enable, maintenance
+    from quiver_spark.sources import write
 
     enable(spark)
 
@@ -50,21 +51,15 @@ def main() -> None:
     )
 
     # --- producer: baseline snapshot -------------------------------
-    docs.filter("doc_id % 10 < 6").write.format("quiver").mode(
-        "overwrite"
-    ).save(table)
+    write(docs.filter("doc_id % 10 < 6"), table)
     cursor = maintenance.current_commit(table)
     t_baseline = time.time()
     print(f"baseline landed: commit {cursor}")
 
     # --- consumer records its cursor; producer keeps appending -----
     time.sleep(1.1)  # commit times are whole seconds
-    docs.filter("doc_id % 10 in (6, 7)").write.format("quiver").mode(
-        "append"
-    ).save(table)
-    docs.filter("doc_id % 10 in (8, 9)").write.format("quiver").mode(
-        "append"
-    ).save(table)
+    write(docs.filter("doc_id % 10 in (6, 7)"), table, mode="append")
+    write(docs.filter("doc_id % 10 in (8, 9)"), table, mode="append")
     print(f"two appends landed: commit {maintenance.current_commit(table)}")
 
     # --- incremental batch read: only the two appends --------------

@@ -21,6 +21,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 import quiver_spark
+from quiver_spark.sources import write
 
 
 def main() -> None:
@@ -45,7 +46,9 @@ def main() -> None:
             "category"
         ),                                             # -> dict
     )
-    df.write.format("quiver").mode("overwrite").save(f"{out}/demo")
+    # keep_generations makes this load generation 1, so the overwrite
+    # below can time-travel back to it
+    write(df, f"{out}/demo", keep_generations="2")
     print(f"wrote {df.count()} rows to {out}/demo")
 
     # --- read: DataFrame form --------------------------------------------
@@ -57,9 +60,7 @@ def main() -> None:
 
     # --- overwrite: atomic generation swap + time travel -----------------
     # keep_generations retains the previous snapshot; version reads it
-    df.limit(10).write.format("quiver").option(
-        "keep_generations", "2"
-    ).mode("overwrite").save(f"{out}/demo")
+    write(df.limit(10), f"{out}/demo", keep_generations="2")
     print(
         "after overwrite:",
         spark.read.format("quiver").load(f"{out}/demo").count(),
@@ -68,7 +69,7 @@ def main() -> None:
         "rows",
     )
     # restore the full demo table for the sections below
-    back.write.format("quiver").mode("overwrite").save(f"{out}/demo")
+    write(back, f"{out}/demo")
     back = spark.read.format("quiver").load(f"{out}/demo")
 
     # --- read: narrow projection -----------------------------------------

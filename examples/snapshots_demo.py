@@ -34,7 +34,7 @@ def main() -> None:
         expire_generations,
         rollback_generation,
     )
-    from quiver_spark.sources import register
+    from quiver_spark.sources import register, write
 
     register(spark)
     tbl = os.path.join(tempfile.mkdtemp(prefix="quiver_demo_"), "events")
@@ -43,13 +43,9 @@ def main() -> None:
     # Each overwrite publishes into gen-NNNNNN/ and atomically re-points
     # `_current`; keep_generations=3 retains the two previous snapshots.
     for day, n in (("day1", 100), ("day2", 200), ("day3", 300)):
-        (
-            spark.range(n)
-            .selectExpr("id", f"'{day}' AS batch")
-            .write.format("quiver")
-            .option("keep_generations", "3")
-            .mode("overwrite")
-            .save(tbl)
+        write(
+            spark.range(n).selectExpr("id", f"'{day}' AS batch"), tbl,
+            keep_generations="3",
         )
     live = spark.read.format("quiver").load(tbl)
     print("live rows:", live.count(), "| generations:",

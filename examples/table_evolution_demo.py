@@ -47,9 +47,10 @@ def main() -> None:
     tbl = os.path.join(tempfile.mkdtemp(prefix="quiver_evo_"), "nation")
 
     # 1. land + evolve (each ALTER is a ~ms hard-link generation commit)
-    spark.read.parquet(f"{sf_dir}/nation.parquet").write.format(
-        "quiver"
-    ).option("keep_generations", "5").mode("overwrite").save(tbl)
+    write(
+        spark.read.parquet(f"{sf_dir}/nation.parquet"), tbl,
+        keep_generations="5",
+    )
     M.rename_column(tbl, "n_name", "nation_name")
     M.add_column(tbl, "quality", "double", default=1.0)
     print("schema after ALTERs:")

@@ -23,7 +23,9 @@ def enable(spark):
     runtime-settable confs (UTC, AQE, Arrow, Python filter pushdown) and
     register the "quiver" DataSource, shipping the package to executors.
     After this, ``spark.read.format("quiver")`` / ``df.write.format("quiver")``
-    work exactly as on a session built by ``quiver_spark.session.get_spark``.
+    work exactly as on a session built by ``quiver_spark.session.get_spark``;
+    ``quiver_spark.sources.write`` / ``stream_writer`` write through the
+    quiverjvm writer, attaching its jar to the session on first use.
 
     Caveat for STREAMING reads on an externally-built session: Spark's
     streaming-source runner worker does not receive addPyFile includes, so

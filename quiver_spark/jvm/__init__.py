@@ -22,19 +22,20 @@ time travel (``version``), CDC (``changes_since``), ``files`` subsets and
 ``merge_schemas``, with manifest planning and zone-map + bloom pruning;
 its guards refuse what it cannot read (half floats, decimal256, …) and
 ``sources.scan`` then falls back to the Python reader. The JVM writer
-takes every batch write ``sources.write`` routes to it: the job writes
-files and sidecars into a staging directory (``_temporary/jvm-<uuid>/``),
-and ``sources.write`` publishes them through ``snapshot.commit`` under
-the table lock — an append into the live root, or an atomic generation
-swap, CHECK-constrained tables included (``sources.write`` checks them
-in the plan; named directly, the write builders refuse such a table).
-Python-only options (require_not_null, page_stats, …) go to the Python
-sink. Streams reach it the same way: ``sources.stream_writer`` runs each
-micro-batch through ``sources.write``; the format has no streaming write.
-A write that names ``format("quiverjvm")`` itself commits on its own
-only as a plain append (each task publishes its own files, the job
-commit merges the manifest without the lock); it refuses an overwrite of
-a directory that holds anything, before any task runs.
+takes every batch write ``sources.write`` makes: the job writes files
+and sidecars into a staging directory (``_temporary/jvm-<uuid>/``), and
+``sources.write`` publishes them through ``snapshot.commit`` under the
+table lock — an append into the live root, or an atomic generation
+swap. ``sources.write`` checks CHECK constraints and ``require_not_null``
+in the plan (named directly, the write builders refuse a CHECK-
+constrained table) and refuses, before any job, an option or a column
+type this writer does not take. Streams reach it the same way:
+``sources.stream_writer`` runs each micro-batch through
+``sources.write``; the format has no streaming write. A write that names
+``format("quiverjvm")`` itself commits on its own only as a plain append
+(each task publishes its own files, the job commit merges the manifest
+without the lock); it refuses an overwrite of a directory that holds
+anything, before any task runs.
 
 The jar builds OFFLINE with plain javac against the bundled Spark jars
 (build.sh — no network, no dependency resolution) and is checked in so
@@ -67,7 +68,8 @@ def ensure_jar(build: bool = True) -> str | None:
     """Return the jar path, building it with javac when missing.
 
     Returns None when the jar is absent and cannot be built (no javac in
-    the environment) — callers fall back to the Python sink.
+    the environment); ``sources.write`` then refuses to write, and
+    ``sources.scan`` reads through the Python reader.
     """
     if os.path.exists(JAR_PATH):
         return JAR_PATH
@@ -177,8 +179,8 @@ def attach_jar(spark) -> bool:
     session's shared-state jar classloader, which DataSourceV2 lookup
     consults — so even driver-owned plain sessions (the correctness gate)
     can use the JVM fast path. Idempotent; resolution is verified, never
-    assumed, and failure degrades to False so callers fall back to the
-    Python engine. A verified success is remembered per session (the
+    assumed, and failure degrades to False (``sources.scan`` then reads
+    through the Python reader; ``sources.write`` raises). A verified success is remembered per session (the
     lookup is a py4j round trip on every scan and write); a failure is
     not, so a later call probes again."""
     if spark in _ATTACHED:

@@ -1368,22 +1368,19 @@ def ingest(
 ) -> dict:
     """One-call bulk ingest of a DataFrame into a quiver table, durable AND
     queryable with O(1) scan planning when it returns: an overwrite
-    through :func:`quiver_spark.sources.write`, which picks the engine.
-
-    That is the quiverjvm writer whenever its guards accept the schema
-    (rows never cross the JVM→Python boundary — measured 0.69x parquet
-    wall at sf0.1 vs ~2.8x for the Python sink, BASELINE.md round-10
-    ingest table). Its tasks write per-file stats sidecars (zone maps,
-    optional blooms, CRCs) and the driver's commit builds the manifest
-    from them, so the first scan plans from ONE metadata read. Into a
-    new or empty directory the load makes a flat table; re-ingesting
-    into an existing table is an atomic generation swap, on either
-    engine. ``partition_by`` fans rows into Hive ``col=value``
-    subdirectories on either engine (the input is repartitioned by the
-    keys first so per-key writer buffers stay bounded). ``mode`` is
-    always overwrite — ingest is a load, not an append (use
-    ``sources.write(..., mode="append")`` for increments). ``engine`` in
-    the result is ``"jvm"`` or ``"python"``."""
+    through :func:`quiver_spark.sources.write`, so the quiverjvm writer
+    writes it (rows never cross the JVM→Python boundary — measured 0.69x
+    parquet wall at sf0.1 vs ~2.8x for the Python sink, BASELINE.md
+    round-10 ingest table). Its tasks write per-file stats sidecars
+    (zone maps, optional blooms, CRCs) and the driver's commit builds the
+    manifest from them, so the first scan plans from ONE metadata read.
+    Into a new or empty directory the load makes a flat table;
+    re-ingesting into an existing table is an atomic generation swap.
+    ``partition_by`` fans rows into Hive ``col=value`` subdirectories
+    (the input is repartitioned by the keys first so per-key writer
+    buffers stay bounded). ``mode`` is always overwrite — ingest is a
+    load, not an append (use ``sources.write(..., mode="append")`` for
+    increments). ``engine`` in the result is ``"jvm"``."""
     from quiver_spark.sources import write
 
     parts = (
@@ -1393,14 +1390,14 @@ def ingest(
     )
     if parts:
         df = df.repartition(*parts)
-    engine = write(
+    write(
         df, dst_dir, partition_by=parts, codec=codec,
         max_rows_per_file=max(max_rows_per_file, 1),
     )
     files, rows = _dir_stats(dst_dir)
     return {
         "dst": dst_dir,
-        "engine": "jvm" if engine == "quiverjvm" else "python",
+        "engine": "jvm",
         "files": files,
         "rows": rows,
     }

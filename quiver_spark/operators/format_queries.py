@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from quiver_spark.functions import dec, dsum, revenue, sql_dsum, SQL_REVENUE
 from quiver_spark.registry import register
 from quiver_spark.sources import register as register_format
-from quiver_spark.sources import scan
+from quiver_spark.sources import scan, write
 from quiver_spark.tables import maybe_broadcast
 
 
@@ -435,15 +435,12 @@ def partitioned_documents_dir(spark: SparkSession, sf_dir: str) -> str:
     (`lang=<v>/part-*.quiver`); returns the directory."""
     register_format(spark)
     tag = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(CACHE_ROOT, tag, "documents-bylang")
+    d = os.path.join(CACHE_ROOT, tag, "documents-bylang-v2")
     marker = os.path.join(d, "_done")
     if not os.path.exists(marker):
-        (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .write.format("quiver")
-            .option("partition_by", "lang")
-            .mode("overwrite")
-            .save(d)
+        write(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"), d,
+            partition_by="lang",
         )
         with open(marker, "w") as f:
             f.write("ok")
@@ -1106,13 +1103,13 @@ def quiver_scan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _nation_generations_dir(spark: SparkSession, sf_dir: str) -> str:
-    """nation written TWICE through the overwrite sink with retention:
+    """nation written TWICE through ``sources.write`` with retention:
     generation 1 holds only the nations of regions 0-1, generation 2 holds
     all 25 — the fixture for the time-travel gate query. Built once per sf
     behind a marker; keep_generations=3 so generation 1 stays retained."""
     register_format(spark)
     tag = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(CACHE_ROOT, tag, "nation-generations")
+    d = os.path.join(CACHE_ROOT, tag, "nation-generations-v2")
     marker = os.path.join(d, "_done")
     if not os.path.exists(marker):
         import shutil
@@ -1124,13 +1121,7 @@ def _nation_generations_dir(spark: SparkSession, sf_dir: str) -> str:
         shutil.rmtree(d, ignore_errors=True)
         full = spark.read.parquet(f"{sf_dir}/nation.parquet")
         for df in (full.filter("n_regionkey < 2"), full):
-            (
-                df.coalesce(1)
-                .write.format("quiver")
-                .option("keep_generations", "3")
-                .mode("overwrite")
-                .save(d)
-            )
+            write(df.coalesce(1), d, keep_generations="3")
         with open(marker, "w") as f:
             f.write("ok")
     return d
@@ -1174,7 +1165,7 @@ def _supplier_rollback_dir(spark: SparkSession, sf_dir: str) -> str:
     snapshot is the subset again. Built once per sf behind a marker."""
     register_format(spark)
     tag = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(CACHE_ROOT, tag, "supplier-rollback")
+    d = os.path.join(CACHE_ROOT, tag, "supplier-rollback-v2")
     marker = os.path.join(d, "_done")
     if not os.path.exists(marker):
         import shutil
@@ -1185,13 +1176,7 @@ def _supplier_rollback_dir(spark: SparkSession, sf_dir: str) -> str:
         shutil.rmtree(d, ignore_errors=True)
         full = spark.read.parquet(f"{sf_dir}/supplier.parquet")
         for df in (full.filter("s_nationkey < 10"), full):
-            (
-                df.coalesce(1)
-                .write.format("quiver")
-                .option("keep_generations", "3")
-                .mode("overwrite")
-                .save(d)
-            )
+            write(df.coalesce(1), d, keep_generations="3")
         res = rollback_generation(d, 1)
         assert res["rolled_back_to"] == "gen-000001", res
         with open(marker, "w") as f:

@@ -3,9 +3,10 @@ scans, schema-evolution merge reads, and manifest rebuild — each routed
 through the driver's correctness gate so the new planning surface has
 oracle-checked rows, not just unit tests.
 
-The fixtures write through the SINK (so a commit-time manifest exists) or
-through the library writer + ``rebuild_manifest`` (the migration path);
-all are cached per sf under markers like the other format fixtures.
+The fixtures write through ``sources.write`` (so a commit-time manifest
+exists) or through the library writer + ``rebuild_manifest`` (the
+migration path); all are cached per sf under markers like the other
+format fixtures.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from quiver_spark.functions import dsum
 from quiver_spark.operators.format_queries import CACHE_ROOT, quiver_relation
 from quiver_spark.registry import register
 from quiver_spark.sources import register as register_format
-from quiver_spark.sources import scan
+from quiver_spark.sources import scan, write
 
 
 def _marker_dir(spark: SparkSession, sf_dir: str, name: str, build) -> str:
@@ -52,9 +53,10 @@ GROUP BY c_mktsegment
     tags=("format", "manifest", "scan", "small-files"),
 )
 def quiver_manifest_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """customer fanned out into 24 small sink-written files, scanned back
-    through the two round-9 scale fixes at once: plan-time metadata comes
-    from the generation's commit-time manifest (one read, not 24 footers
+    """customer fanned out into 24 small files written through
+    ``sources.write``, scanned back through the two round-9 scale fixes
+    at once: plan-time metadata comes from the table's commit-time
+    manifest (one read, not 24 footers
     — the O(files)→O(1) fix for 100 TB file counts), and the planner
     packs the small files' page ranges into few multi-file tasks
     (QuiverPartition.extra) instead of one task per file. The oracle is
@@ -62,15 +64,12 @@ def quiver_manifest_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest serving a wrong footer, hash-fails."""
 
     def build(d: str) -> None:
-        (
-            spark.read.parquet(f"{sf_dir}/customer.parquet")
-            .repartition(24)
-            .write.format("quiver")
-            .mode("overwrite")
-            .save(d)
+        write(
+            spark.read.parquet(f"{sf_dir}/customer.parquet").repartition(24),
+            d,
         )
 
-    d = _marker_dir(spark, sf_dir, "customer-manifest-packed", build)
+    d = _marker_dir(spark, sf_dir, "customer-manifest-packed-v2", build)
     c = quiver_relation(spark, d)
     return c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -97,7 +96,7 @@ FROM (
     tags=("format", "scan", "schema-evolution"),
 )
 def quiver_merge_schemas_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema evolution end-to-end: the table accretes two sink commits
+    """Schema evolution end-to-end: the table accretes two commits
     with DIFFERENT column sets (nation keyed by name, then by region);
     ``merge_schemas=true`` unions the footers by name and the scan
     null-fills each file's missing column — the count-per-column oracle
@@ -106,14 +105,10 @@ def quiver_merge_schemas_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(d: str) -> None:
         n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-        n.select("n_nationkey", "n_name").write.format("quiver").mode(
-            "overwrite"
-        ).save(d)
-        n.select("n_nationkey", "n_regionkey").write.format("quiver").mode(
-            "append"
-        ).save(d)
+        write(n.select("n_nationkey", "n_name"), d)
+        write(n.select("n_nationkey", "n_regionkey"), d, mode="append")
 
-    d = _marker_dir(spark, sf_dir, "nation-merge-schemas", build)
+    d = _marker_dir(spark, sf_dir, "nation-merge-schemas-v2", build)
     t = quiver_relation(spark, d, merge_schemas="true")
     return t.agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -238,7 +233,7 @@ def quiver_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rest hard-link into the new generation. The oracle applies the
     inverse predicate to the parquet original, so a row deleted too many,
     too few, or from the wrong file hash-fails. Engine surface:
-    maintenance.delete_where + the sink's carry_files commit; the
+    maintenance.delete_where + the carry_files commit; the
     reference format has no DML layer (single-file,
     /root/reference/src/lib.rs) — this is the table-layer analogue of
     copy-on-write DELETE."""
@@ -249,18 +244,17 @@ def quiver_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_orderpriority", "o_orderstatus"
         )
-        (
-            o.repartitionByRange(8, "o_orderkey")
-            .sortWithinPartitions("o_orderkey")
-            .write.format("quiver")
-            .mode("overwrite")
-            .save(d)
+        write(
+            o.repartitionByRange(8, "o_orderkey").sortWithinPartitions(
+                "o_orderkey"
+            ),
+            d,
         )
         maintenance.delete_where(
             spark, d, "o_orderstatus = 'F' AND o_orderkey % 5 = 0"
         )
 
-    d = _marker_dir(spark, sf_dir, "orders-deleted", build)
+    d = _marker_dir(spark, sf_dir, "orders-deleted-v2", build)
     o = quiver_relation(spark, d)
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -297,12 +291,11 @@ def quiver_update_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
             "c_custkey", "c_nationkey", "c_mktsegment"
         )
-        (
-            c.repartitionByRange(6, "c_custkey")
-            .sortWithinPartitions("c_custkey")
-            .write.format("quiver")
-            .mode("overwrite")
-            .save(d)
+        write(
+            c.repartitionByRange(6, "c_custkey").sortWithinPartitions(
+                "c_custkey"
+            ),
+            d,
         )
         maintenance.update_where(
             spark,
@@ -311,7 +304,7 @@ def quiver_update_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment = 'BUILDING'",
         )
 
-    d = _marker_dir(spark, sf_dir, "customer-updated", build)
+    d = _marker_dir(spark, sf_dir, "customer-updated-v2", build)
     c = quiver_relation(spark, d)
     return c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -359,12 +352,11 @@ def quiver_merge_upsert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         from quiver_spark import maintenance
 
         n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-        (
-            n.repartitionByRange(3, "n_nationkey")
-            .sortWithinPartitions("n_nationkey")
-            .write.format("quiver")
-            .mode("overwrite")
-            .save(d)
+        write(
+            n.repartitionByRange(3, "n_nationkey").sortWithinPartitions(
+                "n_nationkey"
+            ),
+            d,
         )
         updates = n.filter("n_regionkey < 2").withColumn(
             "n_name", F.lit("UPSERTED")
@@ -378,7 +370,7 @@ def quiver_merge_upsert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, d, updates.unionByName(inserts), on=["n_nationkey"]
         )
 
-    d = _marker_dir(spark, sf_dir, "nation-merged", build)
+    d = _marker_dir(spark, sf_dir, "nation-merged-v2", build)
     m = quiver_relation(spark, d)
     return m.groupBy("n_regionkey").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -418,12 +410,12 @@ def quiver_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_orderstatus", "o_orderpriority"
         )
-        o.repartition(8).write.format("quiver").mode("overwrite").save(d)
+        write(o.repartition(8), d)
         maintenance.cluster_by(
             spark, d, ["o_orderkey"], target_rows_per_file=1 << 14
         )
 
-    d = _marker_dir(spark, sf_dir, "orders-clustered", build)
+    d = _marker_dir(spark, sf_dir, "orders-clustered-v2", build)
     o = scan(spark, d, page_prune="true")
     return (
         o.filter((F.col("o_orderkey") >= 500) & (F.col("o_orderkey") <= 1500))
@@ -462,16 +454,12 @@ def quiver_bloom_lookup_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_orderstatus", "o_orderpriority"
         )
-        (
-            o.repartition(4)
-            .write.format("quiver")
-            .mode("overwrite")
-            .option("max_page_size", "1024")
-            .option("bloom_columns", "o_orderkey")
-            .save(d)
+        write(
+            o.repartition(4), d, max_page_size="1024",
+            bloom_columns="o_orderkey",
         )
 
-    d = _marker_dir(spark, sf_dir, "orders-bloomed", build)
+    d = _marker_dir(spark, sf_dir, "orders-bloomed-v2", build)
     o = scan(spark, d, page_prune="true")
     return o.filter(
         F.col("o_orderkey").isin(3, 41, 500, 999, 1203)
@@ -508,7 +496,7 @@ def quiver_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
             "l_orderkey", "l_partkey", "l_returnflag"
         )
-        li.repartition(8).write.format("quiver").mode("overwrite").save(d)
+        write(li.repartition(8), d)
         maintenance.cluster_by(
             spark,
             d,
@@ -517,7 +505,7 @@ def quiver_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             zorder=True,
         )
 
-    d = _marker_dir(spark, sf_dir, "lineitem-zordered", build)
+    d = _marker_dir(spark, sf_dir, "lineitem-zordered-v2", build)
     li = scan(spark, d, page_prune="true")
     return (
         li.filter(
@@ -548,7 +536,7 @@ GROUP BY lang
 )
 def quiver_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental (CDC-lite) consumption over the manifest commit
-    sequence: the table is built as three sink commits (baseline
+    sequence: the table is built as three commits (baseline
     overwrite = commit 1, then two appends = commits 2 and 3) and the
     scan reads ``changes_since=1`` — ONLY the files the two appends
     published, planned from the manifest's per-file commit stamps
@@ -563,17 +551,11 @@ def quiver_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", "lang", "n_chars"
         )
-        docs.filter("doc_id % 10 < 5").write.format("quiver").mode(
-            "overwrite"
-        ).save(d)
-        docs.filter("doc_id % 10 in (5, 6, 7)").write.format("quiver").mode(
-            "append"
-        ).save(d)
-        docs.filter("doc_id % 10 in (8, 9)").write.format("quiver").mode(
-            "append"
-        ).save(d)
+        write(docs.filter("doc_id % 10 < 5"), d)
+        write(docs.filter("doc_id % 10 in (5, 6, 7)"), d, mode="append")
+        write(docs.filter("doc_id % 10 in (8, 9)"), d, mode="append")
 
-    d = _marker_dir(spark, sf_dir, "documents-incremental", build)
+    d = _marker_dir(spark, sf_dir, "documents-incremental-v2", build)
     t = quiver_relation(spark, d, changes_since="1")
     return t.groupBy("lang").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -621,12 +603,11 @@ def quiver_merge_cdc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         from quiver_spark import maintenance
 
         n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-        (
-            n.repartitionByRange(3, "n_nationkey")
-            .sortWithinPartitions("n_nationkey")
-            .write.format("quiver")
-            .mode("overwrite")
-            .save(d)
+        write(
+            n.repartitionByRange(3, "n_nationkey").sortWithinPartitions(
+                "n_nationkey"
+            ),
+            d,
         )
         updates = (
             n.filter("n_regionkey = 0")
@@ -648,7 +629,7 @@ def quiver_merge_cdc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             delete_predicate="op = 'delete'",
         )
 
-    d = _marker_dir(spark, sf_dir, "nation-merged-cdc", build)
+    d = _marker_dir(spark, sf_dir, "nation-merged-cdc-v2", build)
     m = quiver_relation(spark, d)
     return m.groupBy("n_regionkey").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -685,7 +666,7 @@ GROUP BY p_brand
 )
 def quiver_alter_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only ALTER TABLE through the driver gate. ``part`` is
-    sink-written, then evolved three ways (maintenance DDL, each a
+    written, then evolved three ways (maintenance DDL, each a
     hard-linked generation commit + declared-schema manifest):
     ``rename_column p_type -> part_type`` (old files resolve through
     per-file declared->physical maps), ``drop_column p_name`` (bytes
@@ -706,13 +687,7 @@ def quiver_alter_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         from quiver_spark import maintenance as M
 
         full = spark.read.parquet(f"{sf_dir}/part.parquet")
-        (
-            full.coalesce(2)
-            .write.format("quiver")
-            .option("keep_generations", "2")
-            .mode("overwrite")
-            .save(d)
-        )
+        write(full.coalesce(2), d, keep_generations="2")
         M.rename_column(d, "p_type", "part_type")
         M.drop_column(d, "p_name")
         M.add_column(d, "priority", "bigint")
@@ -726,9 +701,9 @@ def quiver_alter_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(p_size AS BIGINT) AS priority",
             "'oversize' AS grade",
         )
-        post.coalesce(1).write.format("quiver").mode("append").save(d)
+        write(post.coalesce(1), d, mode="append")
 
-    d = _marker_dir(spark, sf_dir, "part-alter-evolution-v2", build)
+    d = _marker_dir(spark, sf_dir, "part-alter-evolution-v3", build)
     t = quiver_relation(spark, d)
     return t.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -759,7 +734,7 @@ GROUP BY n_regionkey
     tags=("format", "ddl", "constraints"),
 )
 def quiver_check_constraint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHECK constraints through the driver gate: nation is sink-written,
+    """CHECK constraints through the driver gate: nation is written,
     ``add_constraint n_nonneg CHECK (n_nationkey >= 0)`` validates the
     existing rows and commits to the manifest, a VIOLATING append through
     ``sources.write`` is proven to abort with nothing published (asserted
@@ -774,14 +749,10 @@ def quiver_check_constraint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(d):
         from quiver_spark import maintenance as M
-        from quiver_spark.sources import write
-
         n = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
             "n_nationkey", "n_regionkey"
         )
-        n.coalesce(1).write.format("quiver").option(
-            "keep_generations", "2"
-        ).mode("overwrite").save(d)
+        write(n.coalesce(1), d, keep_generations="2")
         rep = M.add_constraint(spark, d, "n_nonneg", "n_nationkey >= 0")
         assert rep["validated_rows"] == 0, rep
         bad = n.selectExpr(
@@ -801,7 +772,7 @@ def quiver_check_constraint_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write(good.coalesce(1), d, mode="append")
 
-    d = _marker_dir(spark, sf_dir, "nation-check-constraint-v2", build)
+    d = _marker_dir(spark, sf_dir, "nation-check-constraint-v3", build)
     t = quiver_relation(spark, d)
     return t.groupBy("n_regionkey").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -824,7 +795,7 @@ GROUP BY o_orderstatus
     tags=("format", "maintenance", "partition-evolution"),
 )
 def quiver_repartitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition EVOLUTION through the driver gate: orders is sink-written
+    """Partition EVOLUTION through the driver gate: orders is written
     FLAT (no Hive layout), then re-laid-out in place via
     ``maintenance.compact(partition_by=["o_orderpriority"])`` — the
     Iceberg replace-partition-field analogue on the atomic generation
@@ -841,9 +812,7 @@ def quiver_repartitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         from quiver_spark import maintenance as M
 
         o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        o.coalesce(4).write.format("quiver").option(
-            "keep_generations", "2"
-        ).mode("overwrite").save(d)
+        write(o.coalesce(4), d, keep_generations="2")
         M.compact(
             spark, d,
             target_rows_per_file=1 << 20,
@@ -858,7 +827,7 @@ def quiver_repartitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"partition evolution produced no Hive layout: {subdirs}"
         )
 
-    d = _marker_dir(spark, sf_dir, "orders-repartitioned", build)
+    d = _marker_dir(spark, sf_dir, "orders-repartitioned-v2", build)
     t = quiver_relation(spark, d).filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
@@ -892,7 +861,7 @@ FROM supplier
     tags=("format", "maintenance", "statistics"),
 )
 def quiver_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANALYZE TABLE through the driver gate: supplier is sink-written,
+    """ANALYZE TABLE through the driver gate: supplier is written,
     ``maintenance.analyze_table`` computes row/column statistics in ONE
     aggregate job and metadata-commits them into the manifest
     (op ``analyze`` in the history, no file stamped); the query reads
@@ -913,11 +882,11 @@ def quiver_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         from quiver_spark import maintenance as M
 
         s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        s.coalesce(2).write.format("quiver").mode("overwrite").save(d)
+        write(s.coalesce(2), d)
         rep = M.analyze_table(spark, d, columns=cols, exact_ndv=True)
         assert rep["row_count"] == s.count(), rep
 
-    d = _marker_dir(spark, sf_dir, "supplier-analyzed", build)
+    d = _marker_dir(spark, sf_dir, "supplier-analyzed-v2", build)
     st = load_manifest(_data_root(d)).table_stats
     rows = [
         (

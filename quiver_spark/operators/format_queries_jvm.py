@@ -124,8 +124,8 @@ def quiverjvm_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """maintenance.ingest (JVM writer, zstd) of the open orders into a
     cached table, then the JVM reader aggregates it back — the full
     rows-never-leave-the-JVM loop under the oracle. The ingest runs once
-    per sf (marker-cached) and must report engine=jvm: a silent Python-sink
-    fallback would pass the oracle while testing nothing, so it raises."""
+    per sf (marker-cached); ``sources.write`` has no other engine to fall
+    back to."""
     from quiver_spark.maintenance import ingest
     from quiver_spark.operators.format_queries import CACHE_ROOT
 
@@ -136,12 +136,7 @@ def quiverjvm_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
             F.col("o_orderstatus") == "O"
         )
-        info = ingest(spark, src, d, codec="zstd")
-        if info["engine"] != "jvm":
-            raise RuntimeError(
-                f"quiverjvm ingest fell back to engine={info['engine']} — "
-                "the JVM-writer gate query must exercise the Java path"
-            )
+        ingest(spark, src, d, codec="zstd")
         with open(marker, "w") as f:
             f.write("ok")
     back = _jvm_scan(spark, d)
@@ -236,11 +231,7 @@ def _partitioned_orders_dir(spark: SparkSession, sf_dir: str) -> str:
     marker = os.path.join(d, "_done_jvm_part")
     if not os.path.exists(marker):
         src = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        info = ingest(spark, src, d, codec="zstd", partition_by="o_orderstatus")
-        if info["engine"] != "jvm":
-            raise RuntimeError(
-                f"quiverjvm partitioned ingest fell back to engine={info['engine']}"
-            )
+        ingest(spark, src, d, codec="zstd", partition_by="o_orderstatus")
         with open(marker, "w") as f:
             f.write("ok")
     return d
@@ -263,9 +254,7 @@ def quiverjvm_partitioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition_by lands orders in o_orderstatus=... subdirectories — keys
     in the path, data columns in the files, manifest written at the job
     commit — and the JVM scan reassembles the partition column as a
-    plan-time constant while PRUNING the non-matching key's files whole.
-    engine must report jvm (a silent Python-sink fallback would pass the
-    oracle while testing nothing)."""
+    plan-time constant while PRUNING the non-matching key's files whole."""
     d = _partitioned_orders_dir(spark, sf_dir)
     back = _jvm_scan(spark, d)
     return (
@@ -291,17 +280,13 @@ WHERE o_orderstatus = 'F'
     tags=("format", "jvm", "write", "routing"),
 )
 def quiver_write_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE write API, two engines (round 15, VERDICT r14 Next #2):
-    sources.write routes an eligible batch write to the quiverjvm bulk
-    writer (0.9× parquet wall vs the Python sink's 1.4×), falls back to
-    the Python sink for options only it implements (here
-    ``require_not_null``), and stages the JVM write of an overwrite of a
-    generation-layout table, publishing it as an atomic generation swap
-    in the driver (here with ``keep_generations``). The routing is
-    asserted IN-QUERY via the engine name the router returns — a silent
-    mis-route would pass the oracle while testing nothing — and both
-    tables are read back through the unified scan, so the row the driver
-    hashes covers the full write→scan loop on both engines.
+    """ONE write API on the quiverjvm bulk writer: sources.write takes
+    a plain load, a load naming ``require_not_null`` (checked in the
+    plan), and the staged JVM write of an overwrite of the second table
+    published as an atomic generation swap in the driver (here with
+    ``keep_generations``). The engine each write returns is asserted
+    in-query, and both tables are read back through the unified scan,
+    so the row the driver hashes covers the full write→scan loop.
 
     Reference ethos: one writer API over per-type encoders
     (/root/reference/src/write/writer.rs:91-167)."""
@@ -309,20 +294,20 @@ def quiver_write_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quiver_spark.sources import scan, write
 
     tag = os.path.basename(sf_dir.rstrip("/"))
-    d_jvm = os.path.join(CACHE_ROOT, tag, "orders-unified-write-v2")
-    d_py = os.path.join(CACHE_ROOT, tag, "orders-unified-write-py-v2")
-    marker = os.path.join(CACHE_ROOT, tag, "orders-unified-write-v2._done")
+    d_jvm = os.path.join(CACHE_ROOT, tag, "orders-unified-write-v3")
+    d_py = os.path.join(CACHE_ROOT, tag, "orders-unified-write-py-v3")
+    marker = os.path.join(CACHE_ROOT, tag, "orders-unified-write-v3._done")
     if not os.path.exists(marker):
         src = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
             F.col("o_orderstatus") == "F"
         )
-        want = ["quiverjvm", "quiver", "quiverjvm"]
+        want = ["quiverjvm"] * 3
         routes = [
             write(src, d_jvm, mode="overwrite", codec="zstd"),
             write(src, d_py, mode="overwrite",
                   require_not_null="o_orderkey"),
-            # the table above is generation-layout now: the overwrite is
-            # a staged JVM write swapped in by the driver-side commit
+            # the table above exists now: the overwrite is a staged JVM
+            # write swapped in by the driver-side commit
             write(src, d_py, mode="overwrite", keep_generations="2"),
         ]
         if routes != want:
@@ -452,11 +437,7 @@ def _countcol_orders_dir(spark: SparkSession, sf_dir: str) -> str:
             "IF(o_orderkey % 7 = 0, CAST(NULL AS STRING),"
             " o_orderpriority) AS c",
         )
-        info = ingest(spark, src, d, codec="zstd")
-        if info["engine"] != "jvm":
-            raise RuntimeError(
-                f"quiverjvm countcol ingest fell back to engine={info['engine']}"
-            )
+        ingest(spark, src, d, codec="zstd")
         with open(marker, "w") as f:
             f.write("ok")
     return d

@@ -236,10 +236,10 @@ def try_jvm_scan(spark, path: str, **options):
 
 #: sink options the JVM writer serves natively
 #: (QuiverJvmBatchWrite.createBatchWriterFactory reads exactly these; the
-#: Hive fan-out is ``write``'s own ``partition_by`` parameter). A write
-#: may also name SNAPSHOT_OPTS, which the driver-side commit consumes;
-#: anything else — require_not_null, page_stats, default_codec, … —
-#: keeps the Python sink.
+#: Hive fan-out is ``write``'s own ``partition_by`` parameter). ``write``
+#: also takes SNAPSHOT_OPTS, which the driver-side commit consumes, and
+#: ``require_not_null``, which it checks in the plan; it refuses any
+#: other option.
 JVM_WRITE_OPTS = frozenset(
     {"codec", "max_page_size", "max_rows_per_file", "bloom_columns",
      "compress_ratio", "forbidden"}
@@ -271,77 +271,108 @@ def _constraints(path: str) -> dict[str, str]:
     return dict(man.check_constraints) if man is not None else {}
 
 
-def _checked(df, constraints: dict[str, str]):
-    """``df`` with its first column wrapped in one check of every CHECK
-    constraint: the first row whose predicate IS FALSE raises
-    ``CHECK constraint '<name>' violated: (<expr>)``; NULL passes, as
-    SQL CHECK requires. It is a projection, not a filter, so the
-    optimizer cannot move it below the frame's own filters or into one
-    side of a join and raise on a row that is never written. The
-    ``coalesce`` keeps the column's type and nullability, so the
-    written schema is the frame's."""
+def _quoted(name: str):
     from pyspark.sql import functions as F
 
-    first = df.columns[0]
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _checked(df, constraints: dict[str, str], not_null=()):
+    """``df`` with its first column wrapped in one check of every CHECK
+    constraint and every NOT NULL column: the first row whose predicate
+    IS FALSE raises ``CHECK constraint '<name>' violated: (<expr>)``
+    (NULL passes, as SQL CHECK requires), and the first row with a NULL
+    in a ``not_null`` column raises ``NOT NULL constraint violated:
+    column '<c>' …``. It is a projection, not a filter, so the optimizer
+    cannot move it below the frame's own filters or into one side of a
+    join and raise on a row that is never written. The ``coalesce``
+    keeps the column's type and nullability, so the written schema is
+    the frame's."""
+    from pyspark.sql import functions as F
+
+    arms = [
+        (F.expr(f"({expr}) IS FALSE"),
+         f"CHECK constraint '{name}' violated: ({expr})")
+        for name, expr in constraints.items()
+    ] + [
+        (_quoted(c).isNull(),
+         f"NOT NULL constraint violated: column {c!r} is NULL in a "
+         "written row")
+        for c in not_null
+    ]
     check = None
-    for name, expr in constraints.items():
-        bad = F.expr(f"({expr}) IS FALSE")
-        err = F.raise_error(f"CHECK constraint '{name}' violated: ({expr})")
+    for bad, msg in arms:
+        err = F.raise_error(msg)
         check = F.when(bad, err) if check is None else check.when(bad, err)
-    col = F.col("`" + first.replace("`", "``") + "`")
-    return df.withColumn(first, F.coalesce(check, col))
+    first = df.columns[0]
+    return df.withColumn(first, F.coalesce(check, _quoted(first)))
+
+
+def _write_options(options) -> tuple[dict, dict, list[str]]:
+    """Split ``write``'s options into (snapshot options, JVM writer
+    options, ``require_not_null`` columns); an option outside
+    JVM_WRITE_OPTS, SNAPSHOT_OPTS and ``require_not_null`` raises
+    ValueError naming it."""
+    unknown = sorted(
+        set(options) - JVM_WRITE_OPTS - SNAPSHOT_OPTS - {"require_not_null"}
+    )
+    if unknown:
+        raise ValueError(
+            f"quiver write does not take the option(s) {unknown}; it takes "
+            f"{sorted(JVM_WRITE_OPTS | SNAPSHOT_OPTS)} and require_not_null"
+        )
+    snap = {k: v for k, v in options.items() if k in SNAPSHOT_OPTS}
+    opts = {k: v for k, v in options.items() if k in JVM_WRITE_OPTS}
+    not_null = [
+        c.strip()
+        for c in str(options.get("require_not_null", "")).split(",")
+        if c.strip()
+    ]
+    return snap, opts, not_null
 
 
 def write(df, path: str, mode: str = "overwrite", partition_by=None,
           **options) -> str:
-    """Unified quiver BATCH sink, the write-side twin of ``scan`` and the
-    one place in the package that picks a batch write engine. Returns
-    the engine name it used (``"quiverjvm"`` | ``"quiver"``) so callers
-    and tests can pin the routing.
+    """Unified quiver BATCH sink, the write-side twin of ``scan``: every
+    quiver table write the package makes goes through it. The quiverjvm
+    writer (the Java DataSourceV2 bulk writer; rows stay in the JVM)
+    writes the files, and ``write`` returns ``"quiverjvm"``.
 
-    The destination's CHECK constraints, if any, are checked in the
-    plan (``_checked``). The quiverjvm writer (the Java DataSourceV2
-    bulk writer, sf0.1 ≈0.9× the parquet writer vs the Python sink's
-    ≈1.4×) takes the write when every option is in JVM_WRITE_OPTS (the
-    SNAPSHOT_OPTS are dropped first: the driver-side commit serves them),
-    the schema is JVM-encodable and the jar attaches; the **python
-    "quiver" sink** takes the rest: exotic leaf types (half floats,
-    decimal256, null columns) and options only it implements
-    (require_not_null, page_stats, default_codec, …). ``codec``
-    defaults to lz4 on both.
+    Options: JVM_WRITE_OPTS go to the writer (``codec`` defaults to
+    lz4); SNAPSHOT_OPTS go to the commit; ``require_not_null`` (comma
+    list of columns) is checked in the plan with the destination's CHECK
+    constraints (``_checked``). Three things raise ValueError or
+    RuntimeError before any job runs and before a stage exists: any
+    other option, a column the writer cannot encode (``jvm.
+    supports_schema``; e.g. a NULL-typed column — cast it), and a jar
+    that does not attach to the session.
 
-    Either engine appends the rows into a hidden
-    ``_temporary/<engine>-<uuid>/`` directory, and this process
-    publishes the files through ``snapshot.commit`` under the table
-    lock. The commit is a generation swap when the mode is overwrite
-    and, under the lock, the directory holds anything or the write names
-    any of SNAPSHOT_OPTS (keep_generations, carry_files/carry_src,
-    pointer_store): a failed or self-reading overwrite leaves the old
-    snapshot live. Otherwise it is an append into the live root, so a
-    first write into a new or empty directory makes a flat table. A
-    commit that leaves the table without a data file adds one empty
-    file holding the data columns (Hive keys ride the path). A failed
-    job or a refused commit removes its staging directory and publishes
-    nothing; a killed process leaves it to ``maintenance.vacuum``.
-
-    The probe runs BEFORE the job: there is deliberately no silent
-    fallback after a started JVM write (a half-finished write must
-    surface, not be retried through the other engine).
+    The job appends the rows into a hidden ``_temporary/jvm-<uuid>/``
+    directory, and this process publishes the files through
+    ``snapshot.commit`` under the table lock. The commit is a generation
+    swap when the mode is overwrite and, under the lock, the directory
+    holds anything or the write names any of SNAPSHOT_OPTS
+    (keep_generations, carry_files/carry_src, pointer_store): a failed
+    or self-reading overwrite leaves the old snapshot live. Otherwise it
+    is an append into the live root, so a first write into a new or
+    empty directory makes a flat table. A commit that leaves the table
+    without a data file adds one empty file holding the data columns
+    (Hive keys ride the path). A failed job or a refused commit removes
+    its staging directory and publishes nothing; a killed process
+    leaves it to ``maintenance.vacuum``.
 
     ``partition_by`` (list/tuple or comma string) is the Hive fan-out:
-    ``.partitionBy(...)`` on the JVM writer (identity transforms →
-    __partition_cols), the documented ``partition_by`` option on the
-    Python sink — same directory layout either way.
+    ``.partitionBy(...)`` on the JVM writer.
     """
     import json
     import shutil
     import uuid
 
     from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
     from quiver_spark.jvm import attach_jar, supports_schema
 
-    from .manifest import load_manifest
     from .pointer_store import store_from_option
     from .quiver_datasource import write_placeholder
 
@@ -351,47 +382,50 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
             f"unified quiver write supports mode='append'|'overwrite', "
             f"got {mode!r}"
         )
+    snap, opts, not_null = _write_options(options)
+    missing = [c for c in not_null if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"require_not_null column {missing[0]!r} is not in the "
+            f"written schema {df.columns}"
+        )
+    refused = [
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if not supports_schema(StructType([f]))
+    ]
+    if refused:
+        raise ValueError(
+            f"the quiverjvm writer cannot encode the column(s) {refused}; "
+            "cast them to a supported type (a NULL-typed column: "
+            "CAST(NULL AS <type>))"
+        )
+    if not attach_jar(df.sparkSession):
+        raise RuntimeError(
+            "the quiverjvm writer jar does not attach to this session; "
+            "build it with quiver_spark/jvm/build.sh"
+        )
     cols = (
         [c.strip() for c in partition_by.split(",")]
         if isinstance(partition_by, str)
         else list(partition_by or ())
     )
-    snap = {k: v for k, v in options.items() if k in SNAPSHOT_OPTS}
-    opts = {k: v for k, v in options.items() if k not in SNAPSHOT_OPTS}
     constraints = _constraints(path)
-    if constraints:
-        df = _checked(df, constraints)
-    if (
-        set(opts) <= JVM_WRITE_OPTS
-        and supports_schema(df.schema)
-        and attach_jar(df.sparkSession)
-    ):
-        engine = "quiverjvm"
-        writer = df.write.format(engine).options(codec="lz4", manifest="false")
-        if cols:
-            writer = writer.partitionBy(*cols)
-    else:
-        engine = "quiver"
-        writer = df.write.format(engine)
-        if cols:
-            writer = writer.option("partition_by", ",".join(cols))
+    if constraints or not_null:
+        df = _checked(df, constraints, not_null)
+    writer = df.write.format("quiverjvm").options(codec="lz4", manifest="false")
+    if cols:
+        writer = writer.partitionBy(*cols)
     for k, v in opts.items():
         writer = writer.option(k, str(v))
     table = _local_dir(path)
-    stage = os.path.join(
-        table, snapshot.STAGING_DIR, f"{engine}-{uuid.uuid4().hex}"
-    )
+    stage = os.path.join(table, snapshot.STAGING_DIR, f"jvm-{uuid.uuid4().hex}")
     try:
         writer.mode("append").save(stage)
         rels = [
             os.path.relpath(f, stage)
             for f in snapshot.list_files(stage, "*.quiver")
         ]
-        if engine == "quiver":
-            # the sink leaves an empty placeholder in an empty stage;
-            # the table's own placeholder rule below decides instead
-            entries = load_manifest(stage).entries
-            rels = [r for r in rels if entries[r].rows]
         snapshot.commit(
             table,
             ("*.quiver",),
@@ -412,7 +446,7 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
         snapshot.sweep_stale_staging(table)
     if not rels:  # published files leave the snapshot non-empty
         write_placeholder(table, to_arrow_schema(df.drop(*cols).schema))
-    return engine
+    return "quiverjvm"
 
 
 def _append_batch(path: str, options):
@@ -430,17 +464,23 @@ def _append_batch(path: str, options):
     return run
 
 
-def stream_writer(df, path: str, **options):
+def stream_writer(df, path: str, partition_by=None, **options):
     """Unified quiver streaming SINK — the write-side twin of ``scan``:
     returns a configured ``DataStreamWriter`` (caller adds trigger +
-    checkpointLocation and ``.start()``s). A stream only appends.
+    checkpointLocation and ``.start()``s). A stream only appends; it is
+    the one way to stream into a quiver table (the ``quiver`` and
+    ``quiverjvm`` formats have no streaming write).
 
     Each micro-batch is one ``write(batch, path, mode="append",
     **options)`` (``foreachBatch``), so a stream gets what a batch append
-    gets: the engine ``write`` picks, lz4 by default, the CHECK
-    constraints, and one ``snapshot.commit`` under the table lock.
-    ``partition_by`` is ``write``'s Hive fan-out. The
+    gets: the quiverjvm writer, lz4 by default, the CHECK and
+    ``require_not_null`` checks, and one ``snapshot.commit`` under the
+    table lock. ``partition_by`` is ``write``'s Hive fan-out. An option
+    ``write`` does not take raises here, before the stream starts. The
     ``_quiver_commits/<batchId>`` marker log publishes a batch Spark
     replays after a restart once."""
+    _write_options(options)
     register(df.sparkSession)
-    return df.writeStream.foreachBatch(_append_batch(path, options))
+    return df.writeStream.foreachBatch(
+        _append_batch(path, dict(options, partition_by=partition_by))
+    )

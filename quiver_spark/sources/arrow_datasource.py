@@ -41,14 +41,15 @@ from typing import Iterator
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
 )
 from pyspark.sql.types import StructType
 
+from quiver_spark.sources import snapshot
 from quiver_spark.sources.quiver_datasource import (
     DEFAULT_PARTITION_BYTES,
-    QuiverStreamWriter,
     QuiverWriter,
     _data_root,
     _list_files_pattern,
@@ -357,8 +358,8 @@ class ArrowIpcWriter(QuiverWriter):
 
     def write(self, iterator):
         """One task → one .arrow file of the task's batches (rolling to a
-        new file past max_rows, like the quiver writer), staged under the
-        hidden `_temporary/` root for the driver-side publish."""
+        new file at exactly max_rows rows, like the quiver writer), staged
+        under the hidden `_temporary/` root for the driver-side publish."""
         import pyarrow as pa
         import pyarrow.ipc as ipc
 
@@ -384,10 +385,15 @@ class ArrowIpcWriter(QuiverWriter):
 
         for batch in iterator:
             self._check_not_null(batch)
-            if writer is None or rows >= self.max_rows:
+            if writer is None:
                 roll(batch.schema)
-            writer.write_batch(batch)
-            rows += batch.num_rows
+            while batch.num_rows:
+                if rows == self.max_rows:
+                    roll(batch.schema)
+                take = min(self.max_rows - rows, batch.num_rows)
+                writer.write_batch(batch.slice(0, take))
+                rows += take
+                batch = batch.slice(take)
         if writer is not None:
             writer.close()
         return QuiverCommit(task_dir=task_dir, files=tuple(staged))
@@ -516,12 +522,22 @@ def register_arrow(spark) -> None:
     _REGISTERED_SESSIONS.add(key)
 
 
-class ArrowIpcStreamWriter(ArrowIpcWriter, QuiverStreamWriter):
-    """Streaming sink for .arrow tables: Arrow IPC bytes on disk
-    (``ArrowIpcWriter.write`` via the MRO) under the quiver streaming
-    sink's per-batch commit-log protocol (``QuiverStreamWriter.commit`` /
-    ``abort`` inherited verbatim — replayed batches idempotent, aborted
-    batches dropped)."""
+class ArrowIpcStreamWriter(ArrowIpcWriter, DataSourceStreamArrowWriter):
+    """Streaming sink for .arrow tables: each micro-batch stages Arrow
+    IPC files under the hidden `_temporary/` root and publishes them on
+    batch commit, once per batch id (``snapshot.publish_once``, the
+    ``_quiver_commits/<batchId>`` marker log): a REPLAYED batch's
+    re-staged output is dropped instead of published twice, and an
+    aborted batch's staged output is dropped."""
+
+    def commit(self, messages, batchId) -> None:  # noqa: N803
+        if not snapshot.publish_once(
+            self.path, batchId, lambda: self._publish(messages)
+        ):
+            ArrowIpcWriter.abort(self, messages)
+
+    def abort(self, messages, batchId) -> None:  # noqa: N803
+        ArrowIpcWriter.abort(self, messages)
 
 
 class ArrowIpcStreamReader(DataSourceStreamReader):

@@ -462,9 +462,10 @@ def store_from_option(value: str | None) -> PointerStore:
     forces the lock-less object-store posture, ``"cas:<root>"`` the
     conditional-PUT one over a FileBlobStore (the stand-in for S3/GCS),
     anything else the active store. An option rather than
-    set_pointer_store because the Python sink commits in a Spark-spawned
-    runner a driver-side set_pointer_store never reaches — the option
-    travels with the serialized writer. Production object-store adapters
+    set_pointer_store because the Python sinks (``format("quiver")``,
+    ``"arrowipc"``) commit in a Spark-spawned runner a driver-side
+    set_pointer_store never reaches — the option travels with the
+    serialized writer. Production object-store adapters
     still install process-wide via set_pointer_store."""
     value = value or ""
     if value.lower() == "unlocked":

@@ -3,6 +3,10 @@
     spark.read.format("quiver").load(dir_or_file)
     df.write.format("quiver").mode("overwrite").save(dir)
 
+The package itself writes quiver tables through ``sources.write`` (the
+quiverjvm writer); this batch sink is the reference Python writer, and
+the format has no streaming write (``sources.stream_writer`` streams).
+
 Split planning mirrors the reference's page-granular reads (NativeReader
 nth/skip_page, src/read/reader.rs:91-146): the driver reads each file's
 footer once, then fans out InputPartitions covering page ranges. A split
@@ -91,7 +95,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
     WriterCommitMessage,
@@ -527,11 +530,10 @@ class QuiverDataSource(DataSource):
         return QuiverWriter(self.options, schema, overwrite=overwrite)
 
     def streamWriter(self, schema: StructType, overwrite: bool):
-        path = _opt_path(self.options)
-        if not path:
-            raise ValueError("quiver datasource requires a path")
-        os.makedirs(path, exist_ok=True)
-        return QuiverStreamWriter(self.options)
+        raise NotImplementedError(
+            "the quiver format has no streaming write; stream into a quiver "
+            "table through quiver_spark.sources.stream_writer"
+        )
 
     def streamReader(self, schema: StructType) -> "QuiverStreamReader":
         return QuiverStreamReader(self.options, schema)
@@ -1461,8 +1463,8 @@ class QuiverStreamReader(DataSourceStreamReader):
             if os.path.exists(f)
         ]
         # micro-batch planning is per-NEW-file metadata: manifest-served
-        # when the sink wrote one (the streaming sink updates it per batch
-        # commit), parallel-prefetched otherwise
+        # when the writer made one (every commit of sources.stream_writer
+        # updates it), parallel-prefetched otherwise
         _prefetch_footers(new_files, man)
         parts: list[QuiverPartition] = []
         for file in new_files:
@@ -1563,10 +1565,10 @@ class QuiverCommit(WriterCommitMessage):
 
 
 class QuiverWriter(DataSourceArrowWriter):
-    """The Python ``"quiver"`` batch sink: tasks stage files under
-    ``_temporary/`` and the driver publishes them through
-    ``snapshot.commit``. ``sources.write`` sends it what the quiverjvm
-    writer cannot take; a table with CHECK constraints is refused."""
+    """The Python ``"quiver"`` batch sink, the reference writer: tasks
+    stage files under ``_temporary/`` and the driver publishes them
+    through ``snapshot.commit``. ``sources.write`` does not use it; a
+    table with CHECK constraints is refused."""
 
     #: data-file glob the flat-root sweep owns, sidecars included
     #: (subclasses writing a different format override — the snapshot
@@ -1585,9 +1587,9 @@ class QuiverWriter(DataSourceArrowWriter):
         self.spark_schema = spark_schema
         self.overwrite = overwrite
         self.path = _opt_path(options)
-        self.max_rows = int(
+        self.max_rows = max(1, int(
             options.get("max_rows_per_file", DEFAULT_MAX_ROWS_PER_FILE)
-        )
+        ))
         self.codec = options.get("codec", options.get("default_codec", "lz4"))
         ratio = options.get("compress_ratio", "2.0")
         self.compress_ratio = None if ratio in ("none", "None") else float(ratio)
@@ -1630,11 +1632,10 @@ class QuiverWriter(DataSourceArrowWriter):
         #: verifies it is STILL live even when the carry list is empty
         #: (an all-files-touched rewrite must not clobber a rival commit)
         self.carry_src = options.get("carry_src")
-        # NOT NULL write constraints (Delta CHECK-constraint analogue,
-        # format-level so EVERY write path — batch, append, streaming
-        # micro-batch, row-level rewrites — enforces them): a violating
-        # task raises before staging completes, the job aborts, and the
-        # staged-commit protocol guarantees no partial publish.
+        # NOT NULL write constraints (this sink's own check; the same
+        # option on sources.write is checked in the Spark plan): a
+        # violating task raises before staging completes, the job aborts,
+        # and the staged-commit protocol guarantees no partial publish.
         rnn = options.get("require_not_null", "")
         self.require_not_null = tuple(
             c.strip() for c in rnn.split(",") if c.strip()
@@ -1712,9 +1713,8 @@ class QuiverWriter(DataSourceArrowWriter):
 
     def _check_not_null(self, batch) -> None:
         """Enforce the require_not_null constraint on one Arrow batch —
-        called by EVERY writer subclass's write loop (quiver batch/
-        streaming AND the arrowipc override), so the constraint holds on
-        every write path."""
+        called by every writer subclass's write loop (quiver AND the
+        arrowipc override)."""
         if not self.require_not_null:
             return
         for c in self.require_not_null:
@@ -1733,7 +1733,8 @@ class QuiverWriter(DataSourceArrowWriter):
 
     def write(self, iterator) -> QuiverCommit:
         """One task → one or more .quiver files (a file is one row group,
-        src/write/writer.rs:107-112; oversized tasks roll to new files;
+        src/write/writer.rs:107-112; a task rolls to a new file at exactly
+        ``max_rows_per_file`` rows, as the quiverjvm writer does;
         partitioned writes fan the buffered rows into Hive subdirs).
 
         Files are STAGED under `_temporary/<task-uuid>/` and only moved
@@ -1776,10 +1777,15 @@ class QuiverWriter(DataSourceArrowWriter):
 
         for batch in iterator:
             self._check_not_null(batch)
-            buffer.append(batch)
-            rows += batch.num_rows
-            if rows >= self.max_rows:
-                flush()
+            if not batch.num_rows:
+                buffer.append(batch)  # an all-empty task keeps its file
+            while batch.num_rows:
+                take = min(self.max_rows - rows, batch.num_rows)
+                buffer.append(batch.slice(0, take))
+                rows += take
+                batch = batch.slice(take)
+                if rows == self.max_rows:
+                    flush()
         flush()
         return QuiverCommit(task_dir=task_dir, files=tuple(staged))
 
@@ -1837,26 +1843,6 @@ class QuiverWriter(DataSourceArrowWriter):
         for msg in messages:
             if msg is not None and getattr(msg, "task_dir", ""):
                 shutil.rmtree(msg.task_dir, ignore_errors=True)
-
-
-class QuiverStreamWriter(QuiverWriter, DataSourceStreamArrowWriter):
-    """Streaming sink: each micro-batch stages task files under the hidden
-    `_temporary/` root and publishes them on batch commit (the quiver
-    analogue of Spark's file-stream sink manifest): a batch's files become
-    reader-visible atomically-per-task at commit, an aborted batch's
-    staged output is dropped, and the per-batch marker log
-    (``snapshot.publish_once``) makes REPLAYED batches idempotent."""
-
-    def commit(self, messages, batchId) -> None:  # noqa: N803
-        if not snapshot.publish_once(
-            self.path, batchId, lambda: self._publish(messages)
-        ):
-            # replayed batch: its files are already visible — drop the
-            # re-staged output instead of double-publishing
-            QuiverWriter.abort(self, messages)
-
-    def abort(self, messages, batchId) -> None:  # noqa: N803
-        QuiverWriter.abort(self, messages)
 
 
 _SHIPPED_SESSIONS: set[int] = set()

@@ -48,8 +48,8 @@ CURRENT = "_current"
 COMMITTED = "_committed"
 SIDECAR = ".stats.json"
 #: per-table log of published stream batches, one ``<batchId>`` marker
-#: each (``publish_once``; the Python sink's stream writer and
-#: ``sources.stream_writer`` share it)
+#: each (``publish_once``; ``sources.stream_writer`` and the arrowipc
+#: stream sink share it)
 COMMIT_LOG = "_quiver_commits"
 
 

@@ -3,9 +3,9 @@
 Spark plan of every write through ``sources.write``: one projection that
 raises on the first row whose predicate IS FALSE (SQL CHECK semantics:
 NULL passes), so Spark both validates existing rows and checks new ones.
-Whichever engine then writes, nothing publishes on a violation. The
-direct sinks (``format("quiver")`` and ``"arrowipc"``, batch and stream,
-and the batch-only ``"quiverjvm"``) refuse a constrained table. Routed
+Nothing publishes on a violation. The direct sinks (``format("quiver")``
+and ``"quiverjvm"`` batch, ``"arrowipc"`` batch and stream) refuse a
+constrained table; neither quiver format has a streaming write. Routed
 streams run each micro-batch through ``sources.write``. The reference format has no
 constraint layer; this is the Delta CHECK-constraint analogue on the
 generation protocol."""
@@ -156,9 +156,9 @@ def _source(tmp_path, name, k, v):
 
 
 def test_constraint_enforced_on_streaming_sink(spark, tmp_path):
-    """The direct Python streaming sink does not evaluate constraints,
-    so it refuses a constrained table before a batch publishes, naming
-    the constraint and the router; the table stays clean."""
+    """The quiver format has no streaming write: a stream into a
+    constrained table through ``writeStream.format("quiver")`` fails,
+    naming ``sources.stream_writer``, and the table stays clean."""
     register(spark)
     src = _source(tmp_path, "src", 1, -5.0)
     dst = str(tmp_path / "dst")
@@ -173,7 +173,7 @@ def test_constraint_enforced_on_streaming_sink(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _fail_stream(q, "v_positive.*quiver_spark.sources.write")
+    _fail_stream(q, "quiver_spark.sources.stream_writer")
     assert _rows(spark, dst) == [(1, "a", 1.0)]
 
 

@@ -24,6 +24,7 @@ import os
 import pytest
 
 from quiver_spark import maintenance
+from quiver_spark.sources import stream_writer
 from quiver_spark.sources.manifest import load_manifest
 from quiver_spark.sources.quiver_datasource import _data_root, register
 
@@ -463,10 +464,7 @@ def test_streaming_sink_commits_are_cdc_consumable(spark, tmp_path):
     )
     out = str(tmp_path / "sinked")
     q = (
-        spark.readStream.schema("id long")
-        .parquet(src_dir)
-        .writeStream.format("quiver")
-        .option("path", out)
+        stream_writer(spark.readStream.schema("id long").parquet(src_dir), out)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -480,10 +478,7 @@ def test_streaming_sink_commits_are_cdc_consumable(spark, tmp_path):
         os.path.join(src_dir, "b.parquet"),
     )
     q2 = (
-        spark.readStream.schema("id long")
-        .parquet(src_dir)
-        .writeStream.format("quiver")
-        .option("path", out)
+        stream_writer(spark.readStream.schema("id long").parquet(src_dir), out)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()

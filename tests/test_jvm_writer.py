@@ -154,10 +154,10 @@ def test_ingest_uses_jvm_and_rebuilds_manifest(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
-def test_ingest_routes_nested_to_jvm_and_void_to_python(spark, tmp_path):
+def test_ingest_writes_nested_on_jvm_and_refuses_void(spark, tmp_path):
     """Nested schemas ride the JVM sink since the round-12 shredder —
     same call, same durable result; a leaf the Java writer does not
-    encode (void) still falls back to the Python sink silently."""
+    encode (void) is refused before any job, naming the column."""
     from quiver_spark import maintenance
 
     df = spark.range(500).select(
@@ -176,9 +176,9 @@ def test_ingest_routes_nested_to_jvm_and_void_to_python(spark, tmp_path):
     df2 = spark.range(10).select(F.col("id"), F.lit(None).alias("v"))
     assert not supports_schema(df2.schema)
     out2 = str(tmp_path / "voidcol")
-    summary2 = maintenance.ingest(spark, df2, out2)
-    assert summary2["engine"] == "python"
-    assert spark.read.format("quiver").load(out2).count() == 10
+    with pytest.raises(ValueError, match="v void"):
+        maintenance.ingest(spark, df2, out2)
+    assert not os.path.exists(out2)
 
 
 def test_jvm_adaptive_codecs_fire_and_decode_both_ways(spark, tmp_path):
@@ -675,16 +675,13 @@ def test_jvm_stream_sink_into_generation_table(spark, tmp_path):
 
 
 def test_unified_write_router_both_directions(spark, tmp_path):
-    """sources.write — the unified BATCH sink (round 15, VERDICT r14
-    Next #2) — routes to the JVM writer when schema+options+mode are
-    eligible and to the Python sink otherwise, with identical on-disk
-    protocol either way. Pins every routing direction:
-    JVM-eligible, Python-only option (whose first load, staged like
-    the JVM's, makes a flat table), JVM-unsupported schema, overwrite
-    of an existing table (a staged JVM write swapped in by the
-    driver-side snapshot commit), generation-layout APPEND (stays JVM,
-    resolves the live root), and partition_by fan-out parity on both
-    engines."""
+    """sources.write — the unified BATCH sink — writes every table
+    through the JVM writer. Pins each shape: a plain load, a load naming
+    ``require_not_null`` (checked in the plan; the first load is flat),
+    overwrite of an existing table (a staged JVM write swapped in by the
+    driver-side snapshot commit), generation-layout APPEND (resolves the
+    live root), a NULL-typed column (refused before any job; cast, it
+    writes) and partition_by fan-out."""
     _require_jar(spark)
     from quiver_spark.sources import snapshot, write
 
@@ -705,15 +702,16 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     assert write(src, d1, mode="overwrite", codec="zstd") == "quiverjvm"
     assert back(d1) == want
 
-    # 2. a Python-only option → Python sink; a first load is flat
+    # 2. require_not_null is a plan check on the JVM write; a first load
+    # is flat
     d2 = str(tmp_path / "py")
     assert (
-        write(src, d2, mode="overwrite", require_not_null="id") == "quiver"
+        write(src, d2, mode="overwrite", require_not_null="id")
+        == "quiverjvm"
     )
     assert back(d2) == want
     assert snapshot.generations(d2) == []
-    # the sink's stage, its manifest and lock file included, is gone
-    # after a published write and after a failed one
+    # the stage is gone after a published write and after a failed one
     nulls = spark.range(3).selectExpr("id", "CAST(NULL AS STRING) AS s")
     with pytest.raises(Exception, match="NOT NULL"):
         write(nulls, d2, mode="append", require_not_null="s")
@@ -735,13 +733,18 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     assert write(more, d2, mode="append") == "quiverjvm"
     assert back(d2) == sorted(want + list(map(tuple, more.collect())))
 
-    # 5. JVM-unsupported leaf type → Python sink
+    # 5. a NULL-typed column is refused before any job, naming it; cast,
+    # it writes
     d3 = str(tmp_path / "void")
     nullcol = spark.range(5).selectExpr("id", "NULL AS n")
-    assert write(nullcol, d3, mode="overwrite") == "quiver"
+    with pytest.raises(ValueError, match="n void"):
+        write(nullcol, d3, mode="overwrite")
+    assert not os.path.exists(d3)
+    cast = nullcol.selectExpr("id", "CAST(n AS STRING) AS n")
+    assert write(cast, d3, mode="overwrite") == "quiverjvm"
     assert len(spark.read.format("quiver").load(d3).collect()) == 5
 
-    # 6. partition_by fan-out parity: same Hive layout on both engines
+    # 6. partition_by fan-out, with and without require_not_null
     d4 = str(tmp_path / "hive_jvm")
     d5 = str(tmp_path / "hive_py")
     part = spark.range(12).selectExpr("id", "concat('g', id % 3) AS k")
@@ -749,7 +752,7 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     assert (
         write(part, d5, mode="overwrite", partition_by="k",
               require_not_null="id")
-        == "quiver"
+        == "quiverjvm"
     )
     import glob as _glob
 
@@ -759,7 +762,7 @@ def test_unified_write_router_both_directions(spark, tmp_path):
     )
     assert keys(d4) == ["k=g0", "k=g1", "k=g2"]
     assert keys(d5) == ["k=g0", "k=g1", "k=g2"]
-    assert back(d4) == sorted(map(tuple, part.collect()))
+    assert back(d4) == back(d5) == sorted(map(tuple, part.collect()))
 
     # 7. modes outside the contract refuse loudly
     with pytest.raises(ValueError, match="mode"):

@@ -21,6 +21,7 @@ import pytest
 
 from quiver_spark.sources import manifest as man_mod
 from quiver_spark.sources import quiver_datasource as qd
+from quiver_spark.sources import stream_writer
 from quiver_spark.sources.manifest import (
     MANIFEST_NAME,
     load_manifest,
@@ -171,13 +172,13 @@ def test_streaming_sink_updates_manifest_per_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     spark.read.parquet(f"{SF_DIR}/nation.parquet").write.parquet(src)
     q = (
-        spark.readStream.schema(
-            spark.read.parquet(src).schema
+        stream_writer(
+            spark.readStream.schema(spark.read.parquet(src).schema).parquet(
+                src
+            ),
+            dst,
         )
-        .parquet(src)
-        .writeStream.format("quiver")
         .option("checkpointLocation", ckpt)
-        .option("path", dst)
         .trigger(availableNow=True)
         .start()
     )

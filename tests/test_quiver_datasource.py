@@ -543,10 +543,10 @@ def test_write_commit_protocol_isolates_failed_tasks(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "proto")
     os.makedirs(d, exist_ok=True)
-    # max_rows_per_file=1 forces a flush per batch, so the failing task
-    # below has ACTUALLY staged a file before it dies — without this the
-    # "nothing visible" assertion would pass trivially
-    w = QuiverWriter({"path": d, "max_rows_per_file": "1"})
+    # max_rows_per_file=3 rolls a file at each 3-row batch, so the
+    # failing task below has ACTUALLY staged a file before it dies —
+    # without this the "nothing visible" assertion would pass trivially
+    w = QuiverWriter({"path": d, "max_rows_per_file": "3"})
     batch = pa.record_batch({"x": pa.array([1, 2, 3], pa.int64())})
 
     def failing_iter():
@@ -583,36 +583,39 @@ def test_write_commit_protocol_isolates_failed_tasks(spark, tmp_path):
 
 def test_stream_sink_replayed_batch_is_idempotent(spark, tmp_path):
     """After a driver failure Spark re-runs the last unacknowledged
-    micro-batch; the sink's per-batch commit log must drop the replayed
-    output instead of publishing the batch's rows twice."""
+    micro-batch; the stream sink's per-batch commit log (the arrowipc
+    sink: the quiver format has no streaming write) must drop the
+    replayed output instead of publishing the batch's rows twice."""
     import pyarrow as pa
 
-    from quiver_spark.sources.quiver_datasource import (
-        QuiverStreamWriter,
-        _list_files,
+    from quiver_spark.sources.arrow_datasource import (
+        ArrowIpcStreamWriter,
+        _list_arrow_files,
+        register_arrow,
     )
 
-    register(spark)
+    register_arrow(spark)
     d = str(tmp_path / "stream")
     os.makedirs(d, exist_ok=True)
-    w = QuiverStreamWriter({"path": d})
+    w = ArrowIpcStreamWriter({"path": d})
     batch = pa.record_batch({"x": pa.array([1, 2, 3], pa.int64())})
 
+    def rows():
+        back = spark.read.format("arrowipc").load(d).collect()
+        return sorted(r.x for r in back)
+
     w.commit([w.write(iter([batch]))], 0)
-    n1 = len(_list_files(d))
+    n1 = len(_list_arrow_files(d))
     assert n1 == 1
 
     # replay of batch 0 (same batchId, freshly staged files)
     w.commit([w.write(iter([batch]))], 0)
-    assert len(_list_files(d)) == n1, "replayed batch published twice"
-    q = spark.read.format("quiver").load(d)
-    assert sorted(r.x for r in q.collect()) == [1, 2, 3]
+    assert len(_list_arrow_files(d)) == n1, "replayed batch published twice"
+    assert rows() == [1, 2, 3]
 
     # the NEXT batch still publishes normally
     w.commit([w.write(iter([batch]))], 1)
-    assert sorted(
-        r.x for r in spark.read.format("quiver").load(d).collect()
-    ) == [1, 1, 2, 2, 3, 3]
+    assert rows() == [1, 1, 2, 2, 3, 3]
 
 
 def test_enable_on_plain_session(tmp_path):

@@ -740,10 +740,8 @@ def test_jvm_streaming_sink_restart_appends_only_delta(spark, tmp_path):
 
 def test_stream_writer_router(spark, tmp_path):
     """sources.stream_writer has one path: every micro-batch is one
-    sources.write append, so the batch router picks each batch's engine
-    — quiverjvm for a JVM-encodable schema with JVM options, the Python
-    sink for a stream naming a Python-only option (require_not_null).
-    Routing never changes what readers see: both streams round-trip
+    sources.write append on the quiverjvm writer, with or without
+    ``require_not_null`` (checked in the plan). Both streams round-trip
     through BOTH batch readers."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
@@ -769,7 +767,7 @@ def test_stream_writer_router(spark, tmp_path):
     want = sorted(map(tuple, spark.read.format("quiverjvm").load(src).collect()))
     for name, opts, engine in (
         ("dst", {}, "quiverjvm"),
-        ("dst2", {"require_not_null": "id"}, "quiver"),
+        ("dst2", {"require_not_null": "id"}, "quiverjvm"),
     ):
         dst = str(tmp_path / name)
         engines.clear()
@@ -878,6 +876,38 @@ def test_quiverjvm_format_has_no_stream_write(spark, tmp_path):
             .start()
         )
     assert os.listdir(dst) == []
+
+
+def test_quiver_format_has_no_stream_write(spark, tmp_path):
+    """``writeStream.format("quiver")`` fails, naming
+    ``sources.stream_writer``, and publishes nothing: the Python stream
+    sink is gone, so every stream into a quiver table is routed."""
+    from quiver_spark.sources import register
+
+    register(spark)
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    spark.range(10).write.format("quiver").mode("overwrite").save(src)
+    with pytest.raises(Exception, match="sources.stream_writer"):
+        q = (
+            spark.readStream.format("quiver")
+            .load(src)
+            .writeStream.format("quiver")
+            .option("path", dst)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        if q.exception() is not None:
+            raise q.exception()
+    data = [
+        f
+        for _d, _s, files in os.walk(dst)
+        for f in files
+        if f.endswith(".quiver")
+    ]
+    assert data == []
 
 
 def test_jvm_stream_sink_concurrent_python_append(spark, tmp_path):

@@ -97,9 +97,9 @@ def test_maintenance_writes_go_through_sources_write(spark, tmp_path, monkeypatc
 
 
 def test_routed_writes_default_to_lz4(spark, tmp_path):
-    """A write that names no codec stores lz4 blocks on either engine:
-    a load into a new directory, an append and an overwrite through the
-    JVM writer, and a write the Python sink takes."""
+    """A write that names no codec stores lz4 blocks: a load into a new
+    directory, an append and an overwrite, and a load naming
+    ``require_not_null``."""
     from quiver_spark import sources
     from quiver_spark.format.stat import stat_file
     from quiver_spark.jvm import attach_jar
@@ -126,7 +126,7 @@ def test_routed_writes_default_to_lz4(spark, tmp_path):
     assert codecs(jvm) == {"lz4"}
     assert sources.write(df, jvm, mode="overwrite") == "quiverjvm"
     assert codecs(jvm) == {"lz4"}
-    assert sources.write(df, py, require_not_null="h") == "quiver"
+    assert sources.write(df, py, require_not_null="h") == "quiverjvm"
     assert codecs(py) == {"lz4"}
 
 
@@ -152,3 +152,154 @@ def test_attach_jar_remembers_only_a_verified_success(monkeypatch):
     assert jvm.attach_jar(s) and jvm.attach_jar(s)
     assert len(probes) == 3
     assert jvm.attach_jar(Session()) and len(probes) == 4
+
+
+def _job_bomb(spark, *cols):
+    """A frame whose every row raises ``job ran`` when a job evaluates it:
+    a refusal that surfaces any other error came after a job started."""
+    return spark.range(3).selectExpr(
+        "if(id >= 0, raise_error('job ran'), id) AS id", *cols
+    )
+
+
+def test_require_not_null_is_a_plan_check(spark, tmp_path):
+    """``require_not_null`` is checked in the plan of the quiverjvm
+    write: a valid load takes the JVM writer; a NULL raises ``NOT NULL
+    constraint violated`` and publishes nothing, leaving no stage; a
+    column the frame lacks is refused before any job."""
+    from quiver_spark import sources
+    from quiver_spark.jvm import attach_jar
+    from quiver_spark.sources import snapshot
+
+    if not attach_jar(spark):
+        pytest.skip("quiverjvm jar cannot attach")
+    t = str(tmp_path / "t")
+    df = spark.range(20).selectExpr("id", "concat('v', id) AS s")
+    assert sources.write(df, t, require_not_null="id,s") == "quiverjvm"
+    before = sorted(map(tuple, sources.scan(spark, t).collect()))
+    bad = spark.range(30, 33).selectExpr(
+        "id", "if(id = 31, NULL, 'x') AS s"
+    )
+    with pytest.raises(Exception, match="NOT NULL constraint violated"):
+        sources.write(bad, t, mode="append", require_not_null="s")
+    assert sorted(map(tuple, sources.scan(spark, t).collect())) == before
+    assert not os.path.exists(os.path.join(t, snapshot.STAGING_DIR))
+    with pytest.raises(ValueError, match="require_not_null column 'nope'"):
+        sources.write(_job_bomb(spark), t, mode="append",
+                      require_not_null="nope")
+    assert not os.path.exists(os.path.join(t, snapshot.STAGING_DIR))
+
+
+@pytest.mark.parametrize(
+    "cols, options, match",
+    [
+        (("NULL AS n",), {}, "n void"),
+        ((), {"page_stats": "false"}, "page_stats"),
+    ],
+    ids=["null_typed_column", "unknown_option"],
+)
+def test_write_refusals_come_before_any_job(spark, tmp_path, cols, options,
+                                            match):
+    """A column the quiverjvm writer cannot encode and an option
+    ``sources.write`` does not take each raise ValueError, naming it,
+    before any job runs and before a stage (or the table) exists."""
+    from quiver_spark import sources
+
+    t = str(tmp_path / "t")
+    with pytest.raises(ValueError, match=match):
+        sources.write(_job_bomb(spark, *cols), t, **options)
+    assert not os.path.exists(t)
+
+
+def test_write_without_the_jar_names_the_build(spark, tmp_path, monkeypatch):
+    """No fallback engine: when the jar does not attach, ``sources.write``
+    raises before any job, naming the jar's build script."""
+    from quiver_spark import jvm, sources
+
+    monkeypatch.setattr(jvm, "attach_jar", lambda s: False)
+    t = str(tmp_path / "t")
+    with pytest.raises(RuntimeError, match="jvm/build.sh"):
+        sources.write(_job_bomb(spark), t)
+    assert not os.path.exists(t)
+
+
+@pytest.mark.parametrize("how", ["quiver", "arrowipc", "sources.write"])
+def test_max_rows_per_file_rolls_at_exactly_n(spark, tmp_path, how):
+    """One task of 2N+3 rows writes files of N, N and 3 rows on every
+    writer: the Python sinks roll at exactly N, as quiverjvm does."""
+    import pyarrow.ipc as ipc
+
+    from quiver_spark import sources
+    from quiver_spark.format.reader import read_table
+    from quiver_spark.jvm import attach_jar
+    from quiver_spark.sources import snapshot
+
+    n = 10
+    df = spark.range(0, 2 * n + 3, 1, 1)
+    t = str(tmp_path / "t")
+    if how == "sources.write":
+        if not attach_jar(spark):
+            pytest.skip("quiverjvm jar cannot attach")
+        sources.write(df, t, max_rows_per_file=n)
+    else:
+        sources.register(spark)
+        sources.register_arrow(spark)
+        df.write.format(how).option("max_rows_per_file", str(n)).mode(
+            "overwrite"
+        ).save(t)
+    root = snapshot.data_root(t)
+    if how == "arrowipc":
+        sizes = [
+            ipc.open_file(f).read_all().num_rows
+            for f in snapshot.list_files(root, "*.arrow")
+        ]
+    else:
+        sizes = [
+            read_table(f).num_rows
+            for f in snapshot.list_files(root, "*.quiver")
+        ]
+    assert sorted(sizes) == [3, n, n]
+
+
+def test_plain_session_writes_and_scans_on_quiverjvm(tmp_path):
+    """A plain session (one JVM, ``local[1]``, no ``spark.jars``):
+    ``sources.write`` attaches the jar and returns ``"quiverjvm"``, and
+    ``sources.scan`` reads the rows back on the JVM reader."""
+    import subprocess
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = textwrap.dedent(
+        f"""
+        from pyspark.sql import SparkSession
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        assert not spark.conf.get("spark.jars", "")
+        from quiver_spark import sources
+        t = {str(tmp_path / "t")!r}
+        df = spark.range(50).selectExpr("id", "concat('v', id) AS s")
+        assert sources.write(df, t) == "quiverjvm"
+        back = sources.scan(spark, t)
+        plan = back._jdf.queryExecution().executedPlan().toString()
+        assert "quiverjvm" in plan.lower(), plan
+        assert sorted(map(tuple, back.collect())) == sorted(
+            map(tuple, df.collect()))
+        print("PLAIN_SESSION_OK")
+        """
+    )
+    env = {
+        k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"
+    }
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH", "")) if p
+    )
+    p = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=str(tmp_path),
+        env=env,
+    )
+    assert p.returncode == 0, (p.stdout[-1500:], p.stderr[-3000:])
+    assert "PLAIN_SESSION_OK" in p.stdout
