@@ -105,6 +105,7 @@ def main() -> None:
         CACHE_ROOT,
         quiver_relation,
     )
+    from quiver_spark.sources import write
 
     # Nested-scan proxy fixture (round 12): the embeddings table
     # (array<float> + flat columns — the input class of every dedup/ANN
@@ -122,12 +123,10 @@ def main() -> None:
     emb_py_df = quiver_relation(spark, emb_qv_dir, engine="python")
 
     tag = os.path.basename(sf_dir.rstrip("/"))
-    mf_qv = os.path.join(CACHE_ROOT, tag, "lineitem-manyfiles-qv")
+    mf_qv = os.path.join(CACHE_ROOT, tag, "lineitem-manyfiles-qv-v2")
     mf_pq = os.path.join(CACHE_ROOT, tag, "lineitem-manyfiles-pq")
     if not os.path.exists(os.path.join(mf_qv, "_done")):
-        spark.read.parquet(li_parquet).repartition(256).write.format(
-            "quiver"
-        ).mode("overwrite").save(mf_qv)
+        write(spark.read.parquet(li_parquet).repartition(256), mf_qv)
         with open(os.path.join(mf_qv, "_done"), "w") as f:
             f.write("ok")
     if not os.path.exists(os.path.join(mf_pq, "_done")):
@@ -144,7 +143,7 @@ def main() -> None:
     # appended file from the manifest's commit stamps, the full side
     # rescans everything. Separate fixture from the manyfiles pair so
     # the append can't skew that ratio.
-    cdc_qv = os.path.join(CACHE_ROOT, tag, "lineitem-cdc-qv")
+    cdc_qv = os.path.join(CACHE_ROOT, tag, "lineitem-cdc-qv-v2")
     if not os.path.exists(os.path.join(cdc_qv, "_done")):
         import shutil as _shutil
 
@@ -153,12 +152,11 @@ def main() -> None:
         # contract below — rebuild from scratch
         _shutil.rmtree(cdc_qv, ignore_errors=True)
         li0 = spark.read.parquet(li_parquet)
-        li0.filter("l_orderkey % 100 > 0").repartition(64).write.format(
-            "quiver"
-        ).mode("overwrite").save(cdc_qv)
-        li0.filter("l_orderkey % 100 = 0").coalesce(1).write.format(
-            "quiver"
-        ).mode("append").save(cdc_qv)
+        write(li0.filter("l_orderkey % 100 > 0").repartition(64), cdc_qv)
+        write(
+            li0.filter("l_orderkey % 100 = 0").coalesce(1), cdc_qv,
+            mode="append",
+        )
         with open(os.path.join(cdc_qv, "_done"), "w") as f:
             f.write("ok")
     cdc_full_df = quiver_relation(spark, cdc_qv, engine="python")
@@ -230,20 +228,19 @@ def main() -> None:
         .mode("overwrite")
         .save(),
         # write proxies (BASELINE.md proxy #2): full-table sink through each
-        # format's writer on identical data
+        # format's writer on identical data; quiver writes through
+        # sources.write (the quiverjvm writer, staged + driver commit)
         "write_parquet_lineitem": lambda: li_df.write.mode("overwrite").parquet(
             f"{wdir}/pq"
         ),
-        "write_quiver_lineitem": lambda: li_df.write.format("quiver")
-        .mode("overwrite")
-        .save(f"{wdir}/qv"),
+        "write_quiver_lineitem": lambda: write(li_df, f"{wdir}/qv"),
     }
     # JVM bulk-ingest writer + JVM columnar scan (round 10,
     # quiver_spark/jvm): rows stay in the JVM on both paths — what closes
-    # the structural Python-sink write gap and the floor-bound Python-DS
-    # scan proxies. Only when the session carries the jar (static conf;
-    # get_spark attaches it when built). The scan twins read the SAME
-    # cached fixtures as the Python-DS proxies.
+    # the floor-bound Python-DS scan proxies. Only when the session
+    # carries the jar (static conf; get_spark attaches it when built).
+    # The scan twins read the SAME cached fixtures as the Python-DS
+    # proxies.
     from quiver_spark.jvm import attach_jar
 
     if attach_jar(spark):
@@ -259,12 +256,13 @@ def main() -> None:
         # from the manifest-inlined sidecars (SupportsPushDownFilters).
         from pyspark.sql import functions as F
 
-        sorted_qv = os.path.join(CACHE_ROOT, tag, "lineitem-sorted-qv")
+        sorted_qv = os.path.join(CACHE_ROOT, tag, "lineitem-sorted-qv-v2")
         sorted_pq = os.path.join(CACHE_ROOT, tag, "lineitem-sorted-pq")
         if not os.path.exists(os.path.join(sorted_qv, "_done")):
-            spark.read.parquet(li_parquet).orderBy("l_shipdate").coalesce(
-                8
-            ).write.format("quiver").mode("overwrite").save(sorted_qv)
+            write(
+                spark.read.parquet(li_parquet).orderBy("l_shipdate").coalesce(8),
+                sorted_qv,
+            )
             with open(os.path.join(sorted_qv, "_done"), "w") as f:
                 f.write("ok")
         if not os.path.exists(os.path.join(sorted_pq, "_done")):
@@ -388,13 +386,10 @@ def main() -> None:
 
         proxies["write_quiverjvm_lineitem"] = _write_quiverjvm
         # Unified write router (round 15, VERDICT r14 Next #2): the same
-        # full-table sink through sources.write — must route this
-        # JVM-eligible write to the quiverjvm writer, so its wall should
-        # track write_quiverjvm_lineitem, not write_quiver_lineitem.
-        from quiver_spark.sources import write as _unified_write
-
+        # full-table sink through sources.write, which must report the
+        # quiverjvm writer; it measures what write_quiver_lineitem does.
         def _write_unified() -> None:
-            engine = _unified_write(li_df, f"{wdir}/qu", mode="overwrite")
+            engine = write(li_df, f"{wdir}/qu", mode="overwrite")
             assert engine == "quiverjvm", engine
 
         proxies["write_unified_lineitem"] = _write_unified

@@ -5,7 +5,8 @@ Layout:
     format/     — the native "quiver" columnar file format (pyarrow-level codec +
                   page + footer machinery, mirroring the reference's on-disk
                   layout; see SURVEY.md §1.2)
-    sources/    — PySpark DataSource V2 wrappers (spark.read.format("quiver"))
+    sources/    — PySpark DataSource V2 readers (spark.read.format("quiver"))
+                  and the one writer, sources.write
     operators/  — the declared relational + LLM-pipeline query surface
                   (SURVEY.md §2.3), each with a DuckDB oracle
     functions/  — reusable column-expression helpers
@@ -22,10 +23,11 @@ def enable(spark):
     """One-call setup on any externally-owned SparkSession: apply the
     runtime-settable confs (UTC, AQE, Arrow, Python filter pushdown) and
     register the "quiver" DataSource, shipping the package to executors.
-    After this, ``spark.read.format("quiver")`` / ``df.write.format("quiver")``
-    work exactly as on a session built by ``quiver_spark.session.get_spark``;
-    ``quiver_spark.sources.write`` / ``stream_writer`` write through the
-    quiverjvm writer, attaching its jar to the session on first use.
+    After this, ``spark.read.format("quiver")`` works exactly as on a
+    session built by ``quiver_spark.session.get_spark``. Quiver tables are
+    written through ``quiver_spark.sources.write`` / ``stream_writer``
+    (the quiverjvm writer, whose jar attaches to the session on first
+    use); ``df.write.format("quiver")`` fails, naming them.
 
     Caveat for STREAMING reads on an externally-built session: Spark's
     streaming-source runner worker does not receive addPyFile includes, so

@@ -140,7 +140,6 @@ def build_file_stats(
     per_column: dict[str, list[tuple[object, object, int]]],
     page_rows: list[int],
     page_crc32: list[list[int]] | None = None,
-    per_column_bloom: dict[str, list[str | None]] | None = None,
 ) -> dict:
     out = {
         "version": STATS_VERSION,
@@ -158,13 +157,6 @@ def build_file_stats(
             for name, stats in per_column.items()
         },
     }
-    for name, pages in (per_column_bloom or {}).items():
-        # blooms attach to the column entry (created above whenever the
-        # type supports min/max; bloomable types always do)
-        out["columns"].setdefault(name, {})["bloom"] = {
-            "k": BLOOM_K,
-            "pages": pages,
-        }
     if page_crc32 is not None:
         # per-LEAF lists of crc32(page bytes as written), in footer meta
         # order — silent-corruption detection for object-store transfers
@@ -246,7 +238,10 @@ def page_bloom(arr: pa.Array) -> str | None:
     range spans the domain, but a bloom answers "is key K possibly
     here?" per page). Double hashing (Kirsch-Mitzenmacher) over a
     blake2b-128 of the canonical key; no false negatives by
-    construction. None when the type is unsupported."""
+    construction. None when the type is unsupported. The quiverjvm
+    writer builds the blooms (``sources.write(..., bloom_columns=...)``);
+    the Python writer does not, and this is the reference its unit test
+    pins."""
     import base64
 
     t = arr.type

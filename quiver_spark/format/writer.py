@@ -64,11 +64,6 @@ class WriteOptions:
     # format.encode_mb_per_s.* / format.decode_mb_per_s.* metrics.
     forbidden: tuple[str, ...] = ()
     page_stats: bool = True  # per-page min/max sidecar (engine extension)
-    #: columns to additionally index with per-page BLOOM filters (point-
-    #: lookup data skipping where min/max is useless — unsorted high-
-    #: cardinality ids). Opt-in: ~1 byte/row/column of sidecar and a
-    #: hash pass at write time. Int-family + string columns only.
-    bloom_columns: tuple[str, ...] = ()
 
     def codec_options(self) -> CodecOptions:
         return CodecOptions(
@@ -200,7 +195,6 @@ def write_table(table: pa.Table, path: str, options: WriteOptions | None = None)
 
     metas: list[tuple[int, list[tuple[int, int]]]] = []
     col_stats: dict[str, list[tuple[object, object, int]]] = {}
-    col_blooms: dict[str, list[str | None]] = {}
     page_rows: list[int] = []
     page_crcs: list[list[int]] = []  # per leaf, footer meta order
     # a sidecar from a previous write of this path is stale the moment new
@@ -227,14 +221,7 @@ def write_table(table: pa.Table, path: str, options: WriteOptions | None = None)
             # flat leaves, SLOT count for nested leaves (common.rs:103-107)
             leaf_pages: list[list[tuple[bytes, int]]] = [[] for _ in range(n_leaves)]
             want_stats = options.page_stats and stats_mod.supports_stats(field_.type)
-            want_bloom = (
-                options.page_stats
-                and not is_nested
-                and field_.name in options.bloom_columns
-                and stats_mod.supports_bloom(field_.type)
-            )
             stats_rows: list[tuple[object, object, int]] = []
-            bloom_pages: list[str | None] = []
             rows_per_page: list[int] = []
             for start in range(0, max(n, 1), max(page_size, 1)):
                 if n == 0 and start > 0:
@@ -258,8 +245,6 @@ def write_table(table: pa.Table, path: str, options: WriteOptions | None = None)
                     stats_rows.append(
                         stats_mod.page_stats(page_arr, hashed[0] if hashed else None)
                     )
-                if want_bloom:
-                    bloom_pages.append(stats_mod.page_bloom(page_arr))
                 if n == 0:
                     break
             for li in range(n_leaves):
@@ -277,8 +262,6 @@ def write_table(table: pa.Table, path: str, options: WriteOptions | None = None)
                 page_rows = rows_per_page
             if want_stats:
                 col_stats[field_.name] = stats_rows
-            if want_bloom:
-                col_blooms[field_.name] = bloom_pages
 
         # footer: schema IPC bytes — raw flatbuffer Message, the arrow2
         # schema_to_bytes layout (reference src/write/writer.rs:137, which
@@ -300,9 +283,7 @@ def write_table(table: pa.Table, path: str, options: WriteOptions | None = None)
     if options.page_stats:
         stats_mod.write_sidecar(
             path,
-            stats_mod.build_file_stats(
-                col_stats, page_rows, page_crcs, col_blooms or None
-            ),
+            stats_mod.build_file_stats(col_stats, page_rows, page_crcs),
         )
     out: dict[str, list[tuple[int, int]]] = {}
     li = 0

@@ -1,6 +1,6 @@
 """JVM-side quiver DataSource ("quiverjvm") — the native fast lane.
 
-Write side: the Python sink's pure-write cost is structural — rows cross
+Write side: a Python sink's pure-write cost is structural — rows cross
 the JVM→Python Arrow boundary before a single page is encoded
 (BASELINE.md round-7 write-floor proof: a NO-OP Python Arrow sink costs
 the same as the full quiver write). The Java DataSourceV2 writer keeps
@@ -8,7 +8,7 @@ rows in the JVM: columnar buffers → quiver files (the COMPLETE adaptive
 cascade since round 11 — OneValue/RLE/Dict/Bitpacking/DeltaBitpacking/
 Freq/Patas over none/lz4/zstd blocks, the Python chooser's eligibility
 rules — storage parity with the Python adaptive writer), byte-compatible with the Python reader — 0.69-0.80x
-parquet wall at sf0.1 vs the Python sink's 1.4-2.8x.
+parquet wall at sf0.1 vs the former Python sink's 1.4-2.8x.
 
 Read side: QuiverJvmRead/QuiverPageDecoder decode the FULL adaptive
 codec surface into ColumnarBatches with no JVM→Python boundary and no

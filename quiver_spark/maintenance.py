@@ -108,7 +108,7 @@ def compact(
     travel to the pre-evolution generation still resolves the old
     layout).
 
-    In-place compaction rides the sink's atomic generation swap: the read
+    In-place compaction rides the commit's atomic generation swap: the read
     resolves (and freezes) the table's live generation at plan time, the
     rewrite publishes into a fresh ``gen-NNNNNN/`` directory, and the
     ``_current`` pointer flips at commit — a failed compaction leaves the
@@ -1370,7 +1370,7 @@ def ingest(
     queryable with O(1) scan planning when it returns: an overwrite
     through :func:`quiver_spark.sources.write`, so the quiverjvm writer
     writes it (rows never cross the JVM→Python boundary — measured 0.69x
-    parquet wall at sf0.1 vs ~2.8x for the Python sink, BASELINE.md
+    parquet wall at sf0.1 vs ~2.8x for the former Python sink, BASELINE.md
     round-10 ingest table). Its tasks write per-file stats sidecars
     (zone maps, optional blooms, CRCs) and the driver's commit builds the
     manifest from them, so the first scan plans from ONE metadata read.

@@ -520,6 +520,22 @@ def quiver_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def documents_incremental_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The cached three-commit documents table (doc_id, lang, n_chars):
+    rows with ``doc_id % 10 < 5`` as commit 1, then appends of
+    ``5, 6, 7`` (commit 2) and of ``8, 9`` (commit 3)."""
+
+    def build(d: str) -> None:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            "doc_id", "lang", "n_chars"
+        )
+        write(docs.filter("doc_id % 10 < 5"), d)
+        write(docs.filter("doc_id % 10 in (5, 6, 7)"), d, mode="append")
+        write(docs.filter("doc_id % 10 in (8, 9)"), d, mode="append")
+
+    return _marker_dir(spark, sf_dir, "documents-incremental-v2", build)
+
+
 @register(
     "quiver_incremental_scan",
     oracle="""
@@ -546,16 +562,7 @@ def quiver_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-fails. At 100 TB this is the path that processes a table's new
     data without rescanning the table: O(changed files) planned, not
     O(files)."""
-
-    def build(d: str) -> None:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "lang", "n_chars"
-        )
-        write(docs.filter("doc_id % 10 < 5"), d)
-        write(docs.filter("doc_id % 10 in (5, 6, 7)"), d, mode="append")
-        write(docs.filter("doc_id % 10 in (8, 9)"), d, mode="append")
-
-    d = _marker_dir(spark, sf_dir, "documents-incremental-v2", build)
+    d = documents_incremental_dir(spark, sf_dir)
     t = quiver_relation(spark, d, changes_since="1")
     return t.groupBy("lang").agg(
         F.count(F.lit(1)).alias("cnt"),

@@ -10,11 +10,13 @@ oracle: the jar attaches at RUNTIME via a verified ``ADD JAR``
 (jvm.attach_jar), so the driver's plain session exercises the real Java
 scan, not a fallback.
 
-Reference parity: the scan decodes files written by the PYTHON adaptive
-writer (chooser semantics per /root/reference/src/compression/mod.rs),
-so a green row proves the Java decoder agrees byte-for-byte with the
-reference codec cascade; the roundtrip query proves the Java writer's
-pages (src/write/writer.rs:91-167 envelope) re-read exactly.
+Every fixture here is written through ``sources.write`` (the quiverjvm
+writer, pages in the src/write/writer.rs:91-167 envelope), so a green
+row proves the Java writer's pages re-read exactly through the layout,
+DDL and cursor each query exercises. The Java decoder's agreement with
+the Python adaptive writer (chooser semantics per
+/root/reference/src/compression/mod.rs) is pinned on files
+``format.writer.write_table`` writes (tests/test_jvm_reader.py).
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from pyspark.sql import functions as F
 
 from quiver_spark.functions import dsum, sql_dsum
 from quiver_spark.registry import register
+from quiver_spark.sources import write
 
 
 def _jvm_scan(spark: SparkSession, table_dir: str, **options: str) -> DataFrame:
@@ -291,7 +294,7 @@ def quiver_write_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference ethos: one writer API over per-type encoders
     (/root/reference/src/write/writer.rs:91-167)."""
     from quiver_spark.operators.format_queries import CACHE_ROOT
-    from quiver_spark.sources import scan, write
+    from quiver_spark.sources import scan
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     d_jvm = os.path.join(CACHE_ROOT, tag, "orders-unified-write-v3")
@@ -514,8 +517,8 @@ GROUP BY p_brand
 )
 def quiverjvm_alter_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-ALTER table through the JVM scan (round-11 guard lift,
-    VERDICT r10 item 5): part is sink-written, then evolved with
-    metadata-only DDL — rename_column p_type→part_type (old files
+    VERDICT r10 item 5): part is written as a generation, then evolved
+    with metadata-only DDL — rename_column p_type→part_type (old files
     resolve through the per-file declared→physical cmap), drop_column
     p_name (bytes stay, name vanishes), add_column priority (old files
     NULL-FILL — no default; defaults ride the round-12 lift and their own
@@ -532,7 +535,7 @@ def quiverjvm_alter_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         from quiver_spark import maintenance as M
 
         full = spark.read.parquet(f"{sf_dir}/part.parquet")
-        full.coalesce(2).write.format("quiver").mode("overwrite").save(d)
+        write(full.coalesce(2), d, keep_generations="1")
         M.rename_column(d, "p_type", "part_type")
         M.drop_column(d, "p_name")
         M.add_column(d, "priority", "bigint")
@@ -544,9 +547,9 @@ def quiverjvm_alter_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_retailprice",
             "CAST(p_size AS BIGINT) AS priority",
         )
-        post.coalesce(1).write.format("quiver").mode("append").save(d)
+        write(post.coalesce(1), d, mode="append")
 
-    d = _marker_dir(spark, sf_dir, "part-alter-jvm", build)
+    d = _marker_dir(spark, sf_dir, "part-alter-jvm-v2", build)
     t = _jvm_scan(spark, d)
     return t.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -582,9 +585,9 @@ def quiverjvm_nested_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     list<float> (the real embedding column), a struct<lab:string,dim:int>
     and a map<string,bigint> — all rebuilt by the Java Dremel assembler
     (QuiverNested, rep/def reconstruction per the reference's NestedState
-    at src/read/read_basic.rs:65-173) from pages the PYTHON writer
-    shredded. The struct/map columns are derived from flat columns at
-    build time, so the oracle recomputes them algebraically from parquet:
+    at src/read/read_basic.rs:65-173) from pages the quiverjvm writer
+    shredded (1,000-row pages). The struct/map columns are derived from
+    flat columns at build time, so the oracle recomputes them algebraically from parquet:
     a mis-assembled offset, a leaf attached to the wrong parent, or a
     value/null swap shifts the sums and hash-fails. int_vec quantization
     keeps the float math exact across engines."""
@@ -599,11 +602,9 @@ def quiverjvm_nested_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "named_struct('lab', label, 'dim', size(embedding)) AS meta",
             "map(label, vec_id) AS tags",
         )
-        src.coalesce(2).write.format("quiver").option(
-            "max_page_size", "1000"
-        ).mode("overwrite").save(d)
+        write(src.coalesce(2), d, max_page_size="1000")
 
-    d = _marker_dir(spark, sf_dir, "embeddings-nested-jvm", build)
+    d = _marker_dir(spark, sf_dir, "embeddings-nested-jvm-v2", build)
     t = _jvm_scan(spark, d)
     iv = int_vec("embedding")
     return (
@@ -653,8 +654,8 @@ GROUP BY p_brand
 )
 def quiverjvm_default_fill_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column initial-defaults through the JVM scan (round-12 guard lift,
-    VERDICT r11 item 4): part is sink-written, add_column declares
-    grade='std' and bonus=1.25 (Iceberg initial-default semantics — files
+    VERDICT r11 item 4): part is written as a generation, add_column
+    declares grade='std' and bonus=1.25 (Iceberg initial-default semantics — files
     that PREDATE the ALTER fill the default, not null), then a post-ALTER
     append lands rows physically carrying different values. The reader
     constant-fills per chunk from the manifest's column_defaults (typed
@@ -670,7 +671,7 @@ def quiverjvm_default_fill_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         full = spark.read.parquet(f"{sf_dir}/part.parquet").select(
             "p_partkey", "p_brand", "p_size"
         )
-        full.coalesce(2).write.format("quiver").mode("overwrite").save(d)
+        write(full.coalesce(2), d, keep_generations="1")
         M.add_column(d, "grade", "string", default="std")
         M.add_column(d, "bonus", "decimal(10,2)", default="1.25")
         post = full.filter("p_size >= 45").selectExpr(
@@ -680,9 +681,9 @@ def quiverjvm_default_fill_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "'elite' AS grade",
             "CAST('9.75' AS DECIMAL(10,2)) AS bonus",
         )
-        post.coalesce(1).write.format("quiver").mode("append").save(d)
+        write(post.coalesce(1), d, mode="append")
 
-    d = _marker_dir(spark, sf_dir, "part-defaults-jvm", build)
+    d = _marker_dir(spark, sf_dir, "part-defaults-jvm-v2", build)
     t = scan(spark, d)
     if "quiverjvm" not in t._jdf.queryExecution().analyzed().toString():
         raise RuntimeError(
@@ -778,11 +779,9 @@ def quiverjvm_limit_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quiver_spark.operators.format_queries2 import _marker_dir
 
     def build(d):
-        spark.read.parquet(f"{sf_dir}/orders.parquet").coalesce(1).write.format(
-            "quiver"
-        ).mode("overwrite").save(d)
+        write(spark.read.parquet(f"{sf_dir}/orders.parquet").coalesce(1), d)
 
-    d = _marker_dir(spark, sf_dir, "orders-limit-jvm", build)
+    d = _marker_dir(spark, sf_dir, "orders-limit-jvm-v2", build)
     head = _jvm_scan(spark, d).select("o_orderkey").limit(1000)
     return head.agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -852,23 +851,11 @@ def quiverjvm_cdc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at-least-once, _files_changed_since parity). The oracle rebuilds the
     second append's rows from the parquet original: a baseline or
     first-append file leaking in, or an appended file dropped, hash-fails."""
-    from quiver_spark.operators.format_queries2 import _marker_dir
+    from quiver_spark.operators.format_queries2 import (
+        documents_incremental_dir,
+    )
 
-    def build(d: str) -> None:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "lang", "n_chars"
-        )
-        docs.filter("doc_id % 10 < 5").write.format("quiver").mode(
-            "overwrite"
-        ).save(d)
-        docs.filter("doc_id % 10 in (5, 6, 7)").write.format("quiver").mode(
-            "append"
-        ).save(d)
-        docs.filter("doc_id % 10 in (8, 9)").write.format("quiver").mode(
-            "append"
-        ).save(d)
-
-    d = _marker_dir(spark, sf_dir, "documents-incremental", build)
+    d = documents_incremental_dir(spark, sf_dir)
     t = _jvm_scan(spark, d, changes_since="2")
     return t.groupBy("lang").agg(
         F.count(F.lit(1)).alias("cnt"),

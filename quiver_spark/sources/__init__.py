@@ -311,8 +311,9 @@ def _checked(df, constraints: dict[str, str], not_null=()):
 def _write_options(options) -> tuple[dict, dict, list[str]]:
     """Split ``write``'s options into (snapshot options, JVM writer
     options, ``require_not_null`` columns); an option outside
-    JVM_WRITE_OPTS, SNAPSHOT_OPTS and ``require_not_null`` raises
-    ValueError naming it."""
+    JVM_WRITE_OPTS, SNAPSHOT_OPTS and ``require_not_null``, or a
+    ``max_page_size`` or ``max_rows_per_file`` that is not a positive
+    integer, raises ValueError naming it."""
     unknown = sorted(
         set(options) - JVM_WRITE_OPTS - SNAPSHOT_OPTS - {"require_not_null"}
     )
@@ -321,6 +322,15 @@ def _write_options(options) -> tuple[dict, dict, list[str]]:
             f"quiver write does not take the option(s) {unknown}; it takes "
             f"{sorted(JVM_WRITE_OPTS | SNAPSHOT_OPTS)} and require_not_null"
         )
+    # the JVM encoder divides by the page size, and a row cap below 1
+    # would flush a file per row
+    for k in ("max_page_size", "max_rows_per_file"):
+        v = str(options.get(k, 1))
+        if not (v.isdecimal() and int(v) > 0):
+            raise ValueError(
+                f"quiver write option {k} must be a positive integer, "
+                f"got {options[k]!r}"
+            )
     snap = {k: v for k, v in options.items() if k in SNAPSHOT_OPTS}
     opts = {k: v for k, v in options.items() if k in JVM_WRITE_OPTS}
     not_null = [
@@ -341,9 +351,10 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     Options: JVM_WRITE_OPTS go to the writer (``codec`` defaults to
     lz4); SNAPSHOT_OPTS go to the commit; ``require_not_null`` (comma
     list of columns) is checked in the plan with the destination's CHECK
-    constraints (``_checked``). Three things raise ValueError or
+    constraints (``_checked``). Four things raise ValueError or
     RuntimeError before any job runs and before a stage exists: any
-    other option, a column the writer cannot encode (``jvm.
+    other option, a ``max_page_size`` or ``max_rows_per_file`` that is
+    not a positive integer, a column the writer cannot encode (``jvm.
     supports_schema``; e.g. a NULL-typed column — cast it), and a jar
     that does not attach to the session.
 

@@ -20,11 +20,11 @@ Design, mirroring the quiver source at the right altitude:
   batch is buffer views over the mapping, and a ``columns`` projection
   selects buffers without touching the rest (IPC stores raw Arrow buffers;
   there is nothing to decode).
-* WRITES reuse the quiver sink's whole commit protocol — staged task
-  output, atomic generation overwrites, retention/time travel, the
-  multi-writer lock/claim/CAS guards (pointer_store.py) — by subclassing
-  the writer and swapping only the bytes-on-disk step for
-  ``pyarrow.ipc.new_file``. One table layout, two formats.
+* WRITES stage each task's ``pyarrow.ipc.new_file`` output and publish
+  it through the quiver tables' commit (``snapshot.commit``): atomic
+  generation overwrites, retention/time travel, the multi-writer
+  lock/claim/CAS guards (pointer_store.py). One table layout, two
+  formats.
 
 No statistics exist in IPC footers, so there is no page pruning here;
 filters evaluate row-level above the scan (Catalyst), and the format's
@@ -40,22 +40,25 @@ from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
+    WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
 from quiver_spark.sources import snapshot
+from quiver_spark.sources.pointer_store import store_from_option
 from quiver_spark.sources.quiver_datasource import (
     DEFAULT_PARTITION_BYTES,
-    QuiverWriter,
     _data_root,
     _list_files_pattern,
     _opt_path,
     _spark_field,
     _spark_schema,
+    write_placeholder,
 )
 
 FORMAT_NAME = "arrowipc"
@@ -337,38 +340,76 @@ class ArrowIpcScanReader(DataSourceReader):
         return gen()
 
 
-class ArrowIpcWriter(QuiverWriter):
-    """The quiver sink's staged-commit / generation / multi-writer
-    machinery with Arrow IPC bytes on disk. Only ``write()`` (the
-    task-side bytes step) and the manifest format differ; overwrite atomicity, retention, time travel, rollback, and the
-    concurrency guards are inherited verbatim."""
+@dataclass
+class ArrowIpcCommit(WriterCommitMessage):
+    """Per-task commit message: the task's staging directory and the
+    files it staged there; the driver publishes them on job commit."""
 
-    DATA_GLOBS = ("*.arrow",)
-    MANIFEST_FMT = "arrow"
+    task_dir: str = ""
+    files: tuple = ()
+
+
+class ArrowIpcWriter(DataSourceArrowWriter):
+    """The arrowipc batch sink: each task stages ``.arrow`` files under
+    the hidden ``_temporary/`` root, and the driver publishes them
+    through ``snapshot.commit`` (overwrite as a generation swap,
+    ``keep_generations`` retention, ``pointer_store``). Options:
+    ``max_rows_per_file`` (a task rolls to a new file at exactly that
+    many rows) and ``require_not_null`` (comma list of columns). A table
+    with CHECK constraints is refused, as is ``partition_by``."""
 
     def __init__(self, options, spark_schema=None, overwrite: bool = False):
-        super().__init__(options, spark_schema, overwrite)
-        if self.partition_by:
-            # inherited option the arrow write() does not implement —
-            # refuse loudly rather than silently writing a flat layout
+        self.options = options
+        self.spark_schema = spark_schema
+        self.overwrite = overwrite
+        self.path = _opt_path(options)
+        self.max_rows = max(1, int(options.get("max_rows_per_file", 1 << 22)))
+        rnn = options.get("require_not_null", "")
+        self.require_not_null = tuple(
+            c.strip() for c in rnn.split(",") if c.strip()
+        )
+        if options.get("partition_by"):
             raise ValueError(
                 "partition_by is not supported by the arrowipc sink; "
                 "write quiver (or parquet) for Hive-partitioned layouts"
             )
+        # CHECK constraints are checked only in the Spark plan that
+        # quiver_spark.sources.write builds; this sink does not evaluate
+        # them, so it refuses a table whose live manifest has any
+        from quiver_spark.sources import _constraints
 
-    def write(self, iterator):
+        constraints = _constraints(self.path) if self.path else {}
+        if constraints:
+            raise ValueError(
+                f"{self.path} has CHECK constraints {constraints}, which "
+                "this sink does not evaluate — write through "
+                "quiver_spark.sources.write, which checks them"
+            )
+
+    def _check_not_null(self, batch) -> None:
+        for c in self.require_not_null:
+            if c not in batch.schema.names:
+                raise ValueError(
+                    f"require_not_null column {c!r} is not in the "
+                    f"written schema {batch.schema.names}"
+                )
+            nulls = batch.column(batch.schema.names.index(c)).null_count
+            if nulls:
+                raise ValueError(
+                    f"NOT NULL constraint violated: column {c!r} "
+                    f"has {nulls} null(s) in this write — the job "
+                    "aborts and nothing is published"
+                )
+
+    def write(self, iterator) -> ArrowIpcCommit:
         """One task → one .arrow file of the task's batches (rolling to a
-        new file at exactly max_rows rows, like the quiver writer), staged
-        under the hidden `_temporary/` root for the driver-side publish."""
-        import pyarrow as pa
+        new file at exactly max_rows rows), staged under the hidden
+        `_temporary/` root for the driver-side publish."""
         import pyarrow.ipc as ipc
 
-        from quiver_spark.sources.quiver_datasource import (
-            _STAGING_DIR,
-            QuiverCommit,
+        task_dir = os.path.join(
+            self.path, snapshot.STAGING_DIR, uuid.uuid4().hex
         )
-
-        task_dir = os.path.join(self.path, _STAGING_DIR, uuid.uuid4().hex)
         os.makedirs(task_dir, exist_ok=True)
         staged: list[str] = []
         writer = None
@@ -396,7 +437,46 @@ class ArrowIpcWriter(QuiverWriter):
                 batch = batch.slice(take)
         if writer is not None:
             writer.close()
-        return QuiverCommit(task_dir=task_dir, files=tuple(staged))
+        return ArrowIpcCommit(task_dir=task_dir, files=tuple(staged))
+
+    def _publish(self, messages) -> None:
+        """Publish every reporting task's staged files in one
+        ``snapshot.commit``, then sweep day-old staging attempts."""
+        snapshot.commit(
+            self.path,
+            ("*.arrow",),
+            overwrite=self.overwrite,
+            staged=[
+                (m.task_dir, m.files)
+                for m in messages
+                if m is not None and m.task_dir
+            ],
+            fmt="arrow",
+            keep=int(self.options.get("keep_generations", "1")),
+            store=store_from_option(self.options.get("pointer_store")),
+        )
+        snapshot.sweep_stale_staging(self.path)
+
+    def commit(self, messages) -> None:
+        """Driver-side commit: publish staged task output, then ensure a
+        fully-empty result set still leaves a schema-bearing file."""
+        self._publish(messages)
+        if self.spark_schema is not None:
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            write_placeholder(
+                self.path, to_arrow_schema(self.spark_schema), "arrow"
+            )
+
+    def abort(self, messages) -> None:
+        """Drop the staged output of every task that reported; attempts
+        that died before reporting stay under the hidden staging root,
+        invisible to readers, until a later sweep."""
+        import shutil
+
+        for msg in messages:
+            if msg is not None and msg.task_dir:
+                shutil.rmtree(msg.task_dir, ignore_errors=True)
 
 
 class ArrowIpcDataSource(DataSource):

@@ -10,7 +10,7 @@ one genuine scale-killer left in the read path. The reference format's own
 footer exists precisely to make planning read-once per file
 (/root/reference/src/read/reader.rs:168-225), and its async path pre-reads
 a 64 KiB tail to save object-store round trips (:33,180-213); this module
-applies the same economy at DIRECTORY level: the sink's generation commit
+applies the same economy at DIRECTORY level: a write's generation commit
 is an atomic publish point that already knows every file it just moved, so
 it writes ONE manifest file describing all of them, and the planner reads
 that single file instead of N footers.

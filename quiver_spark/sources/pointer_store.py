@@ -2,7 +2,7 @@
 
 An OVERWRITE commit is a two-step protocol: publish staged files into a
 fresh ``gen-NNNNNN/`` directory, then swap the table's ``_current``
-pointer to name it (see ``snapshot.commit``, which every sink and ALTER
+pointer to name it (see ``snapshot.commit``, which every write and ALTER
 publishes through). Both steps touch only
 three storage primitives, which this module isolates behind
 :class:`PointerStore` so a deployment can swap the POSIX implementation
@@ -25,7 +25,7 @@ one-rowgroup misuse guard (``/root/reference/src/write/writer.rs:107-112``)
 and no table/catalog layer at all — multi-writer coordination is engine
 surface this repo adds, and the same refuse-don't-corrupt posture applies.
 
-Concurrency contract (also stated on the sink): with the default local
+Concurrency contract: with the default local
 store, concurrent writers against one table are serialized by the
 advisory lock, so concurrent overwrites commit as two distinct
 generations (last pointer swap wins) and an append never publishes into a
@@ -151,7 +151,7 @@ class PointerStore:
         reader-invisible partial publish can never be observed by a
         concurrent writer's GC. Local impl: ``fcntl.flock`` on
         ``<table>/_writer.lock`` (advisory — both writers must go through
-        this sink; an out-of-band ``rm`` is not protected, same as every
+        this commit; an out-of-band ``rm`` is not protected, same as every
         file-based table format)."""
         os.makedirs(table_path, exist_ok=True)
         import fcntl
@@ -256,8 +256,8 @@ class InMemoryBlobStore(BlobStore):
 
 
 class FileBlobStore(BlobStore):
-    """File-backed BlobStore double usable ACROSS PROCESSES (the sink's
-    commit runs in a spawned Python runner, so an in-memory double can't
+    """File-backed BlobStore double usable ACROSS PROCESSES (an arrowipc
+    sink's commit runs in a spawned Python runner, so an in-memory double can't
     see the driver's writes). Each key is one JSON file under ``root``;
     a per-key ``fcntl`` lock models the object store's SERVER-SIDE
     atomicity of a single conditional PUT — it is not a table-level
@@ -462,10 +462,10 @@ def store_from_option(value: str | None) -> PointerStore:
     forces the lock-less object-store posture, ``"cas:<root>"`` the
     conditional-PUT one over a FileBlobStore (the stand-in for S3/GCS),
     anything else the active store. An option rather than
-    set_pointer_store because the Python sinks (``format("quiver")``,
-    ``"arrowipc"``) commit in a Spark-spawned runner a driver-side
-    set_pointer_store never reaches — the option travels with the
-    serialized writer. Production object-store adapters
+    set_pointer_store because the arrowipc sinks commit in a
+    Spark-spawned runner a driver-side set_pointer_store never reaches —
+    the option travels with the serialized writer (``sources.write``
+    commits in the calling process and takes it too). Production object-store adapters
     still install process-wide via set_pointer_store."""
     value = value or ""
     if value.lower() == "unlocked":

@@ -1,11 +1,11 @@
 """PySpark DataSource V2 for the quiver format:
 
     spark.read.format("quiver").load(dir_or_file)
-    df.write.format("quiver").mode("overwrite").save(dir)
 
-The package itself writes quiver tables through ``sources.write`` (the
-quiverjvm writer); this batch sink is the reference Python writer, and
-the format has no streaming write (``sources.stream_writer`` streams).
+The format only reads. Quiver tables are written through
+``quiver_spark.sources.write`` (batch) and ``sources.stream_writer``
+(streams), both on the quiverjvm writer; ``df.write.format("quiver")``
+and ``df.writeStream.format("quiver")`` fail, naming them.
 
 Split planning mirrors the reference's page-granular reads (NativeReader
 nth/skip_page, src/read/reader.rs:91-146): the driver reads each file's
@@ -39,7 +39,7 @@ wires the statically-known list from every registered recipe; without it a
 narrow projection decodes full row width (measured 4.0x vs parquet on a
 1-of-16-column sf0.1 scan; 1.5x with the option).
 
-Hive-style partitioned layout: `.option("partition_by", "a,b")` on write
+Hive-style partitioned layout: ``sources.write(..., partition_by="a,b")``
 fans rows into `a=v1/b=v2/part-*.quiver` subdirectories (partition columns
 dropped from the files); reads discover `col=value` segments, type them
 (long/double/string, Spark's inference subset), re-attach them as constant
@@ -93,24 +93,14 @@ from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
-from . import snapshot
-from .snapshot import (  # noqa: F401  (protocol names re-exported here)
-    COMMITTED as _COMMITTED,
-    GEN_RE as _GEN_RE,
-    STAGING_DIR as _STAGING_DIR,
-    data_root as _data_root,
-    list_files as _list_files_pattern,
-    sweep_stale_staging,
-)
-from .pointer_store import store_from_option
+from .snapshot import data_root as _data_root
+from .snapshot import list_files as _list_files_pattern
 
 FORMAT_NAME = "quiver"
 # Measured on an idle local[32] host at sf0.1 (600k-row lineitem, min of 5
@@ -132,7 +122,6 @@ DEFAULT_PARTITION_ROWS = 1 << 15
 #: tables never hit it (32k rows ≪ 128 MiB), so relational plans and the
 #: measured scan configs are unchanged.
 DEFAULT_PARTITION_BYTES = 128 << 20
-DEFAULT_MAX_ROWS_PER_FILE = 1 << 22
 
 
 def _opt_path(options) -> str:
@@ -249,13 +238,6 @@ def _discover_partitions(path: str):
         return tuple(out)
 
     return [(c, kinds[c]) for c in cols], {f: typed(f) for f in files}
-
-
-def _part_segment(v) -> str:
-    """One ``col=value`` path value (Hive escaping via URL-quote)."""
-    if v is None:
-        return HIVE_NULL
-    return urllib.parse.quote(str(v), safe="")
 
 
 def _part_matches(filters, values: dict) -> bool:
@@ -515,19 +497,11 @@ class QuiverDataSource(DataSource):
     def reader(self, schema: StructType) -> "QuiverScanReader":
         return QuiverScanReader(self.options, schema)
 
-    def writer(self, schema: StructType, overwrite: bool) -> "QuiverWriter":
-        path = _opt_path(self.options)
-        if not path:
-            raise ValueError("quiver datasource requires a path")
-        os.makedirs(path, exist_ok=True)
-        # overwrite is an ATOMIC GENERATION SWAP at commit time (see
-        # snapshot.commit): staged output publishes into a fresh
-        # gen-NNNNNN/ directory and a `_current` pointer file is atomically
-        # replaced — a failed/killed overwrite job leaves the old table
-        # fully intact, and readers never observe partial or doubled data
-        # (Spark's own file sinks clear the directory at job start —
-        # strictly worse on both counts).
-        return QuiverWriter(self.options, schema, overwrite=overwrite)
+    def writer(self, schema: StructType, overwrite: bool):
+        raise NotImplementedError(
+            "the quiver format has no batch write; write a quiver table "
+            "through quiver_spark.sources.write"
+        )
 
     def streamWriter(self, schema: StructType, overwrite: bool):
         raise NotImplementedError(
@@ -1134,7 +1108,7 @@ class QuiverScanReader(DataSourceReader):
             if self.file_column:
                 names.append(self.file_column)
         # metadata column value: this chunk's file, relative to the data
-        # root (matches manifest keys and the sink's carry_files names)
+        # root (matches manifest keys and a rewrite's carry_files names)
         rel_name = (
             os.path.relpath(chunk_file, self.path)
             if self.file_column
@@ -1527,7 +1501,8 @@ def write_placeholder(table: str, arrow_schema, fmt: str = "quiver") -> None:
     directory fail). It is part of the SAME logical commit, so its
     manifest entry folds into the current sequence number instead of
     bumping it. ``fmt`` is the manifest format, ``"quiver"`` or
-    ``"arrow"``; the sinks and the staged JVM write share this copy."""
+    ``"arrow"``; ``sources.write`` and the arrowipc sinks share this
+    copy."""
     import pyarrow as pa
 
     from .manifest import update_manifest
@@ -1552,297 +1527,6 @@ def write_placeholder(table: str, arrow_schema, fmt: str = "quiver") -> None:
 
         write_table(pa.Table.from_batches([empty]), full, WriteOptions())
     update_manifest(root, [rel], fmt, new_commit=False)
-
-
-@dataclass
-class QuiverCommit(WriterCommitMessage):
-    """Per-task commit message: where the task staged its files and the
-    path of each (relative to the staging dir, preserving Hive partition
-    subdirs) — the driver moves them into place only on job commit."""
-
-    task_dir: str = ""
-    files: tuple = ()
-
-
-class QuiverWriter(DataSourceArrowWriter):
-    """The Python ``"quiver"`` batch sink, the reference writer: tasks
-    stage files under ``_temporary/`` and the driver publishes them
-    through ``snapshot.commit``. ``sources.write`` does not use it; a
-    table with CHECK constraints is refused."""
-
-    #: data-file glob the flat-root sweep owns, sidecars included
-    #: (subclasses writing a different format override — the snapshot
-    #: commit itself is format-agnostic)
-    DATA_GLOBS = ("*.quiver",)
-    #: manifest entry format for files this sink publishes (manifest.py)
-    MANIFEST_FMT = "quiver"
-
-    def __init__(
-        self,
-        options,
-        spark_schema: StructType | None = None,
-        overwrite: bool = False,
-    ):
-        self.options = options
-        self.spark_schema = spark_schema
-        self.overwrite = overwrite
-        self.path = _opt_path(options)
-        self.max_rows = max(1, int(
-            options.get("max_rows_per_file", DEFAULT_MAX_ROWS_PER_FILE)
-        ))
-        self.codec = options.get("codec", options.get("default_codec", "lz4"))
-        ratio = options.get("compress_ratio", "2.0")
-        self.compress_ratio = None if ratio in ("none", "None") else float(ratio)
-        self.max_page_size = int(options.get("max_page_size", 8192))
-        # default mirrors WriteOptions.forbidden: nothing forbidden — patas
-        # sits in the double candidate list per the reference chooser
-        forbidden = options.get("forbidden", "")
-        self.forbidden = tuple(
-            x.strip() for x in forbidden.split(",") if x.strip()
-        )
-        self.page_stats = options.get("page_stats", "true").lower() != "false"
-        # per-page bloom filters for these columns (point-lookup data
-        # skipping on unsorted high-cardinality ids; stats.page_bloom)
-        bcols = options.get("bloom_columns", "")
-        self.bloom_columns = tuple(
-            c.strip() for c in bcols.split(",") if c.strip()
-        )
-        # Hive-style partitioned layout: `.option("partition_by", "a,b")`
-        # writes `a=v1/b=v2/part-*.quiver` subdirectories with the partition
-        # columns dropped from the files (the reader re-attaches them from
-        # the path). Spark's native partitionBy() is not surfaced to Python
-        # data sources, hence the option.
-        pby = options.get("partition_by", "")
-        self.partition_by = [c.strip() for c in pby.split(",") if c.strip()]
-        # File-level copy-on-write (row-level DELETE/UPDATE/MERGE support,
-        # maintenance.delete_where & co): an overwrite commit additionally
-        # hard-links these UNTOUCHED files (paths relative to the snapshot
-        # they came from) into the new generation, so a rewrite's cost is
-        # proportional to the files a predicate touches, never table size.
-        # carry_src names the snapshot the list was resolved against
-        # (snapshot.carry_source: generation, "" = flat root, plus a
-        # digest of its file set); publish verifies it is STILL live and
-        # unchanged before carrying — a concurrent overwrite or append
-        # turns the rewrite into a loud ConcurrentWriteError instead of a
-        # mixed snapshot or lost rows.
-        cf = options.get("carry_files")
-        self.carry_files: list[str] = json.loads(cf) if cf else []
-        #: None = plain overwrite; set (even to "") = this overwrite is a
-        #: row-level rewrite planned against that snapshot — publish
-        #: verifies it is STILL live even when the carry list is empty
-        #: (an all-files-touched rewrite must not clobber a rival commit)
-        self.carry_src = options.get("carry_src")
-        # NOT NULL write constraints (this sink's own check; the same
-        # option on sources.write is checked in the Spark plan): a
-        # violating task raises before staging completes, the job aborts,
-        # and the staged-commit protocol guarantees no partial publish.
-        rnn = options.get("require_not_null", "")
-        self.require_not_null = tuple(
-            c.strip() for c in rnn.split(",") if c.strip()
-        )
-        # CHECK constraints are checked in the Spark plan that
-        # quiver_spark.sources.write builds; this sink does not evaluate
-        # them, so it refuses a table whose live manifest has any, as the
-        # quiverjvm write builders do
-        from . import _constraints
-
-        constraints = _constraints(self.path) if self.path else {}
-        if constraints:
-            raise ValueError(
-                f"{self.path} has CHECK constraints {constraints}, which "
-                "this sink does not evaluate — write through "
-                "quiver_spark.sources.write, which checks them"
-            )
-
-    def _split_partitions(self, table):
-        """Yield ``(subdir, sub_table)`` per distinct partition-key combo;
-        the passthrough for unpartitioned writes is ``("", table)``.
-
-        One pass over the buffered rows regardless of key cardinality:
-        sort by the partition columns, find run boundaries with a
-        vectorized dictionary-index comparison, and slice the contiguous
-        runs zero-copy. (The previous per-combo ``filter`` re-scanned the
-        whole table once per distinct combo — quadratic-ish for a
-        high-cardinality partition key.)
-
-        NOTE: rows within each written file are in partition-key-sorted
-        order, not arrival order — the same (documented) non-guarantee as
-        Spark's own partitioned file sinks, where the sink is free to
-        cluster rows by partition before writing."""
-        if not self.partition_by:
-            yield "", table
-            return
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        missing = [c for c in self.partition_by if c not in table.column_names]
-        if missing:
-            raise ValueError(f"partition_by columns not in schema: {missing}")
-        table = table.sort_by([(c, "ascending") for c in self.partition_by])
-        n = table.num_rows
-        if n == 0:
-            return
-        # per-key dictionary indices: equal values share an index, so a run
-        # boundary is any row where some key's index differs from the
-        # previous row's (nulls → -1, their own group)
-        change = np.zeros(n, dtype=bool)
-        for c in self.partition_by:
-            col = table.column(c)
-            col = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-            try:
-                idx = pc.fill_null(pc.dictionary_encode(col).indices, -1)
-                iv = np.asarray(idx)
-                change[1:] |= iv[1:] != iv[:-1]
-            except (pa.ArrowNotImplementedError, pa.ArrowInvalid):
-                # types dictionary_encode rejects (e.g. already-dictionary):
-                # adjacent-row comparison finds the same run boundaries
-                a, b = col.slice(0, n - 1), col.slice(1)
-                neq = pc.fill_null(pc.not_equal(a, b), False)
-                nulldiff = pc.xor(pc.is_null(a), pc.is_null(b))
-                change[1:] |= np.asarray(pc.or_(neq, nulldiff))
-        starts = np.flatnonzero(np.concatenate(([True], change[1:])))
-        ends = np.append(starts[1:], n)
-        rest = table.drop_columns(self.partition_by)
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            segs = [
-                f"{c}={_part_segment(table.column(c)[s].as_py())}"
-                for c in self.partition_by
-            ]
-            yield os.path.join(*segs), rest.slice(s, e - s)
-
-    def _check_not_null(self, batch) -> None:
-        """Enforce the require_not_null constraint on one Arrow batch —
-        called by every writer subclass's write loop (quiver AND the
-        arrowipc override)."""
-        if not self.require_not_null:
-            return
-        for c in self.require_not_null:
-            if c not in batch.schema.names:
-                raise ValueError(
-                    f"require_not_null column {c!r} is not in the "
-                    f"written schema {batch.schema.names}"
-                )
-            nulls = batch.column(batch.schema.names.index(c)).null_count
-            if nulls:
-                raise ValueError(
-                    f"NOT NULL constraint violated: column {c!r} "
-                    f"has {nulls} null(s) in this write — the job "
-                    "aborts and nothing is published"
-                )
-
-    def write(self, iterator) -> QuiverCommit:
-        """One task → one or more .quiver files (a file is one row group,
-        src/write/writer.rs:107-112; a task rolls to a new file at exactly
-        ``max_rows_per_file`` rows, as the quiverjvm writer does;
-        partitioned writes fan the buffered rows into Hive subdirs).
-
-        Files are STAGED under `_temporary/<task-uuid>/` and only moved
-        into the table directory by the driver-side commit — the standard
-        file-sink contract: a failed/retried task's partial output is never
-        reader-visible and never double-counts (task retries are routine on
-        a large cluster, so direct-to-destination writes would duplicate
-        rows)."""
-        import pyarrow as pa
-
-        from quiver_spark.format.writer import WriteOptions, write_table
-
-        opts = WriteOptions(
-            default_codec=self.codec,
-            compress_ratio=self.compress_ratio,
-            max_page_size=self.max_page_size,
-            forbidden=self.forbidden,
-            page_stats=self.page_stats,
-            bloom_columns=self.bloom_columns,
-        )
-        task_dir = os.path.join(self.path, _STAGING_DIR, uuid.uuid4().hex)
-        staged: list[str] = []
-        buffer: list[pa.RecordBatch] = []
-        rows = 0
-
-        def flush():
-            nonlocal buffer, rows
-            if not buffer:
-                return
-            table = pa.Table.from_batches(buffer)
-            for subdir, sub in self._split_partitions(table):
-                rel = os.path.join(
-                    subdir, f"part-{uuid.uuid4().hex}.quiver"
-                ) if subdir else f"part-{uuid.uuid4().hex}.quiver"
-                full = os.path.join(task_dir, rel)
-                os.makedirs(os.path.dirname(full), exist_ok=True)
-                write_table(sub, full, opts)
-                staged.append(rel)
-            buffer, rows = [], 0
-
-        for batch in iterator:
-            self._check_not_null(batch)
-            if not batch.num_rows:
-                buffer.append(batch)  # an all-empty task keeps its file
-            while batch.num_rows:
-                take = min(self.max_rows - rows, batch.num_rows)
-                buffer.append(batch.slice(0, take))
-                rows += take
-                batch = batch.slice(take)
-                if rows == self.max_rows:
-                    flush()
-        flush()
-        return QuiverCommit(task_dir=task_dir, files=tuple(staged))
-
-    def _generations(self) -> list[str]:
-        return snapshot.generations(self.path)
-
-    def _publish(self, messages) -> None:
-        """Publish every committed task's staged files through the shared
-        snapshot commit (``snapshot.commit``): an OVERWRITE is an atomic
-        generation swap (plus the hard-linked ``carry_files`` of a
-        row-level rewrite), an APPEND lands in the live root. Readers
-        that resolved before a swap keep a consistent old snapshot for as
-        long as it is retained: with the default ``keep_generations=1``
-        the superseded generation is deleted at commit, so snapshot
-        isolation for a reader still mid-scan across a concurrent
-        overwrite requires ``keep_generations >= 2`` (retained ones are
-        also readable via ``.option("version", N)``). Then sweep task
-        attempts that died before reporting and are older than a day."""
-        snapshot.commit(
-            self.path,
-            self.DATA_GLOBS,
-            overwrite=self.overwrite,
-            staged=[
-                (m.task_dir, m.files)
-                for m in messages
-                if m is not None and m.task_dir
-            ],
-            fmt=self.MANIFEST_FMT,
-            carry_src=self.carry_src,
-            carry=self.carry_files,
-            keep=int(self.options.get("keep_generations", "1")),
-            store=store_from_option(self.options.get("pointer_store")),
-        )
-        sweep_stale_staging(self.path)
-
-    def commit(self, messages) -> None:
-        """Driver-side commit: publish staged task output, then ensure a
-        fully-empty result set still leaves a schema-bearing file."""
-        self._publish(messages)
-        if self.spark_schema is not None:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            write_placeholder(
-                self.path,
-                to_arrow_schema(self.spark_schema),
-                self.MANIFEST_FMT,
-            )
-
-    def abort(self, messages) -> None:
-        """Drop staged output of any task that did report a message; task
-        dirs from attempts that died before reporting stay under the
-        hidden staging root, invisible to readers."""
-        import shutil
-
-        for msg in messages:
-            if msg is not None and getattr(msg, "task_dir", ""):
-                shutil.rmtree(msg.task_dir, ignore_errors=True)
 
 
 _SHIPPED_SESSIONS: set[int] = set()
@@ -1896,7 +1580,7 @@ def _register_source(spark, source) -> None:
 def register(spark) -> None:
     """Register the quiver format with a session (+ ship the package).
 
-    Batch reads/writes then work from any driver cwd (the zip shipped via
+    Batch reads then work from any driver cwd (the zip shipped via
     addPyFile reaches every task worker). STREAMING reads additionally
     need `quiver_spark` importable in the streaming-source runner, a
     driver-side worker that does NOT receive addPyFile includes: ensure

@@ -9,9 +9,9 @@ pointer: a flat table that resolves to itself). Writers stage task
 output under the hidden ``_temporary/`` root; :func:`commit` publishes
 it — data files first, then one atomic metadata publish, the split of
 Delta's log commit. Callers: every write of ``sources.write`` (its
-files staged under ``_temporary/<engine>-<uuid>/``), the quiver and
-arrowipc batch and stream sinks (``QuiverWriter._publish``) and
-metadata-only ALTERs (``maintenance._commit_evolution``); clone,
+files staged under ``_temporary/jvm-<uuid>/``), the arrowipc batch
+and stream sinks (``ArrowIpcWriter._publish``) and metadata-only
+ALTERs (``maintenance._commit_evolution``); clone,
 rollback, retention, vacuum and ``quiver-tools generations`` use the
 listing and linking helpers.
 Nothing here names a file format: callers pass their data-file globs.
@@ -196,7 +196,7 @@ def sweep_stale_staging(
     ``path/_temporary`` older than ``max_age_sec``, then drop the root
     if empty. Returns the entries VERIFIED gone (an rmtree that failed
     — e.g. foreign-owned files — is not reported as swept). Shared by
-    the sink's commit-time GC and maintenance.vacuum so the sweep
+    every write's commit-time GC and maintenance.vacuum so the sweep
     semantics can never diverge. PRECONDITION for callers passing a
     short age: it must exceed the longest in-flight write, or a live
     job's staged files can be destroyed mid-commit."""

@@ -482,8 +482,7 @@ def main(argv: list[str] | None = None) -> int:
     m = sub.add_parser(
         "manifest",
         help="verify or rebuild the commit-time plan manifest of a table's "
-        "live data root (the O(1) plan-time metadata the sink writes at "
-        "each commit)",
+        "live data root (the O(1) plan-time metadata every commit writes)",
     )
     m.add_argument("action", choices=("verify", "rebuild"))
     m.add_argument("dir")

@@ -1,6 +1,6 @@
 """Arrow IPC (.arrow) DataSource tests: roundtrip through the sink,
 record-batch-granular splits, projection, foreign-file normalization, and
-the generation machinery it inherits from the quiver sink."""
+the generation machinery it shares with quiver tables (``snapshot.commit``)."""
 
 from __future__ import annotations
 
@@ -103,7 +103,7 @@ def test_foreign_file_normalization(spark, tmp_path):
 
 def test_generation_machinery_shared(spark, tmp_path):
     """Overwrite/append/time-travel ride the same generation protocol as
-    the quiver sink (the writer subclass changes only bytes-on-disk)."""
+    quiver tables (``snapshot.commit``; only the bytes on disk differ)."""
     register(spark)
     out = str(tmp_path / "gen_arrow")
     spark.range(10).write.format("arrowipc").option(

@@ -1,10 +1,10 @@
-"""Multi-writer coordination pins for the generation-snapshot sink.
+"""Multi-writer coordination pins for the generation-snapshot commit.
 
 The reference is a single-file library whose only concurrency posture is a
 misuse-refusal guard (one rowgroup per file, refuse the second write —
 /root/reference/src/write/writer.rs:107-112); the table/generation layer is
 engine surface this repo adds, so these tests pin ITS contract (stated in
-``pointer_store.py`` and ``QuiverWriter._publish``):
+``pointer_store.py`` and ``snapshot.commit``):
 
 * concurrent OVERWRITEs commit as two DISTINCT generations — never a mixed
   directory — with a deterministic winner (last pointer swap);
@@ -13,9 +13,10 @@ engine surface this repo adds, so these tests pin ITS contract (stated in
   (lock-less store: CAS detection) — never silent row loss;
 * generation names stay collision-proof and resolvable past 6 digits.
 
-These drive ``QuiverWriter._publish`` directly (the driver-side commit
-path) so fake stores and barriers can force the exact interleavings; the
-end-to-end Spark write path over the default store is covered on top.
+These drive ``snapshot.commit`` directly (the driver-side commit every
+write publishes through) so fake stores and barriers can force the exact
+interleavings; the end-to-end Spark write path over the default store is
+covered on top.
 """
 
 from __future__ import annotations
@@ -27,9 +28,10 @@ import uuid
 import pyarrow as pa
 import pytest
 
+from quiver_spark import sources
 from quiver_spark.format.reader import read_table
 from quiver_spark.format.writer import WriteOptions, write_table
-from quiver_spark.sources import register
+from quiver_spark.sources import register, snapshot
 from quiver_spark.sources.pointer_store import (
     ConcurrentWriteError,
     LocalPointerStore,
@@ -38,13 +40,7 @@ from quiver_spark.sources.pointer_store import (
     get_pointer_store,
     set_pointer_store,
 )
-from quiver_spark.sources.quiver_datasource import (
-    _STAGING_DIR,
-    QuiverCommit,
-    QuiverWriter,
-    _data_root,
-    _list_files,
-)
+from quiver_spark.sources.quiver_datasource import _data_root, _list_files
 
 
 @pytest.fixture(autouse=True)
@@ -55,10 +51,10 @@ def _restore_store():
     set_pointer_store(prev)
 
 
-def _stage(table_path: str, ids: list[int]) -> QuiverCommit:
-    """Fabricate one committed task's staged output (what write() leaves
-    behind for the driver-side publish to move into place)."""
-    task_dir = os.path.join(table_path, _STAGING_DIR, uuid.uuid4().hex)
+def _stage(table_path: str, ids: list[int]) -> tuple[str, tuple[str, ...]]:
+    """Fabricate one task's staged output ``(staging dir, files)``: what
+    a write leaves behind for the driver-side commit to move into place."""
+    task_dir = os.path.join(table_path, snapshot.STAGING_DIR, uuid.uuid4().hex)
     os.makedirs(task_dir, exist_ok=True)
     rel = f"part-{uuid.uuid4().hex}.quiver"
     write_table(
@@ -66,7 +62,7 @@ def _stage(table_path: str, ids: list[int]) -> QuiverCommit:
         os.path.join(task_dir, rel),
         WriteOptions(),
     )
-    return QuiverCommit(task_dir=task_dir, files=(rel,))
+    return task_dir, (rel,)
 
 
 def _table_ids(table_path: str) -> list[int]:
@@ -76,9 +72,18 @@ def _table_ids(table_path: str) -> list[int]:
     return sorted(out)
 
 
-def _writer(table_path: str, overwrite: bool, **opts) -> QuiverWriter:
-    options = {"path": table_path, **{k: str(v) for k, v in opts.items()}}
-    return QuiverWriter(options, spark_schema=None, overwrite=overwrite)
+def _publish(staged, table_path: str, overwrite: bool, keep_generations=1):
+    """Commit ``staged`` task output into ``table_path`` the way a write
+    does: an overwrite as a generation swap, an append into the live
+    root."""
+    snapshot.commit(
+        table_path,
+        ("*.quiver",),
+        overwrite=overwrite,
+        staged=staged,
+        fmt="quiver",
+        keep=keep_generations,
+    )
 
 
 def test_concurrent_overwrites_distinct_generations_last_swap_wins(tmp_path):
@@ -86,7 +91,7 @@ def test_concurrent_overwrites_distinct_generations_last_swap_wins(tmp_path):
     two DISTINCT generations; the pointer names the later committer and
     each generation holds exactly its own writer's rows — no mixing."""
     tbl = str(tmp_path / "tbl")
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [0])])  # gen-000001
+    _publish([_stage(tbl, [0])], tbl, overwrite=True)  # gen-000001
 
     barrier = threading.Barrier(2)
     errs: list[Exception] = []
@@ -95,7 +100,7 @@ def test_concurrent_overwrites_distinct_generations_last_swap_wins(tmp_path):
         msg = _stage(tbl, ids)
         barrier.wait()
         try:
-            _writer(tbl, overwrite=True, keep_generations=3)._publish([msg])
+            _publish([msg], tbl, overwrite=True, keep_generations=3)
         except Exception as exc:  # noqa: BLE001 — collected for assert
             errs.append(exc)
 
@@ -122,7 +127,7 @@ def test_gen_claim_collision_retries_next_number(tmp_path):
     directory listing and our claim, the publish bumps to the next free
     number instead of publishing into the contested directory."""
     tbl = str(tmp_path / "tbl")
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [0])])  # gen-000001
+    _publish([_stage(tbl, [0])], tbl, overwrite=True)  # gen-000001
 
     class RacedOnce(LocalPointerStore):
         """First claim attempt loses (a racer took the name and we model
@@ -140,9 +145,7 @@ def test_gen_claim_collision_retries_next_number(tmp_path):
 
     store = RacedOnce()
     set_pointer_store(store)
-    _writer(tbl, overwrite=True, keep_generations=9)._publish(
-        [_stage(tbl, [7, 8])]
-    )
+    _publish([_stage(tbl, [7, 8])], tbl, overwrite=True, keep_generations=9)
     assert store.denied == ["gen-000002"]
     assert os.path.basename(_data_root(tbl)) == "gen-000003"
     assert _table_ids(tbl) == [7, 8]
@@ -154,7 +157,7 @@ def test_lockless_overwrite_race_loses_loudly(tmp_path):
     never a silently overwritten/mixed pointer — and the winner's
     snapshot stays live and intact."""
     tbl = str(tmp_path / "tbl")
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [0])])  # gen-000001
+    _publish([_stage(tbl, [0])], tbl, overwrite=True)  # gen-000001
 
     class InterleavedStore(UnlockedPointerStore):
         """Deterministic interleaving: after the victim writer has read
@@ -172,9 +175,7 @@ def test_lockless_overwrite_race_loses_loudly(tmp_path):
                 rival = _stage(tbl, [100])
                 set_pointer_store(UnlockedPointerStore())
                 try:
-                    _writer(
-                        tbl, overwrite=True, keep_generations=9
-                    )._publish([rival])
+                    _publish([rival], tbl, overwrite=True, keep_generations=9)
                 finally:
                     set_pointer_store(self)
             return ok
@@ -182,7 +183,7 @@ def test_lockless_overwrite_race_loses_loudly(tmp_path):
     set_pointer_store(InterleavedStore())
     victim = _stage(tbl, [200])
     with pytest.raises(ConcurrentWriteError, match="moved from"):
-        _writer(tbl, overwrite=True, keep_generations=9)._publish([victim])
+        _publish([victim], tbl, overwrite=True, keep_generations=9)
     # winner's snapshot is live and whole
     assert _table_ids(tbl) == [100]
 
@@ -192,7 +193,7 @@ def test_lockless_append_into_superseded_generation_is_loud(tmp_path):
     (lock-less store) must raise — the rows are not in the live snapshot
     and silent success would be silent loss."""
     tbl = str(tmp_path / "tbl")
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [0])])  # gen-000001
+    _publish([_stage(tbl, [0])], tbl, overwrite=True)  # gen-000001
 
     class PointerMovedStore(UnlockedPointerStore):
         """Models an overwrite swapping the pointer between the append's
@@ -203,7 +204,7 @@ def test_lockless_append_into_superseded_generation_is_loud(tmp_path):
 
     set_pointer_store(PointerMovedStore())
     with pytest.raises(ConcurrentWriteError, match="NOT in the live"):
-        _writer(tbl, overwrite=False)._publish([_stage(tbl, [1, 2])])
+        _publish([_stage(tbl, [1, 2])], tbl, overwrite=False)
 
 
 def test_append_blocks_on_concurrent_overwrite_then_lands_live(tmp_path):
@@ -212,7 +213,7 @@ def test_append_blocks_on_concurrent_overwrite_then_lands_live(tmp_path):
     generation and lands in the live snapshot — the exact interleaving
     that was silent row loss before the lock existed."""
     tbl = str(tmp_path / "tbl")
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [0])])  # gen-000001
+    _publish([_stage(tbl, [0])], tbl, overwrite=True)  # gen-000001
 
     in_lock = threading.Event()
     release = threading.Event()
@@ -232,7 +233,7 @@ def test_append_blocks_on_concurrent_overwrite_then_lands_live(tmp_path):
 
     def overwrite():
         try:
-            _writer(tbl, overwrite=True)._publish([ow_msg])
+            _publish([ow_msg], tbl, overwrite=True)
         except Exception as exc:  # noqa: BLE001
             errs.append(exc)
 
@@ -242,7 +243,7 @@ def test_append_blocks_on_concurrent_overwrite_then_lands_live(tmp_path):
         # overwrite a beat to reach its swap, then release it
         threading.Timer(0.3, release.set).start()
         try:
-            _writer(tbl, overwrite=False)._publish([ap_msg])
+            _publish([ap_msg], tbl, overwrite=False)
         except Exception as exc:  # noqa: BLE001
             errs.append(exc)
 
@@ -270,15 +271,12 @@ def test_generation_names_resolve_past_six_digits(tmp_path):
     with open(os.path.join(tbl, "_current"), "w") as f:
         f.write("gen-999999")
     # the millionth overwrite: max+1 widens to 7 digits
-    _writer(tbl, overwrite=True, keep_generations=2)._publish(
-        [_stage(tbl, [5])]
-    )
+    _publish([_stage(tbl, [5])], tbl, overwrite=True, keep_generations=2)
     assert os.path.basename(_data_root(tbl)) == "gen-1000000"
     assert _table_ids(tbl) == [5]
     # numeric retention order: the NEXT overwrite must see 1000000 as
     # newest (lexicographic order would GC it and keep 999999)
-    writer = _writer(tbl, overwrite=True, keep_generations=2)
-    assert writer._generations() == ["gen-999999", "gen-1000000"]
+    assert snapshot.generations(tbl) == ["gen-999999", "gen-1000000"]
     # and time travel to the retained 6-digit generation still works
     assert _table_ids(os.path.join(tbl, "gen-999999")) == [1]
 
@@ -305,7 +303,7 @@ def test_end_to_end_concurrent_spark_overwrites_no_mixing(spark, tmp_path):
     (serialized by the per-table writer lock), never a union or subset."""
     register(spark)
     out = str(tmp_path / "race")
-    spark.range(5).write.format("quiver").mode("overwrite").save(out)
+    sources.write(spark.range(5), out)
 
     errs: list[Exception] = []
 
@@ -317,13 +315,7 @@ def test_end_to_end_concurrent_spark_overwrites_no_mixing(spark, tmp_path):
             spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
                 spark._jsparkSession
             )
-            (
-                spark.range(lo, hi)
-                .write.format("quiver")
-                .option("keep_generations", "4")
-                .mode("overwrite")
-                .save(out)
-            )
+            sources.write(spark.range(lo, hi), out, keep_generations="4")
         except Exception as exc:  # noqa: BLE001
             errs.append(exc)
 
@@ -378,7 +370,7 @@ def test_pointer_store_seam_is_pluggable(tmp_path):
 
     store = MemoryPointerStore()
     set_pointer_store(store)
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [1, 2, 3])])
+    _publish([_stage(tbl, [1, 2, 3])], tbl, overwrite=True)
     assert store.swaps == 1
     assert store.read_pointer(tbl) == "gen-000001"
     assert _table_ids(tbl) == [1, 2, 3]
@@ -395,13 +387,11 @@ def test_mid_scan_overwrite_isolation_requires_retention(tmp_path):
 
     for keep, survives in ((1, False), (2, True)):
         tbl = str(tmp_path / f"iso_keep{keep}")
-        _writer(tbl, overwrite=True)._publish([_stage(tbl, [1, 2, 3])])
+        _publish([_stage(tbl, [1, 2, 3])], tbl, overwrite=True)
         reader = QuiverScanReader({"path": tbl}, None)
         parts = reader.partitions()  # freezes gen-000001's file list
         assert parts
-        _writer(tbl, overwrite=True, keep_generations=keep)._publish(
-            [_stage(tbl, [9])]
-        )
+        _publish([_stage(tbl, [9])], tbl, overwrite=True, keep_generations=keep)
         if survives:
             rows = sum(
                 b.num_rows for p in parts for b in reader.read(p)
@@ -423,16 +413,12 @@ def test_retention_keeps_previously_live_generation_after_rollback(tmp_path):
 
     tbl = str(tmp_path / "tbl")
     for ids in ([1], [2], [3]):
-        _writer(tbl, overwrite=True, keep_generations=9)._publish(
-            [_stage(tbl, ids)]
-        )
+        _publish([_stage(tbl, ids)], tbl, overwrite=True, keep_generations=9)
     rollback_generation(tbl, 1)
     assert _table_ids(tbl) == [1]
     # overwrite with keep=2: gen-000004 becomes current; the retained
     # slot must go to gen-000001 (previously live), NOT gen-000003
-    _writer(tbl, overwrite=True, keep_generations=2)._publish(
-        [_stage(tbl, [4])]
-    )
+    _publish([_stage(tbl, [4])], tbl, overwrite=True, keep_generations=2)
     gens = sorted(d for d in os.listdir(tbl) if d.startswith("gen-"))
     assert gens == ["gen-000001", "gen-000004"], gens
     assert _table_ids(tbl) == [4]
@@ -445,7 +431,7 @@ def test_lockless_loser_generation_is_removed(tmp_path):
     never-committed data would be time-travelable and would count toward
     retention, displacing genuinely-retained snapshots."""
     tbl = str(tmp_path / "tbl")
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [0])])
+    _publish([_stage(tbl, [0])], tbl, overwrite=True)
 
     class InterleavedStore(UnlockedPointerStore):
         def __init__(self):
@@ -458,18 +444,14 @@ def test_lockless_loser_generation_is_removed(tmp_path):
                 rival = _stage(tbl, [100])
                 set_pointer_store(UnlockedPointerStore())
                 try:
-                    _writer(
-                        tbl, overwrite=True, keep_generations=9
-                    )._publish([rival])
+                    _publish([rival], tbl, overwrite=True, keep_generations=9)
                 finally:
                     set_pointer_store(self)
             return ok
 
     set_pointer_store(InterleavedStore())
     with pytest.raises(ConcurrentWriteError):
-        _writer(tbl, overwrite=True, keep_generations=9)._publish(
-            [_stage(tbl, [200])]
-        )
+        _publish([_stage(tbl, [200])], tbl, overwrite=True, keep_generations=9)
     gens = sorted(d for d in os.listdir(tbl) if d.startswith("gen-"))
     # victim claimed gen-000002, rival committed gen-000003; the victim's
     # orphan must be gone
@@ -479,18 +461,14 @@ def test_lockless_loser_generation_is_removed(tmp_path):
 
 def test_end_to_end_lockless_spark_overwrite_race(spark, tmp_path):
     """Full Spark write path under the LOCK-LESS store posture
-    (`.option("pointer_store", "unlocked")` — the store travels as an
-    option because Spark runs the commit in a spawned Python runner that
-    driver-side set_pointer_store cannot reach). Contract pinned: each
+    (``sources.write(..., pointer_store="unlocked")``). Contract pinned: each
     racing overwrite either succeeds or fails loudly with
     ConcurrentWriteError; the live snapshot is EXACTLY one job's dataset
     (never a union/subset/mix); and every retained generation is itself
     unmixed — last-swap-wins with superseded snapshots retained."""
     register(spark)
     out = str(tmp_path / "race_unlocked")
-    spark.range(5).write.format("quiver").mode("overwrite").option(
-        "pointer_store", "unlocked"
-    ).save(out)
+    sources.write(spark.range(5), out, pointer_store="unlocked")
 
     errs: list[Exception] = []
 
@@ -499,13 +477,11 @@ def test_end_to_end_lockless_spark_overwrite_race(spark, tmp_path):
             spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
                 spark._jsparkSession
             )
-            (
-                spark.range(lo, hi)
-                .write.format("quiver")
-                .option("pointer_store", "unlocked")
-                .option("keep_generations", "6")
-                .mode("overwrite")
-                .save(out)
+            sources.write(
+                spark.range(lo, hi),
+                out,
+                pointer_store="unlocked",
+                keep_generations="6",
             )
         except Exception as exc:  # noqa: BLE001
             errs.append(exc)
@@ -535,10 +511,8 @@ def test_end_to_end_lockless_spark_overwrite_race(spark, tmp_path):
         f"{len(ids)} rows"
     )
     # every retained generation is one whole dataset — never mixed
-    from quiver_spark.sources.quiver_datasource import _GEN_RE
-
     for g in os.listdir(out):
-        if not _GEN_RE.fullmatch(g):
+        if not snapshot.GEN_RE.fullmatch(g):
             continue
         got = sorted(
             r[0]
@@ -638,16 +612,14 @@ def test_file_blob_store_contract(tmp_path):
 
 def test_end_to_end_cas_spark_overwrite_race(spark, tmp_path):
     """Full Spark write path under the conditional-PUT object-store
-    posture (`.option("pointer_store", "cas:<blob_root>")`): same loud
+    posture (``pointer_store="cas:<blob_root>"``): same loud
     contract as the lock-less test, but the swap is a TRUE atomic CAS —
     two swaps racing on the same expectation can never both succeed."""
     register(spark)
     out = str(tmp_path / "race_cas")
     blob = str(tmp_path / "blob")
     ps = f"cas:{blob}"
-    spark.range(5).write.format("quiver").mode("overwrite").option(
-        "pointer_store", ps
-    ).save(out)
+    sources.write(spark.range(5), out, pointer_store=ps)
 
     errs: list[Exception] = []
 
@@ -656,13 +628,11 @@ def test_end_to_end_cas_spark_overwrite_race(spark, tmp_path):
             spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
                 spark._jsparkSession
             )
-            (
-                spark.range(lo, hi)
-                .write.format("quiver")
-                .option("pointer_store", ps)
-                .option("keep_generations", "6")
-                .mode("overwrite")
-                .save(out)
+            sources.write(
+                spark.range(lo, hi),
+                out,
+                pointer_store=ps,
+                keep_generations="6",
             )
         except Exception as exc:  # noqa: BLE001
             errs.append(exc)
@@ -688,10 +658,8 @@ def test_end_to_end_cas_spark_overwrite_race(spark, tmp_path):
         "live snapshot must be exactly one job's rows, got "
         f"{len(ids)} rows"
     )
-    from quiver_spark.sources.quiver_datasource import _GEN_RE
-
     for g in os.listdir(out):
-        if not _GEN_RE.fullmatch(g):
+        if not snapshot.GEN_RE.fullmatch(g):
             continue
         got = sorted(
             r[0]
@@ -713,7 +681,7 @@ def test_lockless_alter_loses_loudly_to_concurrent_overwrite(tmp_path):
     from quiver_spark.sources.manifest import load_manifest
 
     tbl = str(tmp_path / "tbl")
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [0, 1])])
+    _publish([_stage(tbl, [0, 1])], tbl, overwrite=True)
 
     class InterleavedStore(UnlockedPointerStore):
         def __init__(self):
@@ -726,9 +694,7 @@ def test_lockless_alter_loses_loudly_to_concurrent_overwrite(tmp_path):
                 rival = _stage(tbl, [500])
                 set_pointer_store(UnlockedPointerStore())
                 try:
-                    _writer(
-                        tbl, overwrite=True, keep_generations=9
-                    )._publish([rival])
+                    _publish([rival], tbl, overwrite=True, keep_generations=9)
                 finally:
                     set_pointer_store(self)
             return ok
@@ -750,7 +716,7 @@ def test_lost_alter_cleans_up_its_claimed_generation(tmp_path):
     from quiver_spark import maintenance as M
 
     tbl = str(tmp_path / "tbl")
-    _writer(tbl, overwrite=True)._publish([_stage(tbl, [0, 1])])
+    _publish([_stage(tbl, [0, 1])], tbl, overwrite=True)
 
     class InterleavedStore(UnlockedPointerStore):
         def __init__(self):
@@ -763,9 +729,7 @@ def test_lost_alter_cleans_up_its_claimed_generation(tmp_path):
                 rival = _stage(tbl, [500])
                 set_pointer_store(UnlockedPointerStore())
                 try:
-                    _writer(
-                        tbl, overwrite=True, keep_generations=9
-                    )._publish([rival])
+                    _publish([rival], tbl, overwrite=True, keep_generations=9)
                 finally:
                     set_pointer_store(self)
             return ok

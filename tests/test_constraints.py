@@ -3,9 +3,10 @@
 Spark plan of every write through ``sources.write``: one projection that
 raises on the first row whose predicate IS FALSE (SQL CHECK semantics:
 NULL passes), so Spark both validates existing rows and checks new ones.
-Nothing publishes on a violation. The direct sinks (``format("quiver")``
-and ``"quiverjvm"`` batch, ``"arrowipc"`` batch and stream) refuse a
-constrained table; neither quiver format has a streaming write. Routed
+Nothing publishes on a violation. The direct sinks (``"quiverjvm"``
+batch, ``"arrowipc"`` batch and stream) refuse a constrained table;
+``format("quiver")`` has no write at all, and ``"quiverjvm"`` no
+streaming write. Routed
 streams run each micro-batch through ``sources.write``. The reference format has no
 constraint layer; this is the Delta CHECK-constraint analogue on the
 generation protocol."""
@@ -122,7 +123,7 @@ def test_add_refuses_existing_violations_and_bad_expressions(
 
 
 def test_constraint_enforced_on_dml_rewrite(spark, tmp_path):
-    """UPDATE writes through the same sink — an assignment that would
+    """UPDATE writes through ``sources.write`` too — an assignment that would
     violate the constraint aborts, and the table is untouched."""
     register(spark)
     tbl = str(tmp_path / "t_dml")

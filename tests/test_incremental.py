@@ -23,7 +23,7 @@ import os
 
 import pytest
 
-from quiver_spark import maintenance
+from quiver_spark import maintenance, sources
 from quiver_spark.sources import stream_writer
 from quiver_spark.sources.manifest import load_manifest
 from quiver_spark.sources.quiver_datasource import _data_root, register
@@ -32,6 +32,9 @@ from conftest import SF_DIR
 
 
 def _write(spark, df, path, mode, fmt="quiver", **options):
+    if fmt == "quiver":
+        sources.write(df, path, mode=mode, **options)
+        return
     register(spark)
     w = df.write.format(fmt).mode(mode)
     for k, v in options.items():

@@ -11,6 +11,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from quiver_spark import sources
 from quiver_spark.jvm import ensure_jar, session_has_jar
 
 from conftest import SF_DIR_MID
@@ -178,9 +179,9 @@ def test_jvm_read_bool_and_decimal(spark, tmp_path):
 
 
 def test_jvm_read_sink_tables_match_parquet(spark, tmp_path):
-    """sf0.01 lineitem + documents written by the SINK (adaptive zstd,
-    generation layout + manifest) read back through the JVM scan equal to
-    the parquet originals."""
+    """sf0.01 lineitem + documents written by ``sources.write`` (adaptive
+    zstd, generation layout + manifest) read back through the JVM scan
+    equal to the parquet originals."""
     _require_jar(spark)
     from quiver_spark.sources import register
 
@@ -188,7 +189,7 @@ def test_jvm_read_sink_tables_match_parquet(spark, tmp_path):
     for name in ("lineitem", "documents"):
         src = spark.read.parquet(f"{SF_DIR_MID}/{name}.parquet")
         d = str(tmp_path / name)
-        src.write.format("quiver").option("codec", "zstd").mode("overwrite").save(d)
+        sources.write(src, d, codec="zstd", keep_generations=1)
         back = spark.read.format("quiverjvm").load(d)
         key = lambda r: tuple(repr(x) for x in r)
         assert sorted(map(tuple, back.collect()), key=key) == sorted(
@@ -206,9 +207,7 @@ def test_jvm_read_prunes_columns_via_catalyst(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "prune")
-    spark.read.parquet(f"{SF_DIR_MID}/lineitem.parquet").write.format("quiver").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(spark.read.parquet(f"{SF_DIR_MID}/lineitem.parquet"), d)
     df = spark.read.format("quiverjvm").load(d).select("l_quantity")
     # DSv2 plans carry the pruned projection in the BatchScan output list
     scan_line = next(
@@ -236,9 +235,7 @@ def test_jvm_read_serves_altered_tables(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "altered")
-    spark.range(100).selectExpr("id", "id * 2 AS v").write.format("quiver").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(spark.range(100).selectExpr("id", "id * 2 AS v"), d)
     maintenance.rename_column(d, "v", "w")
     _assert_same(spark, d)
     jdf = spark.read.format("quiverjvm").load(d)
@@ -250,9 +247,13 @@ def test_jvm_read_serves_altered_tables(spark, tmp_path):
     # table schema must serve
     maintenance.add_column(d, "extra", "bigint")
     _assert_same(spark, d)
-    spark.range(5).selectExpr(
-        "id + 1000 AS id", "id AS w", "id * 10 AS extra"
-    ).write.format("quiver").mode("append").save(d)
+    sources.write(
+        spark.range(5).selectExpr(
+            "id + 1000 AS id", "id AS w", "id * 10 AS extra"
+        ),
+        d,
+        mode="append",
+    )
     _assert_same(spark, d)
     jdf = spark.read.format("quiverjvm").load(d)
     assert jdf.filter("extra IS NOT NULL").count() == 5
@@ -274,9 +275,11 @@ def test_jvm_read_serves_hive_partitioned(spark, tmp_path):
 
     register(spark)
     h = str(tmp_path / "hive")
-    spark.range(100).selectExpr("id", "id % 3 AS p").write.format("quiver").option(
-        "partition_by", "p"
-    ).mode("overwrite").save(h)
+    sources.write(
+        spark.range(100).selectExpr("id", "id % 3 AS p"),
+        h,
+        partition_by="p",
+    )
     _assert_same(spark, h)
     jdf = spark.read.format("quiverjvm").load(h)
     assert dict(jdf.dtypes)["p"] == "bigint"
@@ -293,9 +296,7 @@ def test_jvm_read_serves_hive_partitioned(spark, tmp_path):
         [(1, "us east"), (2, "eu/west"), (3, "us east"), (4, None)],
         "id bigint, region string",
     )
-    df.write.format("quiver").option("partition_by", "region").mode(
-        "overwrite"
-    ).save(h2)
+    sources.write(df, h2, partition_by="region")
     _assert_same(spark, h2)
     j2 = spark.read.format("quiverjvm").load(h2)
     assert j2.filter(F.col("region") == "eu/west").count() == 1
@@ -347,7 +348,7 @@ def test_jvm_plan_zero_footer_reads_with_manifest(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "manifested")
     src = spark.read.parquet(f"{SF_DIR_MID}/lineitem.parquet")
-    src.repartition(8).write.format("quiver").mode("overwrite").save(d)
+    sources.write(src.repartition(8), d)
     J = spark._jvm.io.quiverspark.QuiverJvmRead
     J.resetPlanFooterReads()
     n = spark.read.format("quiverjvm").load(d).count()
@@ -377,7 +378,7 @@ def test_jvm_manifest_stale_entry_falls_back_per_file(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "stale")
     src = spark.read.parquet(f"{SF_DIR_MID}/orders.parquet")
-    src.write.format("quiver").mode("overwrite").save(d)
+    sources.write(src, d)
     root = _data_root(d)
     t = pq.read_table(f"{SF_DIR_MID}/orders.parquet").slice(0, 100)
     write_table(t, os.path.join(root, "zz-foreign.quiver"), WriteOptions())
@@ -441,9 +442,7 @@ def test_jvm_zone_map_page_pruning(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "pruned")
     src = spark.read.parquet(f"{SF_DIR_MID}/lineitem.parquet")
-    src.orderBy("l_shipdate").coalesce(4).write.format("quiver").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(src.orderBy("l_shipdate").coalesce(4), d)
     J = spark._jvm.io.quiverspark.QuiverJvmRead
     jdf = spark.read.format("quiverjvm").load(d)
 
@@ -565,13 +564,11 @@ def test_jvm_bloom_point_lookup_pruning(spark, tmp_path):
     src = spark.read.parquet(f"{SF_DIR_MID}/orders.parquet").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    (
-        src.repartition(4)
-        .write.format("quiver")
-        .mode("overwrite")
-        .option("max_page_size", "1024")
-        .option("bloom_columns", "o_orderkey")
-        .save(d)
+    sources.write(
+        src.repartition(4),
+        d,
+        max_page_size="1024",
+        bloom_columns="o_orderkey",
     )
     jdf = spark.read.format("quiverjvm").load(d)
     J = spark._jvm.io.quiverspark.QuiverJvmRead
@@ -686,9 +683,7 @@ def test_unified_scan_routes_by_eligibility(spark, tmp_path):
         return "jvm" if "quiverjvm" in df._jdf.queryExecution().analyzed().toString() else "python"
 
     flat = str(tmp_path / "flat")
-    spark.range(50).selectExpr("id", "id * 2 AS v").write.format("quiver").mode(
-        "overwrite"
-    ).save(flat)
+    sources.write(spark.range(50).selectExpr("id", "id * 2 AS v"), flat)
     df = scan(spark, flat)
     assert engine(df) == "jvm"
     assert df.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(50))
@@ -712,9 +707,12 @@ def test_unified_scan_routes_by_eligibility(spark, tmp_path):
 
     # nested schema: JVM-served since the round-12 Dremel lift
     nested = str(tmp_path / "nested")
-    spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [3.0])], "id bigint, emb array<double>"
-    ).write.format("quiver").mode("overwrite").save(nested)
+    sources.write(
+        spark.createDataFrame(
+            [(1, [1.0, 2.0]), (2, [3.0])], "id bigint, emb array<double>"
+        ),
+        nested,
+    )
     df3 = scan(spark, nested)
     assert engine(df3) == "jvm"
     assert df3.count() == 2
@@ -738,9 +736,10 @@ def test_unified_scan_warns_on_non_guard_jvm_fault(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "corrupt_man")
-    spark.range(40).selectExpr("id", "id * 3 AS v").coalesce(1).write.format(
-        "quiver"
-    ).mode("overwrite").save(d)
+    sources.write(
+        spark.range(40).selectExpr("id", "id * 3 AS v").coalesce(1),
+        d,
+    )
 
     # eligible table routes to the JVM silently
     with warnings.catch_warnings():
@@ -768,9 +767,7 @@ def test_unified_scan_warns_on_non_guard_jvm_fault(spark, tmp_path):
     import json
 
     guarded = str(tmp_path / "nonscalar_default")
-    spark.range(3).selectExpr("id").coalesce(1).write.format("quiver").mode(
-        "overwrite"
-    ).save(guarded)
+    sources.write(spark.range(3).selectExpr("id").coalesce(1), guarded)
     gman = sorted(glob.glob(f"{guarded}/**/_manifest.json.gz", recursive=True))[-1]
     with gzip.open(gman, "rt") as fh:
         man = json.load(fh)
@@ -817,9 +814,12 @@ def test_jvm_nested_roundtrip_parity(spark, tmp_path):
     struct / map / deep compositions with nulls, empties and all-absent
     pages, Python-writer shredded (format/nested.py), Java-assembled
     (QuiverNested) — row-exact against the Python DS on the same files.
-    local[4] writes split rows across tasks, so some files carry pages
-    where EVERY parent is null/empty (the shred clamp case)."""
+    One row per file, so some files carry pages where EVERY parent is
+    null/empty (the shred clamp case)."""
     _require_jar(spark)
+    import os
+
+    from quiver_spark.format.writer import WriteOptions, write_table
     from quiver_spark.sources import register
 
     register(spark)
@@ -850,9 +850,10 @@ def test_jvm_nested_roundtrip_parity(spark, tmp_path):
     ]
     for i, (rows, schema) in enumerate(cases):
         d = str(tmp_path / f"nested_{i}")
-        spark.createDataFrame(rows, schema).write.format("quiver").mode(
-            "overwrite"
-        ).save(d)
+        os.makedirs(d)
+        t = spark.createDataFrame(rows, schema).toArrow()
+        for j in range(t.num_rows):
+            write_table(t.slice(j, 1), f"{d}/part-{j}.quiver", WriteOptions())
         got = spark.read.format("quiverjvm").load(d).orderBy("id").collect()
         exp = spark.read.format("quiver").load(d).orderBy("id").collect()
         assert got == exp, f"case {i}: {got} != {exp}"
@@ -929,9 +930,11 @@ def test_jvm_nested_real_tables_parity(spark, tmp_path):
     register(spark)
     for tbl, page in [("embeddings", "1000"), ("documents", "500")]:
         d = str(tmp_path / tbl)
-        spark.read.parquet(f"{SF_DIR_MID}/{tbl}.parquet").coalesce(2).write.format(
-            "quiver"
-        ).option("max_page_size", page).mode("overwrite").save(d)
+        sources.write(
+            spark.read.parquet(f"{SF_DIR_MID}/{tbl}.parquet").coalesce(2),
+            d,
+            max_page_size=page,
+        )
         got = sorted(
             repr(tuple(r)) for r in spark.read.format("quiverjvm").load(d).collect()
         )
@@ -1017,20 +1020,25 @@ def test_jvm_default_fill_parity(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "defaults")
-    spark.range(6).selectExpr("id", "id * 2 AS v").coalesce(1).write.format(
-        "quiver"
-    ).mode("overwrite").save(d)
+    sources.write(
+        spark.range(6).selectExpr("id", "id * 2 AS v").coalesce(1),
+        d,
+    )
     maintenance.add_column(d, "src", "string", default="seed")
     maintenance.add_column(d, "w", "double", default=2.5)
     maintenance.add_column(d, "flag", "boolean", default=True)
     maintenance.add_column(d, "d0", "date", default="2021-06-01")
     maintenance.add_column(d, "ts0", "timestamp_ntz", default="2020-01-02 03:04:05.500000")
     maintenance.add_column(d, "dec0", "decimal(10,2)", default="9.75")
-    spark.createDataFrame(
-        [(100, 200, "real", 1.0, False, None, None, None)],
-        "id bigint, v bigint, src string, w double, flag boolean,"
-        " d0 date, ts0 timestamp_ntz, dec0 decimal(10,2)",
-    ).coalesce(1).write.format("quiver").mode("append").save(d)
+    sources.write(
+        spark.createDataFrame(
+            [(100, 200, "real", 1.0, False, None, None, None)],
+            "id bigint, v bigint, src string, w double, flag boolean,"
+            " d0 date, ts0 timestamp_ntz, dec0 decimal(10,2)",
+        ).coalesce(1),
+        d,
+        mode="append",
+    )
     jvm = spark.read.format("quiverjvm").load(d)
     py = spark.read.format("quiver").load(d)
     assert sorted(repr(tuple(r)) for r in jvm.collect()) == sorted(
@@ -1053,17 +1061,24 @@ def test_jvm_alter_with_nested_columns(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "nested_alter")
-    spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, None), (3, [3.0])], "id bigint, emb array<double>"
-    ).coalesce(1).write.format("quiver").mode("overwrite").save(d)
+    sources.write(
+        spark.createDataFrame(
+            [(1, [1.0, 2.0]), (2, None), (3, [3.0])], "id bigint, emb array<double>"
+        ).coalesce(1),
+        d,
+    )
     M.rename_column(d, "emb", "vec")
     M.add_column(d, "tags", "array<string>")
     M.add_column(d, "meta", "struct<a:int,b:string>")
-    spark.createDataFrame(
-        [(4, [4.0], ["t4"], (7, "x"))],
-        "id bigint, vec array<double>, tags array<string>,"
-        " meta struct<a:int,b:string>",
-    ).coalesce(1).write.format("quiver").mode("append").save(d)
+    sources.write(
+        spark.createDataFrame(
+            [(4, [4.0], ["t4"], (7, "x"))],
+            "id bigint, vec array<double>, tags array<string>,"
+            " meta struct<a:int,b:string>",
+        ).coalesce(1),
+        d,
+        mode="append",
+    )
     df = scan(spark, d)
     assert "quiverjvm" in df._jdf.queryExecution().analyzed().toString()
     got = sorted(repr(tuple(r)) for r in df.collect())
@@ -1131,9 +1146,11 @@ def test_jvm_serves_semantic_reader_options(spark, tmp_path):
     d = str(tmp_path / "gens")
     # two retained generations: v1 = ids 0..19, live = ids 0..49
     for n in (20, 50):
-        spark.range(n).selectExpr("id", "id * 2 AS v").coalesce(1).write.format(
-            "quiver"
-        ).option("keep_generations", "3").mode("overwrite").save(d)
+        sources.write(
+            spark.range(n).selectExpr("id", "id * 2 AS v").coalesce(1),
+            d,
+            keep_generations="3",
+        )
 
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # routing must be silent
@@ -1157,15 +1174,20 @@ def test_jvm_serves_semantic_reader_options(spark, tmp_path):
     # changes_since: three commits (overwrite + 2 appends), cursor = 1
     # keeps only the appends' files
     inc = str(tmp_path / "inc")
-    spark.range(10).selectExpr("id", "'base' AS tag").coalesce(1).write.format(
-        "quiver"
-    ).mode("overwrite").save(inc)
-    spark.range(10, 15).selectExpr("id", "'a1' AS tag").coalesce(1).write.format(
-        "quiver"
-    ).mode("append").save(inc)
-    spark.range(15, 18).selectExpr("id", "'a2' AS tag").coalesce(1).write.format(
-        "quiver"
-    ).mode("append").save(inc)
+    sources.write(
+        spark.range(10).selectExpr("id", "'base' AS tag").coalesce(1),
+        inc,
+    )
+    sources.write(
+        spark.range(10, 15).selectExpr("id", "'a1' AS tag").coalesce(1),
+        inc,
+        mode="append",
+    )
+    sources.write(
+        spark.range(15, 18).selectExpr("id", "'a2' AS tag").coalesce(1),
+        inc,
+        mode="append",
+    )
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         cdc = scan(spark, inc, changes_since="1")
@@ -1225,9 +1247,13 @@ def test_jvm_serves_translated_reader_options(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "trans")
-    spark.range(1000).selectExpr(
-        "id", "id * 3 AS v", "CAST(id % 7 AS STRING) AS tag"
-    ).coalesce(4).write.format("quiver").mode("overwrite").save(d)
+    sources.write(
+        spark.range(1000).selectExpr(
+            "id", "id * 3 AS v", "CAST(id % 7 AS STRING) AS tag"
+        ).coalesce(4),
+        d,
+        keep_generations="1",
+    )
 
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # routing must be silent
@@ -1337,12 +1363,12 @@ def test_jvm_changes_since_keeps_unvouched_files(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "unvouched")
-    spark.range(5).selectExpr("id").coalesce(1).write.format("quiver").mode(
-        "overwrite"
-    ).save(d)
-    spark.range(5, 9).selectExpr("id").coalesce(1).write.format("quiver").mode(
-        "append"
-    ).save(d)
+    sources.write(spark.range(5).selectExpr("id").coalesce(1), d)
+    sources.write(
+        spark.range(5, 9).selectExpr("id").coalesce(1),
+        d,
+        mode="append",
+    )
     root = _data_root(d)
     # drop in a foreign copy of the first file the manifest knows nothing of
     src = sorted(glob.glob(f"{root}/*.quiver"))[0]
@@ -1522,9 +1548,7 @@ def test_jvm_default_fillability_guard_is_plan_time(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "foreign_default")
-    spark.range(6).selectExpr("id").coalesce(1).write.format("quiver").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(spark.range(6).selectExpr("id").coalesce(1), d)
     man_path = sorted(glob.glob(f"{d}/**/_manifest.json.gz", recursive=True))[-1]
     with gzip.open(man_path, "rt") as f:
         man = json.load(f)
@@ -1674,8 +1698,22 @@ def test_jvm_catalog_insert_overwrite(spark, tmp_path):
     spark.sql("DROP TABLE ow_qt")
 
 
+def _python_append(df, table: str) -> None:
+    """Append ``df`` to the flat ``table`` as one file the Python writer
+    encodes from Spark's Arrow batches, recorded in the manifest."""
+    import os
+    import uuid
+
+    from quiver_spark.format.writer import write_table
+    from quiver_spark.sources.manifest import update_manifest
+
+    rel = f"part-{uuid.uuid4().hex}.quiver"
+    write_table(df.toArrow(), os.path.join(table, rel))
+    update_manifest(table, [rel], "quiver")
+
+
 def test_mixed_engine_table_keeps_fast_path(spark, tmp_path):
-    """A table written by BOTH engines (JVM overwrite + Python-sink
+    """A table written by BOTH engines (JVM overwrite + Python-writer
     append) interns two schema-IPC byte strings that differ only in
     serialization minutiae (empty-vs-absent custom_metadata) — the
     heterogeneous-schema guard must compare PARSED schemas and keep
@@ -1690,9 +1728,9 @@ def test_mixed_engine_table_keeps_fast_path(spark, tmp_path):
     spark.range(10).selectExpr("id", "concat('a', id) AS s").coalesce(
         1
     ).write.format("quiverjvm").mode("overwrite").save(d)
-    spark.range(10, 20).selectExpr("id", "concat('b', id) AS s").coalesce(
-        1
-    ).write.format("quiver").mode("append").save(d)
+    _python_append(
+        spark.range(10, 20).selectExpr("id", "concat('b', id) AS s"), d
+    )
     got = sorted(map(tuple, spark.read.format("quiverjvm").load(d).collect()))
     want = sorted(map(tuple, spark.read.format("quiver").load(d).collect()))
     assert got == want and len(got) == 20
@@ -1702,8 +1740,11 @@ def test_mixed_engine_table_keeps_fast_path(spark, tmp_path):
     spark.range(5).selectExpr("id", "concat('a', id) AS s").coalesce(
         1
     ).write.format("quiverjvm").mode("overwrite").save(d2)
-    spark.range(5, 10).selectExpr(
-        "CAST(id AS STRING) AS id", "concat('b', id) AS s"
-    ).coalesce(1).write.format("quiver").mode("append").save(d2)
+    _python_append(
+        spark.range(5, 10).selectExpr(
+            "CAST(id AS STRING) AS id", "concat('b', id) AS s"
+        ),
+        d2,
+    )
     with pytest.raises(Exception, match="heterogeneous|Python 'quiver'"):
         spark.read.format("quiverjvm").load(d2).collect()

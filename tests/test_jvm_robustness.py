@@ -19,6 +19,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from quiver_spark import sources
 from quiver_spark.format.writer import write_table
 
 
@@ -429,9 +430,7 @@ def test_unified_scan_empty_file_column_is_absent(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "t")
-    spark.range(10).selectExpr("id").write.format("quiver").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(spark.range(10).selectExpr("id"), d)
     df = scan(spark, d, file_column="")
     assert df.columns == ["id"]
     pydf = (

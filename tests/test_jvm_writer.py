@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from quiver_spark import sources
 from quiver_spark.jvm import ensure_jar, session_has_jar, supports_schema
 
 from conftest import SF_DIR_MID
@@ -239,13 +240,15 @@ def test_jvm_adaptive_codecs_fire_and_decode_both_ways(spark, tmp_path):
     assert sorted(map(tuple, py.collect()), key=key) == want
 
     # storage parity with the Python adaptive writer on real data
+    from quiver_spark.format.writer import WriteOptions, write_table
+
     src = spark.read.parquet(f"{SF_DIR_MID}/lineitem.parquet")
     dj = str(tmp_path / "li_jvm")
-    dp = str(tmp_path / "li_py")
+    dp = str(tmp_path / "li_py.quiver")
     src.coalesce(2).write.format("quiverjvm").mode("overwrite").option("codec", "zstd").save(dj)
-    src.coalesce(2).write.format("quiver").mode("overwrite").option("codec", "zstd").save(dp)
+    write_table(src.toArrow(), dp, WriteOptions(default_codec="zstd"))
     sj = sum(os.path.getsize(x) for x in glob.glob(dj + "/**/*.quiver", recursive=True))
-    sp = sum(os.path.getsize(x) for x in glob.glob(dp + "/**/*.quiver", recursive=True))
+    sp = os.path.getsize(dp)
     assert sj <= sp * 1.05, f"JVM adaptive {sj} vs Python {sp}"
     assert (
         spark.read.format("quiver").load(dj).selectExpr("sum(hash(*)) h").collect()[0][0]
@@ -255,9 +258,9 @@ def test_jvm_adaptive_codecs_fire_and_decode_both_ways(spark, tmp_path):
 
 def test_jvm_partitioned_write_hive_fanout(spark, tmp_path):
     """Round-11 JVM Hive fan-out: df.write.format('quiverjvm')
-    .partitionBy(...) lands rows in col=value subdirectories (Python-sink
-    `_part_segment` parity: %-quoted values, __HIVE_DEFAULT_PARTITION__
-    for nulls), files carry only data columns, the commit-time manifest
+    .partitionBy(...) lands rows in col=value subdirectories (Hive
+    escaping: %-quoted values, __HIVE_DEFAULT_PARTITION__ for nulls),
+    files carry only data columns, the commit-time manifest
     covers the subdir rels, and BOTH readers reassemble the partition
     columns identically — with whole-file partition pruning on the JVM
     scan."""
@@ -568,10 +571,13 @@ def test_jvm_nested_hive_fanout_and_dml_interop(spark, tmp_path):
         assert got == exp, fmt
 
     d2 = str(tmp_path / "dml_nested")
-    spark.createDataFrame(
-        [(i, [float(i)] * (i % 3), f"s{i % 2}") for i in range(20)],
-        "id bigint, emb array<double>, src string",
-    ).coalesce(2).write.format("quiver").mode("overwrite").save(d2)
+    sources.write(
+        spark.createDataFrame(
+            [(i, [float(i)] * (i % 3), f"s{i % 2}") for i in range(20)],
+            "id bigint, emb array<double>, src string",
+        ).coalesce(2),
+        d2,
+    )
     M.delete_where(spark, d2, "id % 4 = 0")
     df2 = scan(spark, d2)
     assert "quiverjvm" in df2._jdf.queryExecution().analyzed().toString()
@@ -626,9 +632,11 @@ def test_jvm_append_resolves_live_generation(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "gen")
     for lo in (0, 10):
-        spark.range(lo, lo + 10).selectExpr("id").write.format(
-            "quiver"
-        ).option("keep_generations", "2").mode("overwrite").save(d)
+        sources.write(
+            spark.range(lo, lo + 10).selectExpr("id"),
+            d,
+            keep_generations="2",
+        )
     spark.range(100, 110).selectExpr("id").coalesce(1).write.format(
         "quiverjvm"
     ).mode("append").save(d)
@@ -654,9 +662,7 @@ def test_jvm_stream_sink_into_generation_table(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "gen")
-    spark.range(10).selectExpr("id").write.format("quiver").option(
-        "keep_generations", "2"
-    ).mode("overwrite").save(d)
+    sources.write(spark.range(10).selectExpr("id"), d, keep_generations="2")
     src = str(tmp_path / "src")
     spark.range(200, 210).selectExpr("id").write.format("quiverjvm").mode(
         "overwrite"

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from quiver_spark import maintenance
+from quiver_spark import sources
 from quiver_spark.sources import register
 from quiver_spark.sources.quiver_datasource import _data_root
 
@@ -26,12 +27,7 @@ def test_compact_flat_dir(spark, tmp_path):
     register(spark)
     src, dst = str(tmp_path / "small"), str(tmp_path / "big")
     df = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    (
-        df.repartition(30)
-        .write.format("quiver")
-        .mode("overwrite")
-        .save(src)
-    )
+    sources.write(df.repartition(30), src)
     n_small = len(glob.glob(os.path.join(_data_root(src), "*.quiver")))
     assert n_small == 30  # one small file per task — the streaming-sink shape
     before = _rows(spark, src)
@@ -49,13 +45,11 @@ def test_compact_partitioned_dir(spark, tmp_path):
     df = spark.read.parquet(f"{SF_DIR}/documents.parquet").withColumn(
         "doc_id", F.col("doc_id").cast("long")
     )
-    (
-        df.repartition(8)
-        .write.format("quiver")
-        .option("partition_by", "lang")
-        .option("max_rows_per_file", "50")
-        .mode("overwrite")
-        .save(src)
+    sources.write(
+        df.repartition(8),
+        src,
+        partition_by="lang",
+        max_rows_per_file="50",
     )
     before = _rows(spark, src)
     out = maintenance.compact(spark, src, dst, target_rows_per_file=100_000)
@@ -75,12 +69,7 @@ def test_compact_local_flat(spark, tmp_path):
     register(spark)
     src = str(tmp_path / "lsmall")
     df = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    (
-        df.repartition(5)
-        .write.format("quiver")
-        .mode("overwrite")
-        .save(src)
-    )
+    sources.write(df.repartition(5), src)
     dst = str(tmp_path / "merged.quiver")
     out = maintenance.compact_local(src, dst)
     assert out["files_before"] == 5 and out["files_after"] == 1
@@ -92,9 +81,11 @@ def test_compact_local_flat(spark, tmp_path):
 def test_compact_local_refuses_partitioned(spark, tmp_path):
     register(spark)
     src = str(tmp_path / "lpart")
-    spark.read.parquet(f"{SF_DIR}/documents.parquet").write.format(
-        "quiver"
-    ).option("partition_by", "lang").mode("overwrite").save(src)
+    sources.write(
+        spark.read.parquet(f"{SF_DIR}/documents.parquet"),
+        src,
+        partition_by="lang",
+    )
     with pytest.raises(ValueError, match="partitioned"):
         maintenance.compact_local(src, str(tmp_path / "x.quiver"))
 
@@ -106,7 +97,7 @@ def test_compact_refuses_nested_destination(spark, tmp_path):
     register(spark)
     src = str(tmp_path / "inplace")
     df = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    df.write.format("quiver").mode("overwrite").save(src)
+    sources.write(df, src)
     for dst in (os.path.join(src, "sub"), str(tmp_path)):
         with pytest.raises(ValueError, match="overlaps source"):
             maintenance.compact(spark, src, dst)
@@ -249,13 +240,7 @@ def test_expire_generations(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "retain")
     for n in (10, 20, 30):
-        (
-            spark.range(n)
-            .write.format("quiver")
-            .option("keep_generations", "99")
-            .mode("overwrite")
-            .save(out)
-        )
+        sources.write(spark.range(n), out, keep_generations="99")
     import os as _os
 
     gens = sorted(d for d in _os.listdir(out) if d.startswith("gen-"))
@@ -288,13 +273,7 @@ def test_rollback_generation(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "rb")
     for n in (10, 20, 30):
-        (
-            spark.range(n)
-            .write.format("quiver")
-            .option("keep_generations", "99")
-            .mode("overwrite")
-            .save(out)
-        )
+        sources.write(spark.range(n), out, keep_generations="99")
     assert spark.read.format("quiver").load(out).count() == 30
 
     res = maintenance.rollback_generation(out, 2)
@@ -329,13 +308,7 @@ def test_rollback_cli(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "rb_cli")
     for n in (5, 7):
-        (
-            spark.range(n)
-            .write.format("quiver")
-            .option("keep_generations", "9")
-            .mode("overwrite")
-            .save(out)
-        )
+        sources.write(spark.range(n), out, keep_generations="9")
     env = dict(os.environ, PYTHONPATH="/root/repo")
     r = subprocess.run(
         [_sys.executable, "-m", "quiver_spark", "rollback", out, "--to", "1"],
@@ -367,7 +340,7 @@ def test_cluster_by_tightens_zone_maps_for_dml(spark, tmp_path):
         # hash-scatter: every file's id min/max spans ~the whole domain
         .repartition(8)
     )
-    df.write.format("quiver").mode("overwrite").save(tbl)
+    sources.write(df, tbl)
 
     probe = maintenance._touched_files(
         spark, tbl, "id >= 100 AND id < 120"
@@ -399,7 +372,7 @@ def test_cluster_by_missing_column_raises(spark, tmp_path):
 
     register(spark)
     tbl = str(tmp_path / "t")
-    spark.range(10).write.format("quiver").mode("overwrite").save(tbl)
+    sources.write(spark.range(10), tbl)
     with pytest.raises(ValueError, match="not in schema"):
         maintenance.cluster_by(spark, tbl, ["nope"])
 
@@ -426,12 +399,12 @@ def test_zorder_clustering_prunes_on_every_column(spark, tmp_path):
     )
 
     plain = str(tmp_path / "plain")
-    grid.write.format("quiver").mode("overwrite").save(plain)
+    sources.write(grid, plain)
     maintenance.cluster_by(
         spark, plain, ["x", "y"], target_rows_per_file=1024
     )
     zord = str(tmp_path / "zord")
-    grid.write.format("quiver").mode("overwrite").save(zord)
+    sources.write(grid, zord)
     zsum = maintenance.cluster_by(
         spark, zord, ["x", "y"], target_rows_per_file=1024, zorder=True
     )
@@ -481,18 +454,18 @@ def test_clone_snapshot_zero_copy_and_independent(spark, tmp_path):
 
     register(spark)
     src = str(tmp_path / "src")
-    (
+    sources.write(
         spark.range(100)
         .selectExpr("id", "id % 5 AS g")
-        .coalesce(1)
-        .write.format("quiver")
-        .option("keep_generations", "3")
-        .mode("overwrite")
-        .save(src)
+        .coalesce(1),
+        src,
+        keep_generations="3",
     )
-    spark.range(200).selectExpr("id", "id % 5 AS g").coalesce(1).write.format(
-        "quiver"
-    ).option("keep_generations", "3").mode("overwrite").save(src)
+    sources.write(
+        spark.range(200).selectExpr("id", "id % 5 AS g").coalesce(1),
+        src,
+        keep_generations="3",
+    )
 
     dst = str(tmp_path / "clone")
     res = maintenance.clone_snapshot(src, dst)
@@ -547,9 +520,7 @@ def test_clone_crash_leaves_no_partial_table(spark, tmp_path, monkeypatch):
 
     register(spark)
     src = str(tmp_path / "src")
-    spark.range(50).coalesce(1).write.format("quiver").mode(
-        "overwrite"
-    ).save(src)
+    sources.write(spark.range(50).coalesce(1), src)
     dst = str(tmp_path / "dst")
 
     boom = RuntimeError("simulated crash mid-clone")
@@ -583,9 +554,7 @@ def test_clone_crash_between_pointer_and_rename_is_loud_and_retryable(
 
     register(spark)
     src = str(tmp_path / "src")
-    spark.range(25).coalesce(1).write.format("quiver").mode(
-        "overwrite"
-    ).save(src)
+    sources.write(spark.range(25).coalesce(1), src)
     dst = str(tmp_path / "dst")
 
     real_rename = os.rename
@@ -617,9 +586,11 @@ def test_vacuum_housekeeping(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "t")
     for k in range(3):
-        spark.range(k * 10, (k + 1) * 10).write.format("quiver").option(
-            "keep_generations", "5"
-        ).mode("overwrite").save(d)
+        sources.write(
+            spark.range(k * 10, (k + 1) * 10),
+            d,
+            keep_generations="5",
+        )
     # abandoned staging attempt (old) + orphan sidecar in the live root
     stage = os.path.join(d, "_temporary", "task-dead")
     os.makedirs(stage)
@@ -650,7 +621,7 @@ def test_vacuum_sweeps_crashed_clone_staging(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "t")
-    spark.range(5).write.format("quiver").mode("overwrite").save(d)
+    sources.write(spark.range(5), d)
     ct = os.path.join(d, "_clone_tmp")
     os.makedirs(ct)
     old = time.time() - 90000
@@ -668,7 +639,7 @@ def test_vacuum_sweeps_crashed_clone_staging(spark, tmp_path):
 def test_compact_partition_evolution(spark, tmp_path):
     """compact(partition_by=...) is partition EVOLUTION: a flat table
     re-lays out under new Hive keys (and [] removes partitioning), all
-    on the atomic generation swap. (The rewrite uses the sink's default
+    on the atomic generation swap. (The rewrite uses the write's default
     retention, so the pre-evolution generation expires unless the
     rewrite is issued with keep_generations > 1.)"""
     import glob
@@ -680,9 +651,7 @@ def test_compact_partition_evolution(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, i % 3, f"r{i}") for i in range(60)], "id long, grp int, s string"
     )
-    df.write.format("quiver").option("keep_generations", "3").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(df, d, keep_generations="3")
     # flat → partitioned on grp
     rep = maintenance.compact(spark, d, partition_by=["grp"])
     assert rep["partition_by"] == ["grp"]
@@ -713,10 +682,13 @@ def test_analyze_table_stats_round_trip(spark, tmp_path, capsys):
 
     register(spark)
     d = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", None), (2, "b", 2.5), (2, None, 2.5)],
-        "k long, s string, v double",
-    ).write.format("quiver").mode("overwrite").save(d)
+    sources.write(
+        spark.createDataFrame(
+            [(1, "a", None), (2, "b", 2.5), (2, None, 2.5)],
+            "k long, s string, v double",
+        ),
+        d,
+    )
     rep = maintenance.analyze_table(spark, d, exact_ndv=True)
     assert rep["row_count"] == 3
     st = load_manifest(_data_root(d)).table_stats
@@ -737,9 +709,11 @@ def test_analyze_table_stats_round_trip(spark, tmp_path, capsys):
     assert any(c.get("op") == "analyze" for c in hist["commits"])
     # a later append makes them stale (detectably), and an incremental
     # cursor taken before the ANALYZE sees no files from it
-    spark.createDataFrame([(9, "z", 1.0)], "k long, s string, v double").write.format(
-        "quiver"
-    ).mode("append").save(d)
+    sources.write(
+        spark.createDataFrame([(9, "z", 1.0)], "k long, s string, v double"),
+        d,
+        mode="append",
+    )
     capsys.readouterr()
     assert tools_main(["stats", d]) in (0, None)
     out = _json.loads(capsys.readouterr().out)
@@ -749,16 +723,17 @@ def test_analyze_table_stats_round_trip(spark, tmp_path, capsys):
     st2 = load_manifest(_data_root(d)).table_stats
     assert st2 is not None and st2["row_count"] == 3
     # ...and die with a full overwrite (the data they describe is gone)
-    spark.createDataFrame([(5, "q", 0.5)], "k long, s string, v double").write.format(
-        "quiver"
-    ).mode("overwrite").save(d)
+    sources.write(
+        spark.createDataFrame([(5, "q", 0.5)], "k long, s string, v double"),
+        d,
+    )
     assert load_manifest(_data_root(d)).table_stats is None
 
 
 def test_analyze_unknown_column_refused(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "t")
-    spark.range(5).write.format("quiver").mode("overwrite").save(d)
+    sources.write(spark.range(5), d)
     with pytest.raises(ValueError, match="not in"):
         maintenance.analyze_table(spark, d, columns=["nope"])
 
@@ -772,16 +747,16 @@ def test_snapshot_diff_insert_delete_update(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c"), (3, "c")], "k long, s string"
     )
-    base.write.format("quiver").option("keep_generations", "3").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(base, d, keep_generations="3")
     # v2: row 1 updated, row 2 deleted, one duplicate of (3,c) removed,
     # row 4 inserted
-    spark.createDataFrame(
-        [(1, "A"), (3, "c"), (4, "d")], "k long, s string"
-    ).write.format("quiver").option("keep_generations", "3").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(
+        spark.createDataFrame(
+            [(1, "A"), (3, "c"), (4, "d")], "k long, s string"
+        ),
+        d,
+        keep_generations="3",
+    )
     diff = maintenance.snapshot_diff(spark, d, from_version=1)
     got = sorted(map(tuple, diff.collect()))
     assert got == [
@@ -800,13 +775,17 @@ def test_snapshot_diff_across_schema_evolution(spark, tmp_path):
     Delta-CDF restriction); disjoint schemas error."""
     register(spark)
     d = str(tmp_path / "t2")
-    spark.createDataFrame([(1, "a")], "k long, s string").write.format(
-        "quiver"
-    ).option("keep_generations", "4").mode("overwrite").save(d)
+    sources.write(
+        spark.createDataFrame([(1, "a")], "k long, s string"),
+        d,
+        keep_generations="4",
+    )
     maintenance.rename_column(d, "s", "name")
-    spark.createDataFrame([(2, "b")], "k long, name string").write.format(
-        "quiver"
-    ).mode("append").save(d)
+    sources.write(
+        spark.createDataFrame([(2, "b")], "k long, name string"),
+        d,
+        mode="append",
+    )
     diff = maintenance.snapshot_diff(spark, d, from_version=1)
     # common column is k only (v1 declares s, live declares name)
     assert diff.columns == ["k", "_change_type"]
@@ -819,9 +798,12 @@ def test_clone_carries_declared_schema_and_constraints(spark, tmp_path):
     defaults) and keeps enforcing its CHECK constraints."""
     register(spark)
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    spark.createDataFrame(
-        [(1, "a", 1.0)], "k long, s string, v double"
-    ).write.format("quiver").mode("overwrite").save(src)
+    sources.write(
+        spark.createDataFrame(
+            [(1, "a", 1.0)], "k long, s string, v double"
+        ),
+        src,
+    )
     maintenance.rename_column(src, "s", "name")
     maintenance.add_column(src, "grade", "string", default="g")
     maintenance.add_constraint(spark, src, "v_pos", "v > 0")
@@ -853,14 +835,12 @@ def test_retention_ignores_newer_than_live_orphans(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "t")
     for i in range(3):  # gens 1..3, live = 3
-        spark.range(10 + i).write.format("quiver").option(
-            "keep_generations", "9"
-        ).mode("overwrite").save(d)
+        sources.write(spark.range(10 + i), d, keep_generations="9")
     # fabricate an orphan claim newer than live (a crashed writer's dir
     # never gets the _committed marker a successful swap stamps)
     orphan = os.path.join(d, "gen-000009")
     _shutil.copytree(os.path.join(d, "gen-000003"), orphan)
-    from quiver_spark.sources.quiver_datasource import _COMMITTED
+    from quiver_spark.sources.snapshot import COMMITTED as _COMMITTED
 
     try:
         os.remove(os.path.join(orphan, _COMMITTED))
@@ -896,9 +876,7 @@ def test_vacuum_never_sweeps_rollback_retained_generation(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "t")
     for n in (10, 20):
-        spark.range(n).write.format("quiver").option(
-            "keep_generations", "5"
-        ).mode("overwrite").save(d)
+        sources.write(spark.range(n), d, keep_generations="5")
     maintenance.rollback_generation(d, 1)  # live = gen-1; gen-2 newer
     g2 = os.path.join(d, "gen-000002")
     old = _time.time() - 7 * 24 * 3600

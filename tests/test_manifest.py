@@ -19,6 +19,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from quiver_spark import sources
 from quiver_spark.sources import manifest as man_mod
 from quiver_spark.sources import quiver_datasource as qd
 from quiver_spark.sources import stream_writer
@@ -39,14 +40,6 @@ from quiver_spark.sources.quiver_datasource import (
 from conftest import SF_DIR
 
 
-def _write_sink(spark, df, path, mode="overwrite", **options):
-    register(spark)
-    w = df.write.format("quiver").mode(mode)
-    for k, v in options.items():
-        w = w.option(k, v)
-    w.save(path)
-
-
 @pytest.fixture(scope="module")
 def nation_df(spark):
     return spark.read.parquet(f"{SF_DIR}/nation.parquet")
@@ -54,7 +47,7 @@ def nation_df(spark):
 
 def test_overwrite_writes_manifest_into_generation(spark, nation_df, tmp_path):
     d = str(tmp_path / "t1")
-    _write_sink(spark, nation_df, d)
+    sources.write(nation_df, d, keep_generations="1")
     root = _data_root(d)
     assert os.path.basename(root).startswith("gen-")
     assert os.path.exists(os.path.join(root, MANIFEST_NAME))
@@ -78,7 +71,7 @@ def test_partitions_zero_footer_reads_with_manifest(
     """The headline pin: a manifest-backed plan opens NO data files —
     plan-time I/O is one manifest read (+ stats), O(1) in file count."""
     d = str(tmp_path / "t2")
-    _write_sink(spark, nation_df.repartition(4), d)
+    sources.write(nation_df.repartition(4), d)
     files = _list_files(d)
     assert len(files) >= 3  # multiple files so the claim is meaningful
 
@@ -106,8 +99,8 @@ def test_partitions_zero_footer_reads_with_manifest(
 
 def test_append_updates_manifest(spark, nation_df, tmp_path):
     d = str(tmp_path / "t3")
-    _write_sink(spark, nation_df, d)
-    _write_sink(spark, nation_df.limit(5), d, mode="append")
+    sources.write(nation_df, d)
+    sources.write(nation_df.limit(5), d, mode="append")
     root = _data_root(d)
     man = load_manifest(root)
     files = _list_files(d)
@@ -125,15 +118,15 @@ def test_flat_append_creates_root_manifest_then_gc_on_overwrite(
     os.makedirs(d)
     t = pq.read_table(f"{SF_DIR}/nation.parquet")
     write_table(t, os.path.join(d, "part-lib.quiver"), WriteOptions())
-    # append via the sink into the FLAT root: manifest lands at the root
+    # append through sources.write into the FLAT root: manifest lands at the root
     # and covers the appended file; the library-written file stays
     # manifest-absent (fallback) — reads stay correct either way
-    _write_sink(spark, nation_df.limit(3), d, mode="append")
+    sources.write(nation_df.limit(3), d, mode="append")
     assert os.path.exists(os.path.join(d, MANIFEST_NAME))
     assert spark.read.format("quiver").load(d).count() == 28
     # first overwrite: generations take over; the stale flat-root manifest
     # must not survive (it described swept files)
-    _write_sink(spark, nation_df, d)
+    sources.write(nation_df, d)
     assert not os.path.exists(os.path.join(d, MANIFEST_NAME))
     assert os.path.exists(os.path.join(_data_root(d), MANIFEST_NAME))
     assert spark.read.format("quiver").load(d).count() == 25
@@ -141,7 +134,7 @@ def test_flat_append_creates_root_manifest_then_gc_on_overwrite(
 
 def test_stale_entry_falls_back_to_footer(spark, nation_df, tmp_path):
     d = str(tmp_path / "t5")
-    _write_sink(spark, nation_df, d)
+    sources.write(nation_df, d)
     root = _data_root(d)
     f = _list_files(d)[0]
     # out-of-band rewrite: same path, different bytes → stat mismatch
@@ -157,7 +150,7 @@ def test_stale_entry_falls_back_to_footer(spark, nation_df, tmp_path):
 
 def test_empty_overwrite_manifested(spark, nation_df, tmp_path):
     d = str(tmp_path / "t6")
-    _write_sink(spark, nation_df.where("n_nationkey < 0"), d)
+    sources.write(nation_df.where("n_nationkey < 0"), d)
     root = _data_root(d)
     man = load_manifest(root)
     files = _list_files(d)
@@ -254,12 +247,7 @@ def test_page_prune_uses_manifest_sidecar(spark, tmp_path, monkeypatch):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"
     )
-    _write_sink(
-        spark,
-        li.orderBy("l_orderkey"),
-        d,
-        max_page_size="512",
-    )
+    sources.write(li.orderBy("l_orderkey"), d, max_page_size="512")
     root = _data_root(d)
     man = load_manifest(root)
     f = _list_files(d)[0]
@@ -294,7 +282,7 @@ def test_manifest_cli_verify_and_rebuild(spark, nation_df, tmp_path, capsys):
     from quiver_spark.tools import main
 
     d = str(tmp_path / "tc")
-    _write_sink(spark, nation_df, d)
+    sources.write(nation_df, d)
     assert main(["manifest", "verify", d]) == 0
     rep = verify_manifest(_data_root(d))
     assert rep["ok"] and rep["checked"] >= 1 and not rep["unlisted"]
@@ -325,7 +313,7 @@ def test_manifest_corrupt_file_degrades_to_fallback(
     spark, nation_df, tmp_path
 ):
     d = str(tmp_path / "tx")
-    _write_sink(spark, nation_df, d)
+    sources.write(nation_df, d)
     root = _data_root(d)
     with open(os.path.join(root, MANIFEST_NAME), "wb") as f:
         f.write(b"not gzip")

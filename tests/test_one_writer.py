@@ -1,19 +1,17 @@
 """The program writes quiver tables through one writer: ``sources.write``
 (batch) and ``sources.stream_writer`` (streams), both on the quiverjvm
-writer. A ``DataFrameWriter`` ``.format("quiver")`` (the Python sink)
-appears only in ``operators/format_queries_jvm.py``, whose fixtures are
-the reference files the Java reader is checked against, and a
-``.writeStream … .format("quiver")`` appears nowhere (the format has no
-streaming write). Every module under ``quiver_spark/`` is parsed with
-``ast``, so the check needs no Spark."""
+writer. A ``DataFrameWriter`` ``.format("quiver")`` appears nowhere in
+``quiver_spark/``, ``bench.py`` or ``examples/`` (the format has no
+batch write), and neither does a ``.writeStream … .format("quiver")``
+(nor a streaming write). Every module is parsed with ``ast``, so the
+check needs no Spark."""
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
 
-PACKAGE = Path(__file__).resolve().parent.parent / "quiver_spark"
-REFERENCE_WRITER = "quiver_spark/operators/format_queries_jvm.py"
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _receiver_names(node: ast.AST) -> set[str]:
@@ -58,34 +56,36 @@ def _quiver_writes(path: Path) -> list[tuple[str, int]]:
     return sorted(found, key=lambda kl: kl[1])
 
 
-def _program_writes() -> dict[str, list[tuple[str, int]]]:
-    modules = sorted(PACKAGE.rglob("*.py"))
-    assert modules
-    return {
-        p.relative_to(PACKAGE.parent).as_posix(): hits
-        for p in modules
-        if (hits := _quiver_writes(p))
-    }
+def _program_modules() -> list[Path]:
+    return sorted(
+        [*(REPO / "quiver_spark").rglob("*.py"),
+         *(REPO / "examples").rglob("*.py"),
+         REPO / "bench.py"]
+    )
 
 
-def test_batch_quiver_sink_only_in_reference_fixtures():
-    batch = {
-        mod: [line for kind, line in hits if kind == "batch"]
-        for mod, hits in _program_writes().items()
-        if mod != REFERENCE_WRITER
-    }
-    assert {m: ls for m, ls in batch.items() if ls} == {}, (
+def _program_writes(kind: str) -> dict[str, list[int]]:
+    modules = _program_modules()
+    assert len(modules) > 2
+    out = {}
+    for p in modules:
+        lines = [line for k, line in _quiver_writes(p) if k == kind]
+        if lines:
+            out[p.relative_to(REPO).as_posix()] = lines
+    return out
+
+
+def test_no_batch_quiver_sink():
+    batch = _program_writes("batch")
+    assert batch == {}, (
         "write quiver tables through quiver_spark.sources.write "
         f"(module: lines): {batch}"
     )
 
 
 def test_no_quiver_stream_sink():
-    stream = {
-        mod: [line for kind, line in hits if kind == "stream"]
-        for mod, hits in _program_writes().items()
-    }
-    assert {m: ls for m, ls in stream.items() if ls} == {}, (
+    stream = _program_writes("stream")
+    assert stream == {}, (
         "stream into quiver tables through quiver_spark.sources."
         f"stream_writer (module: lines): {stream}"
     )
@@ -93,7 +93,8 @@ def test_no_quiver_stream_sink():
 
 def test_guard_sees_each_shape():
     """The classifier itself: reads pass; batch and stream writes, and a
-    writer held in a variable, are found."""
+    writer held in a variable, are found; the scan covers the package,
+    the examples and the benchmark."""
     import tempfile
 
     src = '''
@@ -110,4 +111,6 @@ w.format("quiver")
         assert _quiver_writes(p) == [
             ("batch", 4), ("batch", 5), ("stream", 6), ("batch", 7)
         ]
-    assert _program_writes()[REFERENCE_WRITER]
+    names = {p.relative_to(REPO).as_posix() for p in _program_modules()}
+    assert {"bench.py", "quiver_spark/sources/__init__.py"} <= names
+    assert any(n.startswith("examples/") for n in names)

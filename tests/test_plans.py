@@ -5,6 +5,7 @@ it doesn't need, fails HERE."""
 from __future__ import annotations
 
 from quiver_spark import plans
+from quiver_spark import sources
 from quiver_spark.registry import load_all_operators
 
 from conftest import SF_DIR
@@ -399,13 +400,11 @@ def test_quiver_gate_size_served_from_manifest(spark, tmp_path):
 
     register(spark)
     out = str(tmp_path / "gate_tbl")
-    (
+    sources.write(
         spark.range(20000)
         .selectExpr("id", "concat('x', id) s")
-        .repartition(4)
-        .write.format("quiver")
-        .mode("overwrite")
-        .save(out)
+        .repartition(4),
+        out,
     )
     truth = sum(
         os.path.getsize(f)
@@ -446,9 +445,10 @@ def test_analyze_stats_feed_broadcast_gate(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "analyzed")
-    spark.range(5000).selectExpr("id", "concat('v', id) AS s").write.format(
-        "quiver"
-    ).mode("overwrite").save(d)
+    sources.write(
+        spark.range(5000).selectExpr("id", "concat('v', id) AS s"),
+        d,
+    )
 
     # no stats: disk bytes are scaled, never trusted raw
     no_stats = quiver_gate_size_bytes(d)

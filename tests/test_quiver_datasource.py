@@ -9,6 +9,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from quiver_spark import sources
 from quiver_spark.format.writer import WriteOptions, write_table
 from quiver_spark.sources import register
 from quiver_spark.sources.quiver_datasource import _data_root
@@ -129,7 +130,7 @@ def test_spark_write_roundtrip(spark, tmp_path):
     register(spark)
     p = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     out = str(tmp_path / "orders_quiver")
-    p.write.format("quiver").mode("overwrite").save(out)
+    sources.write(p, out)
     files = [f for f in os.listdir(_data_root(out)) if f.endswith(".quiver")]
     assert files
     q = spark.read.format("quiver").load(out)
@@ -267,7 +268,7 @@ def test_empty_dataframe_write_read(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "empty_q")
     df = spark.range(5).filter("id > 99").selectExpr("id", "string(id) AS s")
-    df.write.format("quiver").mode("overwrite").save(out)
+    sources.write(df, out)
     back = spark.read.format("quiver").load(out)
     assert back.count() == 0
     assert back.schema == df.schema
@@ -278,13 +279,7 @@ def test_spark_write_adaptive_options(spark, tmp_path):
     register(spark)
     p = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     out = str(tmp_path / "li_zstd")
-    (
-        p.write.format("quiver")
-        .option("codec", "zstd")
-        .option("max_page_size", "2048")
-        .mode("overwrite")
-        .save(out)
-    )
+    sources.write(p, out, codec="zstd", max_page_size="2048")
     q = spark.read.format("quiver").load(out)
     assert q.count() == p.count()
     # exact DECIMAL sum (registry determinism convention): a double SUM is
@@ -304,12 +299,7 @@ def test_hive_partitioned_write_read(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "docs_by_lang")
     p = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    (
-        p.write.format("quiver")
-        .option("partition_by", "lang")
-        .mode("overwrite")
-        .save(out)
-    )
+    sources.write(p, out, partition_by="lang")
     subdirs = sorted(x for x in os.listdir(_data_root(out)) if "=" in x)
     assert subdirs and all(x.startswith("lang=") for x in subdirs)
     # partition column must not be stored in the files themselves
@@ -339,12 +329,7 @@ def test_hive_partition_prune_skips_files(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "docs_pruned")
     p = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    (
-        p.write.format("quiver")
-        .option("partition_by", "lang")
-        .mode("overwrite")
-        .save(out)
-    )
+    sources.write(p, out, partition_by="lang")
     langs = [r.lang for r in p.select("lang").distinct().collect()]
     assert len(langs) > 1
     target = sorted(langs)[0]
@@ -391,12 +376,7 @@ def test_hive_partition_types_and_null(spark, tmp_path):
         [(1, "a", 10), (2, "b", 10), (3, "c", 20), (4, "d", None)],
         "id INT, s STRING, bucket INT",
     )
-    (
-        df.write.format("quiver")
-        .option("partition_by", "bucket")
-        .mode("overwrite")
-        .save(out)
-    )
+    sources.write(df, out, partition_by="bucket")
     assert os.path.isdir(
         os.path.join(_data_root(out), "bucket=__HIVE_DEFAULT_PARTITION__")
     )
@@ -414,12 +394,7 @@ def test_hive_partition_column_only_projection(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "docs_lang_only")
     p = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    (
-        p.write.format("quiver")
-        .option("partition_by", "lang")
-        .mode("overwrite")
-        .save(out)
-    )
+    sources.write(p, out, partition_by="lang")
     q = (
         spark.read.format("quiver")
         .option("columns", "lang")
@@ -432,24 +407,16 @@ def test_hive_partition_column_only_projection(spark, tmp_path):
 
 
 def test_hive_partition_high_cardinality_one_pass(spark, tmp_path):
-    """A high-cardinality partition key fans out in ONE pass over the
-    buffered rows (sort + run slicing) — the per-combo filter this
-    replaced re-scanned the whole buffer once per distinct value. Checks
-    correctness at 200 distinct keys and that the split helper touches
-    each input row once."""
-    import pyarrow as pa
-
-    from quiver_spark.sources.quiver_datasource import QuiverWriter
-
+    """A high-cardinality partition key: one task fans 4,000 rows out
+    into 200 Hive directories, and every row reads back once with its
+    key re-attached from the path."""
     register(spark)
     out = str(tmp_path / "many_parts")
     n, k = 4000, 200
     df = spark.range(n).selectExpr(
         "id", "CAST(id % 200 AS INT) AS part", "md5(CAST(id AS STRING)) AS payload"
     ).coalesce(1)
-    df.write.format("quiver").option("partition_by", "part").mode(
-        "overwrite"
-    ).save(out)
+    sources.write(df, out, partition_by="part")
     subdirs = {x for x in os.listdir(_data_root(out)) if x.startswith("part=")}
     assert len(subdirs) == k
     q = spark.read.format("quiver").load(out)
@@ -457,20 +424,12 @@ def test_hive_partition_high_cardinality_one_pass(spark, tmp_path):
     got = sorted((r.id, r.part) for r in q.select("id", "part").collect())
     assert got == [(i, i % k) for i in range(n)]
 
-    # unit-level: runs are contiguous slices covering the table exactly once
-    w = QuiverWriter.__new__(QuiverWriter)
-    w.partition_by = ["p"]
-    t = pa.table({"p": [3, 1, 2, 1, None, 3], "v": [0, 1, 2, 3, 4, 5]})
-    parts = list(w._split_partitions(t))
-    assert sorted(sub.num_rows for _d, sub in parts) == [1, 1, 2, 2]
-    assert sum(sub.num_rows for _d, sub in parts) == t.num_rows
-
 
 def test_spark_writer_open_competition_can_choose_patas(spark, tmp_path):
-    """The Spark sink's default chooser mirrors WriteOptions: nothing
-    forbidden, so XOR-friendly doubles can win patas pages end-to-end
-    (write → stat → read) — pinning the datasource/WriteOptions default
-    alignment (a stale 'forbidden=patas' sink default once diverged)."""
+    """The default chooser of ``sources.write`` mirrors WriteOptions:
+    nothing forbidden, so XOR-friendly doubles can win patas pages
+    end-to-end (write → stat → read) — pinning the writer/WriteOptions
+    default alignment (a stale 'forbidden=patas' default once diverged)."""
     import glob
 
     import numpy as np
@@ -491,12 +450,7 @@ def test_spark_writer_open_competition_can_choose_patas(spark, tmp_path):
     d = str(tmp_path / "patas_open")
     # no repartition: round-robin shuffling would scramble the smooth value
     # sequence that makes patas win its sampled-ratio contest
-    (
-        df.write.format("quiver")
-        .option("compress_ratio", "1.05")
-        .mode("overwrite")
-        .save(d)
-    )
+    sources.write(df, d, compress_ratio="1.05")
     codecs = set()
     for f in glob.glob(f"{_data_root(d)}/*.quiver"):
         codecs |= {p.codec for p in stat_file(f)["v"]}
@@ -529,15 +483,16 @@ def test_shared_relation_filter_correctness(spark):
 
 
 def test_write_commit_protocol_isolates_failed_tasks(spark, tmp_path):
-    """Task output is staged under _temporary/ and only published on job
+    """Task output of the arrowipc sink (the Python sink that stages task
+    files) is staged under _temporary/ and only published on job
     commit: a task that dies mid-write leaves nothing reader-visible, and
     abort drops reported staging dirs — the file-sink contract that makes
     task retries safe (no duplicate rows, no partial files)."""
     import pyarrow as pa
 
-    from quiver_spark.sources.quiver_datasource import (
-        QuiverWriter,
-        _list_files,
+    from quiver_spark.sources.arrow_datasource import (
+        ArrowIpcWriter,
+        _list_arrow_files,
     )
 
     register(spark)
@@ -546,7 +501,7 @@ def test_write_commit_protocol_isolates_failed_tasks(spark, tmp_path):
     # max_rows_per_file=3 rolls a file at each 3-row batch, so the
     # failing task below has ACTUALLY staged a file before it dies —
     # without this the "nothing visible" assertion would pass trivially
-    w = QuiverWriter({"path": d, "max_rows_per_file": "3"})
+    w = ArrowIpcWriter({"path": d, "max_rows_per_file": "3"})
     batch = pa.record_batch({"x": pa.array([1, 2, 3], pa.int64())})
 
     def failing_iter():
@@ -559,26 +514,27 @@ def test_write_commit_protocol_isolates_failed_tasks(spark, tmp_path):
         pass
     import glob as _glob
 
-    staged = _glob.glob(os.path.join(d, "_temporary", "**", "*.quiver"),
+    staged = _glob.glob(os.path.join(d, "_temporary", "**", "*.arrow"),
                         recursive=True)
     assert staged, "failing task should have staged a file"
     # nothing visible before commit, even though the task wrote bytes
-    assert _list_files(d) == []
+    assert _list_arrow_files(d) == []
 
     msg = w.write(iter([batch]))
     assert msg.files and os.path.isdir(msg.task_dir)
-    assert _list_files(d) == []  # still staged
+    assert _list_arrow_files(d) == []  # still staged
     w.commit([msg])
-    files = _list_files(d)
+    files = _list_arrow_files(d)
     assert len(files) == 1 and "_temporary" not in files[0]
-    q = spark.read.format("quiver").load(d)
+    q = spark.read.format("arrowipc").load(d)
     assert sorted(r.x for r in q.collect()) == [1, 2, 3]
 
     # abort drops a reported staging dir
     msg2 = w.write(iter([batch]))
     w.abort([msg2])
     assert not os.path.isdir(msg2.task_dir)
-    assert sorted(r.x for r in spark.read.format("quiver").load(d).collect()) == [1, 2, 3]
+    q = spark.read.format("arrowipc").load(d)
+    assert sorted(r.x for r in q.collect()) == [1, 2, 3]
 
 
 def test_stream_sink_replayed_batch_is_idempotent(spark, tmp_path):
@@ -634,7 +590,7 @@ def test_enable_on_plain_session(tmp_path):
     quiver_spark.enable(spark)
     d = str(tmp_path / "enable_rt")
     src = spark.range(100).selectExpr("id", "CAST(id % 7 AS STRING) AS tag")
-    src.write.format("quiver").mode("overwrite").save(d)
+    sources.write(src, d)
     back = spark.read.format("quiver").load(d)
     assert sorted(r.id for r in back.collect()) == list(range(100))
 
@@ -752,8 +708,8 @@ def test_append_mode(spark, tmp_path):
     register(spark)
     d = str(tmp_path / "append_flat")
     n = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    n.write.format("quiver").mode("overwrite").save(d)
-    n.write.format("quiver").mode("append").save(d)
+    sources.write(n, d)
+    sources.write(n, d, mode="append")
     back = spark.read.format("quiver").load(d)
     assert back.count() == 2 * n.count()
     assert (
@@ -766,11 +722,8 @@ def test_append_mode(spark, tmp_path):
 
     dp = str(tmp_path / "append_part")
     doc = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    w = doc.write.format("quiver").option("partition_by", "lang")
-    w.mode("overwrite").save(dp)
-    doc.write.format("quiver").option("partition_by", "lang").mode(
-        "append"
-    ).save(dp)
+    sources.write(doc, dp, partition_by="lang")
+    sources.write(doc, dp, partition_by="lang", mode="append")
     back = spark.read.format("quiver").load(dp)
     assert back.count() == 2 * doc.count()
     # appended rows landed INSIDE the lang=... subdirs, not at top level
@@ -844,11 +797,11 @@ def test_failed_overwrite_preserves_previous_table(spark, tmp_path):
     """Overwrite deletes the previous generation at COMMIT, not at plan
     time: a job that fails mid-write must leave the old table fully
     readable (Spark's own file sinks clear at job start — a failed
-    overwrite there destroys the data; this sink survives it)."""
+    overwrite there destroys the data; sources.write survives it)."""
     register(spark)
     out = str(tmp_path / "gen")
     v1 = spark.range(100).selectExpr("id", "id * 2 AS y")
-    v1.write.format("quiver").mode("overwrite").save(out)
+    sources.write(v1, out)
     before = sorted(map(tuple, spark.read.format("quiver").load(out).collect()))
 
     from pyspark.sql import functions as F
@@ -859,13 +812,13 @@ def test_failed_overwrite_preserves_previous_table(spark, tmp_path):
 
     v2 = spark.range(50).select(boom("id").alias("id"), F.lit(0).alias("y"))
     with pytest.raises(Exception):
-        v2.write.format("quiver").mode("overwrite").save(out)
+        sources.write(v2, out)
     after = sorted(map(tuple, spark.read.format("quiver").load(out).collect()))
     assert after == before, "old generation lost by failed overwrite"
 
     # successful overwrite still replaces fully
     v3 = spark.range(7).selectExpr("id", "id AS y")
-    v3.write.format("quiver").mode("overwrite").save(out)
+    sources.write(v3, out)
     assert spark.read.format("quiver").load(out).count() == 7
 
 
@@ -877,31 +830,25 @@ def test_overwrite_generation_swap_and_time_travel(spark, tmp_path):
     the default keep=1 GCs superseded generations."""
     register(spark)
     out = str(tmp_path / "gens")
-    spark.range(10).write.format("quiver").mode("overwrite").save(out)
+    sources.write(spark.range(10), out, keep_generations="1")
     assert os.path.exists(os.path.join(out, "_current"))
     assert os.path.basename(_data_root(out)) == "gen-000001"
     assert spark.read.format("quiver").load(out).count() == 10
 
     # keep the previous generation, write a second
-    (
-        spark.range(20)
-        .write.format("quiver")
-        .option("keep_generations", "2")
-        .mode("overwrite")
-        .save(out)
-    )
+    sources.write(spark.range(20), out, keep_generations="2")
     assert os.path.basename(_data_root(out)) == "gen-000002"
     assert spark.read.format("quiver").load(out).count() == 20
     # time travel to the retained generation
     v1 = spark.read.format("quiver").option("version", "1").load(out)
     assert v1.count() == 10
     # append goes into the LIVE generation
-    spark.range(5).write.format("quiver").mode("append").save(out)
+    sources.write(spark.range(5), out, mode="append")
     assert spark.read.format("quiver").load(out).count() == 25
     assert spark.read.format("quiver").option("version", "1").load(out).count() == 10
 
     # default keep=1: a third overwrite GCs generations 1 and 2
-    spark.range(3).write.format("quiver").mode("overwrite").save(out)
+    sources.write(spark.range(3), out)
     assert spark.read.format("quiver").load(out).count() == 3
     gens = sorted(d for d in os.listdir(out) if d.startswith("gen-"))
     assert gens == ["gen-000003"], gens
@@ -924,9 +871,7 @@ def test_overwrite_sweeps_pre_generation_flat_files(spark, tmp_path):
         WriteOptions(),
     )
     assert spark.read.format("quiver").load(out).count() == 3
-    spark.range(8).selectExpr("id AS x").write.format("quiver").mode(
-        "overwrite"
-    ).save(out)
+    sources.write(spark.range(8).selectExpr("id AS x"), out)
     assert spark.read.format("quiver").load(out).count() == 8
     assert not os.path.exists(os.path.join(out, "part-0.quiver"))
 
@@ -940,11 +885,9 @@ def test_self_overwrite_reads_consistent_snapshot(spark, tmp_path):
     the directory the read tasks were about to scan.)"""
     register(spark)
     out = str(tmp_path / "selfow")
-    spark.range(100).selectExpr("id", "id % 2 AS keep").write.format(
-        "quiver"
-    ).mode("overwrite").save(out)
+    sources.write(spark.range(100).selectExpr("id", "id % 2 AS keep"), out)
     t = spark.read.format("quiver").load(out)
-    t.filter("keep = 1").write.format("quiver").mode("overwrite").save(out)
+    sources.write(t.filter("keep = 1"), out)
     back = spark.read.format("quiver").load(out)
     assert back.count() == 50
     assert back.selectExpr("min(keep)", "max(keep)").collect()[0] == (1, 1)
@@ -1060,13 +1003,7 @@ def test_packed_partitions_keep_hive_specs_per_chunk(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "packed_hive")
     p = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    (
-        p.repartition(2)
-        .write.format("quiver")
-        .option("partition_by", "lang")
-        .mode("overwrite")
-        .save(out)
-    )
+    sources.write(p.repartition(2), out, partition_by="lang")
     df = spark.read.format("quiver").option(
         "planning_parallelism", "2"
     ).load(out)
@@ -1117,30 +1054,23 @@ def test_bloom_point_lookup_prunes_unsorted_pages(spark, tmp_path):
     """Point-lookup data skipping where zone maps are USELESS: ids are
     shuffled so every page's min/max spans the whole domain (the min/max
     pass keeps everything), but per-page blooms prune to the page(s)
-    actually holding the key — and results stay exact."""
+    actually holding the key — and results stay exact. The blooms are
+    the quiverjvm writer's (``bloom_columns``); the Python reader prunes
+    with them."""
     import random
 
-    import pyarrow as pa
     from pyspark.sql.datasource import EqualTo, In
 
     from quiver_spark.sources.quiver_datasource import QuiverScanReader
 
     d = tmp_path / "bloomed"
-    os.makedirs(d, exist_ok=True)
     rng = random.Random(7)
     ids = list(range(20000))
     rng.shuffle(ids)
-    t = pa.table(
-        {
-            "uid": pa.array(ids, type=pa.int64()),
-            "tag": pa.array([f"k-{i}" for i in ids]),
-        }
-    )
-    write_table(
-        t,
-        str(d / "part-0.quiver"),
-        WriteOptions(max_page_size=1000, bloom_columns=("uid", "tag")),
-    )
+    df = spark.createDataFrame(
+        [(i, f"k-{i}") for i in ids], "uid long, tag string"
+    ).coalesce(1)
+    sources.write(df, str(d), max_page_size=1000, bloom_columns="uid,tag")
     register(spark)
 
     opts = {"path": str(d), "page_prune": "true"}
@@ -1181,19 +1111,17 @@ def test_bloom_point_lookup_prunes_unsorted_pages(spark, tmp_path):
 
 
 def test_bloom_through_sink_option(spark, tmp_path):
-    """`.option("bloom_columns", ...)` on the sink writes blooms that
-    survive the commit + manifest path and prune at scan time."""
+    """``bloom_columns`` on ``sources.write`` writes blooms that survive
+    the commit + manifest path and prune at scan time."""
     register(spark)
     out = str(tmp_path / "t")
-    (
+    sources.write(
         spark.range(10000)
         .selectExpr("id", "hash(id) % 100000 AS probe")
-        .repartition(1)
-        .write.format("quiver")
-        .mode("overwrite")
-        .option("max_page_size", "1000")
-        .option("bloom_columns", "id")
-        .save(out)
+        .repartition(1),
+        out,
+        max_page_size="1000",
+        bloom_columns="id",
     )
     from quiver_spark.sources.manifest import load_manifest
     from quiver_spark.sources.quiver_datasource import (
@@ -1216,22 +1144,12 @@ def test_require_not_null_constraint(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "t")
     ok = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    (
-        ok.write.format("quiver")
-        .mode("overwrite")
-        .option("require_not_null", "id,s")
-        .save(out)
-    )
+    sources.write(ok, out, require_not_null="id,s")
     assert spark.read.format("quiver").load(out).count() == 2
 
     bad = spark.createDataFrame([(3, None)], "id long, s string")
     with pytest.raises(Exception, match="NOT NULL constraint violated"):
-        (
-            bad.write.format("quiver")
-            .mode("overwrite")
-            .option("require_not_null", "s")
-            .save(out)
-        )
+        sources.write(bad, out, require_not_null="s")
     # the failed overwrite left the previous snapshot fully live
     assert sorted(
         (r.id, r.s)
@@ -1239,9 +1157,4 @@ def test_require_not_null_constraint(spark, tmp_path):
     ) == [(1, "a"), (2, "b")]
 
     with pytest.raises(Exception, match="not in the written schema"):
-        (
-            ok.write.format("quiver")
-            .mode("overwrite")
-            .option("require_not_null", "nope")
-            .save(out)
-        )
+        sources.write(ok, out, require_not_null="nope")

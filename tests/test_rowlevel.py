@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from quiver_spark import maintenance
+from quiver_spark import sources
 from quiver_spark.sources.manifest import load_manifest
 from quiver_spark.sources.quiver_datasource import (
     _data_root,
@@ -52,16 +53,11 @@ def _write_ranged(spark, tbl, n, step):
     rest; each single-task slice writes one file)."""
     for k, lo in enumerate(range(0, n, step)):
         mode = "overwrite" if k == 0 else "append"
-        _base_df(spark, min(lo + step, n), lo).write.format(
-            "quiver"
-        ).mode(mode).save(tbl)
+        sources.write(_base_df(spark, min(lo + step, n), lo), tbl, mode=mode)
 
 
 def _write(spark, df, path, **opts):
-    w = df.write.format("quiver").mode("overwrite")
-    for k, v in opts.items():
-        w = w.option(k, str(v))
-    w.save(path)
+    sources.write(df, path, **opts)
 
 
 def _rows(spark, path):
@@ -390,13 +386,7 @@ def test_partition_drop_fast_path_skips_rewrite(spark, tmp_path):
     constant per file, so touched files vanish and untouched files
     carry. A mixed predicate keeps the normal rewrite path."""
     tbl = str(tmp_path / "t")
-    (
-        _base_df(spark, 210)
-        .write.format("quiver")
-        .mode("overwrite")
-        .option("partition_by", "grp")
-        .save(tbl)
-    )
+    sources.write(_base_df(spark, 210), tbl, partition_by="grp")
     summary = maintenance.delete_where(spark, tbl, "grp = 2")
     assert summary["files_rewritten"] == 0
     assert summary["files_dropped_wholesale"] >= 1
@@ -472,7 +462,7 @@ def test_maintenance_reads_route_through_jvm_reader(
 ):
     """On a table the JVM reader accepts, compaction, clustering and every
     row-level op read through quiverjvm — never through the Python
-    "quiver" DataSource (the Python sink still writes)."""
+    "quiver" DataSource."""
     from quiver_spark.jvm import attach_jar
 
     if not attach_jar(spark):
@@ -483,9 +473,11 @@ def test_maintenance_reads_route_through_jvm_reader(
     # refuses a table whose files disagree on a column's nullability
     for k in range(3):
         rows = [(i, i % 7, f"row-{i}") for i in range(100 * k, 100 * k + 100)]
-        spark.createDataFrame(rows, schema).coalesce(1).write.format(
-            "quiver"
-        ).mode("append" if k else "overwrite").save(tbl)
+        sources.write(
+            spark.createDataFrame(rows, schema).coalesce(1),
+            tbl,
+            mode="append" if k else "overwrite",
+        )
     source = spark.createDataFrame([(50, 1, "m"), (400, 2, "n")], schema)
     seen = _spy_reader_formats(monkeypatch)
     maintenance.delete_where(spark, tbl, "id < 10")

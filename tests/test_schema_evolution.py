@@ -11,6 +11,7 @@ import os
 import pyarrow as pa
 import pytest
 
+from quiver_spark import sources
 from quiver_spark.format.writer import write_table
 from quiver_spark.sources import register
 
@@ -207,12 +208,14 @@ def test_schema_evolution_inside_live_generation(spark, tmp_path):
 
     register(spark)
     out = str(tmp_path / "evo_gen")
-    spark.range(10).selectExpr("id AS a").write.format("quiver").mode(
-        "overwrite"
-    ).save(out)
-    spark.range(5).selectExpr("id + 100 AS a", "id AS b").write.format(
-        "quiver"
-    ).mode("append").save(out)
+    sources.write(
+        spark.range(10).selectExpr("id AS a"), out, keep_generations="1"
+    )
+    sources.write(
+        spark.range(5).selectExpr("id + 100 AS a", "id AS b"),
+        out,
+        mode="append",
+    )
     import os as _os
 
     # both files live under the single live generation
@@ -238,10 +241,14 @@ def test_schema_evolution_inside_live_generation(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _write_kv(spark, path, mode="overwrite"):
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, s string"
-    ).write.format("quiver").mode(mode).save(path)
+def _write_kv(spark, path):
+    sources.write(
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "c")], "k long, s string"
+        ),
+        path,
+        keep_generations="1",
+    )
 
 
 def test_add_column_null_fills_and_next_append_populates(spark, tmp_path):
@@ -255,9 +262,13 @@ def test_add_column_null_fills_and_next_append_populates(spark, tmp_path):
     df = spark.read.format("quiver").load(tbl)
     assert df.columns == ["k", "s", "score"]
     assert all(r.score is None for r in df.collect())
-    spark.createDataFrame(
-        [(4, "d", 9.5)], "k long, s string, score double"
-    ).write.format("quiver").mode("append").save(tbl)
+    sources.write(
+        spark.createDataFrame(
+            [(4, "d", 9.5)], "k long, s string, score double"
+        ),
+        tbl,
+        mode="append",
+    )
     rows = sorted(map(tuple, spark.read.format("quiver").load(tbl).collect()))
     assert rows == [
         (1, "a", None), (2, "b", None), (3, "c", None), (4, "d", 9.5),
@@ -278,9 +289,11 @@ def test_rename_resolves_old_files_and_pushdown_works(spark, tmp_path):
     # projecting ONLY the renamed column decodes the physical one
     assert sorted(r[0] for r in df.select("name").collect()) == ["a", "b", "c"]
     # a post-rename append carries the new name physically; both resolve
-    spark.createDataFrame([(4, "d")], "k long, name string").write.format(
-        "quiver"
-    ).mode("append").save(tbl)
+    sources.write(
+        spark.createDataFrame([(4, "d")], "k long, name string"),
+        tbl,
+        mode="append",
+    )
     rows = sorted(map(tuple, spark.read.format("quiver").load(tbl).collect()))
     assert rows == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
 
@@ -359,9 +372,11 @@ def test_dml_after_alter_preserves_declared_schema(spark, tmp_path):
     _write_kv(spark, tbl)
     # second file so the DELETE carries at least one untouched file —
     # the carry path is exactly where the schema could be lost
-    spark.createDataFrame([(9, "z")], "k long, s string").write.format(
-        "quiver"
-    ).mode("append").save(tbl)
+    sources.write(
+        spark.createDataFrame([(9, "z")], "k long, s string"),
+        tbl,
+        mode="append",
+    )
     M.rename_column(tbl, "s", "name")
     M.add_column(tbl, "score", "double")
     rep = M.delete_where(spark, tbl, "name = 'b'")
@@ -393,11 +408,13 @@ def test_alter_partition_column_refused(spark, tmp_path):
 
     register(spark)
     tbl = str(tmp_path / "t_part")
-    spark.createDataFrame(
-        [(1, "x", "p1"), (2, "y", "p2")], "k long, s string, p string"
-    ).write.format("quiver").option("partition_by", "p").mode(
-        "overwrite"
-    ).save(tbl)
+    sources.write(
+        spark.createDataFrame(
+            [(1, "x", "p1"), (2, "y", "p2")], "k long, s string, p string"
+        ),
+        tbl,
+        partition_by="p",
+    )
     with pytest.raises(ValueError, match="partition column"):
         M.drop_column(tbl, "p")
     with pytest.raises(ValueError, match="partition column"):
@@ -477,9 +494,15 @@ def test_add_column_with_default_fills_and_evolves(spark, tmp_path, fmt):
 
     register(spark)
     tbl = str(tmp_path / f"t_dflt_{fmt}")
-    spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string").write.format(
-        fmt
-    ).mode("overwrite").save(tbl)
+
+    def put(df, mode):
+        if fmt == "quiver":
+            sources.write(df, tbl, mode=mode)
+        else:
+            df.write.format(fmt).mode(mode).save(tbl)
+
+    put(spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"),
+        "overwrite")
     rep = M.add_column(tbl, "grade", "string", default="unknown")
     assert rep["default"] == "unknown"
     M.add_column(tbl, "score", "double", default=1.5)
@@ -490,10 +513,13 @@ def test_add_column_with_default_fills_and_evolves(spark, tmp_path, fmt):
         (2, "b", "unknown", 1.5, None),
     ]
     # a post-ALTER append carries real values; old files keep the default
-    spark.createDataFrame(
-        [(3, "c", "real", 9.9, True)],
-        "k long, s string, grade string, score double, flag boolean",
-    ).write.format(fmt).mode("append").save(tbl)
+    put(
+        spark.createDataFrame(
+            [(3, "c", "real", 9.9, True)],
+            "k long, s string, grade string, score double, flag boolean",
+        ),
+        "append",
+    )
     # rename re-keys the default; drop removes it
     M.rename_column(tbl, "grade", "quality")
     rows = sorted(
@@ -514,9 +540,7 @@ def test_typed_defaults_date_decimal(spark, tmp_path):
 
     register(spark)
     tbl = str(tmp_path / "t_typed")
-    spark.createDataFrame([(1,)], "k long").write.format("quiver").mode(
-        "overwrite"
-    ).save(tbl)
+    sources.write(spark.createDataFrame([(1,)], "k long"), tbl)
     M.add_column(tbl, "d", "date", default="2026-01-01")
     M.add_column(tbl, "dec", "decimal(10,2)", default="12.34")
     got = spark.read.format("quiver").load(tbl).collect()[0]
@@ -547,9 +571,11 @@ def test_default_survives_dml_rewrite(spark, tmp_path):
     register(spark)
     tbl = str(tmp_path / "t_dml_dflt")
     _write_kv(spark, tbl)
-    spark.createDataFrame([(9, "z")], "k long, s string").write.format(
-        "quiver"
-    ).mode("append").save(tbl)
+    sources.write(
+        spark.createDataFrame([(9, "z")], "k long, s string"),
+        tbl,
+        mode="append",
+    )
     M.add_column(tbl, "grade", "string", default="unknown")
     M.delete_where(spark, tbl, "s = 'b'")
     rows = sorted(map(tuple, spark.read.format("quiver").load(tbl).collect()))
@@ -607,9 +633,13 @@ def test_alter_on_flat_library_written_dir_migrates(spark, tmp_path):
     rows = sorted(map(tuple, spark.read.format("quiver").load(tbl).collect()))
     assert rows == [(1, "a", "x"), (2, "b", "x"), (3, "c", "x")]
     # append works post-migration; no flat leftovers remain
-    spark.createDataFrame(
-        [(4, "d", "y")], "k long, name string, grade string"
-    ).write.format("quiver").mode("append").save(tbl)
+    sources.write(
+        spark.createDataFrame(
+            [(4, "d", "y")], "k long, name string, grade string"
+        ),
+        tbl,
+        mode="append",
+    )
     assert spark.read.format("quiver").load(tbl).count() == 4
     assert not glob.glob(os.path.join(tbl, "*.quiver"))
 
@@ -623,12 +653,14 @@ def test_alter_on_partitioned_table_keeps_layout_and_dml(spark, tmp_path):
 
     register(spark)
     tbl = str(tmp_path / "t_part_alter")
-    spark.createDataFrame(
-        [(1, "x", "p1"), (2, "y", "p2"), (3, "z", "p1")],
-        "k long, s string, p string",
-    ).write.format("quiver").option("partition_by", "p").mode(
-        "overwrite"
-    ).save(tbl)
+    sources.write(
+        spark.createDataFrame(
+            [(1, "x", "p1"), (2, "y", "p2"), (3, "z", "p1")],
+            "k long, s string, p string",
+        ),
+        tbl,
+        partition_by="p",
+    )
     M.add_column(tbl, "grade", "string", default="g0")
     M.rename_column(tbl, "s", "name")
     df = spark.read.format("quiver").load(tbl)
@@ -676,9 +708,13 @@ def test_mid_stream_alter_fails_loudly(spark, tmp_path):
     # mid-stream ALTER: rename lands between two micro-batches of a
     # NEW stream → the batch planned after it must fail loudly
     M.rename_column(tbl, "s", "name")
-    spark.createDataFrame(
-        [(9, "z", "g9")], "k long, name string, grade string"
-    ).write.format("quiver").mode("append").save(tbl)
+    sources.write(
+        spark.createDataFrame(
+            [(9, "z", "g9")], "k long, name string, grade string"
+        ),
+        tbl,
+        mode="append",
+    )
     q2 = (
         spark.readStream.format("quiver")
         .schema(spark.table("ddl_stream_ok").schema)  # stale: still 's'
@@ -723,19 +759,26 @@ def test_add_column_nested_types_null_fill(spark, tmp_path):
 
     register(spark)
     d = str(tmp_path / "nested_add")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id bigint, s string"
-    ).coalesce(1).write.format("quiver").mode("overwrite").save(d)
+    sources.write(
+        spark.createDataFrame(
+            [(1, "a"), (2, "b")], "id bigint, s string"
+        ).coalesce(1),
+        d,
+    )
     M.add_column(d, "tags", "array<string>")
     M.add_column(d, "meta", "struct<a:int,b:string>")
     M.add_column(d, "kv", "map<string,double>")
     with _pytest.raises(ValueError, match="no initial default"):
         M.add_column(d, "bad", "array<int>", default=[1])
-    spark.createDataFrame(
-        [(3, "c", ["t"], (7, "x"), {"k": 1.5})],
-        "id bigint, s string, tags array<string>,"
-        " meta struct<a:int,b:string>, kv map<string,double>",
-    ).coalesce(1).write.format("quiver").mode("append").save(d)
+    sources.write(
+        spark.createDataFrame(
+            [(3, "c", ["t"], (7, "x"), {"k": 1.5})],
+            "id bigint, s string, tags array<string>,"
+            " meta struct<a:int,b:string>, kv map<string,double>",
+        ).coalesce(1),
+        d,
+        mode="append",
+    )
     rows = {r["id"]: r for r in spark.read.format("quiver").load(d).collect()}
     assert rows[1]["tags"] is None and rows[1]["meta"] is None and rows[1]["kv"] is None
     assert rows[3]["tags"] == ["t"]

@@ -1,7 +1,7 @@
 """Crash matrix for the shared snapshot commit (``sources/snapshot.py``).
 
-Every table commit that needs a snapshot — the Python sinks' and the
-staged JVM write's — publishes through ``snapshot.commit``: claim a
+Every table commit that needs a snapshot — ``sources.write``'s and the
+arrowipc sink's — publishes through ``snapshot.commit``: claim a
 generation, publish staged files, hard-link carried files, write the
 manifest, CAS-swap the pointer. A process that dies between two of
 those steps must leave the table reading as the old snapshot or the new
@@ -10,19 +10,15 @@ orphan generation or staging directory behind.
 
 The crash is a ``BaseException`` raised at the injection point, so no
 ``except Exception`` cleanup runs — the same residue a killed process
-leaves. The commit runs in-process (the sink's commit normally runs in a
-Spark-spawned Python runner a monkeypatch cannot reach): the overwrite
-drives ``QuiverWriter._publish`` with fabricated staged output, and the
-``delete_where`` rewrite runs the real planning with ``sources.write``
-replaced by the Python sink's own write + commit in this process. The
-JVM half runs the real ``sources.write``: its quiverjvm job stages the
-files and this process commits them. Each case then re-runs the
-operation to show the table is healthy.
+leaves. The overwrite drives ``snapshot.commit`` with fabricated staged
+output; ``delete_where`` runs the real rewrite, whose ``sources.write``
+stages the files in a quiverjvm job and commits them in this process,
+where the injection reaches. Each case then re-runs the operation to
+show the table is healthy.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -39,7 +35,6 @@ from quiver_spark.sources.pointer_store import (
     get_pointer_store,
     set_pointer_store,
 )
-from quiver_spark.sources.quiver_datasource import QuiverCommit, QuiverWriter
 
 POINTS = ("staged", "published", "manifest", "swapped")
 
@@ -55,7 +50,7 @@ def _restore_store():
     set_pointer_store(prev)
 
 
-def _stage(table: str, ids: list[int]) -> QuiverCommit:
+def _stage(table: str, ids: list[int]) -> tuple[str, tuple[str, ...]]:
     task_dir = os.path.join(table, snapshot.STAGING_DIR, uuid.uuid4().hex)
     os.makedirs(task_dir)
     rel = f"part-{uuid.uuid4().hex}.quiver"
@@ -64,28 +59,19 @@ def _stage(table: str, ids: list[int]) -> QuiverCommit:
         os.path.join(task_dir, rel),
         WriteOptions(),
     )
-    return QuiverCommit(task_dir=task_dir, files=(rel,))
+    return task_dir, (rel,)
 
 
-def _overwrite(table: str, *groups: list[int]) -> None:
-    QuiverWriter({"path": table}, overwrite=True)._publish(
-        [_stage(table, ids) for ids in groups]
+def _publish(table: str, staged, overwrite: bool, **carry) -> None:
+    """The driver-side commit of staged output, as a write runs it."""
+    snapshot.commit(
+        table, ("*.quiver",), overwrite=overwrite, staged=staged,
+        fmt="quiver", **carry,
     )
 
 
-def _in_process_sink(monkeypatch) -> None:
-    """``sources.write`` as the Python sink run in this process: the
-    task-side write of the whole frame, then the driver-side commit."""
-
-    def write(df, path, mode="overwrite", partition_by=None, **options):
-        opts = {"path": path, **{k: str(v) for k, v in options.items()}}
-        if partition_by:
-            opts["partition_by"] = ",".join(partition_by)
-        w = QuiverWriter(opts, df.schema, overwrite=mode == "overwrite")
-        w.commit([w.write(iter(df.toArrow().to_batches()))])
-        return "quiver"
-
-    monkeypatch.setattr(sources, "write", write)
+def _overwrite(table: str, *groups: list[int]) -> None:
+    _publish(table, [_stage(table, ids) for ids in groups], overwrite=True)
 
 
 def _inject(monkeypatch, point: str) -> None:
@@ -149,13 +135,11 @@ def test_crash_leaves_old_or_new_snapshot(
     _overwrite(table, list(range(5)), list(range(5, 10)))
     old = _state(spark, table)
     assert old == (("id",), OLD_IDS)
-    _in_process_sink(monkeypatch)
 
     _inject(monkeypatch, point)
     with pytest.raises(Crash):
         run(spark, table)
     monkeypatch.undo()
-    _in_process_sink(monkeypatch)
     set_pointer_store(LocalPointerStore())
 
     assert _state(spark, table) == (new if point == "swapped" else old)
@@ -330,19 +314,12 @@ def test_rewrite_refuses_rows_appended_after_planning(tmp_path, layout):
         if 0 in read_table(os.path.join(root, f)).column("id").to_pylist()
     ]
     untouched = [f for f in files if f not in touched]
-    QuiverWriter({"path": table}, overwrite=False)._publish(
-        [_stage(table, [50])]
-    )
-    rewrite = QuiverWriter(
-        {
-            "path": table,
-            "carry_files": json.dumps(untouched),
-            "carry_src": planned,
-        },
-        overwrite=True,
-    )
+    _publish(table, [_stage(table, [50])], overwrite=False)
     with pytest.raises(ConcurrentWriteError, match="since the rewrite was"):
-        rewrite._publish([_stage(table, [1])])
+        _publish(
+            table, [_stage(table, [1])], overwrite=True,
+            carry=untouched, carry_src=planned,
+        )
     assert _ids(table) == [0, 1, 2, 3, 50]
     assert snapshot.generations(table) == gens
 

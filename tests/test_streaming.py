@@ -10,6 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from quiver_spark import sources
 from quiver_spark.streaming import events as se
 
 from conftest import SF_DIR
@@ -167,11 +168,13 @@ def test_stream_source_rate_limit(spark, tmp_path):
     register(spark)
     out = str(tmp_path / "rate_src")
     for i in range(3):
-        spark.range(i * 10, (i + 1) * 10).selectExpr(
-            "id", "CAST(id AS STRING) AS s"
-        ).coalesce(1).write.format("quiver").mode(
-            "append" if i else "overwrite"
-        ).save(out)
+        sources.write(
+            spark.range(i * 10, (i + 1) * 10).selectExpr(
+                "id", "CAST(id AS STRING) AS s"
+            ).coalesce(1),
+            out,
+            mode="append" if i else "overwrite",
+        )
     files = [f for f in os.listdir(_data_root(out)) if f.endswith(".quiver")]
     assert len(files) == 3, files
 
@@ -216,11 +219,13 @@ def test_stream_source_rate_limit_restart_no_duplicates(spark, tmp_path):
     register_format(spark)
     out = str(tmp_path / "restart_src")
     for i in range(3):
-        spark.range(i * 10, (i + 1) * 10).selectExpr(
-            "id", "CAST(id AS STRING) AS s"
-        ).coalesce(1).write.format("quiver").mode(
-            "append" if i else "overwrite"
-        ).save(out)
+        sources.write(
+            spark.range(i * 10, (i + 1) * 10).selectExpr(
+                "id", "CAST(id AS STRING) AS s"
+            ).coalesce(1),
+            out,
+            mode="append" if i else "overwrite",
+        )
     ckpt = str(tmp_path / "ckpt-restart")
 
     def run(expect_rows: int, max_wait: float):
@@ -376,9 +381,7 @@ def test_stream_source_overwrite_reingests_new_generation(spark, tmp_path):
 
     register(spark)
     out = str(tmp_path / "gen_src")
-    spark.range(0, 10).selectExpr("id").coalesce(1).write.format(
-        "quiver"
-    ).mode("overwrite").save(out)
+    sources.write(spark.range(0, 10).selectExpr("id").coalesce(1), out)
 
     batches = []
 
@@ -402,9 +405,7 @@ def test_stream_source_overwrite_reingests_new_generation(spark, tmp_path):
     assert sorted(i for b in batches for i in b) == list(range(10))
 
     # overwrite mid-stream: a NEW generation becomes live
-    spark.range(100, 105).selectExpr("id").coalesce(1).write.format(
-        "quiver"
-    ).mode("overwrite").save(out)
+    sources.write(spark.range(100, 105).selectExpr("id").coalesce(1), out)
     deadline = _time.time() + 120
     while _time.time() < deadline and sum(len(b) for b in batches) < 15:
         _time.sleep(0.5)
@@ -426,10 +427,10 @@ def test_stream_source_start_commit_skips_backfill(spark, tmp_path):
 
     register(spark)
     out = str(tmp_path / "cdc_table")
-    spark.range(100).write.format("quiver").mode("overwrite").save(out)
+    sources.write(spark.range(100), out)
     cursor = maintenance.current_commit(out)
     assert cursor == 1
-    spark.range(100, 130).write.format("quiver").mode("append").save(out)
+    sources.write(spark.range(100, 130), out, mode="append")
     src = (
         spark.readStream.format("quiver")
         .option("start_commit", str(cursor))
@@ -472,12 +473,15 @@ def test_jvm_stream_source_matches_batch(spark, tmp_path):
 
         _pytest.skip("quiverjvm jar unavailable")
     d = str(tmp_path / "tbl")
-    spark.range(20).selectExpr("id", "id * 2 AS v").coalesce(2).write.format(
-        "quiver"
-    ).mode("overwrite").save(d)
-    spark.range(20, 30).selectExpr("id", "id * 2 AS v").coalesce(1).write.format(
-        "quiver"
-    ).mode("append").save(d)
+    sources.write(
+        spark.range(20).selectExpr("id", "id * 2 AS v").coalesce(2),
+        d,
+    )
+    sources.write(
+        spark.range(20, 30).selectExpr("id", "id * 2 AS v").coalesce(1),
+        d,
+        mode="append",
+    )
     q = (
         spark.readStream.format("quiverjvm")
         .load(d)
@@ -505,12 +509,12 @@ def test_jvm_stream_rate_limit_and_start_commit(spark, tmp_path):
 
         _pytest.skip("quiverjvm jar unavailable")
     d = str(tmp_path / "tbl")
-    spark.range(10).selectExpr("id").coalesce(2).write.format("quiver").mode(
-        "overwrite"
-    ).save(d)
-    spark.range(10, 14).selectExpr("id").coalesce(1).write.format(
-        "quiver"
-    ).mode("append").save(d)
+    sources.write(spark.range(10).selectExpr("id").coalesce(2), d)
+    sources.write(
+        spark.range(10, 14).selectExpr("id").coalesce(1),
+        d,
+        mode="append",
+    )
     q = (
         spark.readStream.format("quiverjvm")
         .option("max_files_per_trigger", "1")
@@ -552,9 +556,7 @@ def test_jvm_stream_checkpoint_restart_no_duplicates(spark, tmp_path):
     d = str(tmp_path / "tbl")
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
-    spark.range(5).selectExpr("id").coalesce(1).write.format("quiver").mode(
-        "overwrite"
-    ).save(d)
+    sources.write(spark.range(5).selectExpr("id").coalesce(1), d)
 
     def run():
         # file sink (the memory sink cannot recover from a checkpoint)
@@ -571,9 +573,11 @@ def test_jvm_stream_checkpoint_restart_no_duplicates(spark, tmp_path):
         return sorted(r["id"] for r in spark.read.parquet(out).collect())
 
     assert run() == list(range(5))
-    spark.range(5, 8).selectExpr("id").coalesce(1).write.format("quiver").mode(
-        "append"
-    ).save(d)
+    sources.write(
+        spark.range(5, 8).selectExpr("id").coalesce(1),
+        d,
+        mode="append",
+    )
     # same checkpoint: only the appended rows arrive (sink accumulates —
     # exactly-once would break as duplicates of 0..4 here)
     assert run() == list(range(8))
@@ -603,10 +607,13 @@ def test_jvm_stream_nested_and_hive(spark, tmp_path):
         return sorted(map(repr, spark.sql(f"SELECT * FROM {name}").collect()))
 
     nested = str(tmp_path / "nested")
-    spark.createDataFrame(
-        [(1, [1.0, 2.0], {"k": 1}), (2, [3.0], None), (3, [], {"z": 9})],
-        "id bigint, emb array<double>, m map<string,int>",
-    ).coalesce(1).write.format("quiver").mode("overwrite").save(nested)
+    sources.write(
+        spark.createDataFrame(
+            [(1, [1.0, 2.0], {"k": 1}), (2, [3.0], None), (3, [], {"z": 9})],
+            "id bigint, emb array<double>, m map<string,int>",
+        ).coalesce(1),
+        nested,
+    )
     want = sorted(
         map(repr, spark.read.format("quiverjvm").load(nested).collect())
     )
@@ -626,7 +633,7 @@ def test_jvm_stream_nested_and_hive(spark, tmp_path):
 def test_jvm_streaming_sink_roundtrip_and_commit_protocol(spark, tmp_path):
     """A routed stream (sources.stream_writer) of a quiverjvm source:
     each micro-batch stages under _temporary/ and commits through
-    sources.write, leaving the Python sink's on-disk protocol — per-batch
+    sources.write, leaving the stream log's on-disk protocol — per-batch
     markers in _quiver_commits/, ONE CDC-stamped manifest commit per
     non-empty batch, staging pruned. The streamed table reads identically
     through BOTH engines."""
@@ -667,8 +674,8 @@ def test_jvm_streaming_sink_roundtrip_and_commit_protocol(spark, tmp_path):
 
 def test_jvm_streaming_sink_replay_marker_drops_batch(spark, tmp_path):
     """Idempotent replay: a routed stream's batch whose _quiver_commits
-    marker already exists must not publish again (the Python sink's
-    recovery contract, shared log layout). Pre-seeding marker 0
+    marker already exists must not publish again (the arrowipc stream
+    sink's recovery contract, shared log layout). Pre-seeding marker 0
     simulates the replayed batch."""
     if not _jvm_stream_ready(spark):
         import pytest as _pytest
@@ -887,7 +894,7 @@ def test_quiver_format_has_no_stream_write(spark, tmp_path):
     register(spark)
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
-    spark.range(10).write.format("quiver").mode("overwrite").save(src)
+    sources.write(spark.range(10), src)
     with pytest.raises(Exception, match="sources.stream_writer"):
         q = (
             spark.readStream.format("quiver")
@@ -946,16 +953,20 @@ def test_jvm_stream_sink_concurrent_python_append(spark, tmp_path):
     appended = []
     lo = 1000
     while q.isActive and lo < 1030:
-        spark.range(lo, lo + 10).selectExpr("id").coalesce(1).write.format(
-            "quiver"
-        ).mode("append").save(dst)
+        sources.write(
+            spark.range(lo, lo + 10).selectExpr("id").coalesce(1),
+            dst,
+            mode="append",
+        )
         appended.extend(range(lo, lo + 10))
         lo += 10
     q.awaitTermination(120)
     while lo < 1030:  # drained too fast to interleave: append the rest
-        spark.range(lo, lo + 10).selectExpr("id").coalesce(1).write.format(
-            "quiver"
-        ).mode("append").save(dst)
+        sources.write(
+            spark.range(lo, lo + 10).selectExpr("id").coalesce(1),
+            dst,
+            mode="append",
+        )
         appended.extend(range(lo, lo + 10))
         lo += 10
     want = sorted(list(range(80)) + appended)
@@ -1031,13 +1042,13 @@ def test_jvm_stream_source_semantic_options(spark, tmp_path):
     from quiver_spark.sources.quiver_datasource import _data_root
 
     d = str(tmp_path / "tbl")
-    spark.range(10).selectExpr("id").write.format("quiver").option(
-        "keep_generations", "2"
-    ).mode("overwrite").save(d)
+    sources.write(spark.range(10).selectExpr("id"), d, keep_generations="2")
     c0 = load_manifest(_data_root(d)).commit_seq
-    spark.range(10, 20).selectExpr("id").write.format("quiver").option(
-        "keep_generations", "2"
-    ).mode("overwrite").save(d)
+    sources.write(
+        spark.range(10, 20).selectExpr("id"),
+        d,
+        keep_generations="2",
+    )
 
     def drain(reader_opts, name):
         q = (

@@ -10,6 +10,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from quiver_spark import sources
 from quiver_spark import tools
 from quiver_spark.format.writer import WriteOptions, write_table
 
@@ -150,14 +151,8 @@ def test_cli_generations(spark, tmp_path):
 
     register(spark)
     out = str(tmp_path / "gtable")
-    spark.range(10).write.format("quiver").mode("overwrite").save(out)
-    (
-        spark.range(25)
-        .write.format("quiver")
-        .option("keep_generations", "2")
-        .mode("overwrite")
-        .save(out)
-    )
+    sources.write(spark.range(10), out, keep_generations="1")
+    sources.write(spark.range(25), out, keep_generations="2")
     r = subprocess.run(
         [sys.executable, "-m", "quiver_spark", "generations", out],
         capture_output=True, text=True, cwd="/tmp",
@@ -181,7 +176,7 @@ def test_clone_cli(spark, tmp_path):
 
     register(spark)
     src = str(tmp_path / "src")
-    spark.range(30).write.format("quiver").mode("overwrite").save(src)
+    sources.write(spark.range(30), src)
     dst = str(tmp_path / "dst")
     env = dict(os.environ, PYTHONPATH="/root/repo")
     r = subprocess.run(
@@ -207,8 +202,8 @@ def test_cli_commits(spark, tmp_path):
 
     register(spark)
     out = str(tmp_path / "ctable")
-    spark.range(10).write.format("quiver").mode("overwrite").save(out)
-    spark.range(10, 15).write.format("quiver").mode("append").save(out)
+    sources.write(spark.range(10), out)
+    sources.write(spark.range(10, 15), out, mode="append")
     r = subprocess.run(
         [sys.executable, "-m", "quiver_spark", "commits", out],
         capture_output=True, text=True, cwd="/tmp",
@@ -260,8 +255,8 @@ def test_cli_changes(spark, tmp_path):
 
     register(spark)
     out = str(tmp_path / "chtable")
-    spark.range(10).write.format("quiver").mode("overwrite").save(out)
-    spark.range(10, 14).write.format("quiver").mode("append").save(out)
+    sources.write(spark.range(10), out)
+    sources.write(spark.range(10, 14), out, mode="append")
     r = subprocess.run(
         [sys.executable, "-m", "quiver_spark", "changes", out,
          "--since", "1"],
@@ -297,8 +292,8 @@ def test_cli_doctor(spark, tmp_path):
 
     register(spark)
     out = str(tmp_path / "doctable")
-    spark.range(100).write.format("quiver").mode("overwrite").save(out)
-    spark.range(100, 120).write.format("quiver").mode("append").save(out)
+    sources.write(spark.range(100), out)
+    sources.write(spark.range(100, 120), out, mode="append")
     env = {"PYTHONPATH": "/root/repo", "PATH": "/usr/bin:/bin"}
     r = subprocess.run(
         [sys.executable, "-m", "quiver_spark", "doctor", out, "--deep"],

@@ -195,20 +195,41 @@ def test_require_not_null_is_a_plan_check(spark, tmp_path):
     [
         (("NULL AS n",), {}, "n void"),
         ((), {"page_stats": "false"}, "page_stats"),
+        ((), {"max_page_size": 0}, "max_page_size must be a positive"),
+        ((), {"max_rows_per_file": 0}, "max_rows_per_file must be a positive"),
     ],
-    ids=["null_typed_column", "unknown_option"],
+    ids=["null_typed_column", "unknown_option", "max_page_size_0",
+         "max_rows_per_file_0"],
 )
 def test_write_refusals_come_before_any_job(spark, tmp_path, cols, options,
                                             match):
-    """A column the quiverjvm writer cannot encode and an option
-    ``sources.write`` does not take each raise ValueError, naming it,
-    before any job runs and before a stage (or the table) exists."""
+    """A column the quiverjvm writer cannot encode, an option
+    ``sources.write`` does not take, and a page size or file row cap
+    that is not a positive integer (the JVM encoder divides by the page
+    size; a cap of 0 would flush a file per row) each raise ValueError,
+    naming it, before any job runs and before a stage (or the table)
+    exists."""
     from quiver_spark import sources
 
     t = str(tmp_path / "t")
     with pytest.raises(ValueError, match=match):
         sources.write(_job_bomb(spark, *cols), t, **options)
     assert not os.path.exists(t)
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+def test_quiver_format_refuses_batch_writes(spark, tmp_path, mode):
+    """``df.write.format("quiver")`` fails before any task runs, naming
+    ``quiver_spark.sources.write``, and leaves no data file."""
+    import glob
+
+    from quiver_spark import sources
+
+    sources.register(spark)
+    d = str(tmp_path / "t")
+    with pytest.raises(Exception, match="quiver_spark.sources.write"):
+        _job_bomb(spark).write.format("quiver").mode(mode).save(d)
+    assert glob.glob(os.path.join(d, "**", "*.quiver"), recursive=True) == []
 
 
 def test_write_without_the_jar_names_the_build(spark, tmp_path, monkeypatch):
@@ -223,10 +244,10 @@ def test_write_without_the_jar_names_the_build(spark, tmp_path, monkeypatch):
     assert not os.path.exists(t)
 
 
-@pytest.mark.parametrize("how", ["quiver", "arrowipc", "sources.write"])
+@pytest.mark.parametrize("how", ["arrowipc", "sources.write"])
 def test_max_rows_per_file_rolls_at_exactly_n(spark, tmp_path, how):
     """One task of 2N+3 rows writes files of N, N and 3 rows on every
-    writer: the Python sinks roll at exactly N, as quiverjvm does."""
+    writer: the arrowipc sink rolls at exactly N, as quiverjvm does."""
     import pyarrow.ipc as ipc
 
     from quiver_spark import sources
@@ -242,7 +263,6 @@ def test_max_rows_per_file_rolls_at_exactly_n(spark, tmp_path, how):
             pytest.skip("quiverjvm jar cannot attach")
         sources.write(df, t, max_rows_per_file=n)
     else:
-        sources.register(spark)
         sources.register_arrow(spark)
         df.write.format(how).option("max_rows_per_file", str(n)).mode(
             "overwrite"
