@@ -41,7 +41,7 @@ def main() -> None:
         .getOrCreate()
     )
     from quiver_spark import enable, maintenance
-    from quiver_spark.sources import write
+    from quiver_spark.sources import scan, write
 
     enable(spark)
 
@@ -80,7 +80,7 @@ def main() -> None:
 
     # --- streaming tail: skip the backfill -------------------------
     q = (
-        spark.readStream.format("quiver")
+        spark.readStream.format("quiverjvm")
         .option("start_commit", str(cursor))
         .load(table)
         .groupBy("lang")
@@ -104,7 +104,7 @@ def main() -> None:
     print("streamed tail (appends only, backfill skipped):")
     spark.table("cdc_tail").orderBy("lang").show(5)
 
-    total = spark.read.format("quiver").load(table).count()
+    total = scan(spark, table).count()
     tailed = sum(
         r.tailed_docs for r in spark.table("cdc_tail").collect()
     )

@@ -21,7 +21,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 import quiver_spark
-from quiver_spark.sources import write
+from quiver_spark.sources import scan, write
 
 
 def main() -> None:
@@ -52,7 +52,7 @@ def main() -> None:
     print(f"wrote {df.count()} rows to {out}/demo")
 
     # --- read: DataFrame form --------------------------------------------
-    back = spark.read.format("quiver").load(f"{out}/demo")
+    back = scan(spark, f"{out}/demo")
     agg = back.groupBy("category").agg(
         F.count(F.lit(1)).alias("n"), F.sum("sorted_ints").alias("s")
     )
@@ -63,24 +63,20 @@ def main() -> None:
     write(df.limit(10), f"{out}/demo", keep_generations="2")
     print(
         "after overwrite:",
-        spark.read.format("quiver").load(f"{out}/demo").count(),
+        scan(spark, f"{out}/demo").count(),
         "rows; previous snapshot:",
-        spark.read.format("quiver").option("version", "1").load(f"{out}/demo").count(),
+        scan(spark, f"{out}/demo", version="1").count(),
         "rows",
     )
-    # restore the full demo table for the sections below
-    write(back, f"{out}/demo")
-    back = spark.read.format("quiver").load(f"{out}/demo")
+    # restore the full demo table for the sections below (a scan reads
+    # the live snapshot at each action, so pin the retained generation)
+    write(scan(spark, f"{out}/demo", version="1"), f"{out}/demo")
+    back = scan(spark, f"{out}/demo")
 
     # --- read: narrow projection -----------------------------------------
-    # Spark's Python DataSource API cannot receive Catalyst's column
-    # pruning (4.1.2 pushes filters only), so pass the projection
-    # explicitly and executors decode ONLY those leaves:
-    narrow = (
-        spark.read.format("quiver")
-        .option("columns", "category,sorted_ints")
-        .load(f"{out}/demo")
-    )
+    # columns= is a select on the scan; Catalyst prunes the reader's
+    # decode to ONLY those leaves:
+    narrow = scan(spark, f"{out}/demo", columns="category,sorted_ints")
     print("narrow projection:", narrow.columns, "->", narrow.count(), "rows")
 
     # --- read: SQL-view form ---------------------------------------------

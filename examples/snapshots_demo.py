@@ -34,7 +34,7 @@ def main() -> None:
         expire_generations,
         rollback_generation,
     )
-    from quiver_spark.sources import register, write
+    from quiver_spark.sources import register, scan, write
 
     register(spark)
     tbl = os.path.join(tempfile.mkdtemp(prefix="quiver_demo_"), "events")
@@ -47,12 +47,12 @@ def main() -> None:
             spark.range(n).selectExpr("id", f"'{day}' AS batch"), tbl,
             keep_generations="3",
         )
-    live = spark.read.format("quiver").load(tbl)
+    live = scan(spark, tbl)
     print("live rows:", live.count(), "| generations:",
           sorted(d for d in os.listdir(tbl) if d.startswith("gen-")))
 
     # --- 2. time travel to a retained generation ----------------------
-    v1 = spark.read.format("quiver").option("version", "1").load(tbl)
+    v1 = scan(spark, tbl, version="1")
     print("version 1 rows:", v1.count(), "(day1 snapshot, still readable)")
 
     # --- 3. rollback: undo the last overwrite -------------------------
@@ -60,7 +60,7 @@ def main() -> None:
     res = rollback_generation(tbl, 2)
     print("rolled back:", res)
     print("live rows after rollback:",
-          spark.read.format("quiver").load(tbl).count(), "(day2 again)")
+          scan(spark, tbl).count(), "(day2 again)")
 
     # --- 4. retention sweep -------------------------------------------
     print("expire:", expire_generations(tbl, keep=1))

@@ -40,7 +40,7 @@ def main() -> None:
         .getOrCreate()
     )
     from quiver_spark import maintenance as M
-    from quiver_spark.sources import register, write
+    from quiver_spark.sources import register, scan, write
     from quiver_spark.tools import cmd_commits, cmd_schema
 
     register(spark)
@@ -71,7 +71,7 @@ def main() -> None:
         )
     except Exception:
         print("violating append rejected (nothing published) ✓")
-    assert spark.read.format("quiver").load(tbl).filter(
+    assert scan(spark, tbl).filter(
         "quality < 0"
     ).count() == 0
 
@@ -79,8 +79,7 @@ def main() -> None:
     M.compact(spark, tbl, partition_by=["n_regionkey"])
     print(
         "partitioned scan (n_regionkey=0):",
-        spark.read.format("quiver").load(tbl)
-        .filter("n_regionkey = 0").count(), "rows",
+        scan(spark, tbl).filter("n_regionkey = 0").count(), "rows",
     )
 
     # 4. ANALYZE: one aggregate job → stats in the manifest

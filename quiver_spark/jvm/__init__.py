@@ -19,9 +19,11 @@ manyfiles 0.39x of the parquet control (the Python DS floor was
 Division of labor: the JVM reader serves flat and nested schemas over
 plain, generation and Hive layouts, ALTER-DDL tables, column defaults,
 time travel (``version``), CDC (``changes_since``), ``files`` subsets and
-``merge_schemas``, with manifest planning and zone-map + bloom pruning;
-its guards refuse what it cannot read (half floats, decimal256, …) and
-``sources.scan`` then falls back to the Python reader. The JVM writer
+``merge_schemas``, with manifest planning and zone-map + bloom pruning.
+It serves every ``sources.scan``; its guards refuse what it cannot read
+(half floats, decimal256, files whose columns differ without
+``merge_schemas``, …) at plan time, each naming the remedy, and the scan
+raises. The JVM writer
 takes every batch write ``sources.write`` makes: the job writes files
 and sidecars into a staging directory (``_temporary/jvm-<uuid>/``), and
 ``sources.write`` publishes them through ``snapshot.commit`` under the
@@ -68,8 +70,8 @@ def ensure_jar(build: bool = True) -> str | None:
     """Return the jar path, building it with javac when missing.
 
     Returns None when the jar is absent and cannot be built (no javac in
-    the environment); ``sources.write`` then refuses to write, and
-    ``sources.scan`` reads through the Python reader.
+    the environment); ``sources.write`` and ``sources.scan`` then raise,
+    naming ``build.sh``.
     """
     if os.path.exists(JAR_PATH):
         return JAR_PATH
@@ -179,8 +181,8 @@ def attach_jar(spark) -> bool:
     session's shared-state jar classloader, which DataSourceV2 lookup
     consults — so even driver-owned plain sessions (the correctness gate)
     can use the JVM fast path. Idempotent; resolution is verified, never
-    assumed, and failure degrades to False (``sources.scan`` then reads
-    through the Python reader; ``sources.write`` raises). A verified success is remembered per session (the
+    assumed, and failure degrades to False (``sources.scan`` and
+    ``sources.write`` then raise). A verified success is remembered per session (the
     lookup is a py4j round trip on every scan and write); a failure is
     not, so a later call probes again."""
     if spark in _ATTACHED:

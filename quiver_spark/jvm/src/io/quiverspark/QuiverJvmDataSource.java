@@ -74,8 +74,8 @@ public class QuiverJvmDataSource implements TableProvider, DataSourceRegister {
     }
     try {
       // declared (ALTER) schema > manifest-interned schema (zero footer
-      // reads) > first footer; Hive partition columns appended — one code
-      // path shared with the unified Python-side router. `version` pins a
+      // reads) > first footer; Hive partition columns appended; a guard
+      // refusal raises here, at load(). `version` pins a
       // retained generation (its schema may differ from the live one);
       // `merge_schemas` unions per-file schemas by name (round 13).
       return QuiverJvmRead.inferTableSchema(

@@ -64,11 +64,12 @@ import org.apache.spark.sql.vectorized.ColumnarBatch;
  *   cursor), files (rewrite subsets), merge_schemas (union-by-name)
  * - non-us timestamp units (s/ms/ns), converted to Spark's us at decode
  *   with pyarrow safe-cast parity (truncating ns values raise)
- * Correctness boundary (still the Python "quiver" DataSource's job):
+ * Refused at plan time, never misread (UnsupportedOperationException
+ * naming the remedy):
  * - exotic leaf shapes (half floats, decimal256, date64) and non-scalar
- *   or unfillable default values → UnsupportedOperationException
- * - merge-schemas tables without the merge_schemas option → rejected
- *   loudly, never misread
+ *   or unfillable default values
+ * - tables whose files carry different columns, without the
+ *   merge_schemas option
  * Generation layouts resolve through `_current` exactly like the Python
  * planner; column pruning arrives via Catalyst's
  * SupportsPushDownRequiredColumns (the JVM DSv2 gets what the Python DS
@@ -563,7 +564,7 @@ public final class QuiverJvmRead {
   }
 
   /** Reject table-level semantics this reader cannot honor — loudly,
-   * never by misreading. The Python DataSource owns these features. */
+   * never by misreading. */
   static void guardManifestNode(com.fasterxml.jackson.databind.JsonNode m) {
     guardManifestNode(m, false);
   }
@@ -579,18 +580,17 @@ public final class QuiverJvmRead {
       com.fasterxml.jackson.databind.JsonNode cd = m.get("column_defaults");
       // declared types for fillability validation (below): a default the
       // reader's typedConstant cannot materialize (binary/array/map/…)
-      // must refuse HERE, at the plan-time probe, so the router's
-      // designed silent reroute to the Python DS fires — an executor-side
-      // UnsupportedOperationException in PartitionReader init would fail
-      // the query instead (ADVICE r12).
+      // must refuse HERE, at plan time, not executor-side in
+      // PartitionReader init after the job started (ADVICE r12).
       Schema declared = declaredSchema(m);
       for (java.util.Iterator<String> it = cd.fieldNames(); it.hasNext(); ) {
         String name = it.next();
         com.fasterxml.jackson.databind.JsonNode v = cd.get(name);
         if (!v.isTextual() && !v.isBoolean() && !v.isNumber()) {
           throw new UnsupportedOperationException(
-              "quiverjvm: non-scalar column default " + v
-                  + ": read with the Python 'quiver' DataSource");
+              "quiverjvm: non-scalar column default " + v + " for '" + name
+                  + "': a foreign or corrupt manifest (maintenance.add_column"
+                  + " stores JSON scalars only)");
         }
         if (declared != null) {
           for (Field f : declared.getFields()) {
@@ -598,8 +598,9 @@ public final class QuiverJvmRead {
             DataType t = sparkType(f); // throws UOE on extended types — also a guard refusal
             if (!QuiverColumnarReader.defaultFillable(t)) {
               throw new UnsupportedOperationException(
-                  "quiverjvm: column default on type " + t
-                      + ": read with the Python 'quiver' DataSource");
+                  "quiverjvm: column default on type " + t + " for '" + name
+                      + "' cannot be filled: declare the column without a "
+                      + "default (maintenance.add_column refuses this one)");
             }
           }
         }
@@ -622,13 +623,14 @@ public final class QuiverJvmRead {
           }
         }
         // Distinct interned indexes are only HETEROGENEOUS when the parsed
-        // schemas actually differ (field names, arrow types, nullability,
-        // children): the two engines serialize IDENTICAL schemas with
-        // different IPC minutiae (empty-vs-absent custom_metadata), and a
-        // mixed-engine table (JVM stream epochs + Python batch appends)
-        // must not lose the fast path over representation bytes. The
-        // per-file openChunk name+type checks still reject any real
-        // conflict loudly at read time.
+        // schemas actually differ (field names, arrow types, children):
+        // the two engines serialize IDENTICAL schemas with different IPC
+        // minutiae (empty-vs-absent custom_metadata), and files that
+        // differ only in a column's nullability (an append of a nullable
+        // frame to a table first written from spark.range) read as one
+        // table whose column is nullable (inferTableSchema). The per-file
+        // openChunk name+type checks still reject any real conflict
+        // loudly at read time.
         if (idxs.size() > 1) {
           java.util.Iterator<Integer> it = idxs.iterator();
           int first = it.next();
@@ -636,7 +638,7 @@ public final class QuiverJvmRead {
             if (!sameInternedSchema(m, first, it.next())) {
               throw new UnsupportedOperationException(
                   "quiverjvm: files carry heterogeneous schemas (merge-schemas "
-                      + "table): read with the Python 'quiver' DataSource");
+                      + "table): read with merge_schemas=\"true\"");
             }
           }
         }
@@ -645,7 +647,8 @@ public final class QuiverJvmRead {
   }
 
   /** Are two interned manifest schemas the SAME table schema once parsed
-   * (name, arrow type, nullability, children — metadata ignored)? */
+   * (name, arrow type, children — metadata and the top-level columns'
+   * nullability ignored)? */
   static boolean sameInternedSchema(
       com.fasterxml.jackson.databind.JsonNode m, int ia, int ib) {
     try {
@@ -659,7 +662,7 @@ public final class QuiverJvmRead {
       java.util.List<Field> fa = a.getFields(), fb = b.getFields();
       if (fa.size() != fb.size()) return false;
       for (int i = 0; i < fa.size(); i++) {
-        if (!sameArrowField(fa.get(i), fb.get(i))) return false;
+        if (!sameArrowField(fa.get(i), fb.get(i), false)) return false;
       }
       return true;
     } catch (Exception e) {
@@ -667,14 +670,14 @@ public final class QuiverJvmRead {
     }
   }
 
-  static boolean sameArrowField(Field a, Field b) {
+  static boolean sameArrowField(Field a, Field b, boolean nullability) {
     if (!a.getName().equals(b.getName())) return false;
-    if (a.isNullable() != b.isNullable()) return false;
+    if (nullability && a.isNullable() != b.isNullable()) return false;
     if (!a.getType().equals(b.getType())) return false;
     java.util.List<Field> ca = a.getChildren(), cb = b.getChildren();
     if (ca.size() != cb.size()) return false;
     for (int i = 0; i < ca.size(); i++) {
-      if (!sameArrowField(ca.get(i), cb.get(i))) return false;
+      if (!sameArrowField(ca.get(i), cb.get(i), true)) return false;
     }
     return true;
   }
@@ -692,8 +695,9 @@ public final class QuiverJvmRead {
       return parseB64Schema(m.get("table_schema").asText());
     } catch (Exception e) {
       throw new UnsupportedOperationException(
-          "quiverjvm: undecodable declared table schema: "
-              + "read with the Python 'quiver' DataSource", e);
+          "quiverjvm: undecodable declared table schema (a corrupt "
+              + "manifest): roll back to a retained generation "
+              + "(maintenance.rollback_generation)", e);
     }
   }
 
@@ -712,8 +716,8 @@ public final class QuiverJvmRead {
 
   /** The table's full Spark schema for a path: declared (ALTER) schema
    * when present, else the manifest's interned file schema, else the
-   * first footer — plus appended Hive partition columns. The single
-   * entry point both inferSchema and the unified Python router use. */
+   * first footer — plus appended Hive partition columns. A data column
+   * is nullable when any file's schema (interned or footer) says so. */
   public static StructType inferTableSchema(String path) throws IOException {
     return inferTableSchema(path, null, false);
   }
@@ -736,12 +740,19 @@ public final class QuiverJvmRead {
       }
       arrow = unionSchema(man, root, files);
     }
+    // files that differ only in nullability are one table: its column is
+    // nullable when any file's says so (a NULL-bearing append to a table
+    // first written from spark.range must not read as non-nullable)
+    java.util.Set<String> nullable = new java.util.HashSet<>();
+    for (Schema s : decodeManifestSchemas(man)) {
+      if (s != null) addNullable(s.getFields(), nullable);
+    }
     // without a declared or merged schema every file must carry exactly
     // the table's columns
     boolean exact = arrow == null;
     if (arrow == null) arrow = manifestSchema(man);
     if (arrow != null) {
-      if (exact) guardFileSchemas(man, root, files, toSparkSchema(arrow));
+      if (exact) guardFileSchemas(man, root, files, toSparkSchema(arrow), nullable);
     } else {
       if (files.isEmpty()) {
         throw new IllegalArgumentException("quiverjvm: no .quiver files under " + root);
@@ -749,9 +760,14 @@ public final class QuiverJvmRead {
       arrow = readFooter(files.get(0)).arrowSchema;
       // no interned schema vouches for any file: the others are checked
       // against the first one's footer
-      guardFileSchemas(null, root, files.subList(1, files.size()), toSparkSchema(arrow));
+      guardFileSchemas(null, root, files.subList(1, files.size()),
+          toSparkSchema(arrow), nullable);
     }
-    StructType st = toSparkSchema(arrow);
+    StructType st = new StructType();
+    for (Field f : arrow.getFields()) {
+      st = st.add(f.getName(), sparkType(f),
+          f.isNullable() || nullable.contains(f.getName()));
+    }
     PartInfo parts = discoverPartitions(root, files);
     for (int i = 0; i < parts.cols.length; i++) {
       boolean dup = false;
@@ -763,23 +779,26 @@ public final class QuiverJvmRead {
     return st;
   }
 
+  static void addNullable(List<Field> fields, java.util.Set<String> nullable) {
+    for (Field f : fields) {
+      if (f.isNullable()) nullable.add(f.getName());
+    }
+  }
+
   /** Plan-time half of the file-against-table schema check of a table
    * without a declared (ALTER) schema, whose reader expects every file to
    * carry exactly the table's columns. Each file the manifest does not
    * vouch for (no entry, or a stale size: an out-of-band writer's) has its
-   * footer compared with the table schema; {@code man} is null when no
-   * interned schema vouches for any file and the table schema is the
-   * first file's. A mismatching file makes the table a guard refusal, so
-   * the router reads it with the Python DataSource instead of failing a
-   * scan task. Without a manifest schema the first file's schema is only
-   * a guess, so only a file that the Python DataSource reads without loss
-   * (columns missing or reordered, none added or retyped) is refused; any
-   * other is left to fail the read in openChunk, since the Python
-   * DataSource would drop its extra column (and a compaction or rewrite
-   * that column's values) or fail too. Costs one footer read per
-   * unvouched file, none for a manifest-served table. */
+   * footer compared with the table schema, and its nullable columns join
+   * {@code nullable}; {@code man} is null when no interned schema vouches
+   * for any file and the table schema is the first file's. A mismatching
+   * file refuses the table at plan time rather than failing a scan task:
+   * reading files with different columns is what merge_schemas is for.
+   * Costs one footer read per unvouched file, none for a manifest-served
+   * table. */
   static void guardFileSchemas(com.fasterxml.jackson.databind.JsonNode man,
-      String root, List<File> files, StructType table) throws IOException {
+      String root, List<File> files, StructType table,
+      java.util.Set<String> nullable) throws IOException {
     com.fasterxml.jackson.databind.JsonNode entries = man == null ? null : man.get("files");
     java.nio.file.Path rootP = new File(root).toPath();
     for (File f : files) {
@@ -789,11 +808,20 @@ public final class QuiverJvmRead {
       PLAN_FOOTER_READS.incrementAndGet();
       List<Field> got = readFooter(f).arrowSchema.getFields();
       String why = fileSchemaMismatch(got, table);
-      if (why != null && (man != null || columnsWithin(got, table))) {
+      if (why != null) {
+        // merge_schemas unions column sets by name; it cannot reconcile
+        // a column stored under two types
+        boolean sameNames = got.size() == table.fields().length;
+        for (int i = 0; sameNames && i < got.size(); i++) {
+          sameNames = got.get(i).getName().equals(table.fields()[i].name());
+        }
         throw new UnsupportedOperationException(
             "quiverjvm: " + why + " in unvouched file " + rel
-                + " (heterogeneous table): read with the Python 'quiver' DataSource");
+                + " (heterogeneous table): " + (sameNames
+                    ? "rewrite the file with the table's types"
+                    : "read with merge_schemas=\"true\""));
       }
+      addNullable(got, nullable);
     }
   }
 
@@ -833,18 +861,6 @@ public final class QuiverJvmRead {
     }
   }
 
-  /** Is each of a file's columns a table column of the same name and
-   * Spark type? */
-  static boolean columnsWithin(List<Field> file, StructType table) {
-    java.util.Map<String, DataType> types = new java.util.HashMap<>();
-    for (StructField f : table.fields()) types.put(f.name(), f.dataType());
-    for (Field f : file) {
-      DataType t = sparkTypeOrNull(f);
-      if (t == null || !t.equals(types.get(f.getName()))) return false;
-    }
-    return true;
-  }
-
   /** Manifest's interned schema table decoded (index-aligned; null slots
    * for undecodable entries). */
   static List<Schema> decodeManifestSchemas(com.fasterxml.jackson.databind.JsonNode m) {
@@ -880,12 +896,10 @@ public final class QuiverJvmRead {
   /** Union-by-name schema over every file's own schema (merge-schemas
    * mode; Python-DS parity, quiver_datasource.py:570-593: first file's
    * fields in order, then unseen fields in file order, everything
-   * nullable). A same-name SPARK-type conflict refuses with the guard
-   * exception → the router falls back to the Python DS, which raises its
-   * detailed ValueError. (The Python DS additionally distinguishes arrow
-   * types that map to ONE Spark type — utf8 vs large_utf8 — but this
-   * reader resolves decode width per file from its own footer, so such
-   * pairs union safely here.) */
+   * nullable). A same-name SPARK-type conflict refuses at plan time.
+   * (Arrow types that map to ONE Spark type — utf8 vs large_utf8 — union
+   * safely: this reader resolves decode width per file from its own
+   * footer.) */
   static Schema unionSchema(com.fasterxml.jackson.databind.JsonNode man,
       String root, List<File> files) throws IOException {
     List<Schema> manSchemas = decodeManifestSchemas(man);
@@ -911,7 +925,7 @@ public final class QuiverJvmRead {
           throw new UnsupportedOperationException(
               "quiverjvm: merge_schemas type conflict for '" + fld.getName()
                   + "': " + prev.getType() + " vs " + fld.getType() + " in "
-                  + f + " — read with the Python 'quiver' DataSource");
+                  + f + " — rewrite one side with a cast to a common type");
         }
       }
     }
@@ -1204,7 +1218,7 @@ public final class QuiverJvmRead {
     if (t instanceof ArrowType.Date) {
       if (((ArrowType.Date) t).getUnit() != org.apache.arrow.vector.types.DateUnit.DAY) {
         // date64 stores 8-byte millis — the 4-byte day decode would
-        // misread; refuse to the Python DS (which normalizes via pyarrow)
+        // misread; refuse it
         throw new UnsupportedOperationException("date unit "
             + ((ArrowType.Date) t).getUnit());
       }
@@ -1247,7 +1261,8 @@ public final class QuiverJvmRead {
     }
     throw new UnsupportedOperationException(
         "quiverjvm: column '" + f.getName() + "' type " + t
-            + " (extended types): use the Python 'quiver' DataSource");
+            + " (extended types): rewrite it cast to a type the reader "
+            + "decodes");
   }
 
   /** Raw timestamp ticks at the file's unit → Spark's microseconds.
@@ -2970,7 +2985,7 @@ public final class QuiverJvmRead {
           throw new IOException(
               "quiverjvm: column '" + declared + "' is " + fileType + " in " + c.file
                   + " but the table declares " + req[i].dataType()
-                  + " (use the Python 'quiver' DataSource)");
+                  + " (rewrite the file with the table's type)");
         }
         srcIdx[i] = fi;
         // page layout follows the FILE's nullability, not the declared
@@ -3091,9 +3106,9 @@ public final class QuiverJvmRead {
 
     /** Can typedConstant materialize a default for this declared type?
      * Checked at PLAN time by guardManifestNode so ineligible tables are
-     * refused at the probe (silent Python-DS reroute) instead of failing
-     * executor-side reader init (ADVICE r12). Must stay in lockstep with
-     * typedConstant's switch. */
+     * refused before any job instead of failing executor-side reader init
+     * (ADVICE r12). Must stay in lockstep with typedConstant's switch and
+     * with maintenance.add_column's default check. */
     static boolean defaultFillable(DataType t) {
       return t == DataTypes.ByteType || t == DataTypes.ShortType
           || t == DataTypes.IntegerType || t == DataTypes.LongType
@@ -3137,7 +3152,7 @@ public final class QuiverJvmRead {
       if (t == DataTypes.StringType) return raw.toString();
       throw new UnsupportedOperationException(
           "quiverjvm: column default unsupported for type " + t
-              + ": read with the Python 'quiver' DataSource");
+              + ": declare the column without a default");
     }
 
     private static void fillConstant(OnHeapColumnVector vec, int rows, DataType t, Object v) {

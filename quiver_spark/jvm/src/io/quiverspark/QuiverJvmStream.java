@@ -169,8 +169,8 @@ final class QuiverJvmStream
     if ("true".equalsIgnoreCase(opts.getOrDefault("merge_schemas", "false"))) {
       throw new UnsupportedOperationException(
           "quiverjvm stream: merge_schemas tables are batch-only on the "
-              + "JVM engine — stream through the Python 'quiver' source or "
-              + "declare a table schema (ALTER)");
+              + "JVM engine — read it in batch or declare a table schema "
+              + "(ALTER)");
     }
     // changes_since on a stream IS start_commit: seed the initial offset
     // at the cursor, deliver the delta, keep tailing (the batch option's

@@ -610,25 +610,28 @@ def add_column(
     exist physically in live files (previously dropped or renamed-away —
     re-declaring them would resurrect old bytes); compact the table to
     free such names."""
+    import pyarrow as pa
+
     from quiver_spark.sources.manifest import _schema_b64, encode_default
 
     new_type = _pa_type_from_ddl(ddl_type)
-    if default is not None:
-        import pyarrow as pa
-
-        if pa.types.is_nested(new_type):
-            # a nested default would round-trip through str() in the
-            # manifest JSON and decode as garbage — refuse at the ALTER,
-            # never at the later scan
-            raise ValueError(
-                "nested column types take no initial default — add the "
-                "column null-filled and backfill with a write"
-            )
+    if default is not None and not (
+        pa.types.is_integer(new_type) or pa.types.is_float32(new_type)
+        or pa.types.is_float64(new_type) or pa.types.is_boolean(new_type)
+        or pa.types.is_date32(new_type) or pa.types.is_timestamp(new_type)
+        or pa.types.is_decimal128(new_type) or pa.types.is_string(new_type)
+    ):
+        # the types the quiverjvm reader constant-fills
+        # (QuiverColumnarReader.defaultFillable); any other default (a
+        # binary one would round-trip through str() in the manifest JSON)
+        # is refused at the ALTER, never at the later scan
+        raise ValueError(
+            f"column type {ddl_type!r} takes no initial default — add the "
+            "column null-filled and backfill with a write"
+        )
     enc = encode_default(default, new_type) if default is not None else None
 
     def mutate(man, root, rel_schemas, raw):
-        import pyarrow as pa
-
         _partition_guard(root, name)
         declared = _declared_schema(man, rel_schemas)
         if name in declared.names:
@@ -1426,9 +1429,7 @@ def _touched_files(spark, table: str, predicate: str) -> list[str]:
     ``predicate`` — one scan with the file column: pages and Hive
     partitions are pruned on the pushed predicate, Catalyst prunes the
     JVM reader's decode to the predicate's columns, and the collected
-    result is at most one row per file (never row data). A table only
-    the Python DS can read gives the same answer, decoding every column
-    of the unpruned pages."""
+    result is at most one row per file (never row data)."""
     from pyspark.sql import functions as F
 
     from quiver_spark.sources import scan

@@ -123,12 +123,12 @@ def quiver_relation(
 ) -> DataFrame:
     """Cached pruning-off quiver relation for a directory + static options.
 
-    ``engine="auto"`` is ``sources.scan``: the quiverjvm columnar reader
-    when its guards accept the table, else the Python DataSource.
-    ``engine="python"``, which the bench's engine-labelled proxies use,
-    always reads through the Python DataSource: it passes the session's
-    ``defaultParallelism`` as ``planning_parallelism``, an option only the
-    Python DS implements, so ``sources.scan`` takes its fallback.
+    ``engine="auto"`` is ``sources.scan``, the quiverjvm columnar
+    reader. ``engine="python"``, which the bench's engine-labelled
+    proxies use, loads the Python "quiver" DataSource directly, with the
+    session's ``defaultParallelism`` as its ``planning_parallelism`` (its
+    split planner runs in a separate process that sees only the planner
+    host's cores).
 
     ``page_prune`` / ``partition_prune`` are refused: a cached pruning
     relation on the Python DS would replay a stale plan (the SHARP EDGE in
@@ -148,13 +148,16 @@ def quiver_relation(
     df = _DF_CACHE.get(key)
     if df is None:
         if engine == "python":
-            options = {
-                "planning_parallelism": str(
-                    spark.sparkContext.defaultParallelism
-                ),
-                **options,
-            }
-        df = scan(spark, d, **options)
+            register_format(spark)
+            df = (
+                spark.read.format("quiver")
+                .option("planning_parallelism",
+                        str(spark.sparkContext.defaultParallelism))
+                .options(**options)
+                .load(d)
+            )
+        else:
+            df = scan(spark, d, **options)
         _DF_CACHE[key] = df
     return df
 
@@ -176,9 +179,8 @@ def quiver_table(
     scale-out pattern for zone-map pruning: sort on the hot predicate column
     at ingest, and selective scans touch only matching pages. Such a table
     is read through a fresh ``sources.scan(..., page_prune="true")`` per
-    call (the JVM reader prunes on every pushed filter anyway; the Python
-    DS fallback must not reuse a pruned plan), so ``engine`` applies only to
-    the cached unsorted relation.
+    call (the JVM reader prunes on every pushed filter), so ``engine``
+    applies only to the cached unsorted relation.
 
     ``columns`` is the projection: pass the statically-known column list so
     the scan opens + decodes ONLY those leaves (the reference's per-column

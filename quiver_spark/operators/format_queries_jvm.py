@@ -163,17 +163,13 @@ SELECT
     tags=("format", "jvm", "scan", "routing"),
 )
 def quiver_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE scan API, two engines (VERDICT r10 item 4): sources.scan routes
-    the flat orders table AND — since the round-12 nested lift — the
-    nested embeddings table (array<float>) to the quiverjvm columnar
-    reader. Since round 14 (VERDICT r13 Next #2) ``columns=`` rides the
-    JVM too (translated to a Catalyst select, so pruning reaches the DSv2
-    scan), and so does ``file_column=`` (the `_quiver_file` metadata
-    column); only options the Python DS alone implements — here
-    ``planning_parallelism`` — still land there. The query
-    verifies the routing really happened (a silent mis-route would pass
-    the oracle while testing nothing) and aggregates across both
-    engines' outputs."""
+    """ONE scan API, one engine: sources.scan serves the flat orders
+    table, the nested embeddings table (array<float>), the translated
+    options ``columns=`` / ``file_column=`` (a Catalyst select and the
+    `_quiver_file` metadata column) and a semantic option
+    (``verify_checksums``) from the quiverjvm columnar reader. The query
+    verifies each plan really reads quiverjvm (a silent mis-route would
+    pass the oracle while testing nothing)."""
     from quiver_spark.operators.format_queries import quiver_dir
     from quiver_spark.sources import scan
 
@@ -188,35 +184,23 @@ def quiver_unified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     opt = scan(
         spark,
         quiver_dir(spark, sf_dir, "orders"),
-        planning_parallelism="8",
+        verify_checksums="true",
     )
-    plan_o = orders._jdf.queryExecution().analyzed().toString()
-    plan_e = emb._jdf.queryExecution().analyzed().toString()
-    plan_c = cols._jdf.queryExecution().analyzed().toString()
-    plan_p = opt._jdf.queryExecution().analyzed().toString()
-    if "quiverjvm" not in plan_o:
-        raise RuntimeError("unified scan: flat orders table must route to the JVM reader")
-    if "quiverjvm" not in plan_e:
-        raise RuntimeError(
-            "unified scan: nested embeddings table must route to the JVM reader "
-            "(round-12 nested lift)"
-        )
-    if "quiverjvm" not in plan_c:
-        raise RuntimeError(
-            "unified scan: columns=/file_column= must translate onto the "
-            "JVM reader (round-14 routing)"
-        )
-    if "quiverjvm" in plan_p:
-        raise RuntimeError(
-            "unified scan: a Python-DS-only reader option must route to "
-            "the Python DS"
-        )
+    for what, df in (
+        ("flat orders table", orders),
+        ("nested embeddings table", emb),
+        ("columns=/file_column= scan", cols),
+        ("verify_checksums scan", opt),
+    ):
+        if "quiverjvm" not in df._jdf.queryExecution().analyzed().toString():
+            raise RuntimeError(
+                f"unified scan: the {what} must read through quiverjvm"
+            )
     a = orders.agg(
         F.count(F.lit(1)).alias("orders_cnt"), F.min("o_orderkey").alias("min_key")
     )
     b = emb.agg(F.count(F.lit(1)).alias("emb_cnt"))
     c = cols.agg(F.count(F.lit(1)).alias("opt_cnt"))
-    _ = opt  # routed probe only — the Python DS path is counted above
     return a.crossJoin(b).crossJoin(c)
 
 
@@ -659,9 +643,8 @@ def quiverjvm_default_fill_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     that PREDATE the ALTER fill the default, not null), then a post-ALTER
     append lands rows physically carrying different values. The reader
     constant-fills per chunk from the manifest's column_defaults (typed
-    string and decimal constants), and sources.scan must ROUTE the table
-    to the JVM engine — the routing is asserted, so a guard regression
-    that silently bounced it back to the Python DS would fail loudly."""
+    string and decimal constants), and sources.scan must read the table
+    on the JVM engine — the engine is asserted."""
     from quiver_spark.operators.format_queries2 import _marker_dir
     from quiver_spark.sources import scan
 

@@ -11,127 +11,91 @@ from quiver_spark.sources.quiver_datasource import (  # noqa: F401
     ship_package,
 )
 
-#: semantic reader options the JVM engine serves natively (round 13 —
-#: VERDICT r12 Next #1/#3): all driver-side-resolvable, so they no longer
-#: pin a scan to the Python DS's many-small-files floor. The JVM reader
-#: checks page CRCs by default like the Python DS, and
-#: ``verify_checksums="false"`` skips them on both. Any other option
-#: outside JVM_TRANSLATED_OPTS (``planning_parallelism``) stays Python-DS.
+#: semantic reader options the quiverjvm reader serves: time travel
+#: (``version``), the CDC cursor (``changes_since``), rewrite subsets
+#: (``files``), union-by-name (``merge_schemas``) and page CRC checks
+#: (``verify_checksums``, on unless ``"false"``). They are forwarded to
+#: the reader verbatim.
 JVM_SEMANTIC_OPTS = frozenset(
     {"version", "changes_since", "files", "merge_schemas", "verify_checksums"}
 )
 
-#: reader options the JVM path serves as plain Catalyst operators instead
-#: (round 14 — VERDICT r13 Next #2): ``columns=`` becomes a post-scan
-#: ``.select`` (Catalyst pushes the pruning into the DSv2 scan natively),
-#: ``limit=`` becomes ``.limit()`` (the JVM reader implements
-#: SupportsPushDownLimit, QuiverJvmRead.java), and ``file_column=``
-#: becomes a select of the JVM reader's ``_quiver_file`` METADATA column
-#: (SupportsMetadataColumns — the same root-relative path the Python DS
-#: emits). Both engines plan splits in manifest file order and a
-#: single-reducer GlobalLimit drains map outputs in partition order, so
-#: the prefix a LIMIT takes is the same file-order prefix — routing stays
-#: result-stable. ``limit=N`` means exactly-min(N, rows) on both engines:
-#: the Python DS has no limit option, so its fallback gets the same outer
-#: ``.limit``. ``page_prune=`` and ``partition_prune=`` translate to
-#: nothing: the JVM reader always prunes pages and Hive partitions on the
-#: pushed filters, and the Python fallback gets them as they are (its
-#: plan-cache caveat is the caller's, as with the raw options).
+#: reader options ``scan`` serves as plain Catalyst operators on the
+#: quiverjvm relation (``_apply_translated``): ``columns=`` becomes a
+#: ``.select`` (Catalyst pushes the pruning into the DSv2 scan),
+#: ``limit=`` a ``.limit()`` (the reader implements
+#: SupportsPushDownLimit, so it takes the file-order prefix), and
+#: ``file_column=`` a select of the reader's ``_quiver_file`` metadata
+#: column (SupportsMetadataColumns: each row's root-relative data file).
+#: ``page_prune=`` and ``partition_prune=`` translate to nothing: the
+#: reader always prunes pages and Hive partitions on the pushed filters.
 JVM_TRANSLATED_OPTS = frozenset(
     {"columns", "limit", "file_column", "page_prune", "partition_prune"}
 )
 
+#: the quiverjvm reader's file metadata column; a data column of that
+#: name would hide it, so ``write`` refuses the name
+META_FILE_COL = "_quiver_file"
+
 
 def scan(spark, path: str, **options):
-    """Unified quiver scan — ONE entry point that routes to the fastest
-    engine able to serve the table correctly:
+    """Unified quiver scan: the quiverjvm reader (the Java DataSourceV2
+    columnar reader) serves every read of a quiver table or refuses it.
 
-    - **quiverjvm** (the Java DataSourceV2 columnar reader): flat AND
-      nested schemas, plain/generation/Hive layouts, ALTER-DDL tables,
-      plus (round 13) the semantic reader options ``version`` (time
-      travel), ``changes_since`` (CDC cursor), ``files`` (rewrite
-      subsets), ``merge_schemas`` and ``verify_checksums`` (page CRCs
-      checked unless ``"false"``) — manifest-served planning,
-      zone-map + bloom page pruning, Catalyst column pruning, no
-      JVM→Python boundary (sf0.1: 0.19-0.50x of the parquet control vs
-      the Python DS's ~1.4-2x planner-floor proxies) — and (round 14)
-      the translated options ``columns=`` / ``limit=`` /
-      ``file_column=``, which become Catalyst ``select`` / ``limit`` /
-      a select of the ``_quiver_file`` metadata column, and the pruning
-      switches ``page_prune=`` / ``partition_prune=``, which it ignores
-      (it always prunes on the pushed filters).
-    - **python "quiver" DS** fallback: everything semantic the JVM reader
-      refuses — exotic leaf shapes (half floats, decimal256), unfillable
-      defaults — plus any reader option outside
-      JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS (``planning_parallelism``),
-      which only the Python DS implements, and
-      tables whose DATA carries a ``_quiver_file`` column when file
-      identity is requested. Its split planner runs in a separate Python
-      process that only sees the planner host's cpu count, so the
-      fallback passes the session's ``defaultParallelism`` (on a cluster:
-      total executor cores) as ``planning_parallelism`` unless the caller
-      sets it. ``quiver_relation(engine="python")`` relies on this: it
-      forces the fallback by passing ``planning_parallelism``, so that
-      option must stay outside the JVM option sets.
+    It serves flat and nested schemas, plain, generation and Hive
+    layouts, ALTER-DDL tables, column defaults, JVM_SEMANTIC_OPTS and
+    JVM_TRANSLATED_OPTS, with manifest-served planning, zone-map and
+    bloom page pruning, Catalyst column pruning and no JVM→Python
+    boundary.
 
-    Eligibility is probed against the REAL JVM guards (one driver-side
-    manifest read via QuiverJvmRead.inferTableSchema) — not a Python-side
-    re-implementation that could drift — and a failed probe or un-attachable
-    jar degrades silently to the Python DS: routing never changes results,
-    only the engine that produces them.
-    """
+    Refusals come before any job: an option outside JVM_SEMANTIC_OPTS |
+    JVM_TRANSLATED_OPTS raises ValueError naming it, and a jar that does
+    not attach raises RuntimeError naming ``jvm/build.sh``. The reader's
+    own refusals and faults raise at plan time, each naming its remedy:
+    files whose schemas differ (read with ``merge_schemas="true"``), a
+    leaf type it does not decode (half float, decimal256, date64), a
+    column default it cannot fill, a corrupt manifest."""
+    unknown = sorted(set(options) - JVM_SEMANTIC_OPTS - JVM_TRANSLATED_OPTS)
+    if unknown:
+        raise ValueError(
+            f"quiver scan does not take the option(s) {unknown}; it takes "
+            f"{sorted(JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS)}"
+        )
     register(spark)
-    if set(options) <= JVM_SEMANTIC_OPTS | JVM_TRANSLATED_OPTS:
-        sem = {k: v for k, v in options.items() if k in JVM_SEMANTIC_OPTS}
-        df = try_jvm_scan(spark, path, **sem)
-        if df is not None:
-            out = _apply_translated(df, options)
-            if out is not None:
-                return out
-    reader = spark.read.format("quiver").option(
-        "planning_parallelism", str(spark.sparkContext.defaultParallelism)
-    )
-    for k, v in options.items():
-        if k != "limit":
-            reader = reader.option(k, v)
-    df = reader.load(path)
-    if "limit" in options:
-        df = df.limit(int(options["limit"]))
-    return df
+    sem = {k: v for k, v in options.items() if k in JVM_SEMANTIC_OPTS}
+    return _apply_translated(try_jvm_scan(spark, path, **sem), options)
 
 
 def _apply_translated(df, options):
     """Re-express JVM_TRANSLATED_OPTS as Catalyst operators on a JVM
     relation (columns → select, file_column → the `_quiver_file`
-    metadata column aliased, limit → limit), or None when the JVM path
-    cannot serve them (a DATA column named `_quiver_file` shadows the
-    metadata column — Spark's SupportsMetadataColumns rule — so only
-    the Python DS can emit file identity for that table)."""
+    metadata column aliased, limit → limit). A DATA column named
+    `_quiver_file` hides the metadata column (Spark's
+    SupportsMetadataColumns rule), so ``file_column`` on such a table
+    raises ValueError naming ``maintenance.rename_column``."""
     from pyspark.sql import functions as F
 
-    # empty-string file_column is ABSENT on the Python DS (`if fcol:`) —
-    # normalize so the engines can't diverge on schema (ADVICE-class
-    # parity edge, caught in the round-15 self-review)
+    # an empty file_column is absent
     fcol = options.get("file_column") or None
     if fcol is not None:
-        if "_quiver_file" in df.columns:
-            return None  # shadowed metadata column → Python DS
+        if META_FILE_COL in df.columns:
+            raise ValueError(
+                f"the table holds a data column {META_FILE_COL!r}, which "
+                "hides the quiverjvm reader's file metadata column; rename "
+                "it with quiver_spark.maintenance.rename_column before "
+                "reading with file_column"
+            )
         if fcol in df.columns:
-            # the Python DS's documented contract, same error class
             raise ValueError(
                 f"file_column {fcol!r} collides with a table column"
             )
     cols = options.get("columns")
     if cols:
-        # Python-DS parity: columns= selects EXACTLY the named columns in
-        # the given order, and the file column survives only when its
-        # name is listed (the DS appends it to the schema BEFORE the
-        # columns filter runs). Names are validated against the same
-        # visible schema the Python DS exposes — in particular the
-        # literal '_quiver_file' without file_column= must raise here,
-        # not silently resolve the JVM metadata column (ADVICE r14) —
-        # with the Python DS's exact error class and message shape
-        # (pa_schema_select in quiver_datasource.py).
+        # columns= selects EXACTLY the named columns in the given order;
+        # the file column survives only when its name is listed. A name
+        # outside the visible schema (the literal '_quiver_file' without
+        # file_column= included) raises here, at plan time, rather than
+        # resolving the metadata column or failing at the action.
         names = [c.strip() for c in cols.split(",")]
         visible = list(df.columns) + ([fcol] if fcol is not None else [])
         missing = [n for n in names if n not in visible]
@@ -142,7 +106,7 @@ def _apply_translated(df, options):
             )
         df = df.select(
             *[
-                F.col("_quiver_file").alias(fcol)
+                F.col(META_FILE_COL).alias(fcol)
                 if fcol is not None and name == fcol
                 else F.col(name)
                 for name in names
@@ -154,84 +118,33 @@ def _apply_translated(df, options):
         # a derived projection)
         df = df.select(
             *[F.col(c) for c in df.columns],
-            F.col("_quiver_file").alias(fcol),
+            F.col(META_FILE_COL).alias(fcol),
         )
     if "limit" in options:
         df = df.limit(int(options["limit"]))
     return df
 
 
-def _is_guard_refusal(exc) -> bool:
-    """Was this probe failure the JVM reader's designed guard refusal
-    (UnsupportedOperationException) rather than a genuine fault?
-
-    A Py4JJavaError carries the live Java throwable — classify by the
-    TOP-LEVEL exception class, not by substring-matching the rendered
-    trace (an IOException whose CAUSE chain mentions a UOE must count as
-    a fault, not a refusal — ADVICE r12). pyspark's converted exceptions
-    lose the throwable; for those the class name survives as the Python
-    type name or the message prefix, so the string checks stay as the
-    fallback only."""
-    je = getattr(exc, "java_exception", None)
-    if je is not None:
-        try:
-            return (
-                je.getClass().getName()
-                == "java.lang.UnsupportedOperationException"
-            )
-        except Exception:  # noqa: BLE001 — dead gateway: fall through
-            pass
-    return type(exc).__name__ == "UnsupportedOperationException" or str(
-        exc
-    ).lstrip().startswith(
-        ("java.lang.UnsupportedOperationException", "UnsupportedOperationException")
-    )
-
-
 def try_jvm_scan(spark, path: str, **options):
-    """The quiverjvm columnar relation when the REAL JVM guards accept the
-    table + options, else None. Guard refusals (UnsupportedOperationException:
-    exotic leaf shapes, non-scalar or unfillable defaults, merge-schema type conflicts)
-    are the designed silent reroute; anything ELSE (corrupt manifest or
-    footer, missing files, a version that is not retained, jar ABI fault)
-    is a genuine fault that must not be hidden by the fallback — it warns
-    before returning None, and the Python DS raises loudly if IT can't
-    read the table either.
+    """The quiverjvm relation of the table at ``path``: it returns a
+    DataFrame or raises, never None. A jar that does not attach raises
+    RuntimeError naming ``jvm/build.sh``; the reader's guard refusals
+    and faults (corrupt manifest, non-scalar default, type conflict)
+    raise from ``load()``, at plan time.
 
     ``options`` must be a subset of JVM_SEMANTIC_OPTS (the caller's
-    contract); they are forwarded verbatim to the quiverjvm reader."""
+    contract); they are forwarded to the reader as strings."""
     from quiver_spark.jvm import attach_jar
 
     if not attach_jar(spark):
-        return None
-    try:
-        version = options.get("version")
-        spark._jvm.io.quiverspark.QuiverJvmRead.inferTableSchema(
-            path,
-            # str()-normalized: py4j matches the (String, String, boolean)
-            # signature by type, so an int version (a natural caller
-            # spelling — the .option path below str()s it too) would raise
-            # Py4JError, misclassify as a genuine fault, and silently cost
-            # the scan its JVM fast path
-            None if version is None else str(version),
-            str(options.get("merge_schemas", "false")).lower() == "true",
+        raise RuntimeError(
+            "the quiverjvm reader jar does not attach to this session; "
+            "build it with quiver_spark/jvm/build.sh"
         )
-        reader = spark.read.format("quiverjvm")
-        for k, v in options.items():
-            reader = reader.option(k, str(v))
-        return reader.load(path)
-    except Exception as exc:  # noqa: BLE001 — adjudicated in the docstring
-        if not _is_guard_refusal(exc):
-            import warnings
-
-            warnings.warn(
-                "quiver scan: JVM probe failed with a non-guard "
-                f"error on {path!r}; falling back to the Python "
-                f"datasource: {exc}",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-        return None
+    reader = spark.read.format("quiverjvm")
+    for k, v in options.items():
+        reader = reader.option(k, str(v))
+    return reader.load(path)
 
 
 #: sink options the JVM writer serves natively
@@ -351,12 +264,13 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
     Options: JVM_WRITE_OPTS go to the writer (``codec`` defaults to
     lz4); SNAPSHOT_OPTS go to the commit; ``require_not_null`` (comma
     list of columns) is checked in the plan with the destination's CHECK
-    constraints (``_checked``). Four things raise ValueError or
+    constraints (``_checked``). Five things raise ValueError or
     RuntimeError before any job runs and before a stage exists: any
     other option, a ``max_page_size`` or ``max_rows_per_file`` that is
-    not a positive integer, a column the writer cannot encode (``jvm.
-    supports_schema``; e.g. a NULL-typed column — cast it), and a jar
-    that does not attach to the session.
+    not a positive integer, a column named ``_quiver_file`` (the
+    reader's file metadata column), a column the writer cannot encode
+    (``jvm.supports_schema``; e.g. a NULL-typed column — cast it), and
+    a jar that does not attach to the session.
 
     The job appends the rows into a hidden ``_temporary/jvm-<uuid>/``
     directory, and this process publishes the files through
@@ -399,6 +313,13 @@ def write(df, path: str, mode: str = "overwrite", partition_by=None,
         raise ValueError(
             f"require_not_null column {missing[0]!r} is not in the "
             f"written schema {df.columns}"
+        )
+    if META_FILE_COL in df.columns:
+        raise ValueError(
+            f"a quiver table cannot hold a column named {META_FILE_COL!r}: "
+            "it would hide the quiverjvm reader's file metadata column; "
+            "rename it (an existing table: quiver_spark.maintenance."
+            "rename_column)"
         )
     refused = [
         f"{f.name} {f.dataType.simpleString()}"

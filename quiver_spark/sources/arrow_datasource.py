@@ -354,16 +354,25 @@ class ArrowIpcWriter(DataSourceArrowWriter):
     the hidden ``_temporary/`` root, and the driver publishes them
     through ``snapshot.commit`` (overwrite as a generation swap,
     ``keep_generations`` retention, ``pointer_store``). Options:
-    ``max_rows_per_file`` (a task rolls to a new file at exactly that
-    many rows) and ``require_not_null`` (comma list of columns). A table
-    with CHECK constraints is refused, as is ``partition_by``."""
+    ``max_rows_per_file`` (a positive integer: a task rolls to a new
+    file at exactly that many rows) and ``require_not_null`` (comma list
+    of columns). A table with CHECK constraints is refused, as is
+    ``partition_by``."""
 
     def __init__(self, options, spark_schema=None, overwrite: bool = False):
         self.options = options
         self.spark_schema = spark_schema
         self.overwrite = overwrite
         self.path = _opt_path(options)
-        self.max_rows = max(1, int(options.get("max_rows_per_file", 1 << 22)))
+        # a cap below 1 would flush a file per row: refused, as
+        # quiver_spark.sources.write refuses it
+        max_rows = str(options.get("max_rows_per_file", 1 << 22))
+        if not (max_rows.isdecimal() and int(max_rows) > 0):
+            raise ValueError(
+                "arrowipc write option max_rows_per_file must be a positive "
+                f"integer, got {options['max_rows_per_file']!r}"
+            )
+        self.max_rows = int(max_rows)
         rnn = options.get("require_not_null", "")
         self.require_not_null = tuple(
             c.strip() for c in rnn.split(",") if c.strip()
@@ -570,10 +579,10 @@ class ArrowIpcDataSource(DataSource):
         path = _opt_path(self.options)
         if not path:
             raise ValueError("arrowipc datasource requires a path")
+        # the writer refuses its options before the table directory exists
+        w = ArrowIpcWriter(self.options, spark_schema=schema, overwrite=overwrite)
         os.makedirs(path, exist_ok=True)
-        return ArrowIpcWriter(
-            self.options, spark_schema=schema, overwrite=overwrite
-        )
+        return w
 
     def streamWriter(self, schema: StructType, overwrite: bool):  # noqa: N802
         path = _opt_path(self.options)

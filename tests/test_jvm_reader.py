@@ -667,12 +667,10 @@ def test_jvm_append_merges_manifest(spark, tmp_path):
 
 
 def test_unified_scan_routes_by_eligibility(spark, tmp_path):
-    """sources.scan — ONE entry point, engine picked by the REAL JVM
-    guards: flat tables (including Hive/ALTER ones after the round-11
-    lifts) ride the quiverjvm columnar reader; reader options only the
-    Python DS implements (explicit split knobs, …) fall back to it,
-    while columns=/limit=/file_column= translate onto the JVM relation
-    since round 14. Both answers identical either way."""
+    """sources.scan — ONE entry point, one engine: flat tables, column
+    defaults and nested schemas ride the quiverjvm columnar reader, and
+    columns= translates onto the JVM relation. An option the reader does
+    not take (the Python DS's split knob) raises before any job."""
     _require_jar(spark)
     from quiver_spark import maintenance
     from quiver_spark.sources import register, scan
@@ -689,14 +687,13 @@ def test_unified_scan_routes_by_eligibility(spark, tmp_path):
     assert df.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(50))
 
     # columns= translates to a Catalyst select on the JVM relation
-    # (round 14); Python-DS-only options still fall back silently
+    # (round 14); an option outside the reader's sets is refused
     df_opt = scan(spark, flat, columns="id")
     assert engine(df_opt) == "jvm"
     assert df_opt.columns == ["id"]
     assert df_opt.count() == 50
-    df_py = scan(spark, flat, columns="id", planning_parallelism="8")
-    assert engine(df_py) == "python"
-    assert df_py.count() == 50
+    with pytest.raises(ValueError, match="planning_parallelism"):
+        scan(spark, flat, columns="id", planning_parallelism="8")
 
     # column defaults: JVM-served since the round-12 lift — files that
     # predate the ALTER constant-fill the default
@@ -721,15 +718,17 @@ def test_unified_scan_routes_by_eligibility(spark, tmp_path):
     ] == pytest.approx(6.0)
 
 
-def test_unified_scan_warns_on_non_guard_jvm_fault(spark, tmp_path):
-    """sources.scan's fallback is for GUARD refusals only. A genuine JVM
-    fault on an otherwise-eligible table — here a corrupt (non-gzip)
-    manifest, which raises IOException rather than the guards'
-    UnsupportedOperationException — must surface a RuntimeWarning before
-    rerouting, never be swallowed: silent fallback would hide corrupt
-    manifests and jar ABI breaks behind the slower engine forever. The
-    Python DS still serves the data (it degrades to footer reads)."""
+def test_unified_scan_raises_jvm_faults_and_refusals(spark, tmp_path):
+    """sources.scan has no fallback engine: a genuine JVM fault on an
+    otherwise-eligible table (a corrupt, non-gzip manifest) and a guard
+    refusal (a foreign manifest whose column default is a list) both
+    raise from ``scan`` itself, at plan time, with no RuntimeWarning and
+    no reroute."""
     _require_jar(spark)
+    import base64
+    import glob
+    import gzip
+    import json
     import warnings
 
     from quiver_spark.sources import register, scan
@@ -740,48 +739,33 @@ def test_unified_scan_warns_on_non_guard_jvm_fault(spark, tmp_path):
         spark.range(40).selectExpr("id", "id * 3 AS v").coalesce(1),
         d,
     )
-
-    # eligible table routes to the JVM silently
+    guarded = str(tmp_path / "nonscalar_default")
+    sources.write(spark.range(3).selectExpr("id").coalesce(1), guarded)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         df = scan(spark, d)
-    assert "quiverjvm" in df._jdf.queryExecution().analyzed().toString()
+        assert "quiverjvm" in df._jdf.queryExecution().analyzed().toString()
+        assert df.count() == 40
 
-    import glob
+        real_man = sorted(glob.glob(f"{d}/**/_manifest.json.gz", recursive=True))[-1]
+        with open(real_man, "wb") as f:
+            f.write(b"this is not gzip data")
+        with pytest.raises(Exception, match="GZIP"):
+            scan(spark, d)
 
-    real_man = sorted(glob.glob(f"{d}/**/_manifest.json.gz", recursive=True))[-1]
-    with open(real_man, "wb") as f:
-        f.write(b"this is not gzip data")
-    with pytest.warns(RuntimeWarning, match="non-guard"):
-        df2 = scan(spark, d)
-    assert "quiverjvm" not in df2._jdf.queryExecution().analyzed().toString()
-    assert df2.count() == 40  # Python DS degrades to footer reads
-
-    # guard refusal stays a SILENT reroute — after the round-12/13 lifts
-    # the plan-time guards are down to non-scalar / unfillable column
-    # defaults; a foreign manifest carrying a LIST default stands in (the
-    # default never fills here — every file carries the column — so the
-    # Python DS serves the table fine)
-    import base64
-    import gzip
-    import json
-
-    guarded = str(tmp_path / "nonscalar_default")
-    sources.write(spark.range(3).selectExpr("id").coalesce(1), guarded)
-    gman = sorted(glob.glob(f"{guarded}/**/_manifest.json.gz", recursive=True))[-1]
-    with gzip.open(gman, "rt") as fh:
-        man = json.load(fh)
-    man["table_schema"] = base64.b64encode(
-        pa.schema([("id", pa.int64())]).serialize()
-    ).decode()
-    man["column_defaults"] = {"id": [1, 2]}
-    with gzip.open(gman, "wt") as fh:
-        json.dump(man, fh)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        df4 = scan(spark, guarded)
-        assert df4.count() == 3
-    assert "quiverjvm" not in df4._jdf.queryExecution().analyzed().toString()
+        gman = sorted(
+            glob.glob(f"{guarded}/**/_manifest.json.gz", recursive=True)
+        )[-1]
+        with gzip.open(gman, "rt") as fh:
+            man = json.load(fh)
+        man["table_schema"] = base64.b64encode(
+            pa.schema([("id", pa.int64())]).serialize()
+        ).decode()
+        man["column_defaults"] = {"id": [1, 2]}
+        with gzip.open(gman, "wt") as fh:
+            json.dump(man, fh)
+        with pytest.raises(Exception, match="non-scalar column default"):
+            scan(spark, guarded)
 
 
 def test_jvm_hive_key_colliding_with_file_column(spark, tmp_path):
@@ -1225,10 +1209,9 @@ def test_jvm_serves_semantic_reader_options(spark, tmp_path):
     )
     assert 0 < sub.count() < 18
 
-    # an option OUTSIDE the semantic+translated sets still routes to
-    # the Python DS
-    other = scan(spark, inc, planning_parallelism="8")
-    assert _engine_of(other) == "python"
+    # an option OUTSIDE the semantic+translated sets is refused
+    with pytest.raises(ValueError, match="planning_parallelism"):
+        scan(spark, inc, planning_parallelism="8")
 
 
 def test_jvm_serves_translated_reader_options(spark, tmp_path):
@@ -1236,10 +1219,8 @@ def test_jvm_serves_translated_reader_options(spark, tmp_path):
     pin a scan to the Python DS — they translate to Catalyst select /
     limit on the JVM relation (the JVM reader does projection pruning and
     pushLimit natively; file_column= maps to the _quiver_file metadata
-    column). The fallback surface shrinks to
-    explicit split knobs + guard refusals. Through the unified entry,
-    limit=N is exact-N on BOTH engines and takes the same file-order
-    prefix."""
+    column). Through the unified entry, limit=N is exact-N and takes the
+    same file-order prefix as the Python DS's read."""
     _require_jar(spark)
     import warnings
 
@@ -1268,18 +1249,18 @@ def test_jvm_serves_translated_reader_options(spark, tmp_path):
         ver = scan(spark, d, version="1", columns="id", limit="10")
         assert _engine_of(ver) == "jvm"
         assert len(ver.collect()) == 10
-    # exact-N on both engines, same file-order prefix
+    # exact-N, the same file-order prefix the Python DS takes
     assert len(lim.collect()) == 100
-    py = scan(spark, d, limit="100", planning_parallelism="8")
-    assert _engine_of(py) == "python"
+    py = (
+        spark.read.format("quiver").option("planning_parallelism", "8")
+        .load(d).limit(100)
+    )
     assert sorted(map(tuple, lim.collect())) == sorted(
-        map(tuple, py.limit(100).collect())
+        map(tuple, py.collect())
     )
     # the narrow projection reaches the DSv2 scan (pruned ReadSchema)
     plan = narrow._jdf.queryExecution().executedPlan().toString()
     assert "tag" not in plan, plan
-    # python fallback keeps exact-N through the unified entry too
-    assert len(py.collect()) == 100
 
     # file_column= rides the JVM too (round 14: the _quiver_file
     # metadata column), value-identical to the Python DS's option —
@@ -1315,9 +1296,9 @@ def test_jvm_serves_translated_reader_options(spark, tmp_path):
     with _pytest.raises(ValueError, match="collides"):
         scan(spark, d, file_column="id")
 
-    # an option only the Python DS implements still falls back
-    knob = scan(spark, d, columns="id", planning_parallelism="8")
-    assert _engine_of(knob) == "python"
+    # an option only the Python DS implements is refused
+    with _pytest.raises(ValueError, match="planning_parallelism"):
+        scan(spark, d, columns="id", planning_parallelism="8")
 
     # ADVICE r14 engine-parity edges: the literal '_quiver_file' in
     # columns= WITHOUT file_column= must raise the Python DS's error
@@ -1387,8 +1368,9 @@ def test_jvm_merge_schemas_union(spark, tmp_path):
     """merge_schemas=true unions per-file schemas by name on the JVM
     engine (round 13 — VERDICT r12 Next #3): files carrying subsets of
     the union null-fill absent columns; answers equal the Python DS's
-    merge read; a same-name type conflict is a guard refusal (silent
-    Python-DS reroute, which raises its detailed ValueError)."""
+    merge read. Without the option the directory is refused at plan
+    time, naming merge_schemas; a same-name type conflict is refused
+    even with it."""
     _require_jar(spark)
     import warnings
 
@@ -1425,11 +1407,11 @@ def test_jvm_merge_schemas_union(spark, tmp_path):
     )
     assert rows == sorted(map(tuple, py.collect()))
     assert rows == [(1, None), (2, None), (3, "x")]
-    # without the option the directory stays refused on BOTH engines
-    with pytest.raises(Exception):
-        scan(spark, str(d)).collect()
+    # without the option the directory is refused, naming the option
+    with pytest.raises(Exception, match="merge_schemas"):
+        scan(spark, str(d))
 
-    # type conflict: silent guard reroute, then the Python DS's ValueError
+    # type conflict: refused at plan time
     d2 = tmp_path / "conflict"
     d2.mkdir()
     write_table(
@@ -1442,57 +1424,8 @@ def test_jvm_merge_schemas_union(spark, tmp_path):
         str(d2 / "f2.quiver"),
         WriteOptions(),
     )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # guard refusal must stay silent
-        with pytest.raises(Exception, match="type conflict"):
-            scan(spark, str(d2), merge_schemas="true")
-
-
-def test_jvm_guard_classification_by_top_level_class(spark):
-    """ADVICE r12: guard-vs-fault classification inspects the Java
-    exception's TOP-LEVEL class, not a substring of the rendered trace —
-    an IOException whose CAUSE chain mentions UnsupportedOperationException
-    must classify as a fault (warn), and a real UOE as a refusal."""
-    from quiver_spark.sources import _is_guard_refusal
-
-    class FakeJavaClass:
-        def __init__(self, name):
-            self._n = name
-
-        def getName(self):
-            return self._n
-
-    class FakeThrowable:
-        def __init__(self, name):
-            self._c = FakeJavaClass(name)
-
-        def getClass(self):
-            return self._c
-
-    class FakeP4J(Exception):
-        def __init__(self, name, msg):
-            super().__init__(msg)
-            self.java_exception = FakeThrowable(name)
-
-    # top-level UOE → refusal, even with noisy message
-    assert _is_guard_refusal(
-        FakeP4J("java.lang.UnsupportedOperationException", "boom")
-    )
-    # top-level IOException whose TRACE mentions UOE → fault
-    assert not _is_guard_refusal(
-        FakeP4J(
-            "java.io.IOException",
-            "java.io.IOException: x\nCaused by: "
-            "java.lang.UnsupportedOperationException: y",
-        )
-    )
-    # pyspark-converted exception: class survives as the type name
-    UOE = type("UnsupportedOperationException", (Exception,), {})
-    assert _is_guard_refusal(UOE("quiverjvm: refused"))
-    # plain exception mentioning UOE mid-message → fault
-    assert not _is_guard_refusal(
-        RuntimeError("wrapped: java.lang.UnsupportedOperationException")
-    )
+    with pytest.raises(Exception, match="type conflict"):
+        scan(spark, str(d2), merge_schemas="true")
 
 
 def test_jvm_nested_write_rejects_null_in_non_nullable(spark, tmp_path):
@@ -1533,16 +1466,14 @@ def test_jvm_nested_write_rejects_null_in_non_nullable(spark, tmp_path):
 def test_jvm_default_fillability_guard_is_plan_time(spark, tmp_path):
     """ADVICE r12 (low): a column default the JVM reader cannot
     MATERIALIZE (here: a default on a declared BINARY column, a foreign-
-    manifest shape — encode_default never emits one) must be refused at
-    the plan-time probe, so the router's silent reroute fires — not
-    discovered executor-side in PartitionReader init, which would fail
-    the query instead of falling back."""
+    manifest shape — maintenance.add_column refuses one) must be
+    refused when the relation is built, before any job — not discovered
+    executor-side in PartitionReader init after the job started."""
     _require_jar(spark)
     import base64
     import glob
     import gzip
     import json
-    import warnings
 
     from quiver_spark.sources import register, try_jvm_scan
 
@@ -1558,9 +1489,8 @@ def test_jvm_default_fillability_guard_is_plan_time(spark, tmp_path):
     with gzip.open(man_path, "wt") as f:
         json.dump(man, f)
 
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # guard refusal must stay SILENT
-        assert try_jvm_scan(spark, d) is None
+    with pytest.raises(Exception, match="cannot be filled"):
+        try_jvm_scan(spark, d)
 
 
 def test_jvm_timestamp_units_parity(spark, tmp_path):

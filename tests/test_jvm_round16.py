@@ -49,7 +49,8 @@ def test_agg_pushdown_refuses_mixed_physical_domains(spark, tmp_path):
     different physical domain (date64 millis next to int64) is refused
     loudly by every normal read path — the MIN/MAX pushdown must not
     fold its sidecar stats into a mixed-domain answer instead (ADVICE
-    r15 #1). Both the plain scan and the aggregate raise."""
+    r15 #1). The refusal comes when the relation is built, at plan
+    time, so the plain scan and the aggregates all raise."""
     _require_jar(spark)
     import datetime
 
@@ -72,13 +73,15 @@ def test_agg_pushdown_refuses_mixed_physical_domains(spark, tmp_path):
         ),
         os.path.join(d, "b.quiver"),
     )
-    df = spark.read.format("quiverjvm").load(d)
+    def df():
+        return spark.read.format("quiverjvm").load(d)
+
+    with pytest.raises(Exception, match="table's types"):
+        df().collect()
     with pytest.raises(Exception):
-        df.collect()
+        df().selectExpr("max(x)").collect()
     with pytest.raises(Exception):
-        df.selectExpr("max(x)").collect()
-    with pytest.raises(Exception):
-        df.selectExpr("count(x)").collect()
+        df().selectExpr("count(x)").collect()
 
 
 def test_agg_pushdown_refuses_unvouched_entry_schema(spark, tmp_path):

@@ -1,18 +1,19 @@
-"""Operator read routing: every quiver read in the format queries goes
-through ``sources.scan``, so the JVM columnar reader serves every table its
-guards accept and the Python "quiver" DataSource is only the fallback."""
+"""Read routing: every quiver read in the format queries goes through
+``sources.scan``, which has one engine: the quiverjvm columnar reader
+serves each read or refuses it before any job, naming the remedy. Only
+``quiver_relation(engine="python")`` loads the Python "quiver"
+DataSource, for the bench's engine-labelled proxies."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from conftest import SF_DIR
 
-#: format queries that still read through the Python DataSource, and why
-PYTHON_DS_READERS = {
-    # probes the fallback on purpose with a Python-DS-only option
-    "quiver_unified_scan",
-}
+#: format queries that still read through the Python DataSource
+PYTHON_DS_READERS: set[str] = set()
 
 
 def _spy_reader_formats(monkeypatch) -> list[str]:
@@ -68,8 +69,9 @@ def test_format_queries_read_through_sources_scan(spark, monkeypatch):
 
 
 def test_quiver_relation_python_engine_reads_python_ds(spark, monkeypatch):
-    """``engine="python"`` keeps the raw Python-DS load the bench's
-    engine-labelled proxies measure, so it must never reach quiverjvm."""
+    """``engine="python"`` loads the Python DataSource directly — the
+    read the bench's engine-labelled proxies measure — so it must never
+    reach quiverjvm."""
     from quiver_spark.operators import format_queries
     from quiver_spark.operators.format_queries import (
         quiver_dir,
@@ -100,7 +102,6 @@ def test_verify_checksums_scan_routes_to_jvm(spark, monkeypatch, tmp_path):
     page fails the default (checked) read loudly; ``"false"`` routes
     there too."""
     import glob
-    import os
 
     from quiver_spark import sources
     from quiver_spark.jvm import attach_jar
@@ -126,3 +127,96 @@ def test_verify_checksums_scan_routes_to_jvm(spark, monkeypatch, tmp_path):
             sources.scan(spark, d, **opts).collect()
     sources.scan(spark, d, verify_checksums="false")
     assert set(seen) == {"quiverjvm"}
+
+
+def test_scan_refusals_come_before_any_job(spark, tmp_path, monkeypatch):
+    """An option the quiverjvm reader does not take raises ValueError
+    naming it, and a jar that does not attach raises RuntimeError naming
+    its build script — both before any Spark job runs."""
+    from quiver_spark import jvm, sources
+
+    d = str(tmp_path / "t")
+    sources.write(spark.range(5), d)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = len(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match="planning_parallelism"):
+        sources.scan(spark, d, planning_parallelism="8")
+    monkeypatch.setattr(jvm, "attach_jar", lambda s: False)
+    with pytest.raises(RuntimeError, match="jvm/build.sh"):
+        sources.scan(spark, d)
+    assert len(tracker.getJobIdsForGroup(None)) == jobs
+
+
+def _order_files(d: str, first_rows: int) -> None:
+    """Rename the data files of flat table ``d`` so the file holding
+    ``first_rows`` rows sorts first, then rebuild its manifest (which
+    interns the schemas in listing order)."""
+    import glob
+
+    from quiver_spark.format.reader import read_table
+    from quiver_spark.sources.manifest import rebuild_manifest
+
+    files = glob.glob(os.path.join(d, "*.quiver"))
+    for f in files:
+        first = read_table(f).num_rows == first_rows
+        os.rename(f, os.path.join(d, ("a" if first else "b") + ".quiver"))
+    rebuild_manifest(d)
+
+
+@pytest.mark.parametrize("manifest", [True, False], ids=["manifest", "footers"])
+@pytest.mark.parametrize("range_first", [True, False],
+                         ids=["range_first", "nullable_first"])
+def test_nullable_append_to_range_table_reads_on_jvm(
+    spark, tmp_path, range_first, manifest
+):
+    """A table first written from ``spark.range`` (non-nullable ``id``)
+    then appended a nullable frame holding a NULL has files that differ
+    only in nullability. In either file order, with the manifest or
+    from footers alone, it reads on quiverjvm with ``id`` nullable and
+    the NULL kept."""
+    import glob
+
+    from quiver_spark import sources
+
+    d = str(tmp_path / "t")
+    sources.write(spark.range(3).coalesce(1), d)
+    sources.write(
+        spark.createDataFrame([(None,), (7,)], "id bigint").coalesce(1),
+        d, mode="append",
+    )
+    _order_files(d, 3 if range_first else 2)
+    if not manifest:
+        for m in glob.glob(os.path.join(d, "_manifest*")):
+            os.remove(m)
+    df = sources.scan(spark, d)
+    assert "quiverjvm" in df._jdf.queryExecution().analyzed().toString()
+    assert df.schema["id"].nullable
+    assert df.count() == 5
+    assert df.filter("id IS NULL").count() == 1
+    assert sorted(r.id for r in df.collect() if r.id is not None) == [
+        0, 1, 2, 7
+    ]
+
+
+def test_two_column_sets_need_merge_schemas(spark, tmp_path):
+    """The table ``quiver_merge_schemas_scan`` builds (nation keyed by
+    name, then an append keyed by region) is refused without
+    ``merge_schemas``, naming it, whichever file sorts first; with
+    ``merge_schemas="true"`` it unions by name and null-fills."""
+    from quiver_spark import sources
+
+    n = spark.read.parquet(f"{SF_DIR}/nation.parquet")
+    total = n.count()
+    for i in range(3):
+        d = str(tmp_path / f"t{i}")
+        sources.write(n.select("n_nationkey", "n_name"), d)
+        sources.write(n.select("n_nationkey", "n_regionkey"), d,
+                      mode="append")
+        with pytest.raises(Exception, match="merge_schemas"):
+            sources.scan(spark, d)
+        m = sources.scan(spark, d, merge_schemas="true")
+        assert sorted(m.columns) == ["n_name", "n_nationkey", "n_regionkey"]
+        got = m.selectExpr(
+            "count(*)", "count(n_name)", "count(n_regionkey)"
+        ).first()
+        assert tuple(got) == (2 * total, total, total)

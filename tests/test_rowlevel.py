@@ -493,25 +493,34 @@ def test_maintenance_reads_route_through_jvm_reader(
     assert _rows(spark, tbl) == sorted((k, *v) for k, v in want.items())
 
 
-def test_shadowed_file_column_falls_back_to_python_reader(
+def test_shadowed_file_column_is_refused_until_renamed(
     spark, tmp_path, monkeypatch
 ):
-    """A data column named ``_quiver_file`` shadows the JVM reader's file
-    metadata column, so touched-file detection reads through the Python
-    DataSource. DELETE, UPDATE, MERGE and in-place compaction still give
-    exactly the rows a pyarrow model of the same operations gives."""
+    """A data column named ``_quiver_file`` would hide the JVM reader's
+    file metadata column. ``sources.write`` refuses the name before any
+    job; on a table that already holds it (written by the library),
+    row-level DML raises naming ``maintenance.rename_column`` and leaves
+    the table as it was. Once the column is renamed, DELETE, UPDATE,
+    MERGE and in-place compaction read through quiverjvm and give exactly
+    the rows a pyarrow model of the same operations gives."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from quiver_spark.format.writer import WriteOptions, write_table
+    from quiver_spark.sources.manifest import rebuild_manifest
+
     n = 300
     tbl = str(tmp_path / "t")
-    _write(
-        spark,
-        spark.range(n)
-        .selectExpr("id", "concat('f', id % 3) AS _quiver_file", "id * 2 AS v")
-        .repartition(3),
-        tbl,
-    )
+    with pytest.raises(ValueError, match="_quiver_file"):
+        _write(
+            spark,
+            spark.range(3).selectExpr(
+                "if(id >= 0, raise_error('job ran'), id) AS id",
+                "'f' AS _quiver_file",
+            ),
+            tbl,
+        )
+    assert not os.path.exists(tbl)
     model = pa.table(
         {
             "id": pa.array(range(n), pa.int64()),
@@ -519,24 +528,37 @@ def test_shadowed_file_column_falls_back_to_python_reader(
             "v": pa.array([i * 2 for i in range(n)], pa.int64()),
         }
     )
+    os.makedirs(tbl)
+    for k in range(3):
+        write_table(
+            model.slice(k * 100, 100), f"{tbl}/part-{k}.quiver", WriteOptions()
+        )
+    rebuild_manifest(tbl)
+    before = _rows(spark, tbl)
+    with pytest.raises(ValueError, match="maintenance.rename_column"):
+        maintenance.delete_where(spark, tbl, "id < 30")
+    assert _rows(spark, tbl) == before
+
+    maintenance.rename_column(tbl, "_quiver_file", "qf")
+    model = model.rename_columns(["id", "qf", "v"])
     seen = _spy_reader_formats(monkeypatch)
 
     maintenance.delete_where(spark, tbl, "id < 30")
     model = model.filter(pc.greater_equal(model["id"], 30))
 
-    maintenance.update_where(spark, tbl, {"v": "v + 1000"}, "_quiver_file = 'f1'")
+    maintenance.update_where(spark, tbl, {"v": "v + 1000"}, "qf = 'f1'")
     model = model.set_column(
         2,
         "v",
         pc.if_else(
-            pc.equal(model["_quiver_file"], "f1"),
+            pc.equal(model["qf"], "f1"),
             pc.add(model["v"], 1000),
             model["v"],
         ),
     )
 
     rows = [(50, "g", -1), (500, "h", 7)]
-    source = spark.createDataFrame(rows, "id long, _quiver_file string, v long")
+    source = spark.createDataFrame(rows, "id long, qf string, v long")
     maintenance.merge_upsert(spark, tbl, source, on=["id"])
     model = pa.concat_tables(
         [
@@ -549,6 +571,6 @@ def test_shadowed_file_column_falls_back_to_python_reader(
 
     maintenance.compact(spark, tbl)
     monkeypatch.undo()
-    assert "quiver" in seen, seen
+    assert "quiverjvm" in seen and "quiver" not in seen, seen
     want = sorted(tuple(r.values()) for r in model.to_pylist())
     assert _rows(spark, tbl) == want

@@ -80,17 +80,25 @@ def test_file_missing_table_column_null_fills(spark, tmp_path):
     assert rows == [(1, "a"), (2, "b"), (3, None)]
 
 
-def test_maintenance_reads_dir_whose_later_file_lacks_a_column(
+def _tree_bytes(d):
+    out = {}
+    for base, _dirs, names in os.walk(d):
+        for n in names:
+            path = os.path.join(base, n)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, d)] = fh.read()
+    return out
+
+
+def test_maintenance_on_dir_whose_later_file_lacks_a_column_fails(
     spark, tmp_path
 ):
     """A manifest-less directory whose later file lacks a column of the
-    first's is a JVM guard refusal, so compaction and row-level DML read
-    it through the Python DataSource, which null-fills the column. No
-    fault warning fires and no row or value is lost. (The DML touches the
-    later file only: a rewritten file sorts after b.quiver, and the
-    Python DataSource takes the first file's schema as the table's.)"""
-    import warnings
-
+    first's is refused at plan time, naming merge_schemas: sources.scan,
+    compaction and row-level DML raise before any job and leave the
+    directory as it was. (Taking the first file's schema as the table's
+    would lose the column when a rewritten file sorts after b.quiver.)
+    With merge_schemas the scan null-fills the column."""
     from quiver_spark import maintenance
     from quiver_spark.sources import scan
 
@@ -100,43 +108,36 @@ def test_maintenance_reads_dir_whose_later_file_lacks_a_column(
     )
     b = pa.table({"k": pa.array([4, 5], pa.int64())})
     d = _dir(tmp_path, "lacks", [("a.quiver", a), ("b.quiver", b)])
-    want = [(1, "a"), (2, "b"), (3, "c"), (4, None), (5, None)]
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        assert sorted(map(tuple, scan(spark, d).collect())) == want
-        maintenance.delete_where(spark, d, "k = 4")
-        maintenance.update_where(spark, d, {"s": "'u'"}, "k = 5")
+    before = _tree_bytes(d)
+    with pytest.raises(Exception, match="merge_schemas"):
+        scan(spark, d)
+    with pytest.raises(Exception, match="merge_schemas"):
         maintenance.compact(spark, d)
-        got = sorted(map(tuple, scan(spark, d).collect()))
-    assert got == [(1, "a"), (2, "b"), (3, "c"), (5, "u")]
+    with pytest.raises(Exception, match="merge_schemas"):
+        maintenance.delete_where(spark, d, "k = 4")
+    with pytest.raises(Exception, match="merge_schemas"):
+        maintenance.update_where(spark, d, {"s": "'u'"}, "k = 5")
+    assert _tree_bytes(d) == before
+    got = sorted(map(tuple, scan(spark, d, merge_schemas="true").collect()))
+    assert got == [(1, "a"), (2, "b"), (3, "c"), (4, None), (5, None)]
 
 
 def test_maintenance_on_dir_whose_later_file_adds_a_column_fails(
     spark, evolved_dir
 ):
     """A later file carrying a column the first lacks fails compaction and
-    row-level DML loudly, as it fails sources.scan: the Python DataSource
-    would read the first file's schema, and the rewrite would drop the
-    extra column's values. The directory is left as it was."""
+    row-level DML loudly, as it fails sources.scan: a rewrite under the
+    first file's schema would drop the extra column's values. The
+    directory is left as it was."""
     from quiver_spark import maintenance
 
     register(spark)
-
-    def snapshot():
-        out = {}
-        for base, _dirs, names in os.walk(evolved_dir):
-            for n in names:
-                path = os.path.join(base, n)
-                with open(path, "rb") as fh:
-                    out[os.path.relpath(path, evolved_dir)] = fh.read()
-        return out
-
-    before = snapshot()
+    before = _tree_bytes(evolved_dir)
     with pytest.raises(Exception, match="heterogeneous"):
         maintenance.compact(spark, evolved_dir)
     with pytest.raises(Exception, match="heterogeneous"):
         maintenance.delete_where(spark, evolved_dir, "k = 4")
-    assert snapshot() == before
+    assert _tree_bytes(evolved_dir) == before
 
 
 def test_type_conflict_fails_loudly(spark, tmp_path):
@@ -486,6 +487,23 @@ def test_alter_cli_round_trip(spark, tmp_path, capsys):
 
 
 # --- column defaults (Iceberg-style initial-default) ----------------------
+
+
+def test_add_column_refuses_a_default_the_reader_cannot_fill(
+    spark, tmp_path
+):
+    """The quiverjvm reader constant-fills defaults of numeric, boolean,
+    date, timestamp, decimal and string columns only. A binary default
+    would be stored as its str() (``b"x"`` fills as ``b"b'x'"``), so
+    add_column refuses it before the manifest changes."""
+    from quiver_spark import maintenance as M
+
+    tbl = str(tmp_path / "t")
+    sources.write(spark.range(3), tbl)
+    before = _tree_bytes(tbl)
+    with pytest.raises(ValueError, match="no initial default"):
+        M.add_column(tbl, "b", "binary", default=b"x")
+    assert _tree_bytes(tbl) == before
 
 
 @pytest.mark.parametrize("fmt", ["quiver", "arrowipc"])

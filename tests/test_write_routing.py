@@ -191,29 +191,42 @@ def test_require_not_null_is_a_plan_check(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "cols, options, match",
+    "sink, cols, options, match",
     [
-        (("NULL AS n",), {}, "n void"),
-        ((), {"page_stats": "false"}, "page_stats"),
-        ((), {"max_page_size": 0}, "max_page_size must be a positive"),
-        ((), {"max_rows_per_file": 0}, "max_rows_per_file must be a positive"),
+        ("quiver", ("NULL AS n",), {}, "n void"),
+        ("quiver", ("'f' AS _quiver_file",), {}, "_quiver_file"),
+        ("quiver", (), {"page_stats": "false"}, "page_stats"),
+        ("quiver", (), {"max_page_size": 0}, "max_page_size must be a positive"),
+        ("quiver", (), {"max_rows_per_file": 0},
+         "max_rows_per_file must be a positive"),
+        ("arrowipc", (), {"max_rows_per_file": "0"},
+         "max_rows_per_file must be a positive"),
     ],
-    ids=["null_typed_column", "unknown_option", "max_page_size_0",
-         "max_rows_per_file_0"],
+    ids=["null_typed_column", "quiver_file_column", "unknown_option",
+         "max_page_size_0", "max_rows_per_file_0",
+         "arrowipc_max_rows_per_file_0"],
 )
-def test_write_refusals_come_before_any_job(spark, tmp_path, cols, options,
-                                            match):
-    """A column the quiverjvm writer cannot encode, an option
-    ``sources.write`` does not take, and a page size or file row cap
-    that is not a positive integer (the JVM encoder divides by the page
-    size; a cap of 0 would flush a file per row) each raise ValueError,
-    naming it, before any job runs and before a stage (or the table)
-    exists."""
+def test_write_refusals_come_before_any_job(spark, tmp_path, sink, cols,
+                                            options, match):
+    """A column the quiverjvm writer cannot encode or whose name is the
+    reader's file metadata column, an option ``sources.write`` does not
+    take, and a page size or file row cap that is not a positive integer
+    (the JVM encoder divides by the page size; a cap of 0 would flush a
+    file per row) each raise ValueError, naming it, before any job runs
+    and before a stage (or the table) exists. The arrowipc sink refuses
+    the same row cap (Spark wraps its ValueError)."""
     from quiver_spark import sources
 
     t = str(tmp_path / "t")
-    with pytest.raises(ValueError, match=match):
-        sources.write(_job_bomb(spark, *cols), t, **options)
+    if sink == "arrowipc":
+        sources.register(spark)
+        with pytest.raises(Exception, match=match):
+            _job_bomb(spark, *cols).write.format("arrowipc").options(
+                **options
+            ).mode("overwrite").save(t)
+    else:
+        with pytest.raises(ValueError, match=match):
+            sources.write(_job_bomb(spark, *cols), t, **options)
     assert not os.path.exists(t)
 
 
